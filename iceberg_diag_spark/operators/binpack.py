@@ -61,36 +61,45 @@ def pack_sizes(sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE):
     return groups
 
 
-def pack_group_stats(sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE):
-    """Vectorized aggregate form of the fold: (n_groups,
-    sum-of-group read costs) without materializing per-group rows —
-    O(#groups · log n) via prefix sums + searchsorted. Used by the
-    fused diagnostics pass; property-tested equal to pack_sizes.
+def pack_group_bounds(
+    sorted_sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE
+) -> tuple[list[int], list[int]]:
+    """The fold's group boundaries over ASCENDING sizes: (ends,
+    totals), the inclusive last index and the byte total of every
+    group, in O(#groups · log n) via prefix sums + searchsorted rather
+    than a per-row loop. The one kernel behind pack_group_stats,
+    binpack_groups and compaction.binpack_assign; property-tested
+    equal to pack_sizes.
 
     A group starting at index s with base = P(s-1) ends at the FIRST
     index e where P(e) - base > cap (check-before-append includes the
     crossing row), or at the last row when no crossing remains.
     """
+    ps = np.cumsum(np.asarray(sorted_sizes, dtype="int64"))
+    n = int(ps.size)
+    ends: list[int] = []
+    totals: list[int] = []
+    base = start = 0
+    while start < n:
+        e = int(np.searchsorted(ps, base + max_bytes_per_group, side="right"))
+        e = min(e, n - 1)
+        ends.append(e)
+        totals.append(int(ps[e]) - base)
+        base = int(ps[e])
+        start = e + 1
+    return ends, totals
+
+
+def pack_group_stats(sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE):
+    """Aggregate form of the fold: (n_groups, sum-of-group read costs)
+    without materializing per-group rows. Used by the fused
+    diagnostics pass."""
     from iceberg_diag_spark.functions.cost import FETCH_SIZE
 
-    data = np.sort(np.asarray(sizes, dtype="int64"))
-    n = int(data.size)
-    groups = 0
-    cost = 0
-    if n:
-        ps = np.cumsum(data)
-        base = 0
-        start = 0
-        while start < n:
-            e = int(np.searchsorted(ps, base + max_bytes_per_group, side="right"))
-            if e >= n:
-                e = n - 1
-            total = int(ps[e]) - base
-            cost += total // FETCH_SIZE + 2
-            groups += 1
-            base = int(ps[e])
-            start = e + 1
-    return groups, cost
+    _, totals = pack_group_bounds(
+        np.sort(np.asarray(sizes, dtype="int64")), max_bytes_per_group
+    )
+    return len(totals), sum(t // FETCH_SIZE + 2 for t in totals)
 
 
 def binpack_groups(
@@ -107,25 +116,16 @@ def binpack_groups(
     """
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[partition_col].iloc[0]
-        sizes = np.sort(pdf[size_col].to_numpy())
-        rows = []
-        count = 0
-        total = 0
-        gid = 0
-        for s in sizes:
-            if total > max_bytes_per_group:
-                rows.append((key, gid, count, total))
-                gid += 1
-                count = 0
-                total = 0
-            count += 1
-            total += int(s)
-        if count:
-            rows.append((key, gid, count, total))
+        ends, totals = pack_group_bounds(
+            np.sort(pdf[size_col].to_numpy()), max_bytes_per_group
+        )
         return pd.DataFrame(
-            rows,
-            columns=[partition_col, "group_id", "group_file_count", "group_size"],
+            {
+                partition_col: pdf[partition_col].iloc[0],
+                "group_id": np.arange(len(ends), dtype="int64"),
+                "group_file_count": np.diff(ends, prepend=-1),
+                "group_size": totals,
+            }
         )
 
     cols = data_files.select(partition_col, size_col)

@@ -50,6 +50,7 @@ Scale shape (100 TB):
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -58,6 +59,7 @@ from iceberg_diag_spark.functions.cost import (
     MAX_GROUP_BYTE_SIZE,
     read_file_cost,
 )
+from iceberg_diag_spark.operators.binpack import pack_group_bounds
 
 ASSIGN_SCHEMA = "partition_key string, file_id long, gid long"
 
@@ -89,8 +91,8 @@ def binpack_assign(
     """File → bin-pack group assignment: WHICH group each file lands
     in, not just the group profile ``binpack_groups`` emits.
 
-    Same fold as ``pack_sizes`` (check-before-append, ascending,
-    ``binpack.py:43-60``) with a (size, file_id) tie-break so
+    Same fold as ``pack_sizes`` (check-before-append, ascending, via
+    ``binpack.pack_group_bounds``) with a (size, file_id) tie-break so
     membership is deterministic under any input order; the group
     (count, total) profile is tie-invariant and equals pack_sizes'
     (property-pinned in tests). Input is file metadata — one row per
@@ -100,20 +102,17 @@ def binpack_assign(
 
     def _assign(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values([size_col, file_col], kind="mergesort")
-        gids = []
-        gid = 0
-        total = 0
-        for s in pdf[size_col]:
-            if total > max_bytes_per_group:
-                gid += 1
-                total = 0
-            gids.append(gid)
-            total += int(s)
+        ends, _ = pack_group_bounds(
+            pdf[size_col].to_numpy(), max_bytes_per_group
+        )
         return pd.DataFrame(
             {
                 partition_col: pdf[partition_col],
                 file_col: pdf[file_col],
-                "gid": gids,
+                "gid": np.repeat(
+                    np.arange(len(ends), dtype="int64"),
+                    np.diff(ends, prepend=-1),
+                ),
             }
         )
 

@@ -24,6 +24,10 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from iceberg_diag_spark.functions.parallel import ensure_parallelism
 
+# MinHash signature width (h0..h15): the one default every MinHash
+# operator and the funnel's fused signature pass share.
+MINHASH_NUM_HASHES = 16
+
 
 def normalized_text(col: Column) -> Column:
     """Canonical text form shared by all dedup ops: lowercase, trim,
@@ -190,7 +194,7 @@ def minhash_signatures_wide(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = MINHASH_NUM_HASHES,
     ngram: int = 3,
 ) -> DataFrame:
     """Per-document MinHash signature, one column per seed, via the
@@ -217,7 +221,7 @@ def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = MINHASH_NUM_HASHES,
     ngram: int = 3,
 ) -> DataFrame:
     """Long-form signature view (doc_id, seed, minhash) — an unpivot
@@ -238,7 +242,7 @@ def _hash_sig_wide(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = MINHASH_NUM_HASHES,
     ngram: int = 3,
 ) -> DataFrame:
     """ONE text scan → (id_col, __ch, h0..h{n-1}): the normalized
@@ -297,7 +301,7 @@ def _fused_wide_and_marks(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = MINHASH_NUM_HASHES,
     ngram: int = 3,
 ) -> tuple[DataFrame, DataFrame]:
     """(wide signature, exact-dup marks) carved off ONE checkpointed
@@ -308,8 +312,6 @@ def _fused_wide_and_marks(
     minhash_signatures_wide never emits them; `marked` is the
     content_rep_marks window over the fused (id, __ch), checkpointed
     because every consumer reads it at least twice (star + keep)."""
-    from pyspark.sql import Window
-
     fused = _hash_sig_wide(
         docs, text_col, id_col, num_hashes, ngram
     ).localCheckpoint(eager=False)
@@ -338,7 +340,7 @@ def minhash_band_keys(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = MINHASH_NUM_HASHES,
     bands: int = 4,
     ngram: int = 3,
     wide: DataFrame | None = None,
@@ -406,7 +408,7 @@ def minhash_candidate_pairs(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = MINHASH_NUM_HASHES,
     bands: int = 4,
     ngram: int = 3,
     collapse_exact: bool = True,
@@ -1004,7 +1006,10 @@ _MOD32 = 4294967296
 def _md5_halves_exprs(src: str, hi: str, lo: str) -> list[Column]:
     """(hi, lo) 32-bit halves of md5(src) as BIGINTs — the
     Carter-Wegman / SimHash shared hash-family construction
-    (cross-engine: '0x'||substr parses identically in DuckDB)."""
+    (cross-engine: '0x'||substr parses identically in DuckDB).
+
+    ``src`` is spliced into SQL text unquoted: pass only a trusted
+    internal column identifier, never user input."""
     return [
         F.expr(
             f"CAST(conv(substring(md5({src}), 1, 8), 16, 10) AS BIGINT)"
@@ -1019,7 +1024,10 @@ def _minhash_agg_exprs(
     num_hashes: int, g1: str = "g1", g2: str = "g2"
 ) -> list[Column]:
     """The num_hashes Carter-Wegman min-aggregates
-    min((h1 + s·h2) mod 2^32) as h0..h{n-1}."""
+    min((h1 + s·h2) mod 2^32) as h0..h{n-1}.
+
+    ``g1``/``g2`` are spliced into SQL text unquoted: pass only
+    trusted internal column identifiers, never user input."""
     return [
         F.expr(f"min(({g1} + {s} * {g2}) % {_MOD32})").alias(f"h{s}")
         for s in range(num_hashes)
@@ -1069,7 +1077,7 @@ def _sig_votes_fused(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = MINHASH_NUM_HASHES,
     ngram: int = 3,
     minhash: bool = True,
 ) -> DataFrame:
@@ -1983,7 +1991,7 @@ def dedup_method_agreement(
     # pytest-pinned); per-position rows feed the MinHash
     # min-aggregates (gram at the position) and the SimHash vote
     # sums (token at the position) in the same grouped aggregate.
-    num_hashes = 16
+    num_hashes = MINHASH_NUM_HASHES
     fused = _sig_votes_fused(
         docs, text_col, id_col, num_hashes=num_hashes
     ).localCheckpoint(eager=False)
@@ -2147,7 +2155,7 @@ def lsh_near_dup_tuned(
     recall_floor_ppm: int = 950_000,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = MINHASH_NUM_HASHES,
     ngram: int = 3,
 ) -> DataFrame:
     """Advisor-EXECUTING banding — closes the lsh_param_advisor loop
@@ -2348,7 +2356,7 @@ def minhash_estimator_audit(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = MINHASH_NUM_HASHES,
     ngram: int = 3,
 ) -> DataFrame:
     """Estimator-calibration audit for the MinHash pipeline: for every

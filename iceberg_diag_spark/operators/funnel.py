@@ -100,7 +100,7 @@ def stage_flags(
     # doc gramless (h0 IS NULL). Before the fusion the funnel paid a
     # second full text scan + normalize + split inside the banding
     # chain; now the banding consumes `wide` below.
-    ngram, num_hashes = 3, 16
+    ngram, num_hashes = 3, dedup.MINHASH_NUM_HASHES
     norm = dedup.normalized_text(F.col(text_col))
     base = ensure_parallelism(docs).select(
         F.col(id_col),
@@ -132,7 +132,6 @@ def stage_flags(
             " ", *[F.expr(f"__toks[__i + {k}]") for k in range(ngram)]
         ),
     )
-    md5 = F.md5(F.col("gram"))
     exploded = (
         base.select(
             F.col(id_col),
@@ -153,21 +152,13 @@ def stage_flags(
             "n_tokens",
             "__ch",
             "s1",
-            F.conv(F.substring(md5, 1, 8), 16, 10).cast("long").alias("g1"),
-            F.conv(F.substring(md5, 9, 8), 16, 10).cast("long").alias("g2"),
+            *dedup._md5_halves_exprs("gram", "g1", "g2"),
         )
     )
     enriched = exploded.groupBy(
         F.col(id_col), F.col("stratum"), F.col("n_tokens"),
         F.col("__ch"), F.col("s1"),
-    ).agg(
-        *[
-            F.min(
-                (F.col("g1") + s * F.col("g2")) % F.lit(4294967296)
-            ).alias(f"h{s}")
-            for s in range(num_hashes)
-        ]
-    )
+    ).agg(*dedup._minhash_agg_exprs(num_hashes))
     # the fused (enriched + signature) relation feeds TWO consumers —
     # the exact-dedup window pass and the banding chain's `wide` —
     # and its lineage is the corpus scan + explode + aggregate:
@@ -559,7 +550,7 @@ def release_neardup_reconcile(
     increments,
     release_path: str,
     sig_path: str,
-    num_hashes: int = 16,
+    num_hashes: int = dedup.MINHASH_NUM_HASHES,
     bands: int = 4,
     ngram: int = 3,
     sig_buckets: int = RECONCILE_SIG_BUCKETS,

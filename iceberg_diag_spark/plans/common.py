@@ -1,10 +1,9 @@
 """Shared infrastructure for the query-registry family modules.
 
 Every operator exposed through the driver contract lives in one of
-the plans/oracles_*.py family modules (split from the original
-monolithic registry.py as a pure move); they all register into the
-REGISTRY dict defined here, and plans/registry.py assembles the
-final scoring order.
+the plans/oracles_*.py family modules, grouped by the operator it
+calls; each registers its entries into the REGISTRY dict defined
+here, and plans/registry.py imports every family.
 
 Each entry pairs a Spark DataFrame builder ``(spark, sf_dir) -> DF``
 with (where expressible) an equivalent DuckDB SQL oracle over the
@@ -58,6 +57,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-# Populated by the family modules in their import order (insertion
-# order is the within-tier scoring order — see registry._eval_order).
+# Populated by the family modules on import; entries are looked up by
+# name, so insertion order carries no meaning.
 REGISTRY: dict[str, QuerySpec] = {}

@@ -1,23 +1,23 @@
 """Corpus-assembly family: split / cap / mixture / label audits.
 
-Split from plans/registry.py (pure move; see registry.py for the
-cross-engine determinism rules every oracle follows).
+See plans/common.py for the cross-engine determinism rules every
+oracle follows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
+from pyspark.sql import functions as F
 from iceberg_diag_spark.operators import (
     dedup,
     events,
+    funnel,
     sampling,
     similarity,
     textops,
 )
-from iceberg_diag_spark.streaming import stream_ops
-from iceberg_diag_spark.plans.common import QuerySpec, REGISTRY, _t
+from iceberg_diag_spark.plans.common import REGISTRY, QuerySpec, _t
 from iceberg_diag_spark.plans.oracles_dedup import (
+    _MINHASH_PAIRS_SQL,
     _MINHASH_PRS_CTE,
     _lang_list_sql,
 )
@@ -149,31 +149,6 @@ FROM assigned WHERE rn = 1 GROUP BY label, cand
 """
 
 
-REGISTRY.update({
-    "stratified_split": QuerySpec(
-        _stratified_split, _STRATIFIED_SPLIT_SQL,
-        "deterministic hash-bucket train/val/test split audited per "
-        "source (counts + exact-membership md5)",
-    ),
-    "per_source_cap": QuerySpec(
-        _per_source_cap, _PER_SOURCE_CAP_SQL,
-        "per-domain document cap by hash order (WindowGroupLimit "
-        "map-side top-k)",
-    ),
-    "source_mixture_weights": QuerySpec(
-        _source_mixture, _SOURCE_MIXTURE_SQL,
-        "alpha=0.5 temperature domain-mixture sampling weights "
-        "(floor-ppm integers)",
-    ),
-    "nearest_centroid_confusion": QuerySpec(
-        _centroid_confusion, _CENTROID_CONFUSION_SQL,
-        "nearest-centroid classification confusion counts over the "
-        "labeled embedding table",
-    ),
-})
-
-
-
 def _token_entropy(spark, sf_dir):
     return textops.token_entropy(_t(spark, sf_dir, "documents"))
 
@@ -220,21 +195,6 @@ SELECT vec_id,
          ), ',')) AS q_checksum
 FROM m
 """
-
-
-REGISTRY.update({
-    "token_entropy": QuerySpec(
-        _token_entropy, _TOKEN_ENTROPY_SQL,
-        "per-doc token-distribution entropy (perplexity-proxy quality "
-        "signal, floor-millibit integers)",
-    ),
-    "embedding_quantize_int8": QuerySpec(
-        _quantize_embeddings, _QUANTIZE_SQL,
-        "symmetric per-vector int8 quantization with checksum-audited "
-        "cells and floor-ppm scales",
-    ),
-})
-
 
 
 def _source_overlap(spark, sf_dir):
@@ -291,21 +251,6 @@ FROM paths GROUP BY path
 """
 
 
-REGISTRY.update({
-    "source_overlap": QuerySpec(
-        _source_overlap, _SOURCE_OVERLAP_SQL,
-        "cross-source duplicate-content matrix on winnowing "
-        "fingerprints (mirror-domain detector)",
-    ),
-    "user_event_paths": QuerySpec(
-        _user_event_paths, _USER_PATHS_SQL,
-        "first-k event-type path mining per user with occurrence "
-        "counts (funnel discovery)",
-    ),
-})
-
-
-
 def _skew_audit(spark, sf_dir):
     from iceberg_diag_spark.functions.skew import skew_audit
     return skew_audit(_t(spark, sf_dir, "events"), "event_type")
@@ -331,16 +276,6 @@ SELECT rank, key_repr, key_rows, total_rows, n_keys,
        CAST(FLOOR(1000000.0 * key_rows / total_rows) AS BIGINT) AS share_ppm
 FROM ranked, totals WHERE rank <= 5
 """
-
-
-REGISTRY.update({
-    "events_skew_audit": QuerySpec(
-        _skew_audit, _SKEW_AUDIT_SQL,
-        "join/agg-key skew diagnostic: top-key row shares in exact "
-        "ppm (the pre-salting measurement)",
-    ),
-})
-
 
 
 def _dataset_card(spark, sf_dir):
@@ -396,16 +331,6 @@ FROM per_cell JOIN mix ON per_cell.source = mix.source
 """
 
 
-REGISTRY.update({
-    "dataset_card": QuerySpec(
-        _dataset_card, _DATASET_CARD_SQL,
-        "per (source, split) dataset card: docs, exact token budget, "
-        "alpha-mixture share (split x mixture composition)",
-    ),
-})
-
-
-
 def _join_cardinality(spark, sf_dir):
     from iceberg_diag_spark.functions.skew import join_cardinality
     return join_cardinality(
@@ -439,15 +364,6 @@ SELECT (SELECT CAST(count(*) AS BIGINT) FROM orders)   AS n_left,
        (SELECT k FROM w)                               AS worst_key_repr,
        (SELECT CAST(contrib AS BIGINT) FROM w)         AS worst_key_rows
 """
-
-
-REGISTRY.update({
-    "join_cardinality_audit": QuerySpec(
-        _join_cardinality, _JOIN_CARD_SQL,
-        "pre-flight join-explosion detector: exact equi-join output "
-        "cardinality + worst-key contribution from key-count sketches",
-    ),
-})
 
 
 # --------------------------------------------------------------------
@@ -732,25 +648,6 @@ LEFT JOIN exact e ON d.doc_id = e.doc_id
 LEFT JOIN near n ON d.doc_id = n.doc_id
 WHERE d.doc_id % 2 = 1
 """
-
-
-REGISTRY.update({
-    "near_dup_rate_by_source": QuerySpec(
-        _near_dup_by_source, _NEAR_DUP_BY_SOURCE_SQL,
-        "near-dup candidate-pair counts per unordered source pair "
-        "(fuzzy complement of the exact-hash source_overlap matrix)",
-    ),
-    "doc_weighted_sample": QuerySpec(
-        _weighted_sample, _WEIGHTED_SAMPLE_SQL,
-        "deterministic weight-proportional hash sample, audited per "
-        "source with O(1)-state xor membership digests",
-    ),
-    "dedup_incremental": QuerySpec(
-        _dedup_incremental, _DEDUP_INCREMENTAL_SQL,
-        "incremental batch-vs-corpus dedup gate: exact / near_dup / "
-        "novel per new doc via semi-join hash and LSH-band probes",
-    ),
-})
 
 
 def _lang_confusion(spark, sf_dir):
@@ -1039,17 +936,870 @@ FROM gates GROUP BY source
 """
 
 
+def _curriculum_shards(spark, sf_dir):
+    return sampling.curriculum_shards(_t(spark, sf_dir, "documents"))
+
+
+_CURRICULUM_SQL = r"""
+WITH f AS (
+  SELECT doc_id,
+         string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks,
+         text
+  FROM documents
+),
+feats AS (
+  SELECT doc_id,
+         CAST(length(text) AS DOUBLE) / greatest(len(toks), 1) AS mtl,
+         CAST(len(list_distinct(toks)) AS DOUBLE) / greatest(len(toks), 1) AS ttr,
+         CAST(len(list_intersect(toks,
+           ['the','and','of','to','a','in','is','that','it','for'])) AS DOUBLE)
+           / greatest(len(toks), 1) AS sw,
+         CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE)
+           / greatest(length(text), 1) AS alpha,
+         CASE WHEN len(toks) >= 3 THEN
+           list_transform(generate_series(1, len(toks) - 2),
+                          i -> array_to_string(toks[i : i + 2], ' '))
+         ELSE [] END AS tri,
+         len(toks) AS n_tokens
+  FROM f
+),
+z AS (
+  SELECT doc_id, n_tokens,
+         CAST(FLOOR((-2.3 + (-0.05) * mtl + 1.2 * ttr + 4.0 * sw + 2.5 * alpha
+         + (-3.0) * (CAST(len(tri) - len(list_distinct(tri)) AS DOUBLE)
+                     / greatest(len(tri), 1))) * 1000000.0) AS BIGINT) AS z_micro
+  FROM feats
+),
+banded AS (
+  SELECT doc_id, n_tokens,
+         CASE WHEN z_micro >= 600000 THEN 'high'
+              WHEN z_micro >= 300000 THEN 'mid'
+              ELSE 'low' END AS band,
+         ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 8 AS shard
+  FROM z
+),
+g AS (
+  SELECT band,
+         CASE band WHEN 'high' THEN 0 WHEN 'mid' THEN 1 ELSE 2 END AS band_rank,
+         shard, count(*) AS n_docs, sum(n_tokens) AS total_tokens
+  FROM banded GROUP BY band, shard
+)
+SELECT band,
+       CAST(band_rank AS INTEGER) AS band_rank,
+       CAST(shard AS BIGINT) AS shard,
+       CAST(n_docs AS BIGINT) AS n_docs,
+       CAST(total_tokens AS BIGINT) AS total_tokens,
+       CAST(FLOOR(n_docs * 1000000.0 / sum(n_docs) OVER (PARTITION BY band))
+            AS BIGINT) AS band_share_ppm
+FROM g
+"""
+
+
+def _padding_waste_audit(spark, sf_dir):
+    from iceberg_diag_spark.operators.packing import padding_waste_audit
+
+    return padding_waste_audit(_t(spark, sf_dir, "documents"))
+
+
+def _padding_waste_sql() -> str:
+    ladder = " ".join(
+        f"WHEN n <= {1 << k} THEN {1 << k}" for k in range(4, 21)
+    )
+    return rf"""
+WITH base AS (
+  SELECT doc_id,
+         CAST(len(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS BIGINT) AS n
+  FROM documents
+),
+g AS (
+  SELECT 'global_max' AS strategy,
+         CAST(count(*) AS BIGINT) AS n_docs,
+         CAST(sum(n) AS BIGINT) AS total_tokens,
+         CAST(count(*) * max(n) AS BIGINT) AS padded_tokens
+  FROM base
+),
+p AS (
+  SELECT 'pow2_bucket' AS strategy,
+         CAST(count(*) AS BIGINT) AS n_docs,
+         CAST(sum(n) AS BIGINT) AS total_tokens,
+         CAST(sum(CASE {ladder} ELSE {1 << 20} END) AS BIGINT) AS padded_tokens
+  FROM base
+),
+ranked AS (
+  SELECT n, CAST((row_number() OVER (ORDER BY n, doc_id) - 1) // 32 AS BIGINT) AS batch
+  FROM base
+),
+bm AS (
+  SELECT batch, count(*) AS bn, sum(n) AS bsum, max(n) AS bmax
+  FROM ranked GROUP BY batch
+),
+s AS (
+  SELECT 'sorted_batches' AS strategy,
+         CAST(sum(bn) AS BIGINT) AS n_docs,
+         CAST(sum(bsum) AS BIGINT) AS total_tokens,
+         CAST(sum(bn * bmax) AS BIGINT) AS padded_tokens
+  FROM bm
+),
+u AS (SELECT * FROM g UNION ALL SELECT * FROM p UNION ALL SELECT * FROM s)
+SELECT strategy, n_docs, total_tokens, padded_tokens,
+       CAST(floor(1000000.0 * (padded_tokens - total_tokens) / padded_tokens)
+            AS BIGINT) AS waste_ppm
+FROM u
+"""
+
+
+_PADDING_WASTE_SQL = _padding_waste_sql()
+
+
+def _exact_quota_holdout(spark, sf_dir):
+    return sampling.exact_quota_holdout(
+        _t(spark, sf_dir, "documents"), holdout_ppm=100_000
+    )
+
+
+_EXACT_QUOTA_SQL = """
+WITH keyed AS (
+  SELECT doc_id, source AS stratum,
+         md5(CAST(doc_id AS VARCHAR)) AS mh
+  FROM documents
+),
+counts AS (
+  SELECT stratum, CAST(count(*) AS BIGINT) AS n_s
+  FROM keyed GROUP BY stratum
+),
+totals AS (
+  SELECT CAST(sum(n_s) AS BIGINT) AS n_total,
+         CAST(sum((n_s * 100000) // 1000000) AS BIGINT) AS base_total
+  FROM counts
+),
+quotas AS (
+  SELECT stratum,
+         (n_s * 100000) // 1000000
+           + CASE WHEN row_number() OVER (
+                    ORDER BY n_s * 100000
+                             - ((n_s * 100000) // 1000000) * 1000000 DESC,
+                             stratum ASC)
+                    <= (n_total * 100000) // 1000000 - base_total
+             THEN 1 ELSE 0 END AS quota
+  FROM counts CROSS JOIN totals
+)
+SELECT k.doc_id, k.stratum, CAST(k.rn AS BIGINT) AS pick_rank
+FROM (
+  SELECT doc_id, stratum,
+         row_number() OVER (PARTITION BY stratum ORDER BY mh, doc_id)
+           AS rn
+  FROM keyed
+) k JOIN quotas USING (stratum)
+WHERE k.rn <= quota
+"""
+
+
+# ------------------------------------------------------------------
+# Round 8: fused corpus-build funnel (the release "dataset card")
+# ------------------------------------------------------------------
+
+def _corpus_build_funnel(spark, sf_dir):
+    from iceberg_diag_spark.operators.funnel import corpus_build_funnel
+
+    return corpus_build_funnel(_t(spark, sf_dir, "documents"))
+
+
+# The oracle composes the same stage rules the individual entries
+# already verify one-by-one (corpus_curation gates, minhash_pairs
+# candidates, near_dup_clusters' recursive-CTE connected components
+# restricted to stage-2 survivors, exact_quota_holdout apportionment,
+# doc_pack_sequences recursion) into one funnel — the composition
+# itself is what this entry tests. The pairs CTE embeds _MINHASH_PAIRS_SQL verbatim as a
+# parenthesized WITH-subquery (DuckDB scopes inner CTE names, so its
+# norm/chash chain cannot collide with the funnel's).
+# Shared template for the funnel FAMILY (stage counts + the executed
+# release's manifest): one WITH-chain through the per-doc p4 flag
+# relation and the pack recursion; {pdata} parameterizes what feeds
+# the packer (the funnel packs doc_id%4 shards, the release packs
+# md5-bucket shards) and {final} the terminal projection.
+_FUNNEL_TEMPLATE = (
+    r"""
+WITH RECURSIVE fnorm AS (
+  SELECT doc_id, source, text,
+         string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+  FROM documents
+),
+perdoc0 AS (
+  SELECT doc_id, source, CAST(len(toks) AS BIGINT) AS n_tokens,
+         sha256(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS ch,
+         (CAST(len(list_distinct(toks)) AS DOUBLE)
+            / greatest(len(toks), 1) >= 0.4
+          AND CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE)
+              / greatest(length(text), 1) >= 0.6
+          AND greatest(
+                len(list_intersect(toks, """
+    + "{de}"
+    + r""")),
+                len(list_intersect(toks, """
+    + "{en}"
+    + r""")),
+                len(list_intersect(toks, """
+    + "{es}"
+    + r""")),
+                len(list_intersect(toks, """
+    + "{fr}"
+    + r"""))) > 0
+         ) AS s1
+  FROM fnorm
+),
+perdoc AS (
+  SELECT *,
+         (s1 AND doc_id = min(CASE WHEN s1 THEN doc_id END)
+                            OVER (PARTITION BY ch)) AS s2
+  FROM perdoc0
+),
+pairs AS (SELECT * FROM (
+"""
+    + _MINHASH_PAIRS_SQL.strip()
+    + r"""
+)),
+fpairs AS (
+  SELECT p.doc_a, p.doc_b
+  FROM pairs p
+  JOIN perdoc sa ON sa.doc_id = p.doc_a AND sa.s2
+  JOIN perdoc sb ON sb.doc_id = p.doc_b AND sb.s2
+),
+fedges AS (
+  SELECT doc_a AS src, doc_b AS dst FROM fpairs
+  UNION ALL
+  SELECT doc_b, doc_a FROM fpairs
+),
+freach(node, label) AS (
+    SELECT doc_id, doc_id FROM perdoc WHERE s2
+  UNION
+    SELECT e.src, r.label FROM fedges e JOIN freach r ON r.node = e.dst
+),
+fcc AS (
+  SELECT node AS doc_id, CAST(min(label) AS BIGINT) AS cluster_id
+  FROM freach GROUP BY node
+),
+p3 AS (
+  SELECT pd.doc_id, pd.source, pd.n_tokens, pd.s1, pd.s2,
+         (pd.s2 AND coalesce(c.cluster_id, pd.doc_id) = pd.doc_id) AS s3
+  FROM perdoc pd LEFT JOIN fcc c USING (doc_id)
+),
+keyed AS (
+  SELECT doc_id, source AS stratum, md5(CAST(doc_id AS VARCHAR)) AS mh
+  FROM p3 WHERE s3
+),
+counts AS (
+  SELECT stratum, CAST(count(*) AS BIGINT) AS n_s FROM keyed GROUP BY stratum
+),
+totals AS (
+  SELECT CAST(sum(n_s) AS BIGINT) AS n_total,
+         CAST(sum((n_s * 100000) // 1000000) AS BIGINT) AS base_total
+  FROM counts
+),
+quotas AS (
+  SELECT stratum,
+         (n_s * 100000) // 1000000
+           + CASE WHEN row_number() OVER (
+                    ORDER BY n_s * 100000
+                             - ((n_s * 100000) // 1000000) * 1000000 DESC,
+                             stratum ASC)
+                    <= (n_total * 100000) // 1000000 - base_total
+             THEN 1 ELSE 0 END AS quota
+  FROM counts CROSS JOIN totals
+),
+picks AS (
+  SELECT k.doc_id
+  FROM (
+    SELECT doc_id, stratum,
+           row_number() OVER (PARTITION BY stratum ORDER BY mh, doc_id) AS rn
+    FROM keyed
+  ) k JOIN quotas USING (stratum)
+  WHERE k.rn <= quota
+),
+p4 AS (
+  SELECT p3.doc_id, p3.source, p3.n_tokens, p3.s1, p3.s2, p3.s3,
+         (p3.s3 AND pk.doc_id IS NULL) AS s4
+  FROM p3 LEFT JOIN picks pk USING (doc_id)
+),
+pdata AS (
+{pdata}
+),
+ppre AS (
+  SELECT source, shard, sz,
+         row_number() OVER (PARTITION BY source, shard ORDER BY doc_id) AS rn,
+         sum(sz) OVER (PARTITION BY source, shard ORDER BY doc_id) AS ps
+  FROM pdata
+),
+pbounds AS (
+  SELECT source, shard, 0 AS gid, CAST(1 AS BIGINT) AS srn,
+         CAST(0 AS HUGEINT) AS base
+  FROM (SELECT DISTINCT source, shard FROM pdata)
+  UNION ALL
+  SELECT q.source, q.shard, q.gid + 1,
+         CASE WHEN q.ern = q.srn THEN q.ern + 1 ELSE q.ern END,
+         CASE WHEN q.ern = q.srn THEN q.eps ELSE q.pps END
+  FROM (
+    SELECT b.source, b.shard, b.gid, b.srn,
+           min(p.rn) AS ern, min(p.ps) AS eps,
+           arg_min(p.ps - p.sz, p.rn) AS pps
+    FROM pbounds b
+    JOIN ppre p ON p.source = b.source AND p.shard = b.shard
+              AND p.rn >= b.srn
+              AND p.ps - b.base > 256
+    GROUP BY b.source, b.shard, b.gid, b.srn
+  ) q
+),
+ptot AS (
+  SELECT source, shard, max(rn) AS mx, max(ps) AS total
+  FROM ppre GROUP BY source, shard
+),
+pgrp AS (
+  SELECT b.source, b.shard, b.gid,
+         coalesce(lead(b.base) OVER w, t.total) - b.base AS toks
+  FROM pbounds b
+  JOIN ptot t ON t.source = b.source AND t.shard = b.shard
+            AND b.srn <= t.mx
+  WINDOW w AS (PARTITION BY b.source, b.shard ORDER BY b.gid)
+)
+{final}"""
+)
+
+
+def _funnel_family_sql(pdata: str, final: str) -> str:
+    return _FUNNEL_TEMPLATE.format(
+        de=_lang_list_sql("de"),
+        en=_lang_list_sql("en"),
+        es=_lang_list_sql("es"),
+        fr=_lang_list_sql("fr"),
+        pdata=pdata,
+        final=final,
+    )
+
+
+_FUNNEL_SQL = _funnel_family_sql(
+    "  SELECT source, doc_id % 4 AS shard, doc_id, n_tokens AS sz\n"
+    "  FROM p4 WHERE s4",
+    """SELECT CAST(0 AS BIGINT) AS stage_id, 'raw' AS stage,
+       CAST(count(*) AS BIGINT) AS n_rows,
+       CAST(coalesce(sum(n_tokens), 0) AS BIGINT) AS n_tokens
+FROM p4
+UNION ALL
+SELECT 1, 'quality_gate', CAST(count(*) AS BIGINT),
+       CAST(coalesce(sum(n_tokens), 0) AS BIGINT)
+FROM p4 WHERE s1
+UNION ALL
+SELECT 2, 'exact_dedup', CAST(count(*) AS BIGINT),
+       CAST(coalesce(sum(n_tokens), 0) AS BIGINT)
+FROM p4 WHERE s2
+UNION ALL
+SELECT 3, 'near_dup', CAST(count(*) AS BIGINT),
+       CAST(coalesce(sum(n_tokens), 0) AS BIGINT)
+FROM p4 WHERE s3
+UNION ALL
+SELECT 4, 'train', CAST(count(*) AS BIGINT),
+       CAST(coalesce(sum(n_tokens), 0) AS BIGINT)
+FROM p4 WHERE s4
+UNION ALL
+SELECT 5, 'packed', CAST(count(*) AS BIGINT),
+       CAST(coalesce(sum(toks), 0) AS BIGINT)
+FROM pgrp
+""",
+)
+
+# The release packs md5-bucket shards (sampling.hash_bucket's
+# '0x'||substr(md5) parse, % RELEASE_N_SHARDS=8) and the manifest
+# aggregates pdata itself: n_seqs comes from the pack recursion's
+# per-(source, shard, gid) rows, the membership digests are the
+# bit_xor 60-bit salted-hash pair (sampling.membership_checksums).
+_RELEASE_MANIFEST_SQL = _funnel_family_sql(
+    "  SELECT source,\n"
+    "         ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))"
+    "::BIGINT % 8 AS shard,\n"
+    "         doc_id, n_tokens AS sz\n"
+    "  FROM p4 WHERE s4",
+    """SELECT d.shard,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       q.n_seqs,
+       CAST(sum(d.sz) AS BIGINT) AS n_tokens,
+       bit_xor(('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT) AS members_xor,
+       bit_xor(('0x' || substring(md5('m2|' || CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT) AS members_xor2
+FROM pdata d
+JOIN (SELECT shard, CAST(count(*) AS BIGINT) AS n_seqs
+      FROM pgrp GROUP BY shard) q USING (shard)
+GROUP BY d.shard, q.n_seqs
+""",
+)
+
+
+def _corpus_release_manifest(spark, sf_dir):
+    from iceberg_diag_spark.operators.funnel import corpus_release_manifest
+
+    return corpus_release_manifest(_t(spark, sf_dir, "documents"))
+
+
+# ------------------------------------------------------------------
+# Round 8: token-budget mixing plan with the repeating-data audit
+# ------------------------------------------------------------------
+
+def _data_mixing_plan(spark, sf_dir):
+    return sampling.data_mixing_plan(_t(spark, sf_dir, "documents"))
+
+
+_DATA_MIXING_SQL = """
+WITH m AS (
+  SELECT source, CAST(sum(n_chars) AS BIGINT) AS mass
+  FROM documents GROUP BY source
+),
+p AS (
+  SELECT source, mass,
+         (sum(mass) OVER () * 1) // 2 AS budget,
+         CAST(FLOOR(CAST((sum(mass) OVER () * 1) // 2 AS DOUBLE)
+                    * pow(CAST(mass AS DOUBLE), 0.5)
+                    / sum(pow(CAST(mass AS DOUBLE), 0.5)) OVER ())
+              AS BIGINT) AS tokens_alloc,
+         CAST(FLOOR(1000000.0 * pow(CAST(mass AS DOUBLE), 0.5)
+                    / sum(pow(CAST(mass AS DOUBLE), 0.5)) OVER ())
+              AS BIGINT) AS sample_share_ppm
+  FROM m
+)
+SELECT source, mass, tokens_alloc, sample_share_ppm,
+       CAST((1000000 * tokens_alloc) // greatest(mass, 1) AS BIGINT)
+         AS epochs_ppm,
+       (1000000 * tokens_alloc) // greatest(mass, 1) > 4000000
+         AS over_repeat
+FROM p
+"""
+
+
+# ------------------------------------------------------------------
+# Round 9: mixing-plan executing sampler
+# ------------------------------------------------------------------
+
+def _data_mixing_sample(spark, sf_dir):
+    return sampling.data_mixing_sample(_t(spark, sf_dir, "documents"))
+
+
+_DATA_MIXING_SAMPLE_SQL = (
+    r"""
+WITH plan AS (SELECT source, tokens_alloc FROM (
+"""
+    + _DATA_MIXING_SQL.strip()
+    + r"""
+)),
+keyed AS (
+  SELECT source, doc_id, CAST(n_chars AS BIGINT) AS w,
+         md5(CAST(doc_id AS VARCHAR)) AS k
+  FROM documents
+),
+pre AS (
+  SELECT source, doc_id, w, k,
+         coalesce(sum(w) OVER (
+           PARTITION BY source ORDER BY k, doc_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+           AS prefix
+  FROM keyed
+),
+chosen AS (
+  SELECT p.source, p.w, pl.tokens_alloc
+  FROM pre p JOIN plan pl USING (source)
+  WHERE p.prefix < pl.tokens_alloc
+)
+SELECT source,
+       CAST(max(tokens_alloc) AS BIGINT) AS tokens_alloc,
+       CAST(count(*) AS BIGINT) AS n_docs_selected,
+       CAST(sum(w) AS BIGINT) AS tokens_selected,
+       CAST((CAST(1000000 AS HUGEINT) * sum(w))
+            // greatest(max(tokens_alloc), 1) AS BIGINT) AS fill_ppm
+FROM chosen GROUP BY source
+"""
+)
+
+
+# Cross-increment near-dup reconciliation
+# (funnel.release_neardup_reconcile: signatures persisted alongside the
+# shards, probed per increment). The reconcile oracle runs the proven
+# funnel chain (_funnel_family_sql) once per increment as a nested
+# WITH RECURSIVE subchain scoped to that increment's documents, then
+# the proven MinHash band-key chain (oracles_dedup._MINHASH_PAIRS_SQL's
+# sig/keys idiom) over each survivor set.
+
+# ------------------------------------------------------------------
+# release_neardup_reconcile
+# ------------------------------------------------------------------
+
+# The increment split the registry entry uses: the same md5 bucket
+# idiom as sampling.hash_bucket (and the release's own shard
+# membership), at 2 buckets — deterministic, content-stable, and
+# uniform, so near-dup pairs land cross-increment about half the
+# time.
+_BATCH_PRED = (
+    "('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
+    " % 2 = {b}"
+)
+
+
+def _batch_survivor_chain(
+    b: int,
+    pdata: str = (
+        "  SELECT source, 0 AS shard, doc_id, n_tokens AS sz\n"
+        "  FROM p4 WHERE s4"
+    ),
+    final: str = "SELECT doc_id FROM p4 WHERE s4",
+) -> str:
+    """The full funnel chain (quality gate → exact dedup → CC
+    near-dup collapse → holdout) scoped to increment `b`'s documents,
+    as a standalone nested WITH RECURSIVE subquery yielding the
+    released survivor ids — exactly what the batch=<b> release
+    directory holds (the _RELEASE_MANIFEST_SQL-proven chain, with
+    every `documents` reference rebound to the increment). `pdata`
+    and `final` default to the reconcile entry's survivor-id form
+    (rendered SQL byte-identical to the pre-parameter version,
+    pinned in test_round13_ops); the retraction oracle overrides both
+    to get the per-doc release relation (real md5 shards + packed
+    seq/gid) for the retraction ledger."""
+    inner = _funnel_family_sql(pdata=pdata, final=final)
+    # rebind the three `documents` scans (fnorm, and the embedded
+    # exact-collapse chash/rdocs) to the increment; the aliased form
+    # first so the plain replace cannot corrupt it
+    inner = inner.replace("FROM documents d JOIN", "FROM bdocs d JOIN")
+    inner = inner.replace("FROM documents", "FROM bdocs")
+    pred = _BATCH_PRED.format(b=b)
+    return inner.replace(
+        "WITH RECURSIVE fnorm",
+        "WITH RECURSIVE bdocs AS MATERIALIZED (\n"
+        f"  SELECT * FROM documents WHERE {pred}\n"
+        "),\nfnorm",
+        1,
+    )
+
+
+def _survivor_keys_cte(b: int) -> str:
+    """Per-survivor MinHash band keys + normalized content hash for
+    increment `b` — composes oracles_dedup._SIG_KEYS_CTES (the ONE
+    definition of the 16-hash/4-band family, shared with
+    _MINHASH_PAIRS_SQL so the two oracles cannot diverge) over the
+    docs s{b} released. md5 here vs sha256 engine-side is
+    equivalent: both sides only test content-hash EQUALITY."""
+    from iceberg_diag_spark.plans.oracles_dedup import _SIG_KEYS_CTES
+
+    return (
+        rf"""
+k{b} AS MATERIALIZED (
+  WITH sdocs AS (
+    SELECT d.doc_id,
+           regexp_replace(lower(trim(d.text)), '\s+', ' ', 'g') AS nt
+    FROM documents d JOIN s{b} USING (doc_id)
+  ),
+  norm AS (
+    SELECT doc_id, md5(nt) AS ch, string_split(nt, ' ') AS toks
+    FROM sdocs
+  ),
+  eg AS (
+    SELECT doc_id, unnest(
+      CASE WHEN len(toks) >= 3 THEN
+        list_distinct(list_transform(
+          generate_series(0, greatest(len(toks) - 3, 0)),
+          i -> array_to_string(toks[i + 1 : i + 3], ' ')))
+      ELSE [] END) AS gram
+    FROM norm
+  ),
+  """
+        + _SIG_KEYS_CTES
+        + """
+  SELECT k.doc_id, k.band, k.band_key, n.ch
+  FROM keys k JOIN norm n USING (doc_id)
+)"""
+    )
+
+
+_RECONCILE_SQL = (
+    "WITH s0 AS MATERIALIZED (\n"
+    + _batch_survivor_chain(0)
+    + "\n),\ns1 AS MATERIALIZED (\n"
+    + _batch_survivor_chain(1)
+    + "\n),"
+    + _survivor_keys_cte(0)
+    + ","
+    + _survivor_keys_cte(1)
+    + """
+SELECT CAST(0 AS BIGINT) AS batch_a, CAST(a.doc_id AS BIGINT) AS doc_a,
+       CAST(1 AS BIGINT) AS batch_b, CAST(b.doc_id AS BIGINT) AS doc_b,
+       CAST(count(*) AS BIGINT) AS n_shared_bands,
+       max(a.ch = b.ch) AS exact_dup
+FROM k0 a JOIN k1 b ON a.band = b.band AND a.band_key = b.band_key
+GROUP BY doc_a, doc_b
+ORDER BY doc_a, doc_b
+"""
+)
+
+
+def build_release_increments(docs, release: str, batches=(0, 1)):
+    """Build the md5-bucket increment releases CONCURRENTLY (one
+    driver thread per batch — guide-§2.6 job overlap: each increment's
+    funnel is a chain of short, eagerly-checkpointed stages that
+    leaves most cores idle at every stage tail, and the two builds
+    write disjoint batch=<b> directories, so overlapping them is pure
+    wall-clock recovery with byte-identical outputs). Returns the
+    ordered (batch_id, docs) list the reconcile consumes. Shared by
+    release_neardup_reconcile and release_retraction_apply."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import functions as F
+
+    from iceberg_diag_spark.operators.sampling import hash_bucket
+    from iceberg_diag_spark.sources.sinks import write_assigned_shards
+
+    def _build(b: int):
+        d = docs.filter(hash_bucket(F.col("doc_id"), 2) == b)
+        asg = funnel.release_assignments(d)
+        write_assigned_shards(
+            asg,
+            f"{release}/batch={b}",
+            funnel.RELEASE_N_SHARDS,
+            order_cols=("source", "seq_id", "doc_id"),
+        )
+        return (b, d)
+
+    with ThreadPoolExecutor(max_workers=len(batches)) as pool:
+        return list(pool.map(_build, batches))
+
+
+def _release_neardup_reconcile(spark, sf_dir):
+    """Build a genuine 2-increment release (the md5 doc-id bucket
+    split), then reconcile it: per increment, persist the survivor
+    band signatures alongside the shards and probe the accumulated
+    store for cross-batch candidates. Temp dirs are removed after the
+    result checkpoint (the ivf_probe_topk try/finally discipline)."""
+    import shutil
+    import tempfile
+
+    docs = _t(spark, sf_dir, "documents")
+    release = tempfile.mkdtemp(prefix="reconcile_release_")
+    sig = tempfile.mkdtemp(prefix="reconcile_sig_")
+    try:
+        incs = build_release_increments(docs, release)
+        out = funnel.release_neardup_reconcile(
+            spark, incs, release, sig
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(release, ignore_errors=True)
+        shutil.rmtree(sig, ignore_errors=True)
+    return out
+
+
+# release_retraction_apply: the executing sink that closes the
+# reconcile loop. release_neardup_reconcile NAMES the retraction
+# candidates (doc_b, the later batch of each cross-increment duplicate
+# pair); this entry APPLIES them: it rewrites only the affected
+# batch/shard files of the written release and re-derives the
+# per-batch manifest from what is actually on disk.
+#
+# Oracle: the proven funnel chain per increment (_batch_survivor_chain,
+# parameterized to the release pdata form so each increment yields its
+# full per-doc release relation: real md5 shards plus the packing
+# recursion's per-doc group id), the proven MinHash band-key chain over
+# each survivor set (_survivor_keys_cte), the pair probe collapsed to
+# the distinct doc_b retraction set, and a per-batch ledger aggregate
+# with the same bit_xor membership digests as _RELEASE_MANIFEST_SQL.
+#
+# The per-doc group id (gid) comes from interval containment against
+# the pack recursion's boundaries (pbounds srn ranges in row-number
+# space), the same fit-before-append partition the engine's
+# pack_assign_from_counts computes, so counting distinct
+# (shard, source, gid) among survivors equals the engine's
+# countDistinct(shard, source, seq_id) over the rewritten files.
+
+# The release pdata form (shard = md5 bucket % RELEASE_N_SHARDS=8 —
+# sampling.hash_bucket's parse, identical to _RELEASE_MANIFEST_SQL).
+_RELEASE_PDATA = (
+    "  SELECT source,\n"
+    "         ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))"
+    "::BIGINT % 8 AS shard,\n"
+    "         doc_id, n_tokens AS sz\n"
+    "  FROM p4 WHERE s4"
+)
+
+# Extend the funnel chain past pgrp with the per-doc group mapping:
+# each doc's rn (the pack order) lands in exactly one boundary
+# interval [srn, next srn); the trailing overflow boundary (srn > mx)
+# is dropped exactly as pgrp drops it.
+_RELEASE_ROWS_FINAL = """, pband AS (
+  SELECT b.source, b.shard, b.gid, b.srn,
+         lead(b.srn) OVER (PARTITION BY b.source, b.shard ORDER BY b.gid) AS nsrn
+  FROM pbounds b
+  JOIN ptot t ON t.source = b.source AND t.shard = b.shard
+            AND b.srn <= t.mx
+),
+prn AS (
+  SELECT source, shard, doc_id, sz,
+         row_number() OVER (PARTITION BY source, shard ORDER BY doc_id) AS rn
+  FROM pdata
+)
+SELECT p.source, p.shard, p.doc_id, p.sz, b.gid
+FROM prn p
+JOIN pband b ON b.source = p.source AND b.shard = p.shard
+            AND p.rn >= b.srn AND (b.nsrn IS NULL OR p.rn < b.nsrn)"""
+
+
+def _batch_release_rows_chain(b: int) -> str:
+    """Per-doc release relation for increment `b`: (source, shard,
+    doc_id, sz, gid) — exactly the rows the batch=<b> directory
+    holds, with gid the packed sequence the doc landed in."""
+    return _batch_survivor_chain(
+        b, pdata=_RELEASE_PDATA, final=_RELEASE_ROWS_FINAL
+    )
+
+
+_RETRACTION_SQL = (
+    "WITH r0 AS MATERIALIZED (\n"
+    + _batch_release_rows_chain(0)
+    + "\n),\nr1 AS MATERIALIZED (\n"
+    + _batch_release_rows_chain(1)
+    + "\n),\ns0 AS MATERIALIZED (SELECT doc_id FROM r0),\n"
+    "s1 AS MATERIALIZED (SELECT doc_id FROM r1),"
+    + _survivor_keys_cte(0)
+    + ","
+    + _survivor_keys_cte(1)
+    + """,
+retr AS MATERIALIZED (
+  SELECT DISTINCT b.doc_id AS doc_id
+  FROM k0 a JOIN k1 b ON a.band = b.band AND a.band_key = b.band_key
+),
+led AS (
+  SELECT 0 AS batch, source, shard, doc_id, sz, gid, FALSE AS rt
+  FROM r0
+  UNION ALL
+  SELECT 1 AS batch, r.source, r.shard, r.doc_id, r.sz, r.gid,
+         (t.doc_id IS NOT NULL) AS rt
+  FROM r1 r LEFT JOIN retr t USING (doc_id)
+)
+SELECT CAST(batch AS BIGINT) AS batch,
+       CAST(count(*) AS BIGINT) AS n_docs_before,
+       CAST(count(*) FILTER (WHERE rt) AS BIGINT) AS n_retracted,
+       CAST(count(*) FILTER (WHERE NOT rt) AS BIGINT) AS n_docs_after,
+       CAST(count(DISTINCT CASE WHEN NOT rt THEN (shard, source, gid) END)
+            AS BIGINT) AS n_seqs_after,
+       CAST(sum(sz) AS BIGINT) AS n_tokens_before,
+       CAST(coalesce(sum(sz) FILTER (WHERE rt), 0) AS BIGINT)
+            AS n_tokens_retracted,
+       CAST(coalesce(sum(sz) FILTER (WHERE NOT rt), 0) AS BIGINT)
+            AS n_tokens_after,
+       bit_xor(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT)
+            FILTER (WHERE NOT rt) AS members_xor_after,
+       bit_xor(('0x' || substring(md5('m2|' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT)
+            FILTER (WHERE NOT rt) AS members_xor2_after
+FROM led
+GROUP BY batch
+ORDER BY batch
+"""
+)
+
+
+def _release_retraction_apply(spark, sf_dir):
+    """Build the same genuine 2-increment release as
+    release_neardup_reconcile (the md5 doc-id bucket split), run the
+    reconcile to get the cross-batch pairs, then EXECUTE the
+    retraction against the written release and return the per-batch
+    ledger re-derived from the rewritten files. Temp dirs removed
+    after the result checkpoint (the ivf_probe_topk try/finally
+    discipline)."""
+    import shutil
+    import tempfile
+
+    docs = _t(spark, sf_dir, "documents")
+    release = tempfile.mkdtemp(prefix="retraction_release_")
+    sig = tempfile.mkdtemp(prefix="retraction_sig_")
+    try:
+        incs = build_release_increments(docs, release)
+        pairs = funnel.release_neardup_reconcile(spark, incs, release, sig)
+        # sig_path exercises the signature-store purge under the
+        # driver (ledger values are release-derived, so the oracle is
+        # unchanged by it)
+        out = funnel.release_retraction_apply(
+            spark, pairs, release, sig_path=sig
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(release, ignore_errors=True)
+        shutil.rmtree(sig, ignore_errors=True)
+    return out
+
+
 REGISTRY.update({
+    "stratified_split": QuerySpec(
+        _stratified_split, _STRATIFIED_SPLIT_SQL,
+        "deterministic hash-bucket train/val/test split audited per "
+        "source (counts + exact-membership md5)",
+    ),
+    "per_source_cap": QuerySpec(
+        _per_source_cap, _PER_SOURCE_CAP_SQL,
+        "per-domain document cap by hash order (WindowGroupLimit "
+        "map-side top-k)",
+    ),
+    "source_mixture_weights": QuerySpec(
+        _source_mixture, _SOURCE_MIXTURE_SQL,
+        "alpha=0.5 temperature domain-mixture sampling weights "
+        "(floor-ppm integers)",
+    ),
+    "nearest_centroid_confusion": QuerySpec(
+        _centroid_confusion, _CENTROID_CONFUSION_SQL,
+        "nearest-centroid classification confusion counts over the "
+        "labeled embedding table",
+    ),
+    "token_entropy": QuerySpec(
+        _token_entropy, _TOKEN_ENTROPY_SQL,
+        "per-doc token-distribution entropy (perplexity-proxy quality "
+        "signal, floor-millibit integers)",
+    ),
+    "embedding_quantize_int8": QuerySpec(
+        _quantize_embeddings, _QUANTIZE_SQL,
+        "symmetric per-vector int8 quantization with checksum-audited "
+        "cells and floor-ppm scales",
+    ),
+    "source_overlap": QuerySpec(
+        _source_overlap, _SOURCE_OVERLAP_SQL,
+        "cross-source duplicate-content matrix on winnowing "
+        "fingerprints (mirror-domain detector)",
+    ),
+    "user_event_paths": QuerySpec(
+        _user_event_paths, _USER_PATHS_SQL,
+        "first-k event-type path mining per user with occurrence "
+        "counts (funnel discovery)",
+    ),
+    "events_skew_audit": QuerySpec(
+        _skew_audit, _SKEW_AUDIT_SQL,
+        "join/agg-key skew diagnostic: top-key row shares in exact "
+        "ppm (the pre-salting measurement)",
+    ),
+    "dataset_card": QuerySpec(
+        _dataset_card, _DATASET_CARD_SQL,
+        "per (source, split) dataset card: docs, exact token budget, "
+        "alpha-mixture share (split x mixture composition)",
+    ),
+    "join_cardinality_audit": QuerySpec(
+        _join_cardinality, _JOIN_CARD_SQL,
+        "pre-flight join-explosion detector: exact equi-join output "
+        "cardinality + worst-key contribution from key-count sketches",
+    ),
+    "near_dup_rate_by_source": QuerySpec(
+        _near_dup_by_source, _NEAR_DUP_BY_SOURCE_SQL,
+        "near-dup candidate-pair counts per unordered source pair "
+        "(fuzzy complement of the exact-hash source_overlap matrix)",
+    ),
+    "doc_weighted_sample": QuerySpec(
+        _weighted_sample, _WEIGHTED_SAMPLE_SQL,
+        "deterministic weight-proportional hash sample, audited per "
+        "source with O(1)-state xor membership digests",
+    ),
+    "dedup_incremental": QuerySpec(
+        _dedup_incremental, _DEDUP_INCREMENTAL_SQL,
+        "incremental batch-vs-corpus dedup gate: exact / near_dup / "
+        "novel per new doc via semi-join hash and LSH-band probes",
+    ),
     "stream_quality_gate": QuerySpec(
         _stream_quality_gate, _STREAM_QUALITY_GATE_SQL,
         "streaming per-source curation-gate monitor: running "
         "totals/pass counts with #domains-bounded state, same gate "
         "exprs as the batch pipeline",
     ),
-})
-
-
-REGISTRY.update({
     "quality_gate_ablation": QuerySpec(
         _quality_gate_ablation, _QUALITY_ABLATION_SQL,
         "curation-filter ablation: per gate total/exclusive kill "
@@ -1060,10 +1810,6 @@ REGISTRY.update({
         "centroid-silhouette label-separability audit over "
         "embeddings (own vs nearest-other centroid distance ratio)",
     ),
-})
-
-
-REGISTRY.update({
     "lang_confusion": QuerySpec(
         _lang_confusion, _LANG_CONFUSION_SQL,
         "predicted-vs-labeled language confusion matrix (label-noise "
@@ -1080,10 +1826,6 @@ REGISTRY.update({
         "semi-probe tags arrivals exact/novel with stateless stream "
         "side",
     ),
-})
-
-
-REGISTRY.update({
     "doc_dup_ngram_spans": QuerySpec(
         _dup_ngram_spans, _DUP_NGRAM_SPANS_SQL,
         "per-doc duplicated-substring audit: share of 8-gram "
@@ -1105,7 +1847,98 @@ REGISTRY.update({
         "pre-flight join input-participation audit: matched rows/keys "
         "per side in exact ppm (the semi-join/runtime-filter signal)",
     ),
+    "doc_curriculum_shards": QuerySpec(
+        _curriculum_shards, _CURRICULUM_SQL,
+        "curriculum training-shard manifest: classifier quality bands "
+        "x deterministic hash shards with doc/token counts and exact "
+        "band shares — the training-loader input",
+    ),
+    "padding_waste_audit": QuerySpec(
+        _padding_waste_audit, _PADDING_WASTE_SQL,
+        "training-batch padding-waste audit: exact pad-token cost of "
+        "global-max / power-of-two-bucket / sorted-batch padding "
+        "policies (integer CASE-ladder buckets, distributed "
+        "global-rank batching — the can't-pack fine-tuning "
+        "counterpart of pack_sequences)",
+    ),
+    "exact_quota_holdout": QuerySpec(
+        _exact_quota_holdout, _EXACT_QUOTA_SQL,
+        "exact-proportion stratified holdout via largest-remainder "
+        "apportionment (Hamilton method): total exactly "
+        "floor(N*ppm/1e6), per-stratum deviation < 1 row, "
+        "deterministic md5-order membership — the exact-quota "
+        "complement of the hash-threshold stratified_split",
+    ),
+    "corpus_build_funnel": QuerySpec(
+        _corpus_build_funnel, _FUNNEL_SQL,
+        "fused corpus-build pipeline as one DAG: quality gate -> "
+        "exact dedup -> connected-components near-dup collapse "
+        "(component-min survivor, the production near_dup_clusters "
+        "semantics) -> exact-quota holdout -> sequence packing, "
+        "emitting the per-stage survivor funnel (the release dataset "
+        "card); one enriched corpus pass + the banding chain, stages "
+        "share a checkpointed narrow lineage",
+    ),
+    "corpus_release_manifest": QuerySpec(
+        _corpus_release_manifest, _RELEASE_MANIFEST_SQL,
+        "the funnel EXECUTES its release (advisor-executing pattern "
+        "#5): stage-4 survivors shard by deterministic md5 bucket, "
+        "pack per (source, shard) with the production "
+        "fit-before-append fold, and emit the dataset card's "
+        "file-level half — per shard: docs, packed sequences, token "
+        "mass, and two salted bit_xor membership digests (O(1) agg "
+        "state, verifiable by any shard consumer); "
+        "funnel.corpus_release writes the same relation as shard=K "
+        "parquet and re-derives this manifest from the written files",
+    ),
+    "data_mixing_plan": QuerySpec(
+        _data_mixing_plan, _DATA_MIXING_SQL,
+        "per-source token plan for a half-corpus training budget "
+        "under temperature sampling (alpha=0.5), with the implied "
+        "epoch count audited against the ~4-epoch repeating-data "
+        "rule; one groupBy to the #sources relation, bounded windows",
+    ),
+    "data_mixing_sample": QuerySpec(
+        _data_mixing_sample, _DATA_MIXING_SAMPLE_SQL,
+        "mixing-plan EXECUTION (advisor-executing pattern #4): each "
+        "source's token allocation realized as the deterministic "
+        "md5-prefix document sample (first overshooting doc "
+        "included), cumulative mass via the epoch_shuffle hex-shard "
+        "idiom (no one-task-per-source window), broadcast plan join, "
+        "per-source fill audit",
+    ),
+    "release_neardup_reconcile": QuerySpec(
+        _release_neardup_reconcile, _RECONCILE_SQL,
+        "cross-increment near-dup reconciliation — closes the "
+        "incremental release's scoping contract (per-increment dedup "
+        "cannot see pairs split across increments): each increment's "
+        "released survivors get their production MinHash band "
+        "signatures + content hash PERSISTED alongside the shards "
+        "(idempotent batch=<id> overwrite, byte-stable key-bucketed "
+        "files), and each new increment probes the accumulated store "
+        "— a bucketed (band, band_key) join of written files, never "
+        "all-pairs, never a re-read of prior increments' text; exact "
+        "cross-batch dups surface with all bands shared and "
+        "exact_dup=true via the persisted hash; doc_b (the later "
+        "batch) is the retraction candidate",
+    ),
+    "release_retraction_apply": QuerySpec(
+        _release_retraction_apply, _RETRACTION_SQL,
+        "advisor-EXECUTING pattern #9 — APPLY the retraction "
+        "release_neardup_reconcile names: every cross-batch pair's "
+        "doc_b (the later, mutable-side batch) is removed from the "
+        "written release surgically — only affected batch/shard "
+        "directories are rewritten (dynamic partition overwrite; "
+        "sibling shards never read, byte-untouched; fully-emptied "
+        "shard dirs dropped via the Hadoop FS) — and the per-batch "
+        "manifest (docs, surviving sequences, tokens, bit_xor "
+        "membership digests) is re-derived FROM THE WRITTEN FILES "
+        "(rewritten shards re-read from disk, untouched shards "
+        "vouched by the pre-pass over the same bytes — the release "
+        "is scanned exactly once); sig_path purges the retracted "
+        "docs' reconcile signatures with the same surgical idiom so "
+        "no later increment can pair against a doc that is gone; "
+        "replay-idempotent: re-applying the same pairs retracts 0 "
+        "and rewrites nothing",
+    ),
 })
-
-
-# --------------------------------------------------------------------

@@ -1,23 +1,25 @@
 """Diagnostics family (SURVEY §2 A1-A11 over the data_files proxy).
 
-Split from plans/registry.py (pure move; see registry.py for the
-cross-engine determinism rules every oracle follows).
+See plans/common.py for the cross-engine determinism rules every
+oracle follows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import functions as F
 from iceberg_diag_spark.operators.binpack import binpack_groups
 from iceberg_diag_spark.operators.diagnostics import (
     partition_stats,
     table_metrics,
 )
-from iceberg_diag_spark.sources.data_files import (
-    column_values_from_lineitem,
-    file_column_stats_from_lineitem,
-    files_from_lineitem,
+from iceberg_diag_spark.sources.data_files import files_from_lineitem
+from iceberg_diag_spark.plans.common import (
+    FILES_CTE,
+    PROXY_MANIFEST_COUNT,
+    REGISTRY,
+    QuerySpec,
+    _t,
 )
-from iceberg_diag_spark.plans.common import FILES_CTE, PROXY_MANIFEST_COUNT, _t
 
 
 # --------------------------------------------------------------------
@@ -318,3 +320,29 @@ def _diag_metrics_multi(spark, sf_dir):
     return multi_table_metrics(files, mcounts)
 
 
+REGISTRY.update({
+    "diag_partition_stats": QuerySpec(
+        _diag_partition_stats, _DIAG_PARTITION_STATS_SQL,
+        "A1/A3 per-partition before-stats over the data_files proxy",
+    ),
+    "diag_table_stats": QuerySpec(
+        _diag_table_stats, _DIAG_TABLE_STATS_SQL,
+        "A2-A7 global before metrics (single row)",
+    ),
+    "diag_metrics": QuerySpec(
+        _diag_metrics, _DIAG_METRICS_SQL,
+        "Flagship 9-metric diagnostics incl. bin-pack after/improvement "
+        "(A8-A11; sequential fold oracle-checked via boundary-recursive CTE)",
+    ),
+    "diag_binpack_groups": QuerySpec(
+        _diag_binpack, _DIAG_BINPACK_SQL,
+        "A9 greedy bin-packing groups per partition "
+        "(group-boundary recursive-CTE oracle over prefix sums)",
+    ),
+    "diag_metrics_multi_table": QuerySpec(
+        _diag_metrics_multi, _DIAG_METRICS_MULTI_SQL,
+        "X1 as one unioned Spark job: all tables' 9-metric "
+        "diagnostics at once (vs the reference's 10-thread pool); "
+        "per-table manifest counts broadcast",
+    ),
+})

@@ -1,29 +1,42 @@
 """Structured Streaming twins (events drained as a file stream).
 
-Split from plans/registry.py (pure move; see registry.py for the
-cross-engine determinism rules every oracle follows).
+See plans/common.py for the cross-engine determinism rules every
+oracle follows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from iceberg_diag_spark.operators import (
     dedup,
     events,
+    packing,
     profiling,
     sampling,
     shuffling,
-    packing,
     similarity,
     textops,
 )
 from iceberg_diag_spark.streaming import stream_ops
-from iceberg_diag_spark.plans.common import _t
+from iceberg_diag_spark.plans.common import REGISTRY, QuerySpec, _t
 from iceberg_diag_spark.plans.oracles_tpch import _rev_cents
+from iceberg_diag_spark.plans.oracles_events import (
+    _EVENTS_CDC_MERGE_SQL,
+    _EXPECTATIONS_SQL,
+    _LATE_TAINT_CASE,
+    _RANGE_SQL,
+    _SEASONALITY_SQL,
+    _SLI_BURN_SQL,
+    _late_tainted_events,
+)
 from iceberg_diag_spark.plans.oracles_dedup import (
     _MINHASH_PRS_CTE,
     _NEAR_DUP_CLUSTERS_SQL,
+)
+from iceberg_diag_spark.plans.oracles_corpus import (
+    _CENTROID_CONFUSION_SQL,
+    _RELEASE_MANIFEST_SQL,
 )
 
 
@@ -1025,3 +1038,490 @@ FROM counted
 """
 
 
+def _stream_centroid_confusion(spark, sf_dir):
+    from iceberg_diag_spark.streaming import stream_ops
+
+    return stream_ops.run_to_table(
+        stream_ops.centroid_confusion_stream(
+            stream_ops.read_embeddings_stream(spark, sf_dir),
+            _t(spark, sf_dir, "embeddings"),
+        ),
+        "complete",
+        "stream_centroid_confusion",
+    )
+
+
+def _stream_disorder_monitor(spark, sf_dir):
+    ev = stream_ops.read_events_stream(spark, sf_dir)
+    return stream_ops.run_to_table(
+        stream_ops.disorder_monitor(ev), "update", "stream_disorder"
+    )
+
+
+_STREAM_DISORDER_SQL = """
+WITH o AS (
+  SELECT event_type, epoch_us(ts) AS ts_us,
+         max(epoch_us(ts)) OVER (
+           PARTITION BY event_type ORDER BY event_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS frontier
+  FROM events
+),
+l AS (
+  SELECT event_type,
+         CASE WHEN frontier IS NULL OR frontier < ts_us THEN 0
+              ELSE frontier - ts_us END AS lateness_us
+  FROM o
+)
+SELECT event_type,
+       CAST(count(*) AS BIGINT) AS n_events,
+       CAST(sum(CASE WHEN lateness_us > 60000000 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_late,
+       CAST(max(lateness_us) AS BIGINT) AS max_lateness_us,
+       CAST(sum(lateness_us) AS BIGINT) AS total_lateness_us
+FROM l
+GROUP BY event_type
+"""
+
+
+def _stream_scd2(spark, sf_dir):
+    """Streaming SCD2 feed: drain the event stream availableNow and
+    emit every interval the run-collapse CLOSES (append mode; the
+    open run per user stays in keyed state)."""
+    return stream_ops.run_to_table(
+        stream_ops.scd2_stream(
+            stream_ops.read_events_stream(spark, sf_dir)
+        ),
+        "append",
+        "stream_scd2",
+    )
+
+
+_STREAM_SCD2_SQL = """
+WITH runs AS (
+  SELECT user_id, event_type AS state, epoch_us(ts) AS ts_us, event_id,
+         lag(event_type) OVER w AS prev
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
+),
+f AS (
+  SELECT user_id, state, ts_us, event_id
+  FROM runs WHERE prev IS NULL OR prev <> state
+),
+iv AS (
+  SELECT user_id, state,
+         ts_us AS valid_from_us,
+         lead(ts_us) OVER w2 AS valid_to_us,
+         CAST(row_number() OVER w2 AS BIGINT) AS version_seq
+  FROM f
+  WINDOW w2 AS (PARTITION BY user_id ORDER BY ts_us, event_id)
+)
+-- disorder_seen is identically 0 under the oracle's single
+-- availableNow drain: no row can arrive behind a prior batch's
+-- per-user frontier when there is only one batch
+SELECT user_id, state, valid_from_us, valid_to_us, version_seq,
+       CAST(0 AS BIGINT) AS disorder_seen
+FROM iv WHERE valid_to_us IS NOT NULL
+"""
+
+
+def _stream_repetition_gate(spark, sf_dir):
+    from iceberg_diag_spark.streaming import stream_ops
+
+    return stream_ops.run_to_table(
+        stream_ops.repetition_gate_stream(
+            stream_ops.read_documents_stream(spark, sf_dir)
+        ),
+        "complete",
+        "stream_repetition_gate",
+    )
+
+
+_STREAM_REPETITION_SQL = r"""
+WITH base AS (
+  SELECT doc_id, source,
+         regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
+  FROM documents
+),
+toks AS (
+  SELECT doc_id, source, string_split(norm, ' ') AS t,
+         CAST(length(norm) AS BIGINT) AS tc
+  FROM base
+),
+g AS (
+  SELECT toks.doc_id, tc, ns.n,
+         unnest(CASE WHEN len(t) >= ns.n THEN
+            list_transform(generate_series(1, len(t) - ns.n + 1),
+                           i -> array_to_string(t[i:i+ns.n-1], ' '))
+         ELSE [] END) AS g
+  FROM toks CROSS JOIN (SELECT unnest([2, 5]) AS n) ns
+),
+cg AS (SELECT doc_id, tc, n, g, CAST(count(*) AS BIGINT) AS c
+       FROM g GROUP BY ALL),
+top2 AS (
+  SELECT doc_id, g, c FROM (
+    SELECT *, row_number() OVER (PARTITION BY doc_id
+                                 ORDER BY c DESC, g) AS rn
+    FROM cg WHERE n = 2) WHERE rn = 1
+),
+dup5 AS (
+  SELECT doc_id,
+         CAST(COALESCE(sum((c - 1) * length(g)) FILTER (c > 1), 0)
+              AS BIGINT) AS dc
+  FROM cg WHERE n = 5 GROUP BY doc_id
+),
+flags AS (
+  SELECT toks.doc_id, toks.source,
+         CASE WHEN ((1000000 * COALESCE(top2.c, 0)
+                     * length(COALESCE(top2.g, '')))
+                      // greatest(tc, 1) > 180000
+                    AND COALESCE(top2.c, 0) >= 2)
+               OR (1000000 * COALESCE(dup5.dc, 0))
+                    // greatest(tc, 1) > 150000
+              THEN 1 ELSE 0 END AS rep
+  FROM toks
+  LEFT JOIN top2 ON top2.doc_id = toks.doc_id
+  LEFT JOIN dup5 ON dup5.doc_id = toks.doc_id
+)
+SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(rep) AS BIGINT) AS n_repetitive
+FROM flags GROUP BY source
+"""
+
+
+def _stream_watermark_advisor(spark, sf_dir):
+    ev = _late_tainted_events(
+        stream_ops.read_events_stream(spark, sf_dir)
+    )
+    return stream_ops.run_to_table(
+        stream_ops.watermark_advisor_stream(ev, target_ppm=1_000),
+        "update",
+        "stream_wm_advisor",
+    )
+
+
+# Single availableNow drain = one batch: cumulative state equals the
+# per-type batch computation (the disorder_monitor oracle shape) and
+# the integer // ppm matches the stream's arithmetic exactly.
+_STREAM_WATERMARK_SQL = f"""
+WITH o AS (
+  SELECT event_type,
+         epoch_us(ts) - {_LATE_TAINT_CASE} AS ts_us,
+         max(epoch_us(ts) - {_LATE_TAINT_CASE}) OVER (
+           PARTITION BY event_type ORDER BY event_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS frontier
+  FROM events
+),
+l AS (
+  SELECT event_type,
+         CASE WHEN frontier IS NULL OR frontier < ts_us THEN 0
+              ELSE frontier - ts_us END AS lateness_us
+  FROM o
+),
+g AS (
+  SELECT event_type,
+         CAST(count(*) AS BIGINT) AS n_events,
+         CAST(sum(CASE WHEN lateness_us > 1000000 THEN 1 ELSE 0 END) AS BIGINT) AS d1,
+         CAST(sum(CASE WHEN lateness_us > 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS d2,
+         CAST(sum(CASE WHEN lateness_us > 60000000 THEN 1 ELSE 0 END) AS BIGINT) AS d3,
+         CAST(sum(CASE WHEN lateness_us > 600000000 THEN 1 ELSE 0 END) AS BIGINT) AS d4
+  FROM l GROUP BY event_type
+),
+u AS (
+  SELECT event_type, CAST(1000000 AS BIGINT) AS watermark_us, n_events, d1 AS n_dropped FROM g
+  UNION ALL SELECT event_type, 10000000, n_events, d2 FROM g
+  UNION ALL SELECT event_type, 60000000, n_events, d3 FROM g
+  UNION ALL SELECT event_type, 600000000, n_events, d4 FROM g
+),
+adv AS (
+  SELECT event_type, watermark_us, n_events, n_dropped,
+         (1000000 * n_dropped) // greatest(n_events, 1) AS drop_ppm
+  FROM u
+),
+ok AS (
+  SELECT event_type, min(watermark_us) AS wm
+  FROM adv WHERE drop_ppm <= 1000 GROUP BY event_type
+),
+fb AS (SELECT event_type, max(watermark_us) AS wm FROM adv GROUP BY event_type),
+pick AS (
+  SELECT f.event_type, coalesce(o2.wm, f.wm) AS wm,
+         o2.wm IS NOT NULL AS meets_target
+  FROM fb f LEFT JOIN ok o2 USING (event_type)
+)
+SELECT a.event_type, a.n_events,
+       CAST(a.watermark_us AS BIGINT) AS recommended_watermark_us,
+       a.n_dropped, CAST(a.drop_ppm AS BIGINT) AS drop_ppm,
+       p.meets_target
+FROM pick p
+JOIN adv a ON a.event_type = p.event_type AND a.watermark_us = p.wm
+"""
+
+
+# The stream twin shares the batch MERGE oracle; disorder_seen is
+# identically 0 under the oracle's single availableNow drain (no row
+# can arrive behind a prior batch's per-user frontier when there is
+# only one batch).
+_STREAM_CDC_MERGE_SQL = _EVENTS_CDC_MERGE_SQL.replace(
+    "       max_by(CASE WHEN surv THEN value END,\n"
+    "              CASE WHEN surv THEN event_id END) AS last_value",
+    "       max_by(CASE WHEN surv THEN value END,\n"
+    "              CASE WHEN surv THEN event_id END) AS last_value,\n"
+    "       CAST(0 AS BIGINT) AS disorder_seen",
+)
+
+
+def _stream_seasonality_profile(spark, sf_dir):
+    return stream_ops.run_seasonality_profile_stream(spark, sf_dir)
+
+
+REGISTRY.update({
+    "q2_min_cost_supplier": QuerySpec(
+        _q2_min_cost_supplier, _Q2_SQL,
+        "TPC-H Q2 shape (lineitem-as-partsupp): cheapest EUROPE "
+        "supplier per part via window min, no correlated rejoin",
+    ),
+    "q11_important_parts": QuerySpec(
+        _q11_important_parts, _Q11_SQL,
+        "TPC-H Q11 shape: per-part supplied value vs broadcast "
+        "scalar threshold (self-normalizing integer compare)",
+    ),
+    "q16_supplier_part_counts": QuerySpec(
+        _q16_supplier_part_counts, _Q16_SQL,
+        "TPC-H Q16 shape: distinct-supplier count per part family "
+        "with anti-joined supplier exclusion",
+    ),
+    "q20_potential_promotion": QuerySpec(
+        _q20_potential_promotion, _Q20_SQL,
+        "TPC-H Q20 shape: majority-volume supplier per part via "
+        "window sum + region semi-join",
+    ),
+    "doc_chunks": QuerySpec(
+        _doc_chunks, _DOC_CHUNKS_SQL,
+        "fixed-size token chunking into training windows (row-local, "
+        "zero-shuffle; chunk text emitted as md5)",
+    ),
+    "doc_pack_sequences": QuerySpec(
+        _doc_pack_sequences, _DOC_PACK_SQL,
+        "greedy fit-before-append sequence packing into 256-token "
+        "training windows, sharded applyInPandas fold; "
+        "boundary-recursive CTE oracle",
+    ),
+    "pii_redaction": QuerySpec(
+        _pii_redaction, _PII_REDACTION_SQL,
+        "email/SSN/phone detect + mask; redacted text pinned by md5; "
+        "pure codegen regex chain, zero shuffle",
+    ),
+    "boilerplate_removal": QuerySpec(
+        _boilerplate_removal, _BOILERPLATE_SQL,
+        "C4-style corpus-wide repeated-sentence removal: hash-agg "
+        "boilerplate set broadcast back, docs rebuilt in order "
+        "(struct array_sort, no per-doc window); cleaned text pinned "
+        "by md5",
+    ),
+    "cluster_representatives": QuerySpec(
+        _cluster_representatives, _CLUSTER_REPS_SQL,
+        "canonical doc per near-dup cluster (longest member) + "
+        "cluster size — CC composition, recursive-CTE oracle",
+    ),
+    "part_name_fuzzy": QuerySpec(
+        _part_name_fuzzy, _PART_FUZZY_SQL,
+        "prefix-blocked Levenshtein vocabulary matching (edit "
+        "distance ≤ 3 within 2-char blocks)",
+    ),
+    "doc_length_deciles": QuerySpec(
+        _doc_length_deciles, _DOC_DECILES_SQL,
+        "decile assignment via broadcast percentile thresholds — "
+        "no global-sort ntile",
+    ),
+    "doc_decontamination": QuerySpec(
+        _doc_decontamination, _DOC_DECONTAM_SQL,
+        "benchmark decontamination: shared-8-gram hash join against "
+        "a broadcast eval-set gram set",
+    ),
+    "epoch_shuffle": QuerySpec(
+        _epoch_shuffle, _EPOCH_SHUFFLE_SQL,
+        "seeded deterministic epoch shuffle — sharded rank + "
+        "broadcast offsets, no global window",
+    ),
+    "doc_hash_sample": QuerySpec(
+        _doc_hash_sample, _DOC_HASH_SAMPLE_SQL,
+        "deterministic stratified md5-bucket sampling (language "
+        "rebalance; reproducible and growth-stable, unlike rand())",
+    ),
+    "orders_profile": QuerySpec(
+        _orders_profile, _ORDERS_PROFILE_SQL,
+        "single-scan table profile: nulls / distincts / min-max "
+        "per column, unpivoted via stack()",
+    ),
+    "doc_token_histogram": QuerySpec(
+        _doc_token_histogram, _DOC_TOKEN_HIST_SQL,
+        "token-count histogram per language (power-of-two integer "
+        "buckets — no cross-engine log2)",
+    ),
+    "near_dup_triangles": QuerySpec(
+        _near_dup_triangles, _TRIANGLES_SQL,
+        "triangle count over the MinHash near-dup graph (oriented "
+        "two-path join, cluster-density audit)",
+    ),
+    "user_interevent_stats": QuerySpec(
+        _user_interevent_stats, _INTEREVENT_SQL,
+        "per-user inter-event gap stats (lag window + grouped agg "
+        "sharing one shuffle)",
+    ),
+    "user_retention_cohorts": QuerySpec(
+        _user_retention_cohorts, _RETENTION_SQL,
+        "weekly retention cohorts via integer week arithmetic",
+    ),
+    "embedding_centroid_stats": QuerySpec(
+        _embedding_centroid_stats, _CENTROID_SQL,
+        "per-label embedding geometry: mean norm vs centroid norm "
+        "(collapse audit), one posexplode feeding both aggregates",
+    ),
+    "stream_tumbling_counts": QuerySpec(
+        _stream_tumbling, _STREAM_TUMBLING_SQL,
+        "Structured Streaming watermarked 1h tumbling rollup "
+        "(availableNow drain; equals batch over finite input)",
+    ),
+    "stream_sliding_counts": QuerySpec(
+        _stream_sliding, _STREAM_SLIDING_SQL,
+        "Structured Streaming sliding windows (1h size / 30m slide)",
+    ),
+    "stream_session_windows": QuerySpec(
+        _stream_sessions, _STREAM_SESSIONS_SQL,
+        "Structured Streaming native session_window per user "
+        "(gap-merge semantics == batch sessionization)",
+    ),
+    "stream_dedup_keys": QuerySpec(
+        _stream_dedup, _STREAM_DEDUP_SQL,
+        "streaming exact dedup via dropDuplicatesWithinWatermark "
+        "(key-projected → order-independent)",
+    ),
+    "stream_stream_interval_join": QuerySpec(
+        _stream_stream_join, _RANGE_SQL,
+        "stream-stream interval join (clicks within 30 min before "
+        "purchase) — watermark-bounded join state; equals the batch "
+        "range join over finite input",
+    ),
+    "stream_user_running_stats": QuerySpec(
+        _stream_user_stats, _STREAM_USER_STATS_SQL,
+        "custom stateful op (applyInPandasWithState): per-user running "
+        "count/cents/max-ts; final state == batch rollup",
+    ),
+    "stream_static_enrichment": QuerySpec(
+        _stream_static_join, _STREAM_STATIC_SQL,
+        "stream-static broadcast join (stateless) + windowed rollup "
+        "per nation — the slowly-changing-dimension enrichment shape",
+    ),
+    "stream_distinct_users_hourly": QuerySpec(
+        _stream_distinct_users, _STREAM_DISTINCT_SQL,
+        "windowed distinct count via chained stateful operators "
+        "(dedup -> count; COUNT DISTINCT is unsupported in streams)",
+    ),
+    "events_salted_rollup": QuerySpec(
+        _events_salted_rollup, _EVENTS_SALTED_SQL,
+        "two-stage salted aggregation for power-law keys; oracle "
+        "proves the salt/merge decomposition exact",
+    ),
+    "stream_centroid_confusion": QuerySpec(
+        # draining the full parquet makes the streaming result equal
+        # the batch confusion — the batch oracle applies verbatim
+        _stream_centroid_confusion, _CENTROID_CONFUSION_SQL,
+        "streaming nearest-centroid drift monitor: one-row static "
+        "centroid-array cross join + row-local argmin fold — "
+        "stateless per vector, #labels²-bounded count state",
+    ),
+    "stream_disorder_monitor": QuerySpec(
+        _stream_disorder_monitor, _STREAM_DISORDER_SQL,
+        "streaming watermark-calibration monitor: per-type keyed-"
+        "state event-time frontier + cumulative lateness stats "
+        "(applyInPandasWithState, vectorized in-batch running max); "
+        "single availableNow drain equals the batch per-type audit",
+    ),
+    "stream_scd2_history": QuerySpec(
+        _stream_scd2, _STREAM_SCD2_SQL,
+        "streaming SCD2 feed (applyInPandasWithState): per-user "
+        "keyed state holds the open run, every closed validity "
+        "interval is emitted append-mode — equals the batch "
+        "scd2_build's closed subset over the finite drain",
+    ),
+    "stream_repetition_gate": QuerySpec(
+        _stream_repetition_gate, _STREAM_REPETITION_SQL,
+        "streaming per-source repetition monitor: running doc / "
+        "repetitive-doc counts under the shared Gopher-style gate "
+        "(with_repetitive_flag — expression-identical to the batch "
+        "profile); bounded per-source state, stateless row work",
+    ),
+    "stream_watermark_advisor": QuerySpec(
+        _stream_watermark_advisor, _STREAM_WATERMARK_SQL,
+        "streaming self-calibrating watermark recommender: per-type "
+        "keyed state carries frontier + per-candidate cumulative "
+        "would-drop counters, emits the recommended delay each "
+        "batch; single-drain equals the per-type batch pick",
+    ),
+    "stream_cdc_merge": QuerySpec(
+        lambda spark, sf_dir: stream_ops.run_to_table(
+            stream_ops.cdc_merge_stream(
+                stream_ops.read_events_stream(spark, sf_dir)
+            ),
+            "update",
+            "stream_cdc_merge",
+        ),
+        _STREAM_CDC_MERGE_SQL,
+        "streaming MERGE mirror: per-user keyed state (tombstone "
+        "frontier + surviving count + latest value) re-emits the "
+        "snapshot row per batch; late deletes degrade to an explicit "
+        "disorder_seen counter, never a silent guess; one "
+        "availableNow drain equals the batch MERGE relation",
+    ),
+    "stream_expectations_gate": QuerySpec(
+        lambda spark, sf_dir: stream_ops.run_to_table(
+            stream_ops.expectations_gate_stream(
+                stream_ops.read_events_stream(spark, sf_dir)
+            ),
+            "complete",
+            "stream_expectations_gate",
+        ),
+        _EXPECTATIONS_SQL,
+        "streaming data-contract gate: per-row rules expand "
+        "statelessly BEFORE the aggregation, so state is one row per "
+        "rule (bounded by the contract); same predicate strings as "
+        "the batch audit, one availableNow drain equals it exactly",
+    ),
+    "stream_sli_burn_rate": QuerySpec(
+        lambda spark, sf_dir: stream_ops.run_sli_burn_rate_stream(
+            spark, sf_dir
+        ),
+        _SLI_BURN_SQL,
+        "streaming burn-rate twin via the accumulated-rollup idiom: "
+        "each micro-batch folds into a persistent hourly rollup "
+        "(idempotent batch=<id> overwrite), the multi-window burn "
+        "table re-frames from the re-summed rollup with the batch "
+        "operator's own logic — trailing windows need cross-hour "
+        "reads no keyed state can serve; one availableNow drain "
+        "equals the batch relation exactly",
+    ),
+    "stream_seasonality_profile": QuerySpec(
+        _stream_seasonality_profile, _SEASONALITY_SQL,
+        "streaming twin #21 (accumulated-rollup idiom): per-batch "
+        "idempotent batch=<id> (type, hour_epoch) partials + the "
+        "batch operator's own cell/outlier logic over the re-summed "
+        "rollup — the per-type overall mean re-prices all 168 cells "
+        "on any new hour, a cross-key read no keyed state serves; "
+        "one availableNow drain provably equals the batch profile",
+    ),
+    "stream_corpus_release": QuerySpec(
+        lambda spark, sf_dir: stream_ops.run_corpus_release_stream(
+            spark, sf_dir
+        ),
+        _RELEASE_MANIFEST_SQL,
+        "streaming twin #22 — INCREMENTAL corpus release: each "
+        "micro-batch's funnel survivors land via the batch sink "
+        "(release_assignments + write_assigned_shards) under an "
+        "idempotent batch=<id> overwrite (replayed batches can't "
+        "duplicate); manifest re-derived from the accumulated "
+        "written files; dedup/holdout/packing scoped per increment "
+        "(documented delta — cross-increment dups are the "
+        "reconciliation job's, incremental_exact_dedup_stream gates "
+        "them at ingest); one availableNow drain equals the batch "
+        "corpus_release_manifest, so the shared oracle applies",
+    ),
+})

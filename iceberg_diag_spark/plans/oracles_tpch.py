@@ -1,14 +1,15 @@
 """Relational suite: TPC-H shapes, joins, windows, extended relational forms over the star schema.
 
-Split from plans/registry.py (pure move; see registry.py for the
-cross-engine determinism rules every oracle follows).
+See plans/common.py for the cross-engine determinism rules every
+oracle follows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from iceberg_diag_spark.plans.common import _t
+from iceberg_diag_spark.operators import privacy, profiling
+from iceberg_diag_spark.plans.common import REGISTRY, QuerySpec, _t
 
 
 # --------------------------------------------------------------------
@@ -1169,3 +1170,445 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """
 
 
+def _customer_rfm(spark, sf_dir):
+    return profiling.rfm_segments(_t(spark, sf_dir, "orders"))
+
+
+_CUSTOMER_RFM_SQL = r"""
+WITH per AS (
+  SELECT o_custkey,
+         max(o_orderdate) AS last_order,
+         CAST(count(*) AS BIGINT) AS frequency,
+         CAST(sum(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           AS monetary_cents
+  FROM orders GROUP BY o_custkey
+),
+mx AS (SELECT max(o_orderdate) AS maxd FROM orders),
+base AS (
+  SELECT p.*,
+         CAST(date_diff('day', CAST(last_order AS DATE),
+                        CAST(maxd AS DATE)) AS BIGINT) AS recency_days
+  FROM per p, mx
+),
+ranked AS (
+  SELECT *,
+         row_number() OVER (ORDER BY recency_days, o_custkey) AS r_rank,
+         row_number() OVER (ORDER BY frequency, o_custkey) AS f_rank,
+         row_number() OVER (ORDER BY monetary_cents, o_custkey) AS m_rank,
+         count(*) OVER () AS n
+  FROM base
+)
+SELECT (1 + CAST(FLOOR(5.0 * (r_rank - 1) / n) AS BIGINT)) AS r_seg,
+       (1 + CAST(FLOOR(5.0 * (f_rank - 1) / n) AS BIGINT)) AS f_seg,
+       (1 + CAST(FLOOR(5.0 * (m_rank - 1) / n) AS BIGINT)) AS m_seg,
+       CAST(count(*) AS BIGINT) AS n_customers,
+       CAST(sum(monetary_cents) AS BIGINT) AS monetary_cents_total
+FROM ranked
+GROUP BY r_seg, f_seg, m_seg
+"""
+
+
+def _part_affinity(spark, sf_dir):
+    return profiling.part_affinity(_t(spark, sf_dir, "lineitem"))
+
+
+_PART_AFFINITY_SQL = """
+WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+cnt AS (SELECT pk, CAST(count(*) AS BIGINT) AS cnt FROM op GROUP BY pk),
+n AS (SELECT CAST(count(DISTINCT ok) AS BIGINT) AS n_orders FROM op),
+co AS (
+  SELECT a.pk AS part_a, b.pk AS part_b, CAST(count(*) AS BIGINT) AS co_orders
+  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk
+  GROUP BY a.pk, b.pk
+  HAVING count(*) >= 3
+)
+SELECT part_a, part_b, co_orders,
+       ca.cnt AS orders_a, cb.cnt AS orders_b,
+       CAST((1000000 * co_orders * n_orders) // (ca.cnt * cb.cnt) AS BIGINT)
+         AS lift_ppm
+FROM co
+JOIN cnt ca ON ca.pk = co.part_a
+JOIN cnt cb ON cb.pk = co.part_b
+CROSS JOIN n
+"""
+
+
+def _customer_k_anonymity(spark, sf_dir):
+    cust = _t(spark, sf_dir, "customer").select(
+        "c_nationkey",
+        F.floor(F.col("c_acctbal") / F.lit(1000))
+        .cast("long")
+        .alias("acctbal_kb"),
+        "c_mktsegment",
+    )
+    return privacy.k_anonymity_audit(
+        cust, ["c_nationkey", "acctbal_kb"], "c_mktsegment"
+    )
+
+
+_K_ANONYMITY_SQL = """
+WITH q AS (
+  SELECT c_nationkey,
+         CAST(FLOOR(c_acctbal / 1000) AS BIGINT) AS acctbal_kb,
+         c_mktsegment
+  FROM customer
+),
+classes AS (
+  SELECT c_nationkey, acctbal_kb,
+         CAST(count(*) AS BIGINT) AS n,
+         CAST(count(DISTINCT c_mktsegment) AS BIGINT) AS l
+  FROM q GROUP BY c_nationkey, acctbal_kb
+)
+SELECT CAST(k AS BIGINT) AS k,
+       CAST(count(*) AS BIGINT) AS n_classes,
+       CAST(sum(CASE WHEN n < k THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_violating_classes,
+       CAST(sum(CASE WHEN n < k THEN n ELSE 0 END) AS BIGINT)
+         AS records_at_risk,
+       CAST(sum(CASE WHEN l = 1 THEN 1 ELSE 0 END) AS BIGINT)
+         AS homogeneous_classes,
+       CAST(min(n) AS BIGINT) AS min_class_size,
+       CAST(min(l) AS BIGINT) AS min_l
+FROM classes CROSS JOIN (SELECT unnest([2, 5, 10, 20]) AS k) ks
+GROUP BY k
+"""
+
+
+def _orders_pareto_share(spark, sf_dir, ks=(1, 10, 100)):
+    """Revenue-concentration audit: the share of total revenue held
+    by the top-K customers for K in {1, 10, 100} — the whale-risk
+    number. Per-customer revenue folds to exact integer cents; the
+    top-max(K) pick is (rev desc, custkey asc) + limit ⇒
+    TakeOrderedAndProject; ranking and cumulative sums act on that
+    ≤ max(K)-row relation plus one broadcast 1-row grand total."""
+    from pyspark.sql.window import Window
+
+    orders = _t(spark, sf_dir, "orders")
+    rev = orders.groupBy("o_custkey").agg(
+        F.sum(F.floor(F.col("o_totalprice") * 100).cast("long"))
+        .cast("long")
+        .alias("rev_cents")
+    )
+    top = rev.orderBy(F.desc("rev_cents"), F.asc("o_custkey")).limit(
+        max(ks)
+    )
+    totals = rev.agg(
+        F.sum("rev_cents").cast("long").alias("total_cents"),
+        F.count(F.lit(1)).cast("long").alias("n_customers"),
+    )
+    w = Window.orderBy(F.desc("rev_cents"), F.asc("o_custkey"))
+    ranked = (
+        top.withColumn("r", F.row_number().over(w))
+        .withColumn(
+            "cum",
+            F.sum("rev_cents").over(
+                w.rowsBetween(Window.unboundedPreceding, 0)
+            ),
+        )
+    )
+    return (
+        ranked.filter(F.col("r").isin([int(k) for k in ks]))
+        .crossJoin(F.broadcast(totals))
+        .select(
+            F.col("r").cast("long").alias("top_k"),
+            F.col("cum").cast("long").alias("top_rev_cents"),
+            "total_cents",
+            "n_customers",
+            F.expr("(1000000 * cum) DIV total_cents").alias("share_ppm"),
+        )
+    )
+
+
+_PARETO_SHARE_SQL = """
+WITH rev AS (
+  SELECT o_custkey,
+         CAST(sum(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           AS rev_cents
+  FROM orders GROUP BY 1
+),
+t AS (
+  SELECT CAST(sum(rev_cents) AS BIGINT) AS total_cents,
+         CAST(count(*) AS BIGINT) AS n_customers
+  FROM rev
+),
+rk AS (
+  SELECT rev_cents,
+         row_number() OVER (ORDER BY rev_cents DESC, o_custkey ASC) AS r,
+         sum(rev_cents) OVER (ORDER BY rev_cents DESC, o_custkey ASC
+                              ROWS UNBOUNDED PRECEDING) AS cum
+  FROM rev
+)
+SELECT CAST(r AS BIGINT) AS top_k, CAST(cum AS BIGINT) AS top_rev_cents,
+       total_cents, n_customers,
+       CAST((1000000 * cum) // total_cents AS BIGINT) AS share_ppm
+FROM rk CROSS JOIN t
+WHERE r IN (1, 10, 100)
+"""
+
+
+def _orders_benford(spark, sf_dir):
+    return profiling.benford_audit(
+        _t(spark, sf_dir, "orders"), "o_totalprice"
+    )
+
+
+_BENFORD_SQL = """
+WITH v AS (
+  SELECT CAST(FLOOR(o_totalprice * 100) AS BIGINT) AS cents
+  FROM orders WHERE o_totalprice > 0
+),
+d AS (
+  SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS BIGINT) AS digit,
+         CAST(count(*) AS BIGINT) AS n_rows
+  FROM v GROUP BY 1
+),
+t AS (SELECT CAST(sum(n_rows) AS BIGINT) AS n_total FROM d)
+SELECT digit, n_rows,
+       CAST((1000000 * n_rows) // n_total AS BIGINT) AS observed_ppm,
+       CAST(FLOOR(1000000.0 * log10(1.0 + 1.0 / digit)) AS BIGINT)
+         AS expected_ppm,
+       CAST((1000000 * n_rows) // n_total AS BIGINT)
+         - CAST(FLOOR(1000000.0 * log10(1.0 + 1.0 / digit)) AS BIGINT)
+         AS delta_ppm
+FROM d CROSS JOIN t
+"""
+
+
+# ------------------------------------------------------------------
+# Round 8: cohort LTV curves
+# ------------------------------------------------------------------
+
+def _cohort_ltv(spark, sf_dir):
+    return profiling.cohort_ltv(_t(spark, sf_dir, "orders"))
+
+
+_COHORT_LTV_SQL = """
+WITH o AS (
+  SELECT o_custkey,
+         CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1
+              AS BIGINT) AS m,
+         CAST(FLOOR(o_totalprice * 100) AS BIGINT) AS cents
+  FROM orders
+),
+f AS (SELECT o_custkey, min(m) AS m0 FROM o GROUP BY o_custkey),
+cs AS (SELECT m0, CAST(count(DISTINCT o_custkey) AS BIGINT)
+              AS cohort_size FROM f GROUP BY m0),
+cell AS (
+  SELECT f.m0, o.m - f.m0 AS month_offset,
+         CAST(count(DISTINCT o.o_custkey) AS BIGINT) AS n_active,
+         CAST(sum(o.cents) AS BIGINT) AS revenue_cents
+  FROM o JOIN f USING (o_custkey)
+  GROUP BY f.m0, o.m - f.m0
+),
+cum AS (
+  SELECT m0, month_offset, n_active, revenue_cents,
+         CAST(sum(revenue_cents) OVER (PARTITION BY m0
+           ORDER BY month_offset ROWS BETWEEN UNBOUNDED PRECEDING
+           AND CURRENT ROW) AS BIGINT) AS cum
+  FROM cell
+)
+SELECT lpad(CAST(m0 // 12 AS VARCHAR), 4, '0') || '-' ||
+         lpad(CAST(m0 % 12 + 1 AS VARCHAR), 2, '0') AS cohort_month,
+       CAST(month_offset AS BIGINT) AS month_offset, n_active,
+       revenue_cents, cum AS cum_revenue_cents,
+       CAST(cum // cohort_size AS BIGINT) AS cum_ltv_cents
+FROM cum JOIN cs USING (m0)
+"""
+
+
+# ------------------------------------------------------------------
+# Round 8: Kaplan-Meier return-risk survival over transit time
+# ------------------------------------------------------------------
+
+def _return_survival(spark, sf_dir):
+    return profiling.return_survival(
+        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
+    )
+
+
+# Product-limit fold replayed as a recursive CTE over the bounded
+# transit-day grid — floor-compounded ppm survival, bit-identical to
+# the Spark higher-order fold (profiling.py:return_survival).
+_RETURN_SURVIVAL_SQL = """
+WITH RECURSIVE per AS (
+  SELECT CAST(date_diff('day', o.o_orderdate, l.l_shipdate) AS BIGINT) AS t,
+         CAST(sum(CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END)
+              AS BIGINT) AS d,
+         CAST(sum(CASE WHEN l.l_returnflag = 'R' THEN 0 ELSE 1 END)
+              AS BIGINT) AS c
+  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
+  GROUP BY 1
+),
+idx AS (
+  SELECT t, d, c, row_number() OVER (ORDER BY t) AS i FROM per
+),
+tot AS (SELECT CAST(sum(d + c) AS BIGINT) AS n0 FROM per),
+f AS (
+  SELECT idx.i, idx.t, idx.d, idx.c, tot.n0 AS n,
+         (1000000 * (tot.n0 - idx.d)) // tot.n0 AS s
+  FROM idx, tot WHERE idx.i = 1
+  UNION ALL
+  SELECT h.i, h.t, h.d, h.c,
+         f.n - f.d - f.c,
+         (f.s * ((f.n - f.d - f.c) - h.d)) // (f.n - f.d - f.c)
+  FROM f JOIN idx h ON h.i = f.i + 1
+)
+SELECT t AS latency_days, n AS n_at_risk, d AS n_returned,
+       c AS n_censored,
+       CAST((1000000 * d) // n AS BIGINT) AS hazard_ppm,
+       CAST(s AS BIGINT) AS survival_ppm
+FROM f
+"""
+
+
+REGISTRY.update({
+    "q1_pricing_summary": QuerySpec(_q1, _Q1_SQL, "TPC-H Q1 shape"),
+    "q3_shipping_priority": QuerySpec(_q3, _Q3_SQL, "TPC-H Q3 shape, top-10"),
+    "q5_local_supplier_volume": QuerySpec(_q5, _Q5_SQL, "TPC-H Q5 shape"),
+    "top_orders_per_customer": QuerySpec(
+        _top_orders_per_customer, _TOP_ORDERS_SQL, "window rank top-3"
+    ),
+    "orders_monthly": QuerySpec(
+        _orders_monthly, _ORDERS_MONTHLY_SQL, "calendar rollup"
+    ),
+    "q4_order_priority_semi": QuerySpec(
+        _q4_semi, _Q4_SEMI_SQL, "left-semi join (EXISTS shape)"
+    ),
+    "q13_customer_distribution": QuerySpec(
+        _q13_distribution, _Q13_SQL, "left-outer join + 2-level agg"
+    ),
+    "inactive_customers_anti": QuerySpec(
+        _anti_inactive_customers, _ANTI_SQL, "anti join (NOT EXISTS shape)"
+    ),
+    "q18_heavy_orders": QuerySpec(
+        _q18_heavy_orders, _Q18_SQL, "aggregate-then-join + HAVING"
+    ),
+    "orders_rollup": QuerySpec(
+        _orders_rollup, _ROLLUP_SQL, "ROLLUP grouping sets, one pass"
+    ),
+    "orders_cube": QuerySpec(
+        _orders_cube, _CUBE_SQL, "CUBE grouping sets (all granularities)"
+    ),
+    "revenue_daily_gapfill": QuerySpec(
+        _revenue_daily_gapfill, _GAPFILL_SQL,
+        "date-spine gap fill (sequence+explode) + cumulative window",
+    ),
+    "q7_nation_volume": QuerySpec(
+        _q7_nation_volume, _Q7_SQL,
+        "TPC-H Q7 shape: 5-way join, all dims broadcast, bilateral "
+        "nation filter, per-year rollup",
+    ),
+    "q10_returned_items": QuerySpec(
+        _q10_returned_items, _Q10_SQL,
+        "TPC-H Q10 shape: returned-item revenue per customer, "
+        "deterministic top-20",
+    ),
+    "q12_ship_delay": QuerySpec(
+        _q12_ship_delay, _Q12_SQL,
+        "TPC-H Q12 shape: derived delay buckets + CASE aggregation",
+    ),
+    "q14_promo_revenue": QuerySpec(
+        _q14_promo_revenue, _Q14_SQL,
+        "TPC-H Q14 shape: LIKE category filter, conditional-sum ratio",
+    ),
+    "q17_small_quantity": QuerySpec(
+        _q17_small_quantity, _Q17_SQL,
+        "TPC-H Q17 shape: correlated scalar subquery decorrelated to "
+        "agg + join",
+    ),
+    "q22_sales_opportunity": QuerySpec(
+        _q22_sales_opportunity, _Q22_SQL,
+        "TPC-H Q22 shape: scalar-subquery threshold + NOT EXISTS "
+        "anti join",
+    ),
+    "q6_forecast_revenue": QuerySpec(
+        _q6_forecast_revenue, _Q6_SQL,
+        "TPC-H Q6: pure pushdown scan + single global sum",
+    ),
+    "q8_market_share": QuerySpec(
+        _q8_market_share, _Q8_SQL,
+        "TPC-H Q8 shape: five-table star, conditional-sum market "
+        "share per year",
+    ),
+    "q9_product_profit": QuerySpec(
+        _q9_product_profit, _Q9_SQL,
+        "TPC-H Q9 shape (retailprice cost term): profit by supplier "
+        "nation and year over a LIKE-pruned part family",
+    ),
+    "q15_top_supplier": QuerySpec(
+        _q15_top_supplier, _Q15_SQL,
+        "TPC-H Q15: max-revenue supplier via broadcast scalar max "
+        "over a single-pass revenue aggregate",
+    ),
+    "q19_disjunctive_revenue": QuerySpec(
+        _q19_disjunctive_revenue, _Q19_SQL,
+        "TPC-H Q19 shape: OR-of-ANDs brand/size/quantity bands in "
+        "one codegen filter",
+    ),
+    "q21_waiting_orders": QuerySpec(
+        _q21_waiting_orders, _Q21_SQL,
+        "TPC-H Q21 shape: sole-late-supplier via semi + anti "
+        "self-joins on the order key",
+    ),
+    "orders_window_analytics": QuerySpec(
+        _orders_window_analytics, _ORDERS_WINDOW_SQL,
+        "window frames: row_number / lag gap / running sum / 3-row "
+        "moving average over one shuffle",
+    ),
+    "orders_status_pivot": QuerySpec(
+        _orders_status_pivot, _ORDERS_PIVOT_SQL,
+        "PIVOT with explicit values (single-pass, static schema)",
+    ),
+    "churned_buyers_except": QuerySpec(
+        _churned_buyers_except, _CHURNED_EXCEPT_SQL,
+        "set difference (EXCEPT): 1996 buyers absent in 1997",
+    ),
+    "customer_rfm_segments": QuerySpec(
+        _customer_rfm, _CUSTOMER_RFM_SQL,
+        "exact equal-count RFM customer grid via the distributed "
+        "global-rank primitive (range-sharded windows + broadcast "
+        "offsets — no single-task sort)",
+    ),
+    "part_affinity": QuerySpec(
+        _part_affinity, _PART_AFFINITY_SQL,
+        "market-basket part affinity: exact co-occurrence support "
+        "and lift over orders in 64-bit integer division (per-order "
+        "quadratic in bounded basket size, linear in orders — the "
+        "association-mining table behind bundling analysis)",
+    ),
+    "orders_pareto_share": QuerySpec(
+        _orders_pareto_share, _PARETO_SHARE_SQL,
+        "revenue concentration: share of total revenue held by the "
+        "top-{1,10,100} customers in exact integer cents — "
+        "TakeOrderedAndProject pick + broadcast grand total",
+    ),
+    "customer_k_anonymity": QuerySpec(
+        _customer_k_anonymity, _K_ANONYMITY_SQL,
+        "k-anonymity / l-diversity release audit over quasi-"
+        "identifier classes (nation × balance bucket, segment "
+        "sensitive): violations, records-at-risk, homogeneous "
+        "classes per candidate k",
+    ),
+    "orders_benford_audit": QuerySpec(
+        _orders_benford, _BENFORD_SQL,
+        "Benford first-digit audit over order totals (fabricated-"
+        "data detector): decimal-string digit extraction, exact "
+        "integer-DIV observed shares vs log10(1+1/d) expectation",
+    ),
+    "customer_cohort_ltv": QuerySpec(
+        _cohort_ltv, _COHORT_LTV_SQL,
+        "cohort lifetime-value curves: customers cohort by first "
+        "order month, revenue accumulates per cohort across month "
+        "offsets (floor-cents exact), normalized per member; two "
+        "aggregates sharing the custkey shuffle + a bounded-grid "
+        "cumulative window",
+    ),
+    "lineitem_return_survival": QuerySpec(
+        _return_survival, _RETURN_SURVIVAL_SQL,
+        "Kaplan-Meier product-limit estimator with right-censoring: "
+        "return risk over fulfillment-latency days (kept items "
+        "censor at ship); one fact join + one hash aggregate to the bounded day "
+        "grid, then an integer ppm fold — survival analysis as a "
+        "first-class relational operator",
+    ),
+})

@@ -1,652 +1,22 @@
 """Query registry: every operator exposed through the driver contract.
 
-Each entry pairs a Spark DataFrame builder ``(spark, sf_dir) -> DF``
-with (where expressible) an equivalent DuckDB SQL oracle over the
-same parquet tables. The driver hash-compares values column-by-column
-after sorting by name, so builders and SQL alias every computed
-column identically.
-
-Cross-engine determinism rules used throughout (verified in
-tests/test_oracle_parity.py):
-- integer casts: Spark ``cast("long")`` truncates while DuckDB
-  ``CAST(double AS BIGINT)`` rounds → oracles always use
-  ``CAST(FLOOR(x) AS BIGINT)`` (inputs are non-negative).
-- money sums: floor-to-integer-cents per row, then exact integer
-  sums — immune to float summation order.
-- division by FETCH_SIZE (2^25) is exact in doubles, so DIV ≡
-  floor(double division) on both engines.
-- DuckDB aggregate sums of BIGINT return HUGEINT → always CAST back
-  to BIGINT; row_number returns BIGINT → Spark side casts to long.
-- timestamps: UTC session timezone; formatted to strings on output.
+Each family module (plans/oracles_*.py) owns its builders, its DuckDB
+oracle SQL and one ``REGISTRY.update`` block; importing it registers
+its entries. See plans/common.py for the QuerySpec contract and the
+cross-engine determinism rules every oracle follows.
 """
 
 from __future__ import annotations
 
-from iceberg_diag_spark.plans.common import REGISTRY, QuerySpec
-
-# Family modules register into common.REGISTRY on import; the import
-# ORDER below is the original monolithic file's section order, which
-# fixes the within-tier scoring order (sorted() below is stable).
-from iceberg_diag_spark.plans import oracles_diag  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_tpch  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_dedup  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_similarity  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_events  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_multimodal  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_streaming  # noqa: F401,E402
-from iceberg_diag_spark.plans import registry_base  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_corpus  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_maintenance  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_round5  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_round6  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_round7  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_round8  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_round9  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_round11  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_round12  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_round13  # noqa: F401,E402
-from iceberg_diag_spark.plans import oracles_round14  # noqa: F401,E402
-
-# Evaluation-order hedge: the correctness harness records rows for
-# exactly the first 50 registry entries (confirmed across rounds 1-3).
-# With 101 entries, ordering decides which queries get a FRESH
-# external verification each round. Rotation policy: a query's green
-# row decays as code changes under it, so evaluate first the entries
-# whose external signal is STALE. Round-4 tiers:
-#   0  no green row since r1 (the r3 ts-type breakage hit 11 of
-#      these) or builder/loader modified this round -- oracled
-#   1  oracled, last green in r2 (two rounds old)
-#   2  rows-only checks (no oracle possible; weak signal either way)
-#   3  fresh r3 green -- fill the tail where truncation costs least
-# Entry identity and build semantics are unchanged -- this is purely
-# dict iteration order.
-#
-# Names with a green hash row in CORRECTNESS_r03.json.
-_R3_GREEN = {
-    "ann_cosine_topk", "boilerplate_removal",
-    "cluster_representatives", "corpus_curation", "doc_chunks",
-    "doc_decontamination", "doc_fingerprint", "doc_hash_sample",
-    "doc_length_deciles", "doc_pack_sequences",
-    "doc_token_histogram", "embedding_centroid_stats",
-    "embedding_near_dup", "epoch_shuffle", "exact_dedup_corpus",
-    "lang_stats", "language_id", "media_catalog", "minhash_pairs",
-    "near_dup_clusters", "near_dup_triangles", "ngram_jaccard",
-    "orders_profile", "part_name_fuzzy", "pii_redaction",
-    "q11_important_parts", "q15_top_supplier",
-    "q16_supplier_part_counts", "q19_disjunctive_revenue",
-    "q20_potential_promotion", "q21_waiting_orders",
-    "q2_min_cost_supplier", "q6_forecast_revenue",
-    "q8_market_share", "q9_product_profit", "quality_scores",
-    "simhash_near_dup", "text_stats", "tfidf_top_terms",
-}
-
-# Names green in r2 but not scored in r3 (rode the tail).
-_R2_GREEN = {
-    "churned_buyers_except", "curated_embedding_near_dup",
-    "dedup_exact_groups", "diag_binpack_groups", "diag_metrics",
-    "diag_metrics_multi_table", "diag_partition_stats",
-    "diag_table_stats", "events_salted_rollup",
-    "events_top_counts_approx", "events_user_sketch_rollup",
-    "inactive_customers_anti", "near_dup_pagerank", "orders_cube",
-    "orders_decimal_totals", "orders_monthly", "orders_rollup",
-    "orders_status_pivot", "orders_window_analytics",
-    "q10_returned_items", "q12_ship_delay",
-    "q13_customer_distribution", "q14_promo_revenue",
-    "q17_small_quantity", "q18_heavy_orders", "q1_pricing_summary",
-    "q22_sales_opportunity", "q3_shipping_priority",
-    "q4_order_priority_semi", "q5_local_supplier_volume",
-    "q7_nation_volume", "revenue_daily_gapfill", "simhash",
-    "stream_dedup_keys", "stream_distinct_users_hourly",
-    "stream_session_windows", "stream_sliding_counts",
-    "stream_static_enrichment", "stream_stream_interval_join",
-    "stream_tumbling_counts", "stream_user_running_stats",
-    "top_orders_per_customer",
-}
-
-# Names with a green hash row in CORRECTNESS_r04.json (the freshest
-# evidence — these ride the tail this round).
-_R4_GREEN = {
-    "events_hourly", "events_sessionize", "events_json_rollup",
-    "events_top_counts_approx", "events_funnel",
-    "events_value_quantiles", "events_hourly_anomalies",
-    "doc_decontamination", "orders_profile", "user_interevent_stats",
-    "user_retention_cohorts", "events_approx_stats_checked",
-    "events_user_sketch_rollup", "stream_tumbling_counts",
-    "stream_sliding_counts", "stream_session_windows",
-    "stream_dedup_keys", "stream_stream_interval_join",
-    "stream_user_running_stats", "stream_static_enrichment",
-    "stream_distinct_users_hourly", "events_salted_rollup",
-    "asof_purchase_attribution", "range_clicks_before_purchase",
-    "media_type_stats", "media_frame_sample", "media_byte_histogram",
-    "stratified_split", "per_source_cap", "source_mixture_weights",
-    "nearest_centroid_confusion", "token_entropy",
-    "embedding_quantize_int8", "source_overlap", "user_event_paths",
-    "events_skew_audit", "dataset_card", "join_cardinality_audit",
-    "diag_partition_stats", "diag_table_stats", "diag_metrics",
-    "diag_binpack_groups", "diag_metrics_multi_table",
-    "q1_pricing_summary", "q3_shipping_priority",
-    "q5_local_supplier_volume", "top_orders_per_customer",
-    "orders_monthly", "q4_order_priority_semi",
-    "q13_customer_distribution",
-}
-
-# Names with a green hash row in CORRECTNESS_r05.json (50/50 green):
-# the 19 r2-stale re-scores, the 11 round-5-modified builders, and the
-# rank-1.5 spares that rode leftover slots.
-_R5_GREEN = {
-    "boilerplate_removal", "churned_buyers_except",
-    "cluster_representatives", "corpus_top_ngrams",
-    "curated_embedding_near_dup", "dedup_exact_groups",
-    "dedup_incremental", "diag_delete_impact", "diag_orphan_files",
-    "diag_snapshot_retention", "diag_zorder_layout",
-    "doc_dup_ngram_spans", "doc_line_dedup", "doc_unigram_logprob",
-    "doc_weighted_sample", "doc_winnow_fingerprints",
-    "events_skew_audit", "inactive_customers_anti",
-    "join_selectivity_audit", "label_silhouette", "lang_confusion",
-    "minhash_pairs", "near_dup_clusters", "near_dup_pagerank",
-    "near_dup_rate_by_source", "near_dup_triangles",
-    "nearest_centroid_confusion", "ngram_containment",
-    "ngram_jaccard", "orders_cube", "orders_decimal_totals",
-    "orders_rollup", "orders_status_pivot",
-    "orders_window_analytics", "q10_returned_items",
-    "q12_ship_delay", "q14_promo_revenue", "q17_small_quantity",
-    "q18_heavy_orders", "q22_sales_opportunity", "q7_nation_volume",
-    "quality_gate_ablation", "revenue_daily_gapfill",
-    "semantic_dedup", "simhash", "simhash_near_dup",
-    "stratified_split", "stream_incremental_dedup",
-    "stream_quality_gate", "token_budget_waterfill",
-}
-
-# Entries whose builder or oracle changed in round 6 — their old
-# green row no longer vouches for the current code: the
-# lsh_near_dup_exact candidate-stage rewrite (ids-only pair dedup +
-# wider buckets), the JVM-side frame extraction (frame_sample /
-# frame_dedup / byte-histogram share the frame splitter), the
-# dim-variance overflow fix, and the skip-simulation integer
-# pair-count arithmetic. Most are in the never-scored deferral set
-# already; listing them here keeps rank 0 for any that were green.
-_MODIFIED_R6 = {
-    "lsh_near_dup_exact",
-    "media_frame_sample", "media_frame_dedup",
-    "embedding_dim_variance",
-    "diag_skip_simulation",
-}
-
-# Oracled entries added after the round-5 window filled. In round 5
-# they ranked 1.5 (behind the must-scores); `ngram_containment` rode a
-# spare slot to green, the other 35 have never earned an external
-# driver row — local sf0.001+sf0.01 DuckDB parity only. ROUND 6
-# promotes them to the FRONT of the 50-slot window (rank 0.5, just
-# behind this round's modified builders) so each finally converts
-# self-reported parity into a driver-confirmed green row.
-_NEVER_SCORED: set[str] = {
-    "doc_bigram_logprob",
-    "corpus_snapshot_diff",
-    "quality_classifier_score",
-    "tokenizer_fertility",
-    "langid_margin",
-    "contamination_report",
-    "stream_centroid_confusion",
-    "diag_manifest_stats",
-    "events_cdc_dedup",
-    "media_dedup_exact",
-    "embedding_norm_outliers",
-    "doc_curriculum_shards",
-    "vocab_oov_rate",
-    "doc_readability",
-    "doc_char_novelty",
-    "dedup_survivorship",
-    "jaccard_threshold_hist",
-    "customer_rfm_segments",
-    "diag_clustering_advisor",
-    "embedding_dim_variance",
-    "event_transitions",
-    "source_vocab_tv",
-    "events_disorder_audit",
-    "media_shard_plan",
-    "doc_template_clusters",
-    "diag_skip_simulation",
-    "media_frame_dedup",
-    "diag_partition_advisor",
-    "near_dup_kcore",
-    "padding_waste_audit",
-    "events_watermark_advisor",
-    "stream_disorder_monitor",
-    "lsh_near_dup_exact",
-    "user_transition_typicality",
-    "part_affinity",
-}
-
-
-# Oracled entries added AFTER the round-6 window filled. Round 7
-# promotes them to rank 0 so each converts local sf0.001+sf0.01
-# parity into a driver-confirmed green row (the r5→r6 promotion
-# pattern — all 35 of that backlog went green in r6).
-_DEFER_TO_R7: set[str] = {
-    "pii_density_by_source",
-    "ngram_dup_curve",
-    "events_cadence_autocorr",
-    "quality_dup_matrix",
-    "media_integrity_audit",
-    "exact_quota_holdout",
-    "clone_pairs_verified",
-    "user_activity_gini",
-}
-
-# Names with a green hash row in CORRECTNESS_r06.json (50/50 green —
-# the entire _NEVER_SCORED backlog plus the round-6 modified
-# builders; freshest evidence, rides the tail this round).
-_R6_GREEN = {
-    'bm25_topk', 'contamination_report', 'corpus_snapshot_diff',
-    'customer_k_anonymity', 'customer_rfm_segments',
-    'dedup_survivorship', 'diag_clustering_advisor', 'diag_file_skew',
-    'diag_manifest_stats', 'diag_partition_advisor',
-    'diag_skip_simulation', 'doc_bigram_logprob', 'doc_char_novelty',
-    'doc_curriculum_shards', 'doc_readability', 'doc_template_clusters',
-    'dsir_logratio', 'embedding_dim_covariance',
-    'embedding_dim_variance', 'embedding_drift_audit',
-    'embedding_norm_outliers', 'event_transitions', 'events_cdc_dedup',
-    'events_disorder_audit', 'events_scd2_history',
-    'events_watermark_advisor', 'ivf_topk_exact',
-    'jaccard_threshold_hist', 'langid_margin', 'lsh_near_dup_exact',
-    'lsh_topk_exact', 'media_dedup_exact', 'media_frame_dedup',
-    'media_frame_sample', 'media_shard_plan', 'near_dup_kcore',
-    'orders_benford_audit', 'padding_waste_audit', 'part_affinity',
-    'pmi_collocations', 'quality_classifier_score', 'source_vocab_tv',
-    'stream_centroid_confusion', 'stream_disorder_monitor',
-    'stream_scd2_history', 'tokenizer_fertility',
-    'user_transition_typicality', 'vocab_growth_curve',
-    'vocab_oov_rate', 'winnow_clone_pairs',
-}
-
-# Entries whose builder or oracle changed in round 7 — their r6 green
-# row no longer vouches for the current code, so they re-score this
-# round: the drift-audit 128-bit-accumulation fix (cast moved inside
-# F.sum) and the quota-holdout membership-window range-shard rewrite
-# (exact_quota_holdout itself is already in _DEFER_TO_R7; listed for
-# the discipline).
-_MODIFIED_R7 = {
-    "embedding_drift_audit",
-    "exact_quota_holdout",
-    "media_integrity_audit",
-    "pii_density_by_source",
-    # disorder-frontier hardening added a disorder_seen column to the
-    # stream and a matching constant-0 to the single-drain oracle
-    "stream_scd2_history",
-}
-
-
-# Names with a green hash row in CORRECTNESS_r07.json (50/50 green:
-# the full _DEFER_TO_R7 backlog, the _MODIFIED_R7 re-scores, and all
-# 21 round-7 additions; freshest evidence, rides the tail this round).
-_R7_GREEN = {
-    'ann_recall_eval', 'bpe_merge_candidates', 'clone_pairs_verified',
-    'corpus_curation', 'dedup_method_agreement', 'diag_bloom_advisor',
-    'doc_fingerprint', 'doc_repetition_profile',
-    'embedding_consistency_audit', 'embedding_drift_audit',
-    'embedding_energy_curve', 'embedding_ivf_balance',
-    'embedding_near_dup', 'events_cadence_autocorr',
-    'events_changepoint', 'events_hourly_trend', 'exact_dedup_corpus',
-    'exact_quota_holdout', 'gdpr_delete_simulation',
-    'hard_negative_mining', 'hybrid_retrieval_topk', 'lang_stats',
-    'language_id', 'media_integrity_audit', 'media_phash_near_dup',
-    'ngram_dup_curve', 'orders_pareto_share',
-    'orders_seasonal_naive_eval', 'pii_density_by_source',
-    'q11_important_parts', 'q15_top_supplier',
-    'q16_supplier_part_counts', 'q19_disjunctive_revenue',
-    'q20_potential_promotion', 'q21_waiting_orders',
-    'q2_min_cost_supplier', 'q6_forecast_revenue', 'q8_market_share',
-    'q9_product_profit', 'quality_dup_matrix',
-    'quality_length_skyline', 'quality_scores',
-    'source_quality_calibration', 'stream_repetition_gate',
-    'stream_scd2_history', 'text_artifact_audit', 'text_stats',
-    'tfidf_top_terms', 'token_zipf_curve', 'user_activity_gini',
-}
-
-# Entries whose builder or oracle changed in round 8 — their old green
-# row no longer vouches for the current code, so they re-score this
-# round.
-_MODIFIED_R8: set[str] = set()
-
-# Names with a green hash row in CORRECTNESS_r08.json (50/50 green:
-# all 25 round-8 additions, the full diag family, and the r3-stale
-# rotation cohort; freshest evidence, rides the tail this round).
-_R8_GREEN = {
-    'ann_cosine_topk', 'bigram_kneser_ney', 'corpus_build_funnel',
-    'crossmodal_dedup_agreement', 'customer_cohort_ltv',
-    'data_mixing_plan', 'diag_binpack_groups', 'diag_metrics',
-    'diag_metrics_multi_table', 'diag_partition_stats',
-    'diag_table_stats', 'doc_chunks', 'doc_hash_sample',
-    'doc_length_deciles', 'doc_pack_sequences', 'doc_substring_dedup',
-    'doc_token_histogram', 'embedding_centroid_stats',
-    'embedding_pca_power', 'embedding_pq_codebook', 'epoch_shuffle',
-    'events_cdc_merge', 'events_dau_mau', 'events_ewma_anomalies',
-    'events_expectations_audit', 'events_hourly',
-    'events_markov_attribution', 'events_session_funnel',
-    'events_sessionize', 'events_watermark_recommendation',
-    'kmeans_lloyd', 'lineitem_return_survival', 'lsh_param_advisor',
-    'media_catalog', 'orders_monthly', 'part_name_fuzzy',
-    'pii_redaction', 'q13_customer_distribution', 'q1_pricing_summary',
-    'q3_shipping_priority', 'q4_order_priority_semi',
-    'q5_local_supplier_volume', 'quality_psi_drift',
-    'retrieval_rank_eval', 'shuffle_skew_advisor', 'source_length_ks',
-    'stream_cdc_merge', 'stream_expectations_gate',
-    'stream_watermark_advisor', 'top_orders_per_customer',
-}
-
-# Entries whose builder or oracle changed in round 9 — their old green
-# row no longer vouches for the current code, so they re-score this
-# round: the funnel stage-3 greedy→connected-components swap (oracle
-# updated to the CC survivor count).
-_MODIFIED_R9: set[str] = {
-    "corpus_build_funnel",
-}
-
-# Names with a green hash row in CORRECTNESS_r09.json (50/50 green:
-# all 15 round-9 additions plus the r4-stale rotation cohort;
-# freshest evidence, rides the tail this round).
-_R9_GREEN = {
-    'asof_purchase_attribution', 'bpe_train_merges',
-    'bpe_vocab_coverage', 'corpus_build_funnel', 'data_mixing_sample',
-    'dataset_card', 'doc_decontamination', 'doc_kn_nll',
-    'doc_kn_perplexity', 'embedding_matryoshka_audit',
-    'embedding_quantize_int8', 'events_approx_stats_checked',
-    'events_funnel', 'events_holt_forecast', 'events_hourly_anomalies',
-    'events_json_rollup', 'events_salted_rollup',
-    'events_sli_burn_rate', 'events_top_counts_approx',
-    'events_user_sketch_rollup', 'events_value_quantiles',
-    'gopher_rules_audit', 'inactive_customers_anti',
-    'join_cardinality_audit', 'lang_id_confusion', 'lsh_near_dup_tuned',
-    'media_byte_histogram', 'media_type_stats',
-    'minhash_estimator_audit', 'neardup_source_modularity',
-    'orders_profile', 'per_source_cap', 'q18_heavy_orders',
-    'range_clicks_before_purchase', 'source_mixture_weights',
-    'source_overlap', 'stream_dedup_keys',
-    'stream_distinct_users_hourly', 'stream_session_windows',
-    'stream_sli_burn_rate', 'stream_sliding_counts',
-    'stream_static_enrichment', 'stream_stream_interval_join',
-    'stream_tumbling_counts', 'stream_user_running_stats',
-    'token_entropy', 'user_event_paths', 'user_interevent_stats',
-    'user_retention_cohorts', 'zipf_fit_audit',
-}
-
-# Names with a green hash row in CORRECTNESS_r10.json (all 50 scored
-# entries hash-matched).
-_R10_GREEN = {
-    "boilerplate_removal", "churned_buyers_except",
-    "classifier_auc_calibration", "cluster_representatives",
-    "corpus_release_manifest", "corpus_top_ngrams",
-    "curated_embedding_near_dup", "dedup_exact_groups",
-    "dedup_incremental", "diag_delete_impact", "diag_orphan_files",
-    "diag_snapshot_retention", "diag_zorder_layout",
-    "doc_dup_ngram_spans", "doc_weighted_sample",
-    "doc_winnow_fingerprints", "embedding_matryoshka_audit",
-    "events_skew_audit", "events_sli_burn_rate",
-    "join_selectivity_audit", "label_silhouette", "lang_confusion",
-    "minhash_pairs", "near_dup_clusters", "near_dup_pagerank",
-    "near_dup_rate_by_source", "near_dup_triangles",
-    "nearest_centroid_confusion", "ngram_jaccard", "orders_cube",
-    "orders_decimal_totals", "orders_rollup", "orders_status_pivot",
-    "orders_window_analytics", "q10_returned_items", "q12_ship_delay",
-    "q14_promo_revenue", "q17_small_quantity", "q22_sales_opportunity",
-    "q7_nation_volume", "quality_gate_ablation",
-    "revenue_daily_gapfill", "simhash", "simhash_near_dup",
-    "stratified_split", "stream_incremental_dedup",
-    "stream_quality_gate", "stream_sli_burn_rate",
-    "token_budget_waterfill", "unigram_lm_train",
-}
-
-# Round-10 deferred re-score, due now at the window head: the
-# gopher_rules_audit accumulator widening was value-invariant with an
-# unchanged oracle, so its r9 green row kept vouching through r10; it
-# ranked "first in line for r11" and that is where it scores.
-_DEFER_SCORED_R11 = {
-    "gopher_rules_audit",
-}
-
-# Oracled entries added after the round-10 window was composed — all
-# locally sf0.001+sf0.01 DuckDB-parity-green, converting to driver
-# rows this round (the _NEVER_SCORED promotion precedent).
-_ADDED_POST_WINDOW_R10 = {
-    "c4_rules_audit",
-    "classifier_pr_curve",
-    "ivf_nprobe_sweep",
-    "events_seasonality_profile",
-    "stream_seasonality_profile",
-}
-
-# Oracled entry added after the round-11 window was composed (and
-# after the r11 same-day bench reference): ranked PAST the r11
-# window so it could not evict a committed rotation slot; now scores
-# at the r12 head via the never-green promotion (kept for the
-# record; no longer consulted by _eval_order).
-_ADDED_POST_WINDOW_R11 = {
-    "ivf_probe_topk",
-}
-
-# Names with a green hash row in CORRECTNESS_r11.json (44/44 oracled
-# green: the 4 round-11 operators, the 5 post-window round-10
-# additions, the 4 r5 leftovers, the gopher re-score, the 10
-# _MODIFIED_R11 re-scores, and the 20-entry r6-stale rotation head;
-# freshest evidence, rides the tail).
-_R11_GREEN = {
-    'ann_recall_eval', 'c4_rules_audit', 'classifier_pr_curve',
-    'classifier_train_lr', 'contamination_report',
-    'corpus_snapshot_diff', 'customer_rfm_segments',
-    'dedup_survivorship', 'diag_manifest_stats',
-    'diag_skip_simulation', 'doc_bigram_logprob', 'doc_char_novelty',
-    'doc_curriculum_shards', 'doc_line_dedup', 'doc_readability',
-    'doc_unigram_logprob', 'embedding_norm_outliers',
-    'embedding_pca_power', 'events_cdc_dedup',
-    'events_seasonality_profile', 'gopher_rules_audit',
-    'ivf_build_index', 'ivf_nprobe_sweep', 'jaccard_threshold_hist',
-    'langid_margin', 'lsh_near_dup_tuned', 'lsh_param_advisor',
-    'media_dedup_exact', 'media_frame_sample', 'media_shard_plan',
-    'minhash_estimator_audit', 'ngram_containment', 'ngram_jaccard',
-    'quality_classifier_score', 'quality_psi_drift',
-    'retrieval_rank_eval', 'semantic_dedup', 'source_vocab_tv',
-    'stream_centroid_confusion', 'stream_corpus_release',
-    'stream_seasonality_profile', 'tokenizer_fertility',
-    'unigram_lm_encode', 'vocab_oov_rate',
-}
-
-# Names with a green hash row in CORRECTNESS_r12.json (50/50 oracled
-# green: ivf_probe_topk's first row, the 2 round-12 operators, the
-# 26-entry r6 remainder, and the r7 cohort head; freshest evidence,
-# rides the tail).
-_R12_GREEN = {
-    'bm25_topk', 'classifier_apply_trained', 'corpus_curation',
-    'customer_k_anonymity', 'diag_clustering_advisor',
-    'diag_file_skew', 'diag_partition_advisor', 'doc_fingerprint',
-    'doc_template_clusters', 'dsir_logratio',
-    'embedding_dim_covariance', 'embedding_dim_variance',
-    'embedding_drift_audit', 'embedding_near_dup',
-    'event_transitions', 'events_disorder_audit',
-    'events_scd2_history', 'events_watermark_advisor',
-    'exact_dedup_corpus', 'hybrid_retrieval_topk', 'ivf_probe_topk',
-    'ivf_topk_exact', 'lang_stats', 'language_id',
-    'lsh_near_dup_exact', 'lsh_topk_exact', 'media_frame_dedup',
-    'near_dup_kcore', 'orders_benford_audit', 'padding_waste_audit',
-    'part_affinity', 'pmi_collocations', 'q11_important_parts',
-    'q15_top_supplier', 'q16_supplier_part_counts',
-    'q19_disjunctive_revenue', 'q20_potential_promotion',
-    'q21_waiting_orders', 'q2_min_cost_supplier',
-    'q6_forecast_revenue', 'q8_market_share', 'q9_product_profit',
-    'quality_scores', 'release_neardup_reconcile',
-    'stream_disorder_monitor', 'text_stats', 'tfidf_top_terms',
-    'user_transition_typicality', 'vocab_growth_curve',
-    'winnow_clone_pairs',
-}
-
-# Names with a green hash row in CORRECTNESS_r13.json (50/50 oracled
-# green: release_retraction_apply's first row, the full 28-entry r7
-# remainder, and the 21-entry r8 cohort head — exactly the r12
-# handoff composition; freshest evidence, rides the tail).
-_R13_GREEN = {
-    'ann_cosine_topk', 'bpe_merge_candidates', 'clone_pairs_verified',
-    'dedup_method_agreement', 'diag_binpack_groups',
-    'diag_bloom_advisor', 'diag_metrics', 'diag_metrics_multi_table',
-    'diag_partition_stats', 'diag_table_stats', 'doc_chunks',
-    'doc_length_deciles', 'doc_pack_sequences',
-    'doc_repetition_profile', 'embedding_consistency_audit',
-    'embedding_energy_curve', 'embedding_ivf_balance',
-    'epoch_shuffle', 'events_cadence_autocorr', 'events_changepoint',
-    'events_hourly', 'events_hourly_trend', 'events_sessionize',
-    'exact_quota_holdout', 'gdpr_delete_simulation',
-    'hard_negative_mining', 'media_integrity_audit',
-    'media_phash_near_dup', 'ngram_dup_curve', 'orders_monthly',
-    'orders_pareto_share', 'orders_seasonal_naive_eval',
-    'part_name_fuzzy', 'pii_density_by_source', 'pii_redaction',
-    'q13_customer_distribution', 'q1_pricing_summary',
-    'q3_shipping_priority', 'q4_order_priority_semi',
-    'q5_local_supplier_volume', 'quality_dup_matrix',
-    'quality_length_skyline', 'release_retraction_apply',
-    'source_quality_calibration', 'stream_repetition_gate',
-    'stream_scd2_history', 'text_artifact_audit', 'token_zipf_curve',
-    'top_orders_per_customer', 'user_activity_gini',
-}
-
-# Round-13 value-invariant changes whose green rows still vouch:
-# (a) release_neardup_reconcile now probes the store for EVERY
-# increment passed (the previous first-of-call skip silently emptied
-# incremental usage) and validates store lineage at entry — for the
-# registry's full-sequence call the first increment's probe prunes
-# `batch < 0` to zero files, so the result relation is unchanged;
-# oracle SQL byte-identical (the _batch_survivor_chain
-# parameterization is default-preserving, pinned in
-# test_round13_ops), local sf0.001+sf0.01 parity re-verified.
-# (b) the streaming drain helpers (stream_sli_burn_rate,
-# stream_seasonality_profile, stream_corpus_release) moved their
-# rollup/checkpoint rmtree into the finally block — cleanup is not
-# observable in any result relation, drains re-verified parity-green.
-# Per the r11 deviation lesson, r13 spends its slots on the r7/r8
-# rotation instead of re-scoring provably-unchanged plans; all of
-# the above re-score with their normal tail rotation.
-_MODIFIED_R13: set[str] = set()
-
-# Round-12 value-invariant refactors whose green rows still vouch:
-# (a) classifier_train_lr's GD loop was EXTRACTED (textops.
-# _lr_gd_trajectory) for classifier_apply_trained to share — oracle
-# SQL byte-identical (asserted in test_round12_ops), plan identical,
-# local sf0.001+sf0.01 parity re-verified; (b) the streaming drain
-# helpers (stream_corpus_release, stream_sli_burn_rate,
-# stream_seasonality_profile) now create AND remove their foreachBatch
-# checkpoint dirs — checkpoint location is not observable in any
-# result relation, drains re-verified parity-green. Per the r11
-# deviation lesson, r12 spends its slots on the r6/r7 rotation
-# instead of re-scoring provably-unchanged plans; all of the above
-# re-score with their normal tail rotation.
-_MODIFIED_R12: set[str] = set()
-
-# Spark-side plans changed in round 11 with UNCHANGED oracles — the
-# SMJ-backlog broadcast fixes (ann/retrieval eval, pca_power iterate,
-# estimator-audit pair spine) plus the ngram_jaccard_pairs
-# sentinel-row rebuild and its transitive consumers
-# (jaccard_threshold_hist -> lsh_param_advisor -> lsh_near_dup_tuned)
-# and the quality_psi_drift tagged-union rewrite. All are
-# value-invariant by construction and parity-green locally at
-# sf0.001+sf0.01, but a changed plan deserves a fresh driver row, and
-# the window has room this round (28 must-ish + 22 rotations).
-_MODIFIED_R11 = {
-    "source_vocab_tv",
-    "ann_recall_eval",
-    "retrieval_rank_eval",
-    "embedding_pca_power",
-    "minhash_estimator_audit",
-    "lsh_param_advisor",
-    "quality_psi_drift",
-    "ngram_jaccard",
-    "jaccard_threshold_hist",
-    "lsh_near_dup_tuned",
-}
-
-
-def _eval_order(item: tuple[str, QuerySpec]) -> float:
-    """Driver scores the FIRST 50 registry entries; order by evidence
-    staleness so every oracled entry's latest green row stays at most
-    ~five rounds old under the 50-slot window (269 entries now).
-    Round-14 tiers — exactly the r13 handoff (24-entry r8 remainder +
-    r9 cohort head) plus the prescribed rows-only evidence refresh,
-    rotation-first:
-      0    oracled-but-never-green — must score. 2 entries:
-           diag_compaction_apply (the executing compaction the r13
-           verdict prescribed, advisor-executing pattern #10) and
-           diag_clustering_apply (its sort-order twin, pattern #11);
-           the r14 growth budget of <=2-3 is spent at 2.
-      3    latest green in r8 — the 24-entry remainder the r13
-           window could not fit; ALL of it scores this round,
-           finishing the r8 cohort.
-      4    the 6 rows-only entries (no oracle exists by documented
-           impossibility; their spark_rows evidence is r11-stale and
-           tier 8 never rotates them naturally — the r13 verdict
-           prescribes landing fresh r14 spark_rows rows, so they ride
-           the window once, just behind the must-score cohort).
-      5    latest green in r9 — 44 entries; the first 18 fill the
-           window, the 26-entry remainder heads the r15 queue.
-      6/7/8  latest green r10/r11/r12 — ride the tail
-           (release_neardup_reconcile rides its r12 slot per the r13
-           handoff: its r13 probe-every-increment fix was
-           value-invariant with a byte-identical oracle).
-      9    latest green r13 — freshest evidence, deepest tail.
-
-    Round-15 handoff: this window = 2 never-green + 24 r8 + 6
-    rows-only + 18 r9 head = 50. Next round's queue = the 26-entry
-    r9 remainder + the head of the r10 cohort (~24 of its slots);
-    r16 takes the r10 remainder + the r11 cohort head. Keep new
-    oracled entries <=2-3 per round so the r10 cohort clears by r16
-    and nothing drifts past the five-round bound.
-
-    SMJ census RE-RUN at r13 HEAD over ALL 267 entries (247
-    non-streaming plans built and explained; the r12 census's 266
-    plus release_retraction_apply — an eager executing sink whose
-    registry plan is the result checkpoint; its real joins (the
-    candidate-pair-scale presence join, the per-shard anti-joins,
-    and the sig-store purge joins) are pinned hint-free on the LAZY
-    relation by test_round13_ops and correctly stats-driven —
-    broadcast at test scale, SMJ at corpus scale): exactly the SAME
-    8 plans keep SortMergeJoins and ALL are genuine big-big joins —
-    corpus_snapshot_diff (two snapshots, full-outer),
-    crossmodal/dedup_method_agreement (two production dedup
-    pipelines, ids-only outer), join_selectivity_audit (the join it
-    audits), ngram_containment (shingle containment),
-    q21_waiting_orders (lineitem self-join), semantic_dedup (the
-    within-cluster pair self-join), neardup_source_modularity
-    (corpus-scale label join onto the edge relation). Nothing
-    broadcast-fit remains. Standing post-census correction (r11
-    self-review): minhash_estimator_audit must stay a tagged-union
-    fold — candidate-PAIR-scale relations are never hinted.
-    """
-    name, spec = item
-    ever_green = (
-        name in _R2_GREEN or name in _R3_GREEN or name in _R4_GREEN
-        or name in _R5_GREEN or name in _R6_GREEN or name in _R7_GREEN
-        or name in _R8_GREEN or name in _R9_GREEN or name in _R10_GREEN
-        or name in _R11_GREEN or name in _R12_GREEN or name in _R13_GREEN
-    )
-    if spec.oracle is not None and not ever_green:
-        return 0
-    if spec.oracle is None:
-        return 4  # rows-only; r11-stale spark_rows evidence — refresh
-    # Latest green row wins; older evidence = earlier slot.
-    if name in _R13_GREEN:
-        return 9
-    if name in _R12_GREEN:
-        return 8
-    if name in _R11_GREEN:
-        return 7
-    if name in _R10_GREEN:
-        return 6
-    if name in _R9_GREEN:
-        return 5
-    if name in _R8_GREEN:
-        return 3
-    if name in _R7_GREEN:
-        return 1
-    # Green only in r2-r6 — empty after the r7-r13 rotations;
-    # anything left here is maximally stale and must re-score.
-    return 0.5
-
-
-REGISTRY = dict(
-    sorted(REGISTRY.items(), key=_eval_order)
+from iceberg_diag_spark.plans.common import REGISTRY  # noqa: F401
+from iceberg_diag_spark.plans import (  # noqa: F401
+    oracles_diag,
+    oracles_maintenance,
+    oracles_tpch,
+    oracles_events,
+    oracles_similarity,
+    oracles_dedup,
+    oracles_multimodal,
+    oracles_corpus,
+    oracles_streaming,
 )

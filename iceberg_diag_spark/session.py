@@ -48,17 +48,13 @@ def get_spark(
         # Join strategy: allow shuffled-hash join where its size
         # conditions fit instead of always sort-merge (guide §3.1 —
         # SHJ skips both sort passes; the build-side-OOM risk is
-        # bounded by AQE's sizing and the threshold below). Both
-        # knobs env-overridable for cluster re-tuning; the AQE
-        # runtime SMJ→SHJ rewrite threshold is per-partition build
-        # size, so it scales with shuffle partitioning, not data.
+        # bounded by AQE's sizing and the threshold below). Clusters
+        # re-tune both through extra_conf; the AQE runtime SMJ→SHJ
+        # rewrite threshold is per-partition build size, so it
+        # scales with shuffle partitioning, not data.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "128m"),
+            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m"
         )
         # Arrow for pandas UDF exchange (bin-pack, multimodal plumbing).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -23,12 +23,15 @@ and checkpointLocation on durable storage.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import os
 import shutil
 import tempfile
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from iceberg_diag_spark.operators.events import WATERMARK_CANDIDATES_US
@@ -41,6 +44,50 @@ _QUERY_SEQ = itertools.count()
 # seconds; if the engine ever wedges (state-store/sink trouble in a
 # foreign harness), fail loudly instead of hanging the caller forever.
 STREAM_DRAIN_TIMEOUT_SECS = 300
+
+
+@contextlib.contextmanager
+def _drained(
+    q: StreamingQuery, label: str, *tmp_dirs: str
+) -> Iterator[None]:
+    """Wait for an availableNow query to finish, then run the body.
+
+    Raises TimeoutError if the drain outlives
+    STREAM_DRAIN_TIMEOUT_SECS. The query is stopped before the body
+    runs, and stopped again and ``tmp_dirs`` removed on every exit, so
+    a timeout or a failing post-drain read leaks neither a running
+    query nor temp dirs.
+    """
+    try:
+        if not q.awaitTermination(STREAM_DRAIN_TIMEOUT_SECS):
+            raise TimeoutError(
+                f"streaming drain {label!r} did not finish within "
+                f"{STREAM_DRAIN_TIMEOUT_SECS}s"
+            )
+        q.stop()
+        yield
+    finally:
+        q.stop()
+        for d in tmp_dirs:
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def _start_foreach_batch(
+    stream_df: DataFrame,
+    write_batch: Callable[[DataFrame, int], None],
+    checkpoint_dir: str | None,
+    checkpoint_prefix: str,
+) -> StreamingQuery:
+    """Start an availableNow drain of ``stream_df`` through
+    ``write_batch``, checkpointing to ``checkpoint_dir`` (a fresh temp
+    dir named ``checkpoint_prefix*`` when None)."""
+    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix=checkpoint_prefix)
+    return (
+        stream_df.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def read_events_stream(
@@ -443,18 +490,10 @@ def run_to_table(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        if not q.awaitTermination(STREAM_DRAIN_TIMEOUT_SECS):
-            raise TimeoutError(
-                f"streaming drain {name!r} did not finish within "
-                f"{STREAM_DRAIN_TIMEOUT_SECS}s"
-            )
-    finally:
-        q.stop()
-    sink = spark.table(name)
-    rows, schema = sink.collect(), sink.schema
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(checkpoint, ignore_errors=True)
+    with _drained(q, name, checkpoint):
+        sink = spark.table(name)
+        rows, schema = sink.collect(), sink.schema
+        spark.catalog.dropTempView(name)
     return spark.createDataFrame(rows, schema)
 
 
@@ -761,14 +800,8 @@ def stream_export_shards(
             .parquet(f"{path}/batch={int(batch_id)}")
         )
 
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(
-        prefix="ckpt_shard_export_"
-    )
-    return (
-        docs_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start_foreach_batch(
+        docs_stream, write_batch, checkpoint_dir, "ckpt_shard_export_"
     )
 
 
@@ -1086,14 +1119,8 @@ def sli_burn_rate_stream(
             .parquet(f"{rollup_path}/batch={int(batch_id)}")
         )
 
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(
-        prefix="ckpt_sli_burn_"
-    )
-    return (
-        events_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start_foreach_batch(
+        events_stream, write_batch, checkpoint_dir, "ckpt_sli_burn_"
     )
 
 
@@ -1125,22 +1152,10 @@ def run_sli_burn_rate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = sli_burn_rate_stream(
         read_events_stream(spark, sf_dir), rollup, checkpoint_dir=ckpt
     )
-    # rmtree in the finally: a drain timeout or a post-drain read
-    # failure must not leak the rollup/checkpoint dirs into /tmp.
-    try:
-        if not q.awaitTermination(STREAM_DRAIN_TIMEOUT_SECS):
-            raise TimeoutError(
-                "sli_burn_rate_stream drain did not finish within "
-                f"{STREAM_DRAIN_TIMEOUT_SECS}s"
-            )
-        q.stop()
+    with _drained(q, "sli_burn_rate_stream", rollup, ckpt):
         return sli_burn_rate_from_rollup(spark, rollup).localCheckpoint(
             eager=True
         )
-    finally:
-        q.stop()
-        shutil.rmtree(rollup, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def seasonality_profile_stream(
@@ -1172,14 +1187,8 @@ def seasonality_profile_stream(
             .parquet(f"{rollup_path}/batch={int(batch_id)}")
         )
 
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(
-        prefix="ckpt_seasonality_"
-    )
-    return (
-        events_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start_foreach_batch(
+        events_stream, write_batch, checkpoint_dir, "ckpt_seasonality_"
     )
 
 
@@ -1211,20 +1220,10 @@ def run_seasonality_profile_stream(
     q = seasonality_profile_stream(
         read_events_stream(spark, sf_dir), rollup, checkpoint_dir=ckpt
     )
-    try:
-        if not q.awaitTermination(STREAM_DRAIN_TIMEOUT_SECS):
-            raise TimeoutError(
-                "seasonality_profile_stream drain did not finish within "
-                f"{STREAM_DRAIN_TIMEOUT_SECS}s"
-            )
-        q.stop()
+    with _drained(q, "seasonality_profile_stream", rollup, ckpt):
         return seasonality_from_rollup(spark, rollup).localCheckpoint(
             eager=True
         )
-    finally:
-        q.stop()
-        shutil.rmtree(rollup, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def corpus_release_stream(
@@ -1288,14 +1287,8 @@ def corpus_release_stream(
             order_cols=("source", "seq_id", "doc_id"),
         )
 
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(
-        prefix="ckpt_corpus_release_"
-    )
-    return (
-        docs_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start_foreach_batch(
+        docs_stream, write_batch, checkpoint_dir, "ckpt_corpus_release_"
     )
 
 
@@ -1339,17 +1332,7 @@ def run_corpus_release_stream(
         release,
         checkpoint_dir=ckpt,
     )
-    try:
-        if not q.awaitTermination(STREAM_DRAIN_TIMEOUT_SECS):
-            raise TimeoutError(
-                "corpus_release_stream drain did not finish within "
-                f"{STREAM_DRAIN_TIMEOUT_SECS}s"
-            )
-        q.stop()
+    with _drained(q, "corpus_release_stream", release, ckpt):
         return release_manifest_from_stream(spark, release).localCheckpoint(
             eager=True
         )
-    finally:
-        q.stop()
-        shutil.rmtree(release, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)

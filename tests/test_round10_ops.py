@@ -452,7 +452,7 @@ def test_matryoshka_zero_prefix_vector_is_deterministic(spark):
     import duckdb
 
     from iceberg_diag_spark.operators.similarity import matryoshka_audit
-    from iceberg_diag_spark.plans.oracles_round9 import _MATRYOSHKA_SQL
+    from iceberg_diag_spark.plans.oracles_similarity import _MATRYOSHKA_SQL
 
     rows = []
     for vid in range(0, 12):

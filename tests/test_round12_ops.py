@@ -208,7 +208,7 @@ def test_train_lr_oracle_untouched_by_carry_refactor():
     # oracle byte-free of deployment columns (the _MODIFIED_R12
     # value-invariance claim): carry-off SQL mentions neither the
     # hand-set rule nor the source label
-    from iceberg_diag_spark.plans.oracles_round11 import _TRAIN_LR_SQL
+    from iceberg_diag_spark.plans.oracles_dedup import _TRAIN_LR_SQL
 
     assert " kh" not in _TRAIN_LR_SQL
     assert "source" not in _TRAIN_LR_SQL

@@ -135,7 +135,7 @@ def test_reconcile_oracle_sql_untouched_by_chain_parameterization():
     entry's rendered oracle is byte-identical to its r12 (driver
     hash-green) form — that is what lets release_neardup_reconcile
     keep its green row without a re-score slot."""
-    from iceberg_diag_spark.plans.oracles_round12 import _RECONCILE_SQL
+    from iceberg_diag_spark.plans.oracles_corpus import _RECONCILE_SQL
 
     assert (
         hashlib.sha256(_RECONCILE_SQL.encode()).hexdigest()

@@ -170,3 +170,41 @@ def test_cdc_merge_state_survives_restart(spark, tmp_path_factory):
     assert got2[1].last_event_id == 4
     assert not got2[2].present and got2[2].n_applied == 0
     assert got2[2].disorder_seen == 0
+
+
+@pytest.mark.parametrize("drain", ["run_to_table", "run_sli_burn_rate_stream"])
+def test_drain_timeout_stops_query_and_removes_temp_dirs(
+    spark, monkeypatch, drain
+):
+    """A drain that outlives STREAM_DRAIN_TIMEOUT_SECS raises
+    TimeoutError, leaves no active query behind and removes every temp
+    dir it created (checkpoint and rollup alike)."""
+    import tempfile
+
+    from pyspark.sql.streaming import StreamingQuery
+
+    sf_dir = "/root/testdata/sf0.001"
+    queries, dirs = [], []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        dirs.append(real_mkdtemp(*args, **kwargs))
+        return dirs[-1]
+
+    def expired(q, *args, **kwargs):
+        queries.append(q)
+        return False
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", expired)
+    with pytest.raises(TimeoutError, match="did not finish"):
+        if drain == "run_to_table":
+            so.run_to_table(
+                so.tumbling_counts(so.read_events_stream(spark, sf_dir)),
+                "complete",
+            )
+        else:
+            so.run_sli_burn_rate_stream(spark, sf_dir)
+
+    assert len(queries) == 1 and not queries[0].isActive
+    assert dirs and not any(os.path.exists(d) for d in dirs)
