@@ -11,11 +11,6 @@ class DiagError(Exception):
     """Base class for all engine errors."""
 
 
-class SessionInitError(DiagError):
-    """SparkSession could not be created/validated (reference:
-    SessionInitializationError)."""
-
-
 class CatalogBindError(DiagError):
     """Catalog probe failed (reference: ProviderError /
     EndpointConnectionError paths)."""
@@ -28,15 +23,6 @@ class DatabaseNotFound(DiagError):
     def __init__(self, database: str):
         self.database = database
         super().__init__(f"database not found: {database}")
-
-
-class TableNotFound(DiagError):
-    """Table does not exist or has no Iceberg metadata (reference:
-    TableMetricsCalculationError on load_table failure)."""
-
-    def __init__(self, table: str):
-        self.table = table
-        super().__init__(f"table not found: {table}")
 
 
 class NoMatchingTables(DiagError):

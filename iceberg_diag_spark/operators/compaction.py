@@ -26,26 +26,21 @@ Scale shape (100 TB):
   scale, stats-driven — no broadcast hint; Catalyst broadcasts it at
   test scale and is free to shuffle at 1e8-file scale), one
   repartition on (partition, group) — each group lands wholly in one
-  task, so partitionBy emits exactly ONE file per group — and one
-  dynamic-partition-overwrite write, followed by dropping the stale
-  leaf dirs the smaller layout no longer uses (write-then-delete: a
-  crash in between leaves recoverable duplicates, never loss).
-  Untouched partitions are never opened.
+  task, so partitionBy emits exactly ONE file per group — landed by
+  ``sinks.rewrite_partitions`` (stage, dynamic overwrite, then drop
+  the stale leaf dirs). Untouched partitions are never opened.
 - The ledger re-reads ONLY the rewritten partitions (pruned
   predicate); untouched partitions' after-state IS their
   before-state from the pre-pass over the same bytes (per-partition
   digests and counts vouch, the release_retraction_apply idiom).
 - Bounded driver state: one collect of per-partition decision rows
   (#partitions, metadata scale), exactly like the retraction sink.
-- Staging cost: the rows being rewritten are eagerly localCheckpoint'd
-  before the write (you cannot overwrite parquet you are lazily still
-  reading) — the same staging copy the retraction sink pays, but
-  scoped to ALL affected partitions at once, so a whole-table
-  compaction stages the whole table. At that scale, run the sink over
-  partition batches (``compact_apply_binpack(..., partitions=[...])``
-  scopes the scan, plan, rewrite, AND staging copy to the batch;
-  everything outside is never read) or stage to a sibling directory
-  and swap.
+- Staging cost: rewrite_partitions stages ALL affected partitions at
+  once, so a whole-table compaction stages the whole table. At that
+  scale, run the sink over partition batches
+  (``compact_apply_binpack(..., partitions=[...])`` scopes the scan,
+  plan, rewrite, AND staging copy to the batch; everything outside is
+  never read) or stage to a sibling directory and swap.
 """
 
 from __future__ import annotations
@@ -60,6 +55,8 @@ from iceberg_diag_spark.functions.cost import (
     read_file_cost,
 )
 from iceberg_diag_spark.operators.binpack import pack_group_bounds
+from iceberg_diag_spark.operators.sampling import membership_checksums
+from iceberg_diag_spark.sources.sinks import rewrite_partitions
 
 ASSIGN_SCHEMA = "partition_key string, file_id long, gid long"
 
@@ -169,6 +166,29 @@ def physical_file_sizes(
     )
 
 
+def _per_file_stats(
+    rel: DataFrame, keys: list[str], key: Column, *extra: Column
+) -> DataFrame:
+    """Per-file aggregate behind both sinks' before and after passes:
+    row count, the caller's ``extra`` aggregates, physical file count
+    (distinct input_file_name) and the two membership digests of
+    ``key`` (x1, x2), grouped by ``keys``."""
+    x1, x2 = membership_checksums(key)
+    # input_file_name is non-deterministic for the analyzer —
+    # project it before aggregating over it.
+    return (
+        rel.withColumn("_phys_file", F.input_file_name())
+        .groupBy(*keys)
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            *extra,
+            F.countDistinct("_phys_file").cast("long").alias("n_phys"),
+            x1.alias("x1"),
+            x2.alias("x2"),
+        )
+    )
+
+
 def _leaf_dirs(
     spark: SparkSession,
     path: str,
@@ -272,9 +292,6 @@ def compact_apply_binpack(
     partition. scan_overhead_* columns use the SAME size basis the
     plan used, so predicted-vs-measured is apples-to-apples.
     """
-    from iceberg_diag_spark.operators.sampling import membership_checksums
-    from iceberg_diag_spark.sources.sinks import delete_paths
-
     if max_bytes_per_group <= 0:
         raise ValueError("max_bytes_per_group must be positive")
     pre = spark.read.schema(read_schema).parquet(path)
@@ -282,26 +299,18 @@ def compact_apply_binpack(
         if not partitions:
             raise ValueError("partitions batch must be non-empty")
         pre = pre.filter(F.col(partition_col).isin(list(partitions)))
-    x1, x2 = membership_checksums(key)
 
-    def _per_file_stats(rel: DataFrame) -> DataFrame:
-        # input_file_name is non-deterministic for the analyzer —
-        # project it before aggregating over it.
-        return (
-            rel.withColumn("_phys_file", F.input_file_name())
-            .groupBy(partition_col, file_col)
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum(row_size).cast("long").alias("row_bytes"),
-                F.countDistinct("_phys_file").cast("long").alias("n_phys"),
-                x1.alias("x1"),
-                x2.alias("x2"),
-            )
+    def _file_stats(rel: DataFrame) -> DataFrame:
+        return _per_file_stats(
+            rel,
+            [partition_col, file_col],
+            key,
+            F.sum(row_size).cast("long").alias("row_bytes"),
         )
 
     # ONE scan: per-file stats + per-partition digests. Eager — every
     # downstream decision must not re-read files the rewrite replaces.
-    per_file = _per_file_stats(pre).localCheckpoint(eager=True)
+    per_file = _file_stats(pre).localCheckpoint(eager=True)
     if file_sizes is not None:
         meta = file_sizes.select(
             partition_col, file_col, F.col("size_in_bytes").alias("fsz")
@@ -385,7 +394,6 @@ def compact_apply_binpack(
     }
     todo = list(groups_of)
     if todo:
-        n_groups = sum(groups_of.values())
         data_cols = [
             f.name
             for f in pre.schema.fields
@@ -399,32 +407,21 @@ def compact_apply_binpack(
                 F.col("gid").cast("long").alias(file_col),
                 partition_col,
             )
-            .localCheckpoint(eager=True)  # the write replaces its input
         )
-        # Write FIRST via dynamic partition overwrite (gids are
-        # contiguous 0..k-1 and every group is non-empty, so exactly
-        # those leaf dirs are replaced), THEN drop the stale leaf
-        # dirs the smaller layout no longer uses — the retraction
-        # sink's order: a crash in between leaves recoverable
-        # duplicates, never a deleted-but-unwritten partition.
-        (
-            kept.repartition(max(1, int(n_groups)), partition_col, file_col)
-            .sortWithinPartitions(partition_col, file_col, *order_cols)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col, file_col)
-            .parquet(path)
-        )
-        # Stale-dir drops are driven by a real directory listing, not
-        # by interpolating partition values into path strings — a
-        # Hive-escaped dir name (':', '%', '=', ... in the value)
-        # would never match an interpolated path and the stale files
-        # would double-count in the after-state. Deletes batch
-        # through one FS handle + thread pool (delete_paths): ~300
-        # serial py4j/FS calls cost ~1.5 s locally and worse on an
-        # object store.
-        delete_paths(
+        # gids are contiguous 0..k-1 and every group is non-empty, so
+        # the write replaces exactly those leaf dirs and the stale
+        # ones are the ids >= k. Stale dirs come from a real directory
+        # listing, not from interpolating partition values into path
+        # strings — a Hive-escaped dir name (':', '%', '=', ... in the
+        # value) would never match an interpolated path and the stale
+        # files would double-count in the after-state.
+        rewrite_partitions(
             spark,
+            kept,
+            path,
+            (partition_col, file_col),
+            sum(groups_of.values()),
+            order_cols,
             [
                 uri
                 for pval, fid, uri in _leaf_dirs(
@@ -450,7 +447,7 @@ def compact_apply_binpack(
         F.col("bx2").alias("members_xor2_after"),
     )
     if todo:
-        post = _per_file_stats(
+        post = _file_stats(
             spark.read.schema(read_schema)
             .parquet(path)
             .filter(F.col(partition_col).isin(todo))
@@ -533,15 +530,12 @@ def cluster_apply_sorted(
     columns) finishes the total order. The rewrite joins rows to the
     value-rank base (value-cardinality scale, stats-driven, no hint),
     repartitions on the target file id — one task per file, one
-    physical file per leaf dir — and lands via dynamic partition
-    overwrite + stale-leaf-dir drop (the compact_apply_binpack
-    ordering: duplicates on crash, never loss). A global re-sort
-    rewrites every file by nature — there is no untouched-partition
-    shortcut here; the after-state is re-read entirely from the
-    written files (bounds, rows, digests), and the pre-write staging
-    checkpoint is likewise the whole table (the unavoidable copy of
-    any overwrite-what-you-read rewrite; range-partition the value
-    domain and run per-range calls to bound it).
+    physical file per leaf dir — through sinks.rewrite_partitions. A
+    global re-sort rewrites every file by nature — there is no
+    untouched-partition shortcut here; the after-state is re-read
+    entirely from the written files (bounds, rows, digests), and the
+    staging copy is likewise the whole table (range-partition the
+    value domain and run per-range calls to bound it).
 
     Output, one row: files/rows/overlap_pairs/max_depth/avg_depth_ppm
     before (measured from the layout on disk), the planned after
@@ -553,29 +547,21 @@ def cluster_apply_sorted(
         clustering_advisor,
         sorted_after_stats,
     )
-    from iceberg_diag_spark.operators.sampling import membership_checksums
     from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
-    from iceberg_diag_spark.sources.sinks import delete_paths
     from pyspark.sql.window import Window
 
     if rows_per_file <= 0:
         raise ValueError("rows_per_file must be positive")
     m = rows_per_file
     pre = spark.read.schema(read_schema).parquet(path)
-    x1, x2 = membership_checksums(F.col(key_col))
 
     def _per_file(rel: DataFrame) -> DataFrame:
-        return (
-            rel.withColumn("_phys_file", F.input_file_name())
-            .groupBy(file_col)
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.min(value_col).cast("long").alias("lo"),
-                F.max(value_col).cast("long").alias("hi"),
-                F.countDistinct("_phys_file").cast("long").alias("n_phys"),
-                x1.alias("x1"),
-                x2.alias("x2"),
-            )
+        return _per_file_stats(
+            rel,
+            [file_col],
+            F.col(key_col),
+            F.min(value_col).cast("long").alias("lo"),
+            F.max(value_col).cast("long").alias("hi"),
         )
 
     def _sweep(per_file: DataFrame) -> DataFrame:
@@ -639,26 +625,21 @@ def cluster_apply_sorted(
             *data_cols,
             ((F.col("__rank") - 1) / m).cast("long").alias(file_col),
         )
-        .localCheckpoint(eager=True)  # the write replaces its input
     )
     n_rows_total = int(
         bef_files.agg(F.sum("n_rows")).collect()[0][0] or 0
     )
     n_files_new = -(-n_rows_total // m)  # ceil; ranks are contiguous
-    (
-        ranked.repartition(max(1, int(n_files_new)), file_col)
-        .sortWithinPartitions(file_col, value_col, key_col)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(file_col)
-        .parquet(path)
-    )
     # Listing-driven stale-dir drops (same idiom as the bin-pack
     # sink): file ids are integers so interpolation would happen to
-    # work, but the listing keeps both sinks on the one safe pattern
-    # and the deletes batch through one FS handle + thread pool.
-    delete_paths(
+    # work, but the listing keeps both sinks on the one safe pattern.
+    rewrite_partitions(
         spark,
+        ranked,
+        path,
+        (file_col,),
+        max(1, n_files_new),
+        (value_col, key_col),
         [
             uri
             for _pval, fid, uri in _leaf_dirs(spark, path, None, file_col)

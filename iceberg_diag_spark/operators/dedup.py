@@ -69,53 +69,6 @@ def exact_dedup(
     return docs.join(keep, id_col, "semi")
 
 
-def collapse_exact_duplicates(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> tuple[DataFrame, DataFrame]:
-    """Exact-duplicate pre-collapse for the fuzzy-dedup family:
-    returns (representatives, star_edges) where representatives is
-    one surviving row per distinct normalized text (minimum id — the
-    exact_dedup contract) and star_edges is one (doc_a=rep,
-    doc_b=member) row per collapsed duplicate.
-
-    WHY this exists: LSH bucketing distributes near-identical docs
-    into small buckets, but byte-identical docs land in the SAME
-    bucket in EVERY band — a corpus with millions of exact copies of
-    one page (boilerplate 404s, mirrored licenses) turns that bucket
-    into an n² pair expansion no banding scheme can save. Collapsing
-    exact dups first bounds every bucket to genuinely-near-identical
-    representatives, and the star edges (k-1 rows per k-dup group,
-    not k(k-1)/2) keep the collapsed members reachable: downstream
-    connected components place members in their representative's
-    cluster transitively.
-
-    Cost: one window shuffle on the uniform 32-byte content hash —
-    the same project-then-shuffle shape as exact_dedup (text never
-    shuffles, only its hash). The (id, keeper) relation is
-    localCheckpointed (16 B/doc — the simhash fingerprint idiom):
-    both consumers (the representative semi-join and the star-edge
-    projection) read the materialized partitions, so the text scan +
-    sha256 + window pass runs ONCE even though Catalyst shares no
-    subtree between them.
-
-    NOTE the semi join here shuffles the full doc rows (text
-    included) by id — acceptable when the caller genuinely needs
-    representative TEXT downstream. The near-dup entry points do
-    not: they consume only narrow derived relations (fingerprints /
-    signatures), so they use content_rep_marks directly and filter
-    those relations instead — text never leaves the scan."""
-    marked = content_rep_marks(docs, text_col, id_col)
-    reps = docs.join(
-        marked.filter(F.col(id_col) == F.col("__keep")).select(id_col),
-        id_col,
-        "semi",
-    )
-    star = marked.filter(F.col(id_col) != F.col("__keep")).select(
-        F.col("__keep").alias("doc_a"), F.col(id_col).alias("doc_b")
-    )
-    return reps, star
-
-
 def content_rep_marks(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -135,23 +88,6 @@ def content_rep_marks(
     return hashed.withColumn(
         "__keep", F.min(id_col).over(Window.partitionBy("__ch"))
     ).localCheckpoint()
-
-
-def word_ngrams(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles of the normalized text as an array of
-    strings (distinct). Built-ins only: split → transform over a
-    sliding index range → array_distinct.
-
-    NOTE: higher-order array functions run interpreted (outside
-    whole-stage codegen) — fine for occasional use, but hot paths
-    should use word_ngram_rows instead (~10× cheaper, measured)."""
-    toks = F.split(normalized_text(col), " ")
-    cnt = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(cnt - n, F.lit(0)))
-    grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))
-    )
-    return F.array_distinct(F.when(cnt >= n, grams).otherwise(F.array()))
 
 
 def word_ngram_rows(

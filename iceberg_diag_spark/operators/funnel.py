@@ -833,15 +833,12 @@ def release_retraction_apply(
 
     Surgical means partition-pruned at both levels: only batches that
     actually lose a document are opened, and within a batch only the
-    shard=K directories holding a retracted doc are rewritten
-    (sinks.write_assigned_shards dynamic partition overwrite —
-    sibling shards are never read, never rewritten, byte-untouched).
-    A rewritten shard keeps the release sink's deterministic
-    repartition + sort, so it is byte-identical to a fresh build of
-    its surviving rows. A shard whose every row is retracted cannot
-    be replaced by a dynamic overwrite (no rows land in it), so its
-    directory is dropped explicitly (sinks.delete_path, Hadoop FS —
-    works on any filesystem the release lives on).
+    shard=K directories holding a retracted doc are rewritten, and
+    shards the retraction empties are dropped, through
+    sinks.rewrite_partitions (sibling shards are never read, never
+    rewritten, byte-untouched). A rewritten shard keeps the release
+    sink's (shard; source, seq_id, doc_id) order, so it is
+    byte-identical to a fresh build of its surviving rows.
 
     Surviving rows keep their original seq_id: re-packing after a
     retraction would cascade new sequence boundaries across every
@@ -891,10 +888,8 @@ def release_retraction_apply(
     their before-state (sibling-shard byte-identity, pytest-pinned),
     so the ledger still vouches for files — rewritten shards from
     the post-write read, untouched shards from the pre-rewrite pass
-    over the same bytes. The per-batch survivor checkpoint before
-    each rewrite is the staging copy any transactional rewrite pays
-    (you cannot overwrite parquet you are lazily still reading),
-    bounded by one batch's affected shards.
+    over the same bytes. rewrite_partitions' staging copy is bounded
+    by one batch's affected shards.
 
     Output per batch holding at least one document (a fileless
     batch directory — an all-junk increment whose funnel dropped
@@ -905,10 +900,7 @@ def release_retraction_apply(
     by batch.
     """
     from iceberg_diag_spark.operators.sampling import membership_checksums
-    from iceberg_diag_spark.sources.sinks import (
-        delete_path,
-        write_assigned_shards,
-    )
+    from iceberg_diag_spark.sources.sinks import rewrite_partitions
 
     if sig_path is _SIG_PATH_UNSET:
         raise TypeError(
@@ -981,21 +973,19 @@ def release_retraction_apply(
             "doc_id",
             "anti",
         ).select("source", "doc_id", "n_tokens", "seq_id", "shard")
-        # break lineage: the write below replaces files `kept` reads
-        kept = kept.localCheckpoint(eager=True)
-        write_assigned_shards(
+        rewrite_partitions(
+            spark,
             kept,
             f"{release_path}/batch={b}",
+            ("shard",),
             n_shards,
-            order_cols=("source", "seq_id", "doc_id"),
-            dynamic=True,
+            ("source", "seq_id", "doc_id"),
+            [
+                f"{release_path}/batch={b}/shard={int(r['shard'])}"
+                for r in rows
+                if int(r["n_docs"]) == int(r["n_retracted"])
+            ],
         )
-        for r in rows:
-            if int(r["n_docs"]) == int(r["n_retracted"]):
-                delete_path(
-                    spark,
-                    f"{release_path}/batch={b}/shard={int(r['shard'])}",
-                )
     if sig_path is not None:
         # Driven by the retraction list, NOT by the release hits: a
         # replay after a crash between the release rewrite and this
@@ -1082,17 +1072,13 @@ def _purge_signature_store(
     """Remove the retracted docs' rows from the reconcile signature
     store — the sb=K twin of the release rewrite: per named batch,
     one bounded per-bucket decision aggregate (<= sig_buckets rows),
-    then an anti-join rewrite of ONLY the buckets holding a named doc
-    (dynamic partition overwrite, the store's own deterministic
-    write_assigned_shards order — byte-identical to a fresh build of
-    the surviving rows) and an explicit drop of buckets the purge
-    empties. Idempotent: a purged doc produces no hits on replay. A
+    then sinks.rewrite_partitions of ONLY the buckets holding a named
+    doc (in the store's own order — byte-identical to a fresh build
+    of the surviving rows), dropping the buckets the purge empties.
+    Idempotent: a purged doc produces no hits on replay. A
     batch with no store directory (synthetic pairs, or a store the
     caller never built) is skipped."""
-    from iceberg_diag_spark.sources.sinks import (
-        delete_path,
-        write_assigned_shards,
-    )
+    from iceberg_diag_spark.sources.sinks import rewrite_partitions
 
     sig_schema = "doc_id long, band int, band_key string, ch string, sb long"
     for b in batches:
@@ -1123,18 +1109,17 @@ def _purge_signature_store(
             .filter(F.col("sb").isin(buckets))
             .join(ids, "doc_id", "anti")
             .select("doc_id", "band", "band_key", "ch", "sb")
-            .localCheckpoint(eager=True)
         )
-        write_assigned_shards(
+        rewrite_partitions(
+            spark,
             kept,
             f"{sig_path}/batch={b}",
+            ("sb",),
             sig_buckets,
-            shard_col="sb",
-            order_cols=("band", "band_key", "doc_id"),
-            dynamic=True,
+            ("band", "band_key", "doc_id"),
+            [
+                f"{sig_path}/batch={b}/sb={int(r['sb'])}"
+                for r in hit_rows
+                if int(r["n"]) == int(r["hit"])
+            ],
         )
-        for r in hit_rows:
-            if int(r["n"]) == int(r["hit"]):
-                delete_path(
-                    spark, f"{sig_path}/batch={b}/sb={int(r['sb'])}"
-                )

@@ -11,8 +11,10 @@ reads cheap:
   and aggregations on the bucket key read co-located buckets and skip
   the exchange entirely (verified in tests: the joined plan contains
   no Exchange on the bucketed key).
+- In-place partition rewrites (`rewrite_partitions`): the stage →
+  dynamic overwrite → drop sequence every executing sink shares.
 
-Both are thin wrappers so callers state intent, not mechanics.
+All are thin wrappers so callers state intent, not mechanics.
 """
 
 from __future__ import annotations
@@ -211,7 +213,6 @@ def write_assigned_shards(
     shard_col: str = "shard",
     order_cols: tuple[str, ...] = ("doc_id",),
     mode: str = "overwrite",
-    dynamic: bool = False,
 ) -> None:
     """Materialize a relation that already CARRIES its shard
     assignment (e.g. funnel.release_assignments, where membership is a
@@ -223,39 +224,72 @@ def write_assigned_shards(
     into one task; sortWithinPartitions gives every shard file a
     deterministic row order, so a re-run of the same release is
     byte-stable (the manifest's membership digests are order-free, but
-    byte-stable files make releases diffable).
-
-    ``dynamic=True`` switches overwrite to DYNAMIC partition
-    overwrite: only the shard=K directories PRESENT in `df` are
-    replaced; every other shard under `path` is left untouched on
-    disk — the surgical-rewrite mode release_retraction_apply uses so
-    retracting from one shard never rewrites (or even reads) its
-    siblings. Same repartition + sortWithinPartitions, so a rewritten
-    shard holding the same rows as a fresh build is byte-identical.
+    byte-stable files make releases diffable). Rewriting some shards
+    of an existing layout in place is rewrite_partitions' job.
     """
     from pyspark.sql import functions as F
 
     if n_shards <= 0:
         raise ValueError("n_shards must be positive")
-    writer = (
+    (
         df.repartition(n_shards, F.col(shard_col))
         .sortWithinPartitions(shard_col, *order_cols)
         .write.mode(mode)
+        .partitionBy(shard_col)
+        .parquet(path)
     )
-    if dynamic:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.partitionBy(shard_col).parquet(path)
+
+
+def rewrite_partitions(
+    spark: SparkSession,
+    rows: DataFrame,
+    path: str,
+    partition_cols: tuple[str, ...],
+    n_tasks: int,
+    order_cols: tuple[str, ...],
+    drop: list[str],
+) -> None:
+    """Rewrite some leaf dirs of the partitioned layout at `path` in
+    place — the one write discipline of every executing sink
+    (compaction, clustering, release retraction, signature-store
+    purge), in three steps:
+
+    1. stage `rows` with an eager localCheckpoint: they are usually
+       read from the very files the write replaces, and parquet
+       cannot be overwritten while it is still being read lazily;
+    2. write them with DYNAMIC partition overwrite: only the leaf
+       dirs present in `rows` are replaced, every other dir under
+       `path` stays byte-untouched. One hash repartition on the
+       partition columns puts each leaf in one task (one file per
+       leaf) and the sort fixes its row order, so a rewritten leaf is
+       byte-identical to a fresh build of the same rows;
+    3. only then delete `drop`, the leaf dirs the new layout no
+       longer uses — a dynamic overwrite cannot empty a dir, since no
+       rows land in it.
+
+    Write-then-delete: a crash between steps 2 and 3 leaves
+    duplicates, never a deleted-but-unwritten partition.
+    """
+    if n_tasks <= 0:
+        raise ValueError("n_tasks must be positive")
+    staged = rows.localCheckpoint(eager=True)
+    (
+        staged.repartition(n_tasks, *partition_cols)
+        .sortWithinPartitions(*partition_cols, *order_cols)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
+    delete_paths(spark, drop)
 
 
 def delete_path(spark: SparkSession, path: str) -> bool:
     """Recursively delete `path` through the Hadoop FileSystem API —
     works on any filesystem Spark can write to (local, HDFS, object
-    stores), unlike a driver-local shutil.rmtree. Used by the
-    executing sinks for partitions their rewrite empties entirely
-    (dynamic partition overwrite only replaces partitions PRESENT in
-    the written data, so a partition whose every row was removed
-    must be dropped explicitly). Returns whether anything was
-    deleted."""
+    stores), unlike a driver-local shutil.rmtree. Deletes one path;
+    rewrite_partitions drops its stale leaf dirs in one batch through
+    delete_paths instead. Returns whether anything was deleted."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())

@@ -783,21 +783,11 @@ def stream_export_shards(
     Returns the started StreamingQuery (caller drains/stops — see
     run_to_table for the availableNow test idiom).
     """
-    shard = F.pmod(
-        F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(n_shards)
-    )
-    order = F.xxhash64(F.col(id_col), F.lit(seed + 1))
+    from iceberg_diag_spark.sources.sinks import export_training_shards
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("shard", shard)
-            .withColumn("__ord", order)
-            .repartition(n_shards, F.col("shard"))
-            .sortWithinPartitions("shard", "__ord")
-            .drop("__ord")
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(f"{path}/batch={int(batch_id)}")
+        export_training_shards(
+            batch_df, f"{path}/batch={int(batch_id)}", n_shards, seed, id_col
         )
 
     return _start_foreach_batch(

@@ -20,13 +20,20 @@ from iceberg_diag_spark.plans.registry import REGISTRY
 SF_DIR = "/root/testdata/sf0.001"
 
 
+# Formatted plan string per query name: the two whole-registry sweeps
+# below explain the same entries, so the second reuses the first's.
+_PLANS: dict[str, str] = {}
+
+
 def _plan(spark, name: str) -> str:
-    df = REGISTRY[name].build(spark, SF_DIR)
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
+    if name not in _PLANS:
+        df = REGISTRY[name].build(spark, SF_DIR)
+        _PLANS[name] = df._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"
+            )
         )
-    )
+    return _PLANS[name]
 
 
 def _op_count(plan: str, op: str) -> int:

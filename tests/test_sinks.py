@@ -5,6 +5,9 @@ physical plan, not just row counts.
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import os
 import shutil
 
 import pytest
@@ -218,3 +221,228 @@ def test_export_training_shards_deterministic(spark, tmp_path_factory):
     # a shard directory reads back alone (partition pruning surface)
     one = spark.read.parquet(f"{out1}/shard=3")
     assert 0 < one.count() < n_docs
+
+
+# ---------------------------------------------------------------- #
+# rewrite_partitions: a crash at either step boundary loses no row
+# ---------------------------------------------------------------- #
+
+LAYOUT_SCHEMA = (
+    "row_key string, row_bytes long, file_id long, partition_key string"
+)
+CLUSTER_SCHEMA = "row_key string, v long, file_id long"
+SIG_SCHEMA = "doc_id long, band int, band_key string, ch string, sb long"
+
+
+class _Injected(RuntimeError):
+    pass
+
+
+def _write_layout(df, path, partition_cols, order_col):
+    (
+        df.repartition(4, *partition_cols)
+        .sortWithinPartitions(*partition_cols, order_col)
+        .write.mode("overwrite")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
+
+
+def _compaction_case(spark, root):
+    """Partition 'a' packs 4 files into 2 groups (file_id=2,3 go
+    stale); 'b' is a no-reduction plan and stays untouched."""
+    from iceberg_diag_spark.operators.compaction import compact_apply_binpack
+
+    path = f"{root}/layout"
+    parts = {"a": [[4, 6], [8, 12], [30], [40]], "b": [[25, 25], [60]]}
+    rows = [
+        (f"{pk}|{fid}|{i}", s, fid, pk)
+        for pk, files in parts.items()
+        for fid, sizes in enumerate(files)
+        for i, s in enumerate(sizes)
+    ]
+    _write_layout(
+        spark.createDataFrame(rows, LAYOUT_SCHEMA),
+        path,
+        ("partition_key", "file_id"),
+        "row_key",
+    )
+
+    def run():
+        return compact_apply_binpack(
+            spark,
+            path,
+            read_schema=LAYOUT_SCHEMA,
+            row_size=F.col("row_bytes"),
+            key=F.col("row_key"),
+            order_cols=("row_key",),
+            max_bytes_per_group=45,
+        ).collect()
+
+    def keys():
+        rel = spark.read.schema(LAYOUT_SCHEMA).parquet(path)
+        return {r[0] for r in rel.select("row_key").collect()}
+
+    return path, run, keys
+
+
+def _clustering_case(spark, root):
+    """3 arrival files of 3 rows re-sorted 5 rows per file: 2 files,
+    so file_id=2 goes stale."""
+    from iceberg_diag_spark.operators.compaction import cluster_apply_sorted
+
+    path = f"{root}/layout"
+    files = [[1, 4, 7], [2, 5, 8], [3, 6, 9]]
+    rows = [
+        (f"{fid}|{i}", v, fid)
+        for fid, vs in enumerate(files)
+        for i, v in enumerate(vs)
+    ]
+    _write_layout(
+        spark.createDataFrame(rows, CLUSTER_SCHEMA), path, ("file_id",), "v"
+    )
+
+    def run():
+        return cluster_apply_sorted(
+            spark,
+            path,
+            read_schema=CLUSTER_SCHEMA,
+            value_col="v",
+            key_col="row_key",
+            rows_per_file=5,
+        ).collect()
+
+    def keys():
+        rel = spark.read.schema(CLUSTER_SCHEMA).parquet(path)
+        return {r[0] for r in rel.select("row_key").collect()}
+
+    return path, run, keys
+
+
+def _retraction_case(spark, root):
+    """One release batch: docs 0-9 spread over shards 0-2, docs 20 and
+    21 alone in shards 5 and 6. Retracting 20 and 21 empties both
+    shards, so the rewrite replaces nothing and loses no surviving
+    row while the drop step is still reached. In the signature store
+    doc 20 is alone in sb=5 (dropped) and doc 21 shares sb=1 with
+    the odd docs (rewritten)."""
+    from iceberg_diag_spark.operators import funnel
+
+    rel, sig = f"{root}/rel", f"{root}/sig"
+    docs = list(range(10)) + [20, 21]
+    shard = {**{d: d % 3 for d in range(10)}, 20: 5, 21: 6}
+    sinks.write_assigned_shards(
+        spark.createDataFrame(
+            [("web", d, 10 + d, d // 2, shard[d]) for d in docs],
+            f"{funnel.RELEASE_FILE_SCHEMA}, shard long",
+        ),
+        f"{rel}/batch=0",
+        funnel.RELEASE_N_SHARDS,
+        order_cols=("source", "seq_id", "doc_id"),
+    )
+    sb = {**{d: d % 2 for d in range(10)}, 20: 5, 21: 1}
+    sinks.write_assigned_shards(
+        spark.createDataFrame(
+            [(d, b, f"k{d}.{b}", f"h{d}", sb[d]) for d in docs for b in (0, 1)],
+            SIG_SCHEMA,
+        ),
+        f"{sig}/batch=0",
+        funnel.RECONCILE_SIG_BUCKETS,
+        shard_col="sb",
+        order_cols=("band", "band_key", "doc_id"),
+    )
+    pairs = spark.createDataFrame(
+        [(-1, -1, 0, 20, 4, True), (-1, -1, 0, 21, 4, True)],
+        "batch_a long, doc_a long, batch_b long, doc_b long, "
+        "n_shared_bands long, exact_dup boolean",
+    )
+
+    def run():
+        return funnel.release_retraction_apply(
+            spark, pairs, rel, sig_path=sig
+        ).collect()
+
+    def keys():
+        docs_on_disk = spark.read.parquet(rel).select("doc_id").collect()
+        sigs_on_disk = spark.read.parquet(sig).select("band_key").collect()
+        return {("doc", r[0]) for r in docs_on_disk} | {
+            ("sig", r[0]) for r in sigs_on_disk
+        }
+
+    return rel, run, keys
+
+
+def _leaf_md5s(root: str) -> dict[str, list[str]]:
+    """Leaf dir (relative to root) -> sorted md5s of its data files.
+    File names carry a per-write UUID, so compare contents only."""
+    out: dict[str, list[str]] = {}
+    for p in glob.glob(f"{root}/**/part-*.parquet", recursive=True):
+        with open(p, "rb") as f:
+            digest = hashlib.md5(f.read()).hexdigest()
+        out.setdefault(os.path.relpath(os.path.dirname(p), root), []).append(
+            digest
+        )
+    return {d: sorted(v) for d, v in out.items()}
+
+
+def _inject(monkeypatch, boundary: str, write_root: str) -> None:
+    if boundary == "after_write":
+
+        def failing_delete(*args, **kwargs):
+            raise _Injected("delete step")
+
+        monkeypatch.setattr(sinks, "delete_paths", failing_delete)
+        return
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    orig = DataFrameWriter.parquet
+
+    def failing_write(self, path, *args, **kwargs):
+        if path == write_root or path.startswith(write_root + "/"):
+            raise _Injected("write step")
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
+
+
+_CASES = {
+    "compaction": _compaction_case,
+    "clustering": _clustering_case,
+    "retraction": _retraction_case,
+}
+
+
+@pytest.mark.parametrize("boundary", ["after_write", "at_write"])
+@pytest.mark.parametrize("sink", list(_CASES))
+def test_rewrite_crash_loses_no_row(spark, tmp_path, monkeypatch, sink, boundary):
+    """rewrite_partitions writes before it deletes: a failure at the
+    delete step leaves duplicates, a failure at the write leaves the
+    layout as it was — in both cases every distinct row key is still
+    on disk (key sets, not XOR digests: a duplicate cancels out of an
+    XOR). Compaction and clustering re-runs keep the duplicates; a
+    retraction re-run heals to the uninterrupted result."""
+    root = str(tmp_path / "run")
+    write_root, run, keys = _CASES[sink](spark, root)
+    keys_before, leaves_before = keys(), _leaf_md5s(root)
+
+    _inject(monkeypatch, boundary, write_root)
+    with pytest.raises(_Injected):
+        run()
+    assert keys() == keys_before
+    if boundary == "at_write":
+        assert set(leaves_before) <= set(_leaf_md5s(root))
+
+    if sink == "retraction":
+        monkeypatch.undo()
+        rerun = run()
+        _, clean_run, _ = _CASES[sink](spark, str(tmp_path / "clean"))
+        clean = clean_run()
+        assert _leaf_md5s(root) == _leaf_md5s(str(tmp_path / "clean"))
+
+        def after(ledger):
+            return [
+                {k: v for k, v in r.asDict().items() if k.endswith("_after")}
+                for r in ledger
+            ]
+
+        assert after(rerun) == after(clean)
