@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from iceberg_diag_spark.functions.parallel import ensure_parallelism
 
 # MinHash signature width (h0..h15): the one default every MinHash
-# operator and the funnel's fused signature pass share.
+# operator and the one signature pass (_doc_signatures) share.
 MINHASH_NUM_HASHES = 16
 
 
@@ -118,12 +118,22 @@ def word_ngram_rows(
         F.size("__toks") >= n,
         F.sequence(F.lit(0), F.size("__toks") - n),
     ).otherwise(F.expr("array()"))
-    gram = F.concat_ws(
-        " ", *[F.expr(f"__toks[__i + {k}]") for k in range(n)]
-    )
     return base.select(
         F.col(id_col), "__toks", F.explode(starts).alias("__i")
-    ).select(F.col(id_col), gram.alias("gram"))
+    ).select(F.col(id_col), F.expr(_gram_sql("__i", n)).alias("gram"))
+
+
+def _gram_sql(idx: str, n: int) -> str:
+    """The n-gram starting at token position `idx` of the `__toks`
+    array as ONE SQL expression, concat_ws(' ', __toks[idx + 0], …,
+    __toks[idx + n - 1]) — positional GetArrayItem slices, plain
+    codegen. Shared by every positional shingle builder here.
+
+    ``idx`` is spliced into SQL text unquoted: pass only a trusted
+    internal column identifier, never user input."""
+    return "concat_ws(' ', {})".format(
+        ", ".join(f"__toks[{idx} + {k}]" for k in range(n))
+    )
 
 
 def minhash_signatures_wide(
@@ -174,62 +184,98 @@ def minhash_signatures(
     )
 
 
-def _hash_sig_wide(
+def _doc_signatures(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
+    *,
+    keys: list[Column] | tuple[Column, ...] = (),
+    minhash: bool = True,
+    votes: bool = False,
     num_hashes: int = MINHASH_NUM_HASHES,
     ngram: int = 3,
 ) -> DataFrame:
-    """ONE text scan → (id_col, __ch, h0..h{n-1}): the normalized
-    content hash AND the wide MinHash signature of every document.
-    Fuses the two passes incremental dedup needs (exact-hash tier +
-    LSH-band tier) so each side's text is scanned, normalized and
-    tokenized once instead of once per tier.
+    """The one per-document signature pass: ONE text scan →
+    (id_col, __ch, *keys, [h0..h{n-1}], [simhash]) — the normalized
+    content hash, the wide MinHash signature (`minhash`) and the
+    SimHash fingerprint (`votes`) of every document. `keys` are extra
+    per-doc Columns over `docs` (aliased) that ride through to the
+    output; every exact-hash, banding and SimHash tier in this module
+    and the corpus funnel reads its per-doc state from here.
 
-    Docs with fewer than `ngram` tokens have no shingles; the
-    plain signature pipeline drops them (word_ngram_rows emits
-    nothing), but the hash tier must keep them, so a single sentinel
-    row (__i = -1, NULL gram) rides the explode for those docs: the
-    min-aggregates over its NULL hashes leave h* NULL, which marks
-    the doc gramless (filter h0 IS NOT NULL before banding — NULL
-    never concatenates into a shared band key by accident). The
-    content hash rides the explode as an extra GROUP KEY (constant
-    per doc, so the groups are still exactly one per doc): a
-    min(string) aggregate would give the buffer a variable-width
-    attribute and knock the plan off HashAggregateExec onto a
-    SortAggregate over every gram row, while extra keys keep the
-    buffer all-long (hash agg + map-side partial combine).
-    """
+    Shape: the text is normalized and split once (the content hash,
+    the token array and any key expression over the same split share
+    it through codegen subexpression elimination in the one
+    projection), then ONE explode emits a row per token POSITION
+    (0..size-1). The token at the position feeds the SimHash vote
+    sums; the `ngram`-gram starting there (NULL for the ragged tail)
+    feeds the MinHash min-aggregates. Exploding per position for
+    every mode, rather than per gram start when no votes are asked
+    for, keeps one range and one guard: the ngram−1 extra rows per
+    doc are map-side only, collapsed by the partial aggregate before
+    the exchange, so shuffle rows and bytes do not change.
+
+    Gramless docs (fewer than `ngram` tokens) stay in the output —
+    the exact-hash tier and the funnel's stage counts need every doc:
+    their all-NULL gram hashes leave h* NULL (filter h0 IS NOT NULL
+    before banding, matching minhash_signatures_wide, which never
+    emits them; NULL never concatenates into a shared band key).
+    NULL-text docs ride a single sentinel row (__i = -1); their
+    all-NULL vote sums leave `simhash` NULL — exactly the docs
+    simhash64 never emits — while empty and whitespace-only docs
+    carry a fingerprint (split('') = ['']).
+
+    The content hash and `keys` are constant per doc, so they are
+    GROUP KEYS of the one (id, __ch, *keys) aggregate, never
+    aggregates: groups stay exactly one per doc, and the buffer stays
+    all-long (16 mins + 33 packed vote sums) — a min(string) buffer
+    would knock the plan off HashAggregateExec onto a SortAggregate
+    over every gram row. Per-occurrence votes ARE tf weighting, so
+    the aggregates equal the separate simhash64 and
+    minhash_signatures_wide pipelines doc for doc."""
     norm = normalized_text(F.col(text_col))
-    toks = F.split(norm, " ")
     base = ensure_parallelism(docs).select(
         F.col(id_col),
         F.sha2(norm, 256).alias("__ch"),
-        toks.alias("__toks"),
+        F.split(norm, " ").alias("__toks"),
+        *keys,
     )
+    group = [id_col, "__ch", *base.columns[3:]]
     starts = F.when(
-        F.size("__toks") >= ngram,
-        F.sequence(F.lit(0), F.size("__toks") - ngram),
+        F.size("__toks") >= 1,
+        F.sequence(F.lit(0), F.size("__toks") - 1),
     ).otherwise(F.array(F.lit(-1)))
-    gram_sql = "concat_ws(' ', {})".format(
-        ", ".join(f"__toks[__i + {k}]" for k in range(ngram))
-    )
-    exploded = (
-        base.select(
-            F.col(id_col), "__ch", "__toks", F.explode(starts).alias("__i")
+    rows = base.select(*group, "__toks", F.explode(starts).alias("__i"))
+    shingles, hashes, aggs = [], [], []
+    if minhash:
+        shingles.append(F.expr(
+            f"CASE WHEN __i >= 0 AND __i <= size(__toks) - {ngram}"
+            f" THEN {_gram_sql('__i', ngram)} END"
+        ).alias("gram"))
+        hashes += _md5_halves_exprs("gram", "g1", "g2")
+        aggs += _minhash_agg_exprs(num_hashes)
+    if votes:
+        shingles.append(
+            F.expr("CASE WHEN __i >= 0 THEN __toks[__i] END").alias("tok")
         )
-        .select(
-            F.col(id_col),
-            "__ch",
-            F.expr(
-                f"CASE WHEN __i >= 0 THEN {gram_sql} END"
-            ).alias("gram"),
-        )
-        .select(F.col(id_col), "__ch", *_md5_halves_exprs("gram", "g1", "g2"))
+        hashes += _md5_halves_exprs("tok", "t1", "t2")
+        aggs += _vote_agg_cols("t1", "t2")
+    sigs = (
+        rows.select(*group, *shingles)
+        .select(*group, *hashes)
+        .groupBy(*group)
+        .agg(*aggs)
     )
-    return exploded.groupBy(id_col, "__ch").agg(
-        *_minhash_agg_exprs(num_hashes)
+    if not votes:
+        return sigs
+    # p0 is NULL iff every row's token halves were NULL: the NULL-text
+    # sentinel docs
+    return sigs.select(
+        *group,
+        *([f"h{s}" for s in range(num_hashes)] if minhash else []),
+        F.expr(
+            f"CASE WHEN p0 IS NOT NULL THEN {_fingerprint_sql()} END"
+        ).alias("simhash"),
     )
 
 
@@ -239,34 +285,38 @@ def _fused_wide_and_marks(
     id_col: str = "doc_id",
     num_hashes: int = MINHASH_NUM_HASHES,
     ngram: int = 3,
-) -> tuple[DataFrame, DataFrame]:
-    """(wide signature, exact-dup marks) carved off ONE checkpointed
-    _hash_sig_wide pass — the shared shape of every operator that
-    needs both the MinHash signatures and the (id, __keep) mark
-    relation (candidate banding, the agreement/estimator audits, the
-    tuned-banding chain). `wide` excludes gramless docs exactly as
-    minhash_signatures_wide never emits them; `marked` is the
-    content_rep_marks window over the fused (id, __ch), checkpointed
-    because every consumer reads it at least twice (star + keep)."""
-    fused = _hash_sig_wide(
-        docs, text_col, id_col, num_hashes, ngram
+    votes: bool = False,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(wide signature, exact-dup marks, signatures) carved off ONE
+    checkpointed _doc_signatures pass — the shared shape of every
+    operator that needs both the MinHash signatures and the
+    (id, __keep) mark relation (candidate banding, the
+    agreement/estimator audits, the tuned-banding chain). `wide`
+    excludes gramless docs exactly as minhash_signatures_wide never
+    emits them; `marked` is the content_rep_marks window over the
+    pass's (id, __ch), checkpointed because every consumer reads it
+    at least twice (star + keep); the checkpointed pass itself is
+    returned for callers that also read its `simhash` (`votes`)."""
+    sigs = _doc_signatures(
+        docs, text_col, id_col,
+        votes=votes, num_hashes=num_hashes, ngram=ngram,
     ).localCheckpoint(eager=False)
-    wide = fused.filter(F.col("h0").isNotNull()).select(
+    wide = sigs.filter(F.col("h0").isNotNull()).select(
         F.col(id_col), *[f"h{s}" for s in range(num_hashes)]
     )
-    return wide, _marks_from_ch(fused, id_col)
+    return wide, _marks_from_ch(sigs, id_col), sigs
 
 
-def _marks_from_ch(fused: DataFrame, id_col: str) -> DataFrame:
+def _marks_from_ch(sigs: DataFrame, id_col: str) -> DataFrame:
     """content_rep_marks' (id, __keep) window over an
     already-materialized (id, __ch, ...) relation — the marks half of
-    every fused-pass consumer, checkpointed because star + keep both
-    read it."""
+    every signature-pass consumer, checkpointed because star + keep
+    both read it."""
     from pyspark.sql import Window
 
     w_ch = Window.partitionBy("__ch")
     return (
-        fused.select(id_col, "__ch")
+        sigs.select(id_col, "__ch")
         .select(F.col(id_col), F.min(id_col).over(w_ch).alias("__keep"))
         .localCheckpoint(eager=False)
     )
@@ -393,11 +443,8 @@ def minhash_candidate_pairs(
         # from its enriched checkpoint's content hash) share it,
         # skipping content_rep_marks' own corpus scan + window pass.
         if marked is None and wide is None:
-            # self-derived path: ONE fused text pass (_hash_sig_wide)
-            # yields both the signature (wide) and the content hash
-            # the marks window needs — previously two text scans
-            # (content_rep_marks + the signature pipeline).
-            wide, marked = _fused_wide_and_marks(
+            # self-derived: wide and marks from the one signature pass
+            wide, marked, _ = _fused_wide_and_marks(
                 docs, text_col, id_col, num_hashes, ngram
             )
         elif marked is None:
@@ -451,17 +498,12 @@ def incremental_dedup_status(
 
     Output: (id_col, status) — one row per batch doc.
     """
-    # BOTH tiers' per-doc state (content hash + wide signature) comes
-    # from ONE fused text scan per side (_hash_sig_wide), checkpointed
-    # (~200 B/doc) because each side feeds two consumers (hash probe /
-    # id spine and band keys) and lineage would replay the scan +
-    # shingle explode + min-aggregate per consumer. Before the fusion
-    # each side's text was scanned and normalized twice (hash pass +
-    # signature pass).
-    bs = _hash_sig_wide(batch, text_col, id_col).localCheckpoint(
+    # both tiers per side from the one signature pass, checkpointed:
+    # each side feeds two consumers (hash probe / id spine, band keys)
+    bs = _doc_signatures(batch, text_col, id_col).localCheckpoint(
         eager=False
     )
-    cs = _hash_sig_wide(corpus, text_col, id_col).localCheckpoint(
+    cs = _doc_signatures(corpus, text_col, id_col).localCheckpoint(
         eager=False
     )
     corpus_hashes = cs.select("__ch").distinct()
@@ -485,10 +527,9 @@ def incremental_dedup_status(
         .withColumn("is_near", F.lit(True))
     )
     return (
-        # id spine from the checkpointed fused relation — reading
+        # id spine from the checkpointed signature pass — reading
         # `batch` again here would re-scan the batch text for rows
-        # the fused pass already carries (one per doc, sentinel
-        # included).
+        # the pass already carries (one per doc, gramless included).
         bs.select(id_col)
         .join(exact_ids, id_col, "left")
         .join(near_ids, id_col, "left")
@@ -634,11 +675,8 @@ def _winnow_selected(
     starts = F.when(
         g_last - window + 1 >= 0, F.sequence(F.lit(0), g_last)
     ).otherwise(F.expr("array()"))
-    gram = F.concat_ws(
-        " ", *[F.expr(f"__toks[__j + {k}]") for k in range(n)]
-    )
     gram_hash = F.conv(
-        F.substring(F.md5(gram), 1, 15), 16, 10
+        F.substring(F.md5(F.expr(_gram_sql("__j", n))), 1, 15), 16, 10
     ).cast("long")
     fanout = F.sequence(
         F.greatest(F.col("__j") - window + 1, F.lit(0)),
@@ -933,7 +971,7 @@ def _simhash_from_tokens(toks: DataFrame, key_col: str) -> DataFrame:
 # form costs ~10 py4j round trips per node, and at 49 aggregate
 # buffers + a 64-term fingerprint the driver measurably spent MORE
 # wall-clock constructing the plan than executing it (measured
-# 1.73 s → 0.24 s for the fused pass's construction alone; bench
+# 1.73 s → 0.24 s for the signature pass's construction alone; bench
 # times build+collect, and planning is serial driver work at any
 # scale — guide §7.3).
 _MOD32 = 4294967296
@@ -975,8 +1013,8 @@ def _vote_agg_cols(hi_col: str, lo_col: str) -> list[Column]:
     halves: n_toks + 32 PACKED per-bit counters (bit j of the low
     half in the low 32 bits of packed sum j, bit j of the high half —
     fingerprint bit j+32 — in the high 32). Σ (bit_j + bit_{j+32}·2^32)
-    — branch-free. Shared by _simhash_from_tokens and the fused
-    signature+votes pass so the vote arithmetic lives in one place."""
+    — branch-free. Shared by _simhash_from_tokens and _doc_signatures
+    so the vote arithmetic lives in one place."""
     cols = [F.expr("count(1)").alias("n_toks")]
     for j in range(32):
         cols.append(
@@ -1007,96 +1045,6 @@ def _fingerprint_sql() -> str:
             f" ELSE CAST(0 AS BIGINT) END"
         )
     return " + ".join(terms)
-
-
-def _sig_votes_fused(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = MINHASH_NUM_HASHES,
-    ngram: int = 3,
-    minhash: bool = True,
-) -> DataFrame:
-    """ONE text scan → (id_col, __ch, [h0..h{n-1},] simhash): the
-    normalized content hash, (optionally) the wide MinHash signature,
-    AND the SimHash fingerprint of every document — the _hash_sig_wide
-    fusion extended so the SimHash tier shares the normalize+tokenize
-    scan too (guide §2.4/§6: the corpus text is read, normalized and
-    split exactly once for all tiers).
-
-    One row per token POSITION rides the explode (0..size-1 — every
-    non-NULL text has ≥1 token because split('') is ['']): the token
-    at the position feeds the SimHash vote sums, and the `ngram`-gram
-    STARTING at the position (NULL-guarded for the ragged tail and
-    for sub-shingle docs) feeds the MinHash min-aggregates — NULL
-    gram hashes vanish from min(), so gramless docs surface with h*
-    NULL exactly like _hash_sig_wide's sentinel convention. NULL-text
-    docs ride a single sentinel row (__i = -1): they stay in the
-    lineage for the marks window (content_rep_marks keeps them), but
-    their all-NULL vote sums leave `simhash` NULL — exactly the docs
-    simhash64 never emits (explode of a NULL token array produces no
-    rows), so fingerprint consumers filter simhash IS NOT NULL.
-    Identical aggregate semantics to the separate passes: groups are
-    (id, __ch) — one per doc — and per-occurrence votes ARE tf
-    weighting.
-
-    The content hash rides as an extra GROUP KEY (constant per doc —
-    the _hash_sig_wide rationale: a min(string) aggregate would knock
-    the plan off HashAggregateExec), so the buffer stays all-long:
-    16 mins + 33 packed vote sums."""
-    norm = normalized_text(F.col(text_col))
-    toks = F.split(norm, " ")
-    base = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.sha2(norm, 256).alias("__ch"),
-        toks.alias("__toks"),
-    )
-    starts = F.when(
-        F.size("__toks") >= 1,
-        F.sequence(F.lit(0), F.size("__toks") - 1),
-    ).otherwise(F.array(F.lit(-1)))
-    gram_sql = "concat_ws(' ', {})".format(
-        ", ".join(f"__toks[__i + {k}]" for k in range(ngram))
-    )
-    exploded = (
-        base.select(
-            F.col(id_col),
-            "__ch",
-            "__toks",
-            F.explode(starts).alias("__i"),
-        )
-        .select(
-            F.col(id_col),
-            "__ch",
-            F.expr(
-                f"CASE WHEN __i >= 0 AND __i <= size(__toks) - {ngram}"
-                f" THEN {gram_sql} END"
-            ).alias("gram"),
-            F.expr("CASE WHEN __i >= 0 THEN __toks[__i] END").alias("tok"),
-        )
-        .select(
-            F.col(id_col),
-            "__ch",
-            *(_md5_halves_exprs("gram", "g1", "g2") if minhash else []),
-            *_md5_halves_exprs("tok", "t1", "t2"),
-        )
-    )
-    votes = exploded.groupBy(id_col, "__ch").agg(
-        *(_minhash_agg_exprs(num_hashes) if minhash else []),
-        *_vote_agg_cols("t1", "t2"),
-    )
-    # p0 is NULL iff every row's token halves were NULL — exactly the
-    # NULL-text sentinel docs simhash64 never emits; their simhash
-    # stays NULL so fingerprint consumers can filter them out while
-    # the marks window still sees the doc.
-    return votes.select(
-        F.col(id_col),
-        "__ch",
-        *([f"h{s}" for s in range(num_hashes)] if minhash else []),
-        F.expr(
-            f"CASE WHEN p0 IS NOT NULL THEN {_fingerprint_sql()} END"
-        ).alias("simhash"),
-    )
 
 
 # Plain pigeonhole banding (one band per allowed error + 1) shrinks
@@ -1185,21 +1133,14 @@ def simhash_near_dup(
     # materialized partitions.
     sh = fingerprints
     if collapse_exact and marked is None and sh is None:
-        # Standalone collapse path: ONE fused text scan
-        # (_sig_votes_fused, votes-only) yields both the fingerprints
-        # and the content hash the marks window needs — previously
-        # two full text scans (simhash64 + content_rep_marks). The
-        # content hash rides the token explode as a constant-per-doc
-        # group key (the _hash_sig_wide rationale); the fused relation
-        # is checkpointed because the marks window and the fingerprint
-        # projection both read it.
-        fused = _sig_votes_fused(
-            docs, text_col, id_col, minhash=False
+        # fingerprints and marks from the one signature pass
+        sigs = _doc_signatures(
+            docs, text_col, id_col, minhash=False, votes=True
         ).localCheckpoint(eager=False)
-        marked = _marks_from_ch(fused, id_col)
+        marked = _marks_from_ch(sigs, id_col)
         # NULL simhash = the NULL-text sentinel docs simhash64 never
         # emits (they still reach the marks window above)
-        sh = fused.filter(F.col("simhash").isNotNull()).select(
+        sh = sigs.filter(F.col("simhash").isNotNull()).select(
             F.col(id_col), "simhash"
         )
     if sh is None:
@@ -1210,7 +1151,7 @@ def simhash_near_dup(
         # one across both pair families) skip content_rep_marks'
         # extra corpus scan + window pass — the
         # minhash_candidate_pairs idiom; `fingerprints` likewise lets
-        # it hand over the (id, simhash) relation its fused pass
+        # it hand over the (id, simhash) relation its signature pass
         # already computed, so the SimHash tier shares the
         # normalize+tokenize scan.
         if marked is None:
@@ -1753,12 +1694,7 @@ def ngram_dup_curve(
             F.col("__j") + (n - 1) < F.size("__toks"),
             F.struct(
                 F.lit(n).cast("int").alias("n"),
-                F.md5(
-                    F.concat_ws(
-                        " ",
-                        *[F.expr(f"__toks[__j + {k}]") for k in range(n)],
-                    )
-                ).alias("g"),
+                F.md5(F.expr(_gram_sql("__j", n))).alias("g"),
             ),
         )
         for n in range(1, max_n + 1)
@@ -1915,33 +1851,17 @@ def dedup_method_agreement(
     only_minhash, only_simhash, n_union, overlap_ppm (Jaccard of the
     pair sets).
     """
-    # ONE fused text pass (_sig_votes_fused: content hash + wide
-    # MinHash signature + SimHash fingerprint) feeds the shared
-    # exact-dup mark relation, the MinHash chain's signatures AND the
-    # SimHash tier's fingerprints: before the fusion the operator
-    # paid three text scans (marks, MinHash shingles, SimHash
-    # tokens), then two (cs8 fused marks+signature), now ONE — the
-    # corpus text is read, normalized and tokenized once for both
-    # tiers. The marks window rides the fused checkpoint's (id, __ch)
-    # projection (identical to content_rep_marks, equivalence
-    # pytest-pinned); per-position rows feed the MinHash
-    # min-aggregates (gram at the position) and the SimHash vote
-    # sums (token at the position) in the same grouped aggregate.
-    num_hashes = MINHASH_NUM_HASHES
-    fused = _sig_votes_fused(
-        docs, text_col, id_col, num_hashes=num_hashes
-    ).localCheckpoint(eager=False)
-    wide = fused.filter(F.col("h0").isNotNull()).select(
-        F.col(id_col), *[f"h{s}" for s in range(num_hashes)]
+    # marks, signatures and fingerprints from the one signature pass
+    wide, marked, sigs = _fused_wide_and_marks(
+        docs, text_col, id_col, votes=True
     )
-    marked = _marks_from_ch(fused, id_col)
     mh = minhash_candidate_pairs(
         docs, text_col=text_col, id_col=id_col, marked=marked, wide=wide
     ).select("doc_a", "doc_b", F.lit(1).alias("__mh"))
     sh = simhash_near_dup(
         docs, max_hamming=simhash_max_hamming,
         text_col=text_col, id_col=id_col, marked=marked,
-        fingerprints=fused.filter(F.col("simhash").isNotNull()).select(
+        fingerprints=sigs.filter(F.col("simhash").isNotNull()).select(
             F.col(id_col), "simhash"
         ),
     ).select("doc_a", "doc_b", F.lit(1).alias("__sh"))
@@ -2130,14 +2050,9 @@ def lsh_near_dup_tuned(
 
     Output: (doc_a, doc_b, n_shared_bands, bands, rows_per_band).
     """
-    # ONE fused text pass (_hash_sig_wide: content hash + wide
-    # signature) shared by the advisor's candidate chain and the
-    # tuned key construction below — the signature feeds both (one
-    # row/doc, ~150 B), and the exact-dup mark relation is the window
-    # over the SAME relation's (id, __ch), so the whole operator
-    # scans the corpus once (it previously paid two text scans:
-    # signatures + content_rep_marks).
-    shared_wide, marked = _fused_wide_and_marks(
+    # signature and marks from the one signature pass, shared by the
+    # advisor's candidate chain and the tuned key construction below
+    shared_wide, marked, _ = _fused_wide_and_marks(
         docs, text_col, id_col, num_hashes, ngram
     )
     adv = lsh_param_advisor(
@@ -2324,13 +2239,8 @@ def minhash_estimator_audit(
     # signature feeds the banding chain too (`wide=`): the audit's
     # estimate side needs the signature relation anyway, so the
     # candidate generator must not pay the shingle+hash+min-agg pass
-    # a second time.
-    # the wide signature AND the exact-dup marks come from ONE fused
-    # text pass (_hash_sig_wide) — the banding chain previously
-    # derived its marks from a content_rep_marks scan of its own,
-    # so the operator paid three text scans (signature, marks,
-    # shingles); now two.
-    wide, marked = _fused_wide_and_marks(
+    # a second time. Signature and marks: the one signature pass.
+    wide, marked, _ = _fused_wide_and_marks(
         docs, text_col, id_col, num_hashes, ngram
     )
     pairs = minhash_candidate_pairs(

@@ -7,16 +7,16 @@ not six re-reads.
 
 Composition contract (what this module actually tests, beyond each
 stage's own operator tests): the stages share a single narrow per-doc
-lineage. ONE fused corpus pass computes the enriched projection
-(content hash, quality signals, language pick, token count) AND the
-MinHash signature (the per-doc scalars ride the shingle explode as
-group keys of the signature min-aggregate), localCheckpointed
+lineage. ONE corpus pass — dedup's signature pass
+(`dedup._doc_signatures`), with stratum, token count and the quality
+gate s1 passed as extra per-doc keys — computes the content hash,
+the per-doc scalars AND the MinHash signature, localCheckpointed
 (~200 B/doc, no text); every later stage (dedup window, banding via
 `wide`, near-dup flag join, holdout apportionment + membership, pack
 fold) consumes checkpoints — the corpus is scanned exactly ONCE per
 build (the exact-dup mark relation and the band signatures are both
-carved off the fused checkpoint, not scans of their own) — asserted
-in tests/test_plan_properties.py.
+carved off that checkpoint, not scans of their own) — asserted in
+tests/test_plan_properties.py.
 
 Stage semantics (each stage filters the previous stage's survivors —
 deterministic, no RNG):
@@ -58,7 +58,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from iceberg_diag_spark.functions.parallel import ensure_parallelism
 from iceberg_diag_spark.operators import dedup, packing, sampling, textops
 
 
@@ -68,7 +67,6 @@ def stage_flags(
     text_col: str = "text",
     id_col: str = "doc_id",
     stratum_col: str = "source",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """The funnel's per-doc lineage relation: one row per raw doc with
     (id, stratum, n_tokens, s1..s4) survival flags for stages 1-4 —
@@ -77,93 +75,39 @@ def stage_flags(
     the funnel's stage logic (plan-identical); see the module
     docstring for stage semantics and the one-corpus-scan contract.
     """
-    # checkpoint=False keeps the whole funnel as ONE inspectable plan
-    # (results identical): the plan-property test uses it to count how
-    # many branches would replay the corpus scan if the checkpoints
-    # were ever dropped, pinning the branch structure itself.
-    _ckpt = (
-        (lambda df: df.localCheckpoint(eager=False))
-        if checkpoint
-        else (lambda df: df)
-    )
     q = textops.quality_exprs(text_col)
-    # ONE corpus scan: the enriched per-doc projection AND the MinHash
-    # signature pipeline, fused. The per-doc scalars (stratum, token
-    # count, content hash, s1) ride the shingle explode as GROUP KEYS
-    # (constant per doc, so groups are still exactly one per doc;
-    # extra keys keep the aggregate buffer all-long — a min(string)
-    # buffer would knock the plan off HashAggregateExec onto a
-    # SortAggregate over every gram row). Docs with fewer than `ngram`
-    # tokens have no shingles but MUST stay in the lineage (stage-0
-    # counts every raw doc), so a single sentinel row (__i = -1, NULL
-    # gram) rides the explode for them and its all-NULL mins mark the
-    # doc gramless (h0 IS NULL). Before the fusion the funnel paid a
-    # second full text scan + normalize + split inside the banding
-    # chain; now the banding consumes `wide` below.
-    ngram, num_hashes = 3, dedup.MINHASH_NUM_HASHES
-    norm = dedup.normalized_text(F.col(text_col))
-    base = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.col(stratum_col).alias("stratum"),
-        F.split(norm, " ").alias("__toks"),
-        F.sha2(norm, 256).alias("__ch"),
-        (
-            (q["type_token_ratio"] >= 0.4)
-            & (q["alpha_ratio"] >= 0.6)
-            # "the best language scored a hit" ⟺ "any stopword of any
-            # list is present" — arrays_overlap short-circuits and,
-            # unlike the greatest-of-structs expression, doesn't
-            # defeat codegen subexpression elimination on the shared
-            # token split (the struct form measured 3× slower for the
-            # WHOLE projection; equivalence is pytest-pinned)
-            & F.arrays_overlap(
-                textops.tokens(F.col(text_col)),
-                F.array(*[F.lit(w) for w in textops.ALL_STOPWORDS]),
-            )
-        ).alias("s1"),
-    )
-    starts = F.when(
-        F.size("__toks") >= ngram,
-        F.sequence(F.lit(0), F.size("__toks") - ngram),
-    ).otherwise(F.array(F.lit(-1)))
-    gram = F.when(
-        F.col("__i") >= 0,
-        F.concat_ws(
-            " ", *[F.expr(f"__toks[__i + {k}]") for k in range(ngram)]
-        ),
-    )
-    exploded = (
-        base.select(
-            F.col(id_col),
-            "stratum",
-            F.size("__toks").cast("long").alias("n_tokens"),
-            "__ch",
-            "s1",
-            "__toks",
-            F.explode(starts).alias("__i"),
-        )
-        .select(
-            F.col(id_col), "stratum", "n_tokens", "__ch", "s1",
-            gram.alias("gram"),
-        )
-        .select(
-            F.col(id_col),
-            "stratum",
-            "n_tokens",
-            "__ch",
-            "s1",
-            *dedup._md5_halves_exprs("gram", "g1", "g2"),
-        )
-    )
-    enriched = exploded.groupBy(
-        F.col(id_col), F.col("stratum"), F.col("n_tokens"),
-        F.col("__ch"), F.col("s1"),
-    ).agg(*dedup._minhash_agg_exprs(num_hashes))
-    # the fused (enriched + signature) relation feeds TWO consumers —
-    # the exact-dedup window pass and the banding chain's `wide` —
-    # and its lineage is the corpus scan + explode + aggregate:
-    # checkpoint it (~200 B/doc) or each consumer replays the scan
-    enriched = _ckpt(enriched)
+    num_hashes = dedup.MINHASH_NUM_HASHES
+    # ONE corpus scan: the per-doc scalars ride the signature pass
+    # (dedup._doc_signatures) as group keys next to the content hash
+    # and the MinHash signature. Checkpointed (~200 B/doc) because the
+    # exact-dedup window and the banding chain's `wide` both read it.
+    enriched = dedup._doc_signatures(
+        docs,
+        text_col,
+        id_col,
+        keys=[
+            F.col(stratum_col).alias("stratum"),
+            F.size(textops.tokens(F.col(text_col)))
+            .cast("long")
+            .alias("n_tokens"),
+            (
+                (q["type_token_ratio"] >= 0.4)
+                & (q["alpha_ratio"] >= 0.6)
+                # "the best language scored a hit" ⟺ "any stopword of
+                # any list is present" — arrays_overlap
+                # short-circuits and, unlike the greatest-of-structs
+                # expression, doesn't defeat codegen subexpression
+                # elimination on the shared token split (the struct
+                # form measured 3× slower for the WHOLE projection;
+                # equivalence is pytest-pinned)
+                & F.arrays_overlap(
+                    textops.tokens(F.col(text_col)),
+                    F.array(*[F.lit(w) for w in textops.ALL_STOPWORDS]),
+                )
+            ).alias("s1"),
+        ],
+        num_hashes=num_hashes,
+    ).localCheckpoint(eager=False)
 
     # exact-dedup survivor per content hash, BOTH variants in the one
     # window pass on the uniform 32-byte hash key: the stage-2 keep
@@ -192,7 +136,7 @@ def stage_flags(
     # near-dup flag join, the holdout, and the pack stage: checkpoint
     # it so Catalyst's per-branch lineage replay cannot re-run the
     # window pass once per consumer
-    flagged = _ckpt(flagged)
+    flagged = flagged.localCheckpoint(eager=False)
     marks = flagged.select(id_col, "__keep")
     flagged = flagged.drop("__keep")
 
@@ -204,14 +148,14 @@ def stage_flags(
     # the minimum runs through a larger intermediate). Pairs come
     # from the production banding plan (exact dups pre-collapsed;
     # star pairs connect collapsed members through their
-    # representative). The banding chain consumes the fused
+    # representative). The banding chain consumes the enriched
     # checkpoint's signatures (`wide`) and mark relation (`marked`) —
     # it touches NO text of its own, so the whole funnel build scans
-    # the corpus exactly once (the fused pass above). The min-label
-    # propagation eager-checkpoints its per-round state, so the final
-    # funnel plan consumes only the label checkpoint. Gramless docs
-    # (h0 NULL — the sentinel rows) carry no signature, exactly as
-    # the plain signature pipeline never emits them.
+    # the corpus exactly once (the signature pass above). The
+    # min-label propagation eager-checkpoints its per-round state, so
+    # the final funnel plan consumes only the label checkpoint.
+    # Gramless docs (h0 NULL) carry no signature, exactly as the
+    # plain signature pipeline never emits them.
     wide = enriched.filter(F.col("h0").isNotNull()).select(
         F.col(id_col), *[f"h{s}" for s in range(num_hashes)]
     )
@@ -220,7 +164,6 @@ def stage_flags(
         text_col=text_col,
         id_col=id_col,
         num_hashes=num_hashes,
-        ngram=ngram,
         marked=marks,
         wide=wide,
     )
@@ -242,7 +185,7 @@ def stage_flags(
         "s2",
         (F.col("s2") & F.col("__nd").isNull()).alias("s3"),
     )
-    staged3 = _ckpt(staged3)
+    staged3 = staged3.localCheckpoint(eager=False)
 
     # holdout apportionment over stage-3 survivors (largest-remainder
     # exact quotas, range-sharded membership rank — no single-task
@@ -265,7 +208,7 @@ def stage_flags(
         "s3",
         (F.col("s3") & F.col("__ho").isNull()).alias("s4"),
     )
-    return _ckpt(staged4)
+    return staged4.localCheckpoint(eager=False)
 
 
 def corpus_build_funnel(
@@ -276,7 +219,6 @@ def corpus_build_funnel(
     text_col: str = "text",
     id_col: str = "doc_id",
     stratum_col: str = "source",
-    checkpoint: bool = True,
 ) -> DataFrame:
     staged4 = stage_flags(
         docs,
@@ -284,7 +226,6 @@ def corpus_build_funnel(
         text_col=text_col,
         id_col=id_col,
         stratum_col=stratum_col,
-        checkpoint=checkpoint,
     )
 
     # stages 0-4 in ONE aggregate over the per-doc flag relation,
@@ -362,7 +303,6 @@ def release_assignments(
     text_col: str = "text",
     id_col: str = "doc_id",
     stratum_col: str = "source",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Stage-5 of the funnel, EXECUTED: the per-doc release relation
     (source, shard, doc_id, n_tokens, seq_id) over exactly the
@@ -388,7 +328,6 @@ def release_assignments(
         text_col=text_col,
         id_col=id_col,
         stratum_col=stratum_col,
-        checkpoint=checkpoint,
     )
     train = flags.filter(F.col("s4")).select(
         F.col("stratum").alias("source"),

@@ -37,6 +37,28 @@ def tokens(col: Column) -> Column:
     return F.split(normalized_text(col), " ")
 
 
+def _trigrams(t: Column) -> Column:
+    """Row-local word trigrams of token array `t` (empty below three
+    tokens): a transform over the array, so every repetition signal
+    built on it stays a zero-shuffle projection."""
+    return F.when(
+        F.size(t) >= 3,
+        F.transform(
+            F.sequence(F.lit(1), F.size(t) - 2),
+            lambda i: F.array_join(F.slice(t, i, 3), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def _dup_trigram_frac(t: Column) -> Column:
+    """Duplicate-trigram share of token array `t` (0 when it has no
+    trigrams) — the classifier's repetition feature."""
+    tri = _trigrams(t)
+    return (
+        F.size(tri) - F.size(F.array_distinct(tri))
+    ).cast("double") / F.greatest(F.size(tri), F.lit(1))
+
+
 def bpe_ish_tokens(col: Column) -> Column:
     """A BPE-ish subword proxy: split on whitespace AND on
     letter/digit/punctuation boundaries, the usual pre-tokenization
@@ -93,19 +115,12 @@ def quality_scores(
     transform over the token array, so the whole operator stays a
     zero-shuffle projection."""
     exprs = quality_exprs(text_col)
-    t = tokens(F.col(text_col))
-    trigrams = F.when(
-        F.size(t) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - 2),
-            lambda i: F.array_join(F.slice(t, i, 3), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    tri = _trigrams(tokens(F.col(text_col)))
     return ensure_parallelism(docs).select(
         F.col(id_col),
         *[c.alias(name) for name, c in exprs.items()],
-        F.size(trigrams).cast("long").alias("trigram_count"),
-        (F.size(trigrams) - F.size(F.array_distinct(trigrams)))
+        F.size(tri).cast("long").alias("trigram_count"),
+        (F.size(tri) - F.size(F.array_distinct(tri)))
         .cast("long")
         .alias("dup_trigram_count"),
     )
@@ -863,17 +878,7 @@ def _classifier_z(text_col: str) -> Column:
     by quality_classifier_score and classifier_auc_calibration —
     pure expression extraction, plans identical)."""
     exprs = quality_exprs(text_col)
-    t = tokens(F.col(text_col))
-    trigrams = F.when(
-        F.size(t) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - 2),
-            lambda i: F.array_join(F.slice(t, i, 3), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    dup_frac = (
-        F.size(trigrams) - F.size(F.array_distinct(trigrams))
-    ).cast("double") / F.greatest(F.size(trigrams), F.lit(1))
+    dup_frac = _dup_trigram_frac(tokens(F.col(text_col)))
     w = CLASSIFIER_WEIGHTS
     return (
         F.lit(w["bias"])
@@ -1164,17 +1169,7 @@ def _lr_feature_rows(
     Output: (x1..x5 micro longs, y 0/1, *carry)."""
     q = quality_exprs(text_col)
     best = language_best(text_col)
-    t = tokens(F.col(text_col))
-    trigrams = F.when(
-        F.size(t) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - 2),
-            lambda i: F.array_join(F.slice(t, i, 3), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    dup_frac = (
-        F.size(trigrams) - F.size(F.array_distinct(trigrams))
-    ).cast("double") / F.greatest(F.size(trigrams), F.lit(1))
+    dup_frac = _dup_trigram_frac(tokens(F.col(text_col)))
     gate = (
         (q["type_token_ratio"] >= 0.4)
         & (q["alpha_ratio"] >= 0.6)
@@ -2245,20 +2240,14 @@ def gopher_rules_audit(
     alpha_hits = F.size(F.filter(t, lambda x: x.rlike("[a-z]")))
     panel = F.array(*[F.lit(w) for w in GOPHER_STOP_PANEL])
     panel_hits = F.size(F.array_intersect(t, panel))
-    trigrams = F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(1), n - 2),
-            lambda i: F.array_join(F.slice(t, i, 3), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    dup_tri = F.size(trigrams) - F.size(F.array_distinct(trigrams))
+    tri = _trigrams(t)
+    dup_tri = F.size(tri) - F.size(F.array_distinct(tri))
     rules = {
         "word_count": (n >= 50) & (n <= 100_000),
         "mean_word_len": (sum_len >= 3 * n) & (sum_len <= 10 * n),
         "alpha_words": alpha_hits * 10 >= n * 8,
         "stop_panel": panel_hits >= 2,
-        "dup_trigrams": dup_tri * 10 <= F.size(trigrams) * 3,
+        "dup_trigrams": dup_tri * 10 <= F.size(tri) * 3,
     }
     flagged = ensure_parallelism(docs).select(
         F.col(source_col).alias("source"),

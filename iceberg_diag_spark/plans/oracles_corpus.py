@@ -1095,7 +1095,7 @@ WHERE k.rn <= quota
 
 
 # ------------------------------------------------------------------
-# Round 8: fused corpus-build funnel (the release "dataset card")
+# Fused corpus-build funnel (the release "dataset card")
 # ------------------------------------------------------------------
 
 def _corpus_build_funnel(spark, sf_dir):
@@ -1337,7 +1337,7 @@ def _corpus_release_manifest(spark, sf_dir):
 
 
 # ------------------------------------------------------------------
-# Round 8: token-budget mixing plan with the repeating-data audit
+# Token-budget mixing plan with the repeating-data audit
 # ------------------------------------------------------------------
 
 def _data_mixing_plan(spark, sf_dir):
@@ -1371,7 +1371,7 @@ FROM p
 
 
 # ------------------------------------------------------------------
-# Round 9: mixing-plan executing sampler
+# Mixing-plan executing sampler
 # ------------------------------------------------------------------
 
 def _data_mixing_sample(spark, sf_dir):

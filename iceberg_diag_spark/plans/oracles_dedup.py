@@ -1956,7 +1956,7 @@ LIMIT 100
 """
 
 
-# Round 7b: repetition profile (Gopher filter stats)
+# Repetition profile (Gopher filter stats)
 # --------------------------------------------------------------------
 
 def _doc_repetition_profile(spark, sf_dir):
@@ -2124,7 +2124,7 @@ FROM per_doc GROUP BY source ORDER BY source
 """
 
 
-# Round 8: exact-substring dedup (Lee et al. remove-the-span half)
+# Exact-substring dedup (Lee et al. remove-the-span half)
 # ------------------------------------------------------------------
 
 def _doc_substring_dedup(spark, sf_dir):
@@ -2171,7 +2171,7 @@ FROM cov GROUP BY doc_id
 
 
 # ------------------------------------------------------------------
-# Round 8: per-source two-sample KS drift test on document length
+# Per-source two-sample KS drift test on document length
 # ------------------------------------------------------------------
 
 def _source_length_ks(spark, sf_dir):
@@ -2217,7 +2217,7 @@ FROM agg
 
 
 # ------------------------------------------------------------------
-# Round 8: LSH banding-parameter advisor
+# LSH banding-parameter advisor
 # ------------------------------------------------------------------
 
 def _lsh_param_advisor(spark, sf_dir):
@@ -2276,7 +2276,7 @@ _LSH_PARAM_SQL = _lsh_param_sql()
 
 
 # ------------------------------------------------------------------
-# Round 8: PSI drift of the quality-score distribution
+# PSI drift of the quality-score distribution
 # ------------------------------------------------------------------
 
 def _quality_psi_drift(spark, sf_dir):
@@ -2327,7 +2327,7 @@ FROM s
 
 
 # ------------------------------------------------------------------
-# Round 8: interpolated Kneser-Ney bigram table
+# Interpolated Kneser-Ney bigram table
 # ------------------------------------------------------------------
 
 def _bigram_kneser_ney(spark, sf_dir):
@@ -2374,7 +2374,7 @@ LIMIT 100
 """
 
 
-# Round 9: CCNet loop closed — KN perplexity scoring + source bands
+# CCNet loop closed — KN perplexity scoring + source bands
 # ------------------------------------------------------------------
 
 def _doc_kn_nll(spark, sf_dir):
@@ -2468,7 +2468,7 @@ FROM banded GROUP BY source, band
 
 
 # ------------------------------------------------------------------
-# Round 9: advisor-executing LSH banding (the sorted_rewrite pattern)
+# Advisor-executing LSH banding (the sorted_rewrite pattern)
 # ------------------------------------------------------------------
 
 def _lsh_near_dup_tuned(spark, sf_dir):
@@ -2558,7 +2558,7 @@ FROM allp ap CROSS JOIN pick p
 
 
 # ------------------------------------------------------------------
-# Round 9: iterated BPE trainer (k unrolled merge blocks)
+# Iterated BPE trainer (k unrolled merge blocks)
 # ------------------------------------------------------------------
 
 def _bpe_train_merges(spark, sf_dir):
@@ -2680,7 +2680,7 @@ def _bpe_vocab_coverage(spark, sf_dir):
 
 
 # ------------------------------------------------------------------
-# Round 9: Gopher rule battery, detector confusion, Zipf OLS fit,
+# Gopher rule battery, detector confusion, Zipf OLS fit,
 # SLO burn rate, MinHash estimator calibration
 # ------------------------------------------------------------------
 
@@ -3174,7 +3174,7 @@ FROM bins b, aucf a
 
 
 # ------------------------------------------------------------------
-# Round 9: near-dup source modularity + Holt trend forecast
+# Near-dup source modularity + Holt trend forecast
 # ------------------------------------------------------------------
 
 def _neardup_source_modularity(spark, sf_dir):
@@ -3221,7 +3221,7 @@ FROM deg d LEFT JOIN intra i USING (source) CROSS JOIN mt
 
 
 # ------------------------------------------------------------------
-# Round 10: C4 rule battery
+# C4 rule battery
 # ------------------------------------------------------------------
 
 
@@ -3288,7 +3288,7 @@ FROM per GROUP BY source
 
 
 # ------------------------------------------------------------------
-# Round 10: PR curve + best-F1 operating point
+# PR curve + best-F1 operating point
 # ------------------------------------------------------------------
 
 

@@ -830,7 +830,7 @@ FROM per_file
 
 
 # ------------------------------------------------------------------
-# Round 8: watermark recommendation (batch pick + streaming twin)
+# Watermark recommendation (batch pick + streaming twin)
 # ------------------------------------------------------------------
 
 def _late_tainted_events(ev):
@@ -936,7 +936,7 @@ JOIN adv a ON a.event_type = p.event_type AND a.watermark_us = p.wm
 
 
 # ------------------------------------------------------------------
-# Round 8: MERGE-semantics CDC apply (change feed -> final snapshot)
+# MERGE-semantics CDC apply (change feed -> final snapshot)
 # ------------------------------------------------------------------
 
 def _events_cdc_merge(spark, sf_dir):
@@ -974,7 +974,7 @@ FROM m GROUP BY user_id
 
 
 # ------------------------------------------------------------------
-# Round 8: integer-exact EWMA spike detector on hourly event rates
+# Integer-exact EWMA spike detector on hourly event rates
 # ------------------------------------------------------------------
 
 def _events_ewma_anomalies(spark, sf_dir):
@@ -1015,7 +1015,7 @@ WHERE sp IS NOT NULL AND 1024 * c > 2 * sp AND c >= 5
 
 
 # ------------------------------------------------------------------
-# Round 8: data-contract expectations audit + shuffle-skew advisor
+# Data-contract expectations audit + shuffle-skew advisor
 # ------------------------------------------------------------------
 
 def _events_expectations_audit(spark, sf_dir):
@@ -1111,7 +1111,7 @@ FROM bp, t
 """
 
 # ------------------------------------------------------------------
-# Round 8: DAU/MAU with exact rolling distinct
+# DAU/MAU with exact rolling distinct
 # ------------------------------------------------------------------
 
 def _events_dau_mau(spark, sf_dir):
@@ -1143,7 +1143,7 @@ FROM dau JOIN mau ON mau.day = dau.day
 
 
 # ------------------------------------------------------------------
-# Round 8: in-session ordered conversion funnel
+# In-session ordered conversion funnel
 # ------------------------------------------------------------------
 
 def _session_funnel(spark, sf_dir):
@@ -1211,7 +1211,7 @@ FROM tot t, LATERAL (
 
 
 # ------------------------------------------------------------------
-# Round 8: Markov removal-effect attribution
+# Markov removal-effect attribution
 # ------------------------------------------------------------------
 
 def _markov_attribution(spark, sf_dir):
@@ -1415,7 +1415,7 @@ WHERE f.i = t.n_hours
 
 
 # ------------------------------------------------------------------
-# Round 10: weekly seasonality profile
+# Weekly seasonality profile
 # ------------------------------------------------------------------
 
 

@@ -257,7 +257,7 @@ ORDER BY doc_a, doc_b
 
 
 # ------------------------------------------------------------------
-# Round 8: cross-modal joint dedup (text LSH × media dHash Venn)
+# Cross-modal joint dedup (text LSH × media dHash Venn)
 # ------------------------------------------------------------------
 
 def _crossmodal_dedup_agreement(spark, sf_dir):

@@ -926,7 +926,7 @@ ORDER BY prefix_dim
 
 
 # ------------------------------------------------------------------
-# Round 8: exact relational k-means (one Lloyd refinement iteration)
+# Exact relational k-means (one Lloyd refinement iteration)
 # ------------------------------------------------------------------
 
 def _kmeans_lloyd(spark, sf_dir):
@@ -995,7 +995,7 @@ _KMEANS_LLOYD_SQL = _kmeans_lloyd_sql()
 
 
 # ------------------------------------------------------------------
-# Round 8: product-quantization codebook audit
+# Product-quantization codebook audit
 # ------------------------------------------------------------------
 
 def _pq_codebook_audit(spark, sf_dir):
@@ -1071,7 +1071,7 @@ _PQ_CODEBOOK_SQL = _pq_codebook_sql()
 
 
 # ------------------------------------------------------------------
-# Round 8: integer-exact top principal component (power iteration)
+# Integer-exact top principal component (power iteration)
 # ------------------------------------------------------------------
 
 def _pca_power(spark, sf_dir):
@@ -1165,7 +1165,7 @@ _PCA_POWER_SQL = _pca_sql()
 
 
 # ------------------------------------------------------------------
-# Round 9: Matryoshka truncation audit
+# Matryoshka truncation audit
 # ------------------------------------------------------------------
 
 def _embedding_matryoshka_audit(spark, sf_dir):
@@ -1253,7 +1253,7 @@ _MATRYOSHKA_SQL = _matryoshka_sql()
 
 
 # ------------------------------------------------------------------
-# Round 10: IVF n_probe operating-point sweep
+# IVF n_probe operating-point sweep
 # ------------------------------------------------------------------
 
 

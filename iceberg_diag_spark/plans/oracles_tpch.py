@@ -1375,7 +1375,7 @@ FROM d CROSS JOIN t
 
 
 # ------------------------------------------------------------------
-# Round 8: cohort LTV curves
+# Cohort LTV curves
 # ------------------------------------------------------------------
 
 def _cohort_ltv(spark, sf_dir):
@@ -1417,7 +1417,7 @@ FROM cum JOIN cs USING (m0)
 
 
 # ------------------------------------------------------------------
-# Round 8: Kaplan-Meier return-risk survival over transit time
+# Kaplan-Meier return-risk survival over transit time
 # ------------------------------------------------------------------
 
 def _return_survival(spark, sf_dir):

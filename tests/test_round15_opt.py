@@ -101,51 +101,6 @@ def test_candidate_pairs_with_shared_marks_identical(spark):
     assert base  # non-trivial fixture
 
 
-def test_fused_hash_sig_matches_plain_pipelines(spark):
-    """The fused one-scan (content hash + wide signature) relation —
-    the shape stage_flags and incremental_dedup_status now build —
-    matches the plain two-pass pipelines exactly: __ch equals the
-    sha2-of-normalized-text projection for EVERY doc (short/empty/null
-    text included), and the h* columns equal minhash_signatures_wide
-    for every doc that has shingles, with h0 NULL marking exactly the
-    gramless docs the plain signature pipeline never emits."""
-    docs = load_table(spark, SF_DIR, "documents")
-    # inject the edge cases the fixture lacks: empty, 2-token (< ngram)
-    # and NULL text
-    max_id = docs.agg(F.max("doc_id")).collect()[0][0]
-    edges = spark.createDataFrame(
-        [(max_id + 1, ""), (max_id + 2, "two tokens"), (max_id + 3, None)],
-        "doc_id long, text string",
-    )
-    all_docs = docs.select("doc_id", "text").unionByName(edges)
-
-    fused = dedup._hash_sig_wide(all_docs)
-    got_ch = {r["doc_id"]: r["__ch"] for r in fused.collect()}
-    exp_ch = {
-        r.doc_id: r.ch
-        for r in all_docs.select(
-            "doc_id",
-            F.sha2(dedup.normalized_text(F.col("text")), 256).alias("ch"),
-        ).collect()
-    }
-    assert got_ch == exp_ch  # every doc present, hashes identical
-
-    hcols = [f"h{s}" for s in range(16)]
-    got_sig = {
-        r.doc_id: tuple(r[h] for h in hcols)
-        for r in fused.filter(F.col("h0").isNotNull()).collect()
-    }
-    exp_sig = {
-        r.doc_id: tuple(r[h] for h in hcols)
-        for r in dedup.minhash_signatures_wide(all_docs).collect()
-    }
-    assert got_sig == exp_sig
-    # the gramless sentinel set is exactly the docs the plain
-    # pipeline dropped
-    gramless = {d for d in got_ch if d not in exp_sig}
-    assert {max_id + 1, max_id + 2, max_id + 3} <= gramless
-
-
 def test_stage_flags_fused_wide_feeds_identical_pairs(spark):
     """The funnel's fused-checkpoint band signatures produce the same
     stage-3 collapse as a from-first-principles rebuild: CC over the
