@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import argparse
 import sys
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -133,16 +134,15 @@ def _render_maintenance(files_df, title: str) -> str:
     return "\n".join(out)
 
 
-def _diagnose(
-    spark: SparkSession,
-    files_df,
-    manifest_count: int,
-    title: str,
-    maintenance: bool = False,
-) -> None:
-    print(_render_panel(files_df, manifest_count, title))
+def _report(
+    files_df, manifest_count: int, title: str, maintenance: bool
+) -> Iterator[str]:
+    """One table's report: its panel, then the maintenance panels when
+    asked, each yielded as soon as it is rendered so a caller can print
+    the panel before the maintenance scans run."""
+    yield _render_panel(files_df, manifest_count, title)
     if maintenance:
-        print(_render_maintenance(files_df, title))
+        yield _render_maintenance(files_df, title)
 
 
 def stream_panels(jobs: dict):
@@ -191,13 +191,13 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
 
     try:
         if args.files:
-            _diagnose(
-                spark,
+            for part in _report(
                 spark.read.parquet(args.files),
                 args.manifest_count,
                 args.files,
-                maintenance=args.maintenance,
-            )
+                args.maintenance,
+            ):
+                print(part)
         elif args.database and args.table_name:
             tables = [
                 r.table_name
@@ -221,14 +221,9 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                     manifests = spark.table(
                         f"{args.database}.{t}.manifests"
                     ).count()
-                    panel = _render_panel(
-                        files, manifests, f"{args.database}.{t}"
-                    )
-                    if args.maintenance:
-                        panel += "\n" + _render_maintenance(
-                            files, f"{args.database}.{t}"
-                        )
-                    return panel
+                    return "\n".join(_report(
+                        files, manifests, f"{args.database}.{t}", args.maintenance
+                    ))
 
                 return run
 

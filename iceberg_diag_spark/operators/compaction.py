@@ -54,6 +54,7 @@ from iceberg_diag_spark.functions.cost import (
     MAX_GROUP_BYTE_SIZE,
     read_file_cost,
 )
+from iceberg_diag_spark.functions.parallel import materialize
 from iceberg_diag_spark.operators.binpack import pack_group_bounds
 from iceberg_diag_spark.operators.sampling import membership_checksums
 from iceberg_diag_spark.sources.sinks import rewrite_partitions
@@ -310,7 +311,7 @@ def compact_apply_binpack(
 
     # ONE scan: per-file stats + per-partition digests. Eager — every
     # downstream decision must not re-read files the rewrite replaces.
-    per_file = _file_stats(pre).localCheckpoint(eager=True)
+    per_file = materialize(_file_stats(pre), eager=True)
     if file_sizes is not None:
         meta = file_sizes.select(
             partition_col, file_col, F.col("size_in_bytes").alias("fsz")
@@ -335,9 +336,9 @@ def compact_apply_binpack(
                     f"({r[partition_col]}, {r[file_col]})" for r in uncovered
                 )
             )
-        sized = per_file.join(
+        sized = materialize(per_file.join(
             meta, [partition_col, file_col]
-        ).localCheckpoint(eager=True)
+        ), eager=True)
     else:
         sized = per_file.withColumn("fsz", F.col("row_bytes"))
 
@@ -353,7 +354,7 @@ def compact_apply_binpack(
     per_group = withg.groupBy(partition_col, "gid").agg(
         F.sum("fsz").alias("gsz")
     )
-    plan = (
+    plan = materialize(
         withg.groupBy(partition_col)
         .agg(
             F.count(F.lit(1)).cast("long").alias("files_before"),
@@ -374,8 +375,8 @@ def compact_apply_binpack(
                 .alias("scan_overhead_planned")
             ),
             partition_col,
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
 
     # Decision rows: metadata-bounded collect (#partitions), the
@@ -579,7 +580,7 @@ def cluster_apply_sorted(
 
     # ONE metadata pre-pass over the input (bounds + digests), eager:
     # the rewrite below replaces every file it was computed from.
-    bef_files = _per_file(pre).localCheckpoint(eager=True)
+    bef_files = materialize(_per_file(pre), eager=True)
     bef = _sweep(bef_files).join(
         bef_files.agg(
             F.sum("n_rows").cast("long").alias("rows_before"),
@@ -588,13 +589,12 @@ def cluster_apply_sorted(
         "_k",
     )
 
-    # Per-value counts: ONE data scan; drives both the prediction and
-    # the ranking, so it is computed once and checkpointed.
-    vals = (
+    # per-value counts: two consumers (prediction, ranking)
+    vals = materialize(
         pre.groupBy(F.col(value_col).alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("k"))
-        .select(F.lit("v").alias("col_name"), "v", "k")
-        .localCheckpoint(eager=True)
+        .select(F.lit("v").alias("col_name"), "v", "k"),
+        eager=True,
     )
     planned = sorted_after_stats(vals, m).select(
         F.lit(1).alias("_k"),
@@ -647,13 +647,11 @@ def cluster_apply_sorted(
         ],
     )
 
-    # Measured after-state: entirely from the written files. The
-    # per-file stats feed both the sweep and the total/digest
-    # aggregate — checkpoint the file-count-scale relation so the
-    # written layout is re-read once, not once per consumer.
-    post_files = _per_file(
+    # Measured after-state: entirely from the written files. Two
+    # consumers (the sweep, the total/digest aggregate).
+    post_files = materialize(_per_file(
         spark.read.schema(read_schema).parquet(path)
-    ).localCheckpoint(eager=False)
+    ))
     aft = _sweep(post_files).join(
         post_files.agg(
             F.sum("n_rows").cast("long").alias("rows_after"),

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from iceberg_diag_spark.functions.parallel import ensure_parallelism
+from iceberg_diag_spark.functions.parallel import ensure_parallelism, materialize
 
 # MinHash signature width (h0..h15): the one default every MinHash
 # operator and the one signature pass (_doc_signatures) share.
@@ -77,7 +77,7 @@ def content_rep_marks(
     sharing that hash (its exact-dup representative; __keep == id
     for survivors). One projection (text → 32-byte hash, zero text
     movement) + one window shuffle on the uniform hash key, then
-    localCheckpointed (~48 B/doc) because every consumer reads it at
+    materialized (~48 B/doc) because every consumer reads it at
     least twice (rep filter + star edges)."""
     from pyspark.sql import Window
 
@@ -85,9 +85,9 @@ def content_rep_marks(
         F.col(id_col),
         F.sha2(normalized_text(F.col(text_col)), 256).alias("__ch"),
     )
-    return hashed.withColumn(
+    return materialize(hashed.withColumn(
         "__keep", F.min(id_col).over(Window.partitionBy("__ch"))
-    ).localCheckpoint()
+    ), eager=True)
 
 
 def word_ngram_rows(
@@ -297,10 +297,10 @@ def _fused_wide_and_marks(
     pass's (id, __ch), checkpointed because every consumer reads it
     at least twice (star + keep); the checkpointed pass itself is
     returned for callers that also read its `simhash` (`votes`)."""
-    sigs = _doc_signatures(
+    sigs = materialize(_doc_signatures(
         docs, text_col, id_col,
         votes=votes, num_hashes=num_hashes, ngram=ngram,
-    ).localCheckpoint(eager=False)
+    ))
     wide = sigs.filter(F.col("h0").isNotNull()).select(
         F.col(id_col), *[f"h{s}" for s in range(num_hashes)]
     )
@@ -315,10 +315,9 @@ def _marks_from_ch(sigs: DataFrame, id_col: str) -> DataFrame:
     from pyspark.sql import Window
 
     w_ch = Window.partitionBy("__ch")
-    return (
+    return materialize(
         sigs.select(id_col, "__ch")
         .select(F.col(id_col), F.min(id_col).over(w_ch).alias("__keep"))
-        .localCheckpoint(eager=False)
     )
 
 
@@ -498,14 +497,9 @@ def incremental_dedup_status(
 
     Output: (id_col, status) — one row per batch doc.
     """
-    # both tiers per side from the one signature pass, checkpointed:
-    # each side feeds two consumers (hash probe / id spine, band keys)
-    bs = _doc_signatures(batch, text_col, id_col).localCheckpoint(
-        eager=False
-    )
-    cs = _doc_signatures(corpus, text_col, id_col).localCheckpoint(
-        eager=False
-    )
+    # two consumers per side (hash probe / id spine, band keys)
+    bs = materialize(_doc_signatures(batch, text_col, id_col))
+    cs = materialize(_doc_signatures(corpus, text_col, id_col))
     corpus_hashes = cs.select("__ch").distinct()
     exact_ids = (
         bs.select(id_col, "__ch")
@@ -727,15 +721,9 @@ def winnow_clone_pairs(
 
     Output: (doc_a, doc_b, shared_fps), doc_a < doc_b.
     """
-    # The (id, fp) relation feeds THREE consumers (the posting-list
-    # stop-list count and both join sides) and Catalyst replays the
-    # whole winnow stage (token explode + window-min aggregate — the
-    # expensive part) once per consumer without materialization:
-    # the final plan read 4 parquet scans / 36 exchanges unchecked,
-    # 0 / 12 with the checkpoint. ~16 B/row, far cheaper than one
-    # replay.
+    # three consumers (the posting-list stop-list count, both join sides)
     sel = _winnow_selected(docs, text_col, id_col, n, window)
-    sel = sel.localCheckpoint(eager=False)
+    sel = materialize(sel)
     rare = (
         sel.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("__nd"))
@@ -772,7 +760,7 @@ def connected_components(
     min of its own label and its neighbors' labels; converges in
     O(graph diameter) rounds — near-dup clusters are shallow (stars /
     short chains), so a handful of rounds suffices. Each round is one
-    join + one aggregate; `localCheckpoint(eager)` truncates the plan
+    join + one aggregate; an eager `materialize` truncates the plan
     lineage so round N's plan doesn't embed rounds 1..N-1 (the
     classic iterative-algorithm pattern on Spark — without it the
     optimizer re-plans an exponentially growing tree).
@@ -792,12 +780,12 @@ def connected_components(
     rounds, so hitting the cap signals a pathological input.
     """
     both = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    both = both.unionByName(
+    both = materialize(both.unionByName(
         both.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    labels = nodes.select(
+    ), eager=True)
+    labels = materialize(nodes.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("label")
-    ).localCheckpoint(eager=True)
+    ), eager=True)
     converged = False
     for _ in range(max_iter):
         neigh = both.join(
@@ -805,15 +793,15 @@ def connected_components(
         ).select(
             F.col("src").alias("node"), "label", F.lit(False).alias("__own")
         )
-        rolled = (
+        rolled = materialize(
             labels.withColumn("__own", F.lit(True))
             .unionByName(neigh)
             .groupBy("node")
             .agg(
                 F.min("label").alias("label"),
                 F.min(F.when(F.col("__own"), F.col("label"))).alias("__old"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         changed = rolled.filter(F.col("label") != F.col("__old")).count()
         labels = rolled.select("node", "label")
@@ -859,10 +847,8 @@ def ngram_jaccard_pairs(
     shingled = word_ngram_rows(docs, text_col, id_col, ngram).select(
         F.col(id_col).alias("__doc"), "gram"
     )
-    # `candidates` is consumed twice (member explode + sentinel) and
-    # its lineage is typically the whole banding chain — checkpoint
-    # the bounded pair-scale relation so the chain runs once.
-    candidates = candidates.localCheckpoint(eager=False)
+    # two consumers (member explode, sentinel)
+    candidates = materialize(candidates)
     members = candidates.select(
         "doc_a", "doc_b", F.explode(F.array("doc_a", "doc_b")).alias("__doc")
     )
@@ -1127,16 +1113,16 @@ def simhash_near_dup(
     # sides, and Catalyst does not share a common subtree between
     # different projections — without materialization the whole
     # fingerprint pass (explode + md5 + 64 vote sums, the expensive
-    # half of this operator) runs TWICE. localCheckpoint pins the
+    # half of this operator) runs TWICE. materialize pins the
     # tiny (id, simhash) relation (16 bytes/doc — ~2.4 GB cluster-wide
     # at 100M docs) and truncates the lineage so each side reads the
     # materialized partitions.
     sh = fingerprints
     if collapse_exact and marked is None and sh is None:
         # fingerprints and marks from the one signature pass
-        sigs = _doc_signatures(
+        sigs = materialize(_doc_signatures(
             docs, text_col, id_col, minhash=False, votes=True
-        ).localCheckpoint(eager=False)
+        ))
         marked = _marks_from_ch(sigs, id_col)
         # NULL simhash = the NULL-text sentinel docs simhash64 never
         # emits (they still reach the marks window above)
@@ -1163,7 +1149,7 @@ def simhash_near_dup(
             F.col(id_col) == F.col("__keep")
         ).select(id_col)
         sh = sh.join(keep_ids, id_col, "semi")
-    sh = sh.localCheckpoint()
+    sh = materialize(sh, eager=True)
 
     # Banding expressions are emitted as parsed SQL strings (ONE
     # py4j round trip each) — the column-builder loops here cost
@@ -1416,11 +1402,8 @@ def ngram_containment_pairs(
     shingled = word_ngram_rows(docs, text_col, id_col, ngram).select(
         F.col(id_col).alias("__doc"), "gram"
     )
-    # `candidates` is consumed twice (member explode + the NULL-gram
-    # sentinel) and its lineage is typically the whole banding chain
-    # — checkpoint the bounded pair-scale relation so the chain runs
-    # once (the ngram_jaccard_pairs discipline).
-    candidates = candidates.localCheckpoint(eager=False)
+    # two consumers (member explode, NULL-gram sentinel)
+    candidates = materialize(candidates)
     members = candidates.select(
         "doc_a", "doc_b", F.explode(F.array("doc_a", "doc_b")).alias("__doc")
     )
@@ -1770,7 +1753,7 @@ def clone_pairs_verified(
     cand = winnow_clone_pairs(
         docs, text_col=text_col, id_col=id_col,
     ).filter(F.col("shared_fps") >= min_shared_fps)
-    cand = cand.localCheckpoint(eager=False)
+    cand = materialize(cand)
     if max_pairs_per_doc is not None:
         hot = (
             cand.select(F.col("doc_a").alias("__d"))
@@ -1794,13 +1777,10 @@ def clone_pairs_verified(
         .unionAll(cand.select(F.col("doc_b").alias(id_col)))
         .distinct()
     )
-    # Both text join sides (ta, tb) derive from this pruned relation;
-    # without materialization each side replays the corpus scan +
-    # semi-join. It holds only the docs that appear in a candidate
-    # pair — pair-bounded, not corpus-bounded.
-    norm = docs.join(F.broadcast(pair_ids), id_col, "semi").select(
+    # two consumers (ta, tb); pair-bounded, not corpus-bounded
+    norm = materialize(docs.join(F.broadcast(pair_ids), id_col, "semi").select(
         F.col(id_col), normalized_text(F.col(text_col)).alias("__nt")
-    ).localCheckpoint(eager=False)
+    ))
     ta = norm.select(
         F.col(id_col).alias("doc_a"), F.col("__nt").alias("__ta")
     )
@@ -2058,10 +2038,8 @@ def lsh_near_dup_tuned(
     adv = lsh_param_advisor(
         docs, text_col, id_col, wide=shared_wide, marked=marked
     )
-    # the 1-row pick is broadcast to three consumers; checkpoint it so
-    # each does NOT replay the advisor's full histogram chain (the
-    # no-cross-branch-reuse gotcha — 3x the advisor cost unchecked)
-    pick = (
+    # three consumers of the 1-row pick
+    pick = materialize(
         adv.orderBy(
             F.expr(f"catch_at_70_ppm >= {recall_floor_ppm}").desc(),
             F.expr(
@@ -2072,7 +2050,6 @@ def lsh_near_dup_tuned(
         )
         .limit(1)
         .select("bands", "rows_per_band")
-        .localCheckpoint(eager=False)
     )
 
     # the shared mark relation, consumed by star AND keep filter
@@ -2243,10 +2220,10 @@ def minhash_estimator_audit(
     wide, marked, _ = _fused_wide_and_marks(
         docs, text_col, id_col, num_hashes, ngram
     )
-    pairs = minhash_candidate_pairs(
+    pairs = materialize(minhash_candidate_pairs(
         docs, text_col, id_col, num_hashes, bands=4, ngram=ngram,
         wide=wide, marked=marked,
-    ).localCheckpoint(eager=False)
+    ))
     wa = wide.select(
         F.col(id_col).alias("doc_a"),
         *[F.col(f"h{s}").alias(f"a{s}") for s in range(num_hashes)],
@@ -2280,10 +2257,9 @@ def minhash_estimator_audit(
             .alias("est_jaccard_ppm"),
         )
     )
-    grams = (
+    grams = materialize(
         word_ngram_rows(docs, text_col, id_col, ngram)
         .distinct()
-        .localCheckpoint(eager=False)
     )
     sizes = grams.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_grams")

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from iceberg_diag_spark.functions.parallel import ensure_parallelism, materialize
+
 SESSION_GAP_MINUTES = 30
 
 
@@ -301,19 +303,16 @@ def _lateness(events: DataFrame, n_shards: int = 32) -> DataFrame:
     broadcast-prefix formulation). Output columns: event_id,
     event_type, ts_us, lateness_us."""
     ts_us = F.unix_micros(F.col("ts"))
-    # ~26 B/event narrow projection with THREE consumers (the
-    # percentile edges, the running-max path, the per-shard max) —
-    # pin it so the scan runs once, and pin the sharded relation too
-    # (two consumers of the crossJoin + shard-assignment fold): the
-    # global_rank/grouped_prefix_sum input discipline.
-    base = events.select(
+    # three consumers (percentile edges, running max, per-shard max);
+    # `sharded` below has two
+    base = materialize(events.select(
         F.col("event_id"), F.col("event_type"), ts_us.alias("ts_us")
-    ).localCheckpoint(eager=False)
+    ))
     probs = [i / n_shards for i in range(1, n_shards)]
     edges = base.agg(
         F.percentile_approx("event_id", probs, 10_000).alias("__edges")
     )
-    sharded = (
+    sharded = materialize(
         base.crossJoin(F.broadcast(edges))
         .withColumn(
             "__shard",
@@ -325,7 +324,6 @@ def _lateness(events: DataFrame, n_shards: int = 32) -> DataFrame:
             ),
         )
         .drop("__edges")
-        .localCheckpoint(eager=False)
     )
     w_run = (
         Window.partitionBy("__shard")
@@ -658,11 +656,8 @@ def hourly_trend(events: DataFrame) -> DataFrame:
         (F.unix_micros(F.date_trunc("hour", F.col("ts")))
          / F.lit(3_600_000_000)).cast("long").alias("h"),
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    # hours feeds the span AND the dense series — pin the
-    # series-scale (types × hours) aggregate so the corpus pass
-    # runs once, not per consumer (measured -21/-23% here,
-    # r15 ab8)
-    hours = hours.localCheckpoint(eager=False)
+    # two consumers (span, dense series)
+    hours = materialize(hours)
     span = hours.groupBy("event_type").agg(
         F.min("h").alias("lo"), F.max("h").alias("hi")
     )
@@ -737,11 +732,8 @@ def changepoint_detect(events: DataFrame) -> DataFrame:
         (F.unix_micros(F.date_trunc("hour", F.col("ts")))
          / F.lit(3_600_000_000)).cast("long").alias("h"),
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    # hours feeds the span AND the dense series — pin the
-    # series-scale (types × hours) aggregate so the corpus pass
-    # runs once, not per consumer (measured -21/-23% here,
-    # r15 ab8)
-    hours = hours.localCheckpoint(eager=False)
+    # two consumers (span, dense series)
+    hours = materialize(hours)
     span = hours.groupBy("event_type").agg(
         F.min("h").alias("lo"), F.max("h").alias("hi")
     )
@@ -900,8 +892,6 @@ def seasonal_naive_eval(
     """
     from pyspark.sql.window import Window
 
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
-
     monthly = (
         ensure_parallelism(orders)
         .select(
@@ -976,8 +966,6 @@ def gdpr_delete_simulation(
     rows_rewritten, write_amplification_ppm (rewritten per deleted,
     ×1e6; 0 when nothing deletes).
     """
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
-
     per_file = (
         ensure_parallelism(events)
         .select(
@@ -1855,12 +1843,12 @@ def seasonality_from_hourly(rollup: DataFrame) -> DataFrame:
     """Weekly-cell profile over an (event_type, hour_epoch, n) hourly
     rollup (see seasonality_profile for semantics; the rollup is
     metadata-scale, so everything here is bounded)."""
-    hourly = rollup.select(
+    hourly = materialize(rollup.select(
         "event_type",
         "n",
         F.expr("(hour_epoch div 24 + 4) % 7").cast("long").alias("dow"),
         F.expr("hour_epoch % 24").cast("long").alias("hod"),
-    ).localCheckpoint(eager=False)  # cell stats + outlier consumers
+    ))  # cell stats + outlier consumers
     cells = hourly.groupBy("event_type", "dow", "hod").agg(
         F.count(F.lit(1)).cast("long").alias("cell_hours"),
         F.sum("n").cast("long").alias("cell_total"),

@@ -10,7 +10,7 @@ stage's own operator tests): the stages share a single narrow per-doc
 lineage. ONE corpus pass — dedup's signature pass
 (`dedup._doc_signatures`), with stratum, token count and the quality
 gate s1 passed as extra per-doc keys — computes the content hash,
-the per-doc scalars AND the MinHash signature, localCheckpointed
+the per-doc scalars AND the MinHash signature, materialized
 (~200 B/doc, no text); every later stage (dedup window, banding via
 `wide`, near-dup flag join, holdout apportionment + membership, pack
 fold) consumes checkpoints — the corpus is scanned exactly ONCE per
@@ -58,6 +58,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from iceberg_diag_spark.functions.parallel import materialize
 from iceberg_diag_spark.operators import dedup, packing, sampling, textops
 
 
@@ -78,10 +79,9 @@ def stage_flags(
     q = textops.quality_exprs(text_col)
     num_hashes = dedup.MINHASH_NUM_HASHES
     # ONE corpus scan: the per-doc scalars ride the signature pass
-    # (dedup._doc_signatures) as group keys next to the content hash
-    # and the MinHash signature. Checkpointed (~200 B/doc) because the
-    # exact-dedup window and the banding chain's `wide` both read it.
-    enriched = dedup._doc_signatures(
+    # (dedup._doc_signatures) as group keys. Two consumers (the
+    # exact-dedup window, the banding chain's `wide`).
+    enriched = materialize(dedup._doc_signatures(
         docs,
         text_col,
         id_col,
@@ -107,7 +107,7 @@ def stage_flags(
             ).alias("s1"),
         ],
         num_hashes=num_hashes,
-    ).localCheckpoint(eager=False)
+    ))
 
     # exact-dedup survivor per content hash, BOTH variants in the one
     # window pass on the uniform 32-byte hash key: the stage-2 keep
@@ -132,11 +132,8 @@ def stage_flags(
         ).alias("s2"),
         F.min(id_col).over(w_ch).alias("__keep"),
     )
-    # narrow per-doc lineage (~60 B/doc, no text) shared by the
-    # near-dup flag join, the holdout, and the pack stage: checkpoint
-    # it so Catalyst's per-branch lineage replay cannot re-run the
-    # window pass once per consumer
-    flagged = flagged.localCheckpoint(eager=False)
+    # three consumers (near-dup flag join, holdout, pack stage)
+    flagged = materialize(flagged)
     marks = flagged.select(id_col, "__keep")
     flagged = flagged.drop("__keep")
 
@@ -185,7 +182,7 @@ def stage_flags(
         "s2",
         (F.col("s2") & F.col("__nd").isNull()).alias("s3"),
     )
-    staged3 = staged3.localCheckpoint(eager=False)
+    staged3 = materialize(staged3)
 
     # holdout apportionment over stage-3 survivors (largest-remainder
     # exact quotas, range-sharded membership rank — no single-task
@@ -208,7 +205,7 @@ def stage_flags(
         "s3",
         (F.col("s3") & F.col("__ho").isNull()).alias("s4"),
     )
-    return staged4.localCheckpoint(eager=False)
+    return materialize(staged4)
 
 
 def corpus_build_funnel(
@@ -649,10 +646,9 @@ def release_neardup_reconcile(
             .filter(F.col("batch") == b)
             .select("doc_id")
         )
-        surv = (
+        surv = materialize(
             docs_b.join(released, "doc_id", "semi")
             .select("doc_id", text_col)
-            .localCheckpoint(eager=False)
         )
         wide = dedup.minhash_signatures_wide(
             surv, text_col=text_col, num_hashes=num_hashes, ngram=ngram
@@ -853,15 +849,15 @@ def release_retraction_apply(
         )
     if min_shared_bands < 1:
         raise ValueError("min_shared_bands must be >= 1")
-    retract = (
+    retract = materialize(
         pairs.filter(F.col("n_shared_bands") >= min_shared_bands)
         .select(
             F.col("batch_b").cast("long").alias("batch"),
             F.col("doc_b").cast("long").alias("doc_id"),
         )
         .distinct()
-        .withColumn("_rt", F.lit(True))
-        .localCheckpoint(eager=True)
+        .withColumn("_rt", F.lit(True)),
+        eager=True,
     )
     full_schema = f"{RELEASE_FILE_SCHEMA}, shard long, batch long"
     pre = spark.read.schema(full_schema).parquet(release_path)
@@ -873,7 +869,7 @@ def release_retraction_apply(
     # batch digests, per-shard seq counts sum, because shards
     # partition the key space). Eagerly materialized BEFORE any file
     # is touched.
-    grp = (
+    grp = materialize(
         pre.join(retract, ["batch", "doc_id"], "left")
         .groupBy("batch", "shard")
         .agg(
@@ -890,8 +886,8 @@ def release_retraction_apply(
             F.sum(F.when(F.col("_rt"), F.col("n_tokens")).otherwise(0))
             .cast("long")
             .alias("tokens_retracted"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     # Partition-granularity decision rows: bounded by
     # #batches x n_shards regardless of corpus size.

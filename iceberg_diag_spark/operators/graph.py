@@ -3,7 +3,7 @@
 Connected components lives in operators/dedup.py (min-label
 propagation); this module adds PageRank — the second iterative shape:
 a fixed number of synchronous rounds, each one join + one aggregate,
-with `localCheckpoint` truncating lineage so round N's plan does not
+with `materialize` truncating lineage so round N's plan does not
 embed rounds 1..N-1.
 
 Scale posture: state per round is one (node, rank) row per node and
@@ -16,6 +16,8 @@ SQL and the job count bounded.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from iceberg_diag_spark.functions.parallel import materialize
 
 
 def pagerank(
@@ -38,15 +40,11 @@ def pagerank(
     (id_col, pagerank) with rank rounded to 9 decimals.
     """
     both = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    both = both.unionByName(
+    both = materialize(both.unionByName(
         both.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    deg = both.groupBy("src").agg(F.count("*").alias("deg")).localCheckpoint(
-        eager=True
-    )
-    node_ids = nodes.select(F.col(id_col).alias("node")).localCheckpoint(
-        eager=True
-    )
+    ), eager=True)
+    deg = materialize(both.groupBy("src").agg(F.count("*").alias("deg")), eager=True)
+    node_ids = materialize(nodes.select(F.col(id_col).alias("node")), eager=True)
     n = node_ids.count()
     base = (1.0 - damping) / n
     ranks = node_ids.select("node", F.lit(1.0 / n).alias("rank"))
@@ -60,7 +58,7 @@ def pagerank(
             )
         )
         summed = contribs.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
+        ranks = materialize(
             node_ids.join(summed, "node", "left")
             .select(
                 "node",
@@ -68,8 +66,8 @@ def pagerank(
                     F.lit(base)
                     + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
                 ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
     return ranks.select(
         F.col("node").alias(id_col), F.round("rank", 9).alias("pagerank")
@@ -87,7 +85,7 @@ def triangle_count(
     product. Duplicate-cluster density shows up as a triangle-to-edge
     ratio near its clique maximum. Output: one row
     (edge_count, triangle_count)."""
-    e = edges.select(a_col, b_col).distinct().localCheckpoint()
+    e = materialize(edges.select(a_col, b_col).distinct(), eager=True)
     e1 = e.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
     e2 = e.select(F.col(a_col).alias("b"), F.col(b_col).alias("c"))
     e3 = e.select(F.col(a_col).alias("a"), F.col(b_col).alias("c"))
@@ -119,7 +117,7 @@ def kcore(
     unrolled-SQL oracle, the PageRank contract): each round drops
     every node whose degree among surviving nodes is < k. Each round
     is two semi joins + one aggregate on the uniform node key, with
-    localCheckpoint truncating the lineage. Raises RuntimeError if
+    materialize truncating the lineage. Raises RuntimeError if
     the peel has not stabilized after `rounds` (the last two rounds
     still differed) — near-dup graphs peel in a handful of rounds.
 
@@ -127,16 +125,14 @@ def kcore(
     the node's degree within the final core.
     """
     both = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    both = (
+    both = materialize(
         both.unionByName(
             both.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
-    surv = nodes.select(F.col(id_col).alias("node")).localCheckpoint(
-        eager=True
-    )
+    surv = materialize(nodes.select(F.col(id_col).alias("node")), eager=True)
     # The peel is monotone (survivor sets only shrink), so an
     # unchanged count IS the fixpoint — running the remaining rounds
     # would be identity. Early exit keeps the result bit-identical
@@ -148,12 +144,12 @@ def kcore(
             both.join(surv.withColumnRenamed("node", "src"), "src", "semi")
             .join(surv.withColumnRenamed("node", "dst"), "dst", "semi")
         )
-        surv = (
+        surv = materialize(
             alive.groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= k)
-            .select(F.col("src").alias("node"))
-            .localCheckpoint(eager=True)
+            .select(F.col("src").alias("node")),
+            eager=True,
         )
         n = surv.count()
         if n == prev_n:
@@ -208,11 +204,11 @@ def source_modularity(
     """
     from iceberg_diag_spark.operators.dedup import minhash_candidate_pairs
 
-    pairs = minhash_candidate_pairs(
+    pairs = materialize(minhash_candidate_pairs(
         docs, text_col=text_col, id_col=id_col
-    ).localCheckpoint(eager=False)
+    ))
     lab = docs.select(F.col(id_col), F.col(source_col).alias("src"))
-    e = (
+    e = materialize(
         pairs.select("doc_a", "doc_b")
         .join(
             lab.withColumnRenamed(id_col, "doc_a").withColumnRenamed(
@@ -225,8 +221,7 @@ def source_modularity(
                 "src", "src_b"
             ),
             "doc_b",
-        )
-        .localCheckpoint(eager=False)  # consumed by m / intra / degrees
+        )  # consumed by m / intra / degrees
     )
     m_rel = e.agg(F.count(F.lit(1)).cast("long").alias("m"))
     intra = (

@@ -22,7 +22,7 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
-from iceberg_diag_spark.functions.parallel import ensure_parallelism
+from iceberg_diag_spark.functions.parallel import ensure_parallelism, materialize
 
 FRAME_BYTES = 64          # video "frame" granularity in the fake codec
 FEATURE_DIM = 16          # decoded feature-vector width
@@ -462,7 +462,8 @@ def media_phash_near_dup(
         "substring(__hx, cast(2*(1 + ((i+1)*(__len-1)) DIV 16) - 1 as int), 2),"
         " shiftleft(1L, cast(i as int)), 0L))"
     )
-    fps = (
+    # two consumers (both band-join sides)
+    fps = materialize(
         ensure_parallelism(media)
         .select(
             F.col(id_col),
@@ -471,11 +472,6 @@ def media_phash_near_dup(
         )
         .filter(F.col("__len") >= min_bytes)
         .select(F.col(id_col), F.expr(fp_expr).alias("fp"))
-        # both band-join sides consume the fingerprint relation, and
-        # the hex + interpreted 16-point sample fold is the expensive
-        # per-row stage — pin the 16 B/row relation so it runs once
-        # (the simhash64 fingerprint idiom)
-        .localCheckpoint(eager=False)
     )
     bands = fps.select(
         id_col,

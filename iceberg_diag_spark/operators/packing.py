@@ -27,6 +27,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from iceberg_diag_spark.functions.parallel import materialize
 from iceberg_diag_spark.operators.textops import tokens
 
 PACK_SCHEMA = (
@@ -195,12 +196,10 @@ def padding_waste_audit(
     """
     from iceberg_diag_spark.operators.shuffling import global_rank
 
-    # (id, n_tokens) feeds all three policies plus the global max —
-    # checkpoint the 16 B/doc relation so the corpus scan + tokenize
-    # runs once, not once per policy branch.
-    base = docs.select(
+    # four consumers (the three policies, the global max)
+    base = materialize(docs.select(
         F.col(id_col), F.size(tokens(F.col(text_col))).cast("long").alias("n")
-    ).localCheckpoint(eager=False)
+    ))
 
     def _summary(strategy, padded_col_df):
         return padded_col_df.agg(

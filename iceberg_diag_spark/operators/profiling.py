@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from iceberg_diag_spark.functions.parallel import ensure_parallelism
+from iceberg_diag_spark.functions.parallel import ensure_parallelism, materialize
 
 # kind → (min repr, max repr) as deterministic cross-engine strings:
 # numerics via floor-cents (double formatting differs between
@@ -177,20 +177,14 @@ def part_affinity(
     Output: (part_a, part_b, co_orders, orders_a, orders_b,
     lift_ppm), part_a < part_b.
     """
-    # The distinct basket relation feeds FIVE consumers (per-part
-    # counts joined twice, both self-join sides, the order count) and
-    # Catalyst replays the scan + distinct shuffle once per consumer
-    # (measured: 10 parquet scans in the lazy plan). Checkpoint the
-    # narrow (ok, pk) relation (~16 B/row) so the corpus is scanned
-    # and distinct-shuffled exactly once — same materialized
-    # high-water mark as any one of the five shuffles it replaces.
-    op = (
+    # five consumers (per-part counts joined twice, both self-join
+    # sides, the order count)
+    op = materialize(
         ensure_parallelism(lineitem)
         .select(
             F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     cnt = op.groupBy("pk").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     n_orders = op.select("ok").distinct().agg(
@@ -405,7 +399,7 @@ def cohort_ltv(orders: DataFrame) -> DataFrame:
     # first-month relation (16 B/customer) feeds cohort sizes AND the
     # per-cell join — pin it so the o_custkey aggregate runs once
     first = o.groupBy("o_custkey").agg(F.min("m").alias("m0"))
-    first = first.localCheckpoint(eager=False)
+    first = materialize(first)
     cohort_sizes = first.groupBy("m0").agg(
         F.countDistinct("o_custkey").alias("cohort_size")
     )

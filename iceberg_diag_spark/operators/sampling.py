@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from iceberg_diag_spark.functions.parallel import ensure_parallelism, materialize
+
 
 def hash_bucket(key: Column, buckets: int = 100) -> Column:
     """Stable bucket in [0, buckets) from the md5 of the key's string
@@ -394,13 +396,8 @@ def exact_quota_holdout(
     """
     from pyspark.sql.window import Window
 
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
-
-    # One narrow keyed+sharded relation (~50 B/row) pinned for its
-    # THREE consumers (stratum counts, shard sizes, the ranked base)
-    # — unpinned, Catalyst replays the scan + md5 projection once per
-    # consumer (the global_rank/grouped_prefix_sum input discipline).
-    sharded = (
+    # three consumers (stratum counts, shard sizes, the ranked base)
+    sharded = materialize(
         ensure_parallelism(docs)
         .select(
             F.col(id_col),
@@ -408,7 +405,6 @@ def exact_quota_holdout(
             F.md5(F.col(id_col).cast("string")).alias("__mh"),
         )
         .withColumn("__shard", F.ascii(F.substring("__mh", 1, 1)))
-        .localCheckpoint(eager=False)
     )
     counts = sharded.groupBy("stratum").agg(
         F.count(F.lit(1)).cast("long").alias("n_s")
@@ -578,8 +574,6 @@ def data_mixing_sample(
     tokens_selected, fill_ppm).
     """
     from pyspark.sql.window import Window
-
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
 
     plan = data_mixing_plan(
         df, budget_num, budget_den, alpha,

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from iceberg_diag_spark.functions.parallel import materialize
+
 
 def epoch_shuffle(
     docs: DataFrame, seed: str = "epoch-0", id_col: str = "doc_id"
@@ -32,12 +34,11 @@ def epoch_shuffle(
     16-row broadcast of cumulative shard sizes — no global window,
     no single-task sort. Output: (id, shuffle_key, shuffle_pos)."""
     key = F.md5(F.concat(F.lit(seed + ":"), F.col(id_col).cast("string")))
-    # `base` feeds both the shard-size aggregate and the ranked
-    # output — checkpoint the narrow (id, key, shard) relation so the
-    # upstream scan + md5 keying runs once, not once per consumer.
-    base = docs.select(F.col(id_col), key.alias("shuffle_key")).withColumn(
-        "__shard", F.ascii(F.substring("shuffle_key", 1, 1))
-    ).localCheckpoint(eager=False)
+    # two consumers (shard-size aggregate, ranked output)
+    base = materialize(
+        docs.select(F.col(id_col), key.alias("shuffle_key"))
+        .withColumn("__shard", F.ascii(F.substring("shuffle_key", 1, 1)))
+    )
     w = Window.partitionBy("__shard").orderBy("shuffle_key", id_col)
     sizes = base.groupBy("__shard").agg(F.count(F.lit(1)).alias("__cnt"))
     w_off = (
@@ -90,10 +91,10 @@ def global_rank(
     (percentile edges, shard sizes, the ranked base) and Catalyst
     replays a lazy lineage per consumer — rfm_segments chains three
     global_rank calls, which cubed the replay into 258 parquet scans
-    of one orders table. The primitive lazily localCheckpoints its
+    of one orders table. The primitive lazily materializes its
     input so upstream runs exactly once.
     """
-    df = df.localCheckpoint(eager=False)
+    df = materialize(df)
     probs = [i / n_shards for i in range(1, n_shards)]
     edges = df.agg(
         F.percentile_approx(value_col, probs, 10_000).alias("__edges")
@@ -150,13 +151,13 @@ def grouped_prefix_sum(
     the ranked base), and Catalyst replays a lazy lineage once per
     consumer — for skip_simulation that meant the whole row-scale
     unpivot + per-value agg ran twice. The primitive therefore
-    lazily localCheckpoints its input: every caller passes a value-
+    lazily materializes its input: every caller passes a value-
     cardinality/histogram-scale relation (per the contract that
     `order_col` is unique per group), so the materialized copy is
     small; an input that is already a checkpoint just pays one extra
     small copy.
     """
-    df = df.localCheckpoint(eager=False)
+    df = materialize(df)
     probs = [i / n_shards for i in range(1, n_shards)]
     edges = df.groupBy(group_col).agg(
         F.percentile_approx(order_col, probs, 10_000).alias("__edges")

@@ -22,6 +22,8 @@ import random
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from iceberg_diag_spark.functions.parallel import ensure_parallelism, materialize
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ a[i]*b[i] as double — left-to-right fold, deterministic."""
@@ -631,15 +633,12 @@ def semantic_dedup(
         .withColumn("d2q", F.floor(F.col("d2") * F.lit(1_000_000.0)).cast("long"))
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("d2q"), F.col("cand"))
-    # the assignment subtree (posexplode -> centroid agg -> join ->
-    # window) would otherwise be recomputed on BOTH sides of the
-    # within-cluster self-join; the relation is 16 B/vector, so pin it
-    # (the simhash fingerprint idiom)
-    assigned = (
+    # two consumers (both sides of the within-cluster self-join)
+    assigned = materialize(
         dists.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cand").alias("cluster"))
-        .localCheckpoint()
+        .select("vec_id", F.col("cand").alias("cluster")),
+        eager=True,
     )
     # pre-normalize ONCE per vector (n transforms) so the quadratic
     # inner loop pays a single dot product per pair instead of three
@@ -877,8 +876,6 @@ def _exact_bucketed(
     limit. SQL aggregate/zip_with keeps every dot a single compact
     expression node — fast to construct AND codegen-friendly.
     """
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
-
     planes = md5_hyperplanes(dim, n_planes, n_tables)
     qv = F.transform(
         F.col(vec_col),
@@ -908,17 +905,13 @@ def _exact_bucketed(
         table_exprs.append(
             f"named_struct('t', {t}, 'bucket', CAST({bits} AS LONG))"
         )
-    # Both outputs fan out to multiple consumers in every caller
-    # (qa/qb vector re-joins, a/b bucket-join sides) — without
-    # materialization each consumer replays the quantize projection
-    # and, worse, the 8-table x 8-plane x dim bucket SQL per row.
-    # base is ~(dim+1) longs/vector, tabled is 3 longs per (vector,
-    # table): the cheap side of the materialize-vs-rescan trade.
-    base = base.localCheckpoint(eager=False)
-    tabled = base.select(
+    # several consumers of each in every caller (qa/qb vector re-joins,
+    # a/b bucket-join sides)
+    base = materialize(base)
+    tabled = materialize(base.select(
         id_col,
         F.explode(F.expr(f"array({', '.join(table_exprs)})")).alias("tb"),
-    ).select(id_col, "tb.t", "tb.bucket").localCheckpoint(eager=False)
+    ).select(id_col, "tb.t", "tb.bucket"))
     return base, tabled
 
 
@@ -1102,10 +1095,8 @@ def lsh_topk_exact(
             .alias("cos_mppm"),
         )
     )
-    # materialize the scored pairs once: without this, both union
-    # branches re-execute the join+dot subplan (no exchange reuse
-    # through a union of two projections of one plan)
-    pair_scored = pair_scored.localCheckpoint(eager=False)
+    # two consumers (both union branches)
+    pair_scored = materialize(pair_scored)
     scored = pair_scored.select(
         F.col("vec_a").alias("query_id"),
         F.col("vec_b").alias("neighbor_id"),
@@ -1163,7 +1154,6 @@ def embedding_consistency_audit(
     """
     from pyspark.sql.window import Window
 
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
     from iceberg_diag_spark.operators.dedup import normalized_text
 
     hashed = ensure_parallelism(docs).select(
@@ -1187,11 +1177,10 @@ def embedding_consistency_audit(
     base = embeddings.select(
         F.col(vec_id_col).alias("__vid"), qv.alias("q")
     )
-    # both join sides consume the quantized relation — pin it so the
-    # scan + quantize transform + norm fold run once, not per side
-    base = base.select(
+    # two consumers (both join sides)
+    base = materialize(base.select(
         "__vid", "q", int_dot(F.col("q"), F.col("q")).alias("n2")
-    ).localCheckpoint(eager=False)
+    ))
     qa = base.select(
         F.col("__vid").alias("rep_id"),
         F.col("q").alias("qa"),
@@ -1253,8 +1242,6 @@ def ivf_balance_audit(
     occupied cell: (list_id, n_vecs, share_ppm, dev_ppm) where
     dev_ppm = share_ppm − floor(1e6/n_lists).
     """
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
-
     cents = md5_centroids(dim, n_lists, 1 << scale_bits)
     qv = F.transform(
         F.col(vec_col),
@@ -1414,7 +1401,7 @@ def embedding_dim_covariance(
         .cast("long")
         .alias("q"),
     )
-    ex = ex.localCheckpoint(eager=False)
+    ex = materialize(ex)
     # phase 1: exact variance numerator per dimension → top set
     mom = ex.groupBy("pos").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1534,8 +1521,6 @@ def ivf_topk_exact(
     """
     from pyspark.sql.window import Window
 
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
-
     cents = md5_centroids(dim, n_lists, 1 << scale_bits)
     qv = F.transform(
         F.col(vec_col),
@@ -1547,18 +1532,14 @@ def ivf_topk_exact(
     base = base.select(
         id_col, "q", int_dot(F.col("q"), F.col("q")).alias("n2")
     )
-    # `base` feeds three consumers (cells + both scoring sides) and
-    # `cells` two (assignment + probes); unpinned, Catalyst replays
-    # the quantize transform and the n_lists-way distance array_sort
-    # — the expensive per-row stages — once per consumer. Both
-    # relations are per-vector narrow (the quantized vector / 16
-    # (d2, c) structs), the standard IVF index materialization.
-    base = base.localCheckpoint(eager=False)
+    # `base` has three consumers (cells, both scoring sides), `cells`
+    # two (assignment, probes)
+    base = materialize(base)
 
-    cells = base.select(
+    cells = materialize(base.select(
         id_col,
         F.expr(_cells_sorted_expr(cents)).alias("cells"),
-    ).localCheckpoint(eager=False)
+    ))
     assigned = cells.select(
         F.col(id_col).alias("neighbor_id"),
         F.expr("cells[0].c").alias("list_id"),
@@ -1658,8 +1639,6 @@ def ivf_nprobe_sweep(
     """
     from pyspark.sql.window import Window
 
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
-
     max_p = max(probes)
     if max_p > n_lists:
         raise ValueError("max probe count cannot exceed n_lists")
@@ -1668,16 +1647,15 @@ def ivf_nprobe_sweep(
         F.col(vec_col),
         lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
     )
-    base = (
+    base = materialize(
         ensure_parallelism(embeddings)
         .select(F.col(id_col), qv.alias("q"))
         .select(id_col, "q", int_dot(F.col("q"), F.col("q")).alias("n2"))
-        .filter(F.col("n2") > 0)
-        .localCheckpoint(eager=False)  # corpus side + panel + cells
+        .filter(F.col("n2") > 0)  # corpus side + panel + cells
     )
-    cells = base.select(
+    cells = materialize(base.select(
         id_col, F.expr(_cells_sorted_expr(cents)).alias("cells")
-    ).localCheckpoint(eager=False)  # assigned + panel-probe consumers
+    ))  # assigned + panel-probe consumers
     assigned = cells.select(
         F.col(id_col).alias("neighbor_id"),
         F.expr("cells[0].c").alias("list_id"),
@@ -1730,7 +1708,7 @@ def ivf_nprobe_sweep(
     # needed, and inner lets the panel×k exact side BROADCAST against
     # the large candidate-rank relation (a left-outer would have to
     # broadcast the big preserved-side complement instead)
-    exact = exact.localCheckpoint(eager=False)  # totals + hit join
+    exact = materialize(exact)  # totals + hit join
     hit_rank = F.broadcast(exact).join(
         ppr.join(assigned, "list_id").select(
             "query_id", "neighbor_id", "prank"
@@ -1824,8 +1802,6 @@ def ivf_index_assignments(
     shuffle — assignment is a row-local array_sort over n_lists
     (dist², cell) structs.
     """
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
-
     cents = md5_centroids(dim, n_lists, 1 << scale_bits)
     qv = F.transform(
         F.col(vec_col),
@@ -1909,7 +1885,7 @@ def ivf_build_index(
     )
     manifest = _ivf_manifest_agg(embeddings.sparkSession.read.parquet(path))
     if cleanup:
-        manifest = manifest.localCheckpoint(eager=True)
+        manifest = materialize(manifest, eager=True)
         shutil.rmtree(path, ignore_errors=True)
     return manifest
 
@@ -1939,8 +1915,6 @@ def ivf_probe_index(
     Output: (query_id, neighbor_id, rank, cos_mppm).
     """
     from pyspark.sql.window import Window
-
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
 
     cents = md5_centroids(dim, n_lists, 1 << scale_bits)
     qv = F.transform(
@@ -2180,8 +2154,6 @@ def hard_negative_mining(
     """
     from pyspark.sql.window import Window
 
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
-
     cents = md5_centroids(dim, n_lists, 1 << scale_bits)
     qv = F.transform(
         F.col(vec_col),
@@ -2222,7 +2194,7 @@ def hard_negative_mining(
         F.col("q").alias("qb"),
         F.col("n2").alias("nb2"),
     )
-    pair_scored = (
+    pair_scored = materialize(
         a.join(b, "list_id")
         .filter(F.col("vec_a") < F.col("vec_b"))
         .select(
@@ -2239,7 +2211,6 @@ def hard_negative_mining(
         .filter(
             (F.col("cos_mppm") >= lo_mppm) & (F.col("cos_mppm") < hi_mppm)
         )
-        .localCheckpoint(eager=False)
     )
     both = pair_scored.select(
         F.col("vec_a").alias("anchor_id"),
@@ -2291,8 +2262,6 @@ def embedding_energy_curve(
     min_vec_ppm, n_vecs) — min over vectors is the worst case a
     truncated query could hit.
     """
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
-
     qv = F.transform(
         F.col(vec_col),
         lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
@@ -2390,8 +2359,6 @@ def kmeans_lloyd(
     Output: (cluster_id, n_members, n_reassigned, mean_d2) where
     mean_d2 is in (2^(8+10))²-scaled squared units.
     """
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
-
     cents = md5_centroids(dim, n_clusters, 1 << scale_bits)
     scale = 1 << shift_bits
     qv = F.transform(
@@ -2419,10 +2386,8 @@ def kmeans_lloyd(
         "q",
         F.expr(f"array_sort(array({seed_structs}))[0].c").alias("c0"),
     )
-    # The update + re-assignment both consume assigned0; checkpoint so
-    # the seed-assignment scan runs once (no cross-branch exchange
-    # reuse in Spark).
-    assigned0 = assigned0.localCheckpoint(eager=False)
+    # two consumers (update, re-assignment)
+    assigned0 = materialize(assigned0)
 
     upd = (
         assigned0.select("c0", F.posexplode("q").alias("pos", "qd"))
@@ -2520,7 +2485,7 @@ def pca_power(
     Scale shape: the corpus pass is the explode + map-side-combined
     hash aggregate into (dim+1)² groups — the same one-pass Gramian
     any distributed PCA computes; everything after operates on the
-    dim²-row matrix relation (metadata scale), localCheckpointed
+    dim²-row matrix relation (metadata scale), materialized
     once because all `iters` multiplies branch from it.
 
     Output per dimension: (pos, v_q, eig_share_ppm) — v_q the final
@@ -2549,18 +2514,15 @@ def pca_power(
             F.expr("slice(qa, i + 1, size(qa) - i)")
         ).alias("dj", "qj"),
     )
-    gram_ut = (
+    # five consumers (four scatter-matrix branches, the trace)
+    gram_ut = materialize(
         ex.groupBy("i", (F.col("i") + F.col("dj")).alias("j"))
         .agg(
             F.sum(F.col("qi") * F.col("qj"))
             .cast("decimal(38,0)")
             .alias("g")
-        )
-        # localCheckpoint: the Gram feeds four branches of the
-        # scatter-matrix build plus the trace — without truncation
-        # each branch replays the corpus explode (no cross-branch
-        # reuse)
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     gram = gram_ut.unionAll(
         gram_ut.filter(F.col("i") != F.col("j")).select(
@@ -2599,7 +2561,7 @@ def pca_power(
             F.max(F.abs(F.col("mr"))), F.lit(1).cast("decimal(38,0)")
         ).alias("mmax")
     )
-    m = (
+    m = materialize(
         m.join(F.broadcast(mmax))
         .select(
             "i",
@@ -2608,8 +2570,8 @@ def pca_power(
                 "CAST(CASE WHEN mr < 0 THEN -((-mr * 1048576) DIV mmax)"
                 " ELSE (mr * 1048576) DIV mmax END AS DECIMAL(38,0))"
             ).alias("m"),
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     v = m.select("j").distinct().select(
         "j", F.lit(S).cast("decimal(38,0)").alias("v")
@@ -2618,7 +2580,7 @@ def pca_power(
 
     # The renormalizing max comes from an unpartitioned window over
     # the ≤dim-row iterate (bounded relation, SCALING.md §5) — one
-    # relation, so each iteration needs exactly ONE localCheckpoint.
+    # relation, so each iteration needs exactly ONE materialize.
     # The checkpoint is load-bearing: w feeds both the max and the
     # rescale, and v feeds the next multiply — without truncation the
     # logical plan doubles per iteration (2^iters subtree copies; no
@@ -2633,7 +2595,7 @@ def pca_power(
             .groupBy("i")
             .agg(F.sum(F.col("m") * F.col("v")).alias("w"))
         )
-        v = (
+        v = materialize(
             w.withColumn(
                 "mx",
                 F.greatest(
@@ -2647,8 +2609,8 @@ def pca_power(
                     f"CAST(CASE WHEN w < 0 THEN -((-w * {S}) DIV mx)"
                     f" ELSE (w * {S}) DIV mx END AS DECIMAL(38,0))"
                 ).alias("v"),
-            )
-            .localCheckpoint()
+            ),
+            eager=True,
         )
     w_fin = (
         m.join(F.broadcast(v), "j")
@@ -2973,8 +2935,6 @@ def matryoshka_audit(
     """
     from pyspark.sql.window import Window
 
-    from iceberg_diag_spark.functions.parallel import ensure_parallelism
-
     # Dedupe the prefixes against the full dim: prefix_dims containing
     # `dim` would otherwise emit duplicate n2_<dim> aliases and fail
     # with an opaque AnalysisException (ADVICE r9).
@@ -2986,14 +2946,14 @@ def matryoshka_audit(
     base = ensure_parallelism(embeddings).select(
         F.col(id_col), qv.alias("q")
     )
-    base = base.select(
+    base = materialize(base.select(
         id_col,
         "q",
         *[
             int_dot(F.slice("q", 1, d), F.slice("q", 1, d)).alias(f"n2_{d}")
             for d in dims
         ],
-    ).localCheckpoint(eager=False)
+    ))
     panel = base.filter(
         (F.col(id_col) % query_mod == 0) & (F.col(f"n2_{dim}") > 0)
     ).select(
@@ -3001,7 +2961,7 @@ def matryoshka_audit(
         F.col("q").alias("qq"),
         *[F.col(f"n2_{d}").alias(f"qn2_{d}") for d in dims],
     )
-    pairs = (
+    pairs = materialize(
         base.filter(F.col(f"n2_{dim}") > 0)
         .crossJoin(F.broadcast(panel))
         .filter(F.col(id_col) != F.col("query_id"))
@@ -3032,8 +2992,7 @@ def matryoshka_audit(
                 .alias(f"cos_{d}")
                 for d in dims
             ],
-        )
-        .localCheckpoint(eager=False)  # shared by every prefix ranking
+        )  # shared by every prefix ranking
     )
 
     def topk(d: int) -> DataFrame:
@@ -3050,7 +3009,7 @@ def matryoshka_audit(
     # relations — broadcast them like the panel itself (the audit
     # sample is broadcast-scale by design; an SMJ here would sort the
     # same bounded relation four times)
-    full = topk(dim).localCheckpoint(eager=False)
+    full = materialize(topk(dim))
     out = None
     for d in dims[:-1]:
         hits = (

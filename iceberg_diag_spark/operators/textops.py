@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from iceberg_diag_spark.functions.parallel import ensure_parallelism
+from iceberg_diag_spark.functions.parallel import ensure_parallelism, materialize
 from iceberg_diag_spark.operators.dedup import normalized_text
 
 # Tiny per-language stopword lists for the n-gram/stopword language
@@ -226,12 +226,9 @@ def tfidf_top_terms(
         F.col(id_col),
         F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("term"),
     )
-    # tf feeds BOTH the df aggregate and the scored join — unpinned,
-    # the tokenize + explode + tf aggregate (the expensive stage)
-    # replays once per consumer. The (doc, term, tf) relation is the
-    # standard TF materialization any IR pipeline persists.
+    # two consumers (df aggregate, scored join)
     tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    tf = tf.localCheckpoint(eager=False)
+    tf = materialize(tf)
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
     n = docs.agg(F.count("*").cast("double").alias("n_docs"))
     scored = (
@@ -658,10 +655,9 @@ def bigram_logprob(
     # every bigram position contributes to exactly one left count),
     # so the corpus gram pass runs once here instead of once per
     # count relation
-    c2 = (
+    c2 = materialize(
         bg.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("c2"))
-        .localCheckpoint(eager=False)
     )
     c1 = (
         c2.select(F.split(F.col("gram"), " ")[0].alias("w1"), "c2")
@@ -802,15 +798,11 @@ def vocab_growth_curve(
             F.explode(tokens(F.col(text_col))).alias("term"),
         )
     )
-    # ONE pass over the token explode into a (term, shard) count —
-    # both the per-shard token volume (sum of counts) and the first-
-    # occurrence shard (min shard per term) derive from it, where the
-    # previous two-consumer shape replayed the corpus explode per
-    # branch. The intermediate is vocabulary × shards scale.
-    counts = (
+    # ONE pass over the token explode into a (term, shard) count; two
+    # consumers (per-shard token volume, first-occurrence shard)
+    counts = materialize(
         toks.groupBy("term", "shard_id")
         .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-        .localCheckpoint(eager=False)
     )
     per_shard_tokens = counts.groupBy("shard_id").agg(
         F.sum("__c").cast("long").alias("n_tokens")
@@ -932,7 +924,7 @@ def classifier_auc_calibration(
     auc_ppm, n_pos_total, n_neg_total); auc NULL when either class
     is absent (AUC undefined).
     """
-    per_doc = (
+    per_doc = materialize(
         _scored_vs_gate(docs, text_col)
         .select(
             "z_micro",
@@ -947,7 +939,6 @@ def classifier_auc_calibration(
             .cast("long")
             .alias("p_micro"),
         )
-        .localCheckpoint(eager=False)
     )
     auc = exact_auc(per_doc, score_col="z_micro", label_col="y")
     bins = (
@@ -1033,7 +1024,7 @@ def classifier_pr_curve(
     """
     from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
 
-    hist = (
+    hist = materialize(
         _scored_vs_gate(docs, text_col)
         .groupBy("z_micro")
         .agg(
@@ -1041,13 +1032,12 @@ def classifier_pr_curve(
             F.sum("y").cast("long").alias("n1"),
         )
         .withColumn("__g", F.lit(0))
-        .withColumn("__negs", -F.col("z_micro"))
-        .localCheckpoint(eager=False)  # two prefix consumers
+        .withColumn("__negs", -F.col("z_micro"))  # two prefix consumers
     )
     pre1 = grouped_prefix_sum(hist, "__g", "__negs", "n1", out_col="c1")
     pre = grouped_prefix_sum(pre1, "__g", "__negs", "n", out_col="cn")
     tot = hist.agg(F.sum("n1").cast("long").alias("p_total"))
-    rows = (
+    rows = materialize(
         pre.crossJoin(F.broadcast(tot))
         .filter(F.col("p_total") > 0)
         .select(
@@ -1066,8 +1056,7 @@ def classifier_pr_curve(
         .withColumn(
             "f1_ppm",
             F.expr("2000000 * tp DIV (2 * tp + fp + fn)").cast("long"),
-        )
-        .localCheckpoint(eager=False)  # grid join + argmax consumers
+        )  # grid join + argmax consumers
     )
     best = rows.agg(
         F.max(
@@ -1225,14 +1214,12 @@ def _lr_standardized(
     from ONE aggregate, broadcast onto the rows; standardized feature
     s = ((x − mu)·10⁶) DIV sigma (sign-aware DIV — x−mu goes
     negative); x0 is the constant bias feature at 10⁶ so one update
-    rule covers all six weights. localCheckpointed: training consumes
+    rule covers all six weights. Materialized: training consumes
     it k+1 times and nothing shares exchanges across branches.
     `carry` names ride the scan untouched (see _lr_feature_rows) —
     the moments aggregate and standardization ignore them.
     Output: (x0, sx1..sx5 all DECIMAL(38,0), y, *carry)."""
-    raw = _lr_feature_rows(docs, text_col, carry).localCheckpoint(
-        eager=False
-    )
+    raw = materialize(_lr_feature_rows(docs, text_col, carry))
     xs = [f"x{j}" for j in range(1, 6)]
     stats = raw.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1263,7 +1250,7 @@ def _lr_standardized(
             for x in xs
         ],
     )
-    return (
+    return materialize(
         raw.crossJoin(F.broadcast(stats))
         .select(
             F.lit(1_000_000).cast("decimal(38,0)").alias("x0"),
@@ -1281,7 +1268,6 @@ def _lr_standardized(
             F.col("y"),
             *[F.col(nm) for nm, _ in carry],
         )
-        .localCheckpoint(eager=False)
     )
 
 
@@ -1316,7 +1302,7 @@ def classifier_train_lr(
       integer micro, so the trajectory hashes identically in DuckDB.
 
     Scale shape: ONE corpus scan into a 6-column integer projection,
-    localCheckpointed (k+1 aggregate consumers — without truncation
+    materialized (k+1 aggregate consumers — without truncation
     each step replays the corpus scan, no cross-branch reuse); one
     1-row moments aggregate broadcast onto the rows; then k map-side-
     combined gradient aggregates, each a full pass over the narrow
@@ -1807,15 +1793,11 @@ def source_tv_distance(
         F.col(source_col).alias("source"),
         F.explode(tokens(F.col(text_col))).alias("tok"),
     )
-    # `counts` feeds totals, the top-K vocab, AND the K-vocab
-    # restriction (which itself fans out to k_mass and the grid) —
-    # without materialization the corpus token explode + aggregate
-    # replays once per consumer (measured: 16 scans in the lazy
-    # plan). The relation is (source × distinct-token) cardinality,
-    # so the checkpoint is vocabulary-scale, never corpus-scale.
-    counts = toks.groupBy("source", "tok").agg(
+    # three consumers (totals, top-K vocab, K-vocab restriction);
+    # vocabulary-scale, never corpus-scale
+    counts = materialize(toks.groupBy("source", "tok").agg(
         F.count(F.lit(1)).cast("long").alias("c")
-    ).localCheckpoint(eager=False)
+    ))
     totals = counts.groupBy("source").agg(F.sum("c").alias("tot"))
     vocab = (
         counts.groupBy("tok")
@@ -1974,7 +1956,8 @@ def bm25_topk(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
-    tf = (
+    # two consumers (df_t, scored)
+    tf = materialize(
         base.select(
             F.col(id_col),
             F.size("__toks").cast("long").alias("dl"),
@@ -1986,10 +1969,6 @@ def bm25_topk(
             F.count(F.lit(1)).cast("long").alias("tf"),
             F.max("dl").alias("dl"),
         )
-        # feeds df_t AND scored: unpinned, the tokenize + explode +
-        # filter + tf aggregate replays per consumer; the matching
-        # (doc, query-term) relation is |terms|-bounded per doc
-        .localCheckpoint(eager=False)
     )
     df_t = tf.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("df")
@@ -2086,9 +2065,8 @@ def hybrid_retrieval_topk(
         docs, query_terms, k=n_candidates,
         text_col=text_col, id_col=id_col,
     )
-    # feeds three consumers (vector prune, feedback pick, final
-    # projection) — the BM25 subplan must not replay per consumer
-    cand = cand.localCheckpoint(eager=False)
+    # three consumers (vector prune, feedback pick, final projection)
+    cand = materialize(cand)
     qv = F.transform(
         F.col(vec_col),
         lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
@@ -2100,9 +2078,8 @@ def hybrid_retrieval_topk(
             id_col, "q", int_dot(F.col("q"), F.col("q")).alias("nd2")
         )
     )
-    # ≤ n_candidates quantized vectors; both the centroid and the
-    # rerank read it — checkpoint so the embeddings scan runs once
-    cvec = cvec.localCheckpoint(eager=False)
+    # two consumers (centroid, rerank)
+    cvec = materialize(cvec)
     fb_ids = (
         cand.orderBy(F.desc("bm25_micro"), F.asc(id_col))
         .limit(m_feedback)
@@ -2460,7 +2437,7 @@ def bpe_train_merges(
     (uniform keys, map-side combine), a map-side top-1
     (TakeOrderedAndProject — ONE row to the driver, the bounded
     decision-scalar precedent), one narrow replace projection,
-    localCheckpoint to truncate the k-deep lineage (the iterative-
+    materialize to truncate the k-deep lineage (the iterative-
     algorithm pattern). Merge identity is deterministic: count DESC,
     then (left, right) lexicographic.
 
@@ -2517,11 +2494,11 @@ def _bpe_train(docs, k, text_col):
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("wc"))
     )
-    w_rel = words.select(
+    w_rel = materialize(words.select(
         "w",
         "wc",
         F.regexp_replace("w", "(.)", sep + "$1" + sep).alias("s"),
-    ).localCheckpoint(eager=True)
+    ), eager=True)
     # total word occurrences: the constant fertility denominator
     # (one bounded scalar to the driver; oracle recomputes it)
     wtot = w_rel.agg(F.sum("wc")).collect()[0][0] or 1
@@ -2556,7 +2533,7 @@ def _bpe_train(docs, k, text_col):
                 f"merges; lower k (requested {k})"
             )
         lft, rgt, cnt = top[0]["lft"], top[0]["rgt"], int(top[0]["cnt"])
-        w_rel = w_rel.select(
+        w_rel = materialize(w_rel.select(
             "w",
             "wc",
             F.replace(
@@ -2564,7 +2541,7 @@ def _bpe_train(docs, k, text_col):
                 F.lit(sep + lft + sep + sep + rgt + sep),
                 F.lit(sep + lft + rgt + sep),
             ).alias("s"),
-        ).localCheckpoint(eager=True)
+        ), eager=True)
         w_rels.append(w_rel)
         merges.append((lft, rgt, cnt))
     return w_rels, merges, wtot
@@ -2727,16 +2704,16 @@ def _unigram_lm_core(
     word-form relation, the checkpointed span relation, and the final
     k_em-round score table. Pure extraction from unigram_lm_train
     (plans identical); see that docstring for semantics and scale."""
-    words = (
+    words = materialize(
         ensure_parallelism(docs)
         .select(F.explode(tokens(F.col(text_col))).alias("w"))
         .filter((F.col("w") != "") & (F.length("w") <= max_word_len))
         .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("long").alias("wc"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).cast("long").alias("wc")),
+        eager=True,
     )
     # every (end i, len l, piece) span of every word form, built once
-    spans = (
+    spans = materialize(
         words.select(
             "w",
             "wc",
@@ -2749,19 +2726,19 @@ def _unigram_lm_core(
                 )
             ).alias("sp"),
         )
-        .select("w", "wc", "sp.i", "sp.l", "sp.piece")
-        .localCheckpoint(eager=True)
+        .select("w", "wc", "sp.i", "sp.l", "sp.piece"),
+        eager=True,
     )
     seed = spans.groupBy("piece", "l").agg(
         F.sum("wc").cast("long").alias("cnt")
     )
-    chars = seed.filter(F.col("l") == 1).localCheckpoint(eager=True)
+    chars = materialize(seed.filter(F.col("l") == 1), eager=True)
     multis = (
         seed.filter(F.col("l") >= 2)
         .orderBy(F.desc("cnt"), F.asc("piece"))
         .limit(n_multi)
     )
-    vocab = chars.unionByName(multis).localCheckpoint(eager=True)
+    vocab = materialize(chars.unionByName(multis), eager=True)
 
     def scored(vocab_df: DataFrame) -> DataFrame:
         tot = vocab_df.agg(
@@ -2794,7 +2771,7 @@ def _unigram_lm_core(
     score = scored(vocab)
     for _ in range(k_em):
         em = estep(score)
-        vocab = (
+        vocab = materialize(
             chars.select("piece")
             .join(em, "piece", "left")
             .select(
@@ -2810,8 +2787,8 @@ def _unigram_lm_core(
                     F.length("piece").cast("int").alias("l"),
                     "cnt",
                 )
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         score = scored(vocab)
     return words, spans, score
@@ -3066,10 +3043,8 @@ def source_quality_calibration(
         .cast("long")
         .alias("ttr_ppm"),
     )
-    # (id, source, score) feeds the percentile-edge aggregate AND the
-    # sharded rank base — checkpoint the ~24 B/doc relation so the
-    # corpus scan + tokenize runs once (the global_rank discipline).
-    scored = scored.localCheckpoint(eager=False)
+    # two consumers (percentile-edge aggregate, sharded rank base)
+    scored = materialize(scored)
     probs = [i / n_shards for i in range(1, n_shards)]
     edges = scored.groupBy("source").agg(
         F.percentile_approx("ttr_ppm", probs, 10_000).alias("__edges")
@@ -3242,13 +3217,13 @@ def pmi_collocations(
     # ONE corpus pass: the unfiltered pair-count relation is bounded
     # by vocab² (≪ corpus volume) and every marginal is an exact
     # re-aggregation of it — c_a = Σ_b c_ab, c_b = Σ_a c_ab,
-    # N = Σ c_ab. Materialize it once (localCheckpoint) so the four
+    # N = Σ c_ab. Materialize it once so the four
     # consumers don't each replay the tokenize+window subplan: Spark
     # reuses no exchange across join branches of one plan.
     pair_counts = bg.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("long").alias("n_pair")
     )
-    pair_counts = pair_counts.localCheckpoint(eager=False)
+    pair_counts = materialize(pair_counts)
     pairs = pair_counts.filter(F.col("n_pair") >= min_count)
     left = pair_counts.groupBy("w1").agg(
         F.sum("n_pair").cast("long").alias("c_a")
@@ -3398,7 +3373,7 @@ def quality_dup_matrix(
         "ttr_ppm",
         (F.count(F.lit(1)).over(wh) > 1).cast("long").alias("is_dup"),
     )
-    marked = marked.localCheckpoint(eager=False)
+    marked = materialize(marked)
     qs = marked.agg(
         F.expr(
             "percentile(ttr_ppm, array("
@@ -3619,7 +3594,7 @@ def token_zipf_curve(
     for the global top-k: per-partition partial top-k, k·p-row merge
     on the driver side of the exchange, never a full vocab sort. The
     corpus total re-aggregates the vocab-size counts relation (NOT
-    the corpus): counts is localCheckpointed so the tokenize scan
+    the corpus): counts is materialized so the tokenize scan
     runs once — vocab is orders of magnitude smaller than the
     corpus, the standard trade (see README scale note on
     materializing shared subplans). The rank/cumsum window runs over
@@ -3627,7 +3602,7 @@ def token_zipf_curve(
     """
     from pyspark.sql import Window
 
-    counts = (
+    counts = materialize(
         ensure_parallelism(docs)
         .select(
             F.explode(tokens(F.col(text_col))).alias("token")
@@ -3635,7 +3610,6 @@ def token_zipf_curve(
         .filter(F.col("token") != "")
         .groupBy("token")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=False)
     )
     total = counts.agg(
         F.sum("cnt").cast("decimal(38,0)").alias("__total")
@@ -3776,7 +3750,7 @@ def source_length_ks(
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    sv = sv.localCheckpoint(eager=False)
+    sv = materialize(sv)
     vals = sv.groupBy("v").agg(F.sum("cnt").alias("gcnt"))
     vals = vals.withColumn(
         "cum_g",
@@ -3873,16 +3847,14 @@ def bigram_kneser_ney(
     # filtered-out row still carries (the documented inferred-
     # predicate gotcha); get() returns NULL there and the row never
     # survives anyway
-    # Four consumers (left context agg, right continuation agg, the
-    # distinct-bigram total, the final join spine) — checkpoint the
-    # bigram-vocabulary-scale count relation so the corpus shingle
-    # explode + aggregate runs once, not once per consumer.
-    c2 = c2.select(
+    # four consumers (left context agg, right continuation agg,
+    # distinct-bigram total, final join spine)
+    c2 = materialize(c2.select(
         "gram",
         "c2",
         F.expr("get(split(gram, ' '), 0)").alias("w1"),
         F.expr("get(split(gram, ' '), 1)").alias("w2"),
-    ).localCheckpoint(eager=False)
+    ))
     left = c2.groupBy("w1").agg(
         F.sum("c2").alias("c1w"),
         F.count(F.lit(1)).alias("n1p_w1"),
@@ -3960,13 +3932,8 @@ def doc_kn_nll(
         F.expr("get(split(gram, ' '), 0)").alias("w1"),
         F.expr("get(split(gram, ' '), 1)").alias("w2"),
     )
-    # Four branches (left/right/ntot/scores) consume c2; without a
-    # checkpoint each replays the corpus tokenize+aggregate lineage
-    # (no cross-branch reuse — measured 12 parquet scans in this one
-    # plan). The checkpointed relation is vocabulary-scale
-    # (distinct bigrams, Heaps-sublinear), the cheap side of the
-    # materialize-vs-rescan trade.
-    c2 = c2.localCheckpoint(eager=False)
+    # four consumers (left/right/ntot/scores)
+    c2 = materialize(c2)
     left = c2.groupBy("w1").agg(
         F.sum("c2").alias("c1w"),
         F.count(F.lit(1)).alias("n1p_w1"),
@@ -4054,12 +4021,10 @@ def doc_kn_perplexity(
     """
     from pyspark.sql.window import Window
 
-    # per-doc relation (~40 B/doc) consumed by the edge sketch, the
-    # shard assignment, and the size/offset branches — checkpoint so
-    # none of them replays the full KN scoring lineage
-    scored = doc_kn_nll(
+    # three consumers (edge sketch, shard assignment, size/offset)
+    scored = materialize(doc_kn_nll(
         docs, min_pair, text_col, id_col, source_col
-    ).localCheckpoint(eager=False)
+    ))
     probs = [i / n_shards for i in range(1, n_shards)]
     edges = scored.groupBy("source").agg(
         F.percentile_approx("avg_nll_micro", probs, 10_000).alias("__edges")

@@ -7,6 +7,7 @@ oracle follows.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from iceberg_diag_spark.functions.parallel import materialize
 from iceberg_diag_spark.operators import (
     dedup,
     events,
@@ -1577,9 +1578,9 @@ def _release_neardup_reconcile(spark, sf_dir):
     sig = tempfile.mkdtemp(prefix="reconcile_sig_")
     try:
         incs = build_release_increments(docs, release)
-        out = funnel.release_neardup_reconcile(
+        out = materialize(funnel.release_neardup_reconcile(
             spark, incs, release, sig
-        ).localCheckpoint(eager=True)
+        ), eager=True)
     finally:
         shutil.rmtree(release, ignore_errors=True)
         shutil.rmtree(sig, ignore_errors=True)
@@ -1714,9 +1715,9 @@ def _release_retraction_apply(spark, sf_dir):
         # sig_path exercises the signature-store purge under the
         # driver (ledger values are release-derived, so the oracle is
         # unchanged by it)
-        out = funnel.release_retraction_apply(
+        out = materialize(funnel.release_retraction_apply(
             spark, pairs, release, sig_path=sig
-        ).localCheckpoint(eager=True)
+        ), eager=True)
     finally:
         shutil.rmtree(release, ignore_errors=True)
         shutil.rmtree(sig, ignore_errors=True)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+from iceberg_diag_spark.functions.parallel import materialize
 from iceberg_diag_spark.operators import events, joins, sketches
 from iceberg_diag_spark.plans.common import REGISTRY, QuerySpec, _t
 
@@ -71,30 +72,27 @@ def _events_funnel(spark, sf_dir):
     stage with the user count that reached it. Three conditional-agg
     passes over the same user partitioning — each stage's timestamp
     gates the next, which a single pivot cannot express."""
-    # Each stage relation is lazily checkpointed: t2's lineage
-    # contains t1's and t3's contains both, and every stage is ALSO
-    # counted — without materialization the events scan replays six
-    # times (1+2+3 across the chained lineages). The checkpoints are
-    # user-cardinality scale (16 B/row).
+    # each stage is pinned: t2's lineage contains t1's, t3's both,
+    # and every stage is also counted
     ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    t1 = ev.filter(F.col("event_type") == "signup").groupBy("user_id").agg(
-        F.min("ts").alias("t1")
-    ).localCheckpoint(eager=False)
-    t2 = (
+    t1 = materialize(
+        ev.filter(F.col("event_type") == "signup")
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t1"))
+    )
+    t2 = materialize(
         ev.filter(F.col("event_type") == "click")
         .join(t1, "user_id")
         .filter(F.col("ts") >= F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .localCheckpoint(eager=False)
     )
-    t3 = (
+    t3 = materialize(
         ev.filter(F.col("event_type") == "purchase")
         .join(t2, "user_id")
         .filter(F.col("ts") >= F.col("t2"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t3"))
-        .localCheckpoint(eager=False)
     )
     stages = [
         ("1_signup", t1),

@@ -7,6 +7,7 @@ oracle follows.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from iceberg_diag_spark.functions.parallel import materialize
 from iceberg_diag_spark.operators import maintenance
 from iceberg_diag_spark.sources.data_files import (
     column_values_from_lineitem,
@@ -597,14 +598,14 @@ def _diag_compaction_apply(spark, sf_dir):
             .partitionBy("partition_key", "file_id")
             .parquet(tmp)
         )
-        out = compact_apply_binpack(
+        out = materialize(compact_apply_binpack(
             spark,
             tmp,
             read_schema=_COMPACTION_READ_SCHEMA,
             row_size=F.col("row_bytes"),
             key=F.col("row_key"),
             order_cols=("row_key",),
-        ).localCheckpoint(eager=True)
+        ), eager=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out
@@ -742,14 +743,14 @@ def _diag_clustering_apply(spark, sf_dir):
             .partitionBy("file_id")
             .parquet(tmp)
         )
-        out = cluster_apply_sorted(
+        out = materialize(cluster_apply_sorted(
             spark,
             tmp,
             read_schema=_CLUSTER_READ_SCHEMA,
             value_col="v",
             key_col="row_key",
             rows_per_file=CLUSTER_ROWS_PER_FILE,
-        ).localCheckpoint(eager=True)
+        ), eager=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out

@@ -7,6 +7,7 @@ oracle follows.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from iceberg_diag_spark.functions.parallel import materialize
 from iceberg_diag_spark.operators import similarity
 from iceberg_diag_spark.plans.common import REGISTRY, QuerySpec, _t
 
@@ -1438,9 +1439,7 @@ def _ivf_probe_topk(spark, sf_dir):
     path = tempfile.mkdtemp(prefix="ivf_probe_topk_")
     try:
         similarity.ivf_build_index(emb, path=path)  # write is eager
-        out = similarity.ivf_probe_index(spark, path, emb).localCheckpoint(
-            eager=True
-        )
+        out = materialize(similarity.ivf_probe_index(spark, path, emb), eager=True)
     finally:
         # k rows per vector — checkpoint-then-rmtree keeps /tmp clean
         # across repeated driver/bench runs (the build's path=None

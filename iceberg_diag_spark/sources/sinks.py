@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 
+from iceberg_diag_spark.functions.parallel import materialize
+
 
 def write_partitioned(
     df: DataFrame,
@@ -254,7 +256,7 @@ def rewrite_partitions(
     (compaction, clustering, release retraction, signature-store
     purge), in three steps:
 
-    1. stage `rows` with an eager localCheckpoint: they are usually
+    1. stage `rows` with an eager `materialize`: they are usually
        read from the very files the write replaces, and parquet
        cannot be overwritten while it is still being read lazily;
     2. write them with DYNAMIC partition overwrite: only the leaf
@@ -272,7 +274,7 @@ def rewrite_partitions(
     """
     if n_tasks <= 0:
         raise ValueError("n_tasks must be positive")
-    staged = rows.localCheckpoint(eager=True)
+    staged = materialize(rows, eager=True)
     (
         staged.repartition(n_tasks, *partition_cols)
         .sortWithinPartitions(*partition_cols, *order_cols)

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from iceberg_diag_spark.functions.parallel import materialize
 from iceberg_diag_spark.operators.events import WATERMARK_CANDIDATES_US
 from iceberg_diag_spark.sources.tpch import normalize_event_ts
 
@@ -1143,9 +1144,7 @@ def run_sli_burn_rate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_events_stream(spark, sf_dir), rollup, checkpoint_dir=ckpt
     )
     with _drained(q, "sli_burn_rate_stream", rollup, ckpt):
-        return sli_burn_rate_from_rollup(spark, rollup).localCheckpoint(
-            eager=True
-        )
+        return materialize(sli_burn_rate_from_rollup(spark, rollup), eager=True)
 
 
 def seasonality_profile_stream(
@@ -1211,9 +1210,7 @@ def run_seasonality_profile_stream(
         read_events_stream(spark, sf_dir), rollup, checkpoint_dir=ckpt
     )
     with _drained(q, "seasonality_profile_stream", rollup, ckpt):
-        return seasonality_from_rollup(spark, rollup).localCheckpoint(
-            eager=True
-        )
+        return materialize(seasonality_from_rollup(spark, rollup), eager=True)
 
 
 def corpus_release_stream(
@@ -1323,6 +1320,4 @@ def run_corpus_release_stream(
         checkpoint_dir=ckpt,
     )
     with _drained(q, "corpus_release_stream", release, ckpt):
-        return release_manifest_from_stream(spark, release).localCheckpoint(
-            eager=True
-        )
+        return materialize(release_manifest_from_stream(spark, release), eager=True)
