@@ -97,7 +97,9 @@ def _render_maintenance(files_df, title: str) -> str:
     delete-burden table always; the retention simulation only when
     the relation carries an added_at timestamp (the `.files` contract
     has no timestamps — callers join `.entries`/`.snapshots` to get
-    them, or load an augmented parquet via --files)."""
+    them, or load an augmented parquet via --files). Every table is
+    ordered by partition, so the rows the 1000-row cap keeps do not
+    depend on the shuffle partitioning."""
     from iceberg_diag_spark.operators.maintenance import (
         delete_impact,
         snapshot_retention,
@@ -105,12 +107,12 @@ def _render_maintenance(files_df, title: str) -> str:
 
     out = [
         f"\n-- {title}: delete-file burden --",
-        _render_df(delete_impact(files_df)),
+        _render_df(delete_impact(files_df).orderBy("partition_key")),
     ]
     if "added_at" in files_df.columns:
         out += [
             f"\n-- {title}: snapshot retention (180d) --",
-            _render_df(snapshot_retention(files_df)),
+            _render_df(snapshot_retention(files_df).orderBy("partition_key")),
         ]
     if "readable_metrics" in files_df.columns:
         # real `.files` relations (Iceberg ≥ 1.2) carry per-column

@@ -9,21 +9,23 @@ closed group slightly exceeds the 750 MiB cap. The reset depends on
 where the previous group closed, which makes it a sequential stateful
 fold — not expressible with window prefix sums.
 
-Spark mapping: grouped-map ``applyInPandas`` keyed by partition.
-Sequential per group, parallel across partitions. At 100 TB the input
-here is *metadata* scale (one row per data file — millions of rows,
-KBs per partition group), so a per-group pandas fold is cheap and the
-shuffle is keyed by partition value with map-side combine upstream.
-The output is one row per (partition, group) — already aggregated, so
-no large pandas frames are returned.
+Spark mapping: one kernel, ``pack_segments``, folds any number of
+independent segments (partitions) of ascending sizes at once — one
+prefix sum over all rows, then one vectorized ``searchsorted`` per
+pack-group step across every open segment. The diagnostics panel
+(``diagnostics.partition_stats_with_after``) feeds it every partition
+of an Arrow batch from one ``mapInArrow`` call, after a hash
+repartition and a sort by (partition, size); ``binpack_groups`` and
+``compaction.binpack_assign`` emit a row per group or per file from a
+grouped-map ``applyInPandas`` and call it as its one-segment case
+(``pack_group_bounds``). At 100 TB the input here is *metadata* scale
+(one row per data file — millions of rows, KBs per partition).
 
 Parallelism caveat (inherent to the reference's per-partition fold):
-task parallelism equals the number of distinct partition values, so
-an UNPARTITIONED table folds in one task. That task is still only
-O(n log n) over that table's file-count metadata (pack_group_stats
-makes the aggregate form O(#groups log n)); a table whose *file
-count* alone is too large for one task has bigger problems than this
-fold.
+a partition is never split across tasks, so an UNPARTITIONED table
+folds in one task. That task is still only O(n log n) over that
+table's file-count metadata; a table whose *file count* alone is too
+large for one task has bigger problems than this fold.
 """
 
 from __future__ import annotations
@@ -61,45 +63,78 @@ def pack_sizes(sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE):
     return groups
 
 
-def pack_group_bounds(
-    sorted_sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE
-) -> tuple[list[int], list[int]]:
-    """The fold's group boundaries over ASCENDING sizes: (ends,
-    totals), the inclusive last index and the byte total of every
-    group, in O(#groups · log n) via prefix sums + searchsorted rather
-    than a per-row loop. The one kernel behind pack_group_stats,
-    binpack_groups and compaction.binpack_assign; property-tested
-    equal to pack_sizes.
+def pack_segments(
+    sorted_sizes, seg_lens, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE
+):
+    """The fold over many independent segments at once — the package's
+    one bin-pack boundary kernel, property-tested equal to pack_sizes
+    per segment. ``sorted_sizes`` is the concatenation of the segments
+    (``seg_lens`` rows each, empty segments allowed), each ASCENDING.
 
-    A group starting at index s with base = P(s-1) ends at the FIRST
-    index e where P(e) - base > cap (check-before-append includes the
-    crossing row), or at the last row when no crossing remains.
+    Returns (seg, ends, totals): one entry per group — the segment
+    index, the group's inclusive last row and its byte total; each
+    segment's groups appear in order.
+
+    One prefix sum P covers every row. A group starting at row s with
+    base = P(s-1) ends at the FIRST row e where P(e) - base > cap
+    (check-before-append includes the crossing row), or at its
+    segment's last row when no crossing remains. Each loop pass closes
+    the next group of EVERY open segment with one vectorized
+    searchsorted, so the loop runs as many times as the largest
+    segment has groups, not once per group.
     """
     ps = np.cumsum(np.asarray(sorted_sizes, dtype="int64"))
-    n = int(ps.size)
-    ends: list[int] = []
-    totals: list[int] = []
-    base = start = 0
-    while start < n:
-        e = int(np.searchsorted(ps, base + max_bytes_per_group, side="right"))
-        e = min(e, n - 1)
-        ends.append(e)
-        totals.append(int(ps[e]) - base)
-        base = int(ps[e])
-        start = e + 1
+    lens = np.asarray(seg_lens, dtype="int64")
+    seg = np.flatnonzero(lens)
+    last = (np.cumsum(lens) - 1)[seg]
+    pos = last - lens[seg] + 1
+    out = [(np.zeros(0, dtype="int64"),) * 3]
+    while seg.size:
+        base = np.where(pos > 0, ps[pos - 1], 0)
+        end = np.minimum(
+            np.searchsorted(ps, base + max_bytes_per_group, side="right"), last
+        )
+        out.append((seg, end, ps[end] - base))
+        more = end < last
+        seg, pos, last = seg[more], end[more] + 1, last[more]
+    return tuple(np.concatenate(c) for c in zip(*out))
+
+
+def pack_group_bounds(
+    sorted_sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE
+):
+    """One-segment case of pack_segments: (ends, totals) of every group
+    over ASCENDING sizes. Used by binpack_groups and
+    compaction.binpack_assign."""
+    _, ends, totals = pack_segments(
+        sorted_sizes, [len(sorted_sizes)], max_bytes_per_group
+    )
     return ends, totals
 
 
-def pack_group_stats(sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE):
-    """Aggregate form of the fold: (n_groups, sum-of-group read costs)
-    without materializing per-group rows. Used by the fused
-    diagnostics pass."""
+def pack_segment_stats(
+    sorted_sizes, seg_lens, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE
+):
+    """Aggregate form of pack_segments: per segment, (number of groups,
+    sum of group read costs) as int64 arrays — 0 and 0 for an empty
+    segment. Used by the diagnostics fold."""
     from iceberg_diag_spark.functions.cost import FETCH_SIZE
 
-    _, totals = pack_group_bounds(
-        np.sort(np.asarray(sizes, dtype="int64")), max_bytes_per_group
+    seg, _, totals = pack_segments(sorted_sizes, seg_lens, max_bytes_per_group)
+    groups = np.bincount(seg, minlength=len(seg_lens)).astype("int64")
+    cost = np.zeros(len(seg_lens), dtype="int64")
+    np.add.at(cost, seg, totals // FETCH_SIZE + 2)
+    return groups, cost
+
+
+def pack_group_stats(sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE):
+    """One-segment case of pack_segment_stats over UNSORTED sizes:
+    (n_groups, sum-of-group read costs) as ints."""
+    groups, cost = pack_segment_stats(
+        np.sort(np.asarray(sizes, dtype="int64")), [len(sizes)],
+        max_bytes_per_group,
     )
-    return len(totals), sum(t // FETCH_SIZE + 2 for t in totals)
+    return int(groups[0]), int(cost[0])
 
 
 def binpack_groups(

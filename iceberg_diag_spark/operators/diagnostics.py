@@ -3,20 +3,21 @@
 Re-expresses the reference aggregation engine
 (``icebergdiag/metrics/table_metrics.py:46-155``) Spark-first:
 
-  files ──one exchange──► fused applyInPandas: BEFORE stats +
-         bin-pack + AFTER stats, one row per partition   (A1, A8/A9)
+  files ──hash repartition by partition, sort by (partition, size)──►
+         mapInArrow fold: BEFORE stats + bin-pack + AFTER stats,
+         one row per partition                           (A1, A8/A9)
   ──single agg──► all 9 global metrics                   (A2-A7, A10)
-  unpivot ──► 9-row metric table with improvement        (A11)
+  one stack() unpivot ──► 9-row metric table with improvement (A11)
 
 Scale notes (100 TB):
 - The input relation is Iceberg *metadata* (one row per data file):
   even a 100 TB table is ~1e6-1e8 rows — comfortably shuffle-able.
-  Both groupBys shuffle on the same key (partition value), and AQE
-  coalesces the tiny post-agg exchanges.
-- Per-partition stats are one row per partition; the final global agg
-  is a single reduce — no driver-side loops, no collect_list of sizes
-  (the pandas fold streams each group's rows once and emits
-  per-group aggregates, not file lists).
+- The fold makes one Python call per Arrow batch, not per partition
+  value: each call folds every partition in its batch with numpy and
+  emits one aggregated row per partition, never file lists. Python
+  memory is bounded by one partition's rows plus one batch.
+- The final global agg is a single reduce — no driver-side loops, no
+  collect_list of sizes.
 - The only Python is the sequential bin-pack fold (see binpack.py).
 
 Metric semantics pinned by tests/test_diagnostics_golden.py, derived
@@ -25,7 +26,11 @@ from the reference unit test (tests/test_metric_calculator.py:46-91).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from iceberg_diag_spark.functions.cost import (
     CONTENT_DATA,
@@ -34,7 +39,7 @@ from iceberg_diag_spark.functions.cost import (
     MILLISECONDS_PER_SCAN,
     scan_overhead_ms,
 )
-from iceberg_diag_spark.operators.binpack import pack_group_stats
+from iceberg_diag_spark.operators.binpack import pack_segment_stats
 
 # Display order + reference display names (table_metric.py:9-18).
 METRICS = [
@@ -74,11 +79,79 @@ def partition_stats(
     )
 
 
-_PART_AFTER_SCHEMA = (
-    "partition_key string, file_count long, total_size long,"
-    " scan_overhead long, data_file_count long, data_size long,"
-    " after_file_count long, after_scan_overhead long"
-)
+def _key_breaks(prev: list, cur: list) -> np.ndarray:
+    """Row-wise "key differs" flags between two equal-length lists of
+    Arrow key columns. NULL equals NULL, as in groupBy."""
+    out = np.zeros(len(cur[0]), dtype=bool)
+    for a, b in zip(prev, cur):
+        same = pc.or_(
+            pc.fill_null(pc.equal(a, b), False),
+            pc.and_(pc.is_null(a), pc.is_null(b)),
+        )
+        out |= ~same.to_numpy(zero_copy_only=False)
+    return out
+
+
+def _key_starts(keys: list, tail: list | None = None) -> np.ndarray:
+    """Rows where a new key begins in sorted Arrow key columns. Row 0
+    begins one unless it continues ``tail``, the key columns of the
+    row before it."""
+    first = [True] if tail is None else _key_breaks(tail, [k[:1] for k in keys])
+    rest = _key_breaks([k[:-1] for k in keys], [k[1:] for k in keys])
+    return np.flatnonzero(np.concatenate([first, rest]))
+
+
+def _fold_keys(
+    batch: pa.RecordBatch, n_keys: int, schema: pa.Schema
+) -> pa.RecordBatch:
+    """One output row per key of a batch holding only COMPLETE keys,
+    sorted by (keys, size): numpy segment sums for the BEFORE stats and
+    one segmented bin-pack pass over the DATA rows for the AFTER stats."""
+    n = batch.num_rows
+    keys = batch.columns[:n_keys]
+    starts = _key_starts(keys)
+    sizes = batch.column(n_keys).to_numpy().astype("int64", copy=False)
+    is_data = pc.fill_null(
+        pc.equal(batch.column(n_keys + 1), CONTENT_DATA), False
+    ).to_numpy(zero_copy_only=False)
+
+    def seg_sum(x):
+        return np.add.reduceat(x, starts)
+
+    data_file_count = seg_sum(is_data.astype("int64"))
+    groups, cost = pack_segment_stats(
+        sizes[is_data], data_file_count, MAX_GROUP_BYTE_SIZE
+    )
+    return pa.RecordBatch.from_arrays(
+        [k.take(starts).cast(pa.string()) for k in keys]
+        + [
+            np.diff(starts, append=n),
+            seg_sum(sizes),
+            seg_sum(sizes // FETCH_SIZE + 2) * MILLISECONDS_PER_SCAN,
+            data_file_count,
+            seg_sum(np.where(is_data, sizes, 0)),
+            groups,
+            cost * MILLISECONDS_PER_SCAN,
+        ],
+        schema=schema,
+    )
+
+
+def _concat(batches: list) -> pa.RecordBatch:
+    if len(batches) == 1:
+        return batches[0]
+    return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+
+
+_STAT_COLS = [
+    "file_count",
+    "total_size",
+    "scan_overhead",
+    "data_file_count",
+    "data_size",
+    "after_file_count",
+    "after_scan_overhead",
+]
 
 
 def partition_stats_with_after(
@@ -95,17 +168,16 @@ def partition_stats_with_after(
     sum over groups of read_cost(group_total) * 1ms. Partitions whose
     files are all deletes get 0 groups (reference packs an empty list).
 
-    Plan shape: ONE scan → ONE exchange on the partition key → one
-    grouped-map pass computing both BEFORE aggregates (vectorized
-    numpy sums) and the pack simulation. Round 1 ran BEFORE and AFTER
-    as separate relational branches; Catalyst pushes filters/pruning
-    through the shared repartition, so the branches never reuse the
-    exchange and the source was scanned (and shuffled) twice — the
-    dominant cost in the round-1 bench. Fusing halves the I/O and
-    removes the before↔after join entirely. The pack fold itself is
-    O(#groups · log n) via prefix sums + searchsorted rather than a
-    per-row Python loop (semantics pinned against pack_sizes by
-    tests/test_binpack.py and the golden suite).
+    Plan shape: ONE scan → ONE hash exchange on the group key
+    (``repartition``, so no key is ever split across tasks) → a sort
+    by (key, size) within each task → one ``mapInArrow`` fold. Each
+    Python call folds EVERY key of its Arrow batch at once: key
+    boundaries from adjacent-row comparison, ``np.add.reduceat`` for
+    the BEFORE aggregates and one ``binpack.pack_segment_stats`` pass
+    for the AFTER columns. A key that straddles batches is carried as
+    a list of slices and concatenated once, when it closes, so Python
+    memory is bounded by one key group plus one batch. NULL keys form
+    one group, as in groupBy; empty input gives no rows.
 
     Output: one row per partition — (partition_key, file_count,
     total_size, scan_overhead, data_file_count, data_size,
@@ -116,63 +188,38 @@ def partition_stats_with_after(
     metadata is one unioned relation and Spark schedules all tables'
     partitions as one job).
     """
-    import numpy as np
-    import pandas as pd
-
-    fetch = FETCH_SIZE
-    cap = MAX_GROUP_BYTE_SIZE
-    ms = MILLISECONDS_PER_SCAN
     group_cols = ([table_col] if table_col else []) + [partition_col]
-
-    def _stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        sizes = pdf[size_col].to_numpy(dtype="int64")
-        content = pdf[content_col].to_numpy()
-        file_count = int(sizes.size)
-        total_size = int(sizes.sum())
-        scan_overhead = int((sizes // fetch + 2).sum()) * ms
-        data = sizes[content == CONTENT_DATA]
-        dfc = int(data.size)
-        dsz = int(data.sum())
-        groups, cost = pack_group_stats(data, cap)
-        aoh = cost * ms
-        key_vals = [pdf[c].iloc[0] for c in group_cols]
-        return pd.DataFrame(
-            [
-                key_vals
-                + [
-                    file_count,
-                    total_size,
-                    scan_overhead,
-                    dfc,
-                    dsz,
-                    groups,
-                    aoh,
-                ]
-            ],
-            columns=(
-                ([table_col] if table_col else [])
-                + [
-                    "partition_key",
-                    "file_count",
-                    "total_size",
-                    "scan_overhead",
-                    "data_file_count",
-                    "data_size",
-                    "after_file_count",
-                    "after_scan_overhead",
-                ]
-            ),
-        )
-
-    schema = _PART_AFTER_SCHEMA
-    if table_col:
-        schema = f"{table_col} string, " + schema
-    cols = files.select(
-        *[F.col(c) for c in group_cols],
-        F.col(size_col),
-        F.col(content_col),
+    n_keys = len(group_cols)
+    out_schema = pa.schema(
+        [(c, pa.string()) for c in group_cols[:-1] + ["partition_key"]]
+        + [(c, pa.int64()) for c in _STAT_COLS]
     )
-    return cols.groupBy(*group_cols).applyInPandas(_stats, schema=schema)
+
+    def _fold(batches):
+        carry: list = []  # slices of the key still open at the batch end
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            tail = None
+            if carry:
+                tail = carry[-1].slice(carry[-1].num_rows - 1).columns[:n_keys]
+            starts = _key_starts(b.columns[:n_keys], tail)
+            if not starts.size:
+                carry.append(b)
+                continue
+            closed = [s for s in carry + [b.slice(0, starts[-1])] if s.num_rows]
+            carry = [b.slice(starts[-1])]
+            if closed:
+                yield _fold_keys(_concat(closed), n_keys, out_schema)
+        if carry:
+            yield _fold_keys(_concat(carry), n_keys, out_schema)
+
+    return (
+        files.select(*group_cols, size_col, content_col)
+        .repartition(*group_cols)
+        .sortWithinPartitions(*group_cols, size_col)
+        .mapInArrow(_fold, from_arrow_schema(out_schema))
+    )
 
 
 def _aggregate_per_part(per_part: DataFrame, group_cols: list[str]) -> DataFrame:
@@ -233,76 +280,62 @@ def _aggregate_per_part(per_part: DataFrame, group_cols: list[str]) -> DataFrame
         ).alias("worst_oh"),
     )
 
+
+# (before, after) SQL over the aggregated stats, in METRICS order.
+# Metrics without a local-mode "after" (table_metric.py:86-96) carry
+# NULL after → NULL improvement.
+_METRIC_SQL = {
+    "FULL_SCAN_OVERHEAD": ("full_scan_overhead", "after_full_scan_overhead"),
+    "WORST_SCAN_OVERHEAD": (
+        "coalesce(worst_oh.before, 0)",
+        "coalesce(worst_oh.after, 0)",
+    ),
+    "FILE_COUNT": ("file_count", "after_file_count"),
+    "WORST_FILE_COUNT": (
+        "coalesce(worst_fc.before, 0)",
+        "coalesce(worst_fc.after, 0)",
+    ),
+    "AVG_FILE_SIZE": (
+        "CASE WHEN data_file_count > 0"
+        " THEN data_size / data_file_count ELSE 0D END",
+        "NULL",
+    ),
+    "WORST_AVG_FILE_SIZE": ("worst_avg_file_size", "NULL"),
+    "TOTAL_TABLE_SIZE": ("total_size", "NULL"),
+    "LARGEST_PARTITION_SIZE": ("largest_partition_size", "NULL"),
+    "TOTAL_PARTITIONS": ("total_partitions", "NULL"),
+}
+
+_UNPIVOT_SQL = "stack({}, {}) AS (metric, ordinal, before, after)".format(
+    len(METRICS),
+    ", ".join(
+        f"'{key}', {i}, CAST({_METRIC_SQL[key][0]} AS DOUBLE),"
+        f" CAST({_METRIC_SQL[key][1]} AS DOUBLE)"
+        for i, (key, _display) in enumerate(METRICS)
+    ),
+)
+
+# Improvement (A11, table_metric.py:67-70): (1 - after/before)*100;
+# 0 when both are 0; +inf when before is 0 but after isn't; NULL when
+# there is no after value.
+_IMPROVEMENT_SQL = """CASE
+    WHEN after IS NULL THEN NULL
+    WHEN before = 0 AND after = 0 THEN 0D
+    WHEN before = 0 THEN double('Infinity')
+    ELSE (1D - after / before) * 100D
+END AS improvement"""
+
+
 def _nine_metric_rows(g: DataFrame, key_cols: list[str]) -> DataFrame:
     """Unpivot the aggregated stats (with full_scan_overhead already
     including the manifest term) into the 9-row metric layout, with
     improvement (A11). key_cols pass through (empty for single-table,
     ["table_name"] for the multi-table job)."""
-    g = g.select(
-        "*",
-        (F.col("data_size") / F.col("data_file_count")).alias("_avg_raw"),
-        F.coalesce(F.col("worst_fc.before"), F.lit(0)).alias("worst_file_count"),
-        F.coalesce(F.col("worst_fc.after"), F.lit(0)).alias("after_worst_file_count"),
-        F.coalesce(F.col("worst_oh.before"), F.lit(0)).alias("worst_scan_overhead"),
-        F.coalesce(F.col("worst_oh.after"), F.lit(0)).alias(
-            "after_worst_scan_overhead"
-        ),
-    ).withColumn(
-        "avg_file_size",
-        F.when(F.col("data_file_count") > 0, F.col("_avg_raw")).otherwise(F.lit(0.0)),
-    )
-
-    # Unpivot to the 9-row metric layout. Metrics without a local-mode
-    # "after" (table_metric.py:86-96) carry NULL after → NULL improvement.
-    pairs = []
-    after_map = {
-        "FULL_SCAN_OVERHEAD": "after_full_scan_overhead",
-        "WORST_SCAN_OVERHEAD": "after_worst_scan_overhead",
-        "FILE_COUNT": "after_file_count",
-        "WORST_FILE_COUNT": "after_worst_file_count",
-    }
-    before_map = {
-        "FULL_SCAN_OVERHEAD": "full_scan_overhead",
-        "WORST_SCAN_OVERHEAD": "worst_scan_overhead",
-        "FILE_COUNT": "file_count",
-        "WORST_FILE_COUNT": "worst_file_count",
-        "AVG_FILE_SIZE": "avg_file_size",
-        "WORST_AVG_FILE_SIZE": "worst_avg_file_size",
-        "TOTAL_TABLE_SIZE": "total_size",
-        "LARGEST_PARTITION_SIZE": "largest_partition_size",
-        "TOTAL_PARTITIONS": "total_partitions",
-    }
-    for ordinal, (key, _display) in enumerate(METRICS):
-        before = F.col(before_map[key]).cast("double")
-        after = (
-            F.col(after_map[key]).cast("double")
-            if key in after_map
-            else F.lit(None).cast("double")
-        )
-        pairs.append(
-            F.struct(
-                F.lit(key).alias("metric"),
-                F.lit(ordinal).alias("ordinal"),
-                before.alias("before"),
-                after.alias("after"),
-            )
-        )
-
-    rows = g.select(
-        *key_cols, F.explode(F.array(*pairs)).alias("m")
-    ).select(*key_cols, "m.*")
-
-    # Improvement (A11, table_metric.py:67-70): (1 - after/before)*100;
-    # 0 when both are 0; +inf when before is 0 but after isn't; NULL
-    # when there is no after value.
-    improvement = (
-        F.when(F.col("after").isNull(), F.lit(None).cast("double"))
-        .when((F.col("before") == 0) & (F.col("after") == 0), F.lit(0.0))
-        .when(F.col("before") == 0, F.lit(float("inf")))
-        .otherwise((F.lit(1.0) - F.col("after") / F.col("before")) * 100.0)
-    )
-    return rows.withColumn("improvement", improvement).orderBy(
-        *key_cols, "ordinal"
+    keys = [f"`{c}`" for c in key_cols]
+    return (
+        g.selectExpr(*keys, _UNPIVOT_SQL)
+        .selectExpr("*", _IMPROVEMENT_SQL)
+        .orderBy(*key_cols, "ordinal")
     )
 
 

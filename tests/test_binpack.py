@@ -7,7 +7,9 @@ from __future__ import annotations
 
 import random
 
+import numpy as np
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from iceberg_diag_spark.functions.cost import MAX_GROUP_BYTE_SIZE
 from iceberg_diag_spark.operators.binpack import binpack_groups, pack_sizes
@@ -107,3 +109,106 @@ def test_pack_group_stats_equals_reference_fold(sizes):
     got_groups, got_cost = pack_group_stats(sizes)
     assert got_groups == len(groups)
     assert got_cost == want_cost
+
+
+_EDGE_SIZES = st.one_of(
+    st.integers(min_value=0, max_value=2_000 * MIB),
+    st.sampled_from(
+        [0, MAX_GROUP_BYTE_SIZE - 1, MAX_GROUP_BYTE_SIZE, MAX_GROUP_BYTE_SIZE + 1]
+    ),
+)
+
+
+@given(st.lists(st.lists(_EDGE_SIZES, max_size=40), max_size=12))
+@settings(max_examples=300, deadline=None)
+def test_segmented_kernel_equals_pack_sizes_per_segment(segments):
+    """The segmented kernel behind the diagnostics fold equals
+    pack_sizes applied to each segment on its own — groups, group
+    count and read cost — with empty segments, zero sizes and sizes of
+    exactly the cap and the cap ± 1."""
+    from iceberg_diag_spark.functions.cost import FETCH_SIZE
+    from iceberg_diag_spark.operators.binpack import (
+        pack_segment_stats,
+        pack_segments,
+    )
+
+    flat = [s for seg in segments for s in sorted(seg)]
+    lens = [len(seg) for seg in segments]
+    seg, ends, totals = pack_segments(flat, lens)
+    groups, cost = pack_segment_stats(flat, lens)
+    offset = 0
+    for j, sizes in enumerate(segments):
+        want = pack_sizes(sizes)
+        mine = seg == j
+        got = list(
+            zip(np.diff(ends[mine], prepend=offset - 1).tolist(), totals[mine].tolist())
+        )
+        assert got == want
+        assert groups[j] == len(want)
+        assert cost[j] == sum(t // FETCH_SIZE + 2 for _, t in want)
+        offset += len(sizes)
+
+
+def _reference_stats(df, keys):
+    """partition_stats for the BEFORE columns plus pack_sizes of each
+    key's DATA sizes, computed in Python, for the AFTER columns."""
+    from iceberg_diag_spark.functions.cost import FETCH_SIZE
+    from iceberg_diag_spark.operators.diagnostics import partition_stats
+
+    rows = df.collect()
+    out = set()
+    for key in keys:
+        part = df.filter(F.col("table_name") == key) if key else df
+        data = {}
+        for r in rows:
+            if (not key or r["table_name"] == key) and r["content"] == 0:
+                data.setdefault(r["partition_key"], []).append(r["file_size_in_bytes"])
+        for r in partition_stats(part).collect():
+            packs = pack_sizes(data.get(r["partition_key"], []))
+            out.add(
+                ((key,) if key else ())
+                + tuple(r)
+                + (len(packs), sum(t // FETCH_SIZE + 2 for _, t in packs))
+            )
+    return out
+
+
+def test_arrow_fold_matches_reference_across_batches(spark):
+    """partition_stats_with_after with 7-row Arrow batches, so keys
+    straddle batches: a NULL partition, a delete-only partition, an
+    empty input and the two-key table_col path all equal
+    partition_stats plus pack_sizes per key."""
+    from iceberg_diag_spark.operators.diagnostics import partition_stats_with_after
+
+    rng = random.Random(11)
+    sizes = [0, 1, MAX_GROUP_BYTE_SIZE, MAX_GROUP_BYTE_SIZE + 1, 400 * MIB]
+    rows = []
+    for table in ("t1", "t2"):
+        for key, n in (("a", 40), ("b", 1), (None, 9), ("c", 23), ("e", 7)):
+            for _ in range(n):
+                size = rng.choice(sizes + [rng.randint(0, 900 * MIB)])
+                rows.append((table, key, size, rng.choice([0, 0, 1, 2])))
+        rows += [(table, "deletes_only", 5 * MIB, c) for c in (1, 2, 1)]
+    df = spark.createDataFrame(
+        rows,
+        "table_name string, partition_key string,"
+        " file_size_in_bytes long, content int",
+    )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        single = df.filter(F.col("table_name") == "t1").drop("table_name")
+        got = {tuple(r) for r in partition_stats_with_after(single).collect()}
+        assert got == _reference_stats(single, [None])
+        assert {r[0] for r in got} == {"a", "b", None, "c", "e", "deletes_only"}
+        assert [r[-2:] for r in got if r[0] == "deletes_only"] == [(0, 0)]
+
+        multi = partition_stats_with_after(df, table_col="table_name")
+        got = {tuple(r) for r in multi.collect()}
+        assert got == _reference_stats(df, ["t1", "t2"])
+        assert len(got) == 12
+
+        assert partition_stats_with_after(single.limit(0)).collect() == []
+    finally:
+        spark.conf.set(conf, prev)

@@ -138,3 +138,31 @@ def test_cli_maintenance_skips_retention_without_timestamps(
     out = capsys.readouterr().out
     assert "delete-file burden" in out
     assert "snapshot retention" not in out
+
+
+def test_cli_maintenance_output_independent_of_shuffle_partitions(
+    spark, capsys, tmp_path_factory
+):
+    """The maintenance panels are ordered by partition, so the printed
+    rows (and the subset the row cap keeps) do not depend on how many
+    shuffle partitions, and so cores, the session has."""
+    out_dir = str(tmp_path_factory.mktemp("cli_maint_order")) + "/files.parquet"
+    spark.range(3000).select(
+        (F.col("id") % 400).cast("string").alias("partition_key"),
+        ((F.col("id") * 7919) % 900_000_000 + 1).alias("file_size_in_bytes"),
+        (F.col("id") % 3).cast("int").alias("content"),
+        F.expr("timestamp'2024-01-01' + make_interval(0, 0, 0, id % 700)").alias(
+            "added_at"
+        ),
+    ).write.mode("overwrite").parquet(out_dir)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    outs = []
+    try:
+        for n in ("4", "32"):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            assert main(["--files", out_dir, "--maintenance"], spark=spark) == 0
+            outs.append(capsys.readouterr().out)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert "snapshot retention" in outs[0]
+    assert outs[0] == outs[1]

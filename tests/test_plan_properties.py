@@ -82,14 +82,32 @@ def test_minhash_no_python_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_diag_metrics_python_only_for_binpack(spark):
-    plan = _plan(spark, "diag_metrics")
-    # exactly one pandas stage: the fused before-stats + bin-pack fold
-    assert _op_count(plan, "FlatMapGroupsInPandas") == 1
+def _assert_single_arrow_fold(plan: str) -> None:
+    # exactly one Python stage: the Arrow fold of before-stats +
+    # bin-pack over every partition key of a batch, no per-key pandas
+    assert _op_count(plan, "MapInArrow") == 1
+    assert _op_count(plan, "FlatMapGroupsInPandas") == 0
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python
-    # single-pass: the files relation is scanned exactly once (round 1
-    # had separate BEFORE and AFTER branches scanning it twice)
+    # single-pass: the files relation is scanned exactly once
     assert _op_count(plan, "Scan parquet") == 1
+    # MapInArrow <- Sort <- Exchange: a hash repartition on the key,
+    # which never splits a key across tasks (a rebalance may)
+    fold = int(re.search(r"^\((\d+)\) MapInArrow", plan, re.M).group(1))
+    assert re.search(rf"^\({fold - 1}\) Sort$", plan, re.M)
+    assert re.search(
+        rf"^\({fold - 2}\) Exchange\n.*\nArguments: hashpartitioning\(.*\),"
+        r" REPARTITION_BY_COL,",
+        plan,
+        re.M,
+    )
+
+
+def test_diag_metrics_python_only_for_binpack(spark):
+    _assert_single_arrow_fold(_plan(spark, "diag_metrics"))
+
+
+def test_diag_metrics_multi_python_only_for_binpack(spark):
+    _assert_single_arrow_fold(_plan(spark, "diag_metrics_multi_table"))
 
 
 def test_corpus_curation_single_scan(spark):
