@@ -10,7 +10,8 @@ Design principles (100 TB-first):
 - Shuffle-light: partial aggregation, broadcast of small sides,
   two-level (partial/final) aggregation patterns.
 - Python only where relational ops can't express semantics (one
-  grouped-map pandas UDF: greedy bin-packing).
+  per-key Arrow fold, ``functions.parallel.fold_by_key``: greedy
+  bin-packing and sequence packing).
 """
 
 __version__ = "0.1.0"

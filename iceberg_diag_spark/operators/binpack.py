@@ -12,14 +12,14 @@ fold — not expressible with window prefix sums.
 Spark mapping: one kernel, ``pack_segments``, folds any number of
 independent segments (partitions) of ascending sizes at once — one
 prefix sum over all rows, then one vectorized ``searchsorted`` per
-pack-group step across every open segment. The diagnostics panel
-(``diagnostics.partition_stats_with_after``) feeds it every partition
-of an Arrow batch from one ``mapInArrow`` call, after a hash
-repartition and a sort by (partition, size); ``binpack_groups`` and
-``compaction.binpack_assign`` emit a row per group or per file from a
-grouped-map ``applyInPandas`` and call it as its one-segment case
-(``pack_group_bounds``). At 100 TB the input here is *metadata* scale
-(one row per data file — millions of rows, KBs per partition).
+pack-group step across every open segment. Every caller feeds it the
+partitions of an Arrow batch from ``parallel.fold_by_key`` (a hash
+repartition, a sort by (partition, size), one ``mapInArrow`` call per
+batch): the diagnostics panel through ``pack_segment_stats``,
+``binpack_groups`` and ``compaction.binpack_assign`` through
+``pack_keys`` for a row per group or per file. At 100 TB the input
+here is *metadata* scale (one row per data file — millions of rows,
+KBs per partition).
 
 Parallelism caveat (inherent to the reference's per-partition fold):
 a partition is never split across tasks, so an UNPARTITIONED table
@@ -31,20 +31,17 @@ large for one task has bigger problems than this fold.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
 from iceberg_diag_spark.functions.cost import MAX_GROUP_BYTE_SIZE
-
-GROUPS_SCHEMA = (
-    "partition_key string, group_id long, group_file_count long, group_size long"
-)
+from iceberg_diag_spark.functions.parallel import fold_by_key
 
 
 def pack_sizes(sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE):
-    """Pure-python reference fold used inside the pandas UDF and in
-    property tests. Returns list of (count, total_size) per group.
+    """Pure-python reference fold, used in property tests. Returns
+    list of (count, total_size) per group.
 
     Mirrors check-before-append semantics exactly.
     """
@@ -100,16 +97,18 @@ def pack_segments(
     return tuple(np.concatenate(c) for c in zip(*out))
 
 
-def pack_group_bounds(
-    sorted_sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE
-):
-    """One-segment case of pack_segments: (ends, totals) of every group
-    over ASCENDING sizes. Used by binpack_groups and
+def pack_keys(sorted_sizes, starts, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE):
+    """pack_segments over the key groups of a ``fold_by_key`` batch
+    (one segment from each row of ``starts``): per group, in row
+    order, (its segment, its rank within the segment, its file count,
+    its byte total). Used by binpack_groups and
     compaction.binpack_assign."""
-    _, ends, totals = pack_segments(
-        sorted_sizes, [len(sorted_sizes)], max_bytes_per_group
-    )
-    return ends, totals
+    lens = np.diff(starts, append=len(sorted_sizes))
+    seg, ends, totals = pack_segments(sorted_sizes, lens, max_bytes_per_group)
+    order = np.argsort(ends)  # by segment, then fold order
+    seg, ends = seg[order], ends[order]
+    rank = np.arange(len(seg)) - np.searchsorted(seg, seg)
+    return seg, rank, np.diff(ends, prepend=-1), totals[order]
 
 
 def pack_segment_stats(
@@ -127,16 +126,6 @@ def pack_segment_stats(
     return groups, cost
 
 
-def pack_group_stats(sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE):
-    """One-segment case of pack_segment_stats over UNSORTED sizes:
-    (n_groups, sum-of-group read costs) as ints."""
-    groups, cost = pack_segment_stats(
-        np.sort(np.asarray(sizes, dtype="int64")), [len(sizes)],
-        max_bytes_per_group,
-    )
-    return int(groups[0]), int(cost[0])
-
-
 def binpack_groups(
     data_files: DataFrame,
     partition_col: str = "partition_key",
@@ -146,22 +135,21 @@ def binpack_groups(
     """DATA-file sizes per partition -> one row per packed group.
 
     Input: DataFrame with (partition_col, size_col) — caller filters to
-    DATA content. Output: (partition_key, group_id, group_file_count,
-    group_size).
+    DATA content. Output: (partition_col as a string, group_id,
+    group_file_count, group_size) — one ``fold_by_key`` pass sorted by
+    size; group_id is the group's rank within its partition.
     """
+    schema = pa.schema(
+        [(partition_col, pa.string())]
+        + [(c, pa.int64()) for c in ("group_id", "group_file_count", "group_size")]
+    )
 
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        ends, totals = pack_group_bounds(
-            np.sort(pdf[size_col].to_numpy()), max_bytes_per_group
+    def _pack(batch, starts):
+        seg, rank, count, total = pack_keys(
+            batch.column(1).to_numpy(), starts, max_bytes_per_group
         )
-        return pd.DataFrame(
-            {
-                partition_col: pdf[partition_col].iloc[0],
-                "group_id": np.arange(len(ends), dtype="int64"),
-                "group_file_count": np.diff(ends, prepend=-1),
-                "group_size": totals,
-            }
-        )
+        key = batch.column(0).take(starts[seg]).cast(pa.string())
+        return pa.RecordBatch.from_arrays([key, rank, count, total], schema=schema)
 
     cols = data_files.select(partition_col, size_col)
-    return cols.groupBy(partition_col).applyInPandas(_pack, schema=GROUPS_SCHEMA)
+    return fold_by_key(cols, [partition_col], [size_col], _pack, schema)

@@ -19,8 +19,8 @@ is checked against measured-after instead of trusted.
 Scale shape (100 TB):
 - Pack decisions run on file METADATA (one row per file — the
   Iceberg ``.files`` relation in production, a per-file aggregate of
-  the data here), never on data rows: the assignment applyInPandas
-  shuffles #files rows, not the table.
+  the data here), never on data rows: the assignment fold
+  (``parallel.fold_by_key``) shuffles #files rows, not the table.
 - The data-side rewrite is ONE partition-pruned scan of the affected
   partitions, one join against the file→group assignment (metadata
   scale, stats-driven — no broadcast hint; Catalyst broadcasts it at
@@ -45,21 +45,22 @@ Scale shape (100 TB):
 
 from __future__ import annotations
 
+from urllib.parse import unquote
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from iceberg_diag_spark.functions.cost import (
     MAX_GROUP_BYTE_SIZE,
     read_file_cost,
 )
-from iceberg_diag_spark.functions.parallel import materialize
-from iceberg_diag_spark.operators.binpack import pack_group_bounds
+from iceberg_diag_spark.functions.parallel import fold_by_key, materialize
+from iceberg_diag_spark.operators.binpack import pack_keys
 from iceberg_diag_spark.operators.sampling import membership_checksums
 from iceberg_diag_spark.sources.sinks import rewrite_partitions
-
-ASSIGN_SCHEMA = "partition_key string, file_id long, gid long"
 
 LEDGER_COLUMNS = [
     "partition_key",
@@ -86,39 +87,64 @@ def binpack_assign(
     size_col: str = "logical_size",
     max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE,
 ) -> DataFrame:
-    """File → bin-pack group assignment: WHICH group each file lands
-    in, not just the group profile ``binpack_groups`` emits.
+    """File → bin-pack group assignment: every input row (one per
+    file) plus ``gid``, the group it lands in — WHICH group each file
+    lands in, not just the group profile ``binpack_groups`` emits.
 
     Same fold as ``pack_sizes`` (check-before-append, ascending, via
-    ``binpack.pack_group_bounds``) with a (size, file_id) tie-break so
+    ``binpack.pack_keys``) with a (size, file_id) tie-break so
     membership is deterministic under any input order; the group
     (count, total) profile is tie-invariant and equals pack_sizes'
     (property-pinned in tests). Input is file metadata — one row per
-    file — so the grouped pandas fold is metadata-scale, parallel
+    file — so the ``fold_by_key`` pass is metadata-scale, parallel
     across partitions exactly like binpack_groups.
     """
+    schema = to_arrow_schema(file_sizes.schema).append(pa.field("gid", pa.int64()))
 
-    def _assign(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([size_col, file_col], kind="mergesort")
-        ends, _ = pack_group_bounds(
-            pdf[size_col].to_numpy(), max_bytes_per_group
+    def _assign(batch, starts):
+        _, rank, count, _ = pack_keys(
+            batch.column(size_col).to_numpy(), starts, max_bytes_per_group
         )
-        return pd.DataFrame(
-            {
-                partition_col: pdf[partition_col],
-                file_col: pdf[file_col],
-                "gid": np.repeat(
-                    np.arange(len(ends), dtype="int64"),
-                    np.diff(ends, prepend=-1),
-                ),
-            }
-        )
+        gid = np.repeat(rank, count)
+        return pa.RecordBatch.from_arrays(batch.columns + [gid], schema=schema)
 
-    cols = file_sizes.select(partition_col, file_col, size_col)
-    return cols.groupBy(partition_col).applyInPandas(
-        _assign,
-        schema=f"{partition_col} string, {file_col} long, gid long",
+    return fold_by_key(
+        file_sizes, [partition_col], [size_col, file_col], _assign, schema
     )
+
+
+def _hive_values(path: str) -> dict[str, str | None]:
+    """The ``col=value`` segments of a Hive layout path, as a Spark
+    read returns them: %XX-unescaped (Hive escapes special chars in
+    dir names, so an escaped value would miss every join) and the
+    default-partition dir name as None, the NULL partition."""
+    out = {}
+    for seg in path.split("/"):
+        col, eq, val = seg.partition("=")
+        if eq:
+            val = unquote(val)
+            out[unquote(col)] = None if val == "__HIVE_DEFAULT_PARTITION__" else val
+    return out
+
+
+def _member(col: str, values: list) -> Column:
+    """Null-safe ``col IN values``: never NULL, and true on a NULL
+    value when None is listed — ``isin`` never matches the NULL
+    partition."""
+    known = [v for v in values if v is not None]
+    return F.coalesce(F.col(col).isin(known), F.lit(None in values))
+
+
+def _join_keys(
+    left: DataFrame, right: DataFrame, keys: list[str], how: str = "inner"
+) -> DataFrame:
+    """``left.join(right, keys, how)`` where NULL keys match, as
+    groupBy groups them: the NULL partition is a partition too."""
+    r = right.select(
+        *(F.col(c).alias(f"_r_{c}") if c in keys else c for c in right.columns)
+    )
+    on = [left[k].eqNullSafe(r[f"_r_{k}"]) for k in keys]
+    return left.join(r, on, how).drop(*(f"_r_{k}" for k in keys))
 
 
 def physical_file_sizes(
@@ -133,35 +159,24 @@ def physical_file_sizes(
     a filesystem walk. The listing is driver-side but file-count
     (metadata) scale, and works on any Hadoop filesystem.
     """
-    from urllib.parse import unquote
-
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    agg: dict[tuple[str, int], list[int]] = {}
+    agg: dict[tuple[str | None, int], list[int]] = {}
     it = fs.listFiles(jpath, True)
-    p_tag, f_tag = f"{partition_col}=", f"{file_col}="
     while it.hasNext():
         st = it.next()
         name = st.getPath().getName()
         if not st.isFile() or name.startswith(("_", ".")):
             continue
-        part = file_id = None
-        for seg in st.getPath().toString().split("/"):
-            if seg.startswith(p_tag):
-                # Hive %XX-escapes special chars in partition dir
-                # names; the Spark read returns the UNescaped value,
-                # so parse back to it or the metadata join misses.
-                part = unquote(seg[len(p_tag):])
-            elif seg.startswith(f_tag):
-                file_id = int(seg[len(f_tag):])
-        if part is None or file_id is None:
+        kv = _hive_values(st.getPath().toString())
+        if partition_col not in kv or kv.get(file_col) is None:
             continue
-        cur = agg.setdefault((part, file_id), [0, 0])
+        cur = agg.setdefault((kv[partition_col], int(kv[file_col])), [0, 0])
         cur[0] += int(st.getLen())
         cur[1] += 1
     return spark.createDataFrame(
-        [(p, f, s, n) for (p, f), (s, n) in sorted(agg.items())],
+        [(p, f, s, n) for (p, f), (s, n) in agg.items()],
         f"{partition_col} string, {file_col} long, size_in_bytes long,"
         " n_phys long",
     )
@@ -203,34 +218,24 @@ def _leaf_dirs(
     partition value into a path string misses any Hive-escaped dir
     name, so deletions are driven by the listing instead. Driver-side
     but directory-count (metadata) scale."""
-    from urllib.parse import unquote
-
     jvm = spark._jvm
     root = jvm.org.apache.hadoop.fs.Path(path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = []
-    f_tag = f"{file_col}="
-    if partition_col is None:
-        for fst in fs.listStatus(root):
-            fname = fst.getPath().getName()
-            if fst.isDirectory() and fname.startswith(f_tag):
-                out.append(
-                    (None, int(fname[len(f_tag):]), fst.getPath().toString())
-                )
-        return out
-    p_tag = f"{partition_col}="
-    for pst in fs.listStatus(root):
-        pname = pst.getPath().getName()
-        if not pst.isDirectory() or not pname.startswith(p_tag):
-            continue
-        pval = unquote(pname[len(p_tag):])
-        for fst in fs.listStatus(pst.getPath()):
-            fname = fst.getPath().getName()
-            if fst.isDirectory() and fname.startswith(f_tag):
-                out.append(
-                    (pval, int(fname[len(f_tag):]), fst.getPath().toString())
-                )
-    return out
+
+    def _children(parent, col):
+        for st in fs.listStatus(parent):
+            kv = _hive_values(st.getPath().getName())
+            if st.isDirectory() and col in kv:
+                yield kv[col], st.getPath()
+
+    parents = [(None, root)] if partition_col is None else _children(
+        root, partition_col
+    )
+    return [
+        (pval, int(fid), fpath.toString())
+        for pval, ppath in parents
+        for fid, fpath in _children(ppath, file_col)
+    ]
 
 
 def compact_apply_binpack(
@@ -299,7 +304,7 @@ def compact_apply_binpack(
     if partitions is not None:
         if not partitions:
             raise ValueError("partitions batch must be non-empty")
-        pre = pre.filter(F.col(partition_col).isin(list(partitions)))
+        pre = pre.filter(_member(partition_col, list(partitions)))
 
     def _file_stats(rel: DataFrame) -> DataFrame:
         return _per_file_stats(
@@ -322,7 +327,7 @@ def compact_apply_binpack(
         # its rows while every ledger digest stays green (stale
         # .files snapshot = data loss). The check is metadata-scale.
         uncovered = (
-            per_file.join(meta, [partition_col, file_col], "left_anti")
+            _join_keys(per_file, meta, [partition_col, file_col], "left_anti")
             .select(partition_col, file_col)
             .limit(5)
             .collect()
@@ -336,45 +341,44 @@ def compact_apply_binpack(
                     f"({r[partition_col]}, {r[file_col]})" for r in uncovered
                 )
             )
-        sized = materialize(per_file.join(
-            meta, [partition_col, file_col]
+        sized = materialize(_join_keys(
+            per_file, meta, [partition_col, file_col]
         ), eager=True)
     else:
         sized = per_file.withColumn("fsz", F.col("row_bytes"))
 
     asg = binpack_assign(
-        sized.select(
-            partition_col, file_col, F.col("fsz").alias("logical_size")
-        ),
+        sized,
         partition_col=partition_col,
         file_col=file_col,
+        size_col="fsz",
         max_bytes_per_group=max_bytes_per_group,
     )
-    withg = sized.join(asg, [partition_col, file_col])
-    per_group = withg.groupBy(partition_col, "gid").agg(
-        F.sum("fsz").alias("gsz")
+    # Per group, then per partition: the planned overhead prices each
+    # group's byte total, every other column sums over its files.
+    per_group = asg.groupBy(partition_col, "gid").agg(
+        F.count(F.lit(1)).alias("files"),
+        F.sum("n_phys").alias("phys"),
+        F.sum("n_rows").alias("rows"),
+        F.sum("row_bytes").alias("bytes"),
+        F.sum(read_file_cost(F.col("fsz"))).alias("cost"),
+        F.sum("fsz").alias("gsz"),
+        F.bit_xor("x1").alias("x1"),
+        F.bit_xor("x2").alias("x2"),
     )
     plan = materialize(
-        withg.groupBy(partition_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("files_before"),
-            F.sum("n_phys").cast("long").alias("phys_before"),
-            F.sum("n_rows").cast("long").alias("rows_before"),
-            F.sum("row_bytes").cast("long").alias("size_before"),
-            F.sum(read_file_cost(F.col("fsz")))
-            .cast("long")
-            .alias("scan_overhead_before"),
-            F.countDistinct("gid").cast("long").alias("groups_planned"),
+        per_group.groupBy(partition_col).agg(
+            F.sum("files").cast("long").alias("files_before"),
+            F.sum("phys").cast("long").alias("phys_before"),
+            F.sum("rows").cast("long").alias("rows_before"),
+            F.sum("bytes").cast("long").alias("size_before"),
+            F.sum("cost").cast("long").alias("scan_overhead_before"),
+            F.count(F.lit(1)).cast("long").alias("groups_planned"),
             F.bit_xor("x1").alias("bx1"),
             F.bit_xor("x2").alias("bx2"),
-        )
-        .join(
-            per_group.groupBy(partition_col).agg(
-                F.sum(read_file_cost(F.col("gsz")))
-                .cast("long")
-                .alias("scan_overhead_planned")
-            ),
-            partition_col,
+            F.sum(read_file_cost(F.col("gsz")))
+            .cast("long")
+            .alias("scan_overhead_planned"),
         ),
         eager=True,
     )
@@ -400,14 +404,14 @@ def compact_apply_binpack(
             for f in pre.schema.fields
             if f.name not in (partition_col, file_col)
         ]
-        kept = (
-            pre.filter(F.col(partition_col).isin(todo))
-            .join(asg, [partition_col, file_col])
-            .select(
-                *data_cols,
-                F.col("gid").cast("long").alias(file_col),
-                partition_col,
-            )
+        kept = _join_keys(
+            pre.filter(_member(partition_col, todo)),
+            asg.select(partition_col, file_col, "gid"),
+            [partition_col, file_col],
+        ).select(
+            *data_cols,
+            F.col("gid").cast("long").alias(file_col),
+            partition_col,
         )
         # gids are contiguous 0..k-1 and every group is non-empty, so
         # the write replaces exactly those leaf dirs and the stale
@@ -437,7 +441,7 @@ def compact_apply_binpack(
     # row — same bytes on disk, byte-identity pytest-pinned.
     untouched = plan
     if todo:
-        untouched = plan.filter(~F.col(partition_col).isin(todo))
+        untouched = plan.filter(~_member(partition_col, todo))
     after = untouched.select(
         partition_col,
         F.col("phys_before").alias("files_after"),
@@ -451,13 +455,14 @@ def compact_apply_binpack(
         post = _file_stats(
             spark.read.schema(read_schema)
             .parquet(path)
-            .filter(F.col(partition_col).isin(todo))
+            .filter(_member(partition_col, todo))
         )
         if file_sizes is not None:
             relisted = physical_file_sizes(
                 spark, path, partition_col, file_col
-            ).filter(F.col(partition_col).isin(todo))
-            post = post.join(
+            ).filter(_member(partition_col, todo))
+            post = _join_keys(
+                post,
                 relisted.select(
                     partition_col,
                     file_col,
@@ -479,7 +484,7 @@ def compact_apply_binpack(
         )
         after = after.unionByName(measured)
 
-    return (
+    return _join_keys(
         plan.select(
             partition_col,
             F.col("phys_before").alias("files_before"),
@@ -491,10 +496,10 @@ def compact_apply_binpack(
             (F.col("groups_planned") < F.col("phys_before")).alias(
                 "compacted"
             ),
-        )
-        .join(after, partition_col)
-        .orderBy(partition_col)
-    )
+        ),
+        after,
+        [partition_col],
+    ).orderBy(partition_col)
 
 
 def cluster_apply_sorted(

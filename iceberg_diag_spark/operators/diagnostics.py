@@ -26,11 +26,12 @@ from the reference unit test (tests/test_metric_calculator.py:46-91).
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
 
 from iceberg_diag_spark.functions.cost import (
     CONTENT_DATA,
@@ -39,6 +40,7 @@ from iceberg_diag_spark.functions.cost import (
     MILLISECONDS_PER_SCAN,
     scan_overhead_ms,
 )
+from iceberg_diag_spark.functions.parallel import fold_by_key
 from iceberg_diag_spark.operators.binpack import pack_segment_stats
 
 # Display order + reference display names (table_metric.py:9-18).
@@ -79,37 +81,14 @@ def partition_stats(
     )
 
 
-def _key_breaks(prev: list, cur: list) -> np.ndarray:
-    """Row-wise "key differs" flags between two equal-length lists of
-    Arrow key columns. NULL equals NULL, as in groupBy."""
-    out = np.zeros(len(cur[0]), dtype=bool)
-    for a, b in zip(prev, cur):
-        same = pc.or_(
-            pc.fill_null(pc.equal(a, b), False),
-            pc.and_(pc.is_null(a), pc.is_null(b)),
-        )
-        out |= ~same.to_numpy(zero_copy_only=False)
-    return out
-
-
-def _key_starts(keys: list, tail: list | None = None) -> np.ndarray:
-    """Rows where a new key begins in sorted Arrow key columns. Row 0
-    begins one unless it continues ``tail``, the key columns of the
-    row before it."""
-    first = [True] if tail is None else _key_breaks(tail, [k[:1] for k in keys])
-    rest = _key_breaks([k[:-1] for k in keys], [k[1:] for k in keys])
-    return np.flatnonzero(np.concatenate([first, rest]))
-
-
 def _fold_keys(
-    batch: pa.RecordBatch, n_keys: int, schema: pa.Schema
+    batch: pa.RecordBatch, starts: np.ndarray, n_keys: int, schema: pa.Schema
 ) -> pa.RecordBatch:
     """One output row per key of a batch holding only COMPLETE keys,
     sorted by (keys, size): numpy segment sums for the BEFORE stats and
     one segmented bin-pack pass over the DATA rows for the AFTER stats."""
     n = batch.num_rows
     keys = batch.columns[:n_keys]
-    starts = _key_starts(keys)
     sizes = batch.column(n_keys).to_numpy().astype("int64", copy=False)
     is_data = pc.fill_null(
         pc.equal(batch.column(n_keys + 1), CONTENT_DATA), False
@@ -137,12 +116,6 @@ def _fold_keys(
     )
 
 
-def _concat(batches: list) -> pa.RecordBatch:
-    if len(batches) == 1:
-        return batches[0]
-    return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
-
-
 _STAT_COLS = [
     "file_count",
     "total_size",
@@ -168,16 +141,12 @@ def partition_stats_with_after(
     sum over groups of read_cost(group_total) * 1ms. Partitions whose
     files are all deletes get 0 groups (reference packs an empty list).
 
-    Plan shape: ONE scan → ONE hash exchange on the group key
-    (``repartition``, so no key is ever split across tasks) → a sort
-    by (key, size) within each task → one ``mapInArrow`` fold. Each
-    Python call folds EVERY key of its Arrow batch at once: key
-    boundaries from adjacent-row comparison, ``np.add.reduceat`` for
-    the BEFORE aggregates and one ``binpack.pack_segment_stats`` pass
-    for the AFTER columns. A key that straddles batches is carried as
-    a list of slices and concatenated once, when it closes, so Python
-    memory is bounded by one key group plus one batch. NULL keys form
-    one group, as in groupBy; empty input gives no rows.
+    Plan shape: ONE scan → ``parallel.fold_by_key`` on the group key,
+    sorted by size (one hash exchange, a sort, one ``mapInArrow``).
+    Each Python call folds EVERY key of its Arrow batch at once:
+    ``np.add.reduceat`` for the BEFORE aggregates and one
+    ``binpack.pack_segment_stats`` pass for the AFTER columns. NULL
+    keys form one group, as in groupBy; empty input gives no rows.
 
     Output: one row per partition — (partition_key, file_count,
     total_size, scan_overhead, data_file_count, data_size,
@@ -194,32 +163,9 @@ def partition_stats_with_after(
         [(c, pa.string()) for c in group_cols[:-1] + ["partition_key"]]
         + [(c, pa.int64()) for c in _STAT_COLS]
     )
-
-    def _fold(batches):
-        carry: list = []  # slices of the key still open at the batch end
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            tail = None
-            if carry:
-                tail = carry[-1].slice(carry[-1].num_rows - 1).columns[:n_keys]
-            starts = _key_starts(b.columns[:n_keys], tail)
-            if not starts.size:
-                carry.append(b)
-                continue
-            closed = [s for s in carry + [b.slice(0, starts[-1])] if s.num_rows]
-            carry = [b.slice(starts[-1])]
-            if closed:
-                yield _fold_keys(_concat(closed), n_keys, out_schema)
-        if carry:
-            yield _fold_keys(_concat(carry), n_keys, out_schema)
-
-    return (
-        files.select(*group_cols, size_col, content_col)
-        .repartition(*group_cols)
-        .sortWithinPartitions(*group_cols, size_col)
-        .mapInArrow(_fold, from_arrow_schema(out_schema))
-    )
+    cols = files.select(*group_cols, size_col, content_col)
+    fold = partial(_fold_keys, n_keys=n_keys, schema=out_schema)
+    return fold_by_key(cols, group_cols, [size_col], fold, out_schema)
 
 
 def _aggregate_per_part(per_part: DataFrame, group_cols: list[str]) -> DataFrame:

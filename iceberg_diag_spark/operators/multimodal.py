@@ -302,19 +302,14 @@ def shard_plan(
     """
     from iceberg_diag_spark.operators.binpack import binpack_groups
 
-    # binpack_groups' grouped-map schema names its key partition_key;
-    # feed it under that name and alias back on the way out.
-    items = media.select(
-        F.col("media_type").alias("partition_key"),
-        F.col("meta.byte_len").alias("byte_len"),
-    )
     groups = binpack_groups(
-        items,
+        media.select("media_type", F.col("meta.byte_len").alias("byte_len")),
+        partition_col="media_type",
         size_col="byte_len",
         max_bytes_per_group=target_bytes,
     )
     return groups.select(
-        F.col("partition_key").alias("media_type"),
+        "media_type",
         F.col("group_id").cast("long").alias("shard_id"),
         F.col("group_file_count").cast("long").alias("n_items"),
         F.col("group_size").cast("long").alias("shard_bytes"),

@@ -10,35 +10,42 @@ with that doc. A single doc longer than the capacity forms its own
 sequence, flagged ``truncated`` (training would split it; the packer
 just reports it).
 
-Spark mapping: grouped-map ``applyInPandas`` keyed by
-(source, shard) where shard = doc_id % n_shards. The shard key is the
-scale lever — packing is embarrassingly parallel across shards, so at
-100 TB you raise n_shards until each group's token metadata fits one
-task comfortably (the pandas frame holds one int per doc, not the
-text: ~8 MB per million docs). Output is one row per packed sequence,
-already aggregated, so nothing wide crosses the shuffle in either
-direction. Deterministic for a fixed (capacity, n_shards): no RNG,
-order is doc_id.
+Spark mapping: ``parallel.fold_by_key`` keyed by (source, shard),
+where shard = doc_id % n_shards, sorted by doc_id — one Python call
+per Arrow batch folds every (source, shard) of the batch at once. The
+shard key is the scale lever — packing is embarrassingly parallel
+across shards, so at 100 TB you raise n_shards until each group's
+token metadata fits one task comfortably (the fold holds one int per
+doc, not the text: ~8 MB per million docs). Nothing wide crosses the
+shuffle in either direction. Deterministic for a fixed (capacity,
+n_shards): no RNG, order is doc_id.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
-from iceberg_diag_spark.functions.parallel import materialize
+from iceberg_diag_spark.functions.parallel import fold_by_key, materialize
 from iceberg_diag_spark.operators.textops import tokens
 
-PACK_SCHEMA = (
-    "source string, shard long, seq_id long, doc_count long, "
-    "seq_tokens long, truncated boolean"
+_KEYS = ["source", "shard"]
+PACK_SCHEMA = pa.schema(
+    [("source", pa.string())]
+    + [(c, pa.int64()) for c in ("shard", "seq_id", "doc_count", "seq_tokens")]
+    + [("truncated", pa.bool_())]
+)
+PACK_ASSIGN_SCHEMA = pa.schema(
+    [("source", pa.string())]
+    + [(c, pa.int64()) for c in ("shard", "doc_id", "n_tokens", "seq_id")]
 )
 
 
 def pack_fold(token_counts, capacity: int):
-    """Pure-python reference fold (also used in property tests):
-    list of (doc_count, seq_tokens) per packed sequence, in order."""
+    """Pure-python reference fold, used in property tests: list of
+    (doc_count, seq_tokens) per packed sequence, in order."""
     seqs: list[tuple[int, int]] = []
     count = 0
     total = 0
@@ -77,6 +84,39 @@ def pack_sequences(
     return pack_sequences_from_counts(base, capacity_tokens)
 
 
+def _seq_ids(
+    n_tokens: np.ndarray, starts: np.ndarray, capacity: int
+) -> np.ndarray:
+    """Each row's seq_id under fit-before-append, counted from 0 in
+    every key group of a ``fold_by_key`` batch (one group from each
+    row of ``starts``; rows in doc_id order).
+
+    One prefix sum P covers every row. A sequence starting at row s
+    with base = P(s-1) takes every following row e with P(e) - base
+    <= capacity, and always row s itself (a longer doc is a sequence
+    of its own). Each loop pass closes the next sequence of EVERY open
+    group with one vectorized searchsorted."""
+    ps = np.cumsum(n_tokens)
+    n = len(ps)
+    last = np.append(starts[1:], n) - 1
+    pos = starts
+    first = np.zeros(n, dtype="int64")  # 1 where a sequence starts
+    while pos.size:
+        first[pos] = 1
+        base = np.where(pos > 0, ps[pos - 1], 0)
+        end = np.clip(np.searchsorted(ps, base + capacity, side="right") - 1, pos, last)
+        more = end < last
+        pos, last = end[more] + 1, last[more]
+    seq = np.cumsum(first) - 1
+    return seq - np.repeat(seq[starts], np.diff(starts, append=n))
+
+
+def _counts(base: DataFrame) -> DataFrame:
+    """The fold input, typed as both output schemas declare it."""
+    longs = (f"CAST({c} AS BIGINT) AS {c}" for c in ("shard", "doc_id", "n_tokens"))
+    return base.selectExpr("CAST(source AS STRING) AS source", *longs)
+
+
 def pack_sequences_from_counts(
     base: DataFrame, capacity_tokens: int = 256
 ) -> DataFrame:
@@ -84,34 +124,26 @@ def pack_sequences_from_counts(
     n_tokens) relation — the entry point for fused pipelines
     (corpus_build_funnel) whose upstream already carries token counts
     and must not re-tokenize the corpus for the pack stage. Same
-    grouped-map fold and output schema as pack_sequences."""
+    fold and output schema as pack_sequences: one row per sequence,
+    the per-row seq_ids of ``_seq_ids`` summed with np.add.reduceat."""
 
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        src = pdf["source"].iloc[0]
-        shard = int(pdf["shard"].iloc[0])
-        rows = [
-            (src, shard, sid, cnt, total, total > capacity_tokens)
-            for sid, (cnt, total) in enumerate(
-                pack_fold(pdf["n_tokens"].to_numpy(), capacity_tokens)
-            )
-        ]
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "source", "shard", "seq_id", "doc_count", "seq_tokens",
-                "truncated",
+    def _pack(batch, starts):
+        n_tokens = batch.column("n_tokens").to_numpy()
+        seq = _seq_ids(n_tokens, starts, capacity_tokens)
+        first = np.union1d(starts, np.flatnonzero(np.diff(seq, prepend=-1)))
+        seq_tokens = np.add.reduceat(n_tokens, first)
+        return pa.RecordBatch.from_arrays(
+            [batch.column(k).take(first) for k in _KEYS]
+            + [
+                seq[first],
+                np.diff(first, append=batch.num_rows),
+                seq_tokens,
+                seq_tokens > capacity_tokens,
             ],
+            schema=PACK_SCHEMA,
         )
 
-    return base.groupBy("source", "shard").applyInPandas(
-        _pack, schema=PACK_SCHEMA
-    )
-
-
-PACK_ASSIGN_SCHEMA = (
-    "source string, shard long, doc_id long, n_tokens long, seq_id long"
-)
+    return fold_by_key(_counts(base), _KEYS, ["doc_id"], _pack, PACK_SCHEMA)
 
 
 def pack_assign_from_counts(
@@ -124,35 +156,21 @@ def pack_assign_from_counts(
     regroups a shard's rows by seq_id to reconstruct the packed
     sequences, so the mapping, not the aggregate, is what ships).
 
-    Same scale shape as the aggregate fold: grouped-map per
-    (source, shard) over token-count metadata only (~16 B/doc, no
-    text), deterministic doc_id order, one row out per row in.
-    Invariant (pytest-pinned): grouping the output by seq_id
-    reproduces pack_sequences_from_counts' (doc_count, seq_tokens)
-    exactly.
+    Same scale shape as the aggregate fold: per (source, shard) over
+    token-count metadata only (~16 B/doc, no text), deterministic
+    doc_id order, one row out per row in. Invariant (pytest-pinned):
+    grouping the output by seq_id reproduces
+    pack_sequences_from_counts' (doc_count, seq_tokens) exactly.
     """
 
-    def _assign(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        seq_ids = []
-        sid = 0
-        count = 0
-        total = 0
-        for t in pdf["n_tokens"]:
-            t = int(t)
-            if count and total + t > capacity_tokens:
-                sid += 1
-                count = 0
-                total = 0
-            count += 1
-            total += t
-            seq_ids.append(sid)
-        pdf["seq_id"] = pd.Series(seq_ids, dtype="int64")
-        return pdf[["source", "shard", "doc_id", "n_tokens", "seq_id"]]
+    def _assign(batch, starts):
+        n_tokens = batch.column("n_tokens").to_numpy()
+        seq = _seq_ids(n_tokens, starts, capacity_tokens)
+        return pa.RecordBatch.from_arrays(
+            batch.columns + [seq], schema=PACK_ASSIGN_SCHEMA
+        )
 
-    return base.groupBy("source", "shard").applyInPandas(
-        _assign, schema=PACK_ASSIGN_SCHEMA
-    )
+    return fold_by_key(_counts(base), _KEYS, ["doc_id"], _assign, PACK_ASSIGN_SCHEMA)
 
 
 # Power-of-two ladder for bucketed padding: smallest 2^k >= n, floor

@@ -56,7 +56,7 @@ def get_spark(
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m"
         )
-        # Arrow for pandas UDF exchange (bin-pack, multimodal plumbing).
+        # Arrow for pandas exchange (multimodal plumbing, streaming state).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Keep broadcast threshold at default 10MB; dims here are tiny.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

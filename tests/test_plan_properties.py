@@ -83,8 +83,8 @@ def test_minhash_no_python_no_cartesian(spark):
 
 
 def _assert_single_arrow_fold(plan: str) -> None:
-    # exactly one Python stage: the Arrow fold of before-stats +
-    # bin-pack over every partition key of a batch, no per-key pandas
+    # exactly one Python stage: the Arrow fold over every partition
+    # key of a batch (parallel.fold_by_key), no per-key pandas
     assert _op_count(plan, "MapInArrow") == 1
     assert _op_count(plan, "FlatMapGroupsInPandas") == 0
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python
@@ -108,6 +108,10 @@ def test_diag_metrics_python_only_for_binpack(spark):
 
 def test_diag_metrics_multi_python_only_for_binpack(spark):
     _assert_single_arrow_fold(_plan(spark, "diag_metrics_multi_table"))
+
+
+def test_diag_binpack_groups_single_arrow_fold(spark):
+    _assert_single_arrow_fold(_plan(spark, "diag_binpack_groups"))
 
 
 def test_corpus_curation_single_scan(spark):
@@ -178,7 +182,8 @@ def test_pack_sequences_narrow_shuffle(spark):
     below it so no string column crosses the wire."""
     plan = _plan(spark, "doc_pack_sequences")
     assert _exchanges(plan) == 1
-    assert _op_count(plan, "FlatMapGroupsInPandas") == 1
+    assert _op_count(plan, "MapInArrow") == 1
+    assert _op_count(plan, "FlatMapGroupsInPandas") == 0
     ex = re.search(
         r"^\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", plan, re.MULTILINE
     )
@@ -543,13 +548,14 @@ def test_corpus_build_funnel_reads_checkpoints_not_corpus(spark):
     # reads NO parquet directly (the corpus is scanned only inside
     # the three checkpoint lineages: enriched pass + the banding
     # chain's two) and at most 4 checkpointed relations; packing is
-    # the single pandas stage. Without the checkpoints the same DAG
+    # the single Python stage, one Arrow fold. Without the checkpoints the same DAG
     # replays the corpus scan 40× (one per branch) — measured, which
     # is exactly what this test pins against.
     plan = _plan(spark, "corpus_build_funnel")
     assert _op_count(plan, "Scan parquet") == 0
     assert len(re.findall(r"Scan ExistingRDD", plan)) <= 4
-    assert _op_count(plan, "FlatMapGroupsInPandas") == 1
+    assert _op_count(plan, "MapInArrow") == 1
+    assert _op_count(plan, "FlatMapGroupsInPandas") == 0
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
 

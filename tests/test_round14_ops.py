@@ -70,8 +70,8 @@ def _dir_md5s(root: str) -> dict[str, str]:
 # ---------------------------------------------------------------- #
 
 def test_binpack_assign_matches_pack_sizes(spark):
-    """The assignment's per-gid (count, total) profile equals
-    pack_sizes' fold output exactly — including ties, where the
+    """One row out per file in, and the assignment's per-gid (count,
+    total) profile equals pack_sizes' fold output exactly — including ties, where the
     (size, file_id) tie-break changes membership but never the
     profile."""
     import random
@@ -94,9 +94,10 @@ def test_binpack_assign_matches_pack_sizes(spark):
     )
     cap = 60
     asg = binpack_assign(sized, max_bytes_per_group=cap)
+    # every input row comes back once, with its gid
+    assert sorted(tuple(r)[:3] for r in asg.collect()) == sorted(rows)
     got = (
-        asg.join(sized, ["partition_key", "file_id"])
-        .groupBy("partition_key", "gid")
+        asg.groupBy("partition_key", "gid")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
             F.sum("logical_size").alias("tot"),
@@ -204,12 +205,59 @@ def test_compaction_converges_to_fixed_point(spark, compacted_layout):
 
 
 def test_compaction_ledger_plan_hint_free(spark, tmp_path):
-    """The ledger's joins (assignment reattach, after-state join) are
-    stats-driven — no ResolvedHint anywhere in the lazy plan."""
+    """The ledger's joins (the rewrite's assignment join, the
+    after-state join) are stats-driven — no ResolvedHint anywhere in the lazy plan."""
     path = str(tmp_path / "layout")
     _write_layout(spark, path, {"a": [[10], [20]]})
     led = _apply(spark, path, cap=1000)
     assert "ResolvedHint" not in led._jdf.queryExecution().logical().toString()
+
+
+def test_compaction_null_partition(spark, tmp_path):
+    """The NULL partition is a partition: planned, rewritten and
+    reported like any other, from row sizes and from a physical
+    listing (where its dir is __HIVE_DEFAULT_PARTITION__) — no NULL
+    row is lost to an ``isin`` filter or an equi-join."""
+    from iceberg_diag_spark.operators.sampling import membership_checksums
+
+    path = str(tmp_path / "layout")
+    sizes = [[4, 6], [8, 12], [30], [40]]  # 10, 20, 30, 40
+    _write_layout(spark, path, {"a": sizes, None: sizes})
+    x1, x2 = membership_checksums(F.col("row_key"))
+
+    def _digests():
+        return {
+            r["partition_key"]: (r["n"], r["x1"], r["x2"])
+            for r in spark.read.schema(LAYOUT_SCHEMA)
+            .parquet(path)
+            .groupBy("partition_key")
+            .agg(F.count(F.lit(1)).alias("n"), x1.alias("x1"), x2.alias("x2"))
+            .collect()
+        }
+
+    before = _digests()
+    assert set(before) == {"a", None}
+    led = {r["partition_key"]: r for r in _apply(spark, path, cap=45).collect()}
+    listed = physical_file_sizes(spark, path, "partition_key", "file_id")
+    led2 = {
+        r["partition_key"]: r
+        for r in _apply(spark, path, cap=1 << 30, file_sizes=listed).collect()
+    }
+    for ledger, files_before, files_after in ((led, 4, 2), (led2, 2, 1)):
+        assert set(ledger) == {"a", None}
+        for pk, r in ledger.items():
+            assert bool(r["compacted"]) is True, pk
+            assert (r["files_before"], r["files_after"]) == (
+                files_before, files_after
+            ), pk
+            assert r["rows_before"] == r["rows_after"] == 6, pk
+            assert (r["members_xor_after"], r["members_xor2_after"]) == (
+                before[pk][1:]
+            ), pk
+    assert _digests() == before
+    for leaf in ("a", "__HIVE_DEFAULT_PARTITION__"):
+        dirs = glob.glob(f"{path}/partition_key={leaf}/file_id=*")
+        assert len(dirs) == 1, leaf  # no stale leaf left behind
 
 
 # ---------------------------------------------------------------- #
