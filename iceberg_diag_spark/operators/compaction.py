@@ -130,9 +130,11 @@ def _hive_values(path: str) -> dict[str, str | None]:
 def _member(col: str, values: list) -> Column:
     """Null-safe ``col IN values``: never NULL, and true on a NULL
     value when None is listed — ``isin`` never matches the NULL
-    partition."""
+    partition. No ``IN ()`` over an empty list: ``NULL IN ()`` is
+    false, not NULL, so it would dodge a coalesce."""
     known = [v for v in values if v is not None]
-    return F.coalesce(F.col(col).isin(known), F.lit(None in values))
+    cond = F.coalesce(F.col(col).isin(known), F.lit(False)) if known else F.lit(False)
+    return cond | F.col(col).isNull() if None in values else cond
 
 
 def _join_keys(

@@ -89,26 +89,20 @@ def _seq_ids(
 ) -> np.ndarray:
     """Each row's seq_id under fit-before-append, counted from 0 in
     every key group of a ``fold_by_key`` batch (one group from each
-    row of ``starts``; rows in doc_id order).
-
-    One prefix sum P covers every row. A sequence starting at row s
-    with base = P(s-1) takes every following row e with P(e) - base
-    <= capacity, and always row s itself (a longer doc is a sequence
-    of its own). Each loop pass closes the next sequence of EVERY open
-    group with one vectorized searchsorted."""
-    ps = np.cumsum(n_tokens)
-    n = len(ps)
-    last = np.append(starts[1:], n) - 1
-    pos = starts
-    first = np.zeros(n, dtype="int64")  # 1 where a sequence starts
-    while pos.size:
-        first[pos] = 1
-        base = np.where(pos > 0, ps[pos - 1], 0)
-        end = np.clip(np.searchsorted(ps, base + capacity, side="right") - 1, pos, last)
-        more = end < last
-        pos, last = end[more] + 1, last[more]
-    seq = np.cumsum(first) - 1
-    return seq - np.repeat(seq[starts], np.diff(starts, append=n))
+    row of ``starts``; rows in doc_id order): one pass over the rows,
+    reset at every key start."""
+    is_start = np.zeros(len(n_tokens), dtype=bool)
+    is_start[starts] = True
+    seq = np.empty(len(n_tokens), dtype="int64")
+    sid = total = 0
+    for i, (t, first) in enumerate(zip(n_tokens.tolist(), is_start.tolist())):
+        if first:
+            sid = total = 0
+        elif total + t > capacity:
+            sid, total = sid + 1, 0
+        total += t
+        seq[i] = sid
+    return seq
 
 
 def _counts(base: DataFrame) -> DataFrame:

@@ -260,6 +260,57 @@ def test_compaction_null_partition(spark, tmp_path):
         assert len(dirs) == 1, leaf  # no stale leaf left behind
 
 
+@pytest.mark.parametrize("scope", ["neighbour_at_fixed_point", "partitions_batch"])
+def test_compaction_only_null_partition(spark, tmp_path, scope):
+    """The NULL partition is the ONLY one rewritten — its neighbour
+    is already one file, or the call is scoped to ``partitions=[None]``
+    — so the rewrite's membership list holds None alone. Its rows are
+    rewritten into the planned groups (not dropped, not left behind),
+    and the other partition's bytes on disk stay identical."""
+    from iceberg_diag_spark.operators.sampling import membership_checksums
+
+    path = str(tmp_path / "layout")
+    sizes = [[4, 6], [8, 12], [30], [40]]  # 10, 20, 30, 40
+    a_sizes = [[40]] if scope == "neighbour_at_fixed_point" else sizes
+    _write_layout(spark, path, {"a": a_sizes, None: sizes})
+    kw = {"partitions": [None]} if scope == "partitions_batch" else {}
+    x1, x2 = membership_checksums(F.col("row_key"))
+
+    def _digests():
+        return {
+            r["partition_key"]: (r["n"], r["x1"], r["x2"])
+            for r in spark.read.schema(LAYOUT_SCHEMA)
+            .parquet(path)
+            .groupBy("partition_key")
+            .agg(F.count(F.lit(1)).alias("n"), x1.alias("x1"), x2.alias("x2"))
+            .collect()
+        }
+
+    def _md5s(leaf):
+        return {
+            k: v for k, v in _dir_md5s(path).items()
+            if k.startswith(f"partition_key={leaf}/")
+        }
+
+    before = _digests()
+    null_before, a_before = _md5s("__HIVE_DEFAULT_PARTITION__"), _md5s("a")
+    led = {r["partition_key"]: r for r in _apply(spark, path, cap=45, **kw).collect()}
+    r = led[None]
+    assert bool(r["compacted"]) is True
+    assert (r["files_before"], r["groups_planned"], r["files_after"]) == (4, 2, 2)
+    assert r["rows_before"] == r["rows_after"] == 6
+    assert (r["members_xor_after"], r["members_xor2_after"]) == before[None][1:]
+    assert _digests() == before
+    null_after = _md5s("__HIVE_DEFAULT_PARTITION__")
+    assert len(null_after) == 2
+    assert not set(null_after.items()) & set(null_before.items())  # rewritten
+    assert _md5s("a") == a_before
+    if scope == "neighbour_at_fixed_point":
+        assert bool(led["a"]["compacted"]) is False
+    else:
+        assert set(led) == {None}
+
+
 # ---------------------------------------------------------------- #
 # predicted-after == re-diagnosed written layout (the verdict's ask)
 # ---------------------------------------------------------------- #
