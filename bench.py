@@ -333,7 +333,7 @@ EXCLUDED = {
     "doc_char_novelty": "single-scan rolling-hash projection; timed "
                         "via doc_fingerprint",
     "customer_rfm_segments":
-        "segment mapping over the global_rank idiom timed via "
+        "segment mapping over grouped_prefix_sum ranks timed via "
         "doc_length_deciles / customer_cohort_ltv",
     "vocab_oov_rate":
         "vocabulary-join shape timed via tokenizer_fertility / "

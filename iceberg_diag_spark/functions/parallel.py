@@ -1,5 +1,5 @@
-"""Parallelism, materialization and the per-key fold: the three
-physical-plan decisions operators share.
+"""Parallelism, materialization, the per-key fold and the null-safe
+key join: the plan decisions operators share.
 
 `ensure_parallelism` spreads a narrow scan before heavy per-row work.
 The driver-generated test parquet is written as ONE row group per
@@ -18,6 +18,9 @@ attribute materialization work to the operator that asked for it.
 `fold_by_key` is the package's one way into Python for a sequential
 per-key fold (bin-pack, sequence packing): one Python call per Arrow
 batch, never one per key.
+
+`join_null_safe` joins on keys where NULL matches NULL, the way
+`groupBy` groups them: an equi-join silently drops the NULL group.
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ from collections.abc import Callable
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 _DESCRIPTION = "spark.job.description"
@@ -82,6 +85,21 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
         return df.localCheckpoint(eager=eager)
     finally:
         sc.setLocalProperty(_DESCRIPTION, prev)
+
+
+def join_null_safe(
+    left: DataFrame, right: DataFrame, keys: list[str], how: str = "inner"
+) -> DataFrame:
+    """``left.join(right, keys, how)`` where NULL keys match, as
+    groupBy groups them: the NULL group is a group too. With no keys
+    every left row pairs with every right row (the one-group case)."""
+    if not keys:
+        return left.crossJoin(right)
+    r = right.select(
+        *(F.col(c).alias(f"_r_{c}") if c in keys else c for c in right.columns)
+    )
+    on = [left[k].eqNullSafe(r[f"_r_{k}"]) for k in keys]
+    return left.join(r, on, how).drop(*(f"_r_{k}" for k in keys))
 
 
 def _key_breaks(prev: list, cur: list) -> np.ndarray:

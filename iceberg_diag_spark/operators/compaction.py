@@ -57,7 +57,11 @@ from iceberg_diag_spark.functions.cost import (
     MAX_GROUP_BYTE_SIZE,
     read_file_cost,
 )
-from iceberg_diag_spark.functions.parallel import fold_by_key, materialize
+from iceberg_diag_spark.functions.parallel import (
+    fold_by_key,
+    join_null_safe,
+    materialize,
+)
 from iceberg_diag_spark.operators.binpack import pack_keys
 from iceberg_diag_spark.operators.sampling import membership_checksums
 from iceberg_diag_spark.sources.sinks import rewrite_partitions
@@ -135,18 +139,6 @@ def _member(col: str, values: list) -> Column:
     known = [v for v in values if v is not None]
     cond = F.coalesce(F.col(col).isin(known), F.lit(False)) if known else F.lit(False)
     return cond | F.col(col).isNull() if None in values else cond
-
-
-def _join_keys(
-    left: DataFrame, right: DataFrame, keys: list[str], how: str = "inner"
-) -> DataFrame:
-    """``left.join(right, keys, how)`` where NULL keys match, as
-    groupBy groups them: the NULL partition is a partition too."""
-    r = right.select(
-        *(F.col(c).alias(f"_r_{c}") if c in keys else c for c in right.columns)
-    )
-    on = [left[k].eqNullSafe(r[f"_r_{k}"]) for k in keys]
-    return left.join(r, on, how).drop(*(f"_r_{k}" for k in keys))
 
 
 def physical_file_sizes(
@@ -329,7 +321,7 @@ def compact_apply_binpack(
         # its rows while every ledger digest stays green (stale
         # .files snapshot = data loss). The check is metadata-scale.
         uncovered = (
-            _join_keys(per_file, meta, [partition_col, file_col], "left_anti")
+            join_null_safe(per_file, meta, [partition_col, file_col], "left_anti")
             .select(partition_col, file_col)
             .limit(5)
             .collect()
@@ -343,7 +335,7 @@ def compact_apply_binpack(
                     f"({r[partition_col]}, {r[file_col]})" for r in uncovered
                 )
             )
-        sized = materialize(_join_keys(
+        sized = materialize(join_null_safe(
             per_file, meta, [partition_col, file_col]
         ), eager=True)
     else:
@@ -406,7 +398,7 @@ def compact_apply_binpack(
             for f in pre.schema.fields
             if f.name not in (partition_col, file_col)
         ]
-        kept = _join_keys(
+        kept = join_null_safe(
             pre.filter(_member(partition_col, todo)),
             asg.select(partition_col, file_col, "gid"),
             [partition_col, file_col],
@@ -463,7 +455,7 @@ def compact_apply_binpack(
             relisted = physical_file_sizes(
                 spark, path, partition_col, file_col
             ).filter(_member(partition_col, todo))
-            post = _join_keys(
+            post = join_null_safe(
                 post,
                 relisted.select(
                     partition_col,
@@ -486,7 +478,7 @@ def compact_apply_binpack(
         )
         after = after.unionByName(measured)
 
-    return _join_keys(
+    return join_null_safe(
         plan.select(
             partition_col,
             F.col("phys_before").alias("files_before"),
@@ -596,14 +588,18 @@ def cluster_apply_sorted(
         "_k",
     )
 
-    # per-value counts: two consumers (prediction, ranking)
+    # per-value counts: read three times by the prefix
     vals = materialize(
         pre.groupBy(F.col(value_col).alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("k"))
         .select(F.lit("v").alias("col_name"), "v", "k"),
         eager=True,
     )
-    planned = sorted_after_stats(vals, m).select(
+    # Global rank = value's exclusive prefix + intra-value row_number;
+    # target file = (rank-1) DIV m (contiguous 0..F-1, every file
+    # non-empty). The prefix feeds the prediction and the rewrite.
+    base = grouped_prefix_sum(vals, ["col_name"], ["v"], ["k"], ["__pre"])
+    planned = sorted_after_stats(base, m).select(
         F.lit(1).alias("_k"),
         F.col("n_files").alias("files_planned"),
         F.col("overlap_pairs_after").alias("overlap_pairs_planned"),
@@ -611,10 +607,6 @@ def cluster_apply_sorted(
         F.col("avg_depth_ppm_after").alias("avg_depth_ppm_planned"),
     )
 
-    # Rewrite: global rank = value's exclusive prefix + intra-value
-    # row_number; target file = (rank-1) DIV m (contiguous 0..F-1,
-    # every file non-empty).
-    base = grouped_prefix_sum(vals, "col_name", "v", "k", out_col="__pre")
     data_cols = [
         f.name for f in pre.schema.fields if f.name != file_col
     ]

@@ -272,10 +272,10 @@ def disorder_audit(
 
     A running max over global arrival order is inherently sequential,
     but distributes with the range-shard + broadcast-prefix idiom
-    (the epoch_shuffle/global_rank primitive): shard by event_id
-    ranges (approx-percentile boundaries — accuracy only affects
-    balance), compute the within-shard running max with a partitioned
-    window, then lift each row by the broadcast prefix-max of all
+    (shuffling.grouped_prefix_sum's shape, with max as the combine):
+    shard by event_id ranges (approx-percentile boundaries — accuracy
+    only affects balance), compute the within-shard running max with a
+    partitioned window, then lift each row by the broadcast prefix-max of all
     PRIOR shards (n_shards scalars). No global window, no single-task
     sort.
 

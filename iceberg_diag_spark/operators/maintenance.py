@@ -30,6 +30,7 @@ from iceberg_diag_spark.functions.cost import (
     CONTENT_POSITION_DELETES,
     read_file_cost,
 )
+from iceberg_diag_spark.functions.parallel import materialize
 
 
 def delete_impact(files: DataFrame) -> DataFrame:
@@ -368,10 +369,18 @@ def skip_simulation(
         F.col("avg_depth_ppm").alias("avg_depth_ppm_before"),
     )
 
-    vals = column_values.groupBy("col_name", "v").agg(
-        F.count(F.lit(1)).cast("long").alias("k")
+    from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
+
+    # the prefix reads the per-value counts three times
+    vals = materialize(
+        column_values.groupBy("col_name", "v").agg(
+            F.count(F.lit(1)).cast("long").alias("k")
+        )
     )
-    after = sorted_after_stats(vals, rows_per_file)
+    after = sorted_after_stats(
+        grouped_prefix_sum(vals, ["col_name"], ["v"], ["k"], ["__pre"]),
+        rows_per_file,
+    )
 
     return (
         before.join(after, "col_name")
@@ -402,23 +411,21 @@ def skip_simulation(
     )
 
 
-def sorted_after_stats(vals: DataFrame, rows_per_file: int) -> DataFrame:
+def sorted_after_stats(pre: DataFrame, rows_per_file: int) -> DataFrame:
     """The skip_simulation closed form, factored out so the executing
     sorted rewrite (compaction.cluster_apply_sorted) can PREDICT the
-    stats it then measures from written files: given per-value counts
-    ``vals`` = (col_name, v, k), the exact post-rewrite interval
-    statistics of the globally-v-sorted, m-rows-per-file layout —
-    without materializing it. Pure extraction from skip_simulation
-    (identical plan); see that docstring for the arithmetic.
+    stats it then measures from written files, from the same value
+    ranks it writes by: given per-value counts with their exclusive
+    prefix ``pre`` = (col_name, k, __pre) — grouped_prefix_sum of k
+    by col_name over v — the exact post-rewrite interval statistics
+    of the globally-v-sorted, m-rows-per-file layout, without
+    materializing it. See skip_simulation for the arithmetic.
 
     Output: (col_name, n_files, overlap_pairs_after, max_depth_after,
     avg_depth_ppm_after).
     """
-    from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
-
     m = rows_per_file
-    s = grouped_prefix_sum(vals, "col_name", "v", "k", out_col="__pre")
-    per_val = s.select(
+    per_val = pre.select(
         "col_name",
         "k",
         (F.col("__pre") + 1).alias("s"),

@@ -201,12 +201,12 @@ def padding_waste_audit(
                       the optimal-ordering baseline
 
     All-integer accounting: token counts are exact, bucket edges are
-    a CASE ladder (no log2), and the sorted policy uses the
-    global_rank range-shard primitive — no single-task sort. Output:
+    a CASE ladder (no log2), and the sorted policy ranks through
+    shuffling.grouped_prefix_sum — no single-task sort. Output:
     (strategy, n_docs, total_tokens, padded_tokens, waste_ppm) with
     waste_ppm = floor(1e6 · (padded − total) / padded).
     """
-    from iceberg_diag_spark.operators.shuffling import global_rank
+    from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
 
     # four consumers (the three policies, the global max)
     base = materialize(docs.select(
@@ -238,11 +238,9 @@ def padding_waste_audit(
     pow2 = _summary(
         "pow2_bucket", base.withColumn("padded", _pow2_bucket(F.col("n")))
     )
-    ranked = global_rank(base, "n", id_col, out_col="rk")
     batch_max = (
-        ranked.withColumn(
-            "batch", F.floor((F.col("rk") - 1) / batch_size).cast("long")
-        )
+        grouped_prefix_sum(base, [], ["n", id_col])
+        .withColumn("batch", F.floor(F.col("prefix") / batch_size).cast("long"))
         .groupBy("batch")
         .agg(
             F.count(F.lit(1)).alias("bn"),

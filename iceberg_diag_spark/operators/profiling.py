@@ -88,9 +88,9 @@ def rfm_segments(orders: DataFrame, n_bins: int = 5) -> DataFrame:
     """Customer RFM (recency / frequency / monetary) segmentation —
     the standard customer-value grid, computed with EXACT equal-count
     bins at any scale. Each customer is ranked on each dimension by
-    the distributed exact-rank primitive (`shuffling.global_rank` —
-    range-sharded windows + broadcast offsets, never a single-task
-    global sort), then binned with seg = 1 + floor(bins·(rank−1)/n).
+    the count mode of `shuffling.grouped_prefix_sum` (range-sharded
+    windows + broadcast offsets, never a single-task global sort),
+    then binned with seg = 1 + floor(bins·(rank−1)/n).
     Ties break on custkey, so the grid is bit-deterministic.
 
     Segment semantics: r_seg 1 = most recent purchasers (ascending
@@ -102,7 +102,7 @@ def rfm_segments(orders: DataFrame, n_bins: int = 5) -> DataFrame:
     exact-integer money rule); recency is whole days against the
     corpus max order date (a 1-row broadcast scalar).
     """
-    from iceberg_diag_spark.operators.shuffling import global_rank
+    from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
 
     per = orders.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
@@ -112,7 +112,6 @@ def rfm_segments(orders: DataFrame, n_bins: int = 5) -> DataFrame:
         .alias("monetary_cents"),
     )
     maxd = orders.agg(F.max("o_orderdate").alias("__maxd"))
-    n_row = per.agg(F.count(F.lit(1)).cast("long").alias("__n"))
     base = (
         per.crossJoin(F.broadcast(maxd))
         .withColumn(
@@ -126,15 +125,16 @@ def rfm_segments(orders: DataFrame, n_bins: int = 5) -> DataFrame:
         ("f", "frequency"),
         ("m", "monetary_cents"),
     ):
-        base = global_rank(base, col, "o_custkey", out_col=f"__{dim}_rank")
-    base = base.crossJoin(F.broadcast(n_row))
+        # each rank reads its input three times: pin it so the
+        # upstream aggregate and the earlier ranks run once
+        base = grouped_prefix_sum(
+            materialize(base), [], [col, "o_custkey"], out_cols=[f"__{dim}"]
+        )
     segs = [
         (
             F.lit(1)
             + F.floor(
-                F.lit(float(n_bins))
-                * (F.col(f"__{d}_rank") - F.lit(1))
-                / F.col("__n")
+                F.lit(float(n_bins)) * F.col(f"__{d}") / F.col(f"__{d}_total")
             )
         )
         .cast("long")

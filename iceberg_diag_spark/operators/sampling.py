@@ -16,7 +16,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from iceberg_diag_spark.functions.parallel import ensure_parallelism, materialize
+from iceberg_diag_spark.functions.parallel import (
+    ensure_parallelism,
+    join_null_safe,
+    materialize,
+)
 
 
 def hash_bucket(key: Column, buckets: int = 100) -> Column:
@@ -389,24 +393,24 @@ def exact_quota_holdout(
     digit (ascii('0'..'9','a'..'f') is monotone, so shard order ==
     key order), ranked within (stratum, shard) partitions — 16×
     |strata| tasks — and completed to the exact per-stratum rank by a
-    broadcast of cumulative (stratum, shard) counts: the
-    epoch_shuffle / global_rank idiom (shuffling.py). Output is
-    byte-identical to the single-window form: (doc_id, stratum,
-    pick_rank).
+    broadcast of cumulative (stratum, shard) counts: the count mode of
+    shuffling.grouped_prefix_sum. A NULL stratum is one stratum, as in
+    the counts. Output is byte-identical to the single-window form:
+    (doc_id, stratum, pick_rank).
     """
     from pyspark.sql.window import Window
 
-    # three consumers (stratum counts, shard sizes, the ranked base)
-    sharded = materialize(
-        ensure_parallelism(docs)
-        .select(
+    from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
+
+    # three consumers (stratum counts, shard totals, the ranked base)
+    keyed = materialize(
+        ensure_parallelism(docs).select(
             F.col(id_col),
             F.col(stratum_col).alias("stratum"),
             F.md5(F.col(id_col).cast("string")).alias("__mh"),
         )
-        .withColumn("__shard", F.ascii(F.substring("__mh", 1, 1)))
     )
-    counts = sharded.groupBy("stratum").agg(
+    counts = keyed.groupBy("stratum").agg(
         F.count(F.lit(1)).cast("long").alias("n_s")
     )
     totals = counts.agg(
@@ -441,33 +445,10 @@ def exact_quota_holdout(
             ).cast("long").alias("quota"),
         )
     )
-    w_local = Window.partitionBy("stratum", "__shard").orderBy(
-        "__mh", id_col
-    )
-    shard_sizes = sharded.groupBy("stratum", "__shard").agg(
-        F.count(F.lit(1)).alias("__cnt")
-    )
-    # 16·|strata| rows — the per-stratum cumulative window over this
-    # metadata-size relation is cheap; it is what lets the big
-    # relation avoid any single-partition exchange.
-    w_off = (
-        Window.partitionBy("stratum")
-        .orderBy("__shard")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = shard_sizes.select(
-        "stratum",
-        "__shard",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__offset"),
-    )
+    ranked = grouped_prefix_sum(keyed, ["stratum"], ["__mh", id_col])
     return (
-        sharded.withColumn("__rk", F.row_number().over(w_local))
-        .join(F.broadcast(offsets), ["stratum", "__shard"])
-        .join(F.broadcast(quotas), "stratum")
-        .withColumn(
-            "pick_rank",
-            (F.col("__offset") + F.col("__rk")).cast("long"),
-        )
+        join_null_safe(ranked, F.broadcast(quotas), ["stratum"])
+        .withColumn("pick_rank", (F.col("prefix") + 1).cast("long"))
         .filter(F.col("pick_rank") <= F.col("quota"))
         .select(id_col, "stratum", "pick_rank")
     )
@@ -563,17 +544,17 @@ def data_mixing_sample(
     the source has mass (fill_ppm ≥ 1e6 shows the overshoot, bounded
     by one document).
 
-    Distributed shape: the per-source cumulative mass uses the
-    epoch_shuffle hex-shard idiom — md5's first character is an
-    order-preserving range shard, the exclusive prefix completes
-    within (source, shard) windows plus broadcast per-shard offset
-    totals — never a one-task-per-source window. The plan relation
-    joins broadcast (|sources| rows).
+    Distributed shape: the per-source cumulative mass is
+    shuffling.grouped_prefix_sum over the md5 key — its first
+    character is an order-preserving range shard, the exclusive
+    prefix completes within (source, shard) windows plus broadcast
+    per-shard offset totals — never a one-task-per-source window.
+    The plan relation joins broadcast (|sources| rows).
 
     Output per source: (source, tokens_alloc, n_docs_selected,
     tokens_selected, fill_ppm).
     """
-    from pyspark.sql.window import Window
+    from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
 
     plan = data_mixing_plan(
         df, budget_num, budget_den, alpha,
@@ -584,31 +565,9 @@ def data_mixing_sample(
         F.col(id_col),
         F.col(weight_col).cast("long").alias("w"),
         F.md5(F.col(id_col).cast("string")).alias("__k"),
-    ).withColumn("__shard", F.ascii(F.substring("__k", 1, 1)))
-    w_in = (
-        Window.partitionBy(strata_col, "__shard")
-        .orderBy("__k", id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
     )
-    shard_tot = keyed.groupBy(strata_col, "__shard").agg(
-        F.sum("w").alias("__tot")
-    )
-    w_off = (
-        Window.partitionBy(strata_col)
-        .orderBy("__shard")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = shard_tot.select(
-        strata_col,
-        "__shard",
-        F.coalesce(F.sum("__tot").over(w_off), F.lit(0)).alias("__off"),
-    )
-    pre = (
-        keyed.withColumn(
-            "__within", F.coalesce(F.sum("w").over(w_in), F.lit(0))
-        )
-        .join(F.broadcast(offsets), [strata_col, "__shard"])
-        .withColumn("__prefix", F.col("__within") + F.col("__off"))
+    pre = grouped_prefix_sum(
+        keyed, [strata_col], ["__k", id_col], ["w"], ["__prefix"]
     )
     chosen = pre.join(F.broadcast(plan), strata_col).filter(
         F.col("__prefix") < F.col("tokens_alloc")

@@ -1,203 +1,135 @@
-"""Deterministic epoch shuffling for training-data pipelines.
+"""Distributed ranks and prefix sums without a one-task window.
 
-The global shuffle before each training epoch must be (a) a true
-permutation, (b) reproducible from a seed, and (c) executable without
-ever funneling the corpus through one node. A single global
-`row_number() OVER (ORDER BY rand())` fails all three at scale — one
-unpartitioned window means one task holds the world.
-
-The scalable formulation: order rows by a seeded hash key, split that
-total order into shards by the key's first hex digit (shard order ==
-key order, so shard boundaries are range boundaries of the total
-order), number rows within each shard with a partitioned window, and
-add broadcast cumulative shard offsets. Every stage is
-embarrassingly parallel except one tiny (n_shards-row) aggregate.
+A bare `row_number() OVER (ORDER BY …)` — or one partitioned by a
+low-cardinality key — funnels the world into one task. The package's
+one substitute is `grouped_prefix_sum`, the range-shard +
+broadcast-offset idiom: split the total order into order-preserving
+shards, run the windows inside each (group, shard), and add each
+shard's offset from a small broadcast relation. Every stage is
+embarrassingly parallel except one tiny (n_shards·|groups|-row)
+aggregate. Ranks (`epoch_shuffle`, holdout membership, RFM bins,
+calibration percentiles) are its count mode: rank = prefix + 1.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StringType
 from pyspark.sql.window import Window
 
-from iceberg_diag_spark.functions.parallel import materialize
+from iceberg_diag_spark.functions.parallel import join_null_safe, materialize
 
 
 def epoch_shuffle(
     docs: DataFrame, seed: str = "epoch-0", id_col: str = "doc_id"
 ) -> DataFrame:
     """Assign each row a deterministic global shuffle position for
-    the given seed. The total order is (shuffle_key, id): md5 keys
-    are effectively unique, the id breaks theoretical collisions.
-    Sharding by the key's first character preserves that order
-    (ascii('0'..'9','a'..'f') is monotone), so
-    global_pos = shard_offset + within-shard rank needs only a
-    16-row broadcast of cumulative shard sizes — no global window,
-    no single-task sort. Output: (id, shuffle_key, shuffle_pos)."""
+    the given seed: a true permutation, reproducible from the seed,
+    never funneled through one node. The total order is
+    (shuffle_key, id): md5 keys are effectively unique, the id breaks
+    theoretical collisions; the position is that order's
+    grouped_prefix_sum rank. Output: (id, shuffle_key, shuffle_pos)."""
     key = F.md5(F.concat(F.lit(seed + ":"), F.col(id_col).cast("string")))
-    # two consumers (shard-size aggregate, ranked output)
-    base = materialize(
-        docs.select(F.col(id_col), key.alias("shuffle_key"))
-        .withColumn("__shard", F.ascii(F.substring("shuffle_key", 1, 1)))
-    )
-    w = Window.partitionBy("__shard").orderBy("shuffle_key", id_col)
-    sizes = base.groupBy("__shard").agg(F.count(F.lit(1)).alias("__cnt"))
-    w_off = (
-        Window.orderBy("__shard")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = sizes.select(
-        "__shard",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__offset"),
-    )
-    return (
-        base.withColumn("__rank", F.row_number().over(w))
-        .join(F.broadcast(offsets), "__shard")
-        .select(
-            F.col(id_col),
-            "shuffle_key",
-            (F.col("__offset") + F.col("__rank")).cast("long").alias(
-                "shuffle_pos"
-            ),
-        )
-    )
-
-
-def global_rank(
-    df: DataFrame,
-    value_col: str,
-    id_col: str,
-    out_col: str = "rank",
-    n_shards: int = 32,
-) -> DataFrame:
-    """Exact global dense row rank by (value, id) WITHOUT a global
-    window — the distributed-ntile primitive. A bare
-    `row_number() OVER (ORDER BY v)` funnels the whole relation into
-    one task; instead:
-
-    1. estimate ~n_shards order-preserving range boundaries with an
-       approx-percentile sketch (a 1-row broadcast — accuracy only
-       affects load balance, never correctness),
-    2. assign each row its shard by counting boundaries below its
-       value (monotone in value ⇒ shard order == value order; value
-       ties land in the same shard, so the within-shard (value, id)
-       window completes the exact total order),
-    3. rank within shards with a partitioned window and add exact
-       broadcast cumulative shard-size offsets — the epoch_shuffle
-       idiom.
-
-    Output: input columns + `out_col` (1-based exact global rank).
-
-    Like grouped_prefix_sum, the input is consumed more than once
-    (percentile edges, shard sizes, the ranked base) and Catalyst
-    replays a lazy lineage per consumer — rfm_segments chains three
-    global_rank calls, which cubed the replay into 258 parquet scans
-    of one orders table. The primitive lazily materializes its
-    input so upstream runs exactly once.
-    """
-    df = materialize(df)
-    probs = [i / n_shards for i in range(1, n_shards)]
-    edges = df.agg(
-        F.percentile_approx(value_col, probs, 10_000).alias("__edges")
-    )
-    base = df.crossJoin(F.broadcast(edges)).withColumn(
-        "__shard",
-        F.aggregate(
-            "__edges",
-            F.lit(0),
-            lambda acc, e: acc
-            + F.when(F.col(value_col) > e, 1).otherwise(0),
-        ),
-    ).drop("__edges")
-    w = Window.partitionBy("__shard").orderBy(value_col, id_col)
-    sizes = base.groupBy("__shard").agg(F.count(F.lit(1)).alias("__cnt"))
-    w_off = Window.orderBy("__shard").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = sizes.select(
-        "__shard",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__offset"),
-    )
-    return (
-        base.withColumn("__rank", F.row_number().over(w))
-        .join(F.broadcast(offsets), "__shard")
-        .withColumn(
-            out_col, (F.col("__offset") + F.col("__rank")).cast("long")
-        )
-        .drop("__shard", "__rank", "__offset")
+    # two consumers (shard totals, ranked output)
+    base = materialize(docs.select(F.col(id_col), key.alias("shuffle_key")))
+    return grouped_prefix_sum(base, [], ["shuffle_key", id_col]).select(
+        F.col(id_col),
+        "shuffle_key",
+        (F.col("prefix") + 1).cast("long").alias("shuffle_pos"),
     )
 
 
 def grouped_prefix_sum(
     df: DataFrame,
-    group_col: str,
-    order_col: str,
-    val_col: str,
-    out_col: str = "prefix",
+    group_cols: Sequence[str],
+    order_cols: Sequence[str],
+    val_cols: Sequence[str] = (),
+    out_cols: Sequence[str] = ("prefix",),
     n_shards: int = 32,
 ) -> DataFrame:
-    """EXCLUSIVE prefix sum of `val_col` over `order_col` within each
-    group, without a per-group single-task window — the global_rank
-    idiom generalized from counting to summing: approx-percentile
-    range shards per group (accuracy only affects balance, never the
-    sum), an exact partitioned cumulative window within each shard,
-    and broadcast per-shard offset totals. `order_col` values must be
-    unique within a group (the caller's relation is typically
-    distinct-by-construction).
+    """EXCLUSIVE prefix sums of `val_cols` over `order_cols` within
+    each group of `group_cols` (none: one group), without a one-task
+    window. With no `val_cols` it counts rows, so rank = prefix + 1.
+    `order_cols` must form a total order within a group.
 
-    Output: input columns + `out_col` = Σ val over rows strictly
-    before this row in (group, order) order.
+    Shards come from the first order column and are monotone in it
+    (ties share a shard, so the within-shard window completes the
+    order): a string's first character — every string caller orders
+    by an md5 hex key — or, for a number, per-group approx-percentile
+    edges (a |groups|-row broadcast; accuracy affects only load
+    balance, never the sums). Exact windows run inside each
+    (group, shard), and a broadcast of per-shard offsets completes
+    the prefix. A NULL group key is one group, as in groupBy: the
+    group joins are null-safe.
 
-    The input is consumed TWICE (the range-shard edges aggregate and
-    the ranked base), and Catalyst replays a lazy lineage once per
-    consumer — for skip_simulation that meant the whole row-scale
-    unpivot + per-value agg ran twice. The primitive therefore
-    lazily materializes its input: every caller passes a value-
-    cardinality/histogram-scale relation (per the contract that
-    `order_col` is unique per group), so the materialized copy is
-    small; an input that is already a checkpoint just pays one extra
-    small copy.
+    Output: input columns + for each `out_cols[i]`: the Σ of
+    `val_cols[i]` (or the row count) over rows strictly before this
+    row, and `out_cols[i] + "_total"`, the group's whole sum.
+
+    The input is read two or three times (edges, shard totals, the
+    windowed rows), so a caller whose input is not already a
+    checkpoint or a cheap scan pins it first.
     """
-    df = materialize(df)
-    probs = [i / n_shards for i in range(1, n_shards)]
-    edges = df.groupBy(group_col).agg(
-        F.percentile_approx(order_col, probs, 10_000).alias("__edges")
-    )
-    base = (
-        df.join(F.broadcast(edges), group_col)
-        .withColumn(
+    groups = list(group_cols)
+    first = order_cols[0]
+    if isinstance(df.schema[first].dataType, StringType):
+        base = df.withColumn("__shard", F.ascii(F.substring(first, 1, 1)))
+    else:
+        probs = [i / n_shards for i in range(1, n_shards)]
+        edges = df.groupBy(*groups).agg(
+            F.percentile_approx(first, probs, 10_000).alias("__edges")
+        )
+        base = join_null_safe(df, F.broadcast(edges), groups).withColumn(
             "__shard",
             F.aggregate(
                 "__edges",
                 F.lit(0),
-                lambda acc, e: acc
-                + F.when(F.col(order_col) > e, 1).otherwise(0),
+                lambda acc, e: acc + F.when(F.col(first) > e, 1).otherwise(0),
             ),
-        )
-        .drop("__edges")
+        ).drop("__edges")
+    keys = groups + ["__shard"]
+    sums = [F.col(v) for v in val_cols] or [F.lit(1)]
+    outs = list(zip(out_cols, sums, strict=True))
+    shard_tot = base.groupBy(*keys).agg(
+        *(F.sum(s).alias(f"__t_{o}") for o, s in outs)
     )
-    w_in = (
-        Window.partitionBy(group_col, "__shard")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    shard_tot = base.groupBy(group_col, "__shard").agg(
-        F.sum(val_col).alias("__tot")
-    )
-    w_off = (
-        Window.partitionBy(group_col)
-        .orderBy("__shard")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    w_shards = Window.partitionBy(*groups).orderBy("__shard")
+    w_off = w_shards.rowsBetween(Window.unboundedPreceding, -1)
+    w_all = w_shards.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
     )
     offsets = shard_tot.select(
-        group_col,
-        "__shard",
-        F.coalesce(F.sum("__tot").over(w_off), F.lit(0)).alias("__off"),
+        *keys,
+        *(
+            F.coalesce(F.sum(f"__t_{o}").over(w_off), F.lit(0)).alias(
+                f"__o_{o}"
+            )
+            for o, _ in outs
+        ),
+        *(
+            F.sum(f"__t_{o}").over(w_all).alias(f"{o}_total")
+            for o, _ in outs
+        ),
     )
-    return (
-        base.withColumn(
-            "__within", F.coalesce(F.sum(val_col).over(w_in), F.lit(0))
-        )
-        .join(F.broadcast(offsets), [group_col, "__shard"])
-        .withColumn(out_col, F.col("__within") + F.col("__off"))
-        .drop("__shard", "__within", "__off")
+    w_in = (
+        Window.partitionBy(*keys)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    within = base.select(
+        "*",
+        *(
+            F.coalesce(F.sum(s).over(w_in), F.lit(0)).alias(f"__w_{o}")
+            for o, s in outs
+        ),
+    )
+    return join_null_safe(within, F.broadcast(offsets), keys).select(
+        *df.columns,
+        *(
+            (F.col(f"__w_{o}") + F.col(f"__o_{o}")).alias(o)
+            for o, _ in outs
+        ),
+        *(f"{o}_total" for o, _ in outs),
     )

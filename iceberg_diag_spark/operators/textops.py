@@ -1031,18 +1031,14 @@ def classifier_pr_curve(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("y").cast("long").alias("n1"),
         )
-        .withColumn("__g", F.lit(0))
-        .withColumn("__negs", -F.col("z_micro"))  # two prefix consumers
+        .withColumn("__negs", -F.col("z_micro"))  # prefix reads it 3x
     )
-    pre1 = grouped_prefix_sum(hist, "__g", "__negs", "n1", out_col="c1")
-    pre = grouped_prefix_sum(pre1, "__g", "__negs", "n", out_col="cn")
-    tot = hist.agg(F.sum("n1").cast("long").alias("p_total"))
+    pre = grouped_prefix_sum(hist, [], ["__negs"], ["n1", "n"], ["c1", "cn"])
     rows = materialize(
-        pre.crossJoin(F.broadcast(tot))
-        .filter(F.col("p_total") > 0)
+        pre.filter(F.col("c1_total") > 0)
         .select(
             "z_micro",
-            "p_total",
+            F.col("c1_total").alias("p_total"),
             (F.col("c1") + F.col("n1")).cast("long").alias("tp"),
             (F.col("cn") + F.col("n") - F.col("c1") - F.col("n1"))
             .cast("long")
@@ -1107,7 +1103,7 @@ def exact_auc(
     class is absent."""
     from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
 
-    hist = (
+    hist = materialize(  # the prefix reads it three times
         scored.groupBy(F.col(score_col).alias("__s"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
@@ -1115,13 +1111,7 @@ def exact_auc(
         )
         .withColumn("n0", F.col("n") - F.col("n1"))
     )
-    pre = grouped_prefix_sum(
-        hist.withColumn("__g", F.lit(0)),
-        "__g",
-        "__s",
-        "n0",
-        out_col="cum0",
-    )
+    pre = grouped_prefix_sum(hist, [], ["__s"], ["n0"], ["cum0"])
     return pre.agg(
         F.sum("n1").cast("long").alias("n_pos_total"),
         F.sum("n0").cast("long").alias("n_neg_total"),
@@ -3018,18 +3008,18 @@ def source_quality_calibration(
     source percentile, not the raw score. Score here is the
     type-token ratio in exact ppm (the quality_dup_matrix proxy).
 
-    Distributed shape — the grouped global_rank idiom
-    (shuffling.py): a bare `row_number() OVER (PARTITION BY source
-    ORDER BY score)` puts each source (potentially 10^9+ docs) in
-    one task. Instead per-source approx-percentile range edges (a
-    |sources|-row broadcast; accuracy affects only load balance,
-    never correctness) assign each row an order-preserving shard;
-    ranks complete within (source, shard) windows plus exact
-    broadcast cumulative shard counts. pct_ppm =
+    Distributed shape — the count mode of shuffling.grouped_prefix_sum:
+    a bare `row_number() OVER (PARTITION BY source ORDER BY score)`
+    puts each source (potentially 10^9+ docs) in one task. Instead
+    per-source approx-percentile range edges (a |sources|-row
+    broadcast; accuracy affects only load balance, never
+    correctness) assign each row an order-preserving shard; ranks
+    complete within (source, shard) windows plus exact broadcast
+    cumulative shard counts. pct_ppm =
     floor(1e6·(rank−1)/(n_s−1)) so each source spans [0, 1e6].
     Output: (doc_id, source, ttr_ppm, src_rank, pct_ppm).
     """
-    from pyspark.sql.window import Window
+    from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
 
     toks = tokens(F.col(text_col))
     scored = ensure_parallelism(docs).select(
@@ -3043,60 +3033,22 @@ def source_quality_calibration(
         .cast("long")
         .alias("ttr_ppm"),
     )
-    # two consumers (percentile-edge aggregate, sharded rank base)
+    # three consumers (percentile edges, shard totals, the ranked base)
     scored = materialize(scored)
-    probs = [i / n_shards for i in range(1, n_shards)]
-    edges = scored.groupBy("source").agg(
-        F.percentile_approx("ttr_ppm", probs, 10_000).alias("__edges")
-    )
-    base = (
-        scored.join(F.broadcast(edges), "source")
-        .withColumn(
-            "__shard",
-            F.aggregate(
-                "__edges",
-                F.lit(0),
-                lambda acc, e: acc
-                + F.when(F.col("ttr_ppm") > e, 1).otherwise(0),
-            ),
-        )
-        .drop("__edges")
-    )
-    w = Window.partitionBy("source", "__shard").orderBy("ttr_ppm", id_col)
-    sizes = base.groupBy("source", "__shard").agg(
-        F.count(F.lit(1)).alias("__cnt")
-    )
-    w_off = (
-        Window.partitionBy("source")
-        .orderBy("__shard")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = sizes.select(
+    return grouped_prefix_sum(
+        scored, ["source"], ["ttr_ppm", id_col], n_shards=n_shards
+    ).select(
+        id_col,
         "source",
-        "__shard",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__cnt").over(
-            Window.partitionBy("source").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("__n_s"),
-    )
-    return (
-        base.withColumn("__rk", F.row_number().over(w))
-        .join(F.broadcast(offsets), ["source", "__shard"])
-        .select(
-            id_col,
-            "source",
-            "ttr_ppm",
-            (F.col("__off") + F.col("__rk")).cast("long").alias("src_rank"),
-            F.floor(
-                F.lit(1_000_000)
-                * (F.col("__off") + F.col("__rk") - 1)
-                / F.greatest(F.col("__n_s") - 1, F.lit(1))
-            )
-            .cast("long")
-            .alias("pct_ppm"),
+        "ttr_ppm",
+        (F.col("prefix") + 1).cast("long").alias("src_rank"),
+        F.floor(
+            F.lit(1_000_000)
+            * F.col("prefix")
+            / F.greatest(F.col("prefix_total") - 1, F.lit(1))
         )
+        .cast("long")
+        .alias("pct_ppm"),
     )
 
 
@@ -4008,73 +3960,32 @@ def doc_kn_perplexity(
     matters because NLL is not comparable across domains — the
     source_quality_calibration argument.
 
-    Distributed shape: the per-source ranking uses the grouped
-    global_rank idiom (approx-percentile range shards per source —
-    accuracy affects only load balance — exact within-shard windows,
-    broadcast cumulative offsets), never a one-task-per-source
-    window. Band assignment replicates NTILE exactly from (rank, n_s)
-    arithmetic: the first n_s mod k bands hold ceil(n_s/k) docs —
-    integer-exact, so the oracle's plain ntile() hash-matches.
+    Distributed shape: the per-source ranking is the count mode of
+    shuffling.grouped_prefix_sum (approx-percentile range shards per
+    source — accuracy affects only load balance — exact within-shard
+    windows, broadcast cumulative offsets), never a one-task-per-
+    source window. Band assignment replicates NTILE exactly from
+    (rank, n_s) arithmetic: the first n_s mod k bands hold
+    ceil(n_s/k) docs — integer-exact, so the oracle's plain ntile()
+    hash-matches.
 
     Output per (source, band): (source, band, n_docs,
     lo_avg_nll_micro, hi_avg_nll_micro).
     """
-    from pyspark.sql.window import Window
+    from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
 
-    # three consumers (edge sketch, shard assignment, size/offset)
+    # three consumers (percentile edges, shard totals, the ranked base)
     scored = materialize(doc_kn_nll(
         docs, min_pair, text_col, id_col, source_col
     ))
-    probs = [i / n_shards for i in range(1, n_shards)]
-    edges = scored.groupBy("source").agg(
-        F.percentile_approx("avg_nll_micro", probs, 10_000).alias("__edges")
-    )
-    base = (
-        scored.join(F.broadcast(edges), "source")
-        .withColumn(
-            "__shard",
-            F.aggregate(
-                "__edges",
-                F.lit(0),
-                lambda acc, e: acc
-                + F.when(F.col("avg_nll_micro") > e, 1).otherwise(0),
-            ),
-        )
-        .drop("__edges")
-    )
-    w = Window.partitionBy("source", "__shard").orderBy(
-        "avg_nll_micro", id_col
-    )
-    sizes = base.groupBy("source", "__shard").agg(
-        F.count(F.lit(1)).alias("__cnt")
-    )
-    w_off = (
-        Window.partitionBy("source")
-        .orderBy("__shard")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = sizes.select(
-        "source",
-        "__shard",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__cnt")
-        .over(
-            Window.partitionBy("source").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        .alias("__n_s"),
-    )
     k = n_bands
-    ranked = (
-        base.withColumn("__rk", F.row_number().over(w))
-        .join(F.broadcast(offsets), ["source", "__shard"])
-        .select(
-            "source",
-            "avg_nll_micro",
-            (F.col("__off") + F.col("__rk")).alias("rnk"),
-            F.col("__n_s").alias("n_s"),
-        )
+    ranked = grouped_prefix_sum(
+        scored, ["source"], ["avg_nll_micro", id_col], n_shards=n_shards
+    ).select(
+        "source",
+        "avg_nll_micro",
+        (F.col("prefix") + 1).alias("rnk"),
+        F.col("prefix_total").alias("n_s"),
     )
     # exact NTILE(k): sz = n DIV k, rem = n % k; the first rem bands
     # take sz+1 rows. When n < k, sz = 0 and cut = n, so every rank

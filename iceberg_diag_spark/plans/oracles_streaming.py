@@ -1302,7 +1302,7 @@ REGISTRY.update({
     "doc_pack_sequences": QuerySpec(
         _doc_pack_sequences, _DOC_PACK_SQL,
         "greedy fit-before-append sequence packing into 256-token "
-        "training windows, sharded applyInPandas fold; "
+        "training windows, per-key Arrow fold (fold_by_key); "
         "boundary-recursive CTE oracle",
     ),
     "pii_redaction": QuerySpec(

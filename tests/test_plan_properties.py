@@ -252,13 +252,14 @@ _SCALAR_CROSS_OK = {
     "doc_weighted_sample",       # broadcast 1-row mean-weight scalar
     "diag_snapshot_retention",   # broadcast 1-row retention cutoff
     "doc_unigram_logprob",       # broadcast 1-row corpus token total
-    "customer_rfm_segments",     # broadcast 1-row max-date / count /
-                                 #   percentile-edge scalars (global_rank)
+    "customer_rfm_segments",     # broadcast 1-row max-date and
+                                 #   percentile-edge scalars
+                                 #   (grouped_prefix_sum, no groups)
     "source_vocab_tv",           # vocab(≤1024) × sources(≤|taxonomy|)
                                  #   alignment spine — both bounded by
                                  #   construction, metadata scale
     "events_disorder_audit",     # broadcast 1-row shard-edge scalar
-                                 #   (the global_rank idiom)
+                                 #   (events._lateness prefix max)
     "padding_waste_audit",       # broadcast 1-row corpus-max and
                                  #   percentile-edge scalars
     "events_watermark_advisor",  # broadcast 1-row shard-edge scalar

@@ -510,9 +510,9 @@ def test_cluster_apply_digests_and_ties(spark, tmp_path):
 def test_cluster_apply_plan_scale_shape(spark, tmp_path):
     """The only broadcast hints in the ledger plan are
     grouped_prefix_sum's documented n_shards-bounded internals
-    (range-shard edges + per-shard offsets) from the PREDICTION call
-    site — the ranking call's are behind the eager rewrite
-    checkpoint; the row-scale and value-cardinality relations are
+    (range-shard edges + per-shard offsets) from its ONE call, whose
+    prefix feeds both the prediction and the rewrite ranking (the
+    latter behind the eager rewrite checkpoint); the row-scale and value-cardinality relations are
     never hinted, and the plan has no cartesian product or
     row-at-a-time Python."""
     from iceberg_diag_spark.operators.compaction import (
@@ -537,7 +537,7 @@ def test_cluster_apply_plan_scale_shape(spark, tmp_path):
         [("v", 1, 1)], "col_name string, v long, k long"
     )
     one_gps = grouped_prefix_sum(
-        vals, "col_name", "v", "k", out_col="__pre"
+        vals, ["col_name"], ["v"], ["k"], ["__pre"]
     )._jdf.queryExecution().logical().toString()
     assert logical.count("ResolvedHint") == one_gps.count("ResolvedHint")
     phys = led._jdf.queryExecution().executedPlan().toString()
@@ -711,6 +711,7 @@ def test_sorted_after_stats_matches_bruteforce_sweep(spark):
     from iceberg_diag_spark.operators.maintenance import (
         sorted_after_stats,
     )
+    from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
 
     rng = random.Random(140814)
 
@@ -766,7 +767,10 @@ def test_sorted_after_stats_matches_bruteforce_sweep(spark):
         )
         got = {
             r["col_name"]: r
-            for r in sorted_after_stats(vals, m).collect()
+            for r in sorted_after_stats(
+                grouped_prefix_sum(vals, ["col_name"], ["v"], ["k"], ["__pre"]),
+                m,
+            ).collect()
         }
         assert set(got) == set(cases)
         for name, counts in cases.items():

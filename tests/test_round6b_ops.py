@@ -435,6 +435,24 @@ def test_exact_quota_holdout_total_always_exact(spark):
         assert got == (137 * ppm) // 1_000_000, ppm
 
 
+def test_exact_quota_holdout_keeps_null_stratum(spark):
+    """A NULL stratum is one stratum: it counts toward the quotas, so
+    its picks must survive the offset and quota joins, or the holdout
+    falls short of floor(N·ppm/1e6)."""
+    from iceberg_diag_spark.operators.sampling import exact_quota_holdout
+
+    rows = [(i, None if i % 2 else "a") for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id long, source string")
+    got = exact_quota_holdout(df, holdout_ppm=500_000).collect()
+    assert len(got) == 20
+    by_stratum = {}
+    for r in got:
+        by_stratum.setdefault(r["stratum"], []).append(r["pick_rank"])
+    assert {s: sorted(v) for s, v in by_stratum.items()} == {
+        "a": list(range(1, 11)), None: list(range(1, 11))
+    }
+
+
 def test_clone_pairs_verified_filters_by_edit_ratio(spark):
     from iceberg_diag_spark.operators.dedup import clone_pairs_verified
 

@@ -151,12 +151,12 @@ def test_grouped_prefix_sum_shard_invariance_at_10m(spark):
         (F.pmod(F.xxhash64(i), 100) + 1).alias("v"),
     )
     t0 = time.time()
-    a = grouped_prefix_sum(df, "g", "k", "v", out_col="p", n_shards=64)
+    a = grouped_prefix_sum(df, ["g"], ["k"], ["v"], ["p"], n_shards=64)
     chk_a = a.agg(
         F.sum(F.col("p") * F.col("v")).alias("dot"), F.max("p").alias("mx")
     ).collect()[0]
     wall = time.time() - t0
-    b = grouped_prefix_sum(df, "g", "k", "v", out_col="p", n_shards=3)
+    b = grouped_prefix_sum(df, ["g"], ["k"], ["v"], ["p"], n_shards=3)
     chk_b = b.agg(
         F.sum(F.col("p") * F.col("v")).alias("dot"), F.max("p").alias("mx")
     ).collect()[0]
