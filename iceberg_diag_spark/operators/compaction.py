@@ -611,11 +611,13 @@ def cluster_apply_sorted(
         f.name for f in pre.schema.fields if f.name != file_col
     ]
     iw = Window.partitionBy(value_col).orderBy(key_col)
+    # null-safe: the NULL sort value is one value (ranked first), and
+    # an equi-join would drop its rows from the rewrite
     ranked = (
-        pre.select(*data_cols)
-        .join(
+        join_null_safe(
+            pre.select(*data_cols),
             base.select(F.col("v").alias(value_col), "__pre"),
-            value_col,
+            [value_col],
         )
         .withColumn(
             "__rank", F.col("__pre") + F.row_number().over(iw)

@@ -569,7 +569,8 @@ def data_mixing_sample(
     pre = grouped_prefix_sum(
         keyed, [strata_col], ["__k", id_col], ["w"], ["__prefix"]
     )
-    chosen = pre.join(F.broadcast(plan), strata_col).filter(
+    # null-safe: data_mixing_plan allocates to the NULL source too
+    chosen = join_null_safe(pre, F.broadcast(plan), [strata_col]).filter(
         F.col("__prefix") < F.col("tokens_alloc")
     )
     return (

@@ -1,15 +1,30 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search and embedding audits over array<float> columns.
 
-Two paths:
-- cosine_topk: exact brute-force top-k for a bounded query set.
-  Query side is broadcast (it's small by construction), so the big
-  side streams with NO shuffle — the plan is scan → broadcast
-  nested-loop join → project → per-query top-k. At 100 TB the work is
-  O(|queries| * |corpus|) dot products, embarrassingly parallel.
-- lsh_topk: random-hyperplane LSH bucketing as the scale path —
-  candidates only form within matching buckets, trading recall for a
-  corpus-sized (not quadratic) shuffle. Hyperplanes are generated
-  from a seed, deterministic.
+Two tiers:
+- Float validation tier (cosine_topk, embedding_near_dup, lsh_topk,
+  lsh_near_dup_pairs, ivf_topk): double dot products, seeded float
+  hyperplanes or MLlib KMeans. Results are engine-private, so these
+  are checked by recall against brute force, not by hash oracles.
+- Exact tier (lsh_*_exact, ivf_*, ann_recall_eval,
+  retrieval_rank_eval, hard_negative_mining, matryoshka_audit,
+  embedding_consistency_audit and the integer audits): every result
+  is integer-deterministic and hash-matched against DuckDB. Its ANN
+  pipeline is four stages, each written once below:
+  1. quantize: `_quantize` puts every component on the grid
+     floor(x·2^scale_bits); `_quantized` adds the squared norm n2,
+     one fold per vector.
+  2. candidates: the generators differ — brute force over a
+     broadcast query panel (`_panel_topk`), sign-LSH bucket tables
+     (`_exact_bucketed` + `_bucket_pairs`), IVF cells ranked by exact
+     integer d² (`_cells_sorted_expr`), or pairs inside one cell.
+     Generators move ids; `_rejoin_score` joins the quantized
+     vectors back.
+  3. score: `_cos_mppm` = floor(1e6·d/(√na2·√nb2)), the one float
+     step, with the operand order the oracles spell.
+  4. top-K: `_topk` keeps the k best rows per query by (score desc,
+     neighbor asc), a total order; the filter on row_number compiles
+     to a per-task WindowGroupLimit. `_both_ways` feeds it both
+     orientations of pairs scored once.
 
 Dot products use zip_with + aggregate — JVM higher-order functions,
 no Python in the loop.
@@ -40,6 +55,154 @@ def l2_norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
+
+
+def int_dot(a: Column, b: Column) -> Column:
+    """Σ a[i]·b[i] over integer arrays as an exact long fold."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("long") * y.cast("long")),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+
+
+def _quantize_value(x: Column, scale_bits: int) -> Column:
+    """floor(x·2^scale_bits) as a long: the exact tier's one grid.
+    Widening float to double and scaling by a power of two are exact,
+    and floor is deterministic, so every engine lands on the same
+    integer."""
+    return F.floor(x.cast("double") * (1 << scale_bits)).cast("long")
+
+
+def _quantize(vec: Column, scale_bits: int) -> Column:
+    """Every component of an array column on the `_quantize_value` grid."""
+    return F.transform(vec, lambda x: _quantize_value(x, scale_bits))
+
+
+def _quantized(
+    df: DataFrame, scale_bits: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id_col, q, n2): quantized vectors with their squared norm,
+    one fold per VECTOR rather than one per candidate pair."""
+    return df.select(
+        F.col(id_col), _quantize(F.col(vec_col), scale_bits).alias("q")
+    ).select(id_col, "q", int_dot(F.col("q"), F.col("q")).alias("n2"))
+
+
+def _cos_mppm(d: Column, na2: str | Column, nb2: str | Column) -> Column:
+    """Exact-tier cosine in millionths: floor(1e6·d / (√na2·√nb2)).
+    d and the squared norms are exact integers; IEEE sqrt and divide
+    are correctly rounded single operations, so with this operand
+    order (the one the DuckDB oracles spell) the result is
+    bit-identical across engines. A zero norm yields NULL here and
+    inf in DuckDB: each caller filters or maps zero norms first."""
+    return F.floor(
+        F.lit(1_000_000.0) * d / (F.sqrt(na2) * F.sqrt(nb2))
+    ).cast("long")
+
+
+def _topk(
+    scored: DataFrame,
+    k: int,
+    score: str = "cos_mppm",
+    query: str = "query_id",
+    neighbor: str = "neighbor_id",
+    rank: str = "rank",
+    desc: bool = True,
+) -> DataFrame:
+    """The k best rows per `query`, ranked by (score desc, neighbor
+    asc) — a total order, so the kept set is the same on any engine —
+    with `rank` (1-based, long) added. desc=False ranks ascending
+    (nearest cells, argmin assignment). The filter sits directly on
+    the row_number column, which lets InferWindowGroupLimit plan a
+    per-task WindowGroupLimit below the exchange: only k rows per
+    (query, task) shuffle."""
+    from pyspark.sql.window import Window
+
+    order = F.desc(score) if desc else F.asc(score)
+    w = Window.partitionBy(query).orderBy(order, F.asc(neighbor))
+    return (
+        scored.withColumn(rank, F.row_number().over(w))
+        .filter(F.col(rank) <= k)
+        .withColumn(rank, F.col(rank).cast("long"))
+    )
+
+
+def _both_ways(
+    pairs: DataFrame, query: str = "query_id", neighbor: str = "neighbor_id"
+) -> DataFrame:
+    """Unordered pairs (vec_a, vec_b, cos_mppm), each scored once, as
+    both (query, neighbor) orientations for a per-query ranking. Reads
+    `pairs` twice: the caller pins it."""
+    return pairs.select(
+        F.col("vec_a").alias(query), F.col("vec_b").alias(neighbor), "cos_mppm"
+    ).unionAll(
+        pairs.select(
+            F.col("vec_b").alias(query),
+            F.col("vec_a").alias(neighbor),
+            "cos_mppm",
+        )
+    )
+
+
+def _rejoin_score(
+    cand: DataFrame,
+    base: DataFrame,
+    a: str,
+    b: str,
+    id_col: str,
+    keep: Column | None = None,
+) -> DataFrame:
+    """Score id pairs (a, b) of `cand` by exact integer cosine: the
+    quantized vectors of `base` = (id_col, q, n2) join back by id on
+    both sides, so candidate generation and its dedup exchange move
+    ids only. `keep` filters on (d, na2, nb2) before scoring; the
+    default drops zero-norm sides (no direction: 0/0 is NaN, and
+    CAST(NaN AS BIGINT) errors on some engines). Output:
+    (a, b, cos_mppm)."""
+    qa = base.select(
+        F.col(id_col).alias(a), F.col("q").alias("qa"), F.col("n2").alias("na2")
+    )
+    qb = base.select(
+        F.col(id_col).alias(b), F.col("q").alias("qb"), F.col("n2").alias("nb2")
+    )
+    if keep is None:
+        keep = (F.col("na2") > 0) & (F.col("nb2") > 0)
+    return (
+        cand.join(qa, a)
+        .join(qb, b)
+        .select(a, b, int_dot(F.col("qa"), F.col("qb")).alias("d"), "na2", "nb2")
+        .filter(keep)
+        .select(a, b, _cos_mppm(F.col("d"), "na2", "nb2").alias("cos_mppm"))
+    )
+
+
+def _panel_topk(
+    base: DataFrame, id_col: str, query_mod: int, k: int
+) -> DataFrame:
+    """Exact brute-force top-k ground truth for the query panel — the
+    deterministic 1/query_mod id-sample (id % query_mod = 0) of `base`
+    = (id_col, q, n2), zero norms already removed — against all of
+    `base`. The panel broadcasts, so the corpus streams through a
+    nested-loop join once and the work is O(N·Q), never all-pairs.
+    Output: (query_id, neighbor_id, cos_mppm, rank)."""
+    panel = base.filter(F.col(id_col) % query_mod == 0).select(
+        F.col(id_col).alias("query_id"),
+        F.col("q").alias("qq"),
+        F.col("n2").alias("qn2"),
+    )
+    scored = (
+        base.crossJoin(F.broadcast(panel))
+        .filter(F.col(id_col) != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col(id_col).alias("neighbor_id"),
+            _cos_mppm(int_dot(F.col("q"), F.col("qq")), "n2", "qn2").alias(
+                "cos_mppm"
+            ),
+        )
+    )
+    return _topk(scored, k)
 
 
 # Above this corpus size the exact quadratic tiers refuse to run:
@@ -101,20 +264,8 @@ def cosine_topk(
         "neighbor_id",
         cosine(F.col("q_vec"), F.col("n_vec")).alias("cos_sim"),
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("cos_sim", 6).alias("cos_sim"),
-        )
+    return _topk(scored, k, "cos_sim").select(
+        "query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim")
     )
 
 
@@ -200,7 +351,6 @@ def ivf_topk(
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
-    from pyspark.sql.window import Window
 
     ds = embeddings.select(
         F.col(id_col),
@@ -237,14 +387,12 @@ def ivf_topk(
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    wq = Window.partitionBy("query_id").orderBy("d2", "c.list_id")
-    probes = (
-        qs.select("query_id", "q_vec", F.explode(cent_structs).alias("c"))
-        .withColumn("d2", d2)
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "q_vec", F.col("c.list_id").alias("list_id"))
-    )
+    probes = _topk(
+        qs.select(
+            "query_id", "q_vec", F.explode(cent_structs).alias("c")
+        ).withColumn("d2", d2),
+        n_probe, "d2", neighbor="c.list_id", rank="pr", desc=False,
+    ).select("query_id", "q_vec", F.col("c.list_id").alias("list_id"))
 
     pairs = probes.join(assigned, "list_id").filter(
         F.col("query_id") != F.col("neighbor_id")
@@ -254,16 +402,8 @@ def ivf_topk(
         "neighbor_id",
         cosine(F.col("q_vec"), F.col("n_vec")).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("cos_sim", 6).alias("cos_sim"),
-        )
+    return _topk(scored, k, "cos_sim").select(
+        "query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim")
     )
 
 
@@ -310,6 +450,29 @@ def lsh_candidates(
     )
 
 
+def _rejoin_cosine(
+    cand: DataFrame, embeddings: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """Float-tier scoring of (query_id, neighbor_id) candidates: the
+    raw vectors join back by id on both sides, so candidate dedup
+    moves ids only. Output: (query_id, neighbor_id, cos_sim)."""
+    vq = embeddings.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    )
+    vn = embeddings.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("n_vec")
+    )
+    return (
+        cand.join(vq, "query_id")
+        .join(vn, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            cosine(F.col("q_vec"), F.col("n_vec")).alias("cos_sim"),
+        )
+    )
+
+
 def lsh_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.45,
@@ -328,22 +491,14 @@ def lsh_near_dup_pairs(
     cand = lsh_candidates(
         embeddings, n_planes, n_tables, dim, seed, id_col, vec_col
     ).filter(F.col("query_id") < F.col("neighbor_id"))
-    vecs_a = embeddings.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("va")
-    )
-    vecs_b = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vb")
-    )
     return (
-        cand.join(vecs_a, "query_id")
-        .join(vecs_b, "neighbor_id")
+        _rejoin_cosine(cand, embeddings, id_col, vec_col)
+        .filter(F.col("cos_sim") >= threshold)
         .select(
             F.col("query_id").alias("vec_a"),
             F.col("neighbor_id").alias("vec_b"),
-            cosine(F.col("va"), F.col("vb")).alias("cos_raw"),
+            F.round("cos_sim", 6).alias("cos_sim"),
         )
-        .filter(F.col("cos_raw") >= threshold)
-        .select("vec_a", "vec_b", F.round("cos_raw", 6).alias("cos_sim"))
     )
 
 
@@ -369,33 +524,9 @@ def lsh_topk(
     cand = lsh_candidates(
         embeddings, n_planes, n_tables, dim, seed, id_col, vec_col
     )
-    vecs_q = embeddings.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    vecs_n = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("n_vec")
-    )
-    scored = (
-        cand.join(vecs_q, "query_id")
-        .join(vecs_n, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("q_vec"), F.col("n_vec")).alias("cos_sim"),
-        )
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("cos_sim", 6).alias("cos_sim"),
-        )
+    scored = _rejoin_cosine(cand, embeddings, id_col, vec_col)
+    return _topk(scored, k, "cos_sim").select(
+        "query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim")
     )
 
 
@@ -458,11 +589,10 @@ def nearest_centroid_confusion(
     that dimension; summing (val - c)^2 per (vec, candidate) yields
     all #labels distances in a single shuffle-free-after-join pass.
     Catalyst broadcasts the centroid side (#labels × dim rows). The
-    argmin is row_number() == 1, which InferWindowGroupLimit turns
-    into a map-side group limit. Everything stays JVM-side; nothing
-    but the final #labels² confusion rows leaves the executors."""
-    from pyspark.sql import Window
-
+    argmin is the shared `_topk` with k=1 (ascending), which
+    InferWindowGroupLimit turns into a map-side group limit.
+    Everything stays JVM-side; nothing but the final #labels²
+    confusion rows leaves the executors."""
     ex = embeddings.select(
         F.col("vec_id"),
         F.col(label_col).alias("label"),
@@ -483,10 +613,8 @@ def nearest_centroid_confusion(
         # ties identically everywhere
         .withColumn("d2q", F.floor(F.col("d2") * F.lit(1_000_000.0)).cast("long"))
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("d2q"), F.col("cand"))
-    assigned = (
-        dists.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+    assigned = _topk(
+        dists, 1, "d2q", query="vec_id", neighbor="cand", rank="rn", desc=False
     )
     return (
         assigned.groupBy("label", F.col("cand").alias("predicted"))
@@ -616,8 +744,6 @@ def semantic_dedup(
 
     Output: (cluster, n_vecs, n_dropped, n_kept) per cluster.
     """
-    from pyspark.sql.window import Window
-
     ex = embeddings.select(
         F.col("vec_id"),
         F.col(label_col).alias("label"),
@@ -632,11 +758,12 @@ def semantic_dedup(
         .agg(F.sum((F.col("val") - F.col("c")) ** 2).alias("d2"))
         .withColumn("d2q", F.floor(F.col("d2") * F.lit(1_000_000.0)).cast("long"))
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("d2q"), F.col("cand"))
     # two consumers (both sides of the within-cluster self-join)
     assigned = materialize(
-        dists.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        _topk(
+            dists, 1, "d2q", query="vec_id", neighbor="cand", rank="rn",
+            desc=False,
+        )
         .select("vec_id", F.col("cand").alias("cluster")),
         eager=True,
     )
@@ -786,12 +913,7 @@ def dim_variance_audit(emb: DataFrame, scale_bits: int = 10) -> DataFrame:
     """
     ex = emb.select(
         F.posexplode("embedding").alias("pos", "val")
-    ).select(
-        "pos",
-        F.floor(F.col("val").cast("double") * F.lit(float(2 ** scale_bits)))
-        .cast("long")
-        .alias("q"),
-    )
+    ).select("pos", _quantize_value(F.col("val"), scale_bits).alias("q"))
     g = ex.groupBy("pos").agg(
         F.count(F.lit(1)).cast("long").alias("n_vecs"),
         F.sum(F.col("q").cast("decimal(38,0)")).alias("s"),
@@ -845,15 +967,6 @@ def md5_hyperplanes(
     ]
 
 
-def int_dot(a: Column, b: Column) -> Column:
-    """Σ a[i]·b[i] over integer arrays as an exact long fold."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("long") * y.cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def _exact_bucketed(
     embeddings: DataFrame,
     n_planes: int,
@@ -877,15 +990,8 @@ def _exact_bucketed(
     expression node — fast to construct AND codegen-friendly.
     """
     planes = md5_hyperplanes(dim, n_planes, n_tables)
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
-    )
-    base = ensure_parallelism(embeddings).select(
-        F.col(id_col), qv.alias("q")
-    )
-    base = base.select(
-        id_col, "q", int_dot(F.col("q"), F.col("q")).alias("n2")
+    base = _quantized(
+        ensure_parallelism(embeddings), scale_bits, id_col, vec_col
     )
 
     def dot_sql(plane: list[int]) -> str:
@@ -913,6 +1019,21 @@ def _exact_bucketed(
         F.explode(F.expr(f"array({', '.join(table_exprs)})")).alias("tb"),
     ).select(id_col, "tb.t", "tb.bucket"))
     return base, tabled
+
+
+def _bucket_pairs(tabled: DataFrame, id_col: str) -> DataFrame:
+    """Sign-LSH candidates: unordered pairs (vec_a < vec_b) sharing a
+    bucket in at least one table of `tabled` = (id, t, bucket), each
+    pair once. Only the two ids cross the dedup exchange (16 B/pair,
+    not ~1 KB of long arrays); `_rejoin_score` brings the vectors."""
+    a = tabled.select(F.col("t"), F.col("bucket"), F.col(id_col).alias("vec_a"))
+    b = tabled.select(F.col("t"), F.col("bucket"), F.col(id_col).alias("vec_b"))
+    return (
+        a.join(b, ["t", "bucket"])
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b")
+        .dropDuplicates(["vec_a", "vec_b"])
+    )
 
 
 def lsh_near_dup_exact(
@@ -955,52 +1076,13 @@ def lsh_near_dup_exact(
     base, tabled = _exact_bucketed(
         embeddings, n_planes, n_tables, dim, scale_bits, id_col, vec_col
     )
-    a = tabled.select(
-        F.col("t"), F.col("bucket"), F.col(id_col).alias("vec_a")
+    # d > 0 also rules out zero norms
+    keep = (F.col("d") > 0) & (
+        F.lit(threshold_den * threshold_den) * F.col("d") * F.col("d")
+        >= F.lit(threshold_num * threshold_num) * F.col("na2") * F.col("nb2")
     )
-    b = tabled.select(
-        F.col("t"), F.col("bucket"), F.col(id_col).alias("vec_b")
-    )
-    # ids-only through the dedup exchange; vectors re-join after
-    cand = (
-        a.join(b, ["t", "bucket"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-    qa = base.select(
-        F.col(id_col).alias("vec_a"),
-        F.col("q").alias("qa"),
-        F.col("n2").alias("na2"),
-    )
-    qb = base.select(
-        F.col(id_col).alias("vec_b"),
-        F.col("q").alias("qb"),
-        F.col("n2").alias("nb2"),
-    )
-    cand = cand.join(qa, "vec_a").join(qb, "vec_b")
-    d = int_dot(F.col("qa"), F.col("qb"))
-    scored = cand.select(
-        "vec_a", "vec_b", d.alias("d"), "na2", "nb2"
-    ).filter(
-        (F.col("d") > 0)
-        & (
-            F.lit(threshold_den * threshold_den) * F.col("d") * F.col("d")
-            >= F.lit(threshold_num * threshold_num)
-            * F.col("na2")
-            * F.col("nb2")
-        )
-    )
-    return scored.select(
-        "vec_a",
-        "vec_b",
-        F.floor(
-            F.lit(1_000_000.0)
-            * F.col("d")
-            / (F.sqrt(F.col("na2")) * F.sqrt(F.col("nb2")))
-        )
-        .cast("long")
-        .alias("cos_mppm"),
+    return _rejoin_score(
+        _bucket_pairs(tabled, id_col), base, "vec_a", "vec_b", id_col, keep
     )
 
 
@@ -1033,8 +1115,6 @@ def lsh_topk_exact(
     query's candidate list (bounded by bucket sizes), never over the
     corpus. Output: (query_id, neighbor_id, rank, cos_mppm).
     """
-    from pyspark.sql.window import Window
-
     # `bucketed` lets a caller that already materialized the
     # (base, tabled) quantize+bucket stage (ann_recall_eval /
     # retrieval_rank_eval build it for their exact ground-truth
@@ -1044,82 +1124,17 @@ def lsh_topk_exact(
             embeddings, n_planes, n_tables, dim, scale_bits, id_col, vec_col
         )
     base, tabled = bucketed
-    a = tabled.select(
-        F.col("t"), F.col("bucket"), F.col(id_col).alias("vec_a")
-    )
-    b = tabled.select(
-        F.col("t"), F.col("bucket"), F.col(id_col).alias("vec_b")
-    )
     # kNN candidates are symmetric (same buckets both ways), so dedup
     # and score each UNORDERED pair once — half the exchange weight
     # and half the dot products — then emit both orientations into
     # the per-query ranking.
-    cand = (
-        a.join(b, ["t", "bucket"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-    qa = base.select(
-        F.col(id_col).alias("vec_a"),
-        F.col("q").alias("qa"),
-        F.col("n2").alias("na2"),
-    )
-    qb = base.select(
-        F.col(id_col).alias("vec_b"),
-        F.col("q").alias("qb"),
-        F.col("n2").alias("nb2"),
-    )
-    pair_scored = (
-        cand.join(qa, "vec_a")
-        .join(qb, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            int_dot(F.col("qa"), F.col("qb")).alias("d"),
-            "na2",
-            "nb2",
-        )
-        # all-zero quantized vectors have no direction: 0/0 is NaN
-        # (and CAST(NaN AS BIGINT) errors on some engines) — drop
-        .filter((F.col("na2") > 0) & (F.col("nb2") > 0))
-        .select(
-            "vec_a",
-            "vec_b",
-            F.floor(
-                F.lit(1_000_000.0)
-                * F.col("d")
-                / (F.sqrt(F.col("na2")) * F.sqrt(F.col("nb2")))
-            )
-            .cast("long")
-            .alias("cos_mppm"),
-        )
+    pair_scored = _rejoin_score(
+        _bucket_pairs(tabled, id_col), base, "vec_a", "vec_b", id_col
     )
     # two consumers (both union branches)
     pair_scored = materialize(pair_scored)
-    scored = pair_scored.select(
-        F.col("vec_a").alias("query_id"),
-        F.col("vec_b").alias("neighbor_id"),
-        "cos_mppm",
-    ).unionAll(
-        pair_scored.select(
-            F.col("vec_b").alias("query_id"),
-            F.col("vec_a").alias("neighbor_id"),
-            "cos_mppm",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_mppm"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            "cos_mppm",
-        )
+    return _topk(_both_ways(pair_scored), k).select(
+        "query_id", "neighbor_id", "rank", "cos_mppm"
     )
 
 
@@ -1170,50 +1185,10 @@ def embedding_consistency_audit(
         .filter((F.col("__n") > 1) & (F.col(id_col) != F.col("rep_id")))
         .select("rep_id", id_col)
     )
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
-    )
-    base = embeddings.select(
-        F.col(vec_id_col).alias("__vid"), qv.alias("q")
-    )
     # two consumers (both join sides)
-    base = materialize(base.select(
-        "__vid", "q", int_dot(F.col("q"), F.col("q")).alias("n2")
-    ))
-    qa = base.select(
-        F.col("__vid").alias("rep_id"),
-        F.col("q").alias("qa"),
-        F.col("n2").alias("na2"),
-    )
-    qb = base.select(
-        F.col("__vid").alias(id_col),
-        F.col("q").alias("qb"),
-        F.col("n2").alias("nb2"),
-    )
-    return (
-        members.join(qa, "rep_id")
-        .join(qb, id_col)
-        .select(
-            "rep_id",
-            id_col,
-            int_dot(F.col("qa"), F.col("qb")).alias("d"),
-            "na2",
-            "nb2",
-        )
-        .filter((F.col("na2") > 0) & (F.col("nb2") > 0))
-        .select(
-            "rep_id",
-            id_col,
-            F.floor(
-                F.lit(1_000_000.0)
-                * F.col("d")
-                / (F.sqrt(F.col("na2")) * F.sqrt(F.col("nb2")))
-            )
-            .cast("long")
-            .alias("cos_mppm"),
-        )
-        .filter(F.col("cos_mppm") < threshold_mppm)
+    base = materialize(_quantized(embeddings, scale_bits, vec_id_col, vec_col))
+    return _rejoin_score(members, base, "rep_id", id_col, vec_id_col).filter(
+        F.col("cos_mppm") < threshold_mppm
     )
 
 
@@ -1243,30 +1218,11 @@ def ivf_balance_audit(
     dev_ppm = share_ppm − floor(1e6/n_lists).
     """
     cents = md5_centroids(dim, n_lists, 1 << scale_bits)
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
-    )
     base = ensure_parallelism(embeddings).select(
-        F.col(id_col), qv.alias("q")
-    )
-
-    def d2_sql(cent: list[int]) -> str:
-        arr = ", ".join(f"{h}L" for h in cent)
-        return (
-            f"aggregate(zip_with(q, array({arr}),"
-            " (x, y) -> (x - y) * (x - y)),"
-            " cast(0 as long), (acc, v) -> acc + v)"
-        )
-
-    cell_structs = ", ".join(
-        f"named_struct('d2', {d2_sql(cents[c])}, 'c', {c})"
-        for c in range(n_lists)
+        F.col(id_col), _quantize(F.col(vec_col), scale_bits).alias("q")
     )
     assigned = base.select(
-        F.expr(
-            f"array_sort(array({cell_structs}))[0].c"
-        ).cast("long").alias("list_id")
+        F.expr(_cells_sorted_expr(cents) + "[0].c").cast("long").alias("list_id")
     )
     counts = assigned.groupBy("list_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_vecs")
@@ -1319,12 +1275,7 @@ def embedding_drift_audit(
         (F.pmod(F.col(id_col), F.lit(2)) == 0).alias("__a"),
         F.posexplode(F.col(vec_col)).alias("pos", "val"),
     ).select(
-        "label",
-        "__a",
-        "pos",
-        F.floor(F.col("val").cast("double") * F.lit(float(2 ** scale_bits)))
-        .cast("long")
-        .alias("q"),
+        "label", "__a", "pos", _quantize_value(F.col("val"), scale_bits).alias("q")
     )
     per_dim = ex.groupBy("label", "pos").agg(
         # cast INSIDE the sum so accumulation itself is 128-bit —
@@ -1395,11 +1346,7 @@ def embedding_dim_covariance(
         F.col(id_col).alias("__rid"),
         F.posexplode(F.col(vec_col)).alias("pos", "val"),
     ).select(
-        "__rid",
-        "pos",
-        F.floor(F.col("val").cast("double") * F.lit(float(2 ** scale_bits)))
-        .cast("long")
-        .alias("q"),
+        "__rid", "pos", _quantize_value(F.col("val"), scale_bits).alias("q")
     )
     ex = materialize(ex)
     # phase 1: exact variance numerator per dimension → top set
@@ -1468,18 +1415,20 @@ def md5_centroids(
     ]
 
 
-def _cells_sorted_expr(cents: list[list[int]]) -> str:
-    """SQL expression ranking every IVF cell by exact integer squared
-    distance from the quantized vector column `q`: one array_sort
-    over n_lists (d2, cell) structs per row — shared by
-    ivf_topk_exact and ivf_nprobe_sweep (pure extraction, plans
-    identical). Centroid literals render inline (the _exact_bucketed
-    lesson: one SQL string per cell, never a py4j literal tree)."""
+def _cells_sorted_expr(cents: list[list[int]], vec: str = "q") -> str:
+    """SQL expression ranking every cell by exact integer squared
+    distance from the quantized vector `vec` (default: the column
+    `q`): one array_sort over (d2, c) structs per row, nearest first,
+    ties to the lowest cell id. Element 0 is the assignment, a slice
+    the probe set. Every integer-centroid quantizer uses it: the IVF
+    cells, k-means seeds and PQ codewords (`vec` a subspace slice).
+    Centroid literals render inline (the _exact_bucketed lesson: one
+    SQL string per cell, never a py4j literal tree)."""
 
     def d2_sql(cent: list[int]) -> str:
         arr = ", ".join(f"{h}L" for h in cent)
         return (
-            f"aggregate(zip_with(q, array({arr}),"
+            f"aggregate(zip_with({vec}, array({arr}),"
             " (x, y) -> (x - y) * (x - y)),"
             " cast(0 as long), (acc, v) -> acc + v)"
         )
@@ -1519,22 +1468,12 @@ def ivf_topk_exact(
     the list_id-partitioned table a production pipeline would
     materialize. Output: (query_id, neighbor_id, rank, cos_mppm).
     """
-    from pyspark.sql.window import Window
-
     cents = md5_centroids(dim, n_lists, 1 << scale_bits)
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
-    )
-    base = ensure_parallelism(embeddings).select(
-        F.col(id_col), qv.alias("q")
-    )
-    base = base.select(
-        id_col, "q", int_dot(F.col("q"), F.col("q")).alias("n2")
-    )
     # `base` has three consumers (cells, both scoring sides), `cells`
     # two (assignment, probes)
-    base = materialize(base)
+    base = materialize(_quantized(
+        ensure_parallelism(embeddings), scale_bits, id_col, vec_col
+    ))
 
     cells = materialize(base.select(
         id_col,
@@ -1555,51 +1494,9 @@ def ivf_topk_exact(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
     )
-    qa = base.select(
-        F.col(id_col).alias("query_id"),
-        F.col("q").alias("qa"),
-        F.col("n2").alias("na2"),
-    )
-    qb = base.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("q").alias("qb"),
-        F.col("n2").alias("nb2"),
-    )
-    scored = (
-        cand.join(qa, "query_id")
-        .join(qb, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            int_dot(F.col("qa"), F.col("qb")).alias("d"),
-            "na2",
-            "nb2",
-        )
-        .filter((F.col("na2") > 0) & (F.col("nb2") > 0))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.floor(
-                F.lit(1_000_000.0)
-                * F.col("d")
-                / (F.sqrt(F.col("na2")) * F.sqrt(F.col("nb2")))
-            )
-            .cast("long")
-            .alias("cos_mppm"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_mppm"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            "cos_mppm",
-        )
+    scored = _rejoin_score(cand, base, "query_id", "neighbor_id", id_col)
+    return _topk(scored, k).select(
+        "query_id", "neighbor_id", "rank", "cos_mppm"
     )
 
 
@@ -1637,20 +1534,12 @@ def ivf_nprobe_sweep(
     probe rank 1); scan_frac_ppm is against the (corpus−1) rows a
     brute-force query would score.
     """
-    from pyspark.sql.window import Window
-
     max_p = max(probes)
     if max_p > n_lists:
         raise ValueError("max probe count cannot exceed n_lists")
     cents = md5_centroids(dim, n_lists, 1 << scale_bits)
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
-    )
     base = materialize(
-        ensure_parallelism(embeddings)
-        .select(F.col(id_col), qv.alias("q"))
-        .select(id_col, "q", int_dot(F.col("q"), F.col("q")).alias("n2"))
+        _quantized(ensure_parallelism(embeddings), scale_bits, id_col, vec_col)
         .filter(F.col("n2") > 0)  # corpus side + panel + cells
     )
     cells = materialize(base.select(
@@ -1663,35 +1552,15 @@ def ivf_nprobe_sweep(
     cell_sizes = assigned.groupBy("list_id").agg(
         F.count(F.lit(1)).cast("long").alias("csize")
     )
-    panel_ids = base.filter(F.col(id_col) % query_mod == 0).select(
-        F.col(id_col).alias("query_id"), F.col("q").alias("qq"),
-        F.col("n2").alias("qn2"),
-    )
     # exact brute-force top-k over the broadcast panel
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_mppm"), F.asc("neighbor_id")
-    )
-    exact = (
-        base.crossJoin(F.broadcast(panel_ids))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.floor(
-                F.lit(1_000_000.0)
-                * int_dot(F.col("q"), F.col("qq"))
-                / (F.sqrt(F.col("n2")) * F.sqrt(F.col("qn2")))
-            )
-            .cast("long")
-            .alias("cos_mppm"),
-        )
-        .withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= k)
-        .select("query_id", "neighbor_id")
+    exact = _panel_topk(base, id_col, query_mod, k).select(
+        "query_id", "neighbor_id"
     )
     # probe rank of every cell each panel query would visit
     ppr = cells.join(
-        panel_ids.select("query_id"),
+        base.filter(F.col(id_col) % query_mod == 0).select(
+            F.col(id_col).alias("query_id")
+        ),
         cells[id_col] == F.col("query_id"),
         "inner",
     ).select(
@@ -1803,13 +1672,12 @@ def ivf_index_assignments(
     (dist², cell) structs.
     """
     cents = md5_centroids(dim, n_lists, 1 << scale_bits)
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
-    )
     return (
         ensure_parallelism(embeddings)
-        .select(F.col(id_col).alias("vec_id"), qv.alias("q"))
+        .select(
+            F.col(id_col).alias("vec_id"),
+            _quantize(F.col(vec_col), scale_bits).alias("q"),
+        )
         .select(
             F.expr(_cells_sorted_expr(cents) + "[0].c")
             .cast("long")
@@ -1914,13 +1782,7 @@ def ivf_probe_index(
 
     Output: (query_id, neighbor_id, rank, cos_mppm).
     """
-    from pyspark.sql.window import Window
-
     cents = md5_centroids(dim, n_lists, 1 << scale_bits)
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
-    )
     index = spark.read.parquet(path).select(
         F.col("list_id").cast("long").alias("list_id"),
         F.col("vec_id").alias("neighbor_id"),
@@ -1929,7 +1791,10 @@ def ivf_probe_index(
     )
     qside = (
         ensure_parallelism(queries)
-        .select(F.col(id_col).alias("query_id"), qv.alias("q"))
+        .select(
+            F.col(id_col).alias("query_id"),
+            _quantize(F.col(vec_col), scale_bits).alias("q"),
+        )
         .select(
             "query_id",
             F.col("q").alias("qa"),
@@ -1958,27 +1823,13 @@ def ivf_probe_index(
         .select(
             "query_id",
             "neighbor_id",
-            F.floor(
-                F.lit(1_000_000.0)
-                * int_dot(F.col("qa"), F.col("qb"))
-                / (F.sqrt(F.col("na2")) * F.sqrt(F.col("nb2")))
-            )
-            .cast("long")
-            .alias("cos_mppm"),
+            _cos_mppm(int_dot(F.col("qa"), F.col("qb")), "na2", "nb2").alias(
+                "cos_mppm"
+            ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_mppm"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            "cos_mppm",
-        )
+    return _topk(scored, k).select(
+        "query_id", "neighbor_id", "rank", "cos_mppm"
     )
 
 
@@ -2051,41 +1902,12 @@ def ann_recall_eval(
     Output per sampled query: (query_id, n_exact, n_hits,
     recall_ppm, first_miss_rank — 0 when nothing was missed).
     """
-    from pyspark.sql.window import Window
-
     bucketed = _exact_bucketed(
         embeddings, n_planes, n_tables, dim, scale_bits, id_col, vec_col
     )
     base = bucketed[0]  # checkpointed inside _exact_bucketed
-    q = base.filter(
-        (F.col(id_col) % query_mod == 0) & (F.col("n2") > 0)
-    ).select(
-        F.col(id_col).alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("n2").alias("qn2"),
-    )
-    pairs = (
-        base.filter(F.col("n2") > 0)
-        .crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.floor(
-                F.lit(1_000_000.0)
-                * int_dot(F.col("q"), F.col("qq"))
-                / (F.sqrt(F.col("n2")) * F.sqrt(F.col("qn2")))
-            )
-            .cast("long")
-            .alias("cos_mppm"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_mppm"), F.asc("neighbor_id")
-    )
-    exact_topk = (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    exact_topk = _panel_topk(
+        base.filter(F.col("n2") > 0), id_col, query_mod, k
     )
     approx = lsh_topk_exact(
         embeddings, k, n_planes, n_tables, dim, scale_bits, id_col, vec_col,
@@ -2152,35 +1974,15 @@ def hard_negative_mining(
     orientations enter a per-anchor WindowGroupLimit top-m. Output:
     (anchor_id, negative_id, rank, cos_mppm) — rank 1 = hardest.
     """
-    from pyspark.sql.window import Window
-
     cents = md5_centroids(dim, n_lists, 1 << scale_bits)
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
-    )
-    base = ensure_parallelism(embeddings).select(F.col(id_col), qv.alias("q"))
-    base = base.select(
-        id_col, "q", int_dot(F.col("q"), F.col("q")).alias("n2")
-    )
-
-    def d2_sql(cent: list[int]) -> str:
-        arr = ", ".join(f"{h}L" for h in cent)
-        return (
-            f"aggregate(zip_with(q, array({arr}),"
-            " (x, y) -> (x - y) * (x - y)),"
-            " cast(0 as long), (acc, v) -> acc + v)"
-        )
-
-    cell_structs = ", ".join(
-        f"named_struct('d2', {d2_sql(cents[c])}, 'c', {c})"
-        for c in range(n_lists)
+    base = _quantized(
+        ensure_parallelism(embeddings), scale_bits, id_col, vec_col
     )
     assigned = base.filter(F.col("n2") > 0).select(
         id_col,
         "q",
         "n2",
-        F.expr(f"array_sort(array({cell_structs}))[0].c").alias("list_id"),
+        F.expr(_cells_sorted_expr(cents) + "[0].c").alias("list_id"),
     )
     a = assigned.select(
         "list_id",
@@ -2200,41 +2002,18 @@ def hard_negative_mining(
         .select(
             "vec_a",
             "vec_b",
-            F.floor(
-                F.lit(1_000_000.0)
-                * int_dot(F.col("qa"), F.col("qb"))
-                / (F.sqrt(F.col("na2")) * F.sqrt(F.col("nb2")))
-            )
-            .cast("long")
-            .alias("cos_mppm"),
+            _cos_mppm(int_dot(F.col("qa"), F.col("qb")), "na2", "nb2").alias(
+                "cos_mppm"
+            ),
         )
         .filter(
             (F.col("cos_mppm") >= lo_mppm) & (F.col("cos_mppm") < hi_mppm)
         )
     )
-    both = pair_scored.select(
-        F.col("vec_a").alias("anchor_id"),
-        F.col("vec_b").alias("negative_id"),
-        "cos_mppm",
-    ).unionAll(
-        pair_scored.select(
-            F.col("vec_b").alias("anchor_id"),
-            F.col("vec_a").alias("negative_id"),
-            "cos_mppm",
-        )
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("cos_mppm"), F.asc("negative_id")
-    )
+    both = _both_ways(pair_scored, "anchor_id", "negative_id")
     return (
-        both.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= m)
-        .select(
-            "anchor_id",
-            "negative_id",
-            F.col("rank").cast("long").alias("rank"),
-            "cos_mppm",
-        )
+        _topk(both, m, query="anchor_id", neighbor="negative_id")
+        .select("anchor_id", "negative_id", "rank", "cos_mppm")
         .orderBy("anchor_id", "rank")
     )
 
@@ -2262,14 +2041,8 @@ def embedding_energy_curve(
     min_vec_ppm, n_vecs) — min over vectors is the worst case a
     truncated query could hit.
     """
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
-    )
-    base = ensure_parallelism(embeddings).select(
-        F.col(id_col), qv.alias("q")
-    ).select(
-        id_col, "q", int_dot(F.col("q"), F.col("q")).alias("n2")
+    base = _quantized(
+        ensure_parallelism(embeddings), scale_bits, id_col, vec_col
     ).filter(F.col("n2") > 0)
     for d in prefix_dims:
         base = base.withColumn(
@@ -2361,30 +2134,12 @@ def kmeans_lloyd(
     """
     cents = md5_centroids(dim, n_clusters, 1 << scale_bits)
     scale = 1 << shift_bits
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
-    )
     base = ensure_parallelism(embeddings).select(
-        F.col(id_col).alias("vec_id"), qv.alias("q")
-    )
-
-    def d2_seed_sql(cent: list[int]) -> str:
-        arr = ", ".join(f"{h}L" for h in cent)
-        return (
-            f"aggregate(zip_with(q, array({arr}),"
-            " (x, y) -> (x - y) * (x - y)),"
-            " cast(0 as long), (acc, v) -> acc + v)"
-        )
-
-    seed_structs = ", ".join(
-        f"named_struct('d2', {d2_seed_sql(cents[c])}, 'c', {c})"
-        for c in range(n_clusters)
+        F.col(id_col).alias("vec_id"),
+        _quantize(F.col(vec_col), scale_bits).alias("q"),
     )
     assigned0 = base.select(
-        "vec_id",
-        "q",
-        F.expr(f"array_sort(array({seed_structs}))[0].c").alias("c0"),
+        "vec_id", "q", F.expr(_cells_sorted_expr(cents) + "[0].c").alias("c0")
     )
     # two consumers (update, re-assignment)
     assigned0 = materialize(assigned0)
@@ -2495,10 +2250,8 @@ def pca_power(
     """
     S = 1 << scale_bits
     qa = emb.select(
-        F.expr(
-            f"array_append(transform(embedding, x ->"
-            f" CAST(floor(CAST(x AS DOUBLE) * {S}) AS LONG)),"
-            f" CAST({S} AS LONG))"
+        F.array_append(
+            _quantize(F.col("embedding"), scale_bits), F.lit(S).cast("long")
         ).alias("qa")
     )
     # Upper triangle only: the second explode slices the array tail,
@@ -2676,43 +2429,13 @@ def retrieval_rank_eval(
     Output per query: (query_id, n_retrieved, rr_ppm,
     precision_ppm, hit_at_1).
     """
-    from pyspark.sql.window import Window
-
     bucketed = _exact_bucketed(
         embeddings, n_planes, n_tables, dim, scale_bits, id_col, vec_col
     )
     base = bucketed[0]  # checkpointed inside _exact_bucketed
-    q = base.filter(
-        (F.col(id_col) % query_mod == 0) & (F.col("n2") > 0)
-    ).select(
-        F.col(id_col).alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("n2").alias("qn2"),
-    )
-    pairs = (
-        base.filter(F.col("n2") > 0)
-        .crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.floor(
-                F.lit(1_000_000.0)
-                * int_dot(F.col("q"), F.col("qq"))
-                / (F.sqrt(F.col("n2")) * F.sqrt(F.col("qn2")))
-            )
-            .cast("long")
-            .alias("cos_mppm"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_mppm"), F.asc("neighbor_id")
-    )
-    relevant = (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.lit(1).alias("__rel"))
-    )
+    relevant = _panel_topk(
+        base.filter(F.col("n2") > 0), id_col, query_mod, k
+    ).select("query_id", "neighbor_id", F.lit(1).alias("__rel"))
     approx = lsh_topk_exact(
         embeddings, k, n_planes, n_tables, dim, scale_bits, id_col, vec_col,
         bucketed=bucketed,
@@ -2821,28 +2544,14 @@ def pq_codebook_audit(
 
     sub_dim = dim // n_sub
     book = md5_pq_codebook(n_sub, n_codes, sub_dim)
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
+    base = embeddings.select(
+        F.col(id_col).alias("vec_id"),
+        _quantize(F.col(vec_col), scale_bits).alias("q"),
     )
-    base = embeddings.select(F.col(id_col).alias("vec_id"), qv.alias("q"))
-
-    def d2_sql(m: int, c: int) -> str:
-        arr = ", ".join(f"{h}L" for h in book[m][c])
-        return (
-            f"aggregate(zip_with(slice(q, {m * sub_dim + 1}, {sub_dim}),"
-            f" array({arr}), (x, y) -> (x - y) * (x - y)),"
-            " cast(0 as long), (acc, v) -> acc + v)"
-        )
-
     sub_structs = ", ".join(
-        "named_struct('m', {m}, 'a', array_sort(array({cands}))[0])".format(
-            m=m,
-            cands=", ".join(
-                f"named_struct('d2', {d2_sql(m, c)}, 'c', {c})"
-                for c in range(n_codes)
-            ),
-        )
+        f"named_struct('m', {m}, 'a', "
+        + _cells_sorted_expr(book[m], f"slice(q, {m * sub_dim + 1}, {sub_dim})")
+        + "[0])"
         for m in range(n_sub)
     )
     assigned = base.select(
@@ -2933,18 +2642,12 @@ def matryoshka_audit(
     Output per (sampled query, prefix): (query_id, prefix_dim,
     n_exact, n_hits, recall_ppm).
     """
-    from pyspark.sql.window import Window
-
     # Dedupe the prefixes against the full dim: prefix_dims containing
     # `dim` would otherwise emit duplicate n2_<dim> aliases and fail
     # with an opaque AnalysisException (ADVICE r9).
     dims = tuple(sorted(set(prefix_dims) - {dim})) + (dim,)
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
-    )
     base = ensure_parallelism(embeddings).select(
-        F.col(id_col), qv.alias("q")
+        F.col(id_col), _quantize(F.col(vec_col), scale_bits).alias("q")
     )
     base = materialize(base.select(
         id_col,
@@ -2976,19 +2679,15 @@ def matryoshka_audit(
                 # zero-prefix vectors rank deterministically (ADVICE r9).
                 F.when(
                     (F.col(f"n2_{d}") == 0) | (F.col(f"qn2_{d}") == 0),
-                    F.lit(0),
+                    F.lit(0).cast("long"),
                 )
                 .otherwise(
-                    F.floor(
-                        F.lit(1_000_000.0)
-                        * int_dot(F.slice("q", 1, d), F.slice("qq", 1, d))
-                        / (
-                            F.sqrt(F.col(f"n2_{d}"))
-                            * F.sqrt(F.col(f"qn2_{d}"))
-                        )
+                    _cos_mppm(
+                        int_dot(F.slice("q", 1, d), F.slice("qq", 1, d)),
+                        f"n2_{d}",
+                        f"qn2_{d}",
                     )
                 )
-                .cast("long")
                 .alias(f"cos_{d}")
                 for d in dims
             ],
@@ -2996,13 +2695,8 @@ def matryoshka_audit(
     )
 
     def topk(d: int) -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc(f"cos_{d}"), F.asc("neighbor_id")
-        )
-        return (
-            pairs.withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") <= k)
-            .select("query_id", "neighbor_id")
+        return _topk(pairs, k, f"cos_{d}", rank="__r").select(
+            "query_id", "neighbor_id"
         )
 
     # the per-prefix comparisons join panel-scale (n_queries × k)

@@ -2049,7 +2049,11 @@ def hybrid_retrieval_topk(
     """
     from pyspark.sql.window import Window
 
-    from iceberg_diag_spark.operators.similarity import int_dot
+    from iceberg_diag_spark.operators.similarity import (
+        _cos_mppm,
+        _quantize,
+        int_dot,
+    )
 
     cand = bm25_topk(
         docs, query_terms, k=n_candidates,
@@ -2057,12 +2061,11 @@ def hybrid_retrieval_topk(
     )
     # three consumers (vector prune, feedback pick, final projection)
     cand = materialize(cand)
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * (1 << scale_bits)).cast("long"),
-    )
     cvec = (
-        embeddings.select(F.col(vec_id_col).alias(id_col), qv.alias("q"))
+        embeddings.select(
+            F.col(vec_id_col).alias(id_col),
+            _quantize(F.col(vec_col), scale_bits).alias("q"),
+        )
         .join(F.broadcast(cand.select(id_col)), id_col, "semi")
         .select(
             id_col, "q", int_dot(F.col("q"), F.col("q")).alias("nd2")
@@ -2099,16 +2102,7 @@ def hybrid_retrieval_topk(
         dots.crossJoin(F.broadcast(qnorm))
         # zero-norm vectors (all-zero quantization) have no direction
         .filter((F.col("nd2") > 0) & (F.col("nq2") > 0))
-        .select(
-            id_col,
-            F.floor(
-                F.lit(1_000_000.0)
-                * F.col("d")
-                / (F.sqrt(F.col("nq2")) * F.sqrt(F.col("nd2")))
-            )
-            .cast("long")
-            .alias("cos_mppm"),
-        )
+        .select(id_col, _cos_mppm(F.col("d"), "nq2", "nd2").alias("cos_mppm"))
     )
     w = Window.orderBy(F.desc("cos_mppm"), F.asc(id_col))
     return (

@@ -201,6 +201,22 @@ def test_per_source_cap_window_group_limit(spark):
     assert "Python" not in plan
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["lsh_topk_exact", "ivf_topk_exact", "ann_recall_eval",
+     "hard_negative_mining"],
+)
+def test_exact_ann_topk_window_group_limit(spark, name):
+    # the shared top-K (similarity._topk) must compile to a per-task
+    # WindowGroupLimit below the exchange, whatever the candidate
+    # generator: bucket pairs, IVF cells, the broadcast query panel
+    # or cell-local pairs
+    plan = _plan(spark, name)
+    assert _op_count(plan, "WindowGroupLimit") >= 1
+    assert "CartesianProduct" not in plan
+    assert "Python" not in plan
+
+
 def test_centroid_confusion_broadcasts_centroids(spark):
     # the #labels×dim centroid relation must broadcast; the big
     # exploded side streams through without a join shuffle

@@ -507,6 +507,36 @@ def test_cluster_apply_digests_and_ties(spark, tmp_path):
     assert r["members_xor2_after"] == want["b"]
 
 
+def test_cluster_apply_keeps_null_sort_values(spark, tmp_path):
+    """NULL sort values are one value, ranked first: every row is
+    rewritten exactly once. An equi-join on the value drops the NULL
+    rows from the rewrite, and the file ids they would have filled
+    keep their old rows beside the rewritten copies (6 rows -> 7)."""
+    from iceberg_diag_spark.operators.compaction import (
+        cluster_apply_sorted,
+    )
+
+    path = str(tmp_path / "cl_null")
+    _write_cluster_layout(spark, path, [[3, None, 1], [2, None, 4]])
+    r = cluster_apply_sorted(
+        spark,
+        path,
+        read_schema=CLUSTER_SCHEMA,
+        value_col="v",
+        key_col="row_key",
+        rows_per_file=2,
+    ).collect()[0]
+    assert r["rows_before"] == r["rows_after"] == 6
+    back = spark.read.schema(CLUSTER_SCHEMA).parquet(path).collect()
+    assert sorted(x["row_key"] for x in back) == [
+        "0|0", "0|1", "0|2", "1|0", "1|1", "1|2"
+    ]
+    placed = sorted(
+        (int(x["file_id"]), -1 if x["v"] is None else x["v"]) for x in back
+    )
+    assert placed == [(0, -1), (0, -1), (1, 1), (1, 2), (2, 3), (2, 4)]
+
+
 def test_cluster_apply_plan_scale_shape(spark, tmp_path):
     """The only broadcast hints in the ledger plan are
     grouped_prefix_sum's documented n_shards-bounded internals

@@ -546,3 +546,29 @@ def test_data_mixing_sample_fills_allocation(spark):
     again = {r["source"]: r["tokens_selected"]
              for r in data_mixing_sample(docs).collect()}
     assert again == {s: r["tokens_selected"] for s, r in got.items()}
+
+
+def test_data_mixing_sample_keeps_null_source(spark):
+    """data_mixing_plan allocates tokens to the NULL source, so the
+    sample must select from it: an equi-join on the source drops the
+    NULL stratum and returns only the `a` row."""
+    from iceberg_diag_spark.operators.sampling import (
+        data_mixing_plan,
+        data_mixing_sample,
+    )
+
+    rows = [
+        (i, "x", None if i % 2 else "a", (i % 5) + 1) for i in range(20)
+    ]
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, source string, n_chars long"
+    )
+    plan = {r["source"]: r["tokens_alloc"]
+            for r in data_mixing_plan(docs).collect()}
+    assert set(plan) == {"a", None}
+    got = {r["source"]: r for r in data_mixing_sample(docs).collect()}
+    assert set(got) == {"a", None}
+    for s, r in got.items():
+        assert r["tokens_alloc"] == plan[s]
+        assert r["n_docs_selected"] >= 1
+        assert r["tokens_selected"] >= r["tokens_alloc"]

@@ -125,3 +125,72 @@ def test_quadratic_tiers_guarded(spark):
     assert sim.cosine_topk(emb, queries=q, max_corpus_rows=3).count() > 0
     # forcing works
     assert sim.embedding_near_dup(emb, threshold=-1.0, max_corpus_rows=None).count() == 6
+
+
+def _stage_sites() -> dict[str, set[str]]:
+    """Top-level function (as `module:function`) of every place under
+    operators/ that builds one of the exact ANN stages."""
+    import ast
+    import pathlib
+
+    import iceberg_diag_spark
+
+    ops = pathlib.Path(iceberg_diag_spark.__file__).parent / "operators"
+    sites: dict[str, set[str]] = {
+        "quantize": set(), "cos_mppm": set(), "cell_d2": set(),
+        "row_number": set(),
+    }
+
+    def is_call(node, attr):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == attr
+        )
+
+    for path in sorted(ops.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            where = f"{path.stem}:{fn.name}"
+            for n in ast.walk(fn):
+                arg = n.args[0] if is_call(n, "floor") and n.args else None
+                # quantize: floor(<x>.cast("double") * <scale>)
+                if (
+                    isinstance(arg, ast.BinOp)
+                    and isinstance(arg.op, ast.Mult)
+                    and is_call(arg.left, "cast")
+                    and ast.unparse(arg.left.args[0]) == "'double'"
+                ):
+                    sites["quantize"].add(where)
+                # cos_mppm: floor(1e6 * d / (sqrt(.) * sqrt(.)))
+                if (
+                    isinstance(arg, ast.BinOp)
+                    and isinstance(arg.op, ast.Div)
+                    and "1000000.0" in ast.unparse(arg.left)
+                    and ast.unparse(arg.right).count("sqrt(") == 2
+                ):
+                    sites["cos_mppm"].add(where)
+                if isinstance(n, ast.Constant) and isinstance(n.value, str):
+                    # the cell-ranking d² fold, and quantize spelled in SQL
+                    if "(x - y) * (x - y)" in n.value:
+                        sites["cell_d2"].add(where)
+                    if "AS DOUBLE) *" in n.value.upper():
+                        sites["quantize"].add(where)
+                if path.stem == "similarity" and is_call(n, "row_number"):
+                    sites["row_number"].add(where)
+    return sites
+
+
+def test_exact_ann_stages_built_once():
+    """Quantize, cos_mppm scoring and the cell-ranking d² SQL are each
+    built in exactly one function under operators/, and every
+    row_number in similarity.py is the one top-K helper's (the argmin
+    sites and the float tier go through it too, so none is kept)."""
+    assert _stage_sites() == {
+        "quantize": {"similarity:_quantize_value"},
+        "cos_mppm": {"similarity:_cos_mppm"},
+        "cell_d2": {"similarity:_cells_sorted_expr"},
+        "row_number": {"similarity:_topk"},
+    }
