@@ -357,24 +357,26 @@ def corpus_release_manifest(
     Output per shard: (shard, n_docs, n_seqs, n_tokens, members_xor,
     members_xor2).
     """
-    from iceberg_diag_spark.operators.sampling import membership_checksums
-
     asg = release_assignments(
         docs, n_shards=n_shards, capacity_tokens=capacity_tokens, **kwargs
     )
     return _manifest_agg(asg)
 
 
-def _manifest_agg(asg: DataFrame) -> DataFrame:
+def _manifest_agg(
+    asg: DataFrame, seq_key: tuple[str, ...] = ("source", "seq_id")
+) -> DataFrame:
     """Per-shard manifest aggregate over an assignment relation —
-    shared by the plan-side manifest and the written-files re-check so
-    the two can never drift."""
+    shared by the plan-side manifest, the written-files re-check and
+    the incremental release (whose sequence ids are scoped to their
+    increment, so its ``seq_key`` leads with ``batch``) so they can
+    never drift."""
     from iceberg_diag_spark.operators.sampling import membership_checksums
 
     x1, x2 = membership_checksums(F.col("doc_id"))
     return asg.groupBy(F.col("shard").cast("long").alias("shard")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.countDistinct("source", "seq_id").cast("long").alias("n_seqs"),
+        F.countDistinct(*seq_key).cast("long").alias("n_seqs"),
         F.sum("n_tokens").cast("long").alias("n_tokens"),
         x1.alias("members_xor"),
         x2.alias("members_xor2"),
@@ -395,6 +397,21 @@ def corpus_release(
     — so the returned manifest vouches for what actually landed on
     disk, not for the plan that was supposed to land there.
     """
+    _write_release(docs, path, n_shards, capacity_tokens, **kwargs)
+    return _manifest_agg(docs.sparkSession.read.parquet(path))
+
+
+def _write_release(
+    docs: DataFrame,
+    path: str,
+    n_shards: int = RELEASE_N_SHARDS,
+    capacity_tokens: int = RELEASE_CAPACITY_TOKENS,
+    **kwargs,
+) -> None:
+    """The one release writer: the stage-5 assignment relation as
+    shard=K parquet directories under ``path``, rows in packed
+    sequence order. The batch release, each streaming increment and
+    each reconcile increment land through it."""
     from iceberg_diag_spark.sources.sinks import write_assigned_shards
 
     asg = release_assignments(
@@ -403,7 +420,6 @@ def corpus_release(
     write_assigned_shards(
         asg, path, n_shards, order_cols=("source", "seq_id", "doc_id")
     )
-    return _manifest_agg(docs.sparkSession.read.parquet(path))
 
 
 def read_release_sequences(spark, path: str) -> DataFrame:

@@ -10,7 +10,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from iceberg_diag_spark.functions.parallel import ensure_parallelism, materialize
+from iceberg_diag_spark.functions.parallel import (
+    ensure_parallelism,
+    join_null_safe,
+    materialize,
+)
 from iceberg_diag_spark.operators.dedup import normalized_text
 
 # Tiny per-language stopword lists for the n-gram/stopword language
@@ -1777,7 +1781,8 @@ def source_tv_distance(
     on the token key over the K·S grid. Text never shuffles.
 
     Output: (source_a, source_b, n_tokens_a, n_tokens_b, tv_ppm),
-    one row per unordered source pair (a < b).
+    one row per unordered source pair (a < b; the NULL source is a
+    source and sorts first).
     """
     toks = ensure_parallelism(docs).select(
         F.col(source_col).alias("source"),
@@ -1799,7 +1804,7 @@ def source_tv_distance(
     counts_k = counts.join(F.broadcast(vocab), "tok")
     k_mass = counts_k.groupBy("source").agg(F.sum("c").alias("k_mass"))
     resid = (
-        totals.join(k_mass, "source", "left")
+        join_null_safe(totals, k_mass, ["source"], "left")
         .select(
             "source",
             F.lit(TV_RESIDUAL_TOKEN).alias("tok"),
@@ -1810,7 +1815,7 @@ def source_tv_distance(
     )
     spine = vocab.crossJoin(totals.select("source"))
     grid = (
-        spine.join(counts_k, ["tok", "source"], "left")
+        join_null_safe(spine, counts_k, ["tok", "source"], "left")
         .select("tok", "source", F.coalesce(F.col("c"), F.lit(0)).alias("c"))
         .unionByName(resid)
     )
@@ -1822,19 +1827,18 @@ def source_tv_distance(
     )
     # the pair join runs on the (K+1)·S grid — both sides bounded by
     # construction (metadata scale), so broadcast instead of sorting
-    # the same bounded relation twice
-    paired = (
-        a.join(F.broadcast(b), "tok")
-        .filter(F.col("source_a") < F.col("source_b"))
-        .join(
-            F.broadcast(totals.select(F.col("source").alias("source_a"), F.col("tot").alias("tot_a"))),
-            "source_a",
-        )
-        .join(
-            F.broadcast(totals.select(F.col("source").alias("source_b"), F.col("tot").alias("tot_b"))),
-            "source_b",
-        )
+    # the same bounded relation twice. Pairs are unordered with NULL
+    # first, as an ascending sort puts it.
+    sa, sb = F.col("source_a"), F.col("source_b")
+    paired = a.join(F.broadcast(b), "tok").filter(
+        (sa.isNull() & sb.isNotNull()) | (sa < sb)
     )
+    for side in ("a", "b"):
+        tot = totals.select(
+            F.col("source").alias(f"source_{side}"),
+            F.col("tot").alias(f"tot_{side}"),
+        )
+        paired = join_null_safe(paired, F.broadcast(tot), [f"source_{side}"])
     return (
         paired.groupBy("source_a", "source_b")
         .agg(
@@ -3707,8 +3711,8 @@ def source_length_ks(
         ),
     )
     srcs = sv.groupBy("source").agg(F.sum("cnt").alias("n_source"))
-    grid = vals.crossJoin(F.broadcast(srcs)).join(
-        sv, ["source", "v"], "left"
+    grid = join_null_safe(
+        vals.crossJoin(F.broadcast(srcs)), sv, ["source", "v"], "left"
     )
     w = Window.partitionBy("source").orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

@@ -57,6 +57,23 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def _stream_table(
+    op: Callable[[DataFrame], DataFrame],
+    output_mode: str,
+    name: str,
+    read: Callable[[SparkSession, str], DataFrame] | None = None,
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Builder of a plain streaming entry: ``op`` over the file stream
+    ``read`` opens (the events stream by default), drained by
+    stream_ops.run_to_table into a table."""
+    from iceberg_diag_spark.streaming import stream_ops
+
+    read = read or stream_ops.read_events_stream
+    return lambda spark, sf_dir: stream_ops.run_to_table(
+        op(read(spark, sf_dir)), output_mode, name
+    )
+
+
 # Populated by the family modules on import; entries are looked up by
 # name, so insertion order carries no meaning.
 REGISTRY: dict[str, QuerySpec] = {}

@@ -16,7 +16,13 @@ from iceberg_diag_spark.operators import (
     similarity,
     textops,
 )
-from iceberg_diag_spark.plans.common import REGISTRY, QuerySpec, _t
+from iceberg_diag_spark.plans.common import (
+    REGISTRY,
+    QuerySpec,
+    _stream_table,
+    _t,
+)
+from iceberg_diag_spark.streaming import stream_ops
 from iceberg_diag_spark.plans.oracles_dedup import (
     _MINHASH_PAIRS_SQL,
     _MINHASH_PRS_CTE,
@@ -749,8 +755,6 @@ FROM ranked WHERE rank <= 25
 def _stream_incremental_dedup(spark, sf_dir):
     """Streaming form of the incremental dedup gate: odd doc_ids
     arrive as the stream, even ids are the standing corpus."""
-    from iceberg_diag_spark.streaming import stream_ops
-
     docs_stream = stream_ops.read_documents_stream(spark, sf_dir).filter(
         F.col("doc_id") % 2 == 1
     )
@@ -892,18 +896,6 @@ SELECT o.label,
 FROM own o JOIN other t ON o.vec_id = t.vec_id AND o.label = t.label
 GROUP BY o.label
 """
-
-
-def _stream_quality_gate(spark, sf_dir):
-    from iceberg_diag_spark.streaming import stream_ops
-
-    return stream_ops.run_to_table(
-        stream_ops.quality_gate_stream(
-            stream_ops.read_documents_stream(spark, sf_dir)
-        ),
-        "complete",
-        "stream_quality_gate",
-    )
 
 
 _STREAM_QUALITY_GATE_SQL = rf"""
@@ -1547,17 +1539,10 @@ def build_release_increments(docs, release: str, batches=(0, 1)):
     from pyspark.sql import functions as F
 
     from iceberg_diag_spark.operators.sampling import hash_bucket
-    from iceberg_diag_spark.sources.sinks import write_assigned_shards
 
     def _build(b: int):
         d = docs.filter(hash_bucket(F.col("doc_id"), 2) == b)
-        asg = funnel.release_assignments(d)
-        write_assigned_shards(
-            asg,
-            f"{release}/batch={b}",
-            funnel.RELEASE_N_SHARDS,
-            order_cols=("source", "seq_id", "doc_id"),
-        )
+        funnel._write_release(d, f"{release}/batch={b}")
         return (b, d)
 
     with ThreadPoolExecutor(max_workers=len(batches)) as pool:
@@ -1796,7 +1781,13 @@ REGISTRY.update({
         "novel per new doc via semi-join hash and LSH-band probes",
     ),
     "stream_quality_gate": QuerySpec(
-        _stream_quality_gate, _STREAM_QUALITY_GATE_SQL,
+        _stream_table(
+            stream_ops.quality_gate_stream,
+            "complete",
+            "stream_quality_gate",
+            stream_ops.read_documents_stream,
+        ),
+        _STREAM_QUALITY_GATE_SQL,
         "streaming per-source curation-gate monitor: running "
         "totals/pass counts with #domains-bounded state, same gate "
         "exprs as the batch pipeline",

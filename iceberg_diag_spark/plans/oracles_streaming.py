@@ -19,7 +19,12 @@ from iceberg_diag_spark.operators import (
     textops,
 )
 from iceberg_diag_spark.streaming import stream_ops
-from iceberg_diag_spark.plans.common import REGISTRY, QuerySpec, _t
+from iceberg_diag_spark.plans.common import (
+    REGISTRY,
+    QuerySpec,
+    _stream_table,
+    _t,
+)
 from iceberg_diag_spark.plans.oracles_tpch import _rev_cents
 from iceberg_diag_spark.plans.oracles_events import (
     _EVENTS_CDC_MERGE_SQL,
@@ -45,13 +50,6 @@ from iceberg_diag_spark.plans.oracles_corpus import (
 # result equals the batch query, so DuckDB oracles apply)
 # --------------------------------------------------------------------
 
-def _stream_tumbling(spark, sf_dir):
-    ev = stream_ops.read_events_stream(spark, sf_dir)
-    return stream_ops.run_to_table(
-        stream_ops.tumbling_counts(ev), "complete", "stream_tumbling"
-    )
-
-
 _STREAM_TUMBLING_SQL = """
 SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
        event_type,
@@ -60,13 +58,6 @@ SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
 FROM events
 GROUP BY window_start, event_type
 """
-
-
-def _stream_sliding(spark, sf_dir):
-    ev = stream_ops.read_events_stream(spark, sf_dir)
-    return stream_ops.run_to_table(
-        stream_ops.sliding_counts(ev), "complete", "stream_sliding"
-    )
 
 
 # every event belongs to exactly 2 sliding windows (1h size / 30m
@@ -86,13 +77,6 @@ SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start,
 FROM starts
 GROUP BY ws, event_type
 """
-
-
-def _stream_sessions(spark, sf_dir):
-    ev = stream_ops.read_events_stream(spark, sf_dir)
-    return stream_ops.run_to_table(
-        stream_ops.session_windows(ev), "complete", "stream_sessions"
-    )
 
 
 _STREAM_SESSIONS_SQL = """
@@ -120,30 +104,9 @@ GROUP BY user_id, session_seq
 """
 
 
-def _stream_dedup(spark, sf_dir):
-    ev = stream_ops.read_events_stream(spark, sf_dir)
-    return stream_ops.run_to_table(
-        stream_ops.dedup_keys_stream(ev), "append", "stream_dedup"
-    )
-
-
 _STREAM_DEDUP_SQL = """
 SELECT DISTINCT user_id, event_type FROM events
 """
-
-
-def _stream_stream_join(spark, sf_dir):
-    ev = stream_ops.read_events_stream(spark, sf_dir)
-    return stream_ops.run_to_table(
-        stream_ops.stream_click_purchase_join(ev), "append", "stream_join"
-    )
-
-
-def _stream_user_stats(spark, sf_dir):
-    ev = stream_ops.read_events_stream(spark, sf_dir)
-    return stream_ops.run_to_table(
-        stream_ops.user_running_stats(ev), "update", "stream_user_stats"
-    )
 
 
 def _stream_static_join(spark, sf_dir):
@@ -164,15 +127,6 @@ SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
 FROM events JOIN customer ON user_id = c_custkey
 GROUP BY window_start, nationkey
 """
-
-
-def _stream_distinct_users(spark, sf_dir):
-    ev = stream_ops.read_events_stream(spark, sf_dir)
-    return stream_ops.run_to_table(
-        stream_ops.distinct_users_per_window(ev),
-        "complete",
-        "stream_distinct",
-    )
 
 
 _STREAM_DISTINCT_SQL = """
@@ -1039,8 +993,6 @@ FROM counted
 
 
 def _stream_centroid_confusion(spark, sf_dir):
-    from iceberg_diag_spark.streaming import stream_ops
-
     return stream_ops.run_to_table(
         stream_ops.centroid_confusion_stream(
             stream_ops.read_embeddings_stream(spark, sf_dir),
@@ -1048,13 +1000,6 @@ def _stream_centroid_confusion(spark, sf_dir):
         ),
         "complete",
         "stream_centroid_confusion",
-    )
-
-
-def _stream_disorder_monitor(spark, sf_dir):
-    ev = stream_ops.read_events_stream(spark, sf_dir)
-    return stream_ops.run_to_table(
-        stream_ops.disorder_monitor(ev), "update", "stream_disorder"
     )
 
 
@@ -1083,19 +1028,6 @@ GROUP BY event_type
 """
 
 
-def _stream_scd2(spark, sf_dir):
-    """Streaming SCD2 feed: drain the event stream availableNow and
-    emit every interval the run-collapse CLOSES (append mode; the
-    open run per user stays in keyed state)."""
-    return stream_ops.run_to_table(
-        stream_ops.scd2_stream(
-            stream_ops.read_events_stream(spark, sf_dir)
-        ),
-        "append",
-        "stream_scd2",
-    )
-
-
 _STREAM_SCD2_SQL = """
 WITH runs AS (
   SELECT user_id, event_type AS state, epoch_us(ts) AS ts_us, event_id,
@@ -1122,18 +1054,6 @@ SELECT user_id, state, valid_from_us, valid_to_us, version_seq,
        CAST(0 AS BIGINT) AS disorder_seen
 FROM iv WHERE valid_to_us IS NOT NULL
 """
-
-
-def _stream_repetition_gate(spark, sf_dir):
-    from iceberg_diag_spark.streaming import stream_ops
-
-    return stream_ops.run_to_table(
-        stream_ops.repetition_gate_stream(
-            stream_ops.read_documents_stream(spark, sf_dir)
-        ),
-        "complete",
-        "stream_repetition_gate",
-    )
 
 
 _STREAM_REPETITION_SQL = r"""
@@ -1269,10 +1189,6 @@ _STREAM_CDC_MERGE_SQL = _EVENTS_CDC_MERGE_SQL.replace(
 )
 
 
-def _stream_seasonality_profile(spark, sf_dir):
-    return stream_ops.run_seasonality_profile_stream(spark, sf_dir)
-
-
 REGISTRY.update({
     "q2_min_cost_supplier": QuerySpec(
         _q2_min_cost_supplier, _Q2_SQL,
@@ -1377,32 +1293,38 @@ REGISTRY.update({
         "(collapse audit), one posexplode feeding both aggregates",
     ),
     "stream_tumbling_counts": QuerySpec(
-        _stream_tumbling, _STREAM_TUMBLING_SQL,
+        _stream_table(stream_ops.tumbling_counts, "complete", "stream_tumbling"),
+        _STREAM_TUMBLING_SQL,
         "Structured Streaming watermarked 1h tumbling rollup "
         "(availableNow drain; equals batch over finite input)",
     ),
     "stream_sliding_counts": QuerySpec(
-        _stream_sliding, _STREAM_SLIDING_SQL,
+        _stream_table(stream_ops.sliding_counts, "complete", "stream_sliding"),
+        _STREAM_SLIDING_SQL,
         "Structured Streaming sliding windows (1h size / 30m slide)",
     ),
     "stream_session_windows": QuerySpec(
-        _stream_sessions, _STREAM_SESSIONS_SQL,
+        _stream_table(stream_ops.session_windows, "complete", "stream_sessions"),
+        _STREAM_SESSIONS_SQL,
         "Structured Streaming native session_window per user "
         "(gap-merge semantics == batch sessionization)",
     ),
     "stream_dedup_keys": QuerySpec(
-        _stream_dedup, _STREAM_DEDUP_SQL,
+        _stream_table(stream_ops.dedup_keys_stream, "append", "stream_dedup"),
+        _STREAM_DEDUP_SQL,
         "streaming exact dedup via dropDuplicatesWithinWatermark "
         "(key-projected → order-independent)",
     ),
     "stream_stream_interval_join": QuerySpec(
-        _stream_stream_join, _RANGE_SQL,
+        _stream_table(stream_ops.stream_click_purchase_join, "append", "stream_join"),
+        _RANGE_SQL,
         "stream-stream interval join (clicks within 30 min before "
         "purchase) — watermark-bounded join state; equals the batch "
         "range join over finite input",
     ),
     "stream_user_running_stats": QuerySpec(
-        _stream_user_stats, _STREAM_USER_STATS_SQL,
+        _stream_table(stream_ops.user_running_stats, "update", "stream_user_stats"),
+        _STREAM_USER_STATS_SQL,
         "custom stateful op (applyInPandasWithState): per-user running "
         "count/cents/max-ts; final state == batch rollup",
     ),
@@ -1412,7 +1334,10 @@ REGISTRY.update({
         "per nation — the slowly-changing-dimension enrichment shape",
     ),
     "stream_distinct_users_hourly": QuerySpec(
-        _stream_distinct_users, _STREAM_DISTINCT_SQL,
+        _stream_table(
+            stream_ops.distinct_users_per_window, "complete", "stream_distinct"
+        ),
+        _STREAM_DISTINCT_SQL,
         "windowed distinct count via chained stateful operators "
         "(dedup -> count; COUNT DISTINCT is unsupported in streams)",
     ),
@@ -1430,21 +1355,29 @@ REGISTRY.update({
         "stateless per vector, #labels²-bounded count state",
     ),
     "stream_disorder_monitor": QuerySpec(
-        _stream_disorder_monitor, _STREAM_DISORDER_SQL,
+        _stream_table(stream_ops.disorder_monitor, "update", "stream_disorder"),
+        _STREAM_DISORDER_SQL,
         "streaming watermark-calibration monitor: per-type keyed-"
         "state event-time frontier + cumulative lateness stats "
         "(applyInPandasWithState, vectorized in-batch running max); "
         "single availableNow drain equals the batch per-type audit",
     ),
     "stream_scd2_history": QuerySpec(
-        _stream_scd2, _STREAM_SCD2_SQL,
+        _stream_table(stream_ops.scd2_stream, "append", "stream_scd2"),
+        _STREAM_SCD2_SQL,
         "streaming SCD2 feed (applyInPandasWithState): per-user "
         "keyed state holds the open run, every closed validity "
         "interval is emitted append-mode — equals the batch "
         "scd2_build's closed subset over the finite drain",
     ),
     "stream_repetition_gate": QuerySpec(
-        _stream_repetition_gate, _STREAM_REPETITION_SQL,
+        _stream_table(
+            stream_ops.repetition_gate_stream,
+            "complete",
+            "stream_repetition_gate",
+            stream_ops.read_documents_stream,
+        ),
+        _STREAM_REPETITION_SQL,
         "streaming per-source repetition monitor: running doc / "
         "repetitive-doc counts under the shared Gopher-style gate "
         "(with_repetitive_flag — expression-identical to the batch "
@@ -1458,13 +1391,7 @@ REGISTRY.update({
         "batch; single-drain equals the per-type batch pick",
     ),
     "stream_cdc_merge": QuerySpec(
-        lambda spark, sf_dir: stream_ops.run_to_table(
-            stream_ops.cdc_merge_stream(
-                stream_ops.read_events_stream(spark, sf_dir)
-            ),
-            "update",
-            "stream_cdc_merge",
-        ),
+        _stream_table(stream_ops.cdc_merge_stream, "update", "stream_cdc_merge"),
         _STREAM_CDC_MERGE_SQL,
         "streaming MERGE mirror: per-user keyed state (tombstone "
         "frontier + surviving count + latest value) re-emits the "
@@ -1473,12 +1400,8 @@ REGISTRY.update({
         "availableNow drain equals the batch MERGE relation",
     ),
     "stream_expectations_gate": QuerySpec(
-        lambda spark, sf_dir: stream_ops.run_to_table(
-            stream_ops.expectations_gate_stream(
-                stream_ops.read_events_stream(spark, sf_dir)
-            ),
-            "complete",
-            "stream_expectations_gate",
+        _stream_table(
+            stream_ops.expectations_gate_stream, "complete", "stream_expectations_gate"
         ),
         _EXPECTATIONS_SQL,
         "streaming data-contract gate: per-row rules expand "
@@ -1487,9 +1410,7 @@ REGISTRY.update({
         "the batch audit, one availableNow drain equals it exactly",
     ),
     "stream_sli_burn_rate": QuerySpec(
-        lambda spark, sf_dir: stream_ops.run_sli_burn_rate_stream(
-            spark, sf_dir
-        ),
+        stream_ops.run_sli_burn_rate_stream,
         _SLI_BURN_SQL,
         "streaming burn-rate twin via the accumulated-rollup idiom: "
         "each micro-batch folds into a persistent hourly rollup "
@@ -1500,7 +1421,7 @@ REGISTRY.update({
         "equals the batch relation exactly",
     ),
     "stream_seasonality_profile": QuerySpec(
-        _stream_seasonality_profile, _SEASONALITY_SQL,
+        stream_ops.run_seasonality_profile_stream, _SEASONALITY_SQL,
         "streaming twin #21 (accumulated-rollup idiom): per-batch "
         "idempotent batch=<id> (type, hour_epoch) partials + the "
         "batch operator's own cell/outlier logic over the re-summed "
@@ -1509,9 +1430,7 @@ REGISTRY.update({
         "one availableNow drain provably equals the batch profile",
     ),
     "stream_corpus_release": QuerySpec(
-        lambda spark, sf_dir: stream_ops.run_corpus_release_stream(
-            spark, sf_dir
-        ),
+        stream_ops.run_corpus_release_stream,
         _RELEASE_MANIFEST_SQL,
         "streaming twin #22 — INCREMENTAL corpus release: each "
         "micro-batch's funnel survivors land via the batch sink "

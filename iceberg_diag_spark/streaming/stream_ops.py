@@ -2,16 +2,29 @@
 
 The reference is batch-only (SURVEY.md §2 "Streaming — none"); this
 module is the north-star extension surface: watermarked tumbling /
-sliding / session windows, streaming exact dedup, and a custom
-stateful operator via applyInPandasWithState.
+sliding / session windows, streaming exact dedup, five keyed-state
+operators and the accumulated-rollup and incremental-release twins.
 
 Execution contract: every operator is a pure stream-DataFrame
 transform (readStream in → unbounded DataFrame out), so the SAME
 transform runs against a real Kafka/file stream in production and
-against a finite parquet directory in tests. `run_to_table` drains a
-finite source with trigger(availableNow=True) into a memory sink and
-returns the materialized result, which lets the driver hash-compare
-streaming results against batch DuckDB oracles.
+against a finite parquet directory in tests. The plumbing is written
+once each:
+- `_read_stream` is the one file-source reader (schema probe, then a
+  directory or exact-glob layout); `read_events_stream`,
+  `read_documents_stream` and `read_embeddings_stream` call it.
+- `_keyed_state` is the one applyInPandasWithState call: each keyed
+  operator passes only a pure ``fold(key, state, batch) -> (state,
+  rows)`` plus its schemas, initial state, sort order and output mode.
+  The state read, the state write and the timeout live there.
+- `_start_batch_dirs` starts every foreachBatch sink that writes one
+  idempotent ``batch=<id>`` directory per micro-batch.
+- `_drain` makes the temp dirs, starts an availableNow query, waits
+  for it (bounded) and removes the query and the dirs on every exit.
+  `run_to_table` drains into a memory sink and returns the
+  materialized result, which lets oracle parity hash-compare streaming
+  results against batch DuckDB oracles; the `run_*` helpers drain a
+  batch-directory sink and read it back.
 
 Scale posture (100 TB/day stream): all windowed aggregations keep
 state keyed by (window, group) — bounded by watermark eviction, not
@@ -30,9 +43,9 @@ import shutil
 import tempfile
 from collections.abc import Callable, Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 
 from iceberg_diag_spark.functions.parallel import materialize
 from iceberg_diag_spark.operators.events import WATERMARK_CANDIDATES_US
@@ -48,40 +61,58 @@ STREAM_DRAIN_TIMEOUT_SECS = 300
 
 
 @contextlib.contextmanager
-def _drained(
-    q: StreamingQuery, label: str, *tmp_dirs: str
-) -> Iterator[None]:
-    """Wait for an availableNow query to finish, then run the body.
+def _drain(
+    label: str, start: Callable[..., StreamingQuery], *dir_prefixes: str
+) -> Iterator[list[str]]:
+    """Make one temp dir per prefix, start an availableNow query with
+    ``start(*dirs)``, wait for it to finish, then run the body with
+    the dirs.
 
     Raises TimeoutError if the drain outlives
     STREAM_DRAIN_TIMEOUT_SECS. The query is stopped before the body
-    runs, and stopped again and ``tmp_dirs`` removed on every exit, so
-    a timeout or a failing post-drain read leaks neither a running
-    query nor temp dirs.
+    runs, and stopped again and every dir removed on every exit, so
+    a timeout, a failed start or a failing post-drain read leaks
+    neither a running query nor temp dirs.
     """
+    dirs = [tempfile.mkdtemp(prefix=p) for p in dir_prefixes]
+    q = None
     try:
+        q = start(*dirs)
         if not q.awaitTermination(STREAM_DRAIN_TIMEOUT_SECS):
             raise TimeoutError(
                 f"streaming drain {label!r} did not finish within "
                 f"{STREAM_DRAIN_TIMEOUT_SECS}s"
             )
         q.stop()
-        yield
+        yield dirs
     finally:
-        q.stop()
-        for d in tmp_dirs:
+        if q is not None:
+            q.stop()
+        for d in dirs:
             shutil.rmtree(d, ignore_errors=True)
 
 
-def _start_foreach_batch(
+def _start_batch_dirs(
     stream_df: DataFrame,
-    write_batch: Callable[[DataFrame, int], None],
+    path: str,
+    write_dir: Callable[[DataFrame, str], None],
     checkpoint_dir: str | None,
     checkpoint_prefix: str,
 ) -> StreamingQuery:
-    """Start an availableNow drain of ``stream_df`` through
-    ``write_batch``, checkpointing to ``checkpoint_dir`` (a fresh temp
-    dir named ``checkpoint_prefix*`` when None)."""
+    """Start an availableNow drain of ``stream_df`` that hands
+    micro-batch <id> to ``write_dir(batch_df, "<path>/batch=<id>")``,
+    checkpointing to ``checkpoint_dir`` (a fresh temp dir named
+    ``checkpoint_prefix*`` when None).
+
+    Every ``write_dir`` overwrites its directory, so a replayed batch
+    (failure → restart from checkpoint) overwrites itself instead of
+    appending duplicates: the sink is idempotent per batch —
+    effectively exactly-once without a transactional table format.
+    Readers see ``batch=N`` partition discovery over the whole path."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        write_dir(batch_df, f"{path}/batch={int(batch_id)}")
+
     checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix=checkpoint_prefix)
     return (
         stream_df.writeStream.foreachBatch(write_batch)
@@ -91,14 +122,93 @@ def _start_foreach_batch(
     )
 
 
+def _read_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """File-source stream over ``<sf_dir>/<table>.parquet``. Schema is
+    taken from a batch probe (streams require an explicit schema); a
+    production deployment would pass the Kafka/Iceberg source instead.
+
+    The file stream source requires a directory. testdata ships each
+    table as a single file → stream sf_dir with an exact glob; a
+    directory-of-part-files layout streams directly."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    schema = spark.read.parquet(path).schema
+    if os.path.isdir(path):
+        stream_dir, glob = path, "*.parquet"
+    else:
+        stream_dir, glob = sf_dir, f"{table}.parquet"
+    reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(stream_dir)
+
+
+def _keyed_state(
+    stream: DataFrame,
+    key: str,
+    fold: Callable,
+    out_schema: str,
+    state_schema: str,
+    init: tuple,
+    sort_cols: tuple[str, ...],
+    output_mode: str,
+) -> DataFrame:
+    """Per-``key`` state carried across micro-batches: the one
+    applyInPandasWithState call. Each micro-batch, every key's rows
+    arrive as ONE pandas batch sorted by ``sort_cols``, and
+    ``fold(key_value, state, batch)`` returns the new state tuple and
+    the output rows (tuples in ``out_schema`` order). ``state`` is
+    ``init`` until the key's first update. numpy scalars in the new
+    state are stored as Python values.
+
+    No timeout: a key's state lives as long as the query, bounded by
+    the key cardinality (SCALING.md §9); eviction would be set here."""
+    import pandas as pd  # local import: worker-side dependency
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    cols = [f.split()[0] for f in out_schema.split(",")]
+
+    def update(k, pdfs, state):
+        batch = pd.concat(list(pdfs), ignore_index=True)
+        if sort_cols:
+            batch = batch.sort_values(list(sort_cols))
+        new, rows = fold(k[0], state.get if state.exists else init, batch)
+        state.update(
+            tuple(v.item() if isinstance(v, np.generic) else v for v in new)
+        )
+        yield pd.DataFrame.from_records(rows, columns=cols)
+
+    return stream.groupBy(key).applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=output_mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _lateness_us(frontier: int, batch) -> tuple[np.ndarray, int]:
+    """Lateness (µs) of each row of ``batch``, in fold order, behind
+    the running event-time frontier that starts at ``frontier``
+    (vectorized running max, no Python row loop), and the frontier
+    after the batch."""
+    ts_us = (batch["ts"].astype("int64") // 1000).to_numpy()
+    prev = np.concatenate(([frontier], np.maximum.accumulate(ts_us)[:-1]))
+    late = np.maximum(0, np.maximum(prev, frontier) - ts_us)
+    return late, max(frontier, int(ts_us.max()))
+
+
 def read_events_stream(
     spark: SparkSession,
     sf_dir: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-source stream over the events parquet directory. Schema is
-    taken from a batch probe (streams require an explicit schema); a
-    production deployment would pass the Kafka/Iceberg source instead.
+    """File-source stream over the events parquet directory
+    (`_read_stream`).
 
     events.ts is normalized to TimestampType the same way as the
     batch loader (sources/tpch.py:normalize_event_ts) — the physical
@@ -106,20 +216,10 @@ def read_events_stream(
     long via legacy conf, TIMESTAMP(MICROS) → timestamp_ntz, or
     already timestamp).
     """
-    path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema: StructType = spark.read.parquet(path).schema
-    # The file stream source requires a directory. testdata ships
-    # events.parquet as a single file → stream sf_dir with an exact
-    # glob; a directory-of-part-files layout streams directly.
-    if os.path.isdir(path):
-        stream_dir, glob = path, "*.parquet"
-    else:
-        stream_dir, glob = sf_dir, "events.parquet"
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return normalize_event_ts(reader.parquet(stream_dir))
+    return normalize_event_ts(
+        _read_stream(spark, sf_dir, "events", max_files_per_trigger)
+    )
 
 
 def tumbling_counts(
@@ -193,20 +293,9 @@ def session_windows(
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents parquet — the
     ingestion-side view of the corpus (a production deployment points
-    this at the crawl landing directory / Kafka topic). Schema from a
-    batch probe, single-file layout handled with the same exact-glob
-    trick as the events stream."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema: StructType = spark.read.parquet(path).schema
-    if os.path.isdir(path):
-        stream_dir, glob = path, "*.parquet"
-    else:
-        stream_dir, glob = sf_dir, "documents.parquet"
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", glob)
-        .parquet(stream_dir)
-    )
+    this at the crawl landing directory / Kafka topic); `_read_stream`
+    probes the schema and handles the single-file layout."""
+    return _read_stream(spark, sf_dir, "documents")
 
 
 def incremental_exact_dedup_stream(
@@ -307,43 +396,24 @@ def user_running_stats(events: DataFrame, watermark: str = "2 hours") -> DataFra
     (SURVEY.md §2 UDF surface) in streaming form.
     """
     import pandas as pd  # local import: worker-side dependency
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    out_schema = (
-        "user_id long, event_count long, value_cents long, last_ts string"
-    )
-    state_schema = "count long, cents long, max_ns long"
+    def fold(user_id, state, batch):
+        count, cents, max_ns = state
+        count += len(batch)
+        cents += int(np.floor(batch["value"] * 100).astype("int64").sum())
+        max_ns = max(max_ns, int(batch["ts"].astype("int64").max()))
+        last_ts = pd.Timestamp(max_ns, unit="ns").strftime("%Y-%m-%d %H:%M:%S")
+        return (count, cents, max_ns), [(user_id, count, cents, last_ts)]
 
-    import numpy as np
-
-    def update(key, pdfs, state: GroupState):
-        count, cents, max_ns = state.get if state.exists else (0, 0, 0)
-        for pdf in pdfs:
-            count += len(pdf)
-            cents += int(np.floor(pdf["value"] * 100).astype("int64").sum())
-            max_ns = max(max_ns, int(pdf["ts"].astype("int64").max()))
-        state.update((count, cents, max_ns))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "event_count": [count],
-                "value_cents": [cents],
-                "last_ts": [
-                    pd.Timestamp(max_ns, unit="ns").strftime("%Y-%m-%d %H:%M:%S")
-                ],
-            }
-        )
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.withWatermark("ts", watermark),
+        "user_id",
+        fold,
+        "user_id long, event_count long, value_cents long, last_ts string",
+        "count long, cents long, max_ns long",
+        (0, 0, 0),
+        (),
+        "update",
     )
 
 
@@ -482,16 +552,18 @@ def run_to_table(
     """
     spark = stream_df.sparkSession
     name = f"{name_prefix}_{os.getpid()}_{next(_QUERY_SEQ)}"
-    checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    with _drained(q, name, checkpoint):
+
+    def start(checkpoint: str) -> StreamingQuery:
+        return (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    with _drain(name, start, f"ckpt_{name}_"):
         sink = spark.table(name)
         rows, schema = sink.collect(), sink.schema
         spark.catalog.dropTempView(name)
@@ -501,19 +573,8 @@ def run_to_table(
 def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the embeddings parquet — the
     ingestion-side view of an embedding drop (production points this
-    at the encoder's output topic). Same schema-probe + exact-glob
-    handling as the documents stream."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    schema: StructType = spark.read.parquet(path).schema
-    if os.path.isdir(path):
-        stream_dir, glob = path, "*.parquet"
-    else:
-        stream_dir, glob = sf_dir, "embeddings.parquet"
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", glob)
-        .parquet(stream_dir)
-    )
+    at the encoder's output topic), read by `_read_stream`."""
+    return _read_stream(spark, sf_dir, "embeddings")
 
 
 def centroid_confusion_stream(
@@ -615,50 +676,28 @@ def disorder_monitor(
     Output: (event_type, n_events, n_late, max_lateness_us,
     total_lateness_us).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    out_schema = (
+    def fold(event_type, state, batch):
+        frontier, n, n_late, mx, tot = state
+        late, frontier = _lateness_us(frontier, batch)
+        n += len(late)
+        n_late += int((late > late_threshold_us).sum())
+        mx = max(mx, int(late.max()))
+        tot += int(late.sum())
+        return (frontier, n, n_late, mx, tot), [
+            (event_type, n, n_late, mx, tot)
+        ]
+
+    return _keyed_state(
+        events,
+        "event_type",
+        fold,
         "event_type string, n_events long, n_late long,"
-        " max_lateness_us long, total_lateness_us long"
-    )
-    state_schema = "frontier long, n long, n_late long, mx long, tot long"
-
-    def update(key, pdfs, state: GroupState):
-        frontier, n, n_late, mx, tot = (
-            state.get if state.exists else (-1, 0, 0, 0, 0)
-        )
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            batch = batch.sort_values("event_id")
-            ts_us = (batch["ts"].astype("int64") // 1000).to_numpy()
-            cm = np.maximum.accumulate(ts_us)
-            prev = np.concatenate(([frontier], cm[:-1]))
-            prev = np.maximum(prev, frontier)
-            late = np.maximum(0, prev - ts_us)
-            n += len(ts_us)
-            n_late += int((late > late_threshold_us).sum())
-            mx = max(mx, int(late.max()))
-            tot += int(late.sum())
-            frontier = max(frontier, int(ts_us.max()))
-        state.update((int(frontier), int(n), int(n_late), int(mx), int(tot)))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_events": [n],
-                "n_late": [n_late],
-                "max_lateness_us": [mx],
-                "total_lateness_us": [tot],
-            }
-        )
-
-    return events.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        " max_lateness_us long, total_lateness_us long",
+        "frontier long, n long, n_late long, mx long, tot long",
+        (-1, 0, 0, 0, 0),
+        ("event_id",),
+        "update",
     )
 
 
@@ -692,68 +731,36 @@ def scd2_stream(
     keyed-state shape. Output: (user_id, state, valid_from_us,
     valid_to_us, version_seq, disorder_seen).
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    out_schema = (
+    def fold(user_id, state, batch):
+        cur_state, cur_from, version, frontier, n_late = state
+        ts_us = (batch["ts"].astype("int64") // 1000).to_numpy()
+        # cross-batch disorder guard: strictly below the frontier
+        # means an earlier batch already folded past this instant
+        late = ts_us < frontier
+        n_late += int(late.sum())
+        closed = []
+        for t, et in zip(ts_us[~late].tolist(), batch["event_type"][~late]):
+            if cur_state is None:
+                cur_state, cur_from, version = et, t, 1
+            elif et != cur_state:
+                closed.append((user_id, cur_state, cur_from, t, version, n_late))
+                cur_state, cur_from = et, t
+                version += 1
+        frontier = max(frontier, int(ts_us.max()))
+        return (cur_state, cur_from, version, frontier, n_late), closed
+
+    return _keyed_state(
+        events.withWatermark("ts", watermark),
+        "user_id",
+        fold,
         "user_id long, state string, valid_from_us long,"
-        " valid_to_us long, version_seq long, disorder_seen long"
-    )
-    state_schema = (
+        " valid_to_us long, version_seq long, disorder_seen long",
         "cur_state string, cur_from long, version long,"
-        " frontier long, n_late long"
-    )
-
-    def update(key, pdfs, state: GroupState):
-        cur_state, cur_from, version, frontier, n_late = (
-            state.get if state.exists else (None, 0, 0, -1, 0)
-        )
-        states, froms, tos, vers = [], [], [], []
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            batch = batch.sort_values(["ts", "event_id"])
-            ts_us = (batch["ts"].astype("int64") // 1000).to_numpy()
-            # cross-batch disorder guard: strictly below the frontier
-            # means an earlier batch already folded past this instant
-            late = ts_us < frontier
-            n_late += int(late.sum())
-            for t, et in zip(ts_us[~late], batch["event_type"][~late]):
-                if cur_state is None:
-                    cur_state, cur_from, version = et, int(t), 1
-                elif et != cur_state:
-                    states.append(cur_state)
-                    froms.append(cur_from)
-                    tos.append(int(t))
-                    vers.append(version)
-                    cur_state, cur_from = et, int(t)
-                    version += 1
-            if len(ts_us):
-                frontier = max(int(frontier), int(ts_us.max()))
-        state.update(
-            (cur_state, int(cur_from), int(version), int(frontier),
-             int(n_late))
-        )
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(states),
-                "state": states,
-                "valid_from_us": froms,
-                "valid_to_us": tos,
-                "version_seq": vers,
-                "disorder_seen": [int(n_late)] * len(states),
-            }
-        )
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        " frontier long, n_late long",
+        (None, 0, 0, -1, 0),
+        ("ts", "event_id"),
+        "append",
     )
 
 
@@ -786,13 +793,14 @@ def stream_export_shards(
     """
     from iceberg_diag_spark.sources.sinks import export_training_shards
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        export_training_shards(
-            batch_df, f"{path}/batch={int(batch_id)}", n_shards, seed, id_col
-        )
-
-    return _start_foreach_batch(
-        docs_stream, write_batch, checkpoint_dir, "ckpt_shard_export_"
+    return _start_batch_dirs(
+        docs_stream,
+        path,
+        lambda batch_df, d: export_training_shards(
+            batch_df, d, n_shards, seed, id_col
+        ),
+        checkpoint_dir,
+        "ckpt_shard_export_",
     )
 
 
@@ -850,40 +858,13 @@ def watermark_advisor_stream(
     Output per type per batch: (event_type, n_events,
     recommended_watermark_us, n_dropped, drop_ppm, meets_target).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     cands = tuple(int(c) for c in candidates_us)
-    out_schema = (
-        "event_type string, n_events long, recommended_watermark_us"
-        " long, n_dropped long, drop_ppm long, meets_target boolean"
-    )
-    state_schema = "frontier long, n long, " + ", ".join(
-        f"d{k} long" for k in range(len(cands))
-    )
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            frontier, n, *drops = state.get
-            drops = list(drops)
-        else:
-            frontier, n, drops = -1, 0, [0] * len(cands)
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            batch = batch.sort_values("event_id")
-            ts_us = (batch["ts"].astype("int64") // 1000).to_numpy()
-            cm = np.maximum.accumulate(ts_us)
-            prev = np.concatenate(([frontier], cm[:-1]))
-            prev = np.maximum(prev, frontier)
-            late = np.maximum(0, prev - ts_us)
-            n += len(ts_us)
-            for k, c in enumerate(cands):
-                drops[k] += int((late > c).sum())
-            frontier = max(frontier, int(ts_us.max()))
-        state.update(
-            (int(frontier), int(n), *[int(d) for d in drops])
-        )
+    def fold(event_type, state, batch):
+        frontier, n, *drops = state
+        late, frontier = _lateness_us(frontier, batch)
+        n += len(late)
+        drops = [d + int((late > c).sum()) for d, c in zip(drops, cands)]
         # smallest candidate meeting the target on CUMULATIVE counts;
         # largest candidate (flagged) when none does — the exact
         # batch watermark_recommendation pick
@@ -894,23 +875,21 @@ def watermark_advisor_stream(
         )
         meets = pick is not None
         k = pick if meets else len(cands) - 1
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_events": [int(n)],
-                "recommended_watermark_us": [cands[k]],
-                "n_dropped": [int(drops[k])],
-                "drop_ppm": [int(ppms[k])],
-                "meets_target": [meets],
-            }
-        )
+        return (frontier, n, *drops), [
+            (event_type, n, cands[k], drops[k], ppms[k], meets)
+        ]
 
-    return events.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        events,
+        "event_type",
+        fold,
+        "event_type string, n_events long, recommended_watermark_us"
+        " long, n_dropped long, drop_ppm long, meets_target boolean",
+        "frontier long, n long, "
+        + ", ".join(f"d{k} long" for k in range(len(cands))),
+        (-1, 0, *[0] * len(cands)),
+        ("event_id",),
+        "update",
     )
 
 
@@ -996,80 +975,44 @@ def cdc_merge_stream(events: DataFrame) -> DataFrame:
     Output per user per batch: (user_id, present, n_applied,
     last_event_id, last_value, disorder_seen).
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    out_schema = (
+    def fold(user_id, state, batch):
+        last_d, n_applied, last_eid, last_val, frontier, dis = state
+        ops = batch["event_type"].map(
+            lambda t: "I" if t == "signup" else ("D" if t == "error" else "U")
+        )
+        dels = batch.loc[ops == "D", "event_id"]
+        if len(dels):
+            dis += int((dels < frontier).sum())
+            new_last_d = max(last_d, int(dels.max()))
+            if new_last_d > last_d and new_last_d >= frontier:
+                # in-order delete: every previously applied id is
+                # ≤ frontier ≤ the new tombstone → exact reset
+                n_applied, last_eid, last_val = 0, None, None
+            last_d = new_last_d
+        iu = batch.loc[ops.isin(("I", "U")) & (batch["event_id"] > last_d)]
+        n_applied += len(iu)
+        if len(iu):
+            top = iu.iloc[-1]
+            if last_eid is None or int(top["event_id"]) > last_eid:
+                last_eid = int(top["event_id"])
+                last_val = float(top["value"])
+        frontier = max(frontier, int(batch["event_id"].max()))
+        return (last_d, n_applied, last_eid, last_val, frontier, dis), [
+            (user_id, n_applied > 0, n_applied, last_eid, last_val, dis)
+        ]
+
+    return _keyed_state(
+        events,
+        "user_id",
+        fold,
         "user_id long, present boolean, n_applied long,"
-        " last_event_id long, last_value double, disorder_seen long"
-    )
-    state_schema = (
+        " last_event_id long, last_value double, disorder_seen long",
         "last_d long, n_applied long, last_eid long,"
-        " last_val double, frontier long, disorder long"
-    )
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            last_d, n_applied, last_eid, last_val, frontier, dis = (
-                state.get
-            )
-        else:
-            last_d, n_applied, last_eid, last_val, frontier, dis = (
-                -1, 0, None, None, -1, 0,
-            )
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            batch = batch.sort_values("event_id")
-            ops = batch["event_type"].map(
-                lambda t: "I" if t == "signup"
-                else ("D" if t == "error" else "U")
-            )
-            dels = batch.loc[ops == "D", "event_id"]
-            if len(dels):
-                dis += int((dels < frontier).sum())
-                new_last_d = max(last_d, int(dels.max()))
-                if new_last_d > last_d and new_last_d >= frontier:
-                    # in-order delete: every previously applied id is
-                    # ≤ frontier ≤ the new tombstone → exact reset
-                    n_applied, last_eid, last_val = 0, None, None
-                last_d = new_last_d
-            iu = batch.loc[
-                ops.isin(("I", "U")) & (batch["event_id"] > last_d)
-            ]
-            n_applied += len(iu)
-            if len(iu):
-                top = iu.iloc[-1]
-                if last_eid is None or int(top["event_id"]) > last_eid:
-                    last_eid = int(top["event_id"])
-                    last_val = float(top["value"])
-            frontier = max(frontier, int(batch["event_id"].max()))
-        state.update(
-            (
-                int(last_d),
-                int(n_applied),
-                None if last_eid is None else int(last_eid),
-                None if last_val is None else float(last_val),
-                int(frontier),
-                int(dis),
-            )
-        )
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "present": [n_applied > 0],
-                "n_applied": [int(n_applied)],
-                "last_event_id": [last_eid],
-                "last_value": [last_val],
-                "disorder_seen": [int(dis)],
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        " last_val double, frontier long, disorder long",
+        (-1, 0, None, None, -1, 0),
+        ("event_id",),
+        "update",
     )
 
 
@@ -1103,15 +1046,14 @@ def sli_burn_rate_stream(
     """
     from iceberg_diag_spark.operators.events import hourly_sli_rollup
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            hourly_sli_rollup(batch_df)
-            .write.mode("overwrite")
-            .parquet(f"{rollup_path}/batch={int(batch_id)}")
-        )
-
-    return _start_foreach_batch(
-        events_stream, write_batch, checkpoint_dir, "ckpt_sli_burn_"
+    return _start_batch_dirs(
+        events_stream,
+        rollup_path,
+        lambda batch_df, d: hourly_sli_rollup(batch_df)
+        .write.mode("overwrite")
+        .parquet(d),
+        checkpoint_dir,
+        "ckpt_sli_burn_",
     )
 
 
@@ -1138,12 +1080,14 @@ def run_sli_burn_rate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain helper: run the streaming burn-rate twin over the finite
     events directory (availableNow) and return the final burn table —
     the relation the driver hash-checks against the batch oracle."""
-    rollup = tempfile.mkdtemp(prefix="sli_rollup_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sli_burn_")
-    q = sli_burn_rate_stream(
-        read_events_stream(spark, sf_dir), rollup, checkpoint_dir=ckpt
-    )
-    with _drained(q, "sli_burn_rate_stream", rollup, ckpt):
+    with _drain(
+        "sli_burn_rate_stream",
+        lambda rollup, ckpt: sli_burn_rate_stream(
+            read_events_stream(spark, sf_dir), rollup, checkpoint_dir=ckpt
+        ),
+        "sli_rollup_",
+        "ckpt_sli_burn_",
+    ) as (rollup, _):
         return materialize(sli_burn_rate_from_rollup(spark, rollup), eager=True)
 
 
@@ -1169,15 +1113,14 @@ def seasonality_profile_stream(
     """
     from iceberg_diag_spark.operators.events import hourly_type_rollup
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            hourly_type_rollup(batch_df)
-            .write.mode("overwrite")
-            .parquet(f"{rollup_path}/batch={int(batch_id)}")
-        )
-
-    return _start_foreach_batch(
-        events_stream, write_batch, checkpoint_dir, "ckpt_seasonality_"
+    return _start_batch_dirs(
+        events_stream,
+        rollup_path,
+        lambda batch_df, d: hourly_type_rollup(batch_df)
+        .write.mode("overwrite")
+        .parquet(d),
+        checkpoint_dir,
+        "ckpt_seasonality_",
     )
 
 
@@ -1204,12 +1147,14 @@ def run_seasonality_profile_stream(
     finite events directory (availableNow) and return the final
     profile — the relation the driver hash-checks against the batch
     oracle."""
-    rollup = tempfile.mkdtemp(prefix="seasonality_rollup_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_seasonality_")
-    q = seasonality_profile_stream(
-        read_events_stream(spark, sf_dir), rollup, checkpoint_dir=ckpt
-    )
-    with _drained(q, "seasonality_profile_stream", rollup, ckpt):
+    with _drain(
+        "seasonality_profile_stream",
+        lambda rollup, ckpt: seasonality_profile_stream(
+            read_events_stream(spark, sf_dir), rollup, checkpoint_dir=ckpt
+        ),
+        "seasonality_rollup_",
+        "ckpt_seasonality_",
+    ) as (rollup, _):
         return materialize(seasonality_from_rollup(spark, rollup), eager=True)
 
 
@@ -1226,7 +1171,7 @@ def corpus_release_stream(
     release logic as the batch sink (funnel.release_assignments:
     quality gate → exact dedup → near-dup collapse → holdout → md5
     shard membership → fit-before-append packing) and lands via the
-    same sink (sinks.write_assigned_shards) under its own
+    same writer (funnel._write_release) under its own
     ``batch=<id>`` directory with mode("overwrite") — a replayed
     batch (failure → restart from checkpoint) overwrites itself
     instead of appending duplicates (the stream_export_shards
@@ -1250,32 +1195,19 @@ def corpus_release_stream(
 
     Returns the started StreamingQuery (caller drains/stops).
     """
-    from iceberg_diag_spark.operators.funnel import (
-        RELEASE_CAPACITY_TOKENS,
-        RELEASE_N_SHARDS,
-        release_assignments,
-    )
-    from iceberg_diag_spark.sources.sinks import write_assigned_shards
+    from iceberg_diag_spark.operators import funnel
 
-    shards = RELEASE_N_SHARDS if n_shards is None else n_shards
+    shards = funnel.RELEASE_N_SHARDS if n_shards is None else n_shards
     cap = (
-        RELEASE_CAPACITY_TOKENS if capacity_tokens is None
+        funnel.RELEASE_CAPACITY_TOKENS if capacity_tokens is None
         else capacity_tokens
     )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        asg = release_assignments(
-            batch_df, n_shards=shards, capacity_tokens=cap
-        )
-        write_assigned_shards(
-            asg,
-            f"{release_path}/batch={int(batch_id)}",
-            shards,
-            order_cols=("source", "seq_id", "doc_id"),
-        )
-
-    return _start_foreach_batch(
-        docs_stream, write_batch, checkpoint_dir, "ckpt_corpus_release_"
+    return _start_batch_dirs(
+        docs_stream,
+        release_path,
+        lambda batch_df, d: funnel._write_release(batch_df, d, shards, cap),
+        checkpoint_dir,
+        "ckpt_corpus_release_",
     )
 
 
@@ -1287,21 +1219,14 @@ def release_manifest_from_stream(
     written-files discipline): per shard, cumulative docs and token
     mass, packed sequences counted per (batch, source, seq_id) —
     sequence ids are scoped to their increment — and the salted
-    bit_xor membership digests over every doc id delivered. With a
-    single increment this is exactly funnel._manifest_agg's relation
-    (batch is constant), so the batch oracle applies."""
-    from iceberg_diag_spark.operators.sampling import membership_checksums
+    bit_xor membership digests over every doc id delivered: the batch
+    funnel._manifest_agg with ``batch`` leading the sequence key. With
+    a single increment batch is constant, so the batch oracle
+    applies."""
+    from iceberg_diag_spark.operators.funnel import _manifest_agg
 
-    rows = spark.read.parquet(release_path)
-    x1, x2 = membership_checksums(F.col("doc_id"))
-    return rows.groupBy(F.col("shard").cast("long").alias("shard")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.countDistinct("batch", "source", "seq_id")
-        .cast("long")
-        .alias("n_seqs"),
-        F.sum("n_tokens").cast("long").alias("n_tokens"),
-        x1.alias("members_xor"),
-        x2.alias("members_xor2"),
+    return _manifest_agg(
+        spark.read.parquet(release_path), ("batch", "source", "seq_id")
     )
 
 
@@ -1312,12 +1237,12 @@ def run_corpus_release_stream(
     documents directory (availableNow — one increment) and return the
     accumulated manifest; equals corpus_release_manifest, the relation
     the driver hash-checks against the shared batch oracle."""
-    release = tempfile.mkdtemp(prefix="corpus_release_stream_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_corpus_release_")
-    q = corpus_release_stream(
-        read_documents_stream(spark, sf_dir),
-        release,
-        checkpoint_dir=ckpt,
-    )
-    with _drained(q, "corpus_release_stream", release, ckpt):
+    with _drain(
+        "corpus_release_stream",
+        lambda release, ckpt: corpus_release_stream(
+            read_documents_stream(spark, sf_dir), release, checkpoint_dir=ckpt
+        ),
+        "corpus_release_stream_",
+        "ckpt_corpus_release_",
+    ) as (release, _):
         return materialize(release_manifest_from_stream(spark, release), eager=True)

@@ -147,6 +147,55 @@ def test_source_tv_distance_identical_sources_zero(spark):
     assert source_tv_distance(docs).collect()[0]["tv_ppm"] == 0
 
 
+
+def _null_source_docs(spark, null_as=None):
+    """40 docs over sources `a`, `b` and NULL (20 docs), or `null_as`
+    in place of NULL."""
+    rows = [
+        (
+            i,
+            " ".join(f"w{(i * k) % 7}" for k in range(1, 2 + i % 4)),
+            null_as if i % 2 else ("a" if i % 4 == 0 else "b"),
+            (i * 7) % 13 + 1,
+        )
+        for i in range(40)
+    ]
+    return spark.createDataFrame(
+        rows, "doc_id long, text string, source string, n_chars long"
+    )
+
+
+def _null_source_metamorphic(spark, op, sentinel):
+    """`op` over the NULL-source docs equals `op` over the same docs
+    with NULL replaced by `sentinel`, mapped back to NULL."""
+    def rows(df, null_as):
+        return sorted(
+            (tuple(None if v == null_as else v for v in r) for r in df.collect()),
+            key=repr,
+        )
+
+    got = rows(op(_null_source_docs(spark)), None)
+    want = rows(op(_null_source_docs(spark, sentinel)), sentinel)
+    assert any(None in r for r in want)
+    assert got == want
+
+
+def test_source_tv_distance_keeps_null_source(spark):
+    """The NULL source pairs with every other source and sorts first:
+    equi-joins on the source and a plain `<` drop both of its pairs
+    (1 row instead of 3)."""
+    from iceberg_diag_spark.operators.textops import source_tv_distance
+
+    _null_source_metamorphic(spark, source_tv_distance, "!null")
+
+
+def test_source_length_ks_null_source_in_range(spark):
+    """The NULL source's ECDF counts its own docs: an equi-join on the
+    source leaves its cumulative count at 0, a KS distance of 2."""
+    from iceberg_diag_spark.operators.textops import source_length_ks
+
+    _null_source_metamorphic(spark, source_length_ks, "~null")
+
 def test_disorder_audit_known_lateness(spark):
     import datetime
 

@@ -353,3 +353,80 @@ def test_scd2_stream_counts_cross_batch_disorder(spark, tmp_path_factory):
         ]
     finally:
         shutil.rmtree(src, ignore_errors=True)
+
+
+def _plumbing_sites(pkg=None) -> dict[str, set[str]]:
+    """Top-level function (as `module:function`, or `module:<module>`
+    for module-level code) of every place that writes a piece of
+    stream plumbing out: under streaming/, the keyed-state call, the
+    file-stream read, the stream write and a ``batch=`` path; under
+    the whole package, the release write (write_assigned_shards in
+    the ("source", "seq_id", "doc_id") release order)."""
+    import ast
+    import pathlib
+
+    import iceberg_diag_spark
+
+    pkg = pkg or pathlib.Path(iceberg_diag_spark.__file__).parent
+    release_order = ("source", "seq_id", "doc_id")
+    sites: dict[str, set[str]] = {
+        "keyed_state": set(), "read_stream": set(), "write_stream": set(),
+        "batch_dir": set(), "release_write": set(),
+    }
+
+    def ident(n):
+        return getattr(n, "attr", None) or getattr(n, "id", None) or (
+            n.name if isinstance(n, ast.alias) else None
+        )
+
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        streaming = path.parent.name == "streaming"
+        docstrings = {
+            id(s.value) for s in ast.walk(tree) if isinstance(s, ast.Expr)
+        }
+        for top in tree.body:
+            where = f"{path.stem}:{getattr(top, 'name', '<module>')}"
+            for n in ast.walk(top):
+                name = ident(n)
+                if streaming and name in (
+                    "applyInPandasWithState", "GroupStateTimeout"
+                ):
+                    sites["keyed_state"].add(where)
+                if streaming and name == "readStream":
+                    sites["read_stream"].add(where)
+                if streaming and name == "writeStream":
+                    sites["write_stream"].add(where)
+                if (
+                    streaming
+                    and isinstance(n, ast.Constant)
+                    and isinstance(n.value, str)
+                    and "batch=" in n.value
+                    and id(n) not in docstrings
+                ):
+                    sites["batch_dir"].add(where)
+                if isinstance(n, ast.Call) and ident(n.func) == (
+                    "write_assigned_shards"
+                ):
+                    for a in [*n.args, *(k.value for k in n.keywords)]:
+                        if isinstance(a, ast.Tuple) and tuple(
+                            getattr(e, "value", None) for e in a.elts
+                        ) == release_order:
+                            sites["release_write"].add(where)
+    return sites
+
+
+def test_stream_plumbing_written_once():
+    """Each piece of stream plumbing is written in one helper: the
+    file-stream reader, the keyed-state call (state read and write,
+    timeout), the batch=<id> sink start, and the memory-sink drain;
+    and the release is written by funnel's one writer."""
+    assert _plumbing_sites() == {
+        "keyed_state": {"stream_ops:_keyed_state"},
+        "read_stream": {"stream_ops:_read_stream"},
+        "write_stream": {
+            "stream_ops:_start_batch_dirs", "stream_ops:run_to_table"
+        },
+        "batch_dir": {"stream_ops:_start_batch_dirs"},
+        "release_write": {"funnel:_write_release"},
+    }

@@ -172,7 +172,15 @@ def test_cdc_merge_state_survives_restart(spark, tmp_path_factory):
     assert got2[2].disorder_seen == 0
 
 
-@pytest.mark.parametrize("drain", ["run_to_table", "run_sli_burn_rate_stream"])
+@pytest.mark.parametrize(
+    "drain",
+    [
+        "run_to_table",
+        "run_sli_burn_rate_stream",
+        "run_seasonality_profile_stream",
+        "run_corpus_release_stream",
+    ],
+)
 def test_drain_timeout_stops_query_and_removes_temp_dirs(
     spark, monkeypatch, drain
 ):
@@ -204,7 +212,7 @@ def test_drain_timeout_stops_query_and_removes_temp_dirs(
                 "complete",
             )
         else:
-            so.run_sli_burn_rate_stream(spark, sf_dir)
+            getattr(so, drain)(spark, sf_dir)
 
     assert len(queries) == 1 and not queries[0].isActive
     assert dirs and not any(os.path.exists(d) for d in dirs)
