@@ -1825,11 +1825,10 @@ def dedup_method_agreement(
     Both pair relations are the production bucketed plans themselves
     (exact-dup collapse included — both emit collapsed copies as
     star pairs, so stars land in the intersection by construction).
-    The comparison is one full outer join on the (doc_a, doc_b) pair
-    key — uniform key, pair-relation scale, no text — and one global
-    aggregate. Output (one row): n_minhash, n_simhash, n_both,
-    only_minhash, only_simhash, n_union, overlap_ppm (Jaccard of the
-    pair sets).
+    The comparison is _pair_agreement: one full outer join on the
+    (doc_a, doc_b) pair key and one global aggregate. Output (one
+    row): n_minhash, n_simhash, n_both, only_minhash, only_simhash,
+    n_union, overlap_ppm (Jaccard of the pair sets).
     """
     # marks, signatures and fingerprints from the one signature pass
     wide, marked, sigs = _fused_wide_and_marks(
@@ -1837,45 +1836,45 @@ def dedup_method_agreement(
     )
     mh = minhash_candidate_pairs(
         docs, text_col=text_col, id_col=id_col, marked=marked, wide=wide
-    ).select("doc_a", "doc_b", F.lit(1).alias("__mh"))
+    )
     sh = simhash_near_dup(
         docs, max_hamming=simhash_max_hamming,
         text_col=text_col, id_col=id_col, marked=marked,
         fingerprints=sigs.filter(F.col("simhash").isNotNull()).select(
             F.col(id_col), "simhash"
         ),
-    ).select("doc_a", "doc_b", F.lit(1).alias("__sh"))
-    j = mh.join(sh, ["doc_a", "doc_b"], "full_outer")
+    )
+    return _pair_agreement(mh, sh, "minhash", "simhash")
+
+
+def _pair_agreement(
+    a: DataFrame, b: DataFrame, a_label: str, b_label: str
+) -> DataFrame:
+    """Venn counts of two (doc_a, doc_b) pair sets: one full outer
+    join on the pair key — uniform key, pair-relation scale, no text
+    — and one global aggregate. Output (one row): n_<a>, n_<b>,
+    n_both, only_<a>, only_<b>, n_union, overlap_ppm (Jaccard of the
+    pair sets)."""
+    in_a = F.col("__a").isNotNull()
+    in_b = F.col("__b").isNotNull()
+
+    def _n(cond: Column, name: str) -> Column:
+        return F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(name)
+
+    j = a.select("doc_a", "doc_b", F.lit(1).alias("__a")).join(
+        b.select("doc_a", "doc_b", F.lit(1).alias("__b")),
+        ["doc_a", "doc_b"],
+        "full_outer",
+    )
     return j.agg(
-        F.sum(F.coalesce(F.col("__mh"), F.lit(0)))
-        .cast("long")
-        .alias("n_minhash"),
-        F.sum(F.coalesce(F.col("__sh"), F.lit(0)))
-        .cast("long")
-        .alias("n_simhash"),
-        F.sum(
-            F.when(F.col("__mh").isNotNull() & F.col("__sh").isNotNull(), 1)
-            .otherwise(0)
-        ).cast("long").alias("n_both"),
-        F.sum(
-            F.when(F.col("__mh").isNotNull() & F.col("__sh").isNull(), 1)
-            .otherwise(0)
-        ).cast("long").alias("only_minhash"),
-        F.sum(
-            F.when(F.col("__mh").isNull() & F.col("__sh").isNotNull(), 1)
-            .otherwise(0)
-        ).cast("long").alias("only_simhash"),
+        _n(in_a, f"n_{a_label}"),
+        _n(in_b, f"n_{b_label}"),
+        _n(in_a & in_b, "n_both"),
+        _n(in_a & ~in_b, f"only_{a_label}"),
+        _n(~in_a & in_b, f"only_{b_label}"),
         F.count(F.lit(1)).cast("long").alias("n_union"),
-    ).select(
-        "n_minhash",
-        "n_simhash",
-        "n_both",
-        "only_minhash",
-        "only_simhash",
-        "n_union",
-        F.expr(
-            "(1000000 * n_both) DIV greatest(n_union, 1)"
-        ).alias("overlap_ppm"),
+    ).withColumn(
+        "overlap_ppm", F.expr("(1000000 * n_both) DIV greatest(n_union, 1)")
     )
 
 

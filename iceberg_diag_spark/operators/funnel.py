@@ -55,7 +55,7 @@ is whitespace tokens surviving the stage (stage 5's equals stage 4's
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from iceberg_diag_spark.functions.parallel import materialize
@@ -290,6 +290,8 @@ def corpus_build_funnel(
 # is computed against (capacity matches the funnel's packed stage).
 RELEASE_N_SHARDS = 8
 RELEASE_CAPACITY_TOKENS = 256
+# Row order inside a written release shard: packed sequence order.
+_RELEASE_ORDER = ("source", "seq_id", "doc_id")
 
 
 def release_assignments(
@@ -363,6 +365,13 @@ def corpus_release_manifest(
     return _manifest_agg(asg)
 
 
+def _n_seqs(*seq_key: str) -> Column:
+    """Distinct packed sequences: each sequence counts once as one
+    struct, so a NULL source is a source too (a multi-column
+    countDistinct would skip every row with a NULL key column)."""
+    return F.countDistinct(F.struct(*seq_key)).cast("long").alias("n_seqs")
+
+
 def _manifest_agg(
     asg: DataFrame, seq_key: tuple[str, ...] = ("source", "seq_id")
 ) -> DataFrame:
@@ -376,7 +385,7 @@ def _manifest_agg(
     x1, x2 = membership_checksums(F.col("doc_id"))
     return asg.groupBy(F.col("shard").cast("long").alias("shard")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.countDistinct(*seq_key).cast("long").alias("n_seqs"),
+        _n_seqs(*seq_key),
         F.sum("n_tokens").cast("long").alias("n_tokens"),
         x1.alias("members_xor"),
         x2.alias("members_xor2"),
@@ -418,7 +427,7 @@ def _write_release(
         docs, n_shards=n_shards, capacity_tokens=capacity_tokens, **kwargs
     )
     write_assigned_shards(
-        asg, path, n_shards, order_cols=("source", "seq_id", "doc_id")
+        asg, path, n_shards, order_cols=_RELEASE_ORDER
     )
 
 
@@ -495,6 +504,10 @@ def verify_release(spark, path: str, manifest: DataFrame) -> DataFrame:
 
 
 RECONCILE_SIG_BUCKETS = RELEASE_N_SHARDS
+# The reconcile signature store: one row per (doc, band) under
+# batch=<id>/sb=<bucket>, rows in (band, band_key, doc_id) order.
+_SIG_FILE_SCHEMA = "doc_id long, band int, band_key string, ch string, sb long"
+_SIG_ORDER = ("band", "band_key", "doc_id")
 
 
 def release_neardup_reconcile(
@@ -609,7 +622,6 @@ def release_neardup_reconcile(
     # all-junk increment must contribute zero pairs, not abort the
     # job and lose every other increment's candidates.
     rel_schema = "doc_id long, batch long"
-    sig_schema = "doc_id long, band int, band_key string, ch string"
 
     # Lineage guard: a reused sig_path holding batch dirs from a
     # DIFFERENT release composition would contribute phantom pairs
@@ -640,7 +652,7 @@ def release_neardup_reconcile(
                 return set()
             raise
 
-    store_batches = _batch_ids(sig_path, f"{sig_schema}, sb long, batch long")
+    store_batches = _batch_ids(sig_path, f"{_SIG_FILE_SCHEMA}, batch long")
     if store_batches:
         release_batches = _batch_ids(release_path, rel_schema)
         foreign = store_batches - release_batches - set(ids)
@@ -698,7 +710,7 @@ def release_neardup_reconcile(
             f"{sig_path}/batch={b}",
             sig_buckets,
             shard_col="sb",
-            order_cols=("band", "band_key", "doc_id"),
+            order_cols=_SIG_ORDER,
         )
         # Probe UNCONDITIONALLY — "first increment of this call" is
         # not "first increment ever" (incremental callers pass only
@@ -706,7 +718,7 @@ def release_neardup_reconcile(
         # batch < b partition filter prunes to zero files and the
         # probe contributes nothing.
         own = (
-            spark.read.schema(f"{sig_schema}, sb long")
+            spark.read.schema(_SIG_FILE_SCHEMA)
             .parquet(f"{sig_path}/batch={b}")
             .select(
                 F.col("doc_id").alias("doc_b"),
@@ -716,7 +728,7 @@ def release_neardup_reconcile(
             )
         )
         store = (
-            spark.read.schema(f"{sig_schema}, sb long, batch long")
+            spark.read.schema(f"{_SIG_FILE_SCHEMA}, batch long")
             .parquet(sig_path)
             .filter(F.col("batch") < b)
             .select(
@@ -890,9 +902,7 @@ def release_retraction_apply(
         .groupBy("batch", "shard")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.countDistinct("source", "seq_id")
-            .cast("long")
-            .alias("n_seqs"),
+            _n_seqs("source", "seq_id"),
             F.sum("n_tokens").cast("long").alias("n_tokens"),
             x1.alias("x1"),
             x2.alias("x2"),
@@ -930,7 +940,7 @@ def release_retraction_apply(
             f"{release_path}/batch={b}",
             ("shard",),
             n_shards,
-            ("source", "seq_id", "doc_id"),
+            _RELEASE_ORDER,
             [
                 f"{release_path}/batch={b}/shard={int(r['shard'])}"
                 for r in rows
@@ -977,9 +987,7 @@ def release_retraction_apply(
             .groupBy("batch", "shard")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.countDistinct("source", "seq_id")
-                .cast("long")
-                .alias("n_seqs"),
+                _n_seqs("source", "seq_id"),
                 F.sum("n_tokens").cast("long").alias("n_tokens"),
                 x1.alias("x1"),
                 x2.alias("x2"),
@@ -1031,12 +1039,11 @@ def _purge_signature_store(
     caller never built) is skipped."""
     from iceberg_diag_spark.sources.sinks import rewrite_partitions
 
-    sig_schema = "doc_id long, band int, band_key string, ch string, sb long"
     for b in batches:
         ids = retract.filter(F.col("batch") == b).select("doc_id")
         try:
             dec = (
-                spark.read.schema(sig_schema)
+                spark.read.schema(_SIG_FILE_SCHEMA)
                 .parquet(f"{sig_path}/batch={b}")
                 .join(ids.withColumn("_hit", F.lit(True)), "doc_id", "left")
                 .groupBy("sb")
@@ -1055,7 +1062,7 @@ def _purge_signature_store(
             continue
         buckets = [int(r["sb"]) for r in hit_rows]
         kept = (
-            spark.read.schema(sig_schema)
+            spark.read.schema(_SIG_FILE_SCHEMA)
             .parquet(f"{sig_path}/batch={b}")
             .filter(F.col("sb").isin(buckets))
             .join(ids, "doc_id", "anti")
@@ -1067,7 +1074,7 @@ def _purge_signature_store(
             f"{sig_path}/batch={b}",
             ("sb",),
             sig_buckets,
-            ("band", "band_key", "doc_id"),
+            _SIG_ORDER,
             [
                 f"{sig_path}/batch={b}/sb={int(r['sb'])}"
                 for r in hit_rows

@@ -521,51 +521,18 @@ def crossmodal_dedup_agreement(
 
     Both pair relations are the production bucketed plans, ids-only
     on the wire (payloads and text never shuffle past their own
-    fingerprint stages); the comparison is one full outer join on
-    the ordered (doc_a, doc_b) pair key plus one global aggregate —
-    the same scale shape as dedup_method_agreement. Output (one
-    row): n_text, n_media, n_both, only_text, only_media, n_union,
-    overlap_ppm.
+    fingerprint stages); the comparison is dedup._pair_agreement,
+    shared with dedup_method_agreement. Output (one row): n_text,
+    n_media, n_both, only_text, only_media, n_union, overlap_ppm.
     """
     from iceberg_diag_spark.operators import dedup
 
     tx = dedup.minhash_candidate_pairs(
         docs, text_col=text_col, id_col=id_col
-    ).select("doc_a", "doc_b", F.lit(1).alias("__tx"))
+    )
     md = media_phash_near_dup(
         with_media(docs, text_col=text_col, id_col=id_col),
         max_hamming=max_hamming,
         id_col=id_col,
-    ).select("doc_a", "doc_b", F.lit(1).alias("__md"))
-    j = tx.join(md, ["doc_a", "doc_b"], "full_outer")
-    return j.agg(
-        F.sum(F.coalesce(F.col("__tx"), F.lit(0)))
-        .cast("long")
-        .alias("n_text"),
-        F.sum(F.coalesce(F.col("__md"), F.lit(0)))
-        .cast("long")
-        .alias("n_media"),
-        F.sum(
-            F.when(F.col("__tx").isNotNull() & F.col("__md").isNotNull(), 1)
-            .otherwise(0)
-        ).cast("long").alias("n_both"),
-        F.sum(
-            F.when(F.col("__tx").isNotNull() & F.col("__md").isNull(), 1)
-            .otherwise(0)
-        ).cast("long").alias("only_text"),
-        F.sum(
-            F.when(F.col("__tx").isNull() & F.col("__md").isNotNull(), 1)
-            .otherwise(0)
-        ).cast("long").alias("only_media"),
-        F.count(F.lit(1)).cast("long").alias("n_union"),
-    ).select(
-        "n_text",
-        "n_media",
-        "n_both",
-        "only_text",
-        "only_media",
-        "n_union",
-        F.expr(
-            "(1000000 * n_both) DIV greatest(n_union, 1)"
-        ).alias("overlap_ppm"),
     )
+    return dedup._pair_agreement(tx, md, "text", "media")

@@ -15,7 +15,7 @@ from iceberg_diag_spark.functions.parallel import (
     join_null_safe,
     materialize,
 )
-from iceberg_diag_spark.operators.dedup import normalized_text
+from iceberg_diag_spark.operators.dedup import normalized_text, word_ngram_rows
 
 # Tiny per-language stopword lists for the n-gram/stopword language
 # heuristic. Deliberately minimal — language ID here is a scoring
@@ -176,8 +176,6 @@ def rolling_fingerprint(
     Hot-path shape: exploded codegen shingles + min-aggregate (one
     shuffle, map-side combine), not interpreted array transforms;
     a left join reattaches docs too short to shingle ('')."""
-    from iceberg_diag_spark.operators.dedup import word_ngram_rows
-
     grams = word_ngram_rows(docs, text_col, id_col, window)
     fp = grams.groupBy(id_col).agg(
         F.min(F.substring(F.md5("gram"), 1, 16)).alias("__fp")
@@ -586,6 +584,119 @@ def line_dedup(
     )
 
 
+def _doc_sum(
+    rows: DataFrame,
+    scored: DataFrame,
+    key: str,
+    id_col: str,
+    score: str,
+    n_name: str,
+    sum_name: str,
+) -> DataFrame:
+    """The per-document score sum every corpus-LM scorer ends in:
+    occurrence `rows` join the per-`key` integer `score` of `scored`
+    (AQE broadcasts the vocabulary side when it fits), then one hash
+    aggregate on the id counts the occurrences and sums the scores as
+    exact integers. Output: (id_col, n_name, sum_name). The average
+    stays with the caller: the scorers round it differently."""
+    return (
+        rows.join(scored, key)
+        .groupBy(id_col)
+        .agg(
+            F.count(F.lit(1)).cast("long").alias(n_name),
+            F.sum(score).cast("long").alias(sum_name),
+        )
+    )
+
+
+def _bigram_table(
+    docs: DataFrame, text_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The corpus bigram statistics, built once for every bigram
+    scorer: (rows, table, left, right, total).
+
+      rows   (id_col, gram) occurrences off the codegen shingle path
+             (dedup.word_ngram_rows, n=2) — no shuffle, no sort;
+      table  (gram, c2, w1, w2): c(w1 w2) per distinct bigram, pinned;
+      left   (w1, c1w, n1p_w1): Σ c2 and the distinct bigrams per w1;
+      right  (w2, c2w, n1p_w2): Σ c2 and the distinct bigrams per w2;
+      total  one row (n_total, ntot): Σ c2 and the distinct bigrams.
+
+    Every marginal is an exact re-aggregation of the vocab²-bounded
+    table, so the corpus gram pass runs once however many marginals a
+    caller joins (Spark reuses no exchange across join branches of
+    one plan); Catalyst prunes the aggregates a caller never reads.
+    Docs with fewer than two tokens emit no bigrams.
+    """
+    rows = word_ngram_rows(docs, text_col, id_col, n=2)
+    # get() instead of [i]: Catalyst may move this projection below
+    # the shingle source's last-position filter, and under ANSI an
+    # indexed access explodes on the one-token gram a filtered-out
+    # row still carries (the inferred-predicate gotcha); get()
+    # returns NULL there and the row never survives anyway
+    table = materialize(
+        rows.groupBy("gram")
+        .agg(F.count(F.lit(1)).alias("c2"))
+        .select(
+            "gram",
+            "c2",
+            F.expr("get(split(gram, ' '), 0)").alias("w1"),
+            F.expr("get(split(gram, ' '), 1)").alias("w2"),
+        )
+    )
+    left = table.groupBy("w1").agg(
+        F.sum("c2").alias("c1w"), F.count(F.lit(1)).alias("n1p_w1")
+    )
+    right = table.groupBy("w2").agg(
+        F.sum("c2").alias("c2w"), F.count(F.lit(1)).alias("n1p_w2")
+    )
+    total = table.agg(
+        F.sum("c2").alias("n_total"), F.count(F.lit(1)).alias("ntot")
+    )
+    return rows, table, left, right, total
+
+
+# Interpolated Kneser-Ney P(w2|w1) in ppm of an observed bigram, over
+# the _bigram_table columns joined on one row (bigram_kneser_ney
+# derives the integer form).
+_KN_SEEN_PPM = (
+    "CAST(1000000 * (4 * c2 - 3) DIV (4 * c1w)"
+    " + CAST(3000000 AS DECIMAL(38,0)) * n1p_w1 * n1p_w2"
+    "   DIV (CAST(4 AS DECIMAL(38,0)) * c1w * ntot)"
+    " AS BIGINT)"
+)
+
+
+def _token_counts(docs: DataFrame, text_col: str) -> DataFrame:
+    """(token, cnt): the corpus's non-empty token counts — one
+    tokenize+explode scan into a token hash aggregate (map-side
+    partial combine absorbs the heavy hitters)."""
+    return (
+        ensure_parallelism(docs)
+        .select(F.explode(tokens(F.col(text_col))).alias("token"))
+        .filter(F.col("token") != "")
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+
+
+def _zipf_head(counts: DataFrame, k: int) -> DataFrame:
+    """(rank, token, cnt): the Zipf head, the top-k rows of
+    `counts` by (cnt desc, token asc) — TakeOrderedAndProject, never
+    a vocabulary sort — ranked by a row_number over the k
+    survivors."""
+    from pyspark.sql import Window
+
+    w = Window.orderBy(F.desc("cnt"), F.asc("token"))
+    return (
+        counts.orderBy(F.desc("cnt"), F.asc("token"))
+        .limit(k)
+        .select(
+            F.row_number().over(w).cast("long").alias("rank"), "token", "cnt"
+        )
+    )
+
+
 def unigram_logprob(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -597,12 +708,11 @@ def unigram_logprob(
 
     Two aggregation passes: corpus unigram counts (vocabulary-sized
     relation), the corpus total carried back as a broadcast single-row
-    scalar, then tokens re-join the scored vocabulary (AQE broadcasts
-    the vocab side when it fits) and sum per document. Per-token NLL
-    is floor-quantized to micro-nats BEFORE summation so the per-doc
-    sums are exact integer arithmetic — immune to float summation
-    order on both engines. Output: (doc_id, n_tokens, sum_nll_micro,
-    avg_nll_micro).
+    scalar, then tokens re-join the scored vocabulary and sum per
+    document (_doc_sum). Per-token NLL is floor-quantized to
+    micro-nats BEFORE summation so the per-doc sums are exact integer
+    arithmetic — immune to float summation order on both engines.
+    Output: (doc_id, n_tokens, sum_nll_micro, avg_nll_micro).
     """
     toks = ensure_parallelism(docs).select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term")
@@ -620,17 +730,11 @@ def unigram_logprob(
         .cast("long")
         .alias("nll_micro"),
     )
-    return (
-        toks.join(scored, "term")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.sum("nll_micro").cast("long").alias("sum_nll_micro"),
-        )
-        .withColumn(
-            "avg_nll_micro",
-            (F.col("sum_nll_micro") / F.col("n_tokens")).cast("long"),
-        )
+    return _doc_sum(
+        toks, scored, "term", id_col, "nll_micro", "n_tokens", "sum_nll_micro"
+    ).withColumn(
+        "avg_nll_micro",
+        (F.col("sum_nll_micro") / F.col("n_tokens")).cast("long"),
     )
 
 
@@ -643,55 +747,29 @@ def bigram_logprob(
     (c(w1 w2) / c(w1 ·)). Catches locally-incoherent text (word-salad
     with plausible unigram stats) that the unigram proxy misses.
 
-    Bigram positions come from the codegen shingle path
-    (dedup.word_ngram_rows, n=2); corpus bigram and left-context
-    counts are two hash aggregates on uniform keys; per-position NLL
-    is floor-quantized to micro-nats before the exact integer per-doc
-    sums. Docs with fewer than two tokens emit no bigrams and are
-    absent from the output (same contract as the shingle source).
-    Output: (doc_id, n_bigrams, sum_nll_micro, avg_nll_micro).
+    Bigram occurrences, the pinned bigram counts and the left-context
+    counts c(w1 ·) = Σ c2 are the shared _bigram_table; per-position
+    NLL is floor-quantized to micro-nats before the exact integer
+    per-doc sums (_doc_sum). Docs with fewer than two tokens emit no
+    bigrams and are absent from the output (same contract as the
+    shingle source). Output: (doc_id, n_bigrams, sum_nll_micro,
+    avg_nll_micro).
     """
-    from iceberg_diag_spark.operators.dedup import word_ngram_rows
-
-    bg = word_ngram_rows(docs, text_col, id_col, n=2)
-    # pinned vocabulary-scale bigram counts; the left-context counts
-    # DERIVE from them (c1(w1) = Σ c2 over grams starting with w1 —
-    # every bigram position contributes to exactly one left count),
-    # so the corpus gram pass runs once here instead of once per
-    # count relation
-    c2 = materialize(
-        bg.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("c2"))
-    )
-    c1 = (
-        c2.select(F.split(F.col("gram"), " ")[0].alias("w1"), "c2")
-        .groupBy("w1")
-        .agg(F.sum("c2").alias("c1"))
-    )
-    scored = (
-        c2.withColumn("w1", F.split(F.col("gram"), " ")[0])
-        .join(c1, "w1")
-        .select(
-            "gram",
-            F.floor(
-                -F.log(F.col("c2").cast("double") / F.col("c1"))
-                * F.lit(1_000_000.0)
-            )
-            .cast("long")
-            .alias("nll_micro"),
+    bg, table, left, _, _ = _bigram_table(docs, text_col, id_col)
+    scored = table.join(left, "w1").select(
+        "gram",
+        F.floor(
+            -F.log(F.col("c2").cast("double") / F.col("c1w"))
+            * F.lit(1_000_000.0)
         )
+        .cast("long")
+        .alias("nll_micro"),
     )
-    return (
-        bg.join(scored, "gram")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.sum("nll_micro").cast("long").alias("sum_nll_micro"),
-        )
-        .withColumn(
-            "avg_nll_micro",
-            (F.col("sum_nll_micro") / F.col("n_bigrams")).cast("long"),
-        )
+    return _doc_sum(
+        bg, scored, "gram", id_col, "nll_micro", "n_bigrams", "sum_nll_micro"
+    ).withColumn(
+        "avg_nll_micro",
+        (F.col("sum_nll_micro") / F.col("n_bigrams")).cast("long"),
     )
 
 
@@ -719,7 +797,7 @@ def dsir_logratio(
 
     Two hash aggregates (conditional counts in one vocabulary pass +
     three broadcast scalars), one re-join of tokens to the scored
-    vocabulary. Output: (doc_id, n_tokens, sum_lr_micro,
+    vocabulary (_doc_sum). Output: (doc_id, n_tokens, sum_lr_micro,
     avg_lr_micro).
     """
     toks = ensure_parallelism(docs).select(
@@ -751,19 +829,13 @@ def dsir_logratio(
         .cast("long")
         .alias("lr_micro"),
     )
-    return (
-        toks.join(scored, "term")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.sum("lr_micro").cast("long").alias("sum_lr_micro"),
-        )
-        .withColumn(
-            "avg_lr_micro",
-            F.floor(
-                F.col("sum_lr_micro").cast("double") / F.col("n_tokens")
-            ).cast("long"),
-        )
+    return _doc_sum(
+        toks, scored, "term", id_col, "lr_micro", "n_tokens", "sum_lr_micro"
+    ).withColumn(
+        "avg_lr_micro",
+        F.floor(
+            F.col("sum_lr_micro").cast("double") / F.col("n_tokens")
+        ).cast("long"),
     )
 
 
@@ -1899,7 +1971,10 @@ def template_clusters(
         .groupBy("template_md5")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.countDistinct("source").cast("long").alias("n_sources"),
+            # a struct is never NULL: NULL-source docs are one source
+            F.countDistinct(F.struct("source"))
+            .cast("long")
+            .alias("n_sources"),
             F.min(id_col).cast("long").alias("example_doc_id"),
             F.sum("n_chars").cast("long").alias("total_chars"),
         )
@@ -2163,6 +2238,47 @@ def bpe_merge_candidates(
     )
 
 
+def _rule_battery(
+    docs: DataFrame,
+    rules: dict[str, Column],
+    source_col: str,
+    sums: dict[str, Column] | None = None,
+) -> DataFrame:
+    """Per-source pass counts of a document rule battery: each doc is
+    flagged r_<rule> per rule and r_all (every rule passes) in one
+    row-local projection, then ONE map-side-combined aggregate reduces
+    to the |sources| relation. `sums` names per-doc counts summed per
+    source next to the passes. Output: (source, n_docs,
+    n_pass_<rule>…, n_pass_all, <sums>…, pass_all_ppm)."""
+    sums = sums or {}
+    flagged = ensure_parallelism(docs).select(
+        F.col(source_col).alias("source"),
+        *[c.cast("long").alias(f"__{k}") for k, c in sums.items()],
+        *[c.alias(f"r_{k}") for k, c in rules.items()],
+    )
+    all_pass = F.lit(True)
+    for k in rules:
+        all_pass = all_pass & F.col(f"r_{k}")
+    return (
+        flagged.withColumn("r_all", all_pass)
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            *[
+                F.sum(F.col(f"r_{k}").cast("long"))
+                .cast("long")
+                .alias(f"n_pass_{k}")
+                for k in [*rules, "all"]
+            ],
+            *[F.sum(f"__{k}").cast("long").alias(k) for k in sums],
+        )
+        .withColumn(
+            "pass_all_ppm",
+            F.expr("1000000 * n_pass_all DIV n_docs").cast("long"),
+        )
+    )
+
+
 # The 8-word stopword panel Gopher's "has ≥2 stop words" rule checks
 # (Rae et al. 2021, §A1.1) — deliberately NOT the full STOPWORDS list.
 GOPHER_STOP_PANEL = ("the", "be", "to", "of", "and", "that", "have", "with")
@@ -2189,10 +2305,11 @@ def gopher_rules_audit(
 
     Scale: every rule is a row-local projection over ONE corpus scan
     (token array built once and shared), then one map-side-combined
-    aggregate to the |sources| relation — the expectations_audit
-    shape. Output per source: (source, n_docs, n_pass_word_count,
-    n_pass_mean_word_len, n_pass_alpha_words, n_pass_stop_panel,
-    n_pass_dup_trigrams, n_pass_all, pass_all_ppm).
+    aggregate to the |sources| relation (_rule_battery) — the
+    expectations_audit shape. Output per source: (source, n_docs,
+    n_pass_word_count, n_pass_mean_word_len, n_pass_alpha_words,
+    n_pass_stop_panel, n_pass_dup_trigrams, n_pass_all,
+    pass_all_ppm).
     """
     t = tokens(F.col(text_col))
     n = F.size(t)
@@ -2214,33 +2331,7 @@ def gopher_rules_audit(
         "stop_panel": panel_hits >= 2,
         "dup_trigrams": dup_tri * 10 <= F.size(tri) * 3,
     }
-    flagged = ensure_parallelism(docs).select(
-        F.col(source_col).alias("source"),
-        *[c.alias(f"r_{k}") for k, c in rules.items()],
-    )
-    all_pass = F.lit(True)
-    for k in rules:
-        all_pass = all_pass & F.col(f"r_{k}")
-    return (
-        flagged.withColumn("r_all", all_pass)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            *[
-                F.sum(F.col(f"r_{k}").cast("long"))
-                .cast("long")
-                .alias(f"n_pass_{k}")
-                for k in rules
-            ],
-            F.sum(F.col("r_all").cast("long")).cast("long").alias(
-                "n_pass_all"
-            ),
-        )
-        .withColumn(
-            "pass_all_ppm",
-            F.expr("1000000 * n_pass_all DIV n_docs").cast("long"),
-        )
-    )
+    return _rule_battery(docs, rules, source_col)
 
 
 # Stand-in for C4's bad-word list (the published pipeline uses the
@@ -2274,11 +2365,12 @@ def c4_rules_audit(
 
     Scale: the line array and every rule are row-local projections on
     ONE corpus scan, then one map-side-combined aggregate to the
-    |sources| relation (the gopher_rules_audit shape). Output per
-    source: (source, n_docs, n_pass_min_sentences, n_pass_line_punct,
-    n_pass_line_words, n_pass_no_lorem, n_pass_no_brace,
-    n_pass_no_badwords, n_pass_all, pass_all_ppm, lines_total,
-    lines_kept, line_keep_ppm).
+    |sources| relation (_rule_battery, shared with
+    gopher_rules_audit). Output per source: (source, n_docs,
+    n_pass_min_sentences, n_pass_line_punct, n_pass_line_words,
+    n_pass_no_lorem, n_pass_no_brace, n_pass_no_badwords,
+    n_pass_all, lines_total, lines_kept, pass_all_ppm,
+    line_keep_ppm).
     """
     t = tokens(F.col(text_col))
     low = F.lower(F.col(text_col))
@@ -2309,40 +2401,11 @@ def c4_rules_audit(
         "no_brace": ~F.col(text_col).contains("{"),
         "no_badwords": F.size(F.array_intersect(t, panel)) == 0,
     }
-    flagged = ensure_parallelism(docs).select(
-        F.col(source_col).alias("source"),
-        n_lines.cast("long").alias("n_lines"),
-        n_kept.cast("long").alias("n_kept"),
-        *[c.alias(f"r_{k}") for k, c in rules.items()],
-    )
-    all_pass = F.lit(True)
-    for k in rules:
-        all_pass = all_pass & F.col(f"r_{k}")
-    return (
-        flagged.withColumn("r_all", all_pass)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            *[
-                F.sum(F.col(f"r_{k}").cast("long"))
-                .cast("long")
-                .alias(f"n_pass_{k}")
-                for k in rules
-            ],
-            F.sum(F.col("r_all").cast("long")).cast("long").alias(
-                "n_pass_all"
-            ),
-            F.sum("n_lines").cast("long").alias("lines_total"),
-            F.sum("n_kept").cast("long").alias("lines_kept"),
-        )
-        .withColumn(
-            "pass_all_ppm",
-            F.expr("1000000 * n_pass_all DIV n_docs").cast("long"),
-        )
-        .withColumn(
-            "line_keep_ppm",
-            F.expr("1000000 * lines_kept DIV lines_total").cast("long"),
-        )
+    return _rule_battery(
+        docs, rules, source_col, {"lines_total": n_lines, "lines_kept": n_kept}
+    ).withColumn(
+        "line_keep_ppm",
+        F.expr("1000000 * lines_kept DIV lines_total").cast("long"),
     )
 
 
@@ -2922,8 +2985,8 @@ def zipf_fit_audit(
     ln(rank) over the top-k vocabulary — the one-number "is this
     corpus natural language or template spam" audit (natural text
     fits slope ≈ −1; machine-generated / boilerplate corpora flatten
-    or step). Consumes the same top-k head token_zipf_curve renders,
-    adding the regression the curve only eyeballs.
+    or step). Consumes the Zipf head token_zipf_curve renders
+    (_zipf_head), adding the regression the curve only eyeballs.
 
     Integer-exact determinism: x = ⌊ln(rank)·10⁶⌋ and
     y = ⌊ln(count)·10⁶⌋ floor ONCE per term, then all regression
@@ -2936,29 +2999,15 @@ def zipf_fit_audit(
     (n·Σx² − (Σx)²); intercept_micro follows from the floored slope
     and the exact sums.
 
-    Scale: one tokenize+explode scan into the token hash aggregate,
-    TakeOrderedAndProject for the global top-k (map-side partial
-    top-k, never a vocab sort), then a k-row bounded window and one
+    Scale: one tokenize+explode scan into the token hash aggregate
+    (_token_counts), the top-k head (_zipf_head: map-side partial
+    top-k, never a vocab sort, a k-row bounded window), then one
     1-row aggregate. Output (one row): (n_terms, zipf_slope_micro,
     intercept_micro).
     """
-    from pyspark.sql.window import Window
-
     c_flip = 64_000_000  # > ln(2^63)·1e6 — any int64 count flips positive
-    counts = (
-        ensure_parallelism(docs)
-        .select(F.explode(tokens(F.col(text_col))).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("tok"))
-        .limit(k)
-    )
-    w = Window.orderBy(F.desc("cnt"), F.asc("tok"))  # bounded: k rows
-    xy = counts.select(
-        F.row_number().over(w).alias("rnk"), "cnt"
-    ).select(
-        F.floor(F.log(F.col("rnk").cast("double")) * 1e6)
+    xy = _zipf_head(_token_counts(docs, text_col), k).select(
+        F.floor(F.log(F.col("rank").cast("double")) * 1e6)
         .cast("decimal(38,0)")
         .alias("x"),
         F.floor(F.log(F.col("cnt").cast("double")) * 1e6)
@@ -3132,73 +3181,31 @@ def pmi_collocations(
     realistic scale. min_count prunes the hapax tail BEFORE
     scoring, so the join and sort see only the frequent vocabulary.
 
-    Distributed shape: bigram pairs come straight off the codegen
-    posexplode + lead() path as TWO COLUMNS — no concat-then-split
-    round trip (reparsing the joined gram also trips ANSI array
-    indexing when Catalyst infers join-key not-null predicates that
-    evaluate `split(gram)[1]` below the end-of-doc filter); ONE
-    corpus-scale hash aggregate builds the unfiltered pair-count
-    relation (vocab²-bounded), which is checkpointed and
-    re-aggregated for both marginals and the total — the corpus is
-    scanned, tokenized and window-sorted exactly once; two
-    vocab-sized equi-joins (AQE broadcasts them when the vocabulary
-    is small); the final top-N is (pmi desc, pair asc) + limit ⇒
-    TakeOrderedAndProject, never a global sort.
+    Distributed shape: the pair counts and all three marginals are
+    the shared _bigram_table (one corpus pass, checkpointed pair
+    table, exact re-aggregations); two vocab-sized equi-joins (AQE
+    broadcasts them when the vocabulary is small); the final top-N is
+    (pmi desc, pair asc) + limit ⇒ TakeOrderedAndProject, never a
+    global sort.
     Output: (w1, w2, n_pair, pmi_micro).
     """
-    from pyspark.sql import Window
-
-    from iceberg_diag_spark.operators.dedup import normalized_text
-
-    toks = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.posexplode(F.split(normalized_text(F.col(text_col)), " ")).alias(
-            "pos", "tok"
-        ),
-    )
-    w = Window.partitionBy(id_col).orderBy("pos")
-    bg = (
-        toks.select(
-            F.col("tok").alias("w1"),
-            F.lead("tok").over(w).alias("w2"),
-        )
-        .filter(F.col("w2").isNotNull())
-    )
-    # ONE corpus pass: the unfiltered pair-count relation is bounded
-    # by vocab² (≪ corpus volume) and every marginal is an exact
-    # re-aggregation of it — c_a = Σ_b c_ab, c_b = Σ_a c_ab,
-    # N = Σ c_ab. Materialize it once so the four
-    # consumers don't each replay the tokenize+window subplan: Spark
-    # reuses no exchange across join branches of one plan.
-    pair_counts = bg.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pair")
-    )
-    pair_counts = materialize(pair_counts)
-    pairs = pair_counts.filter(F.col("n_pair") >= min_count)
-    left = pair_counts.groupBy("w1").agg(
-        F.sum("n_pair").cast("long").alias("c_a")
-    )
-    right = pair_counts.groupBy("w2").agg(
-        F.sum("n_pair").cast("long").alias("c_b")
-    )
-    total = pair_counts.agg(
-        F.sum("n_pair").cast("long").alias("n_total")
-    )
+    _, table, left, right, total = _bigram_table(docs, text_col, id_col)
     return (
-        pairs.join(left, "w1")
+        table.filter(F.col("c2") >= min_count)
+        .join(left, "w1")
         .join(right, "w2")
         .crossJoin(F.broadcast(total))
         .select(
             "w1",
             "w2",
-            "n_pair",
+            F.col("c2").cast("long").alias("n_pair"),
             F.floor(
                 F.lit(1_000_000.0)
                 * (
-                    F.log(F.col("n_pair").cast("double"))
+                    F.log(F.col("c2").cast("double"))
                     + F.log(F.col("n_total").cast("double"))
-                    - F.log(F.col("c_a").cast("double"))
-                    - F.log(F.col("c_b").cast("double"))
+                    - F.log(F.col("c1w").cast("double"))
+                    - F.log(F.col("c2w").cast("double"))
                 )
             )
             .cast("long")
@@ -3539,10 +3546,11 @@ def token_zipf_curve(
     stopword lists and sets BPE vocab expectations.
 
     100 TB shape: one tokenize+explode scan into a (token) hash
-    aggregate (map-side partial combine absorbs the heavy hitters —
-    exactly the keys that matter here), then TakeOrderedAndProject
-    for the global top-k: per-partition partial top-k, k·p-row merge
-    on the driver side of the exchange, never a full vocab sort. The
+    aggregate (_token_counts; map-side partial combine absorbs the
+    heavy hitters — exactly the keys that matter here), then the
+    Zipf head (_zipf_head), TakeOrderedAndProject for the global
+    top-k: per-partition partial top-k, k·p-row merge on the driver
+    side of the exchange, never a full vocab sort. The
     corpus total re-aggregates the vocab-size counts relation (NOT
     the corpus): counts is materialized so the tokenize scan
     runs once — vocab is orders of magnitude smaller than the
@@ -3550,26 +3558,15 @@ def token_zipf_curve(
     materializing shared subplans). The rank/cumsum window runs over
     the k survivors only.
     """
-    from pyspark.sql import Window
-
-    counts = materialize(
-        ensure_parallelism(docs)
-        .select(
-            F.explode(tokens(F.col(text_col))).alias("token")
-        )
-        .filter(F.col("token") != "")
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
+    counts = materialize(_token_counts(docs, text_col))
     total = counts.agg(
         F.sum("cnt").cast("decimal(38,0)").alias("__total")
     )
-    top = counts.orderBy(F.desc("cnt"), F.asc("token")).limit(k)
-    w = Window.orderBy(F.desc("cnt"), F.asc("token"))
     return (
-        top.crossJoin(F.broadcast(total))
+        _zipf_head(counts, k)
+        .crossJoin(F.broadcast(total))
         .select(
-            F.row_number().over(w).cast("long").alias("rank"),
+            "rank",
             "token",
             "cnt",
             F.expr(
@@ -3578,7 +3575,7 @@ def token_zipf_curve(
             ).alias("share_ppm"),
             F.expr(
                 "cast((sum(cast(cnt as decimal(38,0)))"
-                " over (order by cnt desc, token asc) * 1000000)"
+                " over (order by rank) * 1000000)"
                 " DIV __total as long)"
             ).alias("cum_share_ppm"),
         )
@@ -3779,42 +3776,20 @@ def bigram_kneser_ney(
     second in DECIMAL(38,0) (vocabulary-squared numerators pass
     int64 around |V| ≈ 10⁵·√3). Deterministic both engines.
 
-    Scale: bigram and context counts are hash aggregates on uniform
-    keys off the codegen shingle path; the distinct-bigram total is
-    a broadcast 1-row scalar; output is the top_k bigram rows by
-    count (TakeOrderedAndProject — map-side partial top-k, count
-    then gram as the deterministic tie-break).
+    Scale: bigram, context and continuation counts are the shared
+    _bigram_table (hash aggregates on uniform keys off the codegen
+    shingle path); the distinct-bigram total is a broadcast 1-row
+    scalar; output is the top_k bigram rows by count
+    (TakeOrderedAndProject — map-side partial top-k, count then gram
+    as the deterministic tie-break).
 
     Output: (gram, n_pair, n_left_total, mle_ppm, kn_ppm).
     """
-    from iceberg_diag_spark.operators.dedup import word_ngram_rows
-
-    bg = word_ngram_rows(docs, text_col, id_col, n=2)
-    c2 = bg.groupBy("gram").agg(F.count(F.lit(1)).alias("c2"))
-    # get() instead of [i]: Catalyst reorders this deterministic
-    # projection below the shingle source's last-position filter, so
-    # under ANSI an indexed access explodes on the one-token gram a
-    # filtered-out row still carries (the documented inferred-
-    # predicate gotcha); get() returns NULL there and the row never
-    # survives anyway
-    # four consumers (left context agg, right continuation agg,
-    # distinct-bigram total, final join spine)
-    c2 = materialize(c2.select(
-        "gram",
-        "c2",
-        F.expr("get(split(gram, ' '), 0)").alias("w1"),
-        F.expr("get(split(gram, ' '), 1)").alias("w2"),
-    ))
-    left = c2.groupBy("w1").agg(
-        F.sum("c2").alias("c1w"),
-        F.count(F.lit(1)).alias("n1p_w1"),
-    )
-    right = c2.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p_w2"))
-    ntot = c2.agg(F.count(F.lit(1)).alias("ntot"))
+    _, table, left, right, total = _bigram_table(docs, text_col, id_col)
     return (
-        c2.join(left, "w1")
+        table.join(left, "w1")
         .join(right, "w2")
-        .join(F.broadcast(ntot))
+        .join(F.broadcast(total))
         .select(
             "gram",
             F.col("c2").cast("long").alias("n_pair"),
@@ -3822,12 +3797,7 @@ def bigram_kneser_ney(
             F.expr("CAST(1000000 * c2 DIV c1w AS BIGINT)").alias(
                 "mle_ppm"
             ),
-            F.expr(
-                "CAST(1000000 * (4 * c2 - 3) DIV (4 * c1w)"
-                " + CAST(3000000 AS DECIMAL(38,0)) * n1p_w1 * n1p_w2"
-                "   DIV (CAST(4 AS DECIMAL(38,0)) * c1w * ntot)"
-                " AS BIGINT)"
-            ).alias("kn_ppm"),
+            F.expr(_KN_SEEN_PPM).alias("kn_ppm"),
         )
         .orderBy(F.desc("n_pair"), F.asc("gram"))
         .limit(top_k)
@@ -3852,56 +3822,35 @@ def doc_kn_nll(
 
     Per-bigram probability, all in ppm:
       seen  (corpus count ≥ min_pair): the bigram_kneser_ney P_KN
-             (d = 3/4 discount + continuation interpolation);
+             (_KN_SEEN_PPM: d = 3/4 discount + continuation
+             interpolation);
       unseen (pruned): the discounted continuation-unigram backoff
              d·P_cont(w2) = (3·N1+(·w2)) / (4·N1+(··)),
     floored at 1 ppm so ln never sees zero. Because the table is
     trained on the scored corpus itself, "in the table" is exactly
     "corpus count ≥ min_pair" — the CASE needs no membership join.
 
-    Scale: bigram and context counts are the bigram_kneser_ney hash
-    aggregates (uniform keys, map-side combine); per-distinct-gram
-    scores are computed once and joined back to the (doc, gram)
-    occurrence relation on the uniform gram key — the bigram_logprob
-    shuffle shape, linear in corpus tokens. NLL floors once per
+    Scale: bigram and context counts are the shared _bigram_table
+    (uniform keys, map-side combine); per-distinct-gram scores are
+    computed once and joined back to the (doc, gram) occurrence
+    relation on the uniform gram key (_doc_sum), linear in corpus
+    tokens. NLL floors once per
     position to micro-nats; per-doc sums and the DIV average are
     exact integers. Docs with fewer than two tokens emit no bigrams
     and are absent (shingle-source contract).
 
     Output: (doc_id, source, n_bigrams, nll_micro, avg_nll_micro).
     """
-    from iceberg_diag_spark.operators.dedup import word_ngram_rows
-
-    bg = word_ngram_rows(docs, text_col, id_col, n=2)
-    c2 = bg.groupBy("gram").agg(F.count(F.lit(1)).alias("c2"))
-    # get() not [i]: the inferred-not-null reorder gotcha (see
-    # bigram_kneser_ney)
-    c2 = c2.select(
-        "gram",
-        "c2",
-        F.expr("get(split(gram, ' '), 0)").alias("w1"),
-        F.expr("get(split(gram, ' '), 1)").alias("w2"),
-    )
-    # four consumers (left/right/ntot/scores)
-    c2 = materialize(c2)
-    left = c2.groupBy("w1").agg(
-        F.sum("c2").alias("c1w"),
-        F.count(F.lit(1)).alias("n1p_w1"),
-    )
-    right = c2.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p_w2"))
-    ntot = c2.agg(F.count(F.lit(1)).alias("ntot"))
+    bg, table, left, right, total = _bigram_table(docs, text_col, id_col)
     gram_scores = (
-        c2.join(left, "w1")
+        table.join(left, "w1")
         .join(right, "w2")
-        .join(F.broadcast(ntot))
+        .join(F.broadcast(total))
         .select(
             "gram",
             F.expr(
                 f"greatest(CAST(1 AS BIGINT), CASE WHEN c2 >= {min_pair}"
-                " THEN CAST(1000000 * (4 * c2 - 3) DIV (4 * c1w)"
-                "   + CAST(3000000 AS DECIMAL(38,0)) * n1p_w1 * n1p_w2"
-                "     DIV (CAST(4 AS DECIMAL(38,0)) * c1w * ntot)"
-                "   AS BIGINT)"
+                f" THEN {_KN_SEEN_PPM}"
                 " ELSE CAST(3000000 * n1p_w2 DIV (4 * ntot) AS BIGINT)"
                 " END)"
             ).alias("p_ppm"),
@@ -3916,13 +3865,8 @@ def doc_kn_nll(
             .alias("nll_micro"),
         )
     )
-    per_doc = (
-        bg.join(gram_scores, "gram")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.sum("nll_micro").cast("long").alias("nll_micro"),
-        )
+    per_doc = _doc_sum(
+        bg, gram_scores, "gram", id_col, "nll_micro", "n_bigrams", "nll_micro"
     )
     return (
         per_doc.join(

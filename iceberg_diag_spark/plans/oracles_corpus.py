@@ -1591,8 +1591,8 @@ def _release_neardup_reconcile(spark, sf_dir):
 # the pack recursion's boundaries (pbounds srn ranges in row-number
 # space), the same fit-before-append partition the engine's
 # pack_assign_from_counts computes, so counting distinct
-# (shard, source, gid) among survivors equals the engine's
-# countDistinct(shard, source, seq_id) over the rewritten files.
+# (shard, source, gid) among survivors equals the engine's per-shard
+# count of distinct (source, seq_id) structs over the rewritten files.
 
 # The release pdata form (shard = md5 bucket % RELEASE_N_SHARDS=8 —
 # sampling.hash_bucket's parse, identical to _RELEASE_MANIFEST_SQL).

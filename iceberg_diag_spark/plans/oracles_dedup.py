@@ -1334,7 +1334,7 @@ WITH pre AS (
 )
 SELECT template_md5,
        CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
+       CAST(count(DISTINCT row(source)) AS BIGINT) AS n_sources,
        CAST(min(doc_id) AS BIGINT) AS example_doc_id,
        CAST(sum(n_chars) AS BIGINT) AS total_chars
 FROM pre

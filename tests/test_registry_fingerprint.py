@@ -9,7 +9,7 @@ import hashlib
 
 from iceberg_diag_spark.plans.registry import REGISTRY
 
-FINGERPRINT = "e7daadb40f6f36ab29b5475bec5794c1c8d83c4a970ca2217fee084efe705c28"
+FINGERPRINT = "ce29316856a432c11ba434d80a2a8f53942268214578b72b172e6ea58f935a35"
 
 
 def registry_fingerprint() -> str:

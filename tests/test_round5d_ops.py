@@ -196,6 +196,25 @@ def test_source_length_ks_null_source_in_range(spark):
 
     _null_source_metamorphic(spark, source_length_ks, "~null")
 
+
+def test_template_clusters_count_null_source_once(spark):
+    """A cluster of NULL-source docs has one source: a countDistinct
+    on the source skips NULL and reports 0."""
+    from iceberg_diag_spark.operators.textops import template_clusters
+
+    def rows(null_as):
+        return sorted(
+            tuple(r)
+            for r in template_clusters(
+                _null_source_docs(spark, null_as)
+            ).collect()
+        )
+
+    got = rows(None)
+    assert got
+    assert got == rows("~null")
+
+
 def test_disorder_audit_known_lateness(spark):
     import datetime
 

@@ -5,6 +5,9 @@ with hand-computable (or brute-force Python) expectations."""
 from __future__ import annotations
 
 import math
+import re
+
+import pytest
 
 
 def test_bm25_topk_matches_python_reference(spark):
@@ -146,24 +149,51 @@ def test_k_anonymity_audit_counts(spark):
     assert got[10]["records_at_risk"] == 8
 
 
-def test_pmi_collocations_matches_python_reference(spark):
+_PMI_DOCS = [
+    (0, "a b a b a b c d"),
+    (1, "a b c a b"),
+    (2, "d c d c"),
+    (3, "x"),  # single token -> no bigrams
+]
+
+# Texts whose normalized form leaves empty tokens at the ends (a
+# newline is not trimmed, it becomes a space), empty, NULL, tab runs
+# with upper case and a single token.
+_PMI_EDGE_DOCS = [
+    (0, "\nAlpha beta"),
+    (1, "alpha BETA\n"),
+    (2, "\n"),
+    (3, ""),
+    (4, None),
+    (5, "Gamma\t\tDelta \t ALPHA\tbeta"),
+    (6, "solo"),
+    (7, "  alpha beta  "),
+    (8, "x\n\ny\n"),
+    (9, "\n\tgamma"),
+]
+
+
+@pytest.mark.parametrize(
+    "docs, min_count", [(_PMI_DOCS, 2), (_PMI_EDGE_DOCS, 1)],
+    ids=["plain", "edge_text"],
+)
+def test_pmi_collocations_matches_python_reference(spark, docs, min_count):
     from iceberg_diag_spark.operators.textops import pmi_collocations
 
-    docs = [
-        (0, "a b a b a b c d"),
-        (1, "a b c a b"),
-        (2, "d c d c"),
-        (3, "x"),  # single token -> no bigrams
-    ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         (r["w1"], r["w2"]): (r["n_pair"], r["pmi_micro"])
-        for r in pmi_collocations(df, min_count=2, top_n=100).collect()
+        for r in pmi_collocations(
+            df, min_count=min_count, top_n=100
+        ).collect()
     }
-    # python reference over the same bigram event stream
+    # python reference over the same bigram event stream, tokens from
+    # normalized_text: lower, strip spaces only, collapse \s+
     bigrams = []
     for _, t in docs:
-        ts = t.split(" ")
+        if t is None:
+            continue
+        ts = re.sub(r"\s+", " ", t.lower().strip(" ")).split(" ")
         bigrams += list(zip(ts, ts[1:]))
     n_total = len(bigrams)
     from collections import Counter
@@ -173,7 +203,7 @@ def test_pmi_collocations_matches_python_reference(spark):
     right_c = Counter(w2 for _, w2 in bigrams)
     ref = {}
     for (w1, w2), c in pair_c.items():
-        if c >= 2:
+        if c >= min_count:
             pmi = (
                 math.log(float(c))
                 + math.log(float(n_total))

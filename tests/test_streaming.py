@@ -361,7 +361,8 @@ def _plumbing_sites(pkg=None) -> dict[str, set[str]]:
     stream plumbing out: under streaming/, the keyed-state call, the
     file-stream read, the stream write and a ``batch=`` path; under
     the whole package, the release write (write_assigned_shards in
-    the ("source", "seq_id", "doc_id") release order)."""
+    the ("source", "seq_id", "doc_id") release order, written out or
+    as funnel's ``_RELEASE_ORDER``)."""
     import ast
     import pathlib
 
@@ -409,9 +410,11 @@ def _plumbing_sites(pkg=None) -> dict[str, set[str]]:
                     "write_assigned_shards"
                 ):
                     for a in [*n.args, *(k.value for k in n.keywords)]:
-                        if isinstance(a, ast.Tuple) and tuple(
-                            getattr(e, "value", None) for e in a.elts
-                        ) == release_order:
+                        if (
+                            isinstance(a, ast.Tuple) and tuple(
+                                getattr(e, "value", None) for e in a.elts
+                            ) == release_order
+                        ) or ident(a) == "_RELEASE_ORDER":
                             sites["release_write"].add(where)
     return sites
 
