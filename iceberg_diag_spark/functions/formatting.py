@@ -1,71 +1,65 @@
-"""Human-readable formatting as pure column expressions (SURVEY §2
-F1-F3; reference: icebergdiag/metrics/table_metric.py:62-65,134-176).
+"""Human-readable formatting as Spark SQL text (SURVEY §2 F1-F3;
+reference: icebergdiag/metrics/table_metric.py:62-65,134-176).
 
 These are display-layer concerns, but implemented as JVM expressions
-(when-ladders over log-scaled units) rather than Python UDFs so a
+(CASE ladders over log-scaled units) rather than Python UDFs so a
 formatted export of a billion-row result is still a codegen'd scan.
+Each builder returns SQL text over the SQL expression it is given and
+makes no JVM call: callers assemble their projections once, at import,
+and hand each stage to Spark as one ``selectExpr``, instead of paying
+several py4j round trips for every Column method of a ladder.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
-
 _SIZE_UNITS = ["B", "KB", "MB", "GB", "TB", "PB"]
 
 
-def format_size(size: Column) -> Column:
+def format_size_sql(size: str) -> str:
     """bytes → '1.21 KB' (÷1024 ladder, 2 decimals, B..PB).
 
     Mirrors table_metric.py:164-176: unit advances while size >= 1024
-    and a larger unit exists, i.e. PB is the terminal unit.
+    and a larger unit exists, i.e. PB is the terminal unit (no further
+    division regardless of size).
     """
-    expr = None
+    branches = []
     for i, unit in enumerate(_SIZE_UNITS):
-        scaled_i = size.cast("double") / (1024.0 ** i)
-        cond = scaled_i < 1024.0
-        value = F.format_string(f"%.2f {unit}", scaled_i)
+        scaled = f"CAST({size} AS DOUBLE) / {1024.0 ** i!r}D"
+        value = f"format_string('%.2f {unit}', {scaled})"
         if i == len(_SIZE_UNITS) - 1:
-            # terminal unit — no further division regardless of size
-            expr = expr.otherwise(value)
-        elif expr is None:
-            expr = F.when(cond, value)
+            branches.append(f"ELSE {value}")
         else:
-            expr = expr.when(cond, value)
-    return expr
+            branches.append(f"WHEN {scaled} < 1024.0D THEN {value}")
+    return f"CASE {' '.join(branches)} END"
 
 
-def format_duration_ms(ms: Column) -> Column:
+def format_duration_sql(ms: str) -> str:
     """milliseconds → '1h 0m 0s' / '2m 5s' / '5.5s' / '<0.01s'
     (table_metric.py:134-150, including trailing-zero stripping on
     the seconds-only form)."""
-    total_seconds = ms.cast("double") / 1000.0
-    hours = F.floor(total_seconds / 3600).cast("long")
-    minutes = F.floor((total_seconds % 3600) / 60).cast("long")
-    seconds = total_seconds % 60
-    secs_str = F.regexp_replace(
-        F.regexp_replace(F.format_string("%.2f", seconds), r"0+$", ""),
-        r"\.$",
-        "",
+    total_seconds = f"(CAST({ms} AS DOUBLE) / 1000.0D)"
+    hours = f"CAST(floor({total_seconds} / 3600) AS BIGINT)"
+    minutes = f"CAST(floor(({total_seconds} % 3600) / 60) AS BIGINT)"
+    seconds = f"({total_seconds} % 60)"
+    whole_seconds = f"CAST(floor({seconds}) AS BIGINT)"
+    # '\\\\' is one SQL-escaped backslash: the regex is \.$
+    secs_str = (
+        f"regexp_replace(regexp_replace(format_string('%.2f', {seconds}),"
+        f" '0+$', ''), '\\\\.$', '')"
     )
     return (
-        F.when(
-            hours > 0,
-            F.format_string(
-                "%dh %dm %ds", hours, minutes, F.floor(seconds).cast("long")
-            ),
-        )
-        .when(
-            minutes > 0,
-            F.format_string("%dm %ds", minutes, F.floor(seconds).cast("long")),
-        )
-        .when((seconds > 0) & (seconds < 0.01), F.lit("<0.01s"))
-        .otherwise(F.concat(secs_str, F.lit("s")))
+        f"CASE WHEN {hours} > 0"
+        f" THEN format_string('%dh %dm %ds', {hours}, {minutes}, {whole_seconds})"
+        f" WHEN {minutes} > 0"
+        f" THEN format_string('%dm %ds', {minutes}, {whole_seconds})"
+        f" WHEN {seconds} > 0 AND {seconds} < 0.01D THEN '<0.01s'"
+        f" ELSE concat({secs_str}, 's') END"
     )
 
 
-def format_percent(x: Column) -> Column:
+def format_percent_sql(x: str) -> str:
     """float → '12.34%' (table_metric.py:62-65)."""
-    return F.format_string("%.2f%%", x.cast("double"))
+    return f"format_string('%.2f%%', CAST({x} AS DOUBLE))"
 
 
 def glob_to_regex(pattern: str) -> str:

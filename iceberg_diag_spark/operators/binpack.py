@@ -35,7 +35,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from iceberg_diag_spark.functions.cost import MAX_GROUP_BYTE_SIZE
+from iceberg_diag_spark.functions.cost import MAX_GROUP_BYTE_SIZE, read_cost_array
 from iceberg_diag_spark.functions.parallel import fold_by_key
 
 
@@ -117,12 +117,10 @@ def pack_segment_stats(
     """Aggregate form of pack_segments: per segment, (number of groups,
     sum of group read costs) as int64 arrays — 0 and 0 for an empty
     segment. Used by the diagnostics fold."""
-    from iceberg_diag_spark.functions.cost import FETCH_SIZE
-
     seg, _, totals = pack_segments(sorted_sizes, seg_lens, max_bytes_per_group)
     groups = np.bincount(seg, minlength=len(seg_lens)).astype("int64")
     cost = np.zeros(len(seg_lens), dtype="int64")
-    np.add.at(cost, seg, totals // FETCH_SIZE + 2)
+    np.add.at(cost, seg, read_cost_array(totals))
     return groups, cost
 
 

@@ -355,7 +355,7 @@ def compact_apply_binpack(
         F.sum("n_phys").alias("phys"),
         F.sum("n_rows").alias("rows"),
         F.sum("row_bytes").alias("bytes"),
-        F.sum(read_file_cost(F.col("fsz"))).alias("cost"),
+        F.sum(read_file_cost("fsz")).alias("cost"),
         F.sum("fsz").alias("gsz"),
         F.bit_xor("x1").alias("x1"),
         F.bit_xor("x2").alias("x2"),
@@ -370,7 +370,7 @@ def compact_apply_binpack(
             F.count(F.lit(1)).cast("long").alias("groups_planned"),
             F.bit_xor("x1").alias("bx1"),
             F.bit_xor("x2").alias("bx2"),
-            F.sum(read_file_cost(F.col("gsz")))
+            F.sum(read_file_cost("gsz"))
             .cast("long")
             .alias("scan_overhead_planned"),
         ),
@@ -470,7 +470,7 @@ def compact_apply_binpack(
             F.sum("n_phys").cast("long").alias("files_after"),
             F.sum("n_rows").cast("long").alias("rows_after"),
             F.sum("row_bytes").cast("long").alias("size_after"),
-            F.sum(read_file_cost(F.col("fsz")))
+            F.sum(read_file_cost("fsz"))
             .cast("long")
             .alias("scan_overhead_after"),
             F.bit_xor("x1").alias("members_xor_after"),

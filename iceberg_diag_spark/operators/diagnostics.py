@@ -20,6 +20,11 @@ Scale notes (100 TB):
   collect_list of sizes.
 - The only Python is the sequential bin-pack fold (see binpack.py).
 
+Driver side: the aggregate, manifest and unpivot stages are SQL text
+assembled once, at import (``_PER_PART_AGG_SQL``, ``_UNPIVOT_SQL``,
+``_IMPROVEMENT_SQL``), so each stage costs one ``selectExpr`` or
+``agg`` call instead of several py4j round trips per Column call.
+
 Metric semantics pinned by tests/test_diagnostics_golden.py, derived
 from the reference unit test (tests/test_metric_calculator.py:46-91).
 """
@@ -35,9 +40,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from iceberg_diag_spark.functions.cost import (
     CONTENT_DATA,
-    FETCH_SIZE,
     MAX_GROUP_BYTE_SIZE,
     MILLISECONDS_PER_SCAN,
+    read_cost_array,
     scan_overhead_ms,
 )
 from iceberg_diag_spark.functions.parallel import fold_by_key
@@ -75,7 +80,7 @@ def partition_stats(
     return files.groupBy(F.col(partition_col).alias("partition_key")).agg(
         F.count("*").alias("file_count"),
         F.sum(size).alias("total_size"),
-        F.sum(scan_overhead_ms(size)).alias("scan_overhead"),
+        F.sum(scan_overhead_ms(size_col)).alias("scan_overhead"),
         F.sum(F.when(is_data, 1).otherwise(0)).alias("data_file_count"),
         F.coalesce(F.sum(F.when(is_data, size)), F.lit(0)).alias("data_size"),
     )
@@ -106,7 +111,7 @@ def _fold_keys(
         + [
             np.diff(starts, append=n),
             seg_sum(sizes),
-            seg_sum(sizes // FETCH_SIZE + 2) * MILLISECONDS_PER_SCAN,
+            seg_sum(read_cost_array(sizes)) * MILLISECONDS_PER_SCAN,
             data_file_count,
             seg_sum(np.where(is_data, sizes, 0)),
             groups,
@@ -168,12 +173,36 @@ def partition_stats_with_after(
     return fold_by_key(cols, group_cols, [size_col], fold, out_schema)
 
 
+# Second-level aggregate over the per-partition rows, as SQL text.
+_FC_RED = "file_count - after_file_count"
+_OH_RED = "scan_overhead - after_scan_overhead"
+_PER_PART_AGG_SQL = (
+    "coalesce(sum(file_count), 0) AS file_count",
+    "coalesce(sum(total_size), 0) AS total_size",
+    "coalesce(sum(scan_overhead), 0) AS scan_overhead_sum",
+    "coalesce(sum(data_file_count), 0) AS data_file_count",
+    "coalesce(sum(data_size), 0) AS data_size",
+    "count(*) AS total_partitions",
+    # worst = min per-partition average over ALL files (deletes
+    # included — PartitionMetrics.average_file_size, :32-34).
+    "coalesce(min(total_size / file_count), 0.0D) AS worst_avg_file_size",
+    "coalesce(max(total_size), 0) AS largest_partition_size",
+    "coalesce(sum(after_file_count), 0) AS after_file_count",
+    "coalesce(sum(after_scan_overhead), 0) AS after_full_scan_overhead",
+    f"max(CASE WHEN {_FC_RED} > 0 THEN struct({_FC_RED} AS red,"
+    " file_count AS before, after_file_count AS after) END) AS worst_fc",
+    f"max(CASE WHEN {_OH_RED} > 0 THEN struct({_OH_RED} AS red,"
+    " scan_overhead AS before, after_scan_overhead AS after) END) AS worst_oh",
+)
+
+
 def _aggregate_per_part(per_part: DataFrame, group_cols: list[str]) -> DataFrame:
     """Second-level aggregation over per-partition rows (A2-A7 + the
     A10 argmax), optionally grouped by table for the multi-table
-    single-job path. The manifest term of FULL_SCAN_OVERHEAD is added
-    by the caller (it is per-table external state, not derivable from
-    the files relation).
+    single-job path: one ``selectExpr`` (a global aggregate) or one
+    grouped ``agg`` of ``_PER_PART_AGG_SQL``. The manifest term of
+    FULL_SCAN_OVERHEAD is added by the caller (it is per-table
+    external state, not derivable from the files relation).
 
     Argmax by reduction (A10, table_metrics.py:134-153): track the
     partition with max (before - after) reduction; only reductions
@@ -183,48 +212,9 @@ def _aggregate_per_part(per_part: DataFrame, group_cols: list[str]) -> DataFrame
     takes first-seen (dict order); we break by larger before value,
     deterministic under any partitioning.
     """
-    fc_red = F.col("file_count") - F.col("after_file_count")
-    oh_red = F.col("scan_overhead") - F.col("after_scan_overhead")
-
-    base = per_part.groupBy(*group_cols) if group_cols else per_part
-    return base.agg(
-        F.coalesce(F.sum("file_count"), F.lit(0)).alias("file_count"),
-        F.coalesce(F.sum("total_size"), F.lit(0)).alias("total_size"),
-        F.coalesce(F.sum("scan_overhead"), F.lit(0)).alias("scan_overhead_sum"),
-        F.coalesce(F.sum("data_file_count"), F.lit(0)).alias("data_file_count"),
-        F.coalesce(F.sum("data_size"), F.lit(0)).alias("data_size"),
-        F.count("*").alias("total_partitions"),
-        # worst = min per-partition average over ALL files (deletes
-        # included — PartitionMetrics.average_file_size, :32-34).
-        F.coalesce(
-            F.min(F.col("total_size") / F.col("file_count")), F.lit(0.0)
-        ).alias("worst_avg_file_size"),
-        F.coalesce(F.max("total_size"), F.lit(0)).alias("largest_partition_size"),
-        F.coalesce(F.sum("after_file_count"), F.lit(0)).alias("after_file_count"),
-        F.coalesce(F.sum("after_scan_overhead"), F.lit(0)).alias(
-            "after_full_scan_overhead"
-        ),
-        F.max(
-            F.when(
-                fc_red > 0,
-                F.struct(
-                    fc_red.alias("red"),
-                    F.col("file_count").alias("before"),
-                    F.col("after_file_count").alias("after"),
-                ),
-            )
-        ).alias("worst_fc"),
-        F.max(
-            F.when(
-                oh_red > 0,
-                F.struct(
-                    oh_red.alias("red"),
-                    F.col("scan_overhead").alias("before"),
-                    F.col("after_scan_overhead").alias("after"),
-                ),
-            )
-        ).alias("worst_oh"),
-    )
+    if not group_cols:
+        return per_part.selectExpr(*_PER_PART_AGG_SQL)
+    return per_part.groupBy(*group_cols).agg(*map(F.expr, _PER_PART_AGG_SQL))
 
 
 # (before, after) SQL over the aggregated stats, in METRICS order.
@@ -293,10 +283,11 @@ def table_metrics(files: DataFrame, manifest_files_count: int = 0) -> DataFrame:
     nullable, improvement double nullable) — 9 rows.
     """
     per_part = partition_stats_with_after(files)
-    g = _aggregate_per_part(per_part, []).withColumn(
-        "full_scan_overhead",
-        F.col("scan_overhead_sum")
-        + F.lit(manifest_files_count * MILLISECONDS_PER_SCAN),
+    g = _aggregate_per_part(per_part, []).selectExpr(
+        "*",
+        "scan_overhead_sum + {} AS full_scan_overhead".format(
+            manifest_files_count * MILLISECONDS_PER_SCAN
+        ),
     )
     return _nine_metric_rows(g, [])
 
@@ -322,11 +313,10 @@ def multi_table_metrics(
     g = (
         _aggregate_per_part(per_part, [table_col])
         .join(F.broadcast(manifest_counts), table_col, "left")
-        .withColumn(
-            "full_scan_overhead",
-            F.col("scan_overhead_sum")
-            + F.coalesce(F.col("manifest_count"), F.lit(0))
-            * MILLISECONDS_PER_SCAN,
+        .selectExpr(
+            "*",
+            "scan_overhead_sum + coalesce(manifest_count, 0)"
+            f" * {MILLISECONDS_PER_SCAN} AS full_scan_overhead",
         )
     )
     return _nine_metric_rows(g, [table_col])

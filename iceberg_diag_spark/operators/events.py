@@ -9,8 +9,8 @@ all bit-stable across engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.window import Window, WindowSpec
 
 from iceberg_diag_spark.functions.parallel import ensure_parallelism, materialize
 
@@ -33,6 +33,18 @@ def hourly_rollup(events: DataFrame) -> DataFrame:
     )
 
 
+def _session_start(gap_minutes: int) -> tuple[Column, WindowSpec]:
+    """The gap rule: 1 where an event starts a session — its user's
+    first event, or more than ``gap_minutes`` after the previous one
+    — else 0, over the (user_id; ts, event_id) window, which is
+    returned too for the running session number."""
+    ts_us = F.unix_micros(F.col("ts"))
+    w = Window.partitionBy("user_id").orderBy(ts_us, F.col("event_id"))
+    gap = ts_us - F.lag(ts_us).over(w)
+    gap_us = gap_minutes * 60 * 1_000_000
+    return F.when(gap.isNull() | (gap > gap_us), 1).otherwise(0), w
+
+
 def sessionize(events: DataFrame, gap_minutes: int = SESSION_GAP_MINUTES) -> DataFrame:
     """Gap-based sessionization (batch): a new session starts when
     the gap to the previous event of the same user exceeds
@@ -43,20 +55,9 @@ def sessionize(events: DataFrame, gap_minutes: int = SESSION_GAP_MINUTES) -> Dat
     session rollup reuses the user_id shuffle. Skew: a pathological
     single user's events still fit one task at metadata-ish rates;
     for adversarial skew pre-split by (user_id, day)."""
-    gap_us = gap_minutes * 60 * 1_000_000
-    ts_us = F.unix_micros(F.col("ts"))
-    w = Window.partitionBy("user_id").orderBy(ts_us, F.col("event_id"))
+    is_start, w = _session_start(gap_minutes)
     flagged = events.select(
-        "user_id",
-        "event_id",
-        F.col("ts"),
-        F.when(
-            (ts_us - F.lag(ts_us).over(w)).isNull()
-            | ((ts_us - F.lag(ts_us).over(w)) > gap_us),
-            1,
-        )
-        .otherwise(0)
-        .alias("is_session_start"),
+        "user_id", "event_id", F.col("ts"), is_start.alias("is_session_start")
     )
     with_ids = flagged.withColumn(
         "session_seq",
@@ -538,6 +539,35 @@ def scd2_build(events: DataFrame) -> DataFrame:
     )
 
 
+def _dense_hourly(events: DataFrame, pin: bool) -> DataFrame:
+    """The DENSE per-(event_type, hour) arrival series: (event_type,
+    lo, h, c) for every hour h from the type's first observed hour lo
+    to its last, c = events in that hour (silent hours count 0 —
+    skipping them would fabricate correlation or slope). One (type,
+    hour) hash aggregate over the corpus; the spine and its join act
+    on at most types × hours rows. ``pin`` checkpoints the hourly
+    aggregate, which feeds both the span and the series."""
+    hours = events.groupBy(
+        F.col("event_type"),
+        (F.unix_micros(F.date_trunc("hour", F.col("ts")))
+         / F.lit(3_600_000_000)).cast("long").alias("h"),
+    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
+    if pin:
+        hours = materialize(hours)
+    span = hours.groupBy("event_type").agg(
+        F.min("h").alias("lo"), F.max("h").alias("hi")
+    )
+    spine = span.select(
+        "event_type", "lo", F.explode(F.sequence("lo", "hi")).alias("h")
+    )
+    return spine.join(hours, ["event_type", "h"], "left").select(
+        "event_type",
+        "lo",
+        "h",
+        F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("c"),
+    )
+
+
 def cadence_autocorr(
     events: DataFrame, lags: tuple[int, ...] = (1, 2, 3, 6, 12, 24)
 ) -> DataFrame:
@@ -565,29 +595,11 @@ def cadence_autocorr(
     most types × hours rows, metadata scale. Output:
     (event_type, lag_h, n_pairs, corr_ppm).
     """
-    hours = events.groupBy(
-        F.col("event_type"),
-        (F.unix_micros(F.date_trunc("hour", F.col("ts")))
-         / F.lit(3_600_000_000)).cast("long").alias("h"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    span = hours.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    spine = span.select(
-        "event_type", F.explode(F.sequence("lo", "hi")).alias("h")
-    )
-    # deliberately NOT checkpointed: the replayed subtree is one
-    # cheap hash aggregate + spine join, and both measured checkpoint
-    # variants (hours alone, hours+dense) read +32-62% on this entry
-    # (r15 ab7/ab8/ab9) — the barrier serializes what parallel
-    # replay recomputes for free here
-    dense = (
-        spine.join(hours, ["event_type", "h"], "left")
-        .select(
-            "event_type", "h",
-            F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("c"),
-        )
-    )
+    # deliberately NOT pinned: the replayed subtree is one cheap hash
+    # aggregate + spine join, and both measured checkpoint variants
+    # (hours alone, hours+dense) read +32-62% on this entry — the
+    # barrier serializes what parallel replay recomputes for free here
+    dense = _dense_hourly(events, pin=False)
     ks = F.array(*[F.lit(int(k)).cast("long") for k in lags])
     left = dense.select(
         "event_type",
@@ -651,26 +663,10 @@ def hourly_trend(events: DataFrame) -> DataFrame:
     types × hours rows, metadata scale. Output:
     (event_type, n_hours, total_events, slope_mppm, r2_ppm).
     """
-    hours = events.groupBy(
-        F.col("event_type"),
-        (F.unix_micros(F.date_trunc("hour", F.col("ts")))
-         / F.lit(3_600_000_000)).cast("long").alias("h"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    # two consumers (span, dense series)
-    hours = materialize(hours)
-    span = hours.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    spine = span.select(
-        "event_type", "lo", F.explode(F.sequence("lo", "hi")).alias("h")
-    )
-    dense = (
-        spine.join(hours, ["event_type", "h"], "left")
-        .select(
-            "event_type",
-            (F.col("h") - F.col("lo")).cast("long").alias("x"),
-            F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("y"),
-        )
+    dense = _dense_hourly(events, pin=True).select(
+        "event_type",
+        (F.col("h") - F.col("lo")).cast("long").alias("x"),
+        F.col("c").alias("y"),
     )
     mom = dense.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_hours"),
@@ -727,26 +723,10 @@ def changepoint_detect(events: DataFrame) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    hours = events.groupBy(
-        F.col("event_type"),
-        (F.unix_micros(F.date_trunc("hour", F.col("ts")))
-         / F.lit(3_600_000_000)).cast("long").alias("h"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    # two consumers (span, dense series)
-    hours = materialize(hours)
-    span = hours.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    spine = span.select(
-        "event_type", "lo", F.explode(F.sequence("lo", "hi")).alias("h")
-    )
-    dense = (
-        spine.join(hours, ["event_type", "h"], "left")
-        .select(
-            "event_type",
-            (F.col("h") - F.col("lo") + 1).cast("long").alias("i"),
-            F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("y"),
-        )
+    dense = _dense_hourly(events, pin=True).select(
+        "event_type",
+        (F.col("h") - F.col("lo") + 1).cast("long").alias("i"),
+        F.col("c").alias("y"),
     )
     w_run = (
         Window.partitionBy("event_type")
@@ -1460,21 +1440,13 @@ def session_funnel(
     conversion_ppm) — conversion_ppm relative to ALL sessions.
     """
     s1, s2, s3 = SESSION_FUNNEL_STEPS
-    gap_us = gap_minutes * 60 * 1_000_000
-    ts_us = F.unix_micros(F.col("ts"))
-    w = Window.partitionBy("user_id").orderBy(ts_us, F.col("event_id"))
+    is_start, _ = _session_start(gap_minutes)
     flagged = events.select(
         "user_id",
         "event_id",
         "event_type",
-        ts_us.alias("us"),
-        F.when(
-            (ts_us - F.lag(ts_us).over(w)).isNull()
-            | ((ts_us - F.lag(ts_us).over(w)) > gap_us),
-            1,
-        )
-        .otherwise(0)
-        .alias("is_start"),
+        F.unix_micros(F.col("ts")).alias("us"),
+        is_start.alias("is_start"),
     )
     # the cumsum window re-orders by the materialized `us` column
     # (the lag window's `ts` no longer exists after the select)

@@ -28,9 +28,41 @@ from iceberg_diag_spark.functions.cost import (
     CONTENT_DATA,
     CONTENT_EQUALITY_DELETES,
     CONTENT_POSITION_DELETES,
-    read_file_cost,
+    READ_COST_SQL,
 )
 from iceberg_diag_spark.functions.parallel import materialize
+
+
+def _count_sql(cond: str) -> str:
+    return f"CAST(sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS BIGINT)"
+
+
+def _bytes_sql(cond: str) -> str:
+    return (
+        f"CAST(coalesce(sum(CASE WHEN {cond} THEN file_size_in_bytes END), 0)"
+        " AS BIGINT)"
+    )
+
+
+_IS_DATA = f"content = {CONTENT_DATA}"
+_IS_POS = f"content = {CONTENT_POSITION_DELETES}"
+_IS_EQ = f"content = {CONTENT_EQUALITY_DELETES}"
+_DELETE_IMPACT_AGG_SQL = (
+    f"{_count_sql(_IS_DATA)} AS data_files",
+    f"{_bytes_sql(_IS_DATA)} AS data_bytes",
+    f"{_count_sql(_IS_POS)} AS pos_delete_files",
+    f"{_bytes_sql(_IS_POS)} AS pos_delete_bytes",
+    f"{_count_sql(_IS_EQ)} AS eq_delete_files",
+    f"{_bytes_sql(_IS_EQ)} AS eq_delete_bytes",
+    "CAST(sum({}) AS BIGINT) AS rewrite_read_cost".format(
+        READ_COST_SQL.format(size="file_size_in_bytes")
+    ),
+)
+_DELETE_PER_DATA_SQL = (
+    "CAST(CASE WHEN data_files = 0 THEN -1"
+    " ELSE floor((pos_delete_files + eq_delete_files) * 1000000.0D / data_files)"
+    " END AS BIGINT) AS delete_per_data_ppm"
+)
 
 
 def delete_impact(files: DataFrame) -> DataFrame:
@@ -42,37 +74,10 @@ def delete_impact(files: DataFrame) -> DataFrame:
     quantized; -1 when the partition has no data files so the ratio
     is undefined), and the read cost of a merge rewrite (a compaction
     that applies deletes must read every file, data and deletes
-    alike).
+    alike). One grouped ``agg`` of SQL text, then one ``selectExpr``.
     """
-    is_data = F.col("content") == CONTENT_DATA
-    is_pos = F.col("content") == CONTENT_POSITION_DELETES
-    is_eq = F.col("content") == CONTENT_EQUALITY_DELETES
-    size = F.col("file_size_in_bytes")
-
-    def _cnt(cond: Column) -> Column:
-        return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
-
-    def _bytes(cond: Column) -> Column:
-        return F.coalesce(F.sum(F.when(cond, size)), F.lit(0)).cast("long")
-
-    g = files.groupBy("partition_key").agg(
-        _cnt(is_data).alias("data_files"),
-        _bytes(is_data).alias("data_bytes"),
-        _cnt(is_pos).alias("pos_delete_files"),
-        _bytes(is_pos).alias("pos_delete_bytes"),
-        _cnt(is_eq).alias("eq_delete_files"),
-        _bytes(is_eq).alias("eq_delete_bytes"),
-        F.sum(read_file_cost(size)).cast("long").alias("rewrite_read_cost"),
-    )
-    delete_files = F.col("pos_delete_files") + F.col("eq_delete_files")
-    return g.withColumn(
-        "delete_per_data_ppm",
-        F.when(F.col("data_files") == 0, F.lit(-1))
-        .otherwise(
-            F.floor(delete_files * F.lit(1_000_000.0) / F.col("data_files"))
-        )
-        .cast("long"),
-    )
+    g = files.groupBy("partition_key").agg(*map(F.expr, _DELETE_IMPACT_AGG_SQL))
+    return g.selectExpr("*", _DELETE_PER_DATA_SQL)
 
 
 def orphan_files(listed: DataFrame, referenced: DataFrame) -> DataFrame:
@@ -110,6 +115,21 @@ def orphan_files(listed: DataFrame, referenced: DataFrame) -> DataFrame:
     )
 
 
+_EXPIRED = "added_at < cutoff"
+_RECLAIMABLE = f"{_EXPIRED} AND content != {CONTENT_DATA}"
+_RETENTION_AGG_SQL = (
+    f"{_count_sql(_EXPIRED)} AS expired_files",
+    f"{_bytes_sql(_EXPIRED)} AS expired_bytes",
+    f"{_count_sql(_RECLAIMABLE)} AS reclaimable_files",
+    f"{_bytes_sql(_RECLAIMABLE)} AS reclaimable_bytes",
+    "CAST(sum(file_size_in_bytes) - coalesce(sum(CASE WHEN"
+    f" {_RECLAIMABLE} THEN file_size_in_bytes END), 0) AS BIGINT)"
+    " AS retained_bytes",
+    f"CAST(count(DISTINCT CASE WHEN {_EXPIRED}"
+    " THEN date_trunc('month', added_at) END) AS BIGINT) AS expired_months",
+)
+
+
 def snapshot_retention(
     files: DataFrame, retention_days: int = 180
 ) -> DataFrame:
@@ -127,34 +147,11 @@ def snapshot_retention(
     bytes, retained bytes, and the number of distinct expired
     snapshot months.
     """
-    cutoff = files.agg(
-        (
-            F.max("added_at") - F.expr(f"INTERVAL {retention_days} DAYS")
-        ).alias("cutoff")
+    cutoff = files.selectExpr(
+        f"max(added_at) - INTERVAL {retention_days} DAYS AS cutoff"
     )
     withc = files.crossJoin(F.broadcast(cutoff))
-    expired = F.col("added_at") < F.col("cutoff")
-    reclaimable = expired & (F.col("content") != CONTENT_DATA)
-    size = F.col("file_size_in_bytes")
-    month = F.date_trunc("month", F.col("added_at"))
-    return withc.groupBy("partition_key").agg(
-        F.sum(F.when(expired, 1).otherwise(0)).cast("long").alias("expired_files"),
-        F.coalesce(F.sum(F.when(expired, size)), F.lit(0))
-        .cast("long")
-        .alias("expired_bytes"),
-        F.sum(F.when(reclaimable, 1).otherwise(0))
-        .cast("long")
-        .alias("reclaimable_files"),
-        F.coalesce(F.sum(F.when(reclaimable, size)), F.lit(0))
-        .cast("long")
-        .alias("reclaimable_bytes"),
-        (F.sum(size) - F.coalesce(F.sum(F.when(reclaimable, size)), F.lit(0)))
-        .cast("long")
-        .alias("retained_bytes"),
-        F.countDistinct(F.when(expired, month))
-        .cast("long")
-        .alias("expired_months"),
-    )
+    return withc.groupBy("partition_key").agg(*map(F.expr, _RETENTION_AGG_SQL))
 
 
 ZORDER_BITS = 8

@@ -11,12 +11,12 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row
 
 from iceberg_diag_spark.functions.formatting import (
-    format_duration_ms,
-    format_percent,
-    format_size,
+    format_duration_sql,
+    format_percent_sql,
+    format_size_sql,
     glob_to_regex,
 )
 from iceberg_diag_spark.operators.display import format_metrics
@@ -47,11 +47,14 @@ from iceberg_diag_spark.sources.response import (
         (3982491648, "3.71 GB"),
         (1024**5 * 900, "900.00 PB"),
         (1024**6, "1024.00 PB"),  # terminal unit never advances past PB
+        (1024, "1.00 KB"),
+        (1024**2 - 1, "1024.00 KB"),  # unit picked before rounding
+        (1024**5 - 1, "1024.00 TB"),
     ],
 )
 def test_format_size(spark, value, expected):
-    row = spark.range(1).select(
-        format_size(F.lit(float(value))).alias("s")
+    row = spark.range(1).selectExpr(
+        f"{format_size_sql(f'{float(value)!r}D')} AS s"
     ).first()
     assert row["s"] == expected
 
@@ -66,20 +69,29 @@ def test_format_size(spark, value, expected):
         (1810, "1.81s"),
         (5, "<0.01s"),
         (0, "0s"),
+        (59_999, "60s"),  # seconds-only form rounds up to 60
+        (3_599_999, "59m 59s"),
+        (9, "<0.01s"),
     ],
 )
 def test_format_duration(spark, ms, expected):
-    row = spark.range(1).select(
-        format_duration_ms(F.lit(ms)).alias("s")
+    row = spark.range(1).selectExpr(
+        f"{format_duration_sql(str(ms))} AS s"
     ).first()
     assert row["s"] == expected
 
 
 def test_format_percent(spark):
-    row = spark.range(1).select(
-        format_percent(F.lit(99.005)).alias("s")
+    row = spark.range(1).selectExpr(
+        f"{format_percent_sql('99.005D')} AS s"
     ).first()
     assert row["s"] == "99.01%"
+
+
+def test_format_percent_of_infinity(spark):
+    inf = format_percent_sql("double('Infinity')")
+    row = spark.range(1).selectExpr(f"{inf} AS s").first()
+    assert row["s"] == "Infinity%"
 
 
 @pytest.mark.parametrize(
@@ -149,6 +161,34 @@ def test_format_metrics_local(spark):
 def test_format_metrics_remote_keeps_all(spark):
     out = format_metrics(_metrics_df(spark), mode="remote").collect()
     assert len(out) == 6
+
+
+@pytest.mark.parametrize("mode", ["local", "remote"])
+def test_format_metrics_null_after_and_infinite_improvement(spark, mode):
+    inf = float("inf")
+    rows = [
+        Row(metric="FULL_SCAN_OVERHEAD", ordinal=0, before=59999.0, after=None,
+            improvement=None),
+        Row(metric="WORST_SCAN_OVERHEAD", ordinal=1, before=9.0, after=None,
+            improvement=None),
+        Row(metric="FILE_COUNT", ordinal=2, before=0.0, after=5.0,
+            improvement=inf),
+        Row(metric="WORST_FILE_COUNT", ordinal=3, before=7.0, after=None,
+            improvement=None),
+        Row(metric="TOTAL_TABLE_SIZE", ordinal=6, before=float(1024**5 - 1),
+            after=None, improvement=None),
+        Row(metric="LARGEST_PARTITION_SIZE", ordinal=7, before=1024.0,
+            after=float(1024**2 - 1), improvement=inf),
+    ]
+    out = format_metrics(spark.createDataFrame(rows), mode=mode).collect()
+    assert [tuple(r) for r in out] == [
+        ("Full Scan Overhead", "60s", "", ""),
+        ("Worst Partition Scan Overhead", "<0.01s", "", ""),
+        ("Total File Count", "0", "5", "Infinity%"),
+        ("Worst Partition File Count", "7", "", ""),
+        ("Total Table Size", "1024.00 TB", "", ""),
+        ("Largest Partition Size", "1.00 KB", "1024.00 KB", "Infinity%"),
+    ]
 
 
 # --------------------------------------------------------------------
