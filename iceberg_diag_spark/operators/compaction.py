@@ -63,7 +63,7 @@ from iceberg_diag_spark.functions.parallel import (
     materialize,
 )
 from iceberg_diag_spark.operators.binpack import pack_keys
-from iceberg_diag_spark.operators.sampling import membership_checksums
+from iceberg_diag_spark.operators.sampling import membership_manifest
 from iceberg_diag_spark.sources.sinks import rewrite_partitions
 
 LEDGER_COLUMNS = [
@@ -179,23 +179,20 @@ def physical_file_sizes(
 def _per_file_stats(
     rel: DataFrame, keys: list[str], key: Column, *extra: Column
 ) -> DataFrame:
-    """Per-file aggregate behind both sinks' before and after passes:
-    row count, the caller's ``extra`` aggregates, physical file count
-    (distinct input_file_name) and the two membership digests of
-    ``key`` (x1, x2), grouped by ``keys``."""
-    x1, x2 = membership_checksums(key)
+    """Per-file ledger behind both sinks' before and after passes: the
+    membership manifest of ``key`` grouped by ``keys`` — row count,
+    the caller's ``extra`` aggregates, physical file count (distinct
+    input_file_name) and the two digests (x1, x2)."""
     # input_file_name is non-deterministic for the analyzer —
     # project it before aggregating over it.
-    return (
-        rel.withColumn("_phys_file", F.input_file_name())
-        .groupBy(*keys)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            *extra,
-            F.countDistinct("_phys_file").cast("long").alias("n_phys"),
-            x1.alias("x1"),
-            x2.alias("x2"),
-        )
+    return membership_manifest(
+        rel.withColumn("_phys_file", F.input_file_name()),
+        keys,
+        key,
+        "n_rows",
+        *extra,
+        F.countDistinct("_phys_file").cast("long").alias("n_phys"),
+        digests=("x1", "x2"),
     )
 
 

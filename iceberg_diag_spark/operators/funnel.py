@@ -60,6 +60,11 @@ from pyspark.sql.window import Window
 
 from iceberg_diag_spark.functions.parallel import materialize
 from iceberg_diag_spark.operators import dedup, packing, sampling, textops
+from iceberg_diag_spark.sources.sinks import (
+    check_manifest,
+    remove_ids,
+    write_assigned_shards,
+)
 
 
 def stage_flags(
@@ -373,22 +378,27 @@ def _n_seqs(*seq_key: str) -> Column:
 
 
 def _manifest_agg(
-    asg: DataFrame, seq_key: tuple[str, ...] = ("source", "seq_id")
+    asg: DataFrame,
+    seq_key: tuple[str, ...] = ("source", "seq_id"),
+    keys: tuple[str, ...] = ("shard",),
+    extra: tuple[Column, ...] = (),
 ) -> DataFrame:
-    """Per-shard manifest aggregate over an assignment relation —
-    shared by the plan-side manifest, the written-files re-check and
-    the incremental release (whose sequence ids are scoped to their
-    increment, so its ``seq_key`` leads with ``batch``) so they can
+    """The release manifest over an assignment relation: the
+    membership manifest of the doc ids per shard (``keys``, cast to
+    long) with docs, packed sequences and token mass. Shared by the
+    plan-side manifest, the written-files re-check, the incremental
+    release (whose sequence ids are scoped to their increment, so its
+    ``seq_key`` leads with ``batch``) and the retraction's per-(batch,
+    shard) ledger (which adds its counts as ``extra``), so they can
     never drift."""
-    from iceberg_diag_spark.operators.sampling import membership_checksums
-
-    x1, x2 = membership_checksums(F.col("doc_id"))
-    return asg.groupBy(F.col("shard").cast("long").alias("shard")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
+    return sampling.membership_manifest(
+        asg,
+        [F.col(k).cast("long").alias(k) for k in keys],
+        F.col("doc_id"),
+        "n_docs",
         _n_seqs(*seq_key),
         F.sum("n_tokens").cast("long").alias("n_tokens"),
-        x1.alias("members_xor"),
-        x2.alias("members_xor2"),
+        *extra,
     )
 
 
@@ -421,8 +431,6 @@ def _write_release(
     shard=K parquet directories under ``path``, rows in packed
     sequence order. The batch release, each streaming increment and
     each reconcile increment land through it."""
-    from iceberg_diag_spark.sources.sinks import write_assigned_shards
-
     asg = release_assignments(
         docs, n_shards=n_shards, capacity_tokens=capacity_tokens, **kwargs
     )
@@ -457,49 +465,23 @@ def read_release_sequences(spark, path: str) -> DataFrame:
 
 
 def verify_release(spark, path: str, manifest: DataFrame) -> DataFrame:
-    """Verify a DELIVERED release against its published manifest: the
-    per-shard manifest aggregate recomputes from the files at `path`
-    and full-outer-joins the published relation, so a shard that was
-    lost, truncated, duplicated, or row-tampered in transit cannot
-    come back ok — the salted bit_xor membership digests catch any
-    doc-id set change, the token sum any payload-count change.
+    """Verify a DELIVERED release against its published manifest
+    through sinks.check_manifest: the per-shard manifest recomputes
+    from the files at `path`, so a shard that was lost, truncated,
+    duplicated, row-tampered or added in transit cannot come back ok
+    — the salted bit_xor membership digests catch any doc-id set
+    change, the token sum any payload-count change.
 
     Output per shard (published ∪ delivered): (shard, ok,
     n_docs_expected, n_docs_actual, tokens_expected, tokens_actual)
     — ok is true only when every manifest column matches exactly.
     """
-    actual = _manifest_agg(spark.read.parquet(path))
-    m = manifest.select(
-        F.col("shard").cast("long").alias("shard"),
-        F.col("n_docs").alias("e_docs"),
-        F.col("n_seqs").alias("e_seqs"),
-        F.col("n_tokens").alias("e_tokens"),
-        F.col("members_xor").alias("e_x1"),
-        F.col("members_xor2").alias("e_x2"),
-    )
-    a = actual.select(
+    return check_manifest(
+        manifest.withColumn("shard", F.col("shard").cast("long")),
+        _manifest_agg(spark.read.parquet(path)),
         "shard",
-        F.col("n_docs").alias("a_docs"),
-        F.col("n_seqs").alias("a_seqs"),
-        F.col("n_tokens").alias("a_tokens"),
-        F.col("members_xor").alias("a_x1"),
-        F.col("members_xor2").alias("a_x2"),
-    )
-    joined = m.join(a, "shard", "full")
-    ok = (
-        F.col("e_docs").eqNullSafe(F.col("a_docs"))
-        & F.col("e_seqs").eqNullSafe(F.col("a_seqs"))
-        & F.col("e_tokens").eqNullSafe(F.col("a_tokens"))
-        & F.col("e_x1").eqNullSafe(F.col("a_x1"))
-        & F.col("e_x2").eqNullSafe(F.col("a_x2"))
-    )
-    return joined.select(
-        "shard",
-        ok.alias("ok"),
-        F.col("e_docs").alias("n_docs_expected"),
-        F.col("a_docs").alias("n_docs_actual"),
-        F.col("e_tokens").alias("tokens_expected"),
-        F.col("a_tokens").alias("tokens_actual"),
+        ("n_docs", "n_seqs", "n_tokens", "members_xor", "members_xor2"),
+        [("n_docs", "n_docs"), ("n_tokens", "tokens")],
     )
 
 
@@ -508,6 +490,18 @@ RECONCILE_SIG_BUCKETS = RELEASE_N_SHARDS
 # batch=<id>/sb=<bucket>, rows in (band, band_key, doc_id) order.
 _SIG_FILE_SCHEMA = "doc_id long, band int, band_key string, ch string, sb long"
 _SIG_ORDER = ("band", "band_key", "doc_id")
+
+
+def _read_if_present(spark, path: str, schema: str) -> DataFrame | None:
+    """``path`` read with ``schema``, or None when it does not exist
+    yet. Only PATH_NOT_FOUND means absent: any other analysis failure
+    propagates rather than pass an unreadable store off as empty."""
+    try:
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def release_neardup_reconcile(
@@ -607,8 +601,6 @@ def release_neardup_reconcile(
     """
     from iceberg_diag_spark.operators import dedup
     from iceberg_diag_spark.operators.sampling import hash_bucket
-    from iceberg_diag_spark.sources.sinks import write_assigned_shards
-
     ids = [int(b) for b, _ in increments]
     if ids != sorted(ids) or len(set(ids)) != len(ids):
         raise ValueError(
@@ -631,26 +623,10 @@ def release_neardup_reconcile(
     # touch only the partition column (footer row counts, no data
     # pages) and collect at most one row per increment ever written.
     def _batch_ids(path: str, schema: str) -> set[int]:
-        try:
-            return {
-                r["batch"]
-                for r in spark.read.schema(schema)
-                .parquet(path)
-                .select("batch")
-                .distinct()
-                .collect()
-            }
-        except AnalysisException as e:
-            # Only a path that does not exist yet is benign (store
-            # not created — first call; release root absent). Any
-            # OTHER analysis failure must propagate: swallowing it
-            # here would fabricate an empty release-batch set (a
-            # misleading 'foreign lineage' error below) or silently
-            # disable the lineage guard entirely.
-            cond = e.getCondition() if hasattr(e, "getCondition") else None
-            if cond == "PATH_NOT_FOUND":
-                return set()
-            raise
+        rel = _read_if_present(spark, path, schema)
+        if rel is None:
+            return set()
+        return {r["batch"] for r in rel.select("batch").distinct().collect()}
 
     store_batches = _batch_ids(sig_path, f"{_SIG_FILE_SCHEMA}, batch long")
     if store_batches:
@@ -798,7 +774,7 @@ def release_retraction_apply(
     actually lose a document are opened, and within a batch only the
     shard=K directories holding a retracted doc are rewritten, and
     shards the retraction empties are dropped, through
-    sinks.rewrite_partitions (sibling shards are never read, never
+    sinks.remove_ids (sibling shards are never read, never
     rewritten, byte-untouched). A rewritten shard keeps the release
     sink's (shard; source, seq_id, doc_id) order, so it is
     byte-identical to a fresh build of its surviving rows.
@@ -825,10 +801,9 @@ def release_retraction_apply(
     signatures — a later reconcile can pair against an
     already-retracted doc_a, and applying THAT pair deletes the last
     copy of content. The purge removes the retracted docs'
-    band-key/content-hash rows
-    from the store with the same surgical idiom (only the sb=K
-    bucket dirs holding a named doc are rewritten; emptied dirs
-    dropped). Without the purge, orphan signatures keep matching:
+    band-key/content-hash rows from the store through the same
+    removal path, sinks.remove_ids (only the sb=K bucket dirs
+    holding a named doc are rewritten; emptied dirs dropped). Without the purge, orphan signatures keep matching:
     a LATER increment would emit pairs whose doc_a is already
     retracted, and applying those would delete content whose
     "earlier copy" no longer exists — the one chain that can drop
@@ -862,9 +837,6 @@ def release_retraction_apply(
     n_tokens_after, members_xor_after, members_xor2_after), ordered
     by batch.
     """
-    from iceberg_diag_spark.operators.sampling import membership_checksums
-    from iceberg_diag_spark.sources.sinks import rewrite_partitions
-
     if sig_path is _SIG_PATH_UNSET:
         raise TypeError(
             "release_retraction_apply requires sig_path: pass the "
@@ -889,29 +861,24 @@ def release_retraction_apply(
     )
     full_schema = f"{RELEASE_FILE_SCHEMA}, shard long, batch long"
     pre = spark.read.schema(full_schema).parquet(release_path)
-    x1, x2 = membership_checksums(F.col("doc_id"))
-    # ONE pre-rewrite pass: per-(batch, shard) doc/token totals, how
-    # many of them the retraction list names, and the shard's
-    # sequence count + membership digests (the after-state of every
-    # shard the rewrite will NOT touch — per-shard digests XOR into
-    # batch digests, per-shard seq counts sum, because shards
-    # partition the key space). Eagerly materialized BEFORE any file
-    # is touched.
+    # ONE pre-rewrite pass: the release manifest per (batch, shard)
+    # plus how many docs and tokens the retraction list names — the
+    # after-state of every shard the rewrite will NOT touch (per-shard
+    # digests XOR into batch digests, per-shard seq counts sum,
+    # because shards partition the key space). Eagerly materialized
+    # BEFORE any file is touched.
     grp = materialize(
-        pre.join(retract, ["batch", "doc_id"], "left")
-        .groupBy("batch", "shard")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            _n_seqs("source", "seq_id"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            x1.alias("x1"),
-            x2.alias("x2"),
-            F.sum(F.when(F.col("_rt"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_retracted"),
-            F.sum(F.when(F.col("_rt"), F.col("n_tokens")).otherwise(0))
-            .cast("long")
-            .alias("tokens_retracted"),
+        _manifest_agg(
+            pre.join(retract, ["batch", "doc_id"], "left"),
+            keys=("batch", "shard"),
+            extra=(
+                F.sum(F.when(F.col("_rt"), 1).otherwise(0))
+                .cast("long")
+                .alias("n_retracted"),
+                F.sum(F.when(F.col("_rt"), F.col("n_tokens")).otherwise(0))
+                .cast("long")
+                .alias("tokens_retracted"),
+            ),
         ),
         eager=True,
     )
@@ -922,30 +889,15 @@ def release_retraction_apply(
     for r in affected:
         by_batch.setdefault(int(r["batch"]), []).append(r)
     for b in sorted(by_batch):
-        rows = by_batch[b]
-        shards = [int(r["shard"]) for r in rows]
-        cur = (
-            spark.read.schema(f"{RELEASE_FILE_SCHEMA}, shard long")
-            .parquet(f"{release_path}/batch={b}")
-            .filter(F.col("shard").isin(shards))
-        )
-        kept = cur.join(
-            retract.filter(F.col("batch") == b).select("doc_id"),
-            "doc_id",
-            "anti",
-        ).select("source", "doc_id", "n_tokens", "seq_id", "shard")
-        rewrite_partitions(
+        remove_ids(
             spark,
-            kept,
             f"{release_path}/batch={b}",
-            ("shard",),
+            f"{RELEASE_FILE_SCHEMA}, shard long",
+            "shard",
+            retract.filter(F.col("batch") == b).select("doc_id"),
+            [(r["shard"], r["n_docs"], r["n_retracted"]) for r in by_batch[b]],
             n_shards,
             _RELEASE_ORDER,
-            [
-                f"{release_path}/batch={b}/shard={int(r['shard'])}"
-                for r in rows
-                if int(r["n_docs"]) == int(r["n_retracted"])
-            ],
         )
     if sig_path is not None:
         # Driven by the retraction list, NOT by the release hits: a
@@ -969,8 +921,8 @@ def release_retraction_apply(
     # (batch, shard) dirs); untouched shards reuse their pre-pass row
     # — same bytes on disk, byte-identity pytest-pinned — so the
     # whole release is never scanned a second time.
-    untouched = grp.filter(F.col("n_retracted") == 0).select(
-        "batch", "shard", "n_docs", "n_seqs", "n_tokens", "x1", "x2"
+    untouched = grp.filter(F.col("n_retracted") == 0).drop(
+        "n_retracted", "tokens_retracted"
     )
     per_shard_after = untouched
     if affected:
@@ -980,26 +932,17 @@ def release_retraction_apply(
                 [int(r["shard"]) for r in rows]
             )
             pred = p if pred is None else (pred | p)
-        post = (
-            spark.read.schema(full_schema)
-            .parquet(release_path)
-            .filter(pred)
-            .groupBy("batch", "shard")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                _n_seqs("source", "seq_id"),
-                F.sum("n_tokens").cast("long").alias("n_tokens"),
-                x1.alias("x1"),
-                x2.alias("x2"),
-            )
+        post = _manifest_agg(
+            spark.read.schema(full_schema).parquet(release_path).filter(pred),
+            keys=("batch", "shard"),
         )
         per_shard_after = untouched.unionByName(post)
     after = per_shard_after.groupBy("batch").agg(
         F.sum("n_docs").cast("long").alias("n_docs_after"),
         F.sum("n_seqs").cast("long").alias("n_seqs_after"),
         F.sum("n_tokens").cast("long").alias("n_tokens_after"),
-        F.bit_xor("x1").alias("members_xor_after"),
-        F.bit_xor("x2").alias("members_xor2_after"),
+        F.bit_xor("members_xor").alias("members_xor_after"),
+        F.bit_xor("members_xor2").alias("members_xor2_after"),
     )
     return (
         before.join(after, "batch", "left")
@@ -1029,55 +972,37 @@ def _purge_signature_store(
     spark, retract: DataFrame, sig_path: str, batches, sig_buckets: int
 ) -> None:
     """Remove the retracted docs' rows from the reconcile signature
-    store — the sb=K twin of the release rewrite: per named batch,
-    one bounded per-bucket decision aggregate (<= sig_buckets rows),
-    then sinks.rewrite_partitions of ONLY the buckets holding a named
-    doc (in the store's own order — byte-identical to a fresh build
-    of the surviving rows), dropping the buckets the purge empties.
-    Idempotent: a purged doc produces no hits on replay. A
-    batch with no store directory (synthetic pairs, or a store the
-    caller never built) is skipped."""
-    from iceberg_diag_spark.sources.sinks import rewrite_partitions
-
+    store through the release retraction's removal path
+    (sinks.remove_ids): per named batch, one bounded per-bucket
+    decision aggregate (<= sig_buckets rows), then a rewrite of ONLY
+    the sb=K buckets holding a named doc, in the store's own order
+    (byte-identical to a fresh build of the surviving rows), dropping
+    the buckets the purge empties. Idempotent: a purged doc produces
+    no hits on replay. A batch with no store directory (synthetic
+    pairs, or a store the caller never built) is skipped."""
     for b in batches:
         ids = retract.filter(F.col("batch") == b).select("doc_id")
-        try:
-            dec = (
-                spark.read.schema(_SIG_FILE_SCHEMA)
-                .parquet(f"{sig_path}/batch={b}")
-                .join(ids.withColumn("_hit", F.lit(True)), "doc_id", "left")
-                .groupBy("sb")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(
-                        F.when(F.col("_hit"), 1).otherwise(0)
-                    ).alias("hit"),
-                )
-                .collect()
-            )
-        except AnalysisException:
-            continue  # no store for this batch — nothing to purge
-        hit_rows = [r for r in dec if int(r["hit"]) > 0]
-        if not hit_rows:
-            continue
-        buckets = [int(r["sb"]) for r in hit_rows]
-        kept = (
-            spark.read.schema(_SIG_FILE_SCHEMA)
-            .parquet(f"{sig_path}/batch={b}")
-            .filter(F.col("sb").isin(buckets))
-            .join(ids, "doc_id", "anti")
-            .select("doc_id", "band", "band_key", "ch", "sb")
+        store = _read_if_present(
+            spark, f"{sig_path}/batch={b}", _SIG_FILE_SCHEMA
         )
-        rewrite_partitions(
+        if store is None:
+            continue  # no store for this batch — nothing to purge
+        dec = (
+            store.join(ids.withColumn("_hit", F.lit(True)), "doc_id", "left")
+            .groupBy("sb")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.when(F.col("_hit"), 1).otherwise(0)).alias("hit"),
+            )
+            .collect()
+        )
+        remove_ids(
             spark,
-            kept,
             f"{sig_path}/batch={b}",
-            ("sb",),
+            _SIG_FILE_SCHEMA,
+            "sb",
+            ids,
+            [(r["sb"], r["n"], r["hit"]) for r in dec],
             sig_buckets,
             _SIG_ORDER,
-            [
-                f"{sig_path}/batch={b}/sb={int(r['sb'])}"
-                for r in hit_rows
-                if int(r["n"]) == int(r["hit"])
-            ],
         )

@@ -64,6 +64,28 @@ def membership_checksums(key: Column) -> list[Column]:
     ]
 
 
+def membership_manifest(
+    df: DataFrame,
+    keys: list,
+    member: Column,
+    count: str,
+    *extra: Column,
+    digests: tuple[str, str] = ("members_xor", "members_xor2"),
+) -> DataFrame:
+    """The per-group membership ledger every written layout and
+    membership audit vouches with, in one aggregate: grouped by
+    ``keys`` (names or aliased Columns), (keys; count, *extra,
+    digest1, digest2) — the digests are membership_checksums of
+    ``member``."""
+    x1, x2 = membership_checksums(member)
+    return df.groupBy(*keys).agg(
+        F.count(F.lit(1)).cast("long").alias(count),
+        *extra,
+        x1.alias(digests[0]),
+        x2.alias(digests[1]),
+    )
+
+
 def hash_sample(
     df: DataFrame,
     key_col: str,

@@ -38,6 +38,11 @@ import random
 from pyspark.sql import Column, DataFrame, functions as F
 
 from iceberg_diag_spark.functions.parallel import ensure_parallelism, materialize
+from iceberg_diag_spark.operators.sampling import membership_manifest
+from iceberg_diag_spark.sources.sinks import (
+    check_manifest,
+    write_assigned_shards,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1690,19 +1695,16 @@ def ivf_index_assignments(
 
 
 def _ivf_manifest_agg(asg: DataFrame) -> DataFrame:
-    """Per-cell index manifest over an assignment relation — shared by
-    the plan-side manifest and the written-files re-check so the two
-    can never drift (the corpus_release _manifest_agg discipline):
-    occupancy, total squared norm (payload checksum), and two
-    independently-salted O(1)-state bit_xor membership digests."""
-    from iceberg_diag_spark.operators.sampling import membership_checksums
-
-    x1, x2 = membership_checksums(F.col("vec_id"))
-    return asg.groupBy(F.col("list_id").cast("long").alias("list_id")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_vecs"),
+    """Per-cell index manifest over an assignment relation, shared by
+    the build and verify_ivf_index: the membership manifest of the
+    vec ids per cell, with occupancy and the total squared norm
+    (payload checksum)."""
+    return membership_manifest(
+        asg,
+        [F.col("list_id").cast("long").alias("list_id")],
+        F.col("vec_id"),
+        "n_vecs",
         F.sum("n2").cast("long").alias("norm_sum"),
-        x1.alias("members_xor"),
-        x2.alias("members_xor2"),
     )
 
 
@@ -1739,8 +1741,6 @@ def ivf_build_index(
     """
     import shutil
     import tempfile
-
-    from iceberg_diag_spark.sources.sinks import write_assigned_shards
 
     cleanup = path is None
     if path is None:
@@ -1834,39 +1834,18 @@ def ivf_probe_index(
 
 
 def verify_ivf_index(spark, path: str, manifest: DataFrame) -> DataFrame:
-    """Verify a DELIVERED index against its published manifest (the
-    verify_release shape): recompute the per-cell manifest from the
-    files at `path` and full-outer-join the published relation — a
-    cell that was lost, truncated, duplicated, or row-tampered cannot
-    come back ok (the salted bit_xor digests catch any vec-id set
-    change, norm_sum any payload change). Output per cell:
-    (list_id, ok, n_vecs_expected, n_vecs_actual)."""
-    actual = _ivf_manifest_agg(spark.read.parquet(path))
-    m = manifest.select(
+    """Verify a DELIVERED index against its published manifest through
+    sinks.check_manifest: the per-cell manifest recomputes from the
+    files at `path` — a cell that was lost, truncated, duplicated,
+    row-tampered or added cannot come back ok (the salted bit_xor
+    digests catch any vec-id set change, norm_sum any payload change).
+    Output per cell: (list_id, ok, n_vecs_expected, n_vecs_actual)."""
+    return check_manifest(
+        manifest,
+        _ivf_manifest_agg(spark.read.parquet(path)),
         "list_id",
-        F.col("n_vecs").alias("e_n"),
-        F.col("norm_sum").alias("e_s"),
-        F.col("members_xor").alias("e_x1"),
-        F.col("members_xor2").alias("e_x2"),
-    )
-    a = actual.select(
-        "list_id",
-        F.col("n_vecs").alias("a_n"),
-        F.col("norm_sum").alias("a_s"),
-        F.col("members_xor").alias("a_x1"),
-        F.col("members_xor2").alias("a_x2"),
-    )
-    ok = (
-        F.col("e_n").eqNullSafe(F.col("a_n"))
-        & F.col("e_s").eqNullSafe(F.col("a_s"))
-        & F.col("e_x1").eqNullSafe(F.col("a_x1"))
-        & F.col("e_x2").eqNullSafe(F.col("a_x2"))
-    )
-    return m.join(a, "list_id", "full").select(
-        "list_id",
-        ok.alias("ok"),
-        F.col("e_n").alias("n_vecs_expected"),
-        F.col("a_n").alias("n_vecs_actual"),
+        ("n_vecs", "norm_sum", "members_xor", "members_xor2"),
+        [("n_vecs", "n_vecs")],
     )
 
 

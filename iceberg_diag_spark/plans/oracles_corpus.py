@@ -49,11 +49,8 @@ def _stratified_split(spark, sf_dir):
         _t(spark, sf_dir, "documents"), key_col="doc_id",
         val_pct=5, test_pct=5,
     )
-    xor1, xor2 = sampling.membership_checksums(F.col("doc_id"))
-    return df.groupBy("source", "split").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        xor1.alias("members_xor"),
-        xor2.alias("members_xor2"),
+    return sampling.membership_manifest(
+        df, ["source", "split"], F.col("doc_id"), "n_docs"
     )
 
 
@@ -562,11 +559,8 @@ def _weighted_sample(spark, sf_dir):
         _t(spark, sf_dir, "documents"), key_col="doc_id",
         weight_col="n_chars",
     )
-    xor1, xor2 = sampling.membership_checksums(F.col("doc_id"))
-    return kept.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        xor1.alias("members_xor"),
-        xor2.alias("members_xor2"),
+    return sampling.membership_manifest(
+        kept, ["source"], F.col("doc_id"), "n_kept"
     )
 
 

@@ -12,14 +12,18 @@ reads cheap:
   the exchange entirely (verified in tests: the joined plan contains
   no Exchange on the bucketed key).
 - In-place partition rewrites (`rewrite_partitions`): the stage →
-  dynamic overwrite → drop sequence every executing sink shares.
+  dynamic overwrite → drop sequence every executing sink shares;
+  `remove_ids` and `check_manifest` remove ids and check a delivery.
 
 All are thin wrappers so callers state intent, not mechanics.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+import operator
+from functools import reduce
+
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession, functions as F
 
 from iceberg_diag_spark.functions.parallel import materialize
 
@@ -189,8 +193,6 @@ def export_training_shards(
     Returns n_shards. Read a single shard back with
     ``spark.read.parquet(f"{path}/shard={k}")``.
     """
-    from pyspark.sql import functions as F
-
     if n_shards <= 0:
         raise ValueError("n_shards must be positive")
     shard = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(n_shards))
@@ -229,8 +231,6 @@ def write_assigned_shards(
     byte-stable files make releases diffable). Rewriting some shards
     of an existing layout in place is rewrite_partitions' job.
     """
-    from pyspark.sql import functions as F
-
     if n_shards <= 0:
         raise ValueError("n_shards must be positive")
     (
@@ -284,6 +284,73 @@ def rewrite_partitions(
         .parquet(path)
     )
     delete_paths(spark, drop)
+
+
+def remove_ids(
+    spark: SparkSession,
+    batch_dir: str,
+    schema: str,
+    leaf_col: str,
+    ids: DataFrame,
+    decisions: list[tuple[int, int, int]],
+    n_tasks: int,
+    order_cols: tuple[str, ...],
+) -> None:
+    """Remove the rows ``ids`` names from the ``{leaf_col}=K`` leaves
+    under ``batch_dir`` — the release retraction's and the signature
+    purge's one removal path. ``decisions`` are the caller's (leaf,
+    row count, hit count) rows: only hit leaves are read and
+    anti-joined, fully hit leaves are dropped, the rest stay
+    byte-untouched."""
+    hit = [(int(k), int(n), int(h)) for k, n, h in decisions if int(h) > 0]
+    if not hit:
+        return
+    cur = (
+        spark.read.schema(schema)
+        .parquet(batch_dir)
+        .filter(F.col(leaf_col).isin([k for k, _, _ in hit]))
+    )
+    rewrite_partitions(
+        spark,
+        cur.join(ids, ids.columns, "anti").select(*cur.columns),
+        batch_dir,
+        (leaf_col,),
+        n_tasks,
+        order_cols,
+        [f"{batch_dir}/{leaf_col}={k}" for k, n, h in hit if n == h],
+    )
+
+
+def check_manifest(
+    published: DataFrame,
+    delivered: DataFrame,
+    key: str,
+    compared: tuple[str, ...],
+    reported: list[tuple[str, str]],
+) -> DataFrame:
+    """Full-outer join a published per-leaf manifest with the one
+    recomputed from the delivered files on ``key``: ``ok`` only when
+    every ``compared`` column matches null-safely, so a lost leaf
+    (NULL actuals) or an unnamed one (NULL expectations) is not ok.
+    Output: (key, ok, then ``<name>_expected``, ``<name>_actual`` per
+    (column, name) pair of ``reported``)."""
+
+    def side(df: DataFrame, p: str) -> DataFrame:
+        return df.select(key, *(F.col(c).alias(f"{p}_{c}") for c in compared))
+
+    ok = reduce(
+        operator.and_,
+        (F.col(f"e_{c}").eqNullSafe(F.col(f"a_{c}")) for c in compared),
+    )
+    return side(published, "e").join(side(delivered, "a"), key, "full").select(
+        key,
+        ok.alias("ok"),
+        *(
+            F.col(f"{p}_{c}").alias(f"{name}_{suffix}")
+            for c, name in reported
+            for p, suffix in (("e", "expected"), ("a", "actual"))
+        ),
+    )
 
 
 def delete_path(spark: SparkSession, path: str) -> bool:

@@ -630,7 +630,9 @@ def test_read_release_sequences_reproduces_pack_fold(spark, tmp_path_factory):
 def test_verify_release_catches_tampering(spark, tmp_path_factory):
     """verify_release: pristine delivery -> all shards ok; dropping
     rows from one shard directory flips exactly that shard to not-ok
-    with the doc-count discrepancy visible."""
+    with the doc-count discrepancy visible; a shard lost entirely
+    reads not-ok with NULL actuals, and a shard the manifest never
+    named reads not-ok with NULL expectations."""
     import glob as _glob
     import os
 
@@ -654,3 +656,22 @@ def test_verify_release_catches_tampering(spark, tmp_path_factory):
     assert not res[0].ok
     assert res[0].n_docs_actual < res[0].n_docs_expected
     assert all(r.ok for s, r in res.items() if s != 0)
+
+    # tamper: lose shard=1 entirely, deliver a shard the manifest
+    # never named (a copy of shard=2's files)
+    import shutil
+
+    foreign = funnel.RELEASE_N_SHARDS + 3
+    shutil.rmtree(os.path.join(out, "shard=1"))
+    shutil.copytree(
+        os.path.join(out, "shard=2"), os.path.join(out, f"shard={foreign}")
+    )
+    res = {r.shard: r for r in
+           funnel.verify_release(spark, out, manifest).collect()}
+    assert not res[1].ok and res[1].n_docs_expected > 0
+    assert res[1].n_docs_actual is None and res[1].tokens_actual is None
+    assert not res[foreign].ok
+    assert res[foreign].n_docs_actual == res[2].n_docs_actual
+    assert res[foreign].n_docs_expected is None
+    assert res[foreign].tokens_expected is None
+    assert all(r.ok for s, r in res.items() if s not in (0, 1, foreign))

@@ -124,10 +124,12 @@ def test_ivf_manifest_matches_plan_side_and_accounts_all_vectors(
     assert sum(r[1] for r in file_m) == emb.count()  # no dropped rows
 
 
-def test_ivf_verify_detects_tampering(spark, emb, built_index):
+def test_ivf_verify_detects_tampering(spark, emb, built_index, tmp_path):
     """verify_ivf_index over the intact index is all-ok; delivering a
     TAMPERED copy (one cell's rows dropped) must flag exactly the
-    tampered cell."""
+    tampered cell; a cell lost entirely reads not-ok with NULL
+    actuals, and a cell the manifest never named not-ok with NULL
+    expectations."""
     from pyspark.sql import functions as F
 
     from iceberg_diag_spark.operators import similarity as sim
@@ -141,9 +143,7 @@ def test_ivf_verify_detects_tampering(spark, emb, built_index):
     tampered = rows.filter(
         ~((F.col("list_id") == victim) & (F.col("vec_id") % 2 == 0))
     )
-    import tempfile
-
-    tpath = tempfile.mkdtemp(prefix="ivf_tampered_")
+    tpath = str(tmp_path / "tampered")
     tampered.write.mode("overwrite").partitionBy("list_id").parquet(tpath)
     bad = {
         r.list_id: r.ok
@@ -151,6 +151,27 @@ def test_ivf_verify_detects_tampering(spark, emb, built_index):
     }
     assert bad[victim] is False
     assert all(ok for lid, ok in bad.items() if lid != victim)
+
+    # a cell lost entirely, and a cell the manifest never named
+    foreign = 1000 + victim
+    moved = rows.withColumn(
+        "list_id",
+        F.when(F.col("list_id") == victim, F.lit(foreign)).otherwise(
+            F.col("list_id")
+        ),
+    )
+    mpath = str(tmp_path / "moved")
+    moved.write.mode("overwrite").partitionBy("list_id").parquet(mpath)
+    res = {
+        r.list_id: r
+        for r in sim.verify_ivf_index(spark, mpath, manifest).collect()
+    }
+    assert res[victim].ok is False and res[victim].n_vecs_expected > 0
+    assert res[victim].n_vecs_actual is None
+    assert res[foreign].ok is False
+    assert res[foreign].n_vecs_actual == res[victim].n_vecs_expected
+    assert res[foreign].n_vecs_expected is None
+    assert all(r.ok for lid, r in res.items() if lid not in (victim, foreign))
 
 
 # ---------------------------------------------------------------

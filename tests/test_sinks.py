@@ -386,6 +386,15 @@ def _leaf_md5s(root: str) -> dict[str, list[str]]:
 
 
 def _inject(monkeypatch, boundary: str, write_root: str) -> None:
+    if boundary == "mid_delete":
+        delete_paths = sinks.delete_paths
+
+        def delete_first(spark, paths, *args, **kwargs):
+            delete_paths(spark, paths[:1], *args, **kwargs)
+            raise _Injected("delete step, after the first path")
+
+        monkeypatch.setattr(sinks, "delete_paths", delete_first)
+        return
     if boundary == "after_write":
 
         def failing_delete(*args, **kwargs):
@@ -412,14 +421,16 @@ _CASES = {
 }
 
 
-@pytest.mark.parametrize("boundary", ["after_write", "at_write"])
+@pytest.mark.parametrize("boundary", ["after_write", "at_write", "mid_delete"])
 @pytest.mark.parametrize("sink", list(_CASES))
 def test_rewrite_crash_loses_no_row(spark, tmp_path, monkeypatch, sink, boundary):
     """rewrite_partitions writes before it deletes: a failure at the
     delete step leaves duplicates, a failure at the write leaves the
     layout as it was — in both cases every distinct row key is still
     on disk (key sets, not XOR digests: a duplicate cancels out of an
-    XOR). Compaction and clustering re-runs keep the duplicates; a
+    XOR). A failure midway through the drop batch has deleted one
+    stale leaf: every key the uninterrupted run keeps is still on
+    disk. Compaction and clustering re-runs keep the duplicates; a
     retraction re-run heals to the uninterrupted result."""
     root = str(tmp_path / "run")
     write_root, run, keys = _CASES[sink](spark, root)
@@ -428,7 +439,13 @@ def test_rewrite_crash_loses_no_row(spark, tmp_path, monkeypatch, sink, boundary
     _inject(monkeypatch, boundary, write_root)
     with pytest.raises(_Injected):
         run()
-    assert keys() == keys_before
+    if boundary == "mid_delete":
+        monkeypatch.undo()
+        _, clean_run, clean_keys = _CASES[sink](spark, str(tmp_path / "kept"))
+        clean_run()
+        assert keys() >= clean_keys()
+    else:
+        assert keys() == keys_before
     if boundary == "at_write":
         assert set(leaves_before) <= set(_leaf_md5s(root))
 
@@ -446,3 +463,76 @@ def test_rewrite_crash_loses_no_row(spark, tmp_path, monkeypatch, sink, boundary
             ]
 
         assert after(rerun) == after(clean)
+
+
+def _ledger_sites(pkg=None) -> dict[str, set[str]]:
+    """Top-level function (``module:function``) of every place under
+    operators/, sources/, streaming/ and plans/ that writes a piece of
+    the layout ledger out: a membership_checksums call, an eqNullSafe
+    manifest comparison, an ``"anti"`` id-removal join (funnel.py and
+    sinks.py), a PATH_NOT_FOUND test, and an ``except
+    AnalysisException`` handler that swallows the error (no raise)."""
+    import ast
+    import pathlib
+
+    import iceberg_diag_spark
+
+    pkg = pathlib.Path(pkg or pathlib.Path(iceberg_diag_spark.__file__).parent)
+    sites: dict[str, set[str]] = {
+        "membership_checksums": set(), "manifest_check": set(),
+        "id_removal": set(), "path_not_found": set(),
+        "swallowed_analysis_error": set(),
+    }
+
+    def ident(n):
+        return getattr(n, "attr", None) or getattr(n, "id", None)
+
+    for sub in ("operators", "sources", "streaming", "plans"):
+        for path in sorted((pkg / sub).glob("*.py")):
+            tree = ast.parse(path.read_text())
+            for top in tree.body:
+                where = f"{path.stem}:{getattr(top, 'name', '<module>')}"
+                for n in ast.walk(top):
+                    if isinstance(n, ast.Call):
+                        name = ident(n.func)
+                        if name == "membership_checksums":
+                            sites["membership_checksums"].add(where)
+                        if name == "eqNullSafe":
+                            sites["manifest_check"].add(where)
+                        if (
+                            name == "join"
+                            and path.stem in ("funnel", "sinks")
+                            and any(
+                                getattr(a, "value", None) == "anti"
+                                for a in n.args
+                            )
+                        ):
+                            sites["id_removal"].add(where)
+                    if getattr(n, "value", None) == "PATH_NOT_FOUND":
+                        sites["path_not_found"].add(where)
+                    if (
+                        isinstance(n, ast.ExceptHandler)
+                        and ident(n.type) == "AnalysisException"
+                        and not any(
+                            isinstance(b, ast.Raise)
+                            for s in n.body
+                            for b in ast.walk(s)
+                        )
+                    ):
+                        sites["swallowed_analysis_error"].add(where)
+    return sites
+
+
+def test_layout_ledger_written_once():
+    """The layout ledger is written once: the count + digest aggregate
+    (sampling.membership_manifest), the published-vs-delivered check
+    (sinks.check_manifest), the id-removal rewrite (sinks.remove_ids)
+    and the absent-batch-dir rule (funnel._read_if_present), which
+    swallows no other analysis error."""
+    assert _ledger_sites() == {
+        "membership_checksums": {"sampling:membership_manifest"},
+        "manifest_check": {"sinks:check_manifest"},
+        "id_removal": {"sinks:remove_ids"},
+        "path_not_found": {"funnel:_read_if_present"},
+        "swallowed_analysis_error": set(),
+    }
