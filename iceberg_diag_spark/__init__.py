@@ -10,8 +10,9 @@ Design principles (100 TB-first):
 - Shuffle-light: partial aggregation, broadcast of small sides,
   two-level (partial/final) aggregation patterns.
 - Python only where relational ops can't express semantics (one
-  per-key Arrow fold, ``functions.parallel.fold_by_key``: greedy
-  bin-packing and sequence packing).
+  per-key Arrow fold, ``functions.parallel.fold_by_key``: bin-pack
+  group and file assignment, sequence packing). The diagnostics
+  panel's bin-pack simulation is a JVM-side higher-order fold.
 """
 
 __version__ = "0.1.0"

@@ -9,14 +9,13 @@ Semantics from the reference (constants and formula:
 
 The formula is written once, as SQL text (``READ_COST_SQL``), so it
 folds into whole-stage codegen and callers can splice it into the
-aggregate text of a stage — no Python in the hot path and no py4j
-call to build it. ``read_cost_array`` is the same formula over numpy
-arrays, for the Arrow folds that cannot run SQL.
+aggregate text of a stage — the diagnostics panel prices each BEFORE
+file and each simulated AFTER group with it, inside its bin-pack
+fold — with no Python in the hot path and no py4j call to build it.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -38,13 +37,3 @@ SCAN_OVERHEAD_SQL = f"({READ_COST_SQL}) * {MILLISECONDS_PER_SCAN}"
 def read_file_cost(size: str) -> Column:
     """Cost units to read one file of the ``size`` column's bytes."""
     return F.expr(READ_COST_SQL.format(size=size))
-
-
-def scan_overhead_ms(size: str) -> Column:
-    """Per-file scan overhead in milliseconds of the ``size`` column."""
-    return F.expr(SCAN_OVERHEAD_SQL.format(size=size))
-
-
-def read_cost_array(sizes: np.ndarray) -> np.ndarray:
-    """``READ_COST_SQL`` over an int64 array of byte counts."""
-    return sizes // FETCH_SIZE + 2

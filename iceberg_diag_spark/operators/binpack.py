@@ -9,17 +9,21 @@ closed group slightly exceeds the 750 MiB cap. The reset depends on
 where the previous group closed, which makes it a sequential stateful
 fold — not expressible with window prefix sums.
 
-Spark mapping: one kernel, ``pack_segments``, folds any number of
-independent segments (partitions) of ascending sizes at once — one
-prefix sum over all rows, then one vectorized ``searchsorted`` per
-pack-group step across every open segment. Every caller feeds it the
-partitions of an Arrow batch from ``parallel.fold_by_key`` (a hash
-repartition, a sort by (partition, size), one ``mapInArrow`` call per
-batch): the diagnostics panel through ``pack_segment_stats``,
-``binpack_groups`` and ``compaction.binpack_assign`` through
-``pack_keys`` for a row per group or per file. At 100 TB the input
-here is *metadata* scale (one row per data file — millions of rows,
-KBs per partition).
+Spark mapping, two forms of the one fold:
+- The diagnostics panel needs only each partition's group count and
+  read cost, so it folds JVM-side: a fixed-size ``aggregate`` over the
+  sorted ``collect_list`` of the partition's sizes, inside its
+  per-partition aggregate (``diagnostics._PACK_SQL``).
+- Callers that need a row per group or per file (``binpack_groups``,
+  ``compaction.binpack_assign``) feed ``pack_keys`` the partitions of
+  an Arrow batch from ``parallel.fold_by_key`` (a hash repartition, a
+  sort by (partition, size), one ``mapInArrow`` call per batch). Its
+  kernel, ``pack_segments``, folds any number of independent segments
+  (partitions) of ascending sizes at once — one prefix sum over all
+  rows, then one vectorized ``searchsorted`` per pack-group step
+  across every open segment.
+At 100 TB the input here is *metadata* scale (one row per data file —
+millions of rows, KBs per partition).
 
 Parallelism caveat (inherent to the reference's per-partition fold):
 a partition is never split across tasks, so an UNPARTITIONED table
@@ -35,7 +39,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from iceberg_diag_spark.functions.cost import MAX_GROUP_BYTE_SIZE, read_cost_array
+from iceberg_diag_spark.functions.cost import MAX_GROUP_BYTE_SIZE
 from iceberg_diag_spark.functions.parallel import fold_by_key
 
 
@@ -109,19 +113,6 @@ def pack_keys(sorted_sizes, starts, max_bytes_per_group: int = MAX_GROUP_BYTE_SI
     seg, ends = seg[order], ends[order]
     rank = np.arange(len(seg)) - np.searchsorted(seg, seg)
     return seg, rank, np.diff(ends, prepend=-1), totals[order]
-
-
-def pack_segment_stats(
-    sorted_sizes, seg_lens, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE
-):
-    """Aggregate form of pack_segments: per segment, (number of groups,
-    sum of group read costs) as int64 arrays — 0 and 0 for an empty
-    segment. Used by the diagnostics fold."""
-    seg, _, totals = pack_segments(sorted_sizes, seg_lens, max_bytes_per_group)
-    groups = np.bincount(seg, minlength=len(seg_lens)).astype("int64")
-    cost = np.zeros(len(seg_lens), dtype="int64")
-    np.add.at(cost, seg, read_cost_array(totals))
-    return groups, cost
 
 
 def binpack_groups(

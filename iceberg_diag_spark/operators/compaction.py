@@ -305,10 +305,14 @@ def compact_apply_binpack(
             F.sum(row_size).cast("long").alias("row_bytes"),
         )
 
-    # ONE scan: per-file stats + per-partition digests. Eager — every
-    # downstream decision must not re-read files the rewrite replaces.
-    per_file = materialize(_file_stats(pre), eager=True)
+    # ONE scan: per-file stats + per-partition digests, pinned (with
+    # each file's group) as ``asg`` below — eager, so no downstream
+    # decision re-reads files the rewrite replaces, and the assignment
+    # fold runs once for the plan and the rewrite's ``kept`` join.
+    per_file = _file_stats(pre)
     if file_sizes is not None:
+        # pinned: the coverage check and the sizing join both read it
+        per_file = materialize(per_file, eager=True)
         meta = file_sizes.select(
             partition_col, file_col, F.col("size_in_bytes").alias("fsz")
         )
@@ -332,18 +336,19 @@ def compact_apply_binpack(
                     f"({r[partition_col]}, {r[file_col]})" for r in uncovered
                 )
             )
-        sized = materialize(join_null_safe(
-            per_file, meta, [partition_col, file_col]
-        ), eager=True)
+        sized = join_null_safe(per_file, meta, [partition_col, file_col])
     else:
         sized = per_file.withColumn("fsz", F.col("row_bytes"))
 
-    asg = binpack_assign(
-        sized,
-        partition_col=partition_col,
-        file_col=file_col,
-        size_col="fsz",
-        max_bytes_per_group=max_bytes_per_group,
+    asg = materialize(
+        binpack_assign(
+            sized,
+            partition_col=partition_col,
+            file_col=file_col,
+            size_col="fsz",
+            max_bytes_per_group=max_bytes_per_group,
+        ),
+        eager=True,
     )
     # Per group, then per partition: the planned overhead prices each
     # group's byte total, every other column sums over its files.

@@ -3,27 +3,28 @@
 Re-expresses the reference aggregation engine
 (``icebergdiag/metrics/table_metrics.py:46-155``) Spark-first:
 
-  files ──hash repartition by partition, sort by (partition, size)──►
-         mapInArrow fold: BEFORE stats + bin-pack + AFTER stats,
-         one row per partition                           (A1, A8/A9)
+  files ──one grouped aggregate per partition, all JVM-side──►
+         BEFORE sums + collect_list of DATA sizes, folded by a
+         fixed-size higher-order bin-pack → AFTER stats  (A1, A8/A9)
   ──single agg──► all 9 global metrics                   (A2-A7, A10)
   one stack() unpivot ──► 9-row metric table with improvement (A11)
 
 Scale notes (100 TB):
 - The input relation is Iceberg *metadata* (one row per data file):
   even a 100 TB table is ~1e6-1e8 rows — comfortably shuffle-able.
-- The fold makes one Python call per Arrow batch, not per partition
-  value: each call folds every partition in its batch with numpy and
-  emits one aggregated row per partition, never file lists. Python
-  memory is bounded by one partition's rows plus one batch.
-- The final global agg is a single reduce — no driver-side loops, no
-  collect_list of sizes.
-- The only Python is the sequential bin-pack fold (see binpack.py).
+- No Python on this path: the sequential bin-pack fold (see
+  binpack.py) is an ``aggregate`` over the sorted sizes inside the
+  per-partition aggregate, so no file row crosses into a Python
+  worker. Memory is bounded by one partition's DATA sizes as one
+  array of longs; past its key threshold the ObjectHashAggregate
+  falls back to sort-based aggregation.
+- The final global agg is a single reduce — no driver-side loops.
 
-Driver side: the aggregate, manifest and unpivot stages are SQL text
-assembled once, at import (``_PER_PART_AGG_SQL``, ``_UNPIVOT_SQL``,
-``_IMPROVEMENT_SQL``), so each stage costs one ``selectExpr`` or
-``agg`` call instead of several py4j round trips per Column call.
+Driver side: every stage is SQL text assembled once, at import
+(``_BEFORE_SQL``, ``_PACK_SQL``, ``_PER_PART_AGG_SQL``,
+``_UNPIVOT_SQL``, ``_IMPROVEMENT_SQL``), so each stage costs one
+``selectExpr`` or ``agg`` call instead of several py4j round trips per
+Column call.
 
 Metric semantics pinned by tests/test_diagnostics_golden.py, derived
 from the reference unit test (tests/test_metric_calculator.py:46-91).
@@ -31,22 +32,15 @@ from the reference unit test (tests/test_metric_calculator.py:46-91).
 
 from __future__ import annotations
 
-from functools import partial
-
-import numpy as np
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from iceberg_diag_spark.functions.cost import (
     CONTENT_DATA,
     MAX_GROUP_BYTE_SIZE,
     MILLISECONDS_PER_SCAN,
-    read_cost_array,
-    scan_overhead_ms,
+    READ_COST_SQL,
+    SCAN_OVERHEAD_SQL,
 )
-from iceberg_diag_spark.functions.parallel import fold_by_key
-from iceberg_diag_spark.operators.binpack import pack_segment_stats
 
 # Display order + reference display names (table_metric.py:9-18).
 METRICS = [
@@ -62,6 +56,52 @@ METRICS = [
 ]
 
 
+# Per-partition BEFORE aggregate (A1/A3, table_metrics.py:56-74) as SQL
+# text over the {size} and {content} columns: counts, sizes and
+# overhead include ALL content kinds; data_* are DATA-only, where DATA
+# is ``content = 0`` and a NULL content is not DATA.
+_IS_DATA_SQL = f"coalesce({{content}} = {CONTENT_DATA}, false)"
+_DATA_SIZE_SQL = f"CASE WHEN {_IS_DATA_SQL} THEN CAST({{size}} AS BIGINT) END"
+_BEFORE_SQL = (
+    "count(*) AS file_count",
+    "sum({size}) AS total_size",
+    f"sum({SCAN_OVERHEAD_SQL}) AS scan_overhead",
+    f"sum(CASE WHEN {_IS_DATA_SQL} THEN 1 ELSE 0 END) AS data_file_count",
+    f"coalesce(sum({_DATA_SIZE_SQL}), 0) AS data_size",
+)
+_BEFORE_COLS = [s.rpartition(" AS ")[2] for s in _BEFORE_SQL]
+
+# Simulated compaction (A8/A9, table_metrics.py:136-141,179-197): the
+# check-before-append bin-pack of a partition's ascending DATA sizes
+# as one higher-order fold in the aggregate's result. The accumulator
+# is (g closed groups, t bytes of the open group, c read cost of the
+# closed groups); a group closes only when its running total already
+# EXCEEDS the cap, before the next file joins it. ``__open`` is false
+# for a delete-only partition, which packs an empty list: 0 groups.
+_PACK_SQL = (
+    f"aggregate(sort_array(collect_list({_DATA_SIZE_SQL})),"
+    " named_struct('g', 0L, 't', 0L, 'c', 0L),"
+    f" (a, s) -> IF(a.t > {MAX_GROUP_BYTE_SIZE},"
+    f" named_struct('g', a.g + 1, 't', s, 'c', a.c + {READ_COST_SQL.format(size='a.t')}),"
+    " named_struct('g', a.g, 't', a.t + s, 'c', a.c))) AS __pack",
+    f"count({_DATA_SIZE_SQL}) > 0 AS __open",
+)
+# The projection that adds the open group.
+_AFTER_SQL = (
+    "__pack.g + IF(__open, 1, 0) AS after_file_count",
+    f"(__pack.c + IF(__open, {READ_COST_SQL.format(size='__pack.t')}, 0))"
+    f" * {MILLISECONDS_PER_SCAN} AS after_scan_overhead",
+)
+
+
+def _before_exprs(size_col: str, content_col: str, *extra: str) -> list:
+    """``_BEFORE_SQL`` and then ``extra`` over the named columns."""
+    return [
+        F.expr(s.format(size=f"`{size_col}`", content=f"`{content_col}`"))
+        for s in _BEFORE_SQL + extra
+    ]
+
+
 def partition_stats(
     files: DataFrame,
     partition_col: str = "partition_key",
@@ -71,65 +111,11 @@ def partition_stats(
     """Per-partition BEFORE aggregates — one shuffle, map-side combine.
 
     Columns out: partition_key, file_count, total_size, scan_overhead,
-    data_file_count, data_size. Matches the reference single-pass
-    accumulator (table_metrics.py:56-74): counts/sizes/overhead include
-    ALL content kinds; data_* are DATA-only (content == 0).
+    data_file_count, data_size (``_BEFORE_SQL``).
     """
-    size = F.col(size_col)
-    is_data = F.col(content_col) == CONTENT_DATA
     return files.groupBy(F.col(partition_col).alias("partition_key")).agg(
-        F.count("*").alias("file_count"),
-        F.sum(size).alias("total_size"),
-        F.sum(scan_overhead_ms(size_col)).alias("scan_overhead"),
-        F.sum(F.when(is_data, 1).otherwise(0)).alias("data_file_count"),
-        F.coalesce(F.sum(F.when(is_data, size)), F.lit(0)).alias("data_size"),
+        *_before_exprs(size_col, content_col)
     )
-
-
-def _fold_keys(
-    batch: pa.RecordBatch, starts: np.ndarray, n_keys: int, schema: pa.Schema
-) -> pa.RecordBatch:
-    """One output row per key of a batch holding only COMPLETE keys,
-    sorted by (keys, size): numpy segment sums for the BEFORE stats and
-    one segmented bin-pack pass over the DATA rows for the AFTER stats."""
-    n = batch.num_rows
-    keys = batch.columns[:n_keys]
-    sizes = batch.column(n_keys).to_numpy().astype("int64", copy=False)
-    is_data = pc.fill_null(
-        pc.equal(batch.column(n_keys + 1), CONTENT_DATA), False
-    ).to_numpy(zero_copy_only=False)
-
-    def seg_sum(x):
-        return np.add.reduceat(x, starts)
-
-    data_file_count = seg_sum(is_data.astype("int64"))
-    groups, cost = pack_segment_stats(
-        sizes[is_data], data_file_count, MAX_GROUP_BYTE_SIZE
-    )
-    return pa.RecordBatch.from_arrays(
-        [k.take(starts).cast(pa.string()) for k in keys]
-        + [
-            np.diff(starts, append=n),
-            seg_sum(sizes),
-            seg_sum(read_cost_array(sizes)) * MILLISECONDS_PER_SCAN,
-            data_file_count,
-            seg_sum(np.where(is_data, sizes, 0)),
-            groups,
-            cost * MILLISECONDS_PER_SCAN,
-        ],
-        schema=schema,
-    )
-
-
-_STAT_COLS = [
-    "file_count",
-    "total_size",
-    "scan_overhead",
-    "data_file_count",
-    "data_size",
-    "after_file_count",
-    "after_scan_overhead",
-]
 
 
 def partition_stats_with_after(
@@ -146,31 +132,37 @@ def partition_stats_with_after(
     sum over groups of read_cost(group_total) * 1ms. Partitions whose
     files are all deletes get 0 groups (reference packs an empty list).
 
-    Plan shape: ONE scan → ``parallel.fold_by_key`` on the group key,
-    sorted by size (one hash exchange, a sort, one ``mapInArrow``).
-    Each Python call folds EVERY key of its Arrow batch at once:
-    ``np.add.reduceat`` for the BEFORE aggregates and one
-    ``binpack.pack_segment_stats`` pass for the AFTER columns. NULL
-    keys form one group, as in groupBy; empty input gives no rows.
+    Plan shape: ONE scan → one grouped aggregate on the group key (one
+    hash exchange; ``collect_list`` makes it an ObjectHashAggregate) →
+    one projection, all JVM-side. The aggregate computes the BEFORE
+    sums (``_BEFORE_SQL``) and ``collect_list`` of the DATA sizes; its
+    result sorts that list and folds it (``_PACK_SQL``), and the
+    projection adds the open group (``_AFTER_SQL``). NULL keys form
+    one group, as in groupBy; empty input gives no rows.
+
+    Memory: one partition's DATA sizes are held as one array of longs
+    (8 bytes per file) in the final aggregate; past its key threshold
+    the ObjectHashAggregate falls back to sort-based aggregation
+    instead of growing its hash map.
 
     Output: one row per partition — (partition_key, file_count,
     total_size, scan_overhead, data_file_count, data_size,
-    after_file_count, after_scan_overhead). With table_col set, the
-    group key is (table, partition) and the table column is carried
-    through — the multi-table single-job path (SURVEY §2 X1: the
-    reference fans a thread pool across tables; here every table's
-    metadata is one unioned relation and Spark schedules all tables'
-    partitions as one job).
+    after_file_count, after_scan_overhead), keys cast to string. With
+    table_col set, the group key is (table, partition) and the table
+    column is carried through — the multi-table single-job path
+    (SURVEY §2 X1: the reference fans a thread pool across tables;
+    here every table's metadata is one unioned relation and Spark
+    schedules all tables' partitions as one job).
     """
     group_cols = ([table_col] if table_col else []) + [partition_col]
-    n_keys = len(group_cols)
-    out_schema = pa.schema(
-        [(c, pa.string()) for c in group_cols[:-1] + ["partition_key"]]
-        + [(c, pa.int64()) for c in _STAT_COLS]
+    out_keys = group_cols[:-1] + ["partition_key"]
+    return files.groupBy(*group_cols).agg(
+        *_before_exprs(size_col, content_col, *_PACK_SQL)
+    ).selectExpr(
+        *(f"CAST(`{c}` AS STRING) AS `{o}`" for c, o in zip(group_cols, out_keys)),
+        *_BEFORE_COLS,
+        *_AFTER_SQL,
     )
-    cols = files.select(*group_cols, size_col, content_col)
-    fold = partial(_fold_keys, n_keys=n_keys, schema=out_schema)
-    return fold_by_key(cols, group_cols, [size_col], fold, out_schema)
 
 
 # Second-level aggregate over the per-partition rows, as SQL text.

@@ -16,7 +16,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 import iceberg_diag_spark
-from iceberg_diag_spark.functions.cost import MAX_GROUP_BYTE_SIZE
+from iceberg_diag_spark.functions.cost import FETCH_SIZE, MAX_GROUP_BYTE_SIZE
 from iceberg_diag_spark.operators.binpack import binpack_groups, pack_sizes
 from iceberg_diag_spark.operators.compaction import binpack_assign
 from iceberg_diag_spark.operators.packing import (
@@ -109,37 +109,110 @@ _EDGE_SIZES = st.one_of(
 @given(st.lists(st.lists(_EDGE_SIZES, max_size=40), max_size=12))
 @settings(max_examples=300, deadline=None)
 def test_segmented_kernel_equals_pack_sizes_per_segment(segments):
-    """The segmented kernel behind the diagnostics fold equals
-    pack_sizes applied to each segment on its own — groups, group
-    count and read cost — with empty segments, zero sizes and sizes of
-    exactly the cap and the cap ± 1."""
-    from iceberg_diag_spark.functions.cost import FETCH_SIZE
-    from iceberg_diag_spark.operators.binpack import (
-        pack_segment_stats,
-        pack_segments,
-    )
+    """The segmented kernel behind the bin-pack folds equals
+    pack_sizes applied to each segment on its own, with empty
+    segments, zero sizes and sizes of exactly the cap and the cap ± 1."""
+    from iceberg_diag_spark.operators.binpack import pack_segments
 
     flat = [s for seg in segments for s in sorted(seg)]
     lens = [len(seg) for seg in segments]
     seg, ends, totals = pack_segments(flat, lens)
-    groups, cost = pack_segment_stats(flat, lens)
     offset = 0
     for j, sizes in enumerate(segments):
-        want = pack_sizes(sizes)
         mine = seg == j
         got = list(
             zip(np.diff(ends[mine], prepend=offset - 1).tolist(), totals[mine].tolist())
         )
-        assert got == want
-        assert groups[j] == len(want)
-        assert cost[j] == sum(t // FETCH_SIZE + 2 for _, t in want)
+        assert got == pack_sizes(sizes)
         offset += len(sizes)
+
+
+def _read_cost(total):
+    return total // FETCH_SIZE + 2
+
+
+def _python_stats(rows):
+    """Per (table, partition) key: the BEFORE columns and pack_sizes'
+    group count and read cost of its DATA sizes, in plain Python."""
+    by_key = {}
+    for table, key, size, content in rows:
+        by_key.setdefault((table, key), []).append((size, content))
+    out = {}
+    for k, files in by_key.items():
+        data = [s for s, c in files if c == 0]
+        packs = pack_sizes(data)
+        out[k] = (
+            len(files),
+            sum(s for s, _ in files),
+            sum(_read_cost(s) for s, _ in files),
+            len(data),
+            sum(data),
+            len(packs),
+            sum(_read_cost(t) for _, t in packs),
+        )
+    return out
+
+
+def test_panel_aggregate_equals_pack_sizes_per_partition(spark):
+    """partition_stats_with_after — the diagnostics panel's one
+    JVM-side aggregate — equals pack_sizes per partition on seeded
+    random partitions (zero sizes, sizes of the cap and the cap ± 1),
+    on both the single-table and the (table, partition) path, plus
+    the edge partitions below."""
+    from iceberg_diag_spark.operators.diagnostics import partition_stats_with_after
+
+    cap = MAX_GROUP_BYTE_SIZE
+    edge = [0, 1, cap - 1, cap, cap + 1, 2_000 * MIB]
+    rng = random.Random(5)
+    rows = []
+    for table in ("t1", "t2"):
+        for p in [*range(120), None]:
+            for _ in range(rng.randint(1, 40)):
+                size = rng.choice(edge) if rng.random() < 0.3 else rng.randint(0, 900 * MIB)
+                content = rng.choice([0, 0, 0, 1, 2, None])
+                rows.append((table, None if p is None else f"p{p}", size, content))
+        rows += [
+            # the running total reaches the cap exactly: no close
+            (table, "at_cap", cap // 2, 0),
+            (table, "at_cap", cap // 2, 0),
+            (table, "at_cap", 5 * MIB, 0),
+            *[(table, "zeros", 0, 0)] * 5,
+            # every file alone over the cap: one group each
+            *[(table, "over_cap", n * cap + 1, 0) for n in (1, 2, 3)],
+            (table, "deletes_only", 5 * MIB, 1),
+            (table, "deletes_only", 7 * MIB, 2),
+            (table, "null_content", 9 * MIB, None),
+            (table, "null_content", 0, 0),
+        ]
+    df = spark.createDataFrame(
+        rows,
+        "table_name string, partition_key string,"
+        " file_size_in_bytes long, content int",
+    )
+    want = _python_stats(rows)
+    multi = partition_stats_with_after(df, table_col="table_name").collect()
+    assert {(r[0], r[1]): tuple(r[2:]) for r in multi} == want
+    assert len(multi) == len(want)
+
+    t1 = [r for r in rows if r[0] == "t1"]
+    single = partition_stats_with_after(
+        df.filter(F.col("table_name") == "t1").drop("table_name")
+    ).collect()
+    got = {r[0]: tuple(r[1:]) for r in single}
+    assert got == {k: v for (_, k), v in _python_stats(t1).items()}
+    assert len(single) == len(got)
+    after = {k: v[-2:] for k, v in got.items()}
+    assert after["at_cap"] == (1, _read_cost(cap + 5 * MIB))
+    assert after["zeros"] == (1, 2)
+    assert after["over_cap"] == (3, sum(_read_cost(n * cap + 1) for n in (1, 2, 3)))
+    assert after["deletes_only"] == (0, 0)
+    assert got["null_content"][3:] == (1, 0, 1, 2)
+    assert None in got
 
 
 def _reference_stats(df, keys):
     """partition_stats for the BEFORE columns plus pack_sizes of each
     key's DATA sizes, computed in Python, for the AFTER columns."""
-    from iceberg_diag_spark.functions.cost import FETCH_SIZE
     from iceberg_diag_spark.operators.diagnostics import partition_stats
 
     rows = df.collect()
@@ -155,7 +228,7 @@ def _reference_stats(df, keys):
             out.add(
                 ((key,) if key else ())
                 + tuple(r)
-                + (len(packs), sum(t // FETCH_SIZE + 2 for _, t in packs))
+                + (len(packs), sum(_read_cost(t) for _, t in packs))
             )
     return out
 
@@ -290,7 +363,9 @@ _CASES = {
 def test_arrow_fold_matches_reference_across_batches(spark, caller):
     """Every caller of fold_by_key with 7-row Arrow batches, so keys
     straddle batches, equals its Python reference per key (pack_sizes
-    or pack_fold): a NULL key, ties on the value, an empty input."""
+    or pack_fold): a NULL key, ties on the value, an empty input. The
+    diagnostics panel, a JVM-side aggregate, must not depend on the
+    batch size either."""
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(conf)
     spark.conf.set(conf, "7")

@@ -102,12 +102,43 @@ def _assert_single_arrow_fold(plan: str) -> None:
     )
 
 
-def test_diag_metrics_python_only_for_binpack(spark):
-    _assert_single_arrow_fold(_plan(spark, "diag_metrics"))
+def _assert_jvm_only_panel(plan: str, keys: list[str]) -> None:
+    # the bin-pack simulation is a higher-order fold inside the
+    # per-partition aggregate: no Python node of any kind (the
+    # multi-table manifest counts are a local relation the JVM
+    # unpickles, which names Python only in its scan arguments)
+    assert _op_count(plan, "MapInArrow") == 0
+    assert not re.search(r"^\(\d+\) \w*(Python|Pandas|Arrow)", plan, re.M)
+    assert _op_count(plan, "Scan parquet") == 1
+    # exactly one hash exchange on the group key, and it feeds the
+    # final per-partition aggregate
+    on_keys = [
+        int(m.group(1))
+        for m in re.finditer(
+            r"^\((\d+)\) Exchange\n.*\nArguments: hashpartitioning\((.*)\),"
+            r" ENSURE_REQUIREMENTS,",
+            plan,
+            re.M,
+        )
+        if re.sub(r"#\d+L?", "", m.group(2)).split(", ")[:-1] == keys
+    ]
+    assert len(on_keys) == 1, on_keys
+    agg = re.search(
+        rf"^\({on_keys[0] + 1}\) ObjectHashAggregate\n.*\nKeys \[\d+\]: \[(.*)\]",
+        plan,
+        re.M,
+    )
+    assert agg and re.sub(r"#\d+L?", "", agg.group(1)).split(", ") == keys
 
 
-def test_diag_metrics_multi_python_only_for_binpack(spark):
-    _assert_single_arrow_fold(_plan(spark, "diag_metrics_multi_table"))
+def test_diag_metrics_panel_has_no_python(spark):
+    _assert_jvm_only_panel(_plan(spark, "diag_metrics"), ["partition_key"])
+
+
+def test_diag_metrics_multi_panel_has_no_python(spark):
+    _assert_jvm_only_panel(
+        _plan(spark, "diag_metrics_multi_table"), ["table_name", "partition_key"]
+    )
 
 
 def test_diag_binpack_groups_single_arrow_fold(spark):
@@ -381,6 +412,9 @@ def test_every_registry_plan_free_of_scale_killers(spark):
 # md5(concat(sort_array(collect_list(id)))) holding ~90% of a corpus
 # in one aggregation buffer) fails here by name.
 _BOUNDED_COLLECT_OK = {
+    "diag_metrics",         # one partition's DATA file sizes (longs),
+    "diag_metrics_multi_table",  # folded by the JVM-side bin-pack:
+                            #   metadata scale, one row per file
     "source_overlap",       # collect_set(src) bounded by #sources
     "user_event_paths",     # per-user path, truncated to first k events
     "minhash_pairs",        # LSH bucket ids: exact dups pre-collapsed,
