@@ -6,10 +6,12 @@ or the local session catalog in tests.
 
 Reference behavior mirrored:
 - list_namespaces → sorted namespace names (manager.py:74-76);
-- list_tables(db, pattern) → paginated scan + Iceberg-type filter +
-  fnmatch glob + sort (manager.py:84-113) — Spark's SHOW TABLES
-  handles pagination internally; the glob becomes an anchored regex
-  filter evaluated in the engine, not the driver;
+- list_tables(db, pattern) → paginated scan + fnmatch glob + sort
+  (manager.py:84-113) — Spark's SHOW TABLES handles pagination
+  internally; the glob becomes an anchored regex filter evaluated in
+  the engine, not the driver;
+- the reference's Iceberg-type filter is iceberg_tables; the CLI
+  diagnoses only the glob matches it keeps;
 - a LIMIT 1 existence probe (manager.py:63-72).
 """
 
@@ -61,6 +63,8 @@ def iceberg_tables(spark: SparkSession, database: str) -> DataFrame:
     sessions are thread-safe for concurrent sql() calls."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.errors import AnalysisException
+
     def probe(name: str) -> str | None:
         try:
             detail = spark.sql(
@@ -73,8 +77,13 @@ def iceberg_tables(spark: SparkSession, database: str) -> DataFrame:
             }
             if "iceberg" in str(provider.get("Provider", "")).lower():
                 return name
-        except Exception:
-            pass
+        except AnalysisException as ex:
+            # a temp view (listed with the namespace's tables) or a
+            # table dropped since the listing is not an Iceberg table;
+            # any other failure, such as an unreachable catalog, must
+            # not read as "no tables"
+            if ex.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
+                raise
         return None
 
     names = [t.name for t in spark.catalog.listTables(database)]

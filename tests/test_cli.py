@@ -166,3 +166,20 @@ def test_cli_maintenance_output_independent_of_shuffle_partitions(
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert "snapshot retention" in outs[0]
     assert outs[0] == outs[1]
+
+
+def test_cli_skips_non_iceberg_tables(spark, capsys):
+    """A glob that matches only non-Iceberg tables has nothing to
+    diagnose: the CLI reports it instead of reading a `.files`
+    metadata table that a plain table does not have."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS probe_db")
+    spark.range(3).write.mode("overwrite").saveAsTable("probe_db.plain_t")
+    try:
+        assert main(
+            ["--database", "probe_db", "--table-name", "*"], spark=spark
+        ) == 1
+        out = capsys.readouterr().out
+        assert "error:" in out and "no tables match" in out
+    finally:
+        spark.sql("DROP TABLE IF EXISTS probe_db.plain_t")
+        spark.sql("DROP DATABASE IF EXISTS probe_db")
