@@ -177,7 +177,7 @@ def join_cardinality(
     join_rows, worst_key_repr, worst_key_rows)."""
     # deliberately NOT checkpointed: pinning lc/rc to derive the side
     # totals from them (Σ counts = count(*)) read a consistent
-    # +25-50% across four A/B pairs (r15 ab7/ab8/closing/adj) — the
+    # +25-50% across four A/B pairs — the
     # two barrier materializations cost more than the two
     # column-pruned count scans they replace on a box that runs the
     # replayed branches in parallel

@@ -1596,7 +1596,7 @@ def hourly_sli_rollup(events: DataFrame) -> DataFrame:
     rollup — sli_burn_rate's corpus pass, shared with the streaming
     twin (which accumulates per-batch partial rollups and re-sums
     them; partial sums compose exactly)."""
-    # Integer floor division end to end (ADVICE r9): the former
+    # Integer floor division end to end: the former
     # double true-division + cast truncated toward zero, disagreeing
     # with the oracle's floor // for pre-1970 (negative-epoch) hours;
     # date_trunc makes the micros an exact hour multiple, so `div`

@@ -628,7 +628,7 @@ def bloom_advisor(
     """
     # deliberately NOT checkpointed: the three consumers replay a
     # column-pruned scan + cast only, which parallel stages recompute
-    # for free locally while a barrier read +8-25% here (r15 ab8/ab9)
+    # for free locally while a barrier read +8-25% here (two A/B pairs)
     vals = column_values.select(
         F.col(file_col).alias("file_id"),
         F.col(value_col).cast("long").alias("v"),

@@ -93,8 +93,8 @@ def frame_sample(media: DataFrame, every_k: int = 4) -> DataFrame:
     splitting needs no codec, so unlike decode_features it never
     leaves whole-stage codegen — with every_k=1 (frame_dedup's
     default) this path touches every byte of the corpus and a Python
-    loop here was the r5 perf-weak flag. No shuffle at all; output is
-    ~1/k of input volume. Emits (doc_id, frame_idx, frame_len,
+    loop here was its flagged perf weak point. No shuffle at all;
+    output is ~1/k of input volume. Emits (doc_id, frame_idx, frame_len,
     frame_md5)."""
     n_frames = F.ceil(
         F.length(F.col("payload")) / F.lit(FRAME_BYTES)

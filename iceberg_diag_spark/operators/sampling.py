@@ -498,7 +498,7 @@ def data_mixing_plan(
     tokens_alloc_s = floor(budget · mass_s^α / Σ mass^α);
     epochs_ppm_s = floor(1e6 · tokens_alloc_s / mass_s). The α-power
     shares use the same double pow + single floor as
-    source_mixture_weights (cross-engine stable there since r4); all
+    source_mixture_weights (cross-engine stable there); all
     downstream arithmetic is integer.
 
     One groupBy to the #sources relation; windows run over that

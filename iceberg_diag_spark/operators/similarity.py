@@ -777,7 +777,7 @@ def semantic_dedup(
     # interpreted folds (dot + two norms) — ~3x on the hot path
     norm = l2_norm(F.col("v"))
     # Both self-join sides replay this lineage (scan + assignment
-    # join + normalize transform). Measured both ways (r15 ab7/ab8):
+    # join + normalize transform). Measured both ways (two A/B pairs):
     # pinning the normalized copy cost a consistent +13-23% here —
     # the two replays run as parallel stages on an idle box while the
     # checkpoint serializes them behind a materialization barrier, so
@@ -1897,7 +1897,7 @@ def ann_recall_eval(
     )
     # both sides of the scoring join are panel-scale (n_queries × k —
     # the query panel itself broadcasts above); an SMJ here sorts the
-    # same bounded relation twice (r10 matryoshka pattern)
+    # same bounded relation twice (as in matryoshka_audit)
     return (
         exact_topk.join(F.broadcast(hit), ["query_id", "neighbor_id"], "left")
         .groupBy("query_id")
@@ -2623,7 +2623,7 @@ def matryoshka_audit(
     """
     # Dedupe the prefixes against the full dim: prefix_dims containing
     # `dim` would otherwise emit duplicate n2_<dim> aliases and fail
-    # with an opaque AnalysisException (ADVICE r9).
+    # with an opaque AnalysisException.
     dims = tuple(sorted(set(prefix_dims) - {dim})) + (dim,)
     base = ensure_parallelism(embeddings).select(
         F.col(id_col), _quantize(F.col(vec_col), scale_bits).alias("q")
@@ -2655,7 +2655,7 @@ def matryoshka_audit(
                 # dims are all zero has n2_d = 0; the bare division
                 # yields NULL in Spark but inf in DuckDB (where
                 # floor(inf)::BIGINT errors) — pin both engines to 0 so
-                # zero-prefix vectors rank deterministically (ADVICE r9).
+                # zero-prefix vectors rank deterministically.
                 F.when(
                     (F.col(f"n2_{d}") == 0) | (F.col(f"qn2_{d}") == 0),
                     F.lit(0).cast("long"),

@@ -720,7 +720,7 @@ def unigram_logprob(
     # deliberately NOT checkpointed: the scalar-total branch replays
     # one tokenize+count pass, which parallel stages recompute for
     # free on an idle box while a checkpoint barrier costs a
-    # consistent +10-36% here (r15 ab7/ab8/ab9); on a cluster where
+    # consistent +10-36% here (three A/B pairs); on a cluster where
     # the tokenize pass is the wall, pin `vocab` first
     vocab = toks.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
     tot = vocab.agg(F.sum("cnt").cast("double").alias("n_total"))
@@ -805,8 +805,8 @@ def dsir_logratio(
         (F.col(source_col) == target_source).alias("__is_t"),
         F.explode(tokens(F.col(text_col))).alias("term"),
     )
-    # deliberately NOT checkpointed (the unigram_logprob adjudication,
-    # r15 ab8/ab9: a barrier here read +10-21% while the replayed
+    # deliberately NOT checkpointed (as in unigram_logprob: over two
+    # A/B pairs a barrier here read +10-21% while the replayed
     # tokenize+count branch recomputes in parallel for free locally)
     vocab = toks.groupBy("term").agg(
         F.sum(F.when(F.col("__is_t"), 1).otherwise(0)).alias("ct"),
@@ -2315,7 +2315,7 @@ def gopher_rules_audit(
     n = F.size(t)
     # 64-bit seed: an IntegerType accumulator would wrap a pathological
     # >2^31-token-char document where the DuckDB oracle sums in BIGINT
-    # (ADVICE r9) — seed long so both engines agree on any input.
+    # — seed long so both engines agree on any input.
     sum_len = F.aggregate(
         t, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
     )

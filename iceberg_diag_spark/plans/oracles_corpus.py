@@ -30,7 +30,7 @@ from iceberg_diag_spark.plans.oracles_dedup import (
 )
 
 
-# Round-4 corpus-assembly family: split / cap / mixture / label audit
+# Corpus-assembly family: split / cap / mixture / label audit
 # --------------------------------------------------------------------
 
 
@@ -371,7 +371,7 @@ SELECT (SELECT CAST(count(*) AS BIGINT) FROM orders)   AS n_left,
 
 
 # --------------------------------------------------------------------
-# Round-5 additions: substring-duplication audit, winnowing
+# Substring-duplication audit, winnowing
 # fingerprints, token-budget water-filling, join-selectivity audit
 # --------------------------------------------------------------------
 
@@ -1440,9 +1440,9 @@ def _batch_survivor_chain(
     every `documents` reference rebound to the increment). `pdata`
     and `final` default to the reconcile entry's survivor-id form
     (rendered SQL byte-identical to the pre-parameter version,
-    pinned in test_round13_ops); the retraction oracle overrides both
-    to get the per-doc release relation (real md5 shards + packed
-    seq/gid) for the retraction ledger."""
+    pinned in tests/test_oracles_corpus.py); the retraction oracle
+    overrides both to get the per-doc release relation (real md5
+    shards + packed seq/gid) for the retraction ledger."""
     inner = _funnel_family_sql(pdata=pdata, final=final)
     # rebind the three `documents` scans (fnorm, and the embedded
     # exact-collapse chash/rdocs) to the increment; the aliased form

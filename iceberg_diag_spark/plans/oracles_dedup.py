@@ -116,10 +116,10 @@ star AS (
 # The Carter-Wegman hash → 16-seed signature → 4-band key sub-chain
 # (everything downstream of an `eg(doc_id, gram)` shingle relation) —
 # the ONE definition of the MinHash family both the pair oracle here
-# and the round-12 reconcile oracle compose, so the hash family and
+# and the reconcile oracle compose, so the hash family and
 # band width cannot silently diverge between oracles (byte-identity
 # of _MINHASH_PAIRS_SQL under the extraction is pinned in
-# tests/test_round12_ops.py).
+# tests/test_oracles_dedup.py).
 _SIG_KEYS_CTES = r"""hh AS (
   SELECT doc_id,
          ('0x' || substring(md5(gram), 1, 8))::BIGINT AS g1,
@@ -687,10 +687,10 @@ def _corpus_curation(spark, sf_dir):
     # language are per-row, so they commute with dedup (the min-id
     # survivor keeps its own values). The dedup survivor is picked
     # with min(doc_id) OVER (PARTITION BY hash): one window shuffle
-    # on the uniform 32-byte hash key. Round 1 used a keeper
-    # aggregate + semi join, which re-derived the enriched lineage
-    # (sha256 + quality + language exprs) on both join sides —
-    # effectively the whole 3.1 s bench cost of this query.
+    # on the uniform 32-byte hash key. A keeper aggregate + semi join
+    # re-derives the enriched lineage (sha256 + quality + language
+    # exprs) on both join sides — measured as effectively the whole
+    # 3.1 s bench cost of this query.
     enriched = dedup.ensure_parallelism(docs).select(
         "doc_id",
         F.col("n_chars").cast("long").alias("n_chars"),
@@ -843,7 +843,7 @@ WHERE dotp / (sqrt(aa) * sqrt(bb)) >= 0.45
 """
 
 
-# Round-5 LLM-pipeline additions: within-doc repetition removal,
+# LLM-pipeline operators: within-doc repetition removal,
 # unigram-LM perplexity proxy, and SemDeDup-style cluster-bucketed
 # semantic dedup.
 # --------------------------------------------------------------------
@@ -1137,7 +1137,7 @@ FROM h2 JOIN tot ON h2.source = tot.source
 
 
 # --------------------------------------------------------------------
-# Round-5d additions: vocabulary coverage, readability, char-ngram
+# Vocabulary coverage, readability, char-ngram
 # novelty, dedup survivorship accounting, Jaccard threshold
 # calibration, and exact distributed RFM segmentation.
 # --------------------------------------------------------------------
@@ -1397,7 +1397,7 @@ GROUP BY source_a, source_b
 """
 
 
-# Round-6 additions: pairwise clone detection, DSIR importance
+# Pairwise clone detection, DSIR importance
 # scores, Heaps-law vocabulary growth, file-size skew, split drift.
 # --------------------------------------------------------------------
 
@@ -1503,7 +1503,7 @@ FROM per_shard p LEFT JOIN news n ON p.shard_id = n.shard_id
 
 
 # --------------------------------------------------------------------
-# Round-6b extensions: retrieval scoring, SCD2 history, privacy audit,
+# Retrieval scoring, SCD2 history, privacy audit,
 # collocation mining
 # --------------------------------------------------------------------
 
@@ -2929,7 +2929,7 @@ _UNI_CAND = (
 
 def _uni_seg_block(m: int) -> str:
     """The sp{m}/dp{m}/bt{m} CTE triple segmenting every word form
-    under score{m} — shared by the EM unroll and (round 11) the
+    under score{m} — shared by the EM unroll and the
     encoder's final segmentation pass."""
     c1 = _UNI_CAND.format(v="x")
     c2 = _UNI_CAND.format(v="y")
@@ -2992,7 +2992,7 @@ def _unigram_chain(
     max_word_len: int = 24,
 ) -> str:
     """The full WITH chain through score{k_em} (no final SELECT) —
-    shared by the trainer oracle and round 11's encoder oracle."""
+    shared by the trainer oracle and the encoder oracle."""
     vals = ", ".join(f"({l})" for l in range(1, max_piece_len + 1))
 
     score_block = _uni_score_block
@@ -3385,7 +3385,7 @@ def _train_lr_sql(
 
     c_f = ", source" if carry else ""
     c_feats = ",\n         source" if carry else ""
-    # the hand-set keep rule, expression-identical to the r5
+    # the hand-set keep rule, expression-identical to the
     # quality_classifier_score oracle (same left-to-right IEEE sum)
     c_raw = (
         ",\n         source,\n"

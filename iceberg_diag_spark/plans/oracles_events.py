@@ -274,7 +274,7 @@ def _orders_decimal_totals(spark, sf_dir):
     decimal sum has no float drift. Output is emitted as integer
     CENTS (decimal * 100 → BIGINT): Spark decimal(38,2) and DuckDB
     DECIMAL(38,2) hold identical digits but serialize differently in
-    the driver's hash canonicalization (round-1 hash_match failure —
+    the driver's hash canonicalization (an observed hash_match failure —
     values were digit-for-digit equal), so the contract column type
     is the representation-stable integer."""
     orders = _t(spark, sf_dir, "orders")

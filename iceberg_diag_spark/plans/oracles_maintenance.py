@@ -195,9 +195,8 @@ GROUP BY partition_spec_id, content
 
 
 # --------------------------------------------------------------------
-# Round-5d additions: sort-column advisor over file bounds, per-
-# dimension embedding geometry, and the event Markov transition
-# matrix.
+# Sort-column advisor over file bounds, per-dimension embedding
+# geometry, and the event Markov transition matrix.
 # --------------------------------------------------------------------
 
 def _diag_clustering_advisor(spark, sf_dir):

@@ -1187,7 +1187,7 @@ def _matryoshka_sql(k=5, query_mod=100, dims=(16, 32, 64)) -> str:
         f" i -> q[i] * q[i])) AS n2_{d}"
         for d in dims
     )
-    # Zero-prefix guard mirrors the Spark side (ADVICE r9): a zero
+    # Zero-prefix guard mirrors the Spark side: a zero
     # prefix norm would make DuckDB divide to inf (floor(inf)::BIGINT
     # errors) where Spark yields NULL — both engines pin the cosine
     # to 0 so zero-prefix vectors rank deterministically.
