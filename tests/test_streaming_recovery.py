@@ -9,17 +9,14 @@ makes the streaming operators restartable in production.
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from iceberg_diag_spark.streaming import stream_ops as so
 
-ROWS_SCHEMA = (
-    "event_id long, ts_s string, user_id long, event_type string, "
-    "value double, props string"
-)
+from helpers import write_event_file
+
 
 BATCH1 = [
     (1, "2024-01-01 10:00:10", 1, "click", 1.0, "{}"),
@@ -31,24 +28,6 @@ BATCH2 = [
     (5, "2024-01-01 12:30:00", 1, "click", 1.0, "{}"),  # dup key again
     (6, "2024-01-01 13:00:00", 2, "click", 1.0, "{}"),
 ]
-
-
-def _write_file(spark, base: str, name: str, rows) -> None:
-    df = spark.createDataFrame(rows, ROWS_SCHEMA).select(
-        "event_id",
-        (
-            F.unix_timestamp("ts_s", "yyyy-MM-dd HH:mm:ss").cast("long")
-            * 1_000_000_000
-        ).alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(base + ".tmp")
-    part = [f for f in os.listdir(base + ".tmp") if f.endswith(".parquet")][0]
-    shutil.move(os.path.join(base + ".tmp", part), os.path.join(base, name))
-    shutil.rmtree(base + ".tmp")
 
 
 def _drain_to_parquet(stream_df, sink: str, checkpoint: str) -> None:
@@ -71,7 +50,7 @@ def test_restart_from_checkpoint_is_exactly_once(spark, tmp_path_factory):
     checkpoint = root + "/ckpt"
     os.makedirs(base)
 
-    _write_file(spark, base, "f1.parquet", BATCH1)
+    write_event_file(spark, base, "f1.parquet", BATCH1)
     ev = so.read_events_stream(spark, root)
     _drain_to_parquet(so.dedup_keys_stream(ev), sink, checkpoint)
 
@@ -84,7 +63,7 @@ def test_restart_from_checkpoint_is_exactly_once(spark, tmp_path_factory):
     # checkpoint + sink — only the new file is processed, and keys
     # already emitted (user 1 click) are not emitted again even though
     # dedup state is also restored from the checkpoint
-    _write_file(spark, base, "f2.parquet", BATCH2)
+    write_event_file(spark, base, "f2.parquet", BATCH2)
     ev2 = so.read_events_stream(spark, root)
     _drain_to_parquet(so.dedup_keys_stream(ev2), sink, checkpoint)
 
@@ -116,7 +95,7 @@ def test_cdc_merge_state_survives_restart(spark, tmp_path_factory):
     base = root + "/events.parquet"
     ckpt = root + "/ckpt"
     os.makedirs(base)
-    _write_file(spark, base, "f1.parquet", [
+    write_event_file(spark, base, "f1.parquet", [
         (1, "2024-01-01 10:00:00", 1, "view", 1.0, "{}"),
         (2, "2024-01-01 10:00:01", 1, "view", 2.0, "{}"),
         (3, "2024-01-01 10:00:02", 2, "view", 9.0, "{}"),
@@ -157,7 +136,7 @@ def test_cdc_merge_state_survives_restart(spark, tmp_path_factory):
     got1 = latest_rows()
     assert got1[1].n_applied == 2 and got1[1].last_value == 2.0
 
-    _write_file(spark, base, "f2.parquet", [
+    write_event_file(spark, base, "f2.parquet", [
         (4, "2024-01-01 10:05:00", 1, "view", 5.0, "{}"),
         (5, "2024-01-01 10:05:01", 2, "error", 0.0, "{}"),  # delete
     ])

@@ -10,15 +10,10 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import functions as F
-
 from iceberg_diag_spark.operators.events import seasonality_profile
 from iceberg_diag_spark.streaming import stream_ops as so
 
-ROWS_SCHEMA = (
-    "event_id long, ts_s string, user_id long, event_type string, "
-    "value double, props string"
-)
+from helpers import write_event_file
 
 
 def _mk_rows(day: str, hour: int, n: int, eid0: int):
@@ -33,24 +28,6 @@ def _mk_rows(day: str, hour: int, n: int, eid0: int):
     return rows, eid
 
 
-def _write_file(spark, base: str, name: str, rows) -> None:
-    df = spark.createDataFrame(rows, ROWS_SCHEMA).select(
-        "event_id",
-        (
-            F.unix_timestamp("ts_s", "yyyy-MM-dd HH:mm:ss").cast("long")
-            * 1_000_000_000
-        ).alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(base + ".tmp")
-    part = [f for f in os.listdir(base + ".tmp") if f.endswith(".parquet")][0]
-    shutil.move(os.path.join(base + ".tmp", part), os.path.join(base, name))
-    shutil.rmtree(base + ".tmp")
-
-
 def test_multi_batch_drain_equals_batch_profile(spark, tmp_path_factory):
     """Two files drained one-per-trigger: the re-summed rollup must
     re-derive EXACTLY the batch profile — the (Mon, 09) cell receives
@@ -63,10 +40,10 @@ def test_multi_batch_drain_equals_batch_profile(spark, tmp_path_factory):
     # 2024-01-01 and 2024-01-08 are Mondays
     r1, eid = _mk_rows("2024-01-01", 9, 10, 0)
     r2, eid = _mk_rows("2024-01-01", 3, 2, eid)
-    _write_file(spark, base, "f1.parquet", r1 + r2)
+    write_event_file(spark, base, "f1.parquet", r1 + r2)
     r3, eid = _mk_rows("2024-01-08", 9, 40, eid)  # same weekly cell
     r4, eid = _mk_rows("2024-01-02", 3, 2, eid)
-    _write_file(spark, base, "f2.parquet", r3 + r4)
+    write_event_file(spark, base, "f2.parquet", r3 + r4)
 
     rollup = tempfile.mkdtemp(prefix="seasonality_rollup_test_")
     try:

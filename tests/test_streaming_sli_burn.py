@@ -8,15 +8,10 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import functions as F
-
 from iceberg_diag_spark.operators.events import sli_burn_rate
 from iceberg_diag_spark.streaming import stream_ops as so
 
-ROWS_SCHEMA = (
-    "event_id long, ts_s string, user_id long, event_type string, "
-    "value double, props string"
-)
+from helpers import write_event_file
 
 
 def _mk_rows(hour: int, n_ok: int, n_err: int, eid0: int):
@@ -32,24 +27,6 @@ def _mk_rows(hour: int, n_ok: int, n_err: int, eid0: int):
     return rows, eid
 
 
-def _write_file(spark, base: str, name: str, rows) -> None:
-    df = spark.createDataFrame(rows, ROWS_SCHEMA).select(
-        "event_id",
-        (
-            F.unix_timestamp("ts_s", "yyyy-MM-dd HH:mm:ss").cast("long")
-            * 1_000_000_000
-        ).alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(base + ".tmp")
-    part = [f for f in os.listdir(base + ".tmp") if f.endswith(".parquet")][0]
-    shutil.move(os.path.join(base + ".tmp", part), os.path.join(base, name))
-    shutil.rmtree(base + ".tmp")
-
-
 def test_multi_batch_drain_equals_batch(spark, tmp_path_factory):
     """Two files drained one-per-trigger (two micro-batches): the
     re-summed rollup must re-frame to EXACTLY the batch burn table
@@ -60,10 +37,10 @@ def test_multi_batch_drain_equals_batch(spark, tmp_path_factory):
     os.makedirs(base)
     r1, eid = _mk_rows(0, 99, 1, 0)           # clean baseline hour
     r2, eid = _mk_rows(1, 40, 10, eid)        # hour 1, first half
-    _write_file(spark, base, "f1.parquet", r1 + r2)
+    write_event_file(spark, base, "f1.parquet", r1 + r2)
     r3, eid = _mk_rows(1, 45, 5, eid)         # hour 1, second half
     r4, eid = _mk_rows(2, 0, 100, eid)        # full outage hour
-    _write_file(spark, base, "f2.parquet", r3 + r4)
+    write_event_file(spark, base, "f2.parquet", r3 + r4)
 
     rollup = tempfile.mkdtemp(prefix="sli_rollup_test_")
     try:

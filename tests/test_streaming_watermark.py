@@ -16,17 +16,13 @@ the durable-output path of the same pipeline.
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
 from iceberg_diag_spark.streaming import stream_ops as so
 
-ROWS_SCHEMA = (
-    "event_id long, ts_s string, user_id long, event_type string, "
-    "value double, props string"
-)
+from helpers import write_event_file
+
 
 F1 = [
     (1, "2024-01-01 10:00:10", 1, "click", 1.0, "{}"),
@@ -36,31 +32,13 @@ F2 = [(3, "2024-01-01 14:00:00", 1, "click", 1.0, "{}")]  # advances watermark
 F3 = [(4, "2024-01-01 10:45:00", 1, "click", 1.0, "{}")]  # late!
 
 
-def _write_file(spark, base: str, name: str, rows) -> None:
-    df = spark.createDataFrame(rows, ROWS_SCHEMA).select(
-        "event_id",
-        (
-            F.unix_timestamp("ts_s", "yyyy-MM-dd HH:mm:ss").cast("long")
-            * 1_000_000_000
-        ).alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(base + ".tmp")
-    part = [f for f in os.listdir(base + ".tmp") if f.endswith(".parquet")][0]
-    shutil.move(os.path.join(base + ".tmp", part), os.path.join(base, name))
-    shutil.rmtree(base + ".tmp")
-
-
 def test_append_mode_emits_finalized_windows_and_drops_late(
     spark, tmp_path_factory
 ):
     root = str(tmp_path_factory.mktemp("wm"))
     base = root + "/events.parquet"
     os.makedirs(base)
-    _write_file(spark, base, "f1.parquet", F1)  # present before start
+    write_event_file(spark, base, "f1.parquet", F1)  # present before start
 
     ev = so.read_events_stream(spark, root)
     agg = so.tumbling_counts(ev, size="1 hour", watermark="2 hours")
@@ -73,9 +51,9 @@ def test_append_mode_emits_finalized_windows_and_drops_late(
     )
     try:
         q.processAllAvailable()  # batch: f1 → watermark 08:30
-        _write_file(spark, base, "f2.parquet", F2)
+        write_event_file(spark, base, "f2.parquet", F2)
         q.processAllAvailable()  # batch: f2 → watermark 12:00, W1 final
-        _write_file(spark, base, "f3.parquet", F3)
+        write_event_file(spark, base, "f3.parquet", F3)
         q.processAllAvailable()  # batch: f3 → behind watermark, dropped
     finally:
         q.stop()
@@ -91,9 +69,9 @@ def test_stream_parquet_sink_roundtrip(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("wm_sink"))
     base = root + "/events.parquet"
     os.makedirs(base)
-    _write_file(spark, base, "f1.parquet", F1)
-    _write_file(spark, base, "f2.parquet", F2)
-    _write_file(spark, base, "f3.parquet", F3)
+    write_event_file(spark, base, "f1.parquet", F1)
+    write_event_file(spark, base, "f2.parquet", F2)
+    write_event_file(spark, base, "f3.parquet", F3)
     out = str(tmp_path_factory.mktemp("sink"))
     ev = so.read_events_stream(spark, root)
     q = (
@@ -131,7 +109,7 @@ def test_watermark_advisor_stream_escalates_across_batches(
         (i, f"2024-01-01 10:00:{10 + i:02d}", 1, "click", 1.0, "{}")
         for i in range(1, 11)
     ]
-    _write_file(spark, base, "f1.parquet", f1)
+    write_event_file(spark, base, "f1.parquet", f1)
 
     ev = so.read_events_stream(spark, root)
     mon = so.watermark_advisor_stream(ev, target_ppm=1_000)
@@ -148,7 +126,7 @@ def test_watermark_advisor_stream_escalates_across_batches(
             (11, "2024-01-01 10:10:00", 1, "click", 1.0, "{}"),
             (12, "2024-01-01 10:08:30", 1, "click", 1.0, "{}"),  # 90 s late
         ]
-        _write_file(spark, base, "f2.parquet", f2)
+        write_event_file(spark, base, "f2.parquet", f2)
         q.processAllAvailable()
     finally:
         q.stop()
@@ -182,7 +160,7 @@ def test_expectations_gate_stream_accumulates_across_batches(
         (i, f"2024-01-01 10:00:{10 + i:02d}", 1, "click", 5.0, '{"k": 5}')
         for i in range(1, 11)
     ]
-    _write_file(spark, base, "f1.parquet", f1)
+    write_event_file(spark, base, "f1.parquet", f1)
 
     ev = so.read_events_stream(spark, root)
     gate = so.expectations_gate_stream(ev)
@@ -208,7 +186,7 @@ def test_expectations_gate_stream_accumulates_across_batches(
             (11, "2024-01-01 10:10:00", 1, "click", 5.0, '{"k": 5}'),
             (12, "2024-01-01 10:10:01", 1, "click", 500.0, '{"k": 5}'),
         ]
-        _write_file(spark, base, "f2.parquet", f2)
+        write_event_file(spark, base, "f2.parquet", f2)
         q.processAllAvailable()
     finally:
         q.stop()
@@ -237,7 +215,7 @@ def test_cdc_merge_stream_tombstone_and_disorder(spark, tmp_path_factory):
         (20, "2024-01-01 10:00:12", 2, "view", 7.0, "{}"),
         (21, "2024-01-01 10:00:13", 2, "view", 8.0, "{}"),
     ]
-    _write_file(spark, base, "f1.parquet", f1)
+    write_event_file(spark, base, "f1.parquet", f1)
     ev = so.read_events_stream(spark, root)
     q = (
         so.cdc_merge_stream(ev)
@@ -259,7 +237,7 @@ def test_cdc_merge_stream_tombstone_and_disorder(spark, tmp_path_factory):
             (31, "2024-01-01 10:01:01", 1, "view", 9.0, "{}"),   # re-insert
             (15, "2024-01-01 10:01:02", 2, "error", 0.0, "{}"),  # behind 21!
         ]
-        _write_file(spark, base, "f2.parquet", f2)
+        write_event_file(spark, base, "f2.parquet", f2)
         q.processAllAvailable()
     finally:
         q.stop()
