@@ -244,17 +244,20 @@ THREE_EXACT = [
 @pytest.fixture(scope="module")
 def release_copy(spark, tmp_path_factory):
     """``copy(incs_rows, dest)`` puts the release of ``incs_rows`` at
-    ``dest`` and returns its ``(batch_id, docs)`` sequence. Each
-    distinct increment list is written once per module; a test gets
-    its own copy, so it may rewrite the release."""
+    ``dest`` and returns its ``(batch_id, docs)`` sequence. A batch
+    directory depends only on its rows, so each distinct increment is
+    written once per module and copied to ``dest/batch=<id>``; a test
+    owns its copy and may rewrite it."""
     built: dict[str, str] = {}
 
     def copy(incs_rows, dest: str):
-        key = repr(incs_rows)
-        if key not in built:
-            built[key] = str(tmp_path_factory.mktemp("release") / "rel")
-            write_release(spark, built[key], incs_rows)
-        shutil.copytree(built[key], dest)
+        for b, rows in incs_rows:
+            key = repr(rows)
+            if key not in built:
+                root = str(tmp_path_factory.mktemp("increment"))
+                write_release(spark, root, [(0, rows)])
+                built[key] = f"{root}/batch=0"
+            shutil.copytree(built[key], f"{dest}/batch={b}")
         return [
             (b, spark.createDataFrame(rows, DOCS_SCHEMA))
             for b, rows in incs_rows
@@ -357,7 +360,7 @@ def test_reconcile_single_increment_empty(spark, tmp_path, release_copy):
     assert spark.read.parquet(sig).count() > 0
 
 
-def test_reconcile_probe_plan_hint_free(spark, tmp_path):
+def test_reconcile_probe_plan_hint_free(spark, tmp_path, release_copy):
     """The registry entry returns an eager checkpoint, so the global
     scale-killer sweep can't see the probe's joins — pin them here on
     the LAZY relation: the store probe and the released-ids semi-join
@@ -367,8 +370,8 @@ def test_reconcile_probe_plan_hint_free(spark, tmp_path):
     release = str(tmp_path / "rel")
     sig = str(tmp_path / "sig")
     os.makedirs(sig)
-    incs = write_release(
-        spark, release, [(0, _mk_clean(0, 8)), (1, _mk_clean(1000, 8))]
+    incs = release_copy(
+        [(0, _mk_clean(0, 8)), (1, _mk_clean(1000, 8))], release
     )
     out = funnel.release_neardup_reconcile(spark, incs, release, sig)
     assert "ResolvedHint" not in out._jdf.queryExecution().logical().toString()
@@ -381,7 +384,9 @@ def test_reconcile_probe_plan_hint_free(spark, tmp_path):
     assert "CartesianProduct" not in plan
 
 
-def test_reconcile_survives_all_dropped_increment(spark, tmp_path):
+def test_reconcile_survives_all_dropped_increment(
+    spark, tmp_path, release_copy
+):
     """An increment whose funnel dropped EVERY doc (all-junk batch)
     leaves a fileless batch=<id> release/signature directory — the
     reconcile must emit zero pairs for it and keep every other
@@ -399,9 +404,7 @@ def test_reconcile_survives_all_dropped_increment(spark, tmp_path):
     good2 = _mk_clean(2000, 8) + [
         (2200, f"{SHARED_EXACT}", "en", "web", 99)
     ]
-    incs = write_release(
-        spark, release, [(0, good0), (1, junk1), (2, good2)]
-    )
+    incs = release_copy([(0, good0), (1, junk1), (2, good2)], release)
     assert (
         spark.read.schema("doc_id long")
         .parquet(f"{release}/batch=1")
@@ -464,7 +467,7 @@ def _shard_bytes(shard_dir: str) -> bytes:
 # ------------------------------------------------------------------
 
 
-def test_reconcile_incremental_equals_full(spark, tmp_path):
+def test_reconcile_incremental_equals_full(spark, tmp_path, release_copy):
     """The production incremental contract: passing each increment in
     its own call (signatures of prior increments probed from the
     store, their text never re-read) yields exactly the pairs the
@@ -473,7 +476,7 @@ def test_reconcile_incremental_equals_full(spark, tmp_path):
     inc0 = _mk_clean(0, 10) + [(100, SHARED_EXACT, "en", "web", 1)]
     inc1 = _mk_clean(1000, 10) + [(1100, SHARED_EXACT, "en", "web", 1)]
     release = str(tmp_path / "rel")
-    incs = write_release(spark, release, [(0, inc0), (1, inc1)])
+    incs = release_copy([(0, inc0), (1, inc1)], release)
 
     sig_full = str(tmp_path / "sig_full")
     full = sorted(
@@ -679,12 +682,14 @@ def test_retraction_rewritten_shard_byte_equals_fresh_build(
     )
 
 
-def test_retraction_drops_fully_emptied_shard_dir(spark, tmp_path):
+def test_retraction_drops_fully_emptied_shard_dir(
+    spark, tmp_path, release_copy
+):
     """Dynamic overwrite cannot replace a shard no surviving row
     lands in — the sink must drop that directory explicitly, and the
     ledger's after-counts must reflect the loss."""
     release = str(tmp_path / "rel")
-    write_release(spark, release, [(0, _mk_clean(0, 30))])
+    release_copy([(0, _mk_clean(0, 30))], release)
     written = spark.read.parquet(f"{release}/batch=0")
     # retract EVERY doc of one shard
     some_shard = int(written.limit(1).collect()[0]["shard"])
@@ -816,7 +821,7 @@ def test_retraction_purges_signature_store(spark, tmp_path, release_copy):
 
 
 def test_retraction_emptied_batch_keeps_lineage_guard_happy(
-    spark, tmp_path
+    spark, tmp_path, release_copy
 ):
     """Fully retracting a batch (with sig_path) removes it from both
     the release AND the store, so the reconcile lineage guard cannot
@@ -826,9 +831,7 @@ def test_retraction_emptied_batch_keeps_lineage_guard_happy(
     inc2 = _mk_clean(2000, 8)
     release = str(tmp_path / "rel")
     sig = str(tmp_path / "sig")
-    incs = write_release(
-        spark, release, [(0, inc0), (1, inc1), (2, inc2)]
-    )
+    incs = release_copy([(0, inc0), (1, inc1), (2, inc2)], release)
     funnel.release_neardup_reconcile(
         spark, incs[:2], release, sig
     ).collect()
@@ -858,7 +861,7 @@ def test_retraction_emptied_batch_keeps_lineage_guard_happy(
     assert all(r["batch_a"] == 0 for r in out)
 
 
-def test_retraction_across_multiple_batches(spark, tmp_path):
+def test_retraction_across_multiple_batches(spark, tmp_path, release_copy):
     """Retractions landing in MORE THAN ONE batch exercise the
     multi-batch rewrite loop and the partition-pruned OR-predicate
     after-read: every named doc gone, per-batch ledger rows correct,
@@ -873,9 +876,7 @@ def test_retraction_across_multiple_batches(spark, tmp_path):
     ]
     release = str(tmp_path / "rel")
     sig = str(tmp_path / "sig")
-    incs = write_release(
-        spark, release, [(0, inc0), (1, inc1), (2, inc2)]
-    )
+    incs = release_copy([(0, inc0), (1, inc1), (2, inc2)], release)
     pairs = funnel.release_neardup_reconcile(
         spark, incs, release, sig
     ).localCheckpoint(eager=True)
@@ -904,13 +905,13 @@ def test_retraction_across_multiple_batches(spark, tmp_path):
         assert led[b]["n_docs_after"] == led[b]["n_docs_before"] - k
 
 
-def test_retraction_is_keyed_per_batch(spark, tmp_path):
+def test_retraction_is_keyed_per_batch(spark, tmp_path, release_copy):
     """The retraction key is (batch, doc_id): a doc sharing its id
     with a retracted doc in ANOTHER batch must survive."""
     rows = _mk_clean(0, 10)
     release = str(tmp_path / "rel")
     # the SAME docs written as two batches: every doc_id exists in both
-    write_release(spark, release, [(0, rows), (1, rows)])
+    release_copy([(0, rows), (1, rows)], release)
     victim = int(
         spark.read.parquet(f"{release}/batch=1").limit(1).collect()[0][
             "doc_id"
