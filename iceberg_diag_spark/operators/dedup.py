@@ -2023,7 +2023,7 @@ def lsh_near_dup_tuned(
     default surfaces is also surfaced at 8×2 or 16×1 — at the DEFAULT
     floor (0.95, which only those refinement configs can meet) tuning
     never loses a default-caught pair (pinned in
-    tests/test_dedup.py). A caller-supplied floor low enough to
+    tests/test_round9_ops.py). A caller-supplied floor low enough to
     qualify a COARSER config (2×8, 1×16) trades that superset
     property away for precision — intended, but worth knowing.
 

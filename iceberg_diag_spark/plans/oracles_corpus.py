@@ -1440,7 +1440,7 @@ def _batch_survivor_chain(
     every `documents` reference rebound to the increment). `pdata`
     and `final` default to the reconcile entry's survivor-id form
     (rendered SQL byte-identical to the pre-parameter version,
-    pinned in tests/test_oracles_corpus.py); the retraction oracle
+    pinned in tests/test_round13_ops.py); the retraction oracle
     overrides both to get the per-doc release relation (real md5
     shards + packed seq/gid) for the retraction ledger."""
     inner = _funnel_family_sql(pdata=pdata, final=final)

@@ -119,7 +119,7 @@ star AS (
 # and the reconcile oracle compose, so the hash family and
 # band width cannot silently diverge between oracles (byte-identity
 # of _MINHASH_PAIRS_SQL under the extraction is pinned in
-# tests/test_oracles_dedup.py).
+# tests/test_round12_ops.py).
 _SIG_KEYS_CTES = r"""hh AS (
   SELECT doc_id,
          ('0x' || substring(md5(gram), 1, 8))::BIGINT AS g1,

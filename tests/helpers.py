@@ -1,7 +1,8 @@
 """Scaffolding shared by several test modules: the corpus-release
-writer the release tests build their fixtures with, and the
-one-file-at-a-time writer the streaming tests feed a file stream
-with. Not a test module; the test modules import it by name."""
+writer and the planted increments the release tests build their
+fixtures with, and the one-file-at-a-time writer the streaming tests
+feed a file stream with. Not a test module; the test modules import
+it by name."""
 
 from __future__ import annotations
 
@@ -14,6 +15,12 @@ from iceberg_diag_spark.operators import funnel
 
 DOCS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
+)
+
+# the reconcile's pair relation, which the retraction sink consumes
+PAIRS_SCHEMA = (
+    "batch_a long, doc_a long, batch_b long, doc_b long, "
+    "n_shared_bands long, exact_dup boolean"
 )
 
 EVENT_ROWS_SCHEMA = (
@@ -33,6 +40,50 @@ def write_release(spark, path: str, incs_rows, schema: str = DOCS_SCHEMA):
         funnel._write_release(d, f"{path}/batch={b}")
         incs.append((b, d))
     return incs
+
+
+_BASE = (
+    "the quick brown fox jumps over a lazy dog and it is widely "
+    "known that"
+)
+
+
+def _mk_clean(i0: int, n: int):
+    # distinct tails so per-increment exact dedup keeps them all
+    rows = []
+    for i in range(i0, i0 + n):
+        t = f"{_BASE} document number {i} differs in this tail alone {i}"
+        rows.append((i, t, "en", "web", len(t)))
+    return rows
+
+
+# planted bodies share no vocabulary with the _mk_clean docs (beyond
+# isolated stopwords) so the per-increment funnel cannot collapse a
+# planted doc into a clean-doc near-dup component — only the
+# deliberate CROSS-increment twins collide
+SHARED_NEAR = (
+    "many colorful parrots happily narrate obscure maritime legends "
+    "while gentle winds carry distant church bells across the quiet "
+    "harbor village every autumn evening final token reads"
+)
+SHARED_EXACT = (
+    "byte identical twins routed into separate increments cannot be "
+    "seen by per increment exact dedup since each half observes only "
+    "its own arrivals during the incremental release"
+)
+SHARED_LATE = (
+    "an entirely different duplicated passage about telescopes "
+    "mirrors and the patient craft of grinding glass surfaces to "
+    "within a fraction of one wavelength of sodium light"
+)
+
+
+# three increments, each with one copy of SHARED_EXACT
+THREE_EXACT = [
+    (0, _mk_clean(0, 8) + [(100, SHARED_EXACT, "en", "web", 1)]),
+    (1, _mk_clean(1000, 8) + [(1100, SHARED_EXACT, "en", "web", 1)]),
+    (2, _mk_clean(2000, 8) + [(2100, SHARED_EXACT, "en", "web", 1)]),
+]
 
 
 def write_one_file(df, base: str, name: str) -> None:

@@ -183,12 +183,3 @@ def test_cli_skips_non_iceberg_tables(spark, capsys):
     finally:
         spark.sql("DROP TABLE IF EXISTS probe_db.plain_t")
         spark.sql("DROP DATABASE IF EXISTS probe_db")
-
-
-def test_cli_accepts_qualified_table_name(spark, capsys):
-    from iceberg_diag_spark.cli import main
-
-    # qualified name with a database that doesn't exist → clean
-    # DiagError path, proving the parse routed into the catalog branch
-    assert main(["--table-name", "no_such_db_xyz.some_tbl"], spark=spark) == 1
-    assert "error:" in capsys.readouterr().out

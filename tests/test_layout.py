@@ -1,22 +1,15 @@
-"""Layout of the test suite. A test module is named after the package
-module it checks, never after the round or phase that added it, and
-no test module binds a top-level name twice: pytest collects only the
-last ``def`` of a name, so a moved test or fixture that collides with
-another silently stops the first one from running. AST only; needs no
-Spark session."""
+"""Layout of the test suite: no test module binds a top-level name
+twice. pytest collects only the last ``def`` of a name, so a test or
+fixture that collides with another silently stops the first one from
+running. AST only; needs no Spark session."""
 
 from __future__ import annotations
 
 import ast
 import collections
 import pathlib
-import re
 
 TESTS = pathlib.Path(__file__).parent
-
-
-def _history_named(names) -> list[str]:
-    return sorted(n for n in names if re.match(r"test_(round|phase)", n))
 
 
 def _rebound(source: str) -> list[str]:
@@ -40,12 +33,6 @@ def _rebound(source: str) -> list[str]:
             for a in node.names:
                 seen[a.asname or a.name.split(".")[0]] += 1
     return sorted(n for n, k in seen.items() if k > 1)
-
-
-def test_no_history_named_test_modules():
-    assert _history_named(["test_round12_ops.py", "test_phase2_surface.py"])
-    assert not _history_named(["test_funnel.py", "test_layout.py"])
-    assert _history_named(p.name for p in TESTS.glob("*.py")) == []
 
 
 def test_no_top_level_name_bound_twice():

@@ -1,20 +1,15 @@
-"""Table-maintenance diagnostics (operators/maintenance.py): Morton
-interleave, delete burden, orphan detection and retention semantics
-on hand-checked fixtures, and the clustering, skip-simulation,
-partition, file-skew and bloom advisors against hand-computed answers
-and brute-force references."""
+"""Unit tests for the table-maintenance diagnostics
+(operators/maintenance.py): Morton interleave correctness, delete
+burden, orphan detection, and retention semantics on hand-checked
+fixtures."""
 
 from __future__ import annotations
 
 import datetime
-import math
-import random
 
 from pyspark.sql import functions as F
 
 from iceberg_diag_spark.operators import maintenance
-from iceberg_diag_spark.operators.maintenance import clustering_advisor
-from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
 
 
 def test_morton_z_known_values(spark):
@@ -177,353 +172,3 @@ def test_cdc_latest_rows_picks_newest(spark):
     assert out[(7, "view")].n_versions == 1
     assert out[(8, "click")].last_event_id == 5  # id tie-break
     assert out[(8, "click")].last_value_cents == 900
-
-
-def test_sorted_after_stats_matches_bruteforce_sweep(spark):
-    """The closed-form prediction the executing clustering sink
-    relies on, pitted against a pure-Python brute force over 100
-    seeded random value multisets x 5 chunk sizes: chunk the sorted
-    multiset into files of m, take per-file [lo, hi], and replay the
-    clustering_advisor endpoint sweep exactly (closed intervals,
-    starts-before-ends at equal value). Every stat must match to the
-    integer: overlap pairs, max depth, the ppm floor, n_files. This
-    is plan==measured without any I/O, across shapes no hand-picked
-    fixture covers (hot values, all-equal, all-distinct, m=1,
-    partial tails)."""
-    import math
-    import random
-
-    from iceberg_diag_spark.operators.maintenance import (
-        sorted_after_stats,
-    )
-    from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
-
-    rng = random.Random(140814)
-
-    def brute(counts: list[int], m: int):
-        # counts[i] = multiplicity of value i (values already sorted)
-        bounds = []
-        rows = [v for v, k in enumerate(counts) for _ in range(k)]
-        for f in range(math.ceil(len(rows) / m)):
-            chunk = rows[f * m : (f + 1) * m]
-            bounds.append((chunk[0], chunk[-1]))
-        events = sorted(
-            [(lo, 0, i) for i, (lo, _) in enumerate(bounds)]
-            + [(hi, 1, i) for i, (_, hi) in enumerate(bounds)]
-        )
-        pairs = depth_sum = max_d = 0
-        starts = ends = 0
-        for _v, typ, _i in events:
-            if typ == 0:
-                d = starts - ends
-                pairs += d
-                depth_sum += d + 1
-                max_d = max(max_d, d + 1)
-                starts += 1
-            else:
-                ends += 1
-        n = len(bounds)
-        return {
-            "n_files": n,
-            "overlap_pairs_after": pairs,
-            "max_depth_after": max_d,
-            "avg_depth_ppm_after": math.floor(
-                1_000_000.0 * depth_sum / (n * n)
-            ),
-        }
-
-    for m in (1, 2, 3, 5, 8):
-        cases = {}
-        rows = []
-        for c in range(20):
-            name = f"case{c}"
-            n_vals = rng.randint(1, 25)
-            # hot-spot-prone counts: mostly 1s, occasional 1..3*m
-            counts = [
-                rng.randint(1, 3 * m) if rng.random() < 0.25 else 1
-                for _ in range(n_vals)
-            ]
-            cases[name] = counts
-            rows += [
-                (name, v, k) for v, k in enumerate(counts) if k > 0
-            ]
-        vals = spark.createDataFrame(
-            rows, "col_name string, v long, k long"
-        )
-        got = {
-            r["col_name"]: r
-            for r in sorted_after_stats(
-                grouped_prefix_sum(vals, ["col_name"], ["v"], ["k"], ["__pre"]),
-                m,
-            ).collect()
-        }
-        assert set(got) == set(cases)
-        for name, counts in cases.items():
-            want = brute(counts, m)
-            have = {k: got[name][k] for k in want}
-            assert have == want, (m, name, counts, have, want)
-
-
-def test_clustering_advisor_exact_overlaps(spark):
-    # col "a": [1,5], [3,9], [6,8] → pairs (1,2),(2,3) = 2; a point at
-    # 6..8 hits files 2 and 3 → max_depth 2.
-    # col "b": [1,2], [3,4], [5,6] → disjoint: 0 pairs, depth 1.
-    # col "c": [1,10], [2,9], [3,8] → all nested: 3 pairs, depth 3.
-    rows = []
-    for fid, (lo, hi) in enumerate([(1, 5), (3, 9), (6, 8)], start=1):
-        rows.append(("a", fid, lo, hi))
-    for fid, (lo, hi) in enumerate([(1, 2), (3, 4), (5, 6)], start=1):
-        rows.append(("b", fid, lo, hi))
-    for fid, (lo, hi) in enumerate([(1, 10), (2, 9), (3, 8)], start=1):
-        rows.append(("c", fid, lo, hi))
-    fs = spark.createDataFrame(rows, "col_name string, file_id long, lo long, hi long")
-    out = {r["col_name"]: r for r in clustering_advisor(fs).collect()}
-    assert out["a"]["overlap_pairs"] == 2 and out["a"]["max_depth"] == 2
-    assert out["b"]["overlap_pairs"] == 0 and out["b"]["max_depth"] == 1
-    assert out["c"]["overlap_pairs"] == 3 and out["c"]["max_depth"] == 3
-    assert all(r["n_files"] == 3 for r in out.values())
-    # avg_depth_ppm = floor(1e6 * sum(depth+1) / 9): a → (1+2+2)/9,
-    # b → 3/9, c → (1+2+3)/9
-    assert out["a"]["avg_depth_ppm"] == 555_555
-    assert out["b"]["avg_depth_ppm"] == 333_333
-    assert out["c"]["avg_depth_ppm"] == 666_666
-
-
-def test_clustering_advisor_touching_endpoints_overlap(spark):
-    # Closed intervals: [1,5] and [5,9] share point 5 → 1 pair.
-    fs = spark.createDataFrame(
-        [("a", 1, 1, 5), ("a", 2, 5, 9)],
-        "col_name string, file_id long, lo long, hi long",
-    )
-    row = clustering_advisor(fs).collect()[0]
-    assert row["overlap_pairs"] == 1 and row["max_depth"] == 2
-
-
-def test_skip_simulation_closed_form_matches_materialized_sort(spark):
-    """The after-layout stats are computed in closed form from
-    per-value rank arithmetic; verify they equal ACTUALLY sorting the
-    rows, cutting files of m rows, and running clustering_advisor's
-    endpoint sweep on the resulting bounds."""
-    from iceberg_diag_spark.operators.maintenance import (
-        clustering_advisor,
-        skip_simulation,
-    )
-
-    m = 8
-    # two candidate columns with heavy value duplication (so values
-    # straddle simulated file boundaries) and distinct shapes
-    values = {
-        "c1": [(i * 2654435761) % 17 for i in range(100)],
-        "c2": [i % 5 for i in range(100)],
-    }
-    cv = spark.createDataFrame(
-        [(c, v) for c, vs in values.items() for v in vs],
-        "col_name string, v long",
-    )
-    # a fake "before" layout: files of 10 consecutive input rows
-    fs_rows = []
-    for c, vs in values.items():
-        for f in range(10):
-            chunk = vs[f * 10:(f + 1) * 10]
-            fs_rows.append((c, f, min(chunk), max(chunk)))
-    fs = spark.createDataFrame(
-        fs_rows, "col_name string, file_id long, lo long, hi long"
-    )
-    got = {
-        r["col_name"]: r
-        for r in skip_simulation(cv, fs, rows_per_file=m).collect()
-    }
-
-    # materialize the sorted layout per column and sweep it
-    for c, vs in values.items():
-        sorted_vs = sorted(vs)
-        bounds = []
-        for f in range(0, (len(sorted_vs) + m - 1) // m):
-            chunk = sorted_vs[f * m:(f + 1) * m]
-            bounds.append((c, f, min(chunk), max(chunk)))
-        bdf = spark.createDataFrame(
-            bounds, "col_name string, file_id long, lo long, hi long"
-        )
-        ref = clustering_advisor(bdf).collect()[0]
-        r = got[c]
-        assert r["n_files"] == ref["n_files"], c
-        assert r["overlap_pairs_after"] == ref["overlap_pairs"], c
-        assert r["max_depth_after"] == ref["max_depth"], c
-        assert r["avg_depth_ppm_after"] == ref["avg_depth_ppm"], c
-
-
-def test_skip_simulation_perfectly_sorted_input_improves_to_disjoint(spark):
-    from iceberg_diag_spark.operators.maintenance import skip_simulation
-
-    # all-distinct values → after sorting, files are fully disjoint
-    cv = spark.createDataFrame(
-        [("c", v) for v in range(64)], "col_name string, v long"
-    )
-    # shuffled before-layout: interleaved bounds → heavy overlap
-    fs = spark.createDataFrame(
-        [("c", f, f, 56 + f) for f in range(8)],
-        "col_name string, file_id long, lo long, hi long",
-    )
-    r = skip_simulation(cv, fs, rows_per_file=8).collect()[0]
-    assert r["overlap_pairs_after"] == 0
-    assert r["max_depth_after"] == 1
-    assert r["overlap_pairs_before"] == 28  # all C(8,2) pairs overlap
-    assert r["improvement_ppm"] < 1_000_000
-
-
-def test_partition_advisor_balance_vs_skew(spark):
-    from iceberg_diag_spark.operators.maintenance import partition_advisor
-
-    # "uniform": 0..159 → every mod-16 bucket gets 10 rows (skew 1e6).
-    # "skewed": 150 copies of one value + 10 distinct → one bucket
-    # dominates.
-    rows = [("uniform", v) for v in range(160)]
-    rows += [("skewed", 7)] * 150 + [("skewed", v) for v in range(10)]
-    cv = spark.createDataFrame(rows, "col_name string, v long")
-    out = {
-        (r["col_name"], r["transform"]): r
-        for r in partition_advisor(cv).collect()
-    }
-    u = out[("uniform", "bucket16")]
-    assert u["n_parts"] == 16
-    assert u["max_part_rows"] == 10
-    assert u["skew_ppm"] == 1_000_000
-    s = out[("skewed", "bucket16")]
-    # value 7 appears 151 times (150 + the distinct 7)
-    assert s["max_part_rows"] == 151
-    assert s["skew_ppm"] > 5_000_000
-    # truncate on uniform 0..159 with width 1024 → single partition
-    t = out[("uniform", "truncate1024")]
-    assert t["n_parts"] == 1 and t["skew_ppm"] == 1_000_000
-
-
-def test_clustering_advisor_matches_bruteforce_pairs(spark):
-    rng = random.Random(42)
-    rows = []
-    ref = {}
-    for c in ("g1", "g2", "g3"):
-        intervals = []
-        for fid in range(60):
-            lo = rng.randrange(0, 500)
-            hi = lo + rng.randrange(0, 120)
-            intervals.append((fid, lo, hi))
-            rows.append((c, fid, lo, hi))
-        pairs = sum(
-            1
-            for i in range(len(intervals))
-            for j in range(i + 1, len(intervals))
-            if intervals[i][1] <= intervals[j][2]
-            and intervals[j][1] <= intervals[i][2]
-        )
-        # max depth: at each interval start, how many intervals cover it
-        depth = max(
-            sum(
-                1
-                for (g, lo2, hi2) in intervals
-                if lo2 <= lo and lo <= hi2
-            )
-            for (_, lo, _) in intervals
-        )
-        ref[c] = (pairs, depth)
-    fs = spark.createDataFrame(
-        rows, "col_name string, file_id long, lo long, hi long"
-    )
-    got = {r["col_name"]: r for r in clustering_advisor(fs).collect()}
-    for c, (pairs, depth) in ref.items():
-        assert got[c]["overlap_pairs"] == pairs, c
-        assert got[c]["max_depth"] == depth, c
-
-
-def test_file_skew_audit_exact_variance(spark):
-    from iceberg_diag_spark.operators.maintenance import file_skew_audit
-
-    files = spark.createDataFrame(
-        [
-            ("p1", 100, 0), ("p1", 200, 0), ("p1", 300, 0),
-            ("p1", 999, 1),  # delete file — excluded
-            ("p2", 50, 0), ("p2", 50, 0),
-        ],
-        "partition_key string, file_size_in_bytes long, content int",
-    )
-    out = {r["partition_key"]: r for r in file_skew_audit(files).collect()}
-    p1 = out["p1"]
-    assert (p1["n_files"], p1["total_bytes"]) == (3, 600)
-    # population stddev of (100,200,300): floor(sqrt(n*ss - s^2)/n)
-    import math
-
-    num = 3 * (100**2 + 200**2 + 300**2) - 600**2
-    assert p1["stddev_bytes"] == math.floor(math.sqrt(float(num)) / 3)
-    assert p1["max_share_ppm"] == 1_000_000 * 300 // 600
-    p2 = out["p2"]
-    assert p2["stddev_bytes"] == 0 and p2["max_share_ppm"] == 500_000
-
-
-def test_file_skew_audit_no_int64_overflow(spark):
-    from iceberg_diag_spark.operators.maintenance import file_skew_audit
-
-    # 10 GiB files: sum of squares ~1.15e21 per row pair — wraps int64
-    # if the moments aren't 128-bit
-    ten_gib = 10 * (1 << 30)
-    files = spark.createDataFrame(
-        [("p", ten_gib, 0)] * 20,
-        "partition_key string, file_size_in_bytes long, content int",
-    )
-    row = file_skew_audit(files).collect()[0]
-    assert row["stddev_bytes"] == 0  # identical sizes -> zero, not garbage
-    assert row["max_share_ppm"] == 1_000_000 // 20
-
-
-def test_file_skew_audit_matches_python_reference(spark):
-    from iceberg_diag_spark.operators.maintenance import file_skew_audit
-
-    rng = random.Random(6)
-    rows, ref = [], {}
-    for p in range(6):
-        key = f"p{p}"
-        # sizes up to ~1 TiB so Σx² is far past int64
-        sizes = [rng.randrange(1, 1 << 40) for _ in range(rng.randrange(1, 30))]
-        for x in sizes:
-            rows.append((key, x, 0))
-        rows.append((key, rng.randrange(1, 1 << 30), 1))  # ignored delete
-        n, s = len(sizes), sum(sizes)
-        ss = sum(x * x for x in sizes)
-        # same fixed-order float path as the operator: exact bigint
-        # numerator -> round-to-nearest double -> sqrt -> / n -> floor
-        ref[key] = {
-            "n_files": n,
-            "total_bytes": s,
-            "min_bytes": min(sizes),
-            "max_bytes": max(sizes),
-            "stddev_bytes": math.floor(
-                math.sqrt(float(n * ss - s * s)) / n
-            ),
-            "max_share_ppm": (1_000_000 * max(sizes)) // s,
-        }
-    files = spark.createDataFrame(
-        rows, "partition_key string, file_size_in_bytes long, content int"
-    )
-    got = {r["partition_key"]: r for r in file_skew_audit(files).collect()}
-    assert set(got) == set(ref)
-    for key, want in ref.items():
-        for col, val in want.items():
-            assert got[key][col] == val, (key, col)
-
-
-def test_bloom_advisor_quantifies_minmax_waste(spark):
-    """Constructed layout: every file's [lo, hi] covers the probed
-    key but only one file contains it → minmax admits all files,
-    membership admits 1, waste = n-1."""
-    from iceberg_diag_spark.operators.maintenance import bloom_advisor
-
-    rows = []
-    for f in range(10):
-        rows += [(f, 0), (f, 1000)]        # wide bounds in every file
-    rows.append((7, 97))                    # the probe key, one file
-    vals = spark.createDataFrame(rows, "file_id long, v long")
-    out = {r["probe_key"]: r for r in bloom_advisor(vals).collect()}
-    # probes: 0 (in all 10 files) and 97 (in file 7 only)
-    assert out[97]["minmax_files"] == 10
-    assert out[97]["actual_files"] == 1
-    assert out[97]["wasted_files"] == 9
-    assert out[97]["wasted_ppm"] == 900_000
-    assert out[0]["wasted_files"] == 0

@@ -1,8 +1,6 @@
-"""Multimodal operators (operators/multimodal.py): binary
-payload/metadata schema, Arrow batch shape through mapInPandas,
-deterministic fake decode, frame math, the media shard plan and
-integrity audit, perceptual-hash near-dups and cross-modal dedup
-agreement. Oracle parity for the SQL-expressible subset runs in
+"""Multimodal plumbing: binary payload/metadata schema, Arrow batch
+shape through mapInPandas, deterministic fake decode, frame math.
+Oracle parity for the SQL-expressible subset runs in
 test_oracle_parity.py; these tests pin the Python-side semantics.
 """
 
@@ -165,128 +163,3 @@ def test_frame_dedup_finds_shared_intro(spark):
     assert r["frame_len"] == FRAME_BYTES
     assert r["example_doc_id"] == 1
     assert r["wasted_bytes"] == FRAME_BYTES
-
-
-def test_media_shard_plan_known_packing(spark):
-    from iceberg_diag_spark.operators.multimodal import shard_plan
-
-    # One media type, items of sizes 10,20,30,40 with target 45:
-    # greedy sorted fold (check-before-append closes after exceeding):
-    # 10+20+30 = 60 > 45 at next check → shard0 = [10,20,30*]? The
-    # fold appends then closes when total > target BEFORE the next
-    # append: 10 (10) → 20 (30) → 30 (60 > 45, still appended) →
-    # close → 40 alone. So shard0 = 3 items / 60 bytes, shard1 = 1
-    # item / 40 bytes.
-    rows = [(i, "image", 0, s) for i, s in enumerate([10, 20, 30, 40])]
-    media = spark.createDataFrame(
-        rows, "doc_id long, media_type string, pad int, blen long"
-    ).selectExpr(
-        "doc_id", "media_type",
-        "cast(null as binary) as payload",
-        "named_struct('byte_len', blen, 'width', 0, 'height', 0,"
-        " 'sample_rate', 0, 'n_frames', cast(0 as int)) as meta",
-    )
-    out = {r["shard_id"]: r for r in shard_plan(media, target_bytes=45).collect()}
-    assert out[0]["n_items"] == 3 and out[0]["shard_bytes"] == 60
-    assert out[1]["n_items"] == 1 and out[1]["shard_bytes"] == 40
-
-
-def test_media_integrity_audit(spark):
-    from iceberg_diag_spark.operators.multimodal import (
-        MEDIA_MAGIC,
-        media_integrity_audit,
-    )
-    from pyspark.sql import functions as F
-
-    rows = [
-        (0, "image", "89504E47"),   # valid PNG
-        (1, "image", "DEADBEEF"),   # corrupt
-        (2, "audio", "52494646"),   # valid RIFF
-        (3, "audio", "52494646"),
-        (4, "video", "00000018"),
-        (5, "video", "FFFFFFFF"),   # corrupt
-        (6, "image", "89504e47"),   # lowercase hex input -> same bytes
-    ]
-    media = spark.createDataFrame(
-        rows, "doc_id long, media_type string, hdr string"
-    ).select(
-        "doc_id", "media_type",
-        F.concat(F.unhex("hdr"), F.encode(F.lit("body"), "UTF-8"))
-        .alias("payload"),
-    )
-    got = {r["media_type"]: r.asDict() for r in media_integrity_audit(media).collect()}
-    assert got["image"]["n_items"] == 3
-    assert got["image"]["n_valid"] == 2      # unhex is case-insensitive
-    assert got["image"]["n_corrupt"] == 1
-    assert got["image"]["example_corrupt_id"] == 1
-    assert got["audio"]["n_corrupt"] == 0
-    assert got["audio"]["example_corrupt_id"] is None
-    assert got["video"]["corrupt_ppm"] == 500_000
-    assert got["video"]["example_corrupt_id"] == 5
-    assert all(
-        r["n_valid"] + r["n_corrupt"] == r["n_items"] for r in got.values()
-    )
-
-
-def test_media_phash_identical_payloads_pair_at_zero(spark):
-    """Byte-identical payloads get identical fingerprints → a pair at
-    hamming 0; a payload shorter than min_bytes never appears."""
-    from iceberg_diag_spark.operators.multimodal import (
-        media_phash_near_dup, with_media,
-    )
-
-    long_a = "the quick brown fox jumps over the lazy dog " * 3
-    docs = spark.createDataFrame(
-        [(0, long_a), (1, long_a), (2, "short")],
-        "doc_id long, text string",
-    )
-    pairs = media_phash_near_dup(with_media(docs)).collect()
-    assert {(p["doc_a"], p["doc_b"]): p["hamming"] for p in pairs} == {
-        (0, 1): 0
-    }
-
-
-def test_media_phash_plan_stays_jvm_and_payload_free(spark):
-    """The pair exchange must carry only (id, fp): no payload column
-    below the join, and no Python anywhere."""
-    from iceberg_diag_spark.operators.multimodal import (
-        media_phash_near_dup, with_media,
-    )
-
-    docs = spark.range(0, 50).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("payload text body "), F.col("id").cast("string"),
-                 F.lit(" tail " * 5)).alias("text"),
-    )
-    df = media_phash_near_dup(with_media(docs))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    # hamming verify happens above the dedup'd join output
-    assert "bit_count" in plan
-
-
-def test_crossmodal_agreement_exact_dups_land_in_both(spark):
-    """Exact text duplicates are detected by BOTH modalities (star
-    pair in the text LSH, hamming-0 payload pair in the media dHash)
-    and the Venn identities must hold."""
-    from iceberg_diag_spark.operators.multimodal import (
-        crossmodal_dedup_agreement,
-    )
-
-    text = (
-        "the quick brown fox jumps over the lazy dog and then "
-        "keeps on running through the field toward the river"
-    )
-    docs = spark.createDataFrame(
-        [
-            (1, text),
-            (2, text),  # exact dup: both modalities must pair (1,2)
-            (3, "a completely different short document about stars"),
-        ],
-        "doc_id long, text string",
-    )
-    r = crossmodal_dedup_agreement(docs).collect()[0]
-    assert r["n_both"] >= 1
-    assert r["n_union"] == r["n_both"] + r["only_text"] + r["only_media"]
-    assert r["n_text"] == r["n_both"] + r["only_text"]
-    assert r["n_media"] == r["n_both"] + r["only_media"]

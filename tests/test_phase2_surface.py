@@ -297,10 +297,7 @@ def test_extract_errors_drops_blank_tables(spark):
 
 
 def test_probe_raises_on_bad_catalog(spark):
-    import pytest
-
     from iceberg_diag_spark.errors import CatalogBindError
-    from iceberg_diag_spark.sources.catalog import connection_probe
 
     with pytest.raises(CatalogBindError):
         connection_probe(spark, catalog="no_such_catalog_xyz")

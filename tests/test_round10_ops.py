@@ -6,12 +6,26 @@ operators.
 
 from __future__ import annotations
 
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
 from iceberg_diag_spark.operators import funnel, packing
 from iceberg_diag_spark.sources.tpch import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="module")
+def corpus_released(spark, tmp_path_factory):
+    """``(docs, path, manifest)``: the sf0.001 corpus released once per
+    module by ``funnel.corpus_release``, and the manifest it returns
+    (computed from the written files). No test writes under ``path``;
+    one that tampers with the release works on its own copy."""
+    docs = load_table(spark, SF_DIR, "documents")
+    out = str(tmp_path_factory.mktemp("release")) + "/corpus"
+    return docs, out, funnel.corpus_release(docs, out)
 
 
 def test_pack_assign_matches_aggregate_fold(spark):
@@ -74,13 +88,11 @@ def test_pack_assign_respects_capacity_and_order(spark):
                 assert total <= 64
 
 
-def test_release_membership_equals_stage4_survivors(spark, tmp_path_factory):
+def test_release_membership_equals_stage4_survivors(spark, corpus_released):
     """The written release's doc set IS the funnel's stage-4 (train)
     survivor set — the executed release ships exactly what the funnel
     counted, no more, no less."""
-    docs = load_table(spark, SF_DIR, "documents")
-    out = str(tmp_path_factory.mktemp("release")) + "/corpus"
-    funnel.corpus_release(docs, out)
+    docs, out, _ = corpus_released
     written_ids = {
         r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()
     }
@@ -95,16 +107,15 @@ def test_release_membership_equals_stage4_survivors(spark, tmp_path_factory):
     assert written_ids  # non-trivial fixture
 
 
-def test_release_manifest_matches_written_files(spark, tmp_path_factory):
+def test_release_manifest_matches_written_files(spark, corpus_released):
     """corpus_release's manifest (recomputed FROM the written parquet)
     equals corpus_release_manifest's plan-side manifest row for row —
     including the salted membership digests, so a shard lost or
     duplicated in transit cannot hash-match."""
-    docs = load_table(spark, SF_DIR, "documents")
-    out = str(tmp_path_factory.mktemp("release_m")) + "/corpus"
+    docs, _, released_manifest = corpus_released
     from_files = {
         r.shard: (r.n_docs, r.n_seqs, r.n_tokens, r.members_xor, r.members_xor2)
-        for r in funnel.corpus_release(docs, out).collect()
+        for r in released_manifest.collect()
     }
     from_plan = {
         r.shard: (r.n_docs, r.n_seqs, r.n_tokens, r.members_xor, r.members_xor2)
@@ -469,7 +480,7 @@ def test_seasonality_profile_planted(spark):
 
 
 def test_matryoshka_zero_prefix_vector_is_deterministic(spark):
-    """ADVICE r9 regression: a vector whose first 16 dims quantize to
+    """Regression: a vector whose first 16 dims quantize to
     zero (values in [0, 1/256)) has prefix norm 0 — the guarded cosine
     must pin it to 0 in BOTH engines instead of Spark-NULL vs
     DuckDB-inf, so it ranks deterministically as a neighbor."""
@@ -502,7 +513,7 @@ def test_matryoshka_zero_prefix_vector_is_deterministic(spark):
 
 
 def test_matryoshka_dim_in_prefixes_dedupes(spark):
-    """ADVICE r9 regression: passing the full dim inside prefix_dims
+    """Regression: passing the full dim inside prefix_dims
     must dedupe instead of emitting duplicate aliases and failing
     with an AnalysisException."""
     from iceberg_diag_spark.operators.similarity import matryoshka_audit
@@ -517,7 +528,7 @@ def test_matryoshka_dim_in_prefixes_dedupes(spark):
 
 
 def test_hour_epoch_integer_division_exact_beyond_double(spark):
-    """ADVICE r9 regression: hour_epoch must come from integer floor
+    """Regression: hour_epoch must come from integer floor
     division — beyond 2^53 µs (years ≳ 2255) a double true-division
     can round to the wrong hour, and pre-1970 epochs must floor, not
     truncate toward zero."""
@@ -601,14 +612,12 @@ def test_exact_auc_matches_bruteforce_on_random_batch(spark):
     assert row.auc_ppm == 1_000_000 * u2 // (2 * p * n)
 
 
-def test_read_release_sequences_reproduces_pack_fold(spark, tmp_path_factory):
+def test_read_release_sequences_reproduces_pack_fold(spark, corpus_released):
     """Consumer reconstruction: grouping the delivered shard rows back
     into sequences reproduces the pack aggregate exactly, and every
     multi-doc sequence respects the capacity with doc_ids in fold
     order."""
-    docs = load_table(spark, SF_DIR, "documents")
-    out = str(tmp_path_factory.mktemp("release_rd")) + "/corpus"
-    funnel.corpus_release(docs, out)
+    docs, out, _ = corpus_released
     seqs = funnel.read_release_sequences(spark, out).collect()
     assert seqs
     for r in seqs:
@@ -627,7 +636,7 @@ def test_read_release_sequences_reproduces_pack_fold(spark, tmp_path_factory):
         assert len(rs) == manifest[shard].n_seqs
 
 
-def test_verify_release_catches_tampering(spark, tmp_path_factory):
+def test_verify_release_catches_tampering(spark, corpus_released, tmp_path):
     """verify_release: pristine delivery -> all shards ok; dropping
     rows from one shard directory flips exactly that shard to not-ok
     with the doc-count discrepancy visible; a shard lost entirely
@@ -636,9 +645,10 @@ def test_verify_release_catches_tampering(spark, tmp_path_factory):
     import glob as _glob
     import os
 
-    docs = load_table(spark, SF_DIR, "documents")
-    out = str(tmp_path_factory.mktemp("release_v")) + "/corpus"
-    manifest = funnel.corpus_release(docs, out).localCheckpoint()
+    _, released, released_manifest = corpus_released
+    manifest = released_manifest.localCheckpoint()
+    out = str(tmp_path / "corpus")
+    shutil.copytree(released, out)
     ok = funnel.verify_release(spark, out, manifest).collect()
     assert all(r.ok for r in ok) and len(ok) == funnel.RELEASE_N_SHARDS
 
@@ -659,8 +669,6 @@ def test_verify_release_catches_tampering(spark, tmp_path_factory):
 
     # tamper: lose shard=1 entirely, deliver a shard the manifest
     # never named (a copy of shard=2's files)
-    import shutil
-
     foreign = funnel.RELEASE_N_SHARDS + 3
     shutil.rmtree(os.path.join(out, "shard=1"))
     shutil.copytree(

@@ -4,6 +4,9 @@ sink, and the incremental-release streaming twin."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,6 +17,8 @@ from iceberg_diag_spark.operators.textops import (
     classifier_train_lr,
     exact_auc,
 )
+
+from helpers import DOCS_SCHEMA, write_one_file, write_release
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,7 +43,7 @@ def test_train_lr_trajectory_shape(spark, docs):
 
 
 def test_trained_weights_beat_handset_auc(spark, docs):
-    """The round-11 brief's acceptance: 12 GD steps must RANK the
+    """Acceptance: 12 GD steps must RANK the
     curation gate better than the hand-set CLASSIFIER_WEIGHTS do,
     measured by the same exact tie-corrected AUC operator the engine
     ships (classifier_auc_calibration's core)."""
@@ -94,7 +99,7 @@ def built_index(spark, emb, tmp_path_factory):
 
 
 def test_ivf_probe_reproduces_topk_exact(spark, emb, built_index):
-    """The round-11 brief's acceptance: a consumer-side probe of the
+    """Acceptance: a consumer-side probe of the
     WRITTEN index must reproduce ivf_topk_exact's top-k bit for bit —
     same candidates, same ranks, same cosines."""
     from iceberg_diag_spark.operators import similarity as sim
@@ -178,11 +183,6 @@ def test_ivf_verify_detects_tampering(spark, emb, built_index, tmp_path):
 # Streaming twin #22: incremental corpus release
 # ---------------------------------------------------------------
 
-DOCS_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long"
-)
-
-
 def _mk_docs(i0: int, n: int, source: str):
     # clean English docs that pass the funnel's stage-1 gate, each
     # with a distinct tail so exact dedup keeps them all
@@ -203,30 +203,19 @@ def test_stream_release_multi_batch_and_replay(spark, tmp_path_factory):
     increment (failure → restart re-runs the same batch id) must
     leave the manifest bit-identical — the idempotent overwrite is
     what makes the sink exactly-once."""
-    import os
-    import shutil
     import tempfile
 
     from iceberg_diag_spark.operators import funnel
-    from iceberg_diag_spark.sources.sinks import write_assigned_shards
     from iceberg_diag_spark.streaming import stream_ops as so
 
     root = str(tmp_path_factory.mktemp("release_stream"))
     base = os.path.join(root, "docs")
     os.makedirs(base)
 
-    def write_file(name, rows):
-        df = spark.createDataFrame(rows, DOCS_SCHEMA)
-        tmp = base + ".tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        shutil.move(os.path.join(tmp, part), os.path.join(base, name))
-        shutil.rmtree(tmp)
-
     r1 = _mk_docs(0, 30, "web")
     r2 = _mk_docs(1000, 20, "books")
-    write_file("f1.parquet", r1)
-    write_file("f2.parquet", r2)
+    write_one_file(spark.createDataFrame(r1, DOCS_SCHEMA), base, "f1.parquet")
+    write_one_file(spark.createDataFrame(r2, DOCS_SCHEMA), base, "f2.parquet")
 
     schema = spark.read.parquet(base).schema
     stream = (
@@ -260,15 +249,7 @@ def test_stream_release_multi_batch_and_replay(spark, tmp_path_factory):
         # replay increment 0 (what a checkpoint restart does): rewrite
         # the SAME batch dir with the same writer logic
         replay_id = int(batches[0].split("=")[1])
-        asg = funnel.release_assignments(
-            spark.createDataFrame(r1, DOCS_SCHEMA)
-        )
-        write_assigned_shards(
-            asg,
-            f"{release}/batch={replay_id}",
-            funnel.RELEASE_N_SHARDS,
-            order_cols=("source", "seq_id", "doc_id"),
-        )
+        write_release(spark, release, [(replay_id, r1)])
         manifest1 = sorted(
             tuple(r)
             for r in so.release_manifest_from_stream(spark, release).collect()

@@ -1,8 +1,7 @@
-"""Compaction sinks (operators/compaction.py): the bin-pack rewrite
-and the sort-order rewrite (cluster_apply_sorted) execute the
-simulated plan, leave untouched partitions byte-identical, keep the
-membership digests, reach a fixed point, and keep NULL partitions and
-NULL sort values."""
+"""Round-14 operator contracts: diag_compaction_apply (the executing
+bin-pack remediation — advisor-executing pattern #10) and the
+round-14 funnel hardening (sig_path made explicit, lineage-guard
+error discrimination)."""
 
 from __future__ import annotations
 
@@ -14,6 +13,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from iceberg_diag_spark.operators import funnel
 from iceberg_diag_spark.operators.binpack import pack_sizes
 from iceberg_diag_spark.operators.compaction import (
     binpack_assign,
@@ -21,6 +21,7 @@ from iceberg_diag_spark.operators.compaction import (
     physical_file_sizes,
 )
 
+from helpers import PAIRS_SCHEMA
 
 LAYOUT_SCHEMA = (
     "row_key string, row_bytes long, file_id long, partition_key string"
@@ -318,7 +319,7 @@ def test_compaction_only_null_partition(spark, tmp_path, scope):
 
 
 # ---------------------------------------------------------------- #
-# predicted-after == re-diagnosed written layout
+# predicted-after == re-diagnosed written layout (the verdict's ask)
 # ---------------------------------------------------------------- #
 
 def test_compaction_prediction_matches_rediagnosis(spark, tmp_path):
@@ -377,6 +378,33 @@ def test_compaction_prediction_matches_rediagnosis(spark, tmp_path):
     }
     for m in ("FILE_COUNT", "FULL_SCAN_OVERHEAD"):
         assert after_metrics[m]["before"] == sim_metrics[m]["after"], m
+
+
+# ---------------------------------------------------------------- #
+# funnel hardening pins
+# ---------------------------------------------------------------- #
+
+def test_retraction_sig_path_is_required(spark):
+    pairs = spark.createDataFrame([], PAIRS_SCHEMA)
+    with pytest.raises(TypeError, match="sig_path"):
+        funnel.release_retraction_apply(spark, pairs, "/tmp/nowhere")
+
+
+def test_reconcile_missing_store_is_benign(spark, tmp_path):
+    """PATH_NOT_FOUND (store/release not created yet) must stay the
+    silent first-call path after the error-discrimination fix."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta eta theta", "en",
+          "web", 46)],
+        "doc_id long, text string, lang string, source string, "
+        "n_chars long",
+    )
+    release = str(tmp_path / "rel")
+    funnel._write_release(docs, f"{release}/batch=0")
+    out = funnel.release_neardup_reconcile(
+        spark, [(0, docs)], release, str(tmp_path / "sig")
+    )
+    assert out.count() == 0
 
 
 # ---------------------------------------------------------------- #
@@ -691,3 +719,88 @@ def test_cluster_apply_hot_value_spans_files(spark, tmp_path):
     assert r["overlap_pairs_planned"] == r["overlap_pairs_after"] == 3
     assert r["max_depth_planned"] == r["max_depth_after"] == 3
     assert r["rows_before"] == r["rows_after"] == 7
+
+
+def test_sorted_after_stats_matches_bruteforce_sweep(spark):
+    """The closed-form prediction the executing clustering sink
+    relies on, pitted against a pure-Python brute force over 100
+    seeded random value multisets x 5 chunk sizes: chunk the sorted
+    multiset into files of m, take per-file [lo, hi], and replay the
+    clustering_advisor endpoint sweep exactly (closed intervals,
+    starts-before-ends at equal value). Every stat must match to the
+    integer: overlap pairs, max depth, the ppm floor, n_files. This
+    is plan==measured without any I/O, across shapes no hand-picked
+    fixture covers (hot values, all-equal, all-distinct, m=1,
+    partial tails)."""
+    import math
+    import random
+
+    from iceberg_diag_spark.operators.maintenance import (
+        sorted_after_stats,
+    )
+    from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
+
+    rng = random.Random(140814)
+
+    def brute(counts: list[int], m: int):
+        # counts[i] = multiplicity of value i (values already sorted)
+        bounds = []
+        rows = [v for v, k in enumerate(counts) for _ in range(k)]
+        for f in range(math.ceil(len(rows) / m)):
+            chunk = rows[f * m : (f + 1) * m]
+            bounds.append((chunk[0], chunk[-1]))
+        events = sorted(
+            [(lo, 0, i) for i, (lo, _) in enumerate(bounds)]
+            + [(hi, 1, i) for i, (_, hi) in enumerate(bounds)]
+        )
+        pairs = depth_sum = max_d = 0
+        starts = ends = 0
+        for _v, typ, _i in events:
+            if typ == 0:
+                d = starts - ends
+                pairs += d
+                depth_sum += d + 1
+                max_d = max(max_d, d + 1)
+                starts += 1
+            else:
+                ends += 1
+        n = len(bounds)
+        return {
+            "n_files": n,
+            "overlap_pairs_after": pairs,
+            "max_depth_after": max_d,
+            "avg_depth_ppm_after": math.floor(
+                1_000_000.0 * depth_sum / (n * n)
+            ),
+        }
+
+    for m in (1, 2, 3, 5, 8):
+        cases = {}
+        rows = []
+        for c in range(20):
+            name = f"case{c}"
+            n_vals = rng.randint(1, 25)
+            # hot-spot-prone counts: mostly 1s, occasional 1..3*m
+            counts = [
+                rng.randint(1, 3 * m) if rng.random() < 0.25 else 1
+                for _ in range(n_vals)
+            ]
+            cases[name] = counts
+            rows += [
+                (name, v, k) for v, k in enumerate(counts) if k > 0
+            ]
+        vals = spark.createDataFrame(
+            rows, "col_name string, v long, k long"
+        )
+        got = {
+            r["col_name"]: r
+            for r in sorted_after_stats(
+                grouped_prefix_sum(vals, ["col_name"], ["v"], ["k"], ["__pre"]),
+                m,
+            ).collect()
+        }
+        assert set(got) == set(cases)
+        for name, counts in cases.items():
+            want = brute(counts, m)
+            have = {k: got[name][k] for k in want}
+            assert have == want, (m, name, counts, have, want)

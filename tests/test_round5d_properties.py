@@ -1,6 +1,6 @@
-"""Shuffling primitives (operators/shuffling.py): the epoch shuffle
-is a permutation, grouped_prefix_sum matches a Python reference, and
-only the primitive builds range shards (AST check)."""
+"""Randomized cross-checks of the round-5d primitives against
+brute-force Python references (seeded — deterministic corpora, a few
+Spark jobs per test rather than per-example)."""
 
 from __future__ import annotations
 
@@ -10,32 +10,49 @@ import pathlib
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 import iceberg_diag_spark
+from iceberg_diag_spark.operators.maintenance import clustering_advisor
 from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
+from iceberg_diag_spark.operators.similarity import dim_variance_audit
 
 
-def test_epoch_shuffle_permutation(spark):
-    from iceberg_diag_spark.operators.shuffling import epoch_shuffle
-
-    df = spark.createDataFrame([(i,) for i in range(200)], "doc_id long")
-    rows = epoch_shuffle(df, seed="s1").collect()
-    # bijection onto 1..N
-    assert sorted(r.shuffle_pos for r in rows) == list(range(1, 201))
-    # position order must equal (shuffle_key, doc_id) order
-    by_pos = sorted(rows, key=lambda r: r.shuffle_pos)
-    assert [r.doc_id for r in by_pos] == [
-        r.doc_id for r in sorted(rows, key=lambda r: (r.shuffle_key, r.doc_id))
-    ]
-    # deterministic per seed, different across seeds
-    again = epoch_shuffle(df, seed="s1").collect()
-    assert {(r.doc_id, r.shuffle_pos) for r in again} == {
-        (r.doc_id, r.shuffle_pos) for r in rows
-    }
-    other = epoch_shuffle(df, seed="s2").collect()
-    assert {(r.doc_id, r.shuffle_pos) for r in other} != {
-        (r.doc_id, r.shuffle_pos) for r in rows
-    }
+def test_clustering_advisor_matches_bruteforce_pairs(spark):
+    rng = random.Random(42)
+    rows = []
+    ref = {}
+    for c in ("g1", "g2", "g3"):
+        intervals = []
+        for fid in range(60):
+            lo = rng.randrange(0, 500)
+            hi = lo + rng.randrange(0, 120)
+            intervals.append((fid, lo, hi))
+            rows.append((c, fid, lo, hi))
+        pairs = sum(
+            1
+            for i in range(len(intervals))
+            for j in range(i + 1, len(intervals))
+            if intervals[i][1] <= intervals[j][2]
+            and intervals[j][1] <= intervals[i][2]
+        )
+        # max depth: at each interval start, how many intervals cover it
+        depth = max(
+            sum(
+                1
+                for (g, lo2, hi2) in intervals
+                if lo2 <= lo and lo <= hi2
+            )
+            for (_, lo, _) in intervals
+        )
+        ref[c] = (pairs, depth)
+    fs = spark.createDataFrame(
+        rows, "col_name string, file_id long, lo long, hi long"
+    )
+    got = {r["col_name"]: r for r in clustering_advisor(fs).collect()}
+    for c, (pairs, depth) in ref.items():
+        assert got[c]["overlap_pairs"] == pairs, c
+        assert got[c]["max_depth"] == depth, c
 
 
 def _md5(i: int) -> str:
@@ -133,3 +150,29 @@ def test_range_shards_built_only_by_the_primitive():
         if isinstance(n, ast.Constant) and n.value in ("__shard", "__edges")
     )
     assert hits == []
+
+
+def test_dim_variance_matches_integer_reference(spark):
+    rng = random.Random(11)
+    import math
+
+    vecs = [
+        [rng.uniform(-1, 1) for _ in range(8)] for _ in range(300)
+    ]
+    emb = spark.createDataFrame(
+        [(v,) for v in vecs], "embedding array<float>"
+    )
+    got = {r["pos"]: r for r in dim_variance_audit(emb).collect()}
+    import struct
+
+    def as_f32(x):
+        return struct.unpack("f", struct.pack("f", x))[0]
+
+    for pos in range(8):
+        qs = [math.floor(as_f32(v[pos]) * 1024.0) for v in vecs]
+        n = len(qs)
+        s = sum(qs)
+        ss = sum(q * q for q in qs)
+        assert got[pos]["n_vecs"] == n
+        assert got[pos]["mean_q_ppm"] == math.floor(1_000_000.0 * s / n)
+        assert got[pos]["var_q"] == math.floor((n * ss - s * s) / (n * n))

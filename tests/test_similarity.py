@@ -1,23 +1,15 @@
-"""Similarity operators (operators/similarity.py): recall of the
-approximate paths (sign-LSH, IVF) against exact brute force and the
-candidate reduction that makes them the scale path (they are rows-only
-in the oracle gate), the exact ANN stages built once, the IVF
-index-build sink, and known-answer checks of the embedding audits.
+"""Similarity-search quality: the approximate paths (sign-LSH, IVF)
+are rows-only in the oracle gate, so recall against exact brute force
+is pinned here, plus the candidate-reduction property that makes them
+the scale path.
 """
 
 from __future__ import annotations
 
-import ast
-import math
-import pathlib
-import random
-
 import pytest
 from pyspark.sql import functions as F
 
-import iceberg_diag_spark
 from iceberg_diag_spark.operators import similarity
-from iceberg_diag_spark.operators.similarity import dim_variance_audit
 from iceberg_diag_spark.sources.tpch import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -202,755 +194,3 @@ def test_exact_ann_stages_built_once():
         "cell_d2": {"similarity:_cells_sorted_expr"},
         "row_number": {"similarity:_topk"},
     }
-
-
-def test_centroid_stats_known_vectors(spark):
-    from iceberg_diag_spark.operators.similarity import label_centroid_stats
-
-    rows = [
-        (1, [3.0, 0.0], 0),
-        (2, [0.0, 4.0], 0),
-        (3, [1.0, 0.0], 1),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    got = {r.label: r for r in label_centroid_stats(df).collect()}
-    assert got[0].n_vecs == 2
-    assert got[0].avg_norm == pytest.approx(3.5)       # (3+4)/2
-    assert got[0].centroid_norm == pytest.approx(2.5)  # |(1.5, 2)|
-    assert got[1].avg_norm == pytest.approx(1.0)
-
-
-def test_ivf_nprobe_sweep_monotone_and_exhaustive(spark):
-    """More probes can only help: recall and scan fraction are
-    non-decreasing in n_probe; probing every list (n_probe = n_lists)
-    must reach recall 1.0 since ground truth and candidates share the
-    same scoring."""
-    from iceberg_diag_spark.operators.similarity import ivf_nprobe_sweep
-    from iceberg_diag_spark.sources.tpch import load_table
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    rows = sorted(
-        ivf_nprobe_sweep(emb, probes=(1, 4, 16)).collect(),
-        key=lambda r: r.n_probe,
-    )
-    assert [r.n_probe for r in rows] == [1, 4, 16]
-    recalls = [r.recall_ppm for r in rows]
-    scans = [r.scan_frac_ppm for r in rows]
-    assert recalls == sorted(recalls)
-    assert scans == sorted(scans)
-    assert rows[-1].recall_ppm == 1_000_000  # all lists probed
-    assert rows[-1].scan_frac_ppm == 1_000_000
-    assert rows[0].scan_frac_ppm < 1_000_000  # probing 1 list is cheaper
-
-
-def test_matryoshka_zero_prefix_vector_is_deterministic(spark):
-    """Regression: a vector whose first 16 dims quantize to
-    zero (values in [0, 1/256)) has prefix norm 0 — the guarded cosine
-    must pin it to 0 in BOTH engines instead of Spark-NULL vs
-    DuckDB-inf, so it ranks deterministically as a neighbor."""
-    import duckdb
-
-    from iceberg_diag_spark.operators.similarity import matryoshka_audit
-    from iceberg_diag_spark.plans.oracles_similarity import _MATRYOSHKA_SQL
-
-    rows = []
-    for vid in range(0, 12):
-        if vid == 3:
-            # zero-prefix: first 32 dims quantize to 0, tail is real
-            vec = [0.001] * 32 + [((vid * 7 + d) % 13) / 13.0
-                                  for d in range(32)]
-        else:
-            vec = [((vid * 7 + d) % 13) / 13.0 for d in range(64)]
-        rows.append((vid * 100, vec))  # ids multiples of 100 -> all panel
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    got = sorted(
-        (r.query_id, r.prefix_dim, r.n_exact, r.n_hits, r.recall_ppm)
-        for r in matryoshka_audit(emb).collect()
-    )
-    con = duckdb.connect()
-    con.register("embeddings", emb.toPandas())
-    want = sorted(tuple(r) for r in con.execute(_MATRYOSHKA_SQL).fetchall())
-    assert got == want
-    assert any(q == 300 for q, *_ in got)  # the zero-prefix vector ran
-
-
-def test_matryoshka_dim_in_prefixes_dedupes(spark):
-    """Regression: passing the full dim inside prefix_dims
-    must dedupe instead of emitting duplicate aliases and failing
-    with an AnalysisException."""
-    from iceberg_diag_spark.operators.similarity import matryoshka_audit
-
-    emb = spark.createDataFrame(
-        [(i * 100, [((i + d) % 7) / 7.0 for d in range(64)])
-         for i in range(8)],
-        "vec_id long, embedding array<double>",
-    )
-    out = matryoshka_audit(emb, prefix_dims=(16, 64), dim=64).collect()
-    assert {r.prefix_dim for r in out} == {16}
-
-
-# ---------------------------------------------------------------
-# IVF index build sink (advisor-executing pattern #6)
-# ---------------------------------------------------------------
-
-@pytest.fixture(scope="module")
-def built_index(spark, emb, tmp_path_factory):
-    from iceberg_diag_spark.operators import similarity as sim
-
-    path = str(tmp_path_factory.mktemp("ivf_index"))
-    manifest = sim.ivf_build_index(emb, path).localCheckpoint()
-    return path, manifest
-
-
-def test_ivf_probe_reproduces_topk_exact(spark, emb, built_index):
-    """Acceptance: a consumer-side probe of the
-    WRITTEN index must reproduce ivf_topk_exact's top-k bit for bit —
-    same candidates, same ranks, same cosines."""
-    from iceberg_diag_spark.operators import similarity as sim
-
-    path, _ = built_index
-    probe = sorted(
-        tuple(r) for r in sim.ivf_probe_index(spark, path, emb).collect()
-    )
-    ref = sorted(tuple(r) for r in sim.ivf_topk_exact(emb).collect())
-    assert probe == ref and len(probe) > 0
-
-
-def test_ivf_manifest_matches_plan_side_and_accounts_all_vectors(
-    spark, emb, built_index
-):
-    from iceberg_diag_spark.operators import similarity as sim
-
-    _, manifest = built_index
-    file_m = sorted(tuple(r) for r in manifest.collect())
-    plan_m = sorted(
-        tuple(r)
-        for r in sim._ivf_manifest_agg(
-            sim.ivf_index_assignments(emb)
-        ).collect()
-    )
-    assert file_m == plan_m
-    assert sum(r[1] for r in file_m) == emb.count()  # no dropped rows
-
-
-def test_ivf_verify_detects_tampering(spark, emb, built_index, tmp_path):
-    """verify_ivf_index over the intact index is all-ok; delivering a
-    TAMPERED copy (one cell's rows dropped) must flag exactly the
-    tampered cell; a cell lost entirely reads not-ok with NULL
-    actuals, and a cell the manifest never named not-ok with NULL
-    expectations."""
-    from pyspark.sql import functions as F
-
-    from iceberg_diag_spark.operators import similarity as sim
-
-    path, manifest = built_index
-    ver = sim.verify_ivf_index(spark, path, manifest).collect()
-    assert ver and all(r.ok for r in ver)
-
-    rows = spark.read.parquet(path)
-    victim = manifest.orderBy("list_id").first().list_id
-    tampered = rows.filter(
-        ~((F.col("list_id") == victim) & (F.col("vec_id") % 2 == 0))
-    )
-    tpath = str(tmp_path / "tampered")
-    tampered.write.mode("overwrite").partitionBy("list_id").parquet(tpath)
-    bad = {
-        r.list_id: r.ok
-        for r in sim.verify_ivf_index(spark, tpath, manifest).collect()
-    }
-    assert bad[victim] is False
-    assert all(ok for lid, ok in bad.items() if lid != victim)
-
-    # a cell lost entirely, and a cell the manifest never named
-    foreign = 1000 + victim
-    moved = rows.withColumn(
-        "list_id",
-        F.when(F.col("list_id") == victim, F.lit(foreign)).otherwise(
-            F.col("list_id")
-        ),
-    )
-    mpath = str(tmp_path / "moved")
-    moved.write.mode("overwrite").partitionBy("list_id").parquet(mpath)
-    res = {
-        r.list_id: r
-        for r in sim.verify_ivf_index(spark, mpath, manifest).collect()
-    }
-    assert res[victim].ok is False and res[victim].n_vecs_expected > 0
-    assert res[victim].n_vecs_actual is None
-    assert res[foreign].ok is False
-    assert res[foreign].n_vecs_actual == res[victim].n_vecs_expected
-    assert res[foreign].n_vecs_expected is None
-    assert all(r.ok for lid, r in res.items() if lid not in (victim, foreign))
-
-
-def test_label_silhouette_separable_clusters(spark):
-    from iceberg_diag_spark.operators.similarity import label_silhouette
-
-    rows = []
-    for i in range(20):
-        rows.append((i, [0.1 * (i % 5), 0.1], 0))       # tight at origin
-        rows.append((100 + i, [10.0 + 0.1 * (i % 5), 10.0], 1))
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    out = {r.label: r for r in label_silhouette(df).collect()}
-    assert out[0].n_vecs == out[1].n_vecs == 20
-    for lbl in (0, 1):
-        # own-cluster spread is tiny vs distance to the other centroid
-        assert out[lbl].mean_own_d2q < out[lbl].mean_other_d2q / 100
-        assert out[lbl].sep_ratio_ppm < 10_000
-
-
-def test_semantic_dedup_drops_near_identical_in_cluster(spark):
-    # two tight clusters along orthogonal axes; vec 11 duplicates
-    # vec 10 (cos = 1) and must be dropped; cluster B has no dups
-    rows = [
-        (10, [1.0, 0.0, 0.0, 0.0], 0),
-        (11, [1.0, 0.0, 0.0, 0.0], 0),
-        (12, [0.9, 0.1, 0.0, 0.0], 0),
-        (20, [0.0, 0.0, 1.0, 0.0], 1),
-        (21, [0.0, 0.0, 0.0, 1.0], 1),
-    ]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    out = {
-        r.cluster: r
-        for r in similarity.semantic_dedup(emb, threshold_micro=950_000).collect()
-    }
-    # cluster 0: 11 dropped (dup of 10); 12 kept (cos(10,12) ≈ 0.994
-    # — above 0.95? cos([1,0],[0.9,0.1]) = 0.9/(1*0.90554) ≈ 0.9939 →
-    # dropped too)
-    assert out[0].n_vecs == 3
-    assert out[0].n_dropped == 2
-    assert out[0].n_kept == 1
-    # cluster 1: orthogonal pair, nothing dropped
-    assert out[1].n_vecs == 2 and out[1].n_dropped == 0
-
-
-def test_norm_outliers_flags_poisoned_vector(spark):
-    import random
-
-    rng = random.Random(7)
-    rows = []
-    # 40 well-behaved unit-ish vectors
-    for i in range(40):
-        v = [rng.gauss(0, 1) for _ in range(8)]
-        n = sum(x * x for x in v) ** 0.5
-        rows.append((i, [x / n for x in v], 0))
-    # one truncated (near-zero) vector — the poisoned batch member
-    rows.append((99, [0.001] * 8, 0))
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    (r,) = similarity.norm_outliers(emb).collect()
-    assert r.n_vecs == 41
-    assert r.outliers == 1
-    assert r.min_norm_milli < 100  # the poisoned vector's tiny norm
-
-
-def test_norm_outliers_uniform_corpus_flags_nothing(spark):
-    emb = spark.createDataFrame(
-        [(i, [1.0, 0.0], 0) for i in range(10)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    (r,) = similarity.norm_outliers(emb).collect()
-    assert r.outliers == 0  # zero variance -> strict inequality never fires
-
-
-def test_dim_variance_dead_and_live_dims(spark):
-    # dim 0 constant 0.5 → q=512 everywhere → var_q = 0.
-    # dim 1 alternates ±0.5 → q ∈ {512, -512}: with n=4, s=0,
-    # ss=4·512² → var_q = floor(4·4·512²/16) = 512² = 262144.
-    vecs = [([0.5, 0.5],), ([0.5, -0.5],), ([0.5, 0.5],), ([0.5, -0.5],)]
-    emb = spark.createDataFrame(vecs, "embedding array<float>")
-    out = {r["pos"]: r for r in dim_variance_audit(emb).collect()}
-    assert out[0]["var_q"] == 0
-    assert out[0]["mean_q_ppm"] == 512_000_000
-    assert out[1]["var_q"] == 262_144
-    assert out[1]["mean_q_ppm"] == 0
-    assert all(r["n_vecs"] == 4 for r in out.values())
-
-
-def test_dim_variance_negative_mean_floor(spark):
-    # q = floor(-0.3·1024) = -308 each → s = -924, n = 3:
-    # mean_q_ppm = floor(-308e6) = -308000000 (floor, not truncate).
-    emb = spark.createDataFrame(
-        [([-0.3],), ([-0.3],), ([-0.3],)], "embedding array<float>"
-    )
-    row = dim_variance_audit(emb).collect()[0]
-    assert row["mean_q_ppm"] == -308_000_000
-    assert row["var_q"] == 0
-
-
-def test_lsh_near_dup_exact_no_false_positives_and_recall(spark):
-    import math
-    import random
-
-    from iceberg_diag_spark.operators.similarity import lsh_near_dup_exact
-
-    rng = random.Random(3)
-    # 30 clusters of 4 near-identical vectors + 80 random singletons
-    vecs = []
-    vid = 0
-    for c in range(30):
-        base = [rng.uniform(-1, 1) for _ in range(64)]
-        for _ in range(4):
-            vecs.append(
-                (vid, [x + rng.uniform(-0.02, 0.02) for x in base])
-            )
-            vid += 1
-    for _ in range(80):
-        vecs.append((vid, [rng.uniform(-1, 1) for _ in range(64)]))
-        vid += 1
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    got = {
-        (r["vec_a"], r["vec_b"])
-        for r in lsh_near_dup_exact(emb).collect()
-    }
-
-    # exact ground truth under the SAME integer semantics
-    import struct
-
-    def as_f32(x):
-        return struct.unpack("f", struct.pack("f", x))[0]
-
-    qs = {
-        i: [math.floor(as_f32(x) * 256.0) for x in v] for i, v in vecs
-    }
-    truth = set()
-    ids = sorted(qs)
-    for a in range(len(ids)):
-        for b in range(a + 1, len(ids)):
-            qa, qb = qs[ids[a]], qs[ids[b]]
-            d = sum(x * y for x, y in zip(qa, qb))
-            na2 = sum(x * x for x in qa)
-            nb2 = sum(x * x for x in qb)
-            if d > 0 and 400 * d * d >= 81 * na2 * nb2:
-                truth.add((ids[a], ids[b]))
-    # exact verification ⇒ every reported pair is true
-    assert got <= truth
-    # clustered pairs are high-cosine → multi-table recall is high
-    assert len(truth) > 0
-    assert len(got) / len(truth) >= 0.8
-
-
-def test_dim_variance_matches_integer_reference(spark):
-    rng = random.Random(11)
-    import math
-
-    vecs = [
-        [rng.uniform(-1, 1) for _ in range(8)] for _ in range(300)
-    ]
-    emb = spark.createDataFrame(
-        [(v,) for v in vecs], "embedding array<float>"
-    )
-    got = {r["pos"]: r for r in dim_variance_audit(emb).collect()}
-    import struct
-
-    def as_f32(x):
-        return struct.unpack("f", struct.pack("f", x))[0]
-
-    for pos in range(8):
-        qs = [math.floor(as_f32(v[pos]) * 1024.0) for v in vecs]
-        n = len(qs)
-        s = sum(qs)
-        ss = sum(q * q for q in qs)
-        assert got[pos]["n_vecs"] == n
-        assert got[pos]["mean_q_ppm"] == math.floor(1_000_000.0 * s / n)
-        assert got[pos]["var_q"] == math.floor((n * ss - s * s) / (n * n))
-
-
-def test_embedding_drift_audit_detects_shifted_half(spark):
-    from iceberg_diag_spark.operators.similarity import embedding_drift_audit
-
-    dim = 8
-    rows = []
-    # label 0: both halves identical constant vectors -> zero drift
-    for i in range(40):
-        rows.append((i, [0.5] * dim, 0))
-    # label 1: even ids at 0.0, odd ids at 1.0 -> large drift
-    for i in range(40, 80):
-        v = 0.0 if i % 2 == 0 else 1.0
-        rows.append((i, [v] * dim, 1))
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    out = {r["label"]: r for r in embedding_drift_audit(emb).collect()}
-    assert out[0]["drift_sq_q"] == 0
-    # q gap per dim = 256 (floor(0*256)=0 vs floor(1*256)=256);
-    # squared over 8 dims = 8 * 256^2
-    assert out[1]["drift_sq_q"] == 8 * 256 * 256
-    assert out[1]["n_a"] == 20 and out[1]["n_b"] == 20
-
-
-def test_embedding_dim_covariance_sign_and_topdim_selection(spark):
-    from iceberg_diag_spark.operators.similarity import (
-        embedding_dim_covariance,
-    )
-
-    # dims 0,1 perfectly correlated; dim 2 anti-correlated with 0;
-    # dims 3..7 constant (zero variance -> excluded from a top_dims=3)
-    rows = []
-    for i in range(64):
-        v = (i % 9) / 10.0
-        rows.append((i, [v, v, 0.9 - v] + [0.5] * 5))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {
-        (r["pos_a"], r["pos_b"]): r["cov_q"]
-        for r in embedding_dim_covariance(emb, top_dims=3).collect()
-    }
-    # exactly C(3,2) pairs over the three varying dims
-    assert set(out) == {(0, 1), (0, 2), (1, 2)}
-    assert out[(0, 1)] > 0
-    assert out[(0, 2)] < 0 and out[(1, 2)] < 0
-    # corr(0,1)=+1 and corr(0,2)=-1 on the same values: |cov| equal
-    # up to grid quantization (float32 + floor add ≤1 q-unit per
-    # value → ≲1% of the ~9e4 q² magnitude here)
-    assert abs(out[(0, 1)] + out[(0, 2)]) <= abs(out[(0, 1)]) // 50
-
-
-def test_lsh_topk_exact_recall_and_determinism(spark):
-    import random
-
-    from iceberg_diag_spark.operators.similarity import lsh_topk_exact
-
-    rng = random.Random(7)
-    # 20 clusters of 4 near-identical vectors: each member's true
-    # nearest neighbors are its 3 cluster-mates
-    vecs, vid = [], 0
-    for c in range(20):
-        base = [rng.uniform(-1, 1) for _ in range(64)]
-        for _ in range(4):
-            vecs.append((vid, [x + rng.uniform(-0.01, 0.01) for x in base]))
-            vid += 1
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    rows = lsh_topk_exact(emb, k=3).collect()
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r)
-    # high-cosine cluster-mates collide in >= 1 of 8 tables virtually
-    # always; count queries whose ENTIRE top-3 is its cluster
-    full = 0
-    for q, rs in by_q.items():
-        mates = {q - q % 4 + i for i in range(4)} - {q}
-        got = {r["neighbor_id"] for r in rs}
-        assert all(1 <= r["rank"] <= 3 for r in rs)
-        if got == mates:
-            full += 1
-    assert len(by_q) >= 70          # nearly every query has candidates
-    assert full >= 0.8 * len(by_q)  # and recalls its whole cluster
-
-    # determinism: a second run returns the identical row set
-    again = lsh_topk_exact(emb, k=3).collect()
-    key = lambda r: (r["query_id"], r["rank"], r["neighbor_id"], r["cos_mppm"])
-    assert sorted(map(key, rows)) == sorted(map(key, again))
-
-
-def test_ivf_topk_exact_well_formed_and_probing_bounds_candidates(spark):
-    import random
-
-    from iceberg_diag_spark.operators.similarity import (
-        ivf_topk_exact,
-        md5_centroids,
-    )
-
-    # fixed centroids are on the q grid and engine-independent
-    cents = md5_centroids()
-    assert len(cents) == 16 and len(cents[0]) == 64
-    assert all(-256 <= h <= 256 for row in cents for h in row)
-
-    rng = random.Random(11)
-    vecs = [
-        (i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(300)
-    ]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    rows = ivf_topk_exact(emb, k=3).collect()
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r)
-    for q, rs in by_q.items():
-        ranks = sorted(r["rank"] for r in rs)
-        assert ranks == list(range(1, len(ranks) + 1))
-        # ranking is by cos desc with neighbor tie-break
-        ordered = sorted(rs, key=lambda r: r["rank"])
-        for x, y in zip(ordered, ordered[1:]):
-            assert (x["cos_mppm"], -x["neighbor_id"]) >= (
-                y["cos_mppm"], -y["neighbor_id"],
-            )
-    # probing 4/16 cells: every query found SOME candidates (uniform
-    # data spreads across cells, and its own cell is always probed)
-    assert len(by_q) >= 290
-
-    # determinism across runs
-    again = ivf_topk_exact(emb, k=3).collect()
-    key = lambda r: (r["query_id"], r["rank"], r["neighbor_id"], r["cos_mppm"])
-    assert sorted(map(key, rows)) == sorted(map(key, again))
-
-
-def test_dim_variance_audit_negative_mean_floor(spark):
-    """Random vectors with NEGATIVE coordinates: the mean_q_ppm floor
-    correction (floor != truncation for negative numerators) and the
-    128-bit variance numerator must both match a big-int Python
-    reference exactly."""
-    from iceberg_diag_spark.operators.similarity import dim_variance_audit
-
-    rng = random.Random(7)
-    dim, n = 6, 200
-    vecs = [
-        [rng.uniform(-1.0, 1.0) for _ in range(dim)] for _ in range(n)
-    ]
-    emb = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    # float32 round-trip first — Spark stores array<float>
-    import struct as _struct
-
-    def f32(x):
-        return _struct.unpack("f", _struct.pack("f", x))[0]
-
-    qs = [[math.floor(f32(x) * 1024.0) for x in v] for v in vecs]
-    got = {r["pos"]: r for r in dim_variance_audit(emb).collect()}
-    for d in range(dim):
-        col = [q[d] for q in qs]
-        s, ss = sum(col), sum(x * x for x in col)
-        assert got[d]["n_vecs"] == n
-        assert got[d]["mean_q_ppm"] == math.floor(1_000_000 * s / n) if abs(
-            1_000_000 * s
-        ) < 2**52 else True
-        # exact floor-division reference (python // floors)
-        assert got[d]["mean_q_ppm"] == (1_000_000 * s) // n, d
-        assert got[d]["var_q"] == (n * ss - s * s) // (n * n), d
-
-
-def test_ann_recall_perfect_when_buckets_capture_everything(spark):
-    """Identical vectors share every bucket, so the LSH candidates
-    contain the full ground truth → recall@k = 1e6 for every query."""
-    from iceberg_diag_spark.operators.similarity import ann_recall_eval
-
-    # 12 copies of one direction (+tiny distinct ids) — every vector
-    # lands in the same bucket in every table, so candidate recall
-    # is total by construction.
-    vecs = [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(12)]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    rows = ann_recall_eval(emb, k=3, query_mod=6, dim=4).collect()
-    assert {r["query_id"] for r in rows} == {0, 6}
-    for r in rows:
-        assert r["n_exact"] == 3
-        assert r["n_hits"] == 3
-        assert r["recall_ppm"] == 1_000_000
-        assert r["first_miss_rank"] == 0
-
-
-def test_ann_recall_counts_bucket_misses(spark):
-    """A ground-truth neighbor that shares no bucket with the query
-    must be reported missed: recall < 1e6 and first_miss_rank set."""
-    from iceberg_diag_spark.operators.similarity import ann_recall_eval
-
-    # query 0 aligned with vecs 1-2; vec 3 is the orthogonal odd one
-    # out but still lands in SOME bucket — with k=3 and only 3
-    # possible neighbors, n_exact=3; whether 3 is hit depends on
-    # bucket overlap, so assert only the exact bookkeeping identity.
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0, 0.0, 0.0]),
-            (1, [1.0, 0.1, 0.0, 0.0]),
-            (2, [1.0, -0.1, 0.0, 0.0]),
-            (3, [-1.0, 0.0, 5.0, 0.0]),
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    rows = ann_recall_eval(emb, k=3, query_mod=4, dim=4).collect()
-    assert len(rows) == 1 and rows[0]["query_id"] == 0
-    r = rows[0]
-    assert r["n_exact"] == 3
-    assert 0 <= r["n_hits"] <= 3
-    assert r["recall_ppm"] == (1_000_000 * r["n_hits"]) // r["n_exact"]
-    assert (r["first_miss_rank"] == 0) == (r["n_hits"] == r["n_exact"])
-
-
-def test_hard_negatives_band_and_rank(spark):
-    """Constructed cell: anchor with a near-duplicate (excluded: too
-    close), a banded hard negative (kept), and an orthogonal easy
-    negative (excluded: below lo). Ranks order by cosine desc."""
-    from iceberg_diag_spark.operators.similarity import hard_negative_mining
-
-    # dim=4 vectors; same IVF cell is guaranteed only for identical
-    # directions, so use colinear-ish vectors and verify band logic
-    # through the produced cosines themselves.
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0, 0.0, 0.0]),
-            (1, [1.0, 0.01, 0.0, 0.0]),   # ~cos 1.0 → too close
-            (2, [1.0, 1.2, 0.0, 0.0]),    # mid-band candidate
-            (3, [0.0, 0.0, 1.0, 0.0]),    # orthogonal → too far
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    rows = hard_negative_mining(emb, dim=4).collect()
-    # every emitted pair is inside the band by contract
-    for r in rows:
-        assert 300_000 <= r["cos_mppm"] < 850_000, r
-    # ranks are 1..k per anchor, ordered by cos desc then id
-    by_anchor = {}
-    for r in rows:
-        by_anchor.setdefault(r["anchor_id"], []).append(r)
-    for rs in by_anchor.values():
-        rs.sort(key=lambda r: r["rank"])
-        assert [r["rank"] for r in rs] == list(range(1, len(rs) + 1))
-        coss = [r["cos_mppm"] for r in rs]
-        assert coss == sorted(coss, reverse=True)
-    # the near-dup pair (0,1) must NOT appear as negatives
-    assert all(
-        {r["anchor_id"], r["negative_id"]} != {0, 1} for r in rows
-    )
-
-
-def test_energy_curve_monotone_and_exact_on_construction(spark):
-    """Vectors with all energy in the first 8 dims → every prefix
-    captures 100%; a vector with energy only in dim 64 drags the
-    min to 0 for every prefix below 64."""
-    from iceberg_diag_spark.operators.similarity import (
-        embedding_energy_curve,
-    )
-
-    front = [(i, [1.0] * 8 + [0.0] * 56) for i in range(4)]
-    tail = [(99, [0.0] * 63 + [1.0])]
-    emb = spark.createDataFrame(
-        front + tail, "vec_id long, embedding array<float>"
-    )
-    rows = {r["prefix_dim"]: r for r in embedding_energy_curve(emb).collect()}
-    assert rows[64]["total_captured_ppm"] == 1_000_000
-    assert rows[64]["min_vec_ppm"] == 1_000_000
-    for d in (8, 16, 32, 48):
-        assert rows[d]["min_vec_ppm"] == 0          # the tail vector
-        # 4 front vectors: 8·256² each; tail: 1·256²
-        assert rows[d]["total_captured_ppm"] == (
-            1_000_000 * (4 * 8 * 256 * 256)
-        ) // (4 * 8 * 256 * 256 + 256 * 256)
-    # monotone non-decreasing in d
-    tots = [rows[d]["total_captured_ppm"] for d in (8, 16, 32, 48, 64)]
-    assert tots == sorted(tots)
-
-
-def test_pca_power_recovers_planted_direction(spark):
-    """Embeddings planted on the line t·(0.6, 0.8, 0, …): the top
-    component must align with (3,4)/5 — max|v| hits the 2^12 grid on
-    dim 1 and dim 0 lands at ~3/4 of it — and the variance share must
-    be ≈ 1e6 (rank-one cloud; only quantization noise leaks out)."""
-    from iceberg_diag_spark.operators.similarity import pca_power
-
-    rows = []
-    for k in range(200):
-        t = (k - 100) / 100.0
-        vec = [0.6 * t, 0.8 * t] + [0.0] * 62
-        rows.append((k, vec))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {r["pos"]: r for r in pca_power(emb).collect()}
-    assert len(got) == 64
-    v0, v1 = got[0]["v_q"], got[1]["v_q"]
-    assert abs(v1) == 4096
-    # same sign, 3:4 ratio within quantization slack
-    assert v0 * v1 > 0
-    assert abs(abs(v0) - 3072) <= 8
-    share = got[0]["eig_share_ppm"]
-    assert all(r["eig_share_ppm"] == share for r in got.values())
-    assert share >= 990_000
-    # off-plane dims carry no signal
-    assert all(abs(got[p]["v_q"]) <= 8 for p in range(2, 64))
-
-
-def test_retrieval_rank_eval_identities(spark):
-    """Rank-metric identities on the real table: rr_ppm = 0 iff no
-    relevant item was retrieved; precision ≤ recall-compatible bound
-    (n_retrieved ≤ k); hit@1 ⇒ rr_ppm = 1e6; every panel query from
-    the recall audit appears here too (no silent disappearance)."""
-    from iceberg_diag_spark.operators.similarity import (
-        ann_recall_eval,
-        retrieval_rank_eval,
-    )
-    from iceberg_diag_spark.sources.tpch import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    got = {r["query_id"]: r for r in retrieval_rank_eval(emb, query_mod=50).collect()}
-    recall_panel = {
-        r["query_id"] for r in ann_recall_eval(emb, query_mod=50).collect()
-    }
-    assert set(got) == recall_panel
-    for r in got.values():
-        assert 0 <= r["n_retrieved"] <= 5
-        assert 0 <= r["precision_ppm"] <= 1_000_000
-        if r["hit_at_1"]:
-            assert r["rr_ppm"] == 1_000_000
-        if r["rr_ppm"] == 0:
-            assert r["precision_ppm"] == 0
-        if r["precision_ppm"] == 0:
-            assert r["rr_ppm"] == 0 and not r["hit_at_1"]
-
-
-def test_pq_codebook_invariants_on_real_table(spark):
-    """On the real embeddings: refined distortion never exceeds seed
-    distortion (Lloyd monotonicity), per-subspace occupancy sums to
-    ~1e6 ppm, and every subspace's members add up to the corpus."""
-    from iceberg_diag_spark.operators.similarity import pq_codebook_audit
-    from iceberg_diag_spark.sources.tpch import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    n = emb.count()
-    rows = pq_codebook_audit(emb).collect()
-    assert rows
-    by_sub = {}
-    for r in rows:
-        assert r["mean_refined_d2"] <= r["mean_seed_d2"]
-        assert r["mean_refined_d2"] >= 0
-        by_sub.setdefault(r["subspace"], []).append(r)
-    assert set(by_sub) == set(range(8))
-    for m, cells in by_sub.items():
-        assert sum(r["n_assigned"] for r in cells) == n, m
-        occ = sum(r["occupancy_ppm"] for r in cells)
-        assert 1_000_000 - len(cells) <= occ <= 1_000_000
-
-
-def test_pq_codebook_planted_cluster_lands_in_one_cell(spark):
-    """Vectors equal to a known codeword (subspace 0's code 3,
-    zero-padded elsewhere) must all land in cell (0, 3) with zero
-    seed distortion in that subspace."""
-    from iceberg_diag_spark.operators.similarity import (
-        md5_pq_codebook,
-        pq_codebook_audit,
-    )
-
-    book = md5_pq_codebook()
-    target = [h / 256.0 for h in book[0][3]]
-    vecs = [(i, target + [0.0] * 56) for i in range(20)]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    got = {
-        (r["subspace"], r["code"]): r for r in pq_codebook_audit(emb).collect()
-    }
-    cell = got[(0, 3)]
-    assert cell["n_assigned"] == 20
-    assert cell["occupancy_ppm"] == 1_000_000
-    assert cell["mean_seed_d2"] == 0 and cell["mean_refined_d2"] == 0
-
-
-def test_matryoshka_recall_grows_with_prefix(spark):
-    """On the deterministic synthetic embeddings, 32-dim prefixes
-    recover strictly more of the full-64 top-k than 16-dim prefixes
-    in aggregate, every query reports both prefixes, and recall stays
-    a valid ppm."""
-    from iceberg_diag_spark.operators.similarity import matryoshka_audit
-    from iceberg_diag_spark.sources.tpch import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    rows = matryoshka_audit(emb).collect()
-    by_dim = {}
-    for r in rows:
-        assert 0 <= r["recall_ppm"] <= 1_000_000
-        assert r["n_hits"] <= r["n_exact"] == 5
-        by_dim.setdefault(r["prefix_dim"], []).append(r["recall_ppm"])
-    assert set(by_dim) == {16, 32}
-    assert len(by_dim[16]) == len(by_dim[32])
-    assert sum(by_dim[32]) > sum(by_dim[16])

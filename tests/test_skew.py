@@ -1,8 +1,6 @@
-"""Skew helpers (functions/skew.py): salted two-stage aggregation
-equals the direct groupBy on a deliberately skewed key distribution
-and fans the hot key out (stage-1 groups >> distinct keys); the skew
-audit, the join cardinality and the join selectivity match real
-joins."""
+"""Salted two-stage aggregation: result equality with the direct
+groupBy on a deliberately skewed key distribution, and the fan-out
+property (stage-1 groups >> distinct keys for the hot key)."""
 
 from __future__ import annotations
 
@@ -169,18 +167,3 @@ def test_aqe_splits_skewed_join_partitions(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_join_selectivity_matches_real_join(spark):
-    from iceberg_diag_spark.functions.skew import join_selectivity
-
-    left = spark.createDataFrame([(1,), (1,), (2,), (3,)], "k long")
-    right = spark.createDataFrame([(1,), (3,), (3,), (4,)], "k long")
-    row = join_selectivity(left, right, "k").collect()[0]
-    assert row.n_left == 4 and row.n_right == 4
-    assert row.n_keys_left == 3 and row.n_keys_right == 3
-    assert row.n_keys_both == 2  # keys 1, 3
-    # accounting must agree with the real semi joins
-    assert row.matched_left == left.join(right, "k", "semi").count() == 3
-    assert row.matched_right == right.join(left, "k", "semi").count() == 3
-    assert row.match_left_ppm == 750_000

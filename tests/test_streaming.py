@@ -1,7 +1,5 @@
-"""Structured Streaming operators (streaming/stream_ops.py):
-batch-equivalence over a finite source, state semantics under
-multi-batch incremental processing, and the incremental corpus
-release.
+"""Structured Streaming operators: batch-equivalence over a finite
+source, plus state semantics under multi-batch incremental processing.
 
 Strategy: drain each stream with trigger(availableNow=True) into a
 memory sink, then compare against the equivalent batch DataFrame
@@ -20,8 +18,6 @@ from pyspark.sql import functions as F
 from iceberg_diag_spark.operators import events as batch_events
 from iceberg_diag_spark.sources.tpch import load_table
 from iceberg_diag_spark.streaming import stream_ops as so
-
-from helpers import DOCS_SCHEMA, write_one_file, write_release
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -437,167 +433,3 @@ def test_stream_plumbing_written_once():
         "batch_dir": {"stream_ops:_start_batch_dirs"},
         "release_write": {"funnel:_write_release"},
     }
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF_DIR}/documents.parquet")
-
-
-# ---------------------------------------------------------------
-# incremental corpus release
-# ---------------------------------------------------------------
-
-def _mk_docs(i0: int, n: int, source: str):
-    # clean English docs that pass the funnel's stage-1 gate, each
-    # with a distinct tail so exact dedup keeps them all
-    rows = []
-    for i in range(i0, i0 + n):
-        t = (
-            "the quick brown fox jumps over a lazy dog and it is "
-            f"known that document number {i} differs in this tail"
-        )
-        rows.append((i, t, "en", source, len(t)))
-    return rows
-
-
-def test_stream_release_multi_batch_and_replay(spark, tmp_path_factory):
-    """Two files drained one-per-trigger = two increments: the
-    accumulated manifest must account for BOTH increments' survivors
-    (union of two per-increment batch releases), and a REPLAYED
-    increment (failure → restart re-runs the same batch id) must
-    leave the manifest bit-identical — the idempotent overwrite is
-    what makes the sink exactly-once."""
-    import tempfile
-
-    from iceberg_diag_spark.operators import funnel
-
-    root = str(tmp_path_factory.mktemp("release_stream"))
-    base = os.path.join(root, "docs")
-    os.makedirs(base)
-
-    r1 = _mk_docs(0, 30, "web")
-    r2 = _mk_docs(1000, 20, "books")
-    write_one_file(spark.createDataFrame(r1, DOCS_SCHEMA), base, "f1.parquet")
-    write_one_file(spark.createDataFrame(r2, DOCS_SCHEMA), base, "f2.parquet")
-
-    schema = spark.read.parquet(base).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-    )
-    release = tempfile.mkdtemp(prefix="release_stream_test_")
-    try:
-        q = so.corpus_release_stream(stream, release)
-        assert q.awaitTermination(240)
-        q.stop()
-        batches = sorted(
-            d for d in os.listdir(release) if d.startswith("batch=")
-        )
-        assert len(batches) == 2
-        manifest0 = sorted(
-            tuple(r)
-            for r in so.release_manifest_from_stream(spark, release).collect()
-        )
-        # accumulated docs = union of the two per-increment releases
-        n_docs = sum(r[1] for r in manifest0)
-        per_batch = [
-            funnel.release_assignments(
-                spark.createDataFrame(rows, DOCS_SCHEMA)
-            ).count()
-            for rows in (r1, r2)
-        ]
-        assert n_docs == sum(per_batch) and n_docs > 0
-
-        # replay increment 0 (what a checkpoint restart does): rewrite
-        # the SAME batch dir with the same writer logic
-        replay_id = int(batches[0].split("=")[1])
-        write_release(spark, release, [(replay_id, r1)])
-        manifest1 = sorted(
-            tuple(r)
-            for r in so.release_manifest_from_stream(spark, release).collect()
-        )
-        assert manifest1 == manifest0
-    finally:
-        shutil.rmtree(release, ignore_errors=True)
-
-
-def test_stream_release_single_drain_equals_batch_manifest(spark, docs):
-    """The shared-oracle contract: one availableNow increment over
-    the full corpus equals the batch corpus_release_manifest."""
-    from iceberg_diag_spark.operators import funnel
-    from iceberg_diag_spark.streaming import stream_ops as so
-
-    got = sorted(
-        tuple(r)
-        for r in so.run_corpus_release_stream(spark, SF_DIR).collect()
-    )
-    want = sorted(
-        tuple(r) for r in funnel.corpus_release_manifest(docs).collect()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_stream_centroid_confusion_equals_batch(spark):
-    from iceberg_diag_spark.operators.similarity import (
-        nearest_centroid_confusion,
-    )
-    from iceberg_diag_spark.streaming import stream_ops
-
-    sf_dir = "/root/testdata/sf0.001"
-    batch = {
-        (r.label, r.predicted): r.n_vecs
-        for r in nearest_centroid_confusion(
-            spark.read.parquet(sf_dir + "/embeddings.parquet")
-        ).collect()
-    }
-    streamed = {
-        (r.label, r.predicted): r.n_vecs
-        for r in stream_ops.run_to_table(
-            stream_ops.centroid_confusion_stream(
-                stream_ops.read_embeddings_stream(spark, sf_dir),
-                spark.read.parquet(sf_dir + "/embeddings.parquet"),
-            ),
-            "complete",
-            "test_stream_centroid_confusion",
-        ).collect()
-    }
-    assert streamed == batch
-
-
-def test_stream_repetition_gate_matches_batch_flag(spark, tmp_path):
-    """The streaming per-source counts must equal the batch profile's
-    flag counts — same expressions, drained once."""
-    import os
-    from iceberg_diag_spark.operators.textops import doc_repetition_profile
-    from iceberg_diag_spark.streaming import stream_ops
-
-    docs = spark.createDataFrame(
-        [
-            (0, "spam spam " * 30, "en", "srcA", 0),
-            (1, "regular words only here thanks", "en", "srcA", 0),
-            (2, "buy now " * 25, "en", "srcB", 0),
-        ],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    sf_dir = str(tmp_path / "sf")
-    os.makedirs(sf_dir, exist_ok=True)
-    docs.coalesce(1).write.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-    out = stream_ops.run_to_table(
-        stream_ops.repetition_gate_stream(
-            stream_ops.read_documents_stream(spark, sf_dir)
-        ),
-        "complete",
-        "t_stream_rep_gate",
-    )
-    got = {r["source"]: (r["n_docs"], r["n_repetitive"]) for r in out.collect()}
-    prof = doc_repetition_profile(docs).collect()
-    want = {}
-    for r in prof:
-        src = "srcA" if r["doc_id"] in (0, 1) else "srcB"
-        n, k = want.get(src, (0, 0))
-        want[src] = (n + 1, k + int(r["repetitive"]))
-    assert got == want
-    assert got["srcA"] == (2, 1) and got["srcB"] == (1, 1)

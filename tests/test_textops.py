@@ -1,31 +1,10 @@
-"""Text operators (operators/textops.py): known-answer and
-brute-force-reference checks of the quality, language-model,
-tokenizer, classifier, retrieval and corpus-statistics operators, and
-the structure check that each shared corpus statistic is built in one
-helper (AST only)."""
+"""Structure checks of operators/textops.py: each shared corpus
+statistic is built in one helper. AST only; needs no Spark session."""
 
 from __future__ import annotations
 
 import ast
-import hashlib
-import math
 import pathlib
-import random
-import re
-
-import pytest
-from pyspark.sql import functions as F
-
-from iceberg_diag_spark.operators import textops
-from iceberg_diag_spark.operators.textops import (
-    LR_WEIGHT_COLS,
-    _lr_standardized,
-    _scored_vs_gate,
-    classifier_apply_trained,
-    classifier_train_lr,
-    exact_auc,
-)
-from iceberg_diag_spark.sources.tpch import load_table
 
 
 def _ngram_sites(path=None) -> dict[str, list[str]]:
@@ -80,1742 +59,3 @@ def test_ngram_statistics_built_once():
         "r_all": ["_rule_battery"],
         "window_bigrams": [],
     }
-
-
-def test_token_histogram_buckets(spark):
-    from iceberg_diag_spark.operators.textops import token_histogram
-
-    rows = [
-        (1, "one two three", "en"),          # 3 tokens → <=8
-        (2, " ".join(["w"] * 9), "en"),      # 9 tokens → <=16
-        (3, " ".join(["w"] * 600), "fr"),    # 600 tokens → 513+
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    got = {
-        (r.lang, r.bucket): (r.doc_count, r.avg_tokens)
-        for r in token_histogram(df).collect()
-    }
-    assert got[("en", "<=8")] == (1, 3.0)
-    assert got[("en", "<=16")] == (1, 9.0)
-    assert got[("fr", "513+")] == (1, 600.0)
-
-
-def test_doc_chunks_exact(spark):
-    from iceberg_diag_spark.operators.textops import doc_chunks
-
-    rows = [
-        (1, " ".join(f"t{i}" for i in range(130))),  # 130 → 3 chunks
-        (2, "single"),                               # 1 token → 1 chunk
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (r.doc_id, r.chunk_id): r.n_chunk_tokens
-        for r in doc_chunks(df, chunk_tokens=64).collect()
-    }
-    assert got == {(1, 0): 64, (1, 1): 64, (1, 2): 2, (2, 0): 1}
-
-
-def test_fuzzy_name_pairs_contract(spark):
-    from iceberg_diag_spark.operators.textops import fuzzy_name_pairs
-
-    rows = [(i, n) for i, n in enumerate(
-        ["red bolt", "red bolts", "red gear", "blue bolt", "ted bolt"]
-    )]
-    df = spark.createDataFrame(rows, "k long, name string")
-    got = {(r.name_a, r.name_b): r.distance
-           for r in fuzzy_name_pairs(df, "name").collect()}
-    # within the 're' block: bolt/bolts dist 1; bolt/gear dist 4 (out)
-    assert got == {("red bolt", "red bolts"): 1}
-    # 'ted bolt' (block 'te') and 'blue bolt' (block 'bl') are out of
-    # contract by prefix blocking even though edit distance is small
-    assert not any("ted bolt" in p or "blue bolt" in p for p in got)
-
-
-def test_length_deciles_monotone(spark):
-    from iceberg_diag_spark.operators.textops import length_deciles
-
-    rows = [(i, i * 10) for i in range(1, 101)]
-    df = spark.createDataFrame(rows, "doc_id long, n_chars long")
-    got = sorted((r.n_chars, r.decile) for r in length_deciles(df).collect())
-    deciles = [d for _, d in got]
-    assert deciles == sorted(deciles)          # monotone in length
-    assert deciles[0] == 1 and deciles[-1] == 10
-    # equal lengths → same decile by construction
-    df2 = spark.createDataFrame([(i, 5) for i in range(20)],
-                                "doc_id long, n_chars long")
-    assert {r.decile for r in length_deciles(df2).collect()} == {1}
-
-
-def test_ngram_decontaminate_exact(spark):
-    from iceberg_diag_spark.operators.textops import ngram_decontaminate
-
-    shared = "a b c d e f g h"          # exactly one 8-gram
-    train = spark.createDataFrame(
-        [(1, shared + " tail words here"),   # contains the eval 8-gram
-         (2, "totally different text with no overlap at all"),
-         (3, "short")],                      # < 8 tokens → no grams
-        "doc_id long, text string",
-    )
-    ev = spark.createDataFrame([(100, shared)], "doc_id long, text string")
-    got = {r.doc_id: r.shared_ngrams
-           for r in ngram_decontaminate(train, ev, n=8).collect()}
-    assert got == {1: 1}                      # doc 2 clean, doc 3 gram-less
-
-
-def test_quality_scores_repetition_counts(spark):
-    from iceberg_diag_spark.operators.textops import quality_scores
-
-    df = spark.createDataFrame(
-        [(1, "x y z x y z x y z"),   # 7 trigrams, 3 distinct → 4 dups
-         (2, "a b"),                 # < 3 tokens → 0 trigrams
-         (3, "p q r s")],            # 2 trigrams, both unique
-        "doc_id long, text string",
-    )
-    got = {r.doc_id: (r.trigram_count, r.dup_trigram_count)
-           for r in quality_scores(df).collect()}
-    assert got == {1: (7, 4), 2: (0, 0), 3: (2, 0)}
-
-
-def test_pii_redaction_exact(spark):
-    from iceberg_diag_spark.operators.textops import pii_redaction
-
-    rows = [
-        (1, "mail bob.smith@corp.example.org now ssn 123-45-6789 call 555-0199 end"),
-        (2, "no pii here at all"),
-        (3, "two mails a@b.io and c.d@e-f.co plus 555-1234"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in pii_redaction(df).collect()}
-
-    assert (got[1].n_emails, got[1].n_ssns, got[1].n_phones) == (1, 1, 1)
-    assert got[1].pii_total == 3
-    assert got[2].pii_total == 0
-    assert (got[3].n_emails, got[3].n_phones) == (2, 1)
-
-    import hashlib
-
-    expected1 = "mail <EMAIL> now ssn <SSN> call <PHONE> end"
-    assert got[1].redacted_md5 == hashlib.md5(expected1.encode()).hexdigest()
-    assert got[1].redacted_len == len(expected1)
-    # no-PII text passes through untouched
-    assert got[2].redacted_md5 == hashlib.md5(b"no pii here at all").hexdigest()
-
-
-def test_boilerplate_removal_exact(spark):
-    import hashlib
-
-    from iceberg_diag_spark.operators.textops import boilerplate_removal
-
-    # "promo" appears in 3 docs -> boilerplate at min_docs=3;
-    # unique bodies survive; doc 4 is ALL boilerplate.
-    rows = [
-        (1, "alpha body one. promo line"),
-        (2, "beta body two. promo line"),
-        (3, "gamma body three. promo line. extra tail"),
-        (4, "promo line"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in boilerplate_removal(df, min_docs=3).collect()}
-
-    assert (got[1].n_sentences, got[1].n_kept, got[1].n_dropped) == (2, 1, 1)
-    assert got[1].cleaned_md5 == hashlib.md5(b"alpha body one").hexdigest()
-    # order preserved across a dropped middle sentence
-    assert got[3].cleaned_md5 == hashlib.md5(
-        b"gamma body three. extra tail"
-    ).hexdigest()
-    # fully-boilerplate doc still emitted, cleaned to empty
-    assert (got[4].n_kept, got[4].n_dropped) == (0, 1)
-    assert got[4].cleaned_md5 == hashlib.md5(b"").hexdigest()
-    # normalization: trailing-case variants count as the same form
-    rows2 = rows + [(5, "PROMO LINE")]
-    df2 = spark.createDataFrame(rows2, "doc_id long, text string")
-    got2 = {r.doc_id: r for r in boilerplate_removal(df2, min_docs=4).collect()}
-    assert got2[5].n_dropped == 1
-
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_unigram_lm_train_planted(spark):
-    """Hand-computed hard-EM on a planted corpus: words ab(x4), c(x2).
-    Seed vocab: chars a,b,c + multi 'ab'. Viterbi segments 'ab' as the
-    single piece (one term beats two of equal unit cost), so the final
-    counts are ab=4, c=2, a=b=0 (chars kept for coverage) and the
-    smoothed scores are -ln((cnt+1)/(total+V)) with total=6, V=4."""
-    import math
-
-    from iceberg_diag_spark.operators.textops import unigram_lm_train
-
-    docs = spark.createDataFrame(
-        [(1, "ab ab ab c", "s1"), (2, "ab c", "s1")],
-        "doc_id long, text string, source string",
-    )
-    rows = {
-        r.piece: (r.piece_len, r.em_count, r.nll_micro)
-        for r in unigram_lm_train(docs, k_em=2, n_multi=4).collect()
-    }
-    def nll(cnt):
-        return math.floor(-math.log((cnt + 1) / 10.0) * 1_000_000)
-    assert rows == {
-        "a": (1, 0, nll(0)),
-        "b": (1, 0, nll(0)),
-        "ab": (2, 4, nll(4)),
-        "c": (1, 2, nll(2)),
-    }
-
-
-def test_unigram_longest_piece_tiebreak(spark):
-    """'abc' with equal-count pieces 'ab','bc','abc' and chars: the
-    3-char piece wins (fewer terms), and among equal-cost candidates
-    the backtrack picks the LONGEST — 'abc' must be chosen whole, not
-    as ab+c or a+bc."""
-    from iceberg_diag_spark.operators.textops import unigram_lm_train
-
-    docs = spark.createDataFrame(
-        [(1, "abc abc", "s1")], "doc_id long, text string, source string"
-    )
-    rows = {
-        r.piece: r.em_count
-        for r in unigram_lm_train(docs, k_em=1, n_multi=8).collect()
-    }
-    assert rows.get("abc") == 2
-    assert all(
-        cnt == 0 for p, cnt in rows.items() if p != "abc"
-    )
-
-
-def test_unigram_fertility_vs_bpe(spark):
-    """Fertility comparison on the shared documents fixture: the
-    trained unigram tokenizer's fertility (pieces per word) must beat
-    the all-characters baseline and land in the same regime as the
-    trained BPE tokenizer's corpus fertility (both learn the same
-    small synthetic vocabulary, so neither should be >2x the other)."""
-    from iceberg_diag_spark.operators.textops import (
-        bpe_vocab_coverage,
-        unigram_lm_train,
-    )
-    from iceberg_diag_spark.sources.tpch import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    pieces = unigram_lm_train(docs).collect()
-    total_pieces = sum(r.em_count for r in pieces)
-    words_chars = (
-        docs.selectExpr(
-            "explode(split(regexp_replace(lower(trim(text)), '\\\\s+', ' '),"
-            " ' ')) AS w"
-        )
-        .where("w <> ''")
-        .selectExpr(
-            "count(1) AS words", "sum(length(w)) AS chars"
-        )
-        .collect()[0]
-    )
-    uni_fert_ppm = 1_000_000 * total_pieces // words_chars.words
-    base_fert_ppm = 1_000_000 * words_chars.chars // words_chars.words
-    assert 1_000_000 <= uni_fert_ppm < base_fert_ppm
-    bpe = bpe_vocab_coverage(docs).collect()
-    bpe_fert_ppm = (
-        1_000_000 * sum(r.subwords for r in bpe) // sum(r.words for r in bpe)
-    )
-    assert uni_fert_ppm < 2 * bpe_fert_ppm
-    assert bpe_fert_ppm < 2 * uni_fert_ppm
-
-
-def test_exact_auc_hand_computed_with_ties(spark):
-    """Planted score/label pairs including a tie: scores [1,2,2,3],
-    labels [0,0,1,1]. Pos-neg pairs: (2,1)=1, (2,2)=0.5, (3,1)=1,
-    (3,2)=1 -> U=3.5, AUC=3.5/4=0.875 -> 875000 ppm."""
-    from iceberg_diag_spark.operators.textops import exact_auc
-
-    df = spark.createDataFrame(
-        [(1, 0), (2, 0), (2, 1), (3, 1)], "score long, y long"
-    )
-    row = exact_auc(df).collect()[0]
-    assert (row.auc_ppm, row.n_pos_total, row.n_neg_total) == (875_000, 2, 2)
-
-
-def test_exact_auc_edges(spark):
-    """Perfect separation -> 1e6; reversed -> 0; all-tied -> 500000;
-    single-class -> NULL."""
-    from iceberg_diag_spark.operators.textops import exact_auc
-
-    perfect = spark.createDataFrame(
-        [(1, 0), (2, 0), (3, 1), (4, 1)], "score long, y long"
-    )
-    assert exact_auc(perfect).collect()[0].auc_ppm == 1_000_000
-    reverse = spark.createDataFrame(
-        [(4, 0), (3, 0), (2, 1), (1, 1)], "score long, y long"
-    )
-    assert exact_auc(reverse).collect()[0].auc_ppm == 0
-    tied = spark.createDataFrame(
-        [(7, 0), (7, 1), (7, 0), (7, 1)], "score long, y long"
-    )
-    assert exact_auc(tied).collect()[0].auc_ppm == 500_000
-    one_class = spark.createDataFrame([(1, 1), (2, 1)], "score long, y long")
-    assert exact_auc(one_class).collect()[0].auc_ppm is None
-
-
-def test_classifier_auc_calibration_fixture(spark):
-    """On the documents fixture: bins partition the corpus (doc counts
-    sum to the table), empirical rates are exact ratios, and the AUC
-    column is constant across bins and inside [0, 1e6]."""
-    from iceberg_diag_spark.operators.textops import (
-        classifier_auc_calibration,
-    )
-    from iceberg_diag_spark.sources.tpch import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    rows = classifier_auc_calibration(docs).collect()
-    assert sum(r.n_docs for r in rows) == docs.count()
-    assert len({r.auc_ppm for r in rows}) == 1
-    auc = rows[0].auc_ppm
-    assert auc is not None and 0 <= auc <= 1_000_000
-    for r in rows:
-        assert 0 <= r.bin_id <= 9
-        assert r.pos_rate_ppm == 1_000_000 * r.n_pos // r.n_docs
-        assert r.calib_gap_ppm == r.mean_pred_ppm - r.pos_rate_ppm
-
-
-def test_c4_rules_audit_planted(spark):
-    """Planted per-rule failures: doc 2 fails sentence/punct/words,
-    doc 3 fails lorem, doc 4 fails brace, doc 5 fails badwords; the
-    line filter keeps exactly the punct-terminated >=5-word lines."""
-    from iceberg_diag_spark.operators.textops import c4_rules_audit
-
-    docs = spark.createDataFrame(
-        [
-            (1, "This is a good clean sentence here.\n"
-                "Another fine long sentence follows! Is it third? Yes.",
-             "a"),
-            (2, "short line\nno punct here at all", "a"),
-            (3, "lorem ipsum dolor sit amet etc etc etc.", "b"),
-            (4, "code { braces } in this one. Two more follow now! Ok?",
-             "b"),
-            (5, "casino viagra spam sentence one. two is fine! three?",
-             "b"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    rows = {r.source: r for r in c4_rules_audit(docs).collect()}
-    a, b = rows["a"], rows["b"]
-    assert (a.n_docs, a.n_pass_all, a.lines_total, a.lines_kept) == (
-        2, 1, 4, 2,
-    )
-    assert (a.n_pass_min_sentences, a.n_pass_line_punct,
-            a.n_pass_line_words) == (1, 1, 1)
-    assert (b.n_pass_no_lorem, b.n_pass_no_brace, b.n_pass_no_badwords) == (
-        2, 2, 2,
-    )
-    assert b.n_pass_all == 0
-    assert a.pass_all_ppm == 500_000
-
-
-def test_classifier_pr_curve_matches_python_reference(spark):
-    """Recompute the full PR relation in plain Python from the same
-    per-doc (score, label) pairs and compare the 11-point interpolated
-    precisions and the best-F1 operating point exactly."""
-    from iceberg_diag_spark.operators.textops import (
-        _scored_vs_gate,
-        classifier_pr_curve,
-    )
-    from iceberg_diag_spark.sources.tpch import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    pairs = [
-        (r.z_micro, r.y) for r in _scored_vs_gate(docs, "text").collect()
-    ]
-    p_total = sum(y for _, y in pairs)
-    assert p_total > 0
-    # histogram -> descending inclusive cumulatives
-    hist: dict[int, list[int]] = {}
-    for z, y in pairs:
-        n, n1 = hist.get(z, (0, 0))
-        hist[z] = (n + 1, n1 + y)
-    rows = []
-    tp = fp = 0
-    for z in sorted(hist, reverse=True):
-        n, n1 = hist[z]
-        tp += n1
-        fp += n - n1
-        fn = p_total - tp
-        rows.append(
-            (z, tp, fp, fn,
-             1_000_000 * tp // (tp + fp),
-             2_000_000 * tp // (2 * tp + fp + fn))
-        )
-    expect_interp = {
-        r_idx * 100_000: max(
-            prec for (z, tp, fp, fn, prec, f1) in rows
-            if tp * 10 >= r_idx * p_total
-        )
-        for r_idx in range(11)
-    }
-    expect_best = max(rows, key=lambda r: (r[5], r[0]))
-    got = classifier_pr_curve(docs).collect()
-    assert len(got) == 11
-    for r in got:
-        assert expect_interp[r.recall_grid_ppm] == r.interp_precision_ppm
-        assert (r.best_threshold_z, r.best_tp, r.best_fp, r.best_fn,
-                r.best_f1_ppm) == (
-            expect_best[0], expect_best[1], expect_best[2],
-            expect_best[3], expect_best[5],
-        )
-    # interpolated precision is non-increasing in the recall floor
-    seq = [r.interp_precision_ppm
-           for r in sorted(got, key=lambda r: r.recall_grid_ppm)]
-    assert all(a >= b for a, b in zip(seq, seq[1:]))
-
-
-def test_classifier_pr_curve_empty_without_positives(spark):
-    """A corpus with no gate-positives has undefined recall — the
-    operator must return an EMPTY relation, not divide by zero."""
-    from iceberg_diag_spark.operators.textops import classifier_pr_curve
-
-    docs = spark.createDataFrame(
-        [(1, "zz zz zz", "s"), (2, "qq qq", "s")],
-        "doc_id long, text string, source string",
-    )
-    assert classifier_pr_curve(docs).count() == 0
-
-
-def _auc2_histogram(pairs):
-    """The histogram closed form exact_auc implements:
-    2U = sum over distinct scores of n1*(2*cum0_below + n0)."""
-    hist = {}
-    for s, y in pairs:
-        n, n1 = hist.get(s, (0, 0))
-        hist[s] = (n + 1, n1 + y)
-    u2 = 0
-    cum0 = 0
-    for s in sorted(hist):
-        n, n1 = hist[s]
-        n0 = n - n1
-        u2 += n1 * (2 * cum0 + n0)
-        cum0 += n0
-    return u2
-
-
-def _auc2_bruteforce(pairs):
-    """2U by direct pair enumeration: 2 per won pair, 1 per tie."""
-    pos = [s for s, y in pairs if y]
-    neg = [s for s, y in pairs if not y]
-    return sum(
-        2 if p > n else (1 if p == n else 0) for p in pos for n in neg
-    )
-
-
-def test_auc_histogram_closed_form_property():
-    """Property (hypothesis): the tied-block histogram rank-sum equals
-    brute-force pair enumeration for arbitrary score/label multisets —
-    the identity exact_auc's scale shape rests on."""
-    from hypothesis import given, settings, strategies as st
-
-    @given(
-        st.lists(
-            st.tuples(
-                st.integers(min_value=-5, max_value=5),  # force ties
-                st.integers(min_value=0, max_value=1),
-            ),
-            max_size=120,
-        )
-    )
-    @settings(max_examples=300, deadline=None)
-    def check(pairs):
-        assert _auc2_histogram(pairs) == _auc2_bruteforce(pairs)
-
-    check()
-
-
-def test_exact_auc_matches_bruteforce_on_random_batch(spark):
-    """One Spark run over a deterministic pseudo-random batch with
-    heavy ties, pinned against the brute-force pair count."""
-    from iceberg_diag_spark.operators.textops import exact_auc
-
-    pairs = [(((i * 37) % 7) - 3, (i * 13) % 2) for i in range(500)]
-    df = spark.createDataFrame(pairs, "score long, y long")
-    row = exact_auc(df).collect()[0]
-    p = sum(y for _, y in pairs)
-    n = len(pairs) - p
-    u2 = _auc2_bruteforce(pairs)
-    assert (row.n_pos_total, row.n_neg_total) == (p, n)
-    assert row.auc_ppm == 1_000_000 * u2 // (2 * p * n)
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF_DIR}/documents.parquet")
-
-
-def _auc_ppm(df):
-    return df.collect()[0].auc_ppm
-
-
-def test_train_lr_trajectory_shape(spark, docs):
-    traj = classifier_train_lr(docs, k_steps=3).collect()
-    assert [r.step for r in traj] == [0, 1, 2, 3]
-    # step 0 is the zero init; step 1 must move every weight the
-    # gradient touches (the bias always moves unless classes balance
-    # to the floor exactly — assert at least one weight moved)
-    assert all(traj[0][c] == 0 for c in LR_WEIGHT_COLS)
-    assert any(traj[1][c] != 0 for c in LR_WEIGHT_COLS)
-
-
-def test_trained_weights_beat_handset_auc(spark, docs):
-    """Acceptance: 12 GD steps must RANK the
-    curation gate better than the hand-set CLASSIFIER_WEIGHTS do,
-    measured by the same exact tie-corrected AUC operator the engine
-    ships (classifier_auc_calibration's core)."""
-    final = classifier_train_lr(docs).orderBy(F.desc("step")).first()
-    w = [final[c] for c in LR_WEIGHT_COLS]
-
-    feat = _lr_standardized(docs, "text")
-    fcols = ["x0"] + [f"sx{j}" for j in range(1, 6)]
-    zsum = " + ".join(
-        f"CAST({wj} AS DECIMAL(38,0)) * {x}" for wj, x in zip(w, fcols)
-    )
-    scored_trained = feat.select(
-        F.expr(
-            f"CAST(CASE WHEN ({zsum}) < 0"
-            f" THEN -((-({zsum})) DIV 1000000)"
-            f" ELSE ({zsum}) DIV 1000000 END AS BIGINT)"
-        ).alias("score"),
-        "y",
-    )
-    auc_trained = _auc_ppm(exact_auc(scored_trained, "score", "y"))
-    auc_hand = _auc_ppm(
-        exact_auc(_scored_vs_gate(docs, "text"), "z_micro", "y")
-    )
-    assert auc_trained is not None and auc_hand is not None
-    assert auc_trained > auc_hand, (auc_trained, auc_hand)
-    # and not by luck: the measured gap at sf0.001 is ~5 AUC points
-    # (916504 -> 965027 ppm); pin a conservative floor
-    assert auc_trained >= auc_hand + 20_000, (auc_trained, auc_hand)
-
-
-def test_train_lr_deterministic(spark, docs):
-    a = classifier_train_lr(docs, k_steps=2).collect()
-    b = classifier_train_lr(docs, k_steps=2).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
-# ---------------------------------------------------------------
-# unigram_lm_encode (trainer-executing pattern #7)
-# ---------------------------------------------------------------
-
-def test_unigram_encode_coverage_and_conservation(spark, docs):
-    """Every encodable word segments (single-char pieces are never
-    pruned — Kudo's coverage guarantee), so per source: pieces >=
-    words (fertility >= 1e6), chars >= pieces (a piece is >= 1 char),
-    and the word/char masses must equal a direct count over the same
-    filtered token stream (nothing dropped or double-counted by the
-    vocabulary join)."""
-    from pyspark.sql import functions as F
-
-    from iceberg_diag_spark.operators.textops import (
-        tokens,
-        unigram_lm_encode,
-    )
-
-    out = {r.source: r for r in unigram_lm_encode(docs).collect()}
-    assert out
-    for r in out.values():
-        assert r.n_pieces >= r.n_words > 0
-        assert r.n_chars >= r.n_pieces
-        assert r.fertility_ppm >= 1_000_000
-        assert r.chars_per_piece_ppm >= 1_000_000
-    direct = {
-        r.source: r
-        for r in (
-            docs.select(
-                "source", F.explode(tokens(F.col("text"))).alias("w")
-            )
-            .filter((F.col("w") != "") & (F.length("w") <= 24))
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).alias("n_words"),
-                F.sum(F.length("w")).alias("n_chars"),
-            )
-            .collect()
-        )
-    }
-    assert set(direct) == set(out)
-    for s, d in direct.items():
-        assert (out[s].n_words, out[s].n_chars) == (d.n_words, d.n_chars)
-
-
-def test_unigram_encode_planted_fixture(spark):
-    """A corpus dominated by one repeated word: the trainer seeds
-    that word (<=4 chars) as a multi-char piece, so the dominant word
-    must encode as ONE piece while a rare unseen-structure word falls
-    back to finer pieces — trained fertility on the dominant source
-    beats character-level (= word length)."""
-    rows = [(i, "abab " * 20, "en", "heavy", 100) for i in range(30)]
-    rows += [(100 + i, "zq xv jk", "en", "rare", 8) for i in range(2)]
-    docs = spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    out = {
-        r.source: r
-        for r in __import__(
-            "iceberg_diag_spark.operators.textops", fromlist=["x"]
-        ).unigram_lm_encode(docs).collect()
-    }
-    # 'abab' (len 4) is the corpus-dominant substring -> seeded as a
-    # piece -> the heavy source encodes 1 piece/word
-    assert out["heavy"].fertility_ppm == 1_000_000
-    assert out["heavy"].chars_per_piece_ppm == 4_000_000
-    # the rare 2-char words still encode (coverage), at >= 1 piece
-    assert out["rare"].n_words == 6 and out["rare"].n_pieces >= 6
-
-
-# ------------------------------------------------------------------
-# classifier_apply_trained
-# ------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def applied(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    return classifier_apply_trained(docs).collect()
-
-
-def test_apply_trained_count_invariants(applied):
-    assert len(applied) > 0
-    for r in applied:
-        assert 0 <= r.n_keep_trained <= r.n_docs
-        assert 0 <= r.n_keep_handset <= r.n_docs
-        # flips reconcile the two keep counts exactly
-        assert (
-            r.n_keep_trained - r.n_keep_handset
-            == r.n_flip_to_keep - r.n_flip_to_drop
-        )
-        assert r.n_flip_to_keep + r.n_flip_to_drop <= r.n_docs
-        assert 0 <= r.n_agree_trained <= r.n_docs
-        assert 0 <= r.n_agree_handset <= r.n_docs
-
-
-def test_apply_trained_beats_handset_on_gate(applied):
-    # the relation-level version of
-    # test_trained_weights_beat_handset_auc: the trained rule agrees
-    # with the curation gate more often than the hand-set rule does,
-    # corpus-wide
-    agree_t = sum(r.n_agree_trained for r in applied)
-    agree_h = sum(r.n_agree_handset for r in applied)
-    assert agree_t > agree_h
-
-
-def test_s1_language_gate_equivalence(spark):
-    """any-stopword-overlap ⟺ best-language-hits>0, row for row."""
-    docs = load_table(spark, SF_DIR, "documents")
-    best = textops.language_best("text")
-    mismatch = (
-        docs.select(
-            (best["hits"] > 0).alias("old_gate"),
-            F.arrays_overlap(
-                textops.tokens(F.col("text")),
-                F.array(*[F.lit(w) for w in textops.ALL_STOPWORDS]),
-            ).alias("new_gate"),
-        )
-        .filter(F.col("old_gate") != F.col("new_gate"))
-        .count()
-    )
-    assert mismatch == 0
-    # the gate is non-trivial on the fixture (both outcomes occur)
-    hits = docs.filter(
-        F.arrays_overlap(
-            textops.tokens(F.col("text")),
-            F.array(*[F.lit(w) for w in textops.ALL_STOPWORDS]),
-        )
-    ).count()
-    assert 0 < hits < docs.count()
-
-
-def test_line_dedup_keeps_first_occurrence(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta. gamma. alpha beta. delta"),
-            (2, "no repeats here. second sentence"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: r for r in textops.line_dedup(docs).collect()}
-    assert out[1].kept_sentences == 3
-    assert out[1].removed_sentences == 1
-    assert out[2].kept_sentences == 2 and out[2].removed_sentences == 0
-    # rebuilt text = first occurrences in original order
-    import hashlib
-
-    expect = hashlib.md5(
-        "alpha beta. gamma. delta".encode()
-    ).hexdigest()
-    assert out[1].cleaned_md5 == expect
-
-
-def test_unigram_logprob_uniform_corpus(spark):
-    # 4 distinct tokens, each appearing once → p = 1/4 for all,
-    # per-token NLL = ln(4) ≈ 1.386294 → 1386294 micro-nats
-    docs = spark.createDataFrame(
-        [(1, "a b"), (2, "c d")], "doc_id long, text string"
-    )
-    out = {r.doc_id: r for r in textops.unigram_logprob(docs).collect()}
-    nll = math.floor(-math.log(1 / 4) * 1_000_000)
-    for d in (1, 2):
-        assert out[d].n_tokens == 2
-        assert out[d].sum_nll_micro == 2 * nll
-        assert out[d].avg_nll_micro == nll
-
-
-def test_unigram_logprob_rare_token_scores_higher(spark):
-    docs = spark.createDataFrame(
-        [(1, "common common common common"), (2, "rare common common common")],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: r for r in textops.unigram_logprob(docs).collect()}
-    assert out[2].avg_nll_micro > out[1].avg_nll_micro
-
-
-def test_bigram_logprob_conditional_not_unigram(spark):
-    # "a b" occurs 3x, "a c" 1x: p(b|a)=3/4, p(c|a)=1/4 — doc with the
-    # rare continuation scores higher NLL despite identical unigrams
-    docs = spark.createDataFrame(
-        [(1, "a b"), (2, "a b"), (3, "a b"), (4, "a c")],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: r for r in textops.bigram_logprob(docs).collect()}
-    import math
-
-    assert out[1].avg_nll_micro == math.floor(-math.log(3 / 4) * 1_000_000)
-    assert out[4].avg_nll_micro == math.floor(-math.log(1 / 4) * 1_000_000)
-    assert out[4].avg_nll_micro > out[1].avg_nll_micro
-
-
-def test_quality_classifier_separates_junk(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat and it was a good day for everyone"),
-            (2, "@@@@ #### $$$$ %%%% ^^^^ &&&& **** (((( )))) @@@@ ####"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: r for r in textops.quality_classifier_score(docs).collect()}
-    assert out[1].keep is True
-    assert out[2].keep is False
-    assert out[1].z_micro > out[2].z_micro
-
-
-def test_tokenizer_fertility_punctuation_raises_fertility(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "plain words only here", "clean"),
-            (2, "hy-phen'd, punct.uated! text?", "messy"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    out = {r.source: r for r in textops.tokenizer_fertility(docs).collect()}
-    assert out["clean"].fertility_ppm == 1_000_000  # 1 subword per word
-    assert out["messy"].fertility_ppm > 1_000_000
-
-
-def test_langid_margin_zero_when_ambiguous(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "the cat and the dog in the house"),  # clearly en
-            (2, "zzz qqq www xxx"),                   # no stopwords anywhere
-        ],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: r for r in textops.langid_margin(docs).collect()}
-    assert out[1].margin > 0 and out[1].lang == "en"
-    assert out[2].hits == 0 and out[2].margin == 0
-
-
-def test_contamination_report_matrix(spark):
-    shared = "one two three four five six seven eight"
-    train = spark.createDataFrame(
-        [
-            (1, shared + " tail tail tail", "srcA"),
-            (2, "totally clean text with no benchmark overlap at all ok", "srcA"),
-            (3, shared + " other words", "srcB"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    evs = {
-        "bench1": spark.createDataFrame(
-            [(100, shared)], "doc_id long, text string"
-        ),
-        "bench2": spark.createDataFrame(
-            [(200, "nine ten eleven twelve thirteen fourteen fifteen sixteen")],
-            "doc_id long, text string",
-        ),
-    }
-    out = {
-        (r.eval_set, r.source): r
-        for r in textops.contamination_report(train, evs).collect()
-    }
-    assert out[("bench1", "srcA")].contaminated_docs == 1
-    assert out[("bench1", "srcA")].total_docs == 2
-    assert out[("bench1", "srcA")].contaminated_ppm == 500_000
-    assert out[("bench1", "srcB")].contaminated_docs == 1
-    assert ("bench2", "srcA") not in out  # no shared 8-grams
-
-
-def test_line_dedup_matches_python_fold(spark):
-    """Cross-check the distributed keep-first rebuild against a plain
-    Python fold over a deterministic doc set (the pack_sequences
-    cross-check pattern)."""
-    import hashlib
-
-    rows = [
-        (i, ". ".join("sent%d" % ((j * (i + 3)) % 5) for j in range(8)))
-        for i in range(30)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: (r.kept_sentences, r.removed_sentences, r.cleaned_md5)
-        for r in textops.line_dedup(docs).collect()
-    }
-    for i, text in rows:
-        seen, kept = set(), []
-        for s in text.split(". "):
-            if s not in seen:
-                seen.add(s)
-                kept.append(s)
-        expect_md5 = hashlib.md5(". ".join(kept).encode()).hexdigest()
-        n_total = len(text.split(". "))
-        assert got[i] == (len(kept), n_total - len(kept), expect_md5), i
-
-
-def test_source_tv_distance_known_value(spark):
-    from iceberg_diag_spark.operators.textops import source_tv_distance
-
-    docs = spark.createDataFrame(
-        [(1, "x x y", "A"), (2, "x y y z", "B")],
-        "doc_id long, text string, source string",
-    )
-    # p_A = (x:2/3, y:1/3, z:0), p_B = (x:1/4, y:2/4, z:1/4):
-    # TV = (|2·4−1·3| + |1·4−2·3| + |0·4−1·3|) / (2·3·4) = 10/24.
-    row = source_tv_distance(docs, vocab_size=16).collect()[0]
-    assert (row["source_a"], row["source_b"]) == ("A", "B")
-    assert row["n_tokens_a"] == 3 and row["n_tokens_b"] == 4
-    assert row["tv_ppm"] == 416_666
-    # Truncating the vocab folds y and z into the residual bucket:
-    # A = (x:2, other:1), B = (x:1, other:3) → (5 + 5)/24 — same here.
-    row1 = source_tv_distance(docs, vocab_size=1).collect()[0]
-    assert row1["tv_ppm"] == 416_666
-
-
-def test_source_tv_distance_identical_sources_zero(spark):
-    from iceberg_diag_spark.operators.textops import source_tv_distance
-
-    docs = spark.createDataFrame(
-        [(1, "a b c", "A"), (2, "a b c", "B")],
-        "doc_id long, text string, source string",
-    )
-    assert source_tv_distance(docs).collect()[0]["tv_ppm"] == 0
-
-
-def _null_source_docs(spark, null_as=None):
-    """40 docs over sources `a`, `b` and NULL (20 docs), or `null_as`
-    in place of NULL."""
-    rows = [
-        (
-            i,
-            " ".join(f"w{(i * k) % 7}" for k in range(1, 2 + i % 4)),
-            null_as if i % 2 else ("a" if i % 4 == 0 else "b"),
-            (i * 7) % 13 + 1,
-        )
-        for i in range(40)
-    ]
-    return spark.createDataFrame(
-        rows, "doc_id long, text string, source string, n_chars long"
-    )
-
-
-def _null_source_metamorphic(spark, op, sentinel):
-    """`op` over the NULL-source docs equals `op` over the same docs
-    with NULL replaced by `sentinel`, mapped back to NULL."""
-    def rows(df, null_as):
-        return sorted(
-            (tuple(None if v == null_as else v for v in r) for r in df.collect()),
-            key=repr,
-        )
-
-    got = rows(op(_null_source_docs(spark)), None)
-    want = rows(op(_null_source_docs(spark, sentinel)), sentinel)
-    assert any(None in r for r in want)
-    assert got == want
-
-
-def test_source_tv_distance_keeps_null_source(spark):
-    """The NULL source pairs with every other source and sorts first:
-    equi-joins on the source and a plain `<` drop both of its pairs
-    (1 row instead of 3)."""
-    from iceberg_diag_spark.operators.textops import source_tv_distance
-
-    _null_source_metamorphic(spark, source_tv_distance, "!null")
-
-
-def test_source_length_ks_null_source_in_range(spark):
-    """The NULL source's ECDF counts its own docs: an equi-join on the
-    source leaves its cumulative count at 0, a KS distance of 2."""
-    from iceberg_diag_spark.operators.textops import source_length_ks
-
-    _null_source_metamorphic(spark, source_length_ks, "~null")
-
-
-def test_template_clusters_count_null_source_once(spark):
-    """A cluster of NULL-source docs has one source: a countDistinct
-    on the source skips NULL and reports 0."""
-    from iceberg_diag_spark.operators.textops import template_clusters
-
-    def rows(null_as):
-        return sorted(
-            tuple(r)
-            for r in template_clusters(
-                _null_source_docs(spark, null_as)
-            ).collect()
-        )
-
-    got = rows(None)
-    assert got
-    assert got == rows("~null")
-
-
-def test_template_clusters_detects_shared_prefix(spark):
-    from iceberg_diag_spark.operators.textops import template_clusters
-
-    prefix = "error 404 page not found on this server please"
-    rows = [
-        (1, prefix + " alpha tail", "web", 0),
-        (2, prefix + " totally different continuation here", "web", 0),
-        (3, prefix + " yet another page body follows", "forum", 0),
-        (4, "a unique document with its own opening words entirely", "web", 0),
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, source string, n_chars long"
-    )
-    out = template_clusters(docs, prefix_tokens=8).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["n_docs"] == 3
-    assert r["n_sources"] == 2
-    assert r["example_doc_id"] == 1
-    assert r["total_chars"] == sum(len(t) for _, t, _, _ in rows[:3])
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-
-
-def test_dsir_logratio_ranks_target_like_docs_higher(spark):
-    from iceberg_diag_spark.operators.textops import dsir_logratio
-
-    rows = (
-        # target domain: medical-ish vocabulary
-        [(i, "patient dose trial cohort placebo outcome", "en", "tgt", 0)
-         for i in range(5)]
-        # proposal domain: web-ish vocabulary
-        + [(10 + i, "click subscribe channel video like share", "en", "web", 0)
-           for i in range(5)]
-        # one web doc that LOOKS like the target
-        + [(99, "patient dose trial cohort placebo outcome", "en", "web", 0)]
-    )
-    out = {
-        r["doc_id"]: r["avg_lr_micro"]
-        for r in dsir_logratio(
-            _docs(spark, rows), target_source="tgt"
-        ).collect()
-    }
-    # target-vocabulary docs score strictly above proposal-vocab docs
-    assert out[99] > out[10]
-    assert out[0] > out[10]
-    # the target-looking web doc scores like the target docs (same toks)
-    assert out[99] == out[0]
-
-
-def test_vocab_growth_curve_monotone_and_conserving(spark):
-    from iceberg_diag_spark.operators.textops import vocab_growth_curve
-
-    rows = [
-        (i, f"shared tokens plus unique{i} word{i % 7}", "en", "s", 0)
-        for i in range(32)
-    ]
-    out = vocab_growth_curve(_docs(spark, rows), n_shards=4).orderBy(
-        "shard_id"
-    ).collect()
-    assert [r["shard_id"] for r in out] == [0, 1, 2, 3]
-    # cum_types is the running sum of new_types and never decreases
-    run = 0
-    for r in out:
-        run += r["new_types"]
-        assert r["cum_types"] == run
-    # first shard mints the shared vocabulary; later shards only their
-    # unique{i} tokens -> strictly fewer new types than shard 0
-    assert all(r["new_types"] < out[0]["new_types"] for r in out[1:])
-    # total new types == corpus distinct types
-    total_types = (
-        _docs(spark, rows)
-        .select(F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("t"))
-        .distinct()
-        .count()
-    )
-    assert run == total_types
-
-
-def test_dsir_logratio_matches_python_reference(spark):
-    from iceberg_diag_spark.operators.textops import dsir_logratio
-
-    rng = random.Random(8)
-    vocab = [f"w{i}" for i in range(30)]
-    rows = []
-    for i in range(40):
-        src = "tgt" if i % 3 == 0 else f"other{i % 2}"
-        text = " ".join(rng.choice(vocab) for _ in range(rng.randrange(3, 15)))
-        rows.append((i, text, "en", src, 0))
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    got = {
-        r["doc_id"]: (r["n_tokens"], r["sum_lr_micro"])
-        for r in dsir_logratio(docs, target_source="tgt").collect()
-    }
-
-    # python reference with the SAME fixed-shape double expression
-    ct, cr = {}, {}
-    for i, text, _, src, _ in rows:
-        for t in text.split(" "):
-            if src == "tgt":
-                ct[t] = ct.get(t, 0) + 1
-                cr.setdefault(t, 0)
-            else:
-                cr[t] = cr.get(t, 0) + 1
-                ct.setdefault(t, 0)
-    nt, nr, v = float(sum(ct.values())), float(sum(cr.values())), float(len(ct))
-    lr = {
-        t: math.floor(
-            (math.log((ct[t] + 1) / (nt + v)) - math.log((cr[t] + 1) / (nr + v)))
-            * 1_000_000.0
-        )
-        for t in ct
-    }
-    for i, text, _, _, _ in rows:
-        toks = text.split(" ")
-        want = (len(toks), sum(lr[t] for t in toks))
-        assert got[i] == want, i
-
-
-def test_bm25_random_corpus_matches_python(spark):
-    """Random corpora: BM25 micro-scores agree exactly with the
-    fixed-shape Python expression for every scored doc (not just the
-    top-k) when k exceeds the corpus size."""
-    from iceberg_diag_spark.operators.textops import bm25_topk
-
-    rng = random.Random(11)
-    vocab = [f"w{i}" for i in range(12)]
-    q_terms = ("w0", "w1", "w2")
-    docs = [
-        (i, " ".join(rng.choice(vocab) for _ in range(rng.randrange(1, 30))))
-        for i in range(80)
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_terms_hit"], r["bm25_micro"])
-        for r in bm25_topk(df, query_terms=q_terms, k=1000).collect()
-    }
-    toks = {i: t.split(" ") for i, t in docs}
-    n_docs = len(docs)
-    avgdl = sum(len(v) for v in toks.values()) / n_docs
-    tf = {
-        (i, term): toks[i].count(term)
-        for i in toks
-        for term in q_terms
-        if term in toks[i]
-    }
-    df_t = {
-        term: sum(1 for (_, t2) in tf if t2 == term) for term in q_terms
-    }
-    ref: dict[int, tuple[int, int]] = {}
-    for (i, term), c in tf.items():
-        dl = len(toks[i])
-        idf = math.log(1.0 + ((n_docs - df_t[term] + 0.5) / (df_t[term] + 0.5)))
-        s = math.floor(
-            1_000_000.0 * idf
-            * ((c * 2.2) / (c + 1.2 * (0.25 + 0.75 * (dl / avgdl))))
-        )
-        hit, tot = ref.get(i, (0, 0))
-        ref[i] = (hit + 1, tot + s)
-    assert got == ref
-
-
-def test_bm25_topk_matches_python_reference(spark):
-    from iceberg_diag_spark.operators.textops import bm25_topk
-
-    docs = [
-        (0, "spark join window spark spark"),
-        (1, "join join filter sort"),
-        (2, "window"),
-        (3, "table scan merge sort filter agg"),  # no query term
-        (4, "spark spark spark spark spark spark spark spark"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_terms_hit"], r["bm25_micro"])
-        for r in bm25_topk(df, query_terms=("spark", "join", "window"), k=10).collect()
-    }
-    # python reference with the identical fixed-shape expression
-    toks = {i: t.split(" ") for i, t in docs}
-    n_docs = len(docs)
-    avgdl = sum(len(v) for v in toks.values()) / n_docs
-    tf = {}
-    for i, ts in toks.items():
-        for term in ("spark", "join", "window"):
-            c = ts.count(term)
-            if c:
-                tf[(i, term)] = c
-    df_t = {
-        term: sum(1 for (i, t2) in tf if t2 == term)
-        for term in ("spark", "join", "window")
-    }
-    ref = {}
-    for (i, term), c in tf.items():
-        dl = len(toks[i])
-        idf = math.log(1.0 + ((n_docs - df_t[term] + 0.5) / (df_t[term] + 0.5)))
-        s = math.floor(
-            1_000_000.0
-            * idf
-            * ((c * 2.2) / (c + 1.2 * (0.25 + 0.75 * (dl / avgdl))))
-        )
-        hit, tot = ref.get(i, (0, 0))
-        ref[i] = (hit + 1, tot + s)
-    assert got == ref
-    # doc 3 has no query terms -> absent
-    assert 3 not in got
-
-
-def test_bm25_topk_k_limits_and_ordering(spark):
-    from iceberg_diag_spark.operators.textops import bm25_topk
-
-    df = spark.createDataFrame(
-        [(i, "spark word") for i in range(10)], "doc_id long, text string"
-    )
-    rows = bm25_topk(df, query_terms=("spark",), k=4).collect()
-    # identical scores everywhere -> tie-break by doc_id ascending
-    assert [r["doc_id"] for r in rows] == [0, 1, 2, 3]
-
-
-_PMI_DOCS = [
-    (0, "a b a b a b c d"),
-    (1, "a b c a b"),
-    (2, "d c d c"),
-    (3, "x"),  # single token -> no bigrams
-]
-
-# Texts whose normalized form leaves empty tokens at the ends (a
-# newline is not trimmed, it becomes a space), empty, NULL, tab runs
-# with upper case and a single token.
-_PMI_EDGE_DOCS = [
-    (0, "\nAlpha beta"),
-    (1, "alpha BETA\n"),
-    (2, "\n"),
-    (3, ""),
-    (4, None),
-    (5, "Gamma\t\tDelta \t ALPHA\tbeta"),
-    (6, "solo"),
-    (7, "  alpha beta  "),
-    (8, "x\n\ny\n"),
-    (9, "\n\tgamma"),
-]
-
-
-@pytest.mark.parametrize(
-    "docs, min_count", [(_PMI_DOCS, 2), (_PMI_EDGE_DOCS, 1)],
-    ids=["plain", "edge_text"],
-)
-def test_pmi_collocations_matches_python_reference(spark, docs, min_count):
-    from iceberg_diag_spark.operators.textops import pmi_collocations
-
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        (r["w1"], r["w2"]): (r["n_pair"], r["pmi_micro"])
-        for r in pmi_collocations(
-            df, min_count=min_count, top_n=100
-        ).collect()
-    }
-    # python reference over the same bigram event stream, tokens from
-    # normalized_text: lower, strip spaces only, collapse \s+
-    bigrams = []
-    for _, t in docs:
-        if t is None:
-            continue
-        ts = re.sub(r"\s+", " ", t.lower().strip(" ")).split(" ")
-        bigrams += list(zip(ts, ts[1:]))
-    n_total = len(bigrams)
-    from collections import Counter
-
-    pair_c = Counter(bigrams)
-    left_c = Counter(w1 for w1, _ in bigrams)
-    right_c = Counter(w2 for _, w2 in bigrams)
-    ref = {}
-    for (w1, w2), c in pair_c.items():
-        if c >= min_count:
-            pmi = (
-                math.log(float(c))
-                + math.log(float(n_total))
-                - math.log(float(left_c[w1]))
-                - math.log(float(right_c[w2]))
-            )
-            ref[(w1, w2)] = (c, math.floor(1_000_000.0 * pmi))
-    assert got == ref
-
-
-def test_pmi_collocations_top_n_tie_break(spark):
-    from iceberg_diag_spark.operators.textops import pmi_collocations
-
-    # two disjoint pairs with identical statistics -> identical PMI;
-    # top_n=1 must pick the lexicographically first
-    df = spark.createDataFrame(
-        [(0, "a b a b"), (1, "c d c d")], "doc_id long, text string"
-    )
-    rows = pmi_collocations(df, min_count=2, top_n=1).collect()
-    assert len(rows) == 1
-    assert (rows[0]["w1"], rows[0]["w2"]) == ("a", "b")
-
-
-def test_pii_density_by_source_counts(spark):
-    from iceberg_diag_spark.operators.textops import pii_density_by_source
-
-    rows = [
-        (0, "clean text here", "a"),
-        (1, "mail me at bob@x.org today", "a"),
-        (2, "ssn 123-45-6789 and ph 555-1234", "a"),
-        (3, "two mails x@y.io z@w.co", "b"),
-        (4, "nothing", "b"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    got = {r["source"]: r.asDict() for r in pii_density_by_source(df).collect()}
-    a, b = got["a"], got["b"]
-    assert (a["n_docs"], a["docs_with_pii"]) == (3, 2)
-    assert (a["n_emails"], a["n_ssns"], a["n_phones"]) == (1, 1, 1)
-    chars_a = sum(len(t) for _, t, s in rows if s == "a")
-    assert a["total_chars"] == chars_a
-    assert a["pii_per_mchar"] == (1_000_000 * 3) // chars_a
-    assert (b["n_docs"], b["docs_with_pii"], b["n_emails"]) == (2, 1, 2)
-
-
-def test_quality_dup_matrix_counts(spark):
-    from iceberg_diag_spark.operators.textops import quality_dup_matrix
-
-    # 6 docs: two exact-dup pairs (low TTR), two unique high-TTR docs
-    docs = [
-        (0, "a a a a"),          # ttr 250000, dup (with 1)
-        (1, "a a a a"),
-        (2, "b b b b b"),        # ttr 200000, dup (with 3)
-        (3, "b b b b b"),
-        (4, "p q r s"),          # ttr 1e6, unique
-        (5, "t u v w x"),        # ttr 1e6, unique
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    rows = quality_dup_matrix(df).collect()
-    total = sum(r["n_docs"] for r in rows)
-    dup_total = sum(r["dup_docs"] for r in rows)
-    assert total == 6 and dup_total == 4
-    by_decile = sorted(rows, key=lambda r: r["decile"])
-    # every doc in the lowest-TTR bucket is a duplicate; the
-    # top bucket (ttr 1e6) holds only the unique docs
-    assert by_decile[0]["dup_ppm"] == 1_000_000
-    top = by_decile[-1]
-    assert top["min_ttr_ppm"] == 1_000_000 and top["dup_docs"] == 0
-    for r in rows:
-        assert r["dup_ppm"] == (1_000_000 * r["dup_docs"]) // r["n_docs"]
-        assert r["min_ttr_ppm"] <= r["max_ttr_ppm"]
-
-
-def test_hybrid_retrieval_reranks_by_feedback_cosine(spark):
-    """BM25 proposes candidates; the pseudo-relevance-feedback cosine
-    decides the final order. Construct a corpus where the keyword
-    order and the embedding order disagree: the doc with the WEAKEST
-    BM25 score among candidates sits closest (cosine) to the
-    feedback centroid and must win the rerank."""
-    from iceberg_diag_spark.operators.textops import hybrid_retrieval_topk
-
-    # doc 0-1: many query-term hits (top BM25 — the feedback set);
-    # doc 2: few hits but embedding aligned with docs 0-1;
-    # doc 3: mid BM25, embedding orthogonal to the feedback centroid
-    docs = spark.createDataFrame(
-        [
-            (0, "spark join window " * 6),
-            (1, "spark join window " * 5 + "filler"),
-            (2, "spark mostly other words here"),
-            (3, "spark join other words here too"),
-        ],
-        "doc_id long, text string",
-    )
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0, 0.0]),
-            (1, [1.0, 0.1, 0.0]),
-            (2, [1.0, 0.05, 0.0]),   # near the 0+1 centroid
-            (3, [0.0, 0.0, 1.0]),    # orthogonal
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    got = hybrid_retrieval_topk(
-        docs, emb, n_candidates=4, m_feedback=2, k=4
-    ).collect()
-    by_rank = {r["rank"]: r for r in got}
-    assert len(got) == 4
-    # cosine order: 0 (exact centroid direction beats its own norm
-    # tie-breaks via doc_id), 1, 2 all ~aligned; 3 orthogonal → last
-    assert by_rank[4]["doc_id"] == 3
-    assert by_rank[4]["cos_mppm"] <= 0 or (
-        by_rank[4]["cos_mppm"] < min(by_rank[i]["cos_mppm"] for i in (1, 2, 3))
-    )
-    # the aligned docs all outrank the orthogonal one despite doc 3
-    # beating doc 2 on BM25
-    bm25 = {r["doc_id"]: r["bm25_micro"] for r in got}
-    assert bm25[3] > bm25[2]
-    ranks = {r["doc_id"]: r["rank"] for r in got}
-    assert ranks[2] < ranks[3]
-
-
-def test_hybrid_retrieval_drops_candidates_without_vectors(spark):
-    """Inner-join contract: a BM25 candidate with no embedding row
-    cannot be reranked and falls out of the result."""
-    from iceberg_diag_spark.operators.textops import hybrid_retrieval_topk
-
-    docs = spark.createDataFrame(
-        [
-            (0, "spark join window spark join"),
-            (1, "spark join window"),
-            (2, "no keyword overlap at all"),
-        ],
-        "doc_id long, text string",
-    )
-    emb = spark.createDataFrame(
-        [(0, [1.0, 0.0])], "vec_id long, embedding array<float>"
-    )
-    got = hybrid_retrieval_topk(
-        docs, emb, n_candidates=3, m_feedback=2, k=3
-    ).collect()
-    assert [r["doc_id"] for r in got] == [0]
-    assert got[0]["rank"] == 1
-
-
-def test_skyline_dominance_property(spark):
-    """Every survivor is undominated; every non-survivor is
-    dominated by some doc — checked against a brute-force python
-    reference on the sf0.001 corpus."""
-    from iceberg_diag_spark.operators.textops import quality_length_skyline
-    from iceberg_diag_spark.sources.tpch import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    got = {r["doc_id"] for r in quality_length_skyline(docs).collect()}
-
-    import re as _re
-
-    pts = {}
-    for r in docs.select("doc_id", "text").collect():
-        t = _re.sub(r"\s+", " ", r["text"].strip().lower())
-        ws = t.split(" ")
-        ttr = (1_000_000 * len(set(ws))) // max(len(ws), 1)
-        pts[r["doc_id"]] = (ttr, len(r["text"]))
-
-    def dominated(i):
-        ti, ci = pts[i]
-        return any(
-            (tj >= ti and cj >= ci and (tj > ti or cj > ci))
-            for j, (tj, cj) in pts.items()
-            if j != i
-        )
-
-    want = {i for i in pts if not dominated(i)}
-    assert got == want
-
-
-def test_repetition_profile_flags_constructed_loop(spark):
-    """A doc that is one phrase repeated must trip both the top-bigram
-    and dup-5gram thresholds; a doc of all-distinct words trips
-    neither and its metrics are exactly computable by hand."""
-    from iceberg_diag_spark.operators.textops import doc_repetition_profile
-
-    docs = spark.createDataFrame(
-        [
-            (0, "buy now " * 30),            # pure repetition
-            (1, "alpha beta gamma delta epsilon zeta"),  # all distinct
-            (2, "x"),                          # single word: no grams
-        ],
-        "doc_id long, text string",
-    )
-    rows = {r["doc_id"]: r for r in doc_repetition_profile(docs).collect()}
-    assert rows[0]["repetitive"] and not rows[1]["repetitive"]
-    # doc 0: normalized = "buy now buy now ..." (30x, trailing space
-    # trimmed) → 60 words, top bigram "buy now" occurs 30 times
-    assert rows[0]["n_words"] == 60
-    assert rows[0]["top_bigram"] == "buy now"
-    assert rows[0]["top_bigram_cnt"] == 30
-    # chars = 30*8 - 1 = 239; ppm = 1e6*30*7 // 239
-    assert rows[0]["n_chars"] == 239
-    assert rows[0]["top_bigram_ppm"] == (1_000_000 * 30 * 7) // 239
-    assert rows[0]["dup5_ppm"] > 150_000
-    # doc 1: every bigram unique → top count 1, no dup 5-grams
-    assert rows[1]["top_bigram_cnt"] == 1
-    assert rows[1]["dup5_ppm"] == 0
-    # doc 2: shorter than any gram window → zeros, no crash
-    assert rows[2]["top_bigram_cnt"] == 0
-    assert rows[2]["top_bigram"] == ""
-    assert rows[2]["dup5_ppm"] == 0
-
-
-def test_repetition_profile_tie_breaks_lexically(spark):
-    """Two bigrams with the same max count → the lexically smaller
-    one is reported (array_sort makes the fold order deterministic)."""
-    from iceberg_diag_spark.operators.textops import doc_repetition_profile
-
-    docs = spark.createDataFrame(
-        [(0, "zz yy zz yy aa bb aa bb")],
-        "doc_id long, text string",
-    )
-    r = doc_repetition_profile(docs).collect()[0]
-    # "aa bb" and "zz yy" both occur twice; "aa bb" sorts first
-    assert r["top_bigram"] == "aa bb"
-    assert r["top_bigram_cnt"] == 2
-
-
-def test_repetition_profile_plan_is_shuffle_free(spark):
-    """The per-doc fold must not shuffle: no Exchange beyond the
-    final presentation sort and the parallelism repartition."""
-    from iceberg_diag_spark.operators.textops import doc_repetition_profile
-
-    docs = spark.range(0, 100).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("w"), F.col("id").cast("string"), F.lit(" x y z w"))
-        .alias("text"),
-    )
-    plan = doc_repetition_profile(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    # rangepartitioning for the output sort is the only exchange
-    assert plan.count("Exchange") <= 1, plan
-
-
-def test_token_zipf_cumulative_share_is_exact(spark):
-    """Constructed frequencies: token shares and the cumulative sum
-    must be the exact integer DIV values, in rank order."""
-    from iceberg_diag_spark.operators.textops import token_zipf_curve
-
-    # 6×a, 3×b, 1×c → total 10
-    docs = spark.createDataFrame(
-        [(0, "a a a a a a b b b c")], "doc_id long, text string"
-    )
-    rows = token_zipf_curve(docs, k=3).collect()
-    assert [(r["rank"], r["token"], r["cnt"]) for r in rows] == [
-        (1, "a", 6), (2, "b", 3), (3, "c", 1)
-    ]
-    assert [r["share_ppm"] for r in rows] == [600_000, 300_000, 100_000]
-    assert [r["cum_share_ppm"] for r in rows] == [600_000, 900_000, 1_000_000]
-
-
-def test_artifact_audit_counts_constructed_junk(spark):
-    """Constructed artifact-laden docs: every counter verified by
-    hand (the synthetic corpus is clean, so the oracle can only pin
-    the zero path — this pins the counting)."""
-    from iceberg_diag_spark.operators.textops import text_artifact_audit
-
-    docs = spark.createDataFrame(
-        [
-            (0, "a &amp; b &lt; c <div class=x> see http://ex.com/y", "s1"),
-            (1, "clean text only", "s1"),
-            (2, "numbers 123 and 45\x07bell", "s2"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    out = {r["source"]: r for r in text_artifact_audit(docs).collect()}
-    s1 = out["s1"]
-    assert s1["entity_hits"] == 2          # &amp; &lt;
-    assert s1["tag_hits"] == 1             # <div ...>
-    assert s1["url_hits"] == 1
-    assert s1["ctrl_hits"] == 0
-    assert s1["n_docs"] == 2
-    assert s1["artifact_ppm"] == (1_000_000 * 4) // s1["total_chars"]
-    s2 = out["s2"]
-    assert s2["ctrl_hits"] == 1            # \x07
-    assert s2["digit_chars"] == 5
-    assert s2["digit_ppm"] == (1_000_000 * 5) // s2["total_chars"]
-
-
-def test_kneser_ney_hand_computed(spark):
-    """Corpus 'a b a b a c': c(a b)=2, c(b a)=2, c(a c)=1; left
-    totals a·=3, b·=2; continuations N1+(a·)=2, N1+(b·)=1,
-    N1+(·b)=N1+(·a)=N1+(·c)=1; N1+(··)=3. Hand KN (d=3/4):
-    P(b|a)=5/12+6/36=583332 ppm (two floors), P(a|b)=5/8+3/24=750000,
-    P(c|a)=1/12+6/36=249999."""
-    from iceberg_diag_spark.operators.textops import bigram_kneser_ney
-
-    docs = spark.createDataFrame(
-        [(1, "a b a b a c")], "doc_id long, text string"
-    )
-    got = {r["gram"]: r for r in bigram_kneser_ney(docs).collect()}
-    assert set(got) == {"a b", "b a", "a c"}
-    assert got["a b"]["n_pair"] == 2 and got["a b"]["n_left_total"] == 3
-    assert got["a b"]["mle_ppm"] == 666666
-    assert got["a b"]["kn_ppm"] == 416666 + 166666
-    assert got["b a"]["mle_ppm"] == 1_000_000
-    assert got["b a"]["kn_ppm"] == 625_000 + 125_000
-    assert got["a c"]["kn_ppm"] == 83333 + 166666
-
-
-def test_quality_psi_identical_snapshots_is_zero(spark):
-    """PSI of a distribution against itself is exactly 0 in every
-    bucket (smoothed shares equal, ln(1) = 0, floor keeps 0)."""
-    from iceberg_diag_spark.operators.textops import quality_psi_drift
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog today"),
-            (2, "a committee voted to approve the funding for a library"),
-            (3, "%%% 0101 ### noise junk 1010 %%%"),
-        ],
-        "doc_id long, text string",
-    )
-    out = quality_psi_drift(docs, docs).collect()
-    assert out
-    assert all(r["psi_micro"] == 0 for r in out)
-    assert all(r["n_old"] == r["n_new"] for r in out)
-
-
-def test_quality_psi_detects_planted_shift(spark):
-    """Old snapshot is clean prose; the new one replaces half of it
-    with junk — total PSI must be decisively positive (the smoothed
-    per-bucket terms are each ≥ some positive mass where shares
-    moved), and the junk bucket must gain members."""
-    from iceberg_diag_spark.operators.textops import quality_psi_drift
-
-    clean = [
-        (i, "the quick brown fox jumps over the lazy dog and then "
-            "it runs through the field for a while with friends")
-        for i in range(20)
-    ]
-    junk = [
-        (100 + i, "%%% ### 0101 1010 @@@ $$$ !!! ??? ^^^ &&&")
-        for i in range(10)
-    ]
-    old = spark.createDataFrame(clean, "doc_id long, text string")
-    new = spark.createDataFrame(
-        clean[:10] + junk, "doc_id long, text string"
-    )
-    out = quality_psi_drift(old, new).collect()
-    total = sum(r["psi_micro"] for r in out)
-    # PSI > 0.25 is the standard "act" threshold; a half-junk swap
-    # blows far past it
-    assert total > 250_000
-
-
-def _kn_corpus(spark, n_fluent=22):
-    """Fluent docs cycle a tiny vocabulary (every bigram repeats far
-    beyond the pruning floor); doc 999 is word-salad whose bigrams
-    occur once each — pruned from the table, scored via the
-    continuation backoff."""
-    fluent = "the cat sat on the mat and the dog sat on the rug"
-    rows = [(i, fluent, "web") for i in range(1, n_fluent + 1)]
-    gibberish = " ".join(f"zx{i}q wv{i}j" for i in range(12))
-    rows.append((999, gibberish, "web"))
-    return spark.createDataFrame(
-        rows, "doc_id long, text string, source string"
-    )
-
-
-def test_kn_gibberish_lands_in_worst_band(spark):
-    """The CCNet contract: a planted word-salad document must carry
-    the corpus-max average NLL and land in the worst (highest)
-    perplexity band of its source."""
-    from iceberg_diag_spark.operators.textops import (
-        doc_kn_nll,
-        doc_kn_perplexity,
-    )
-
-    docs = _kn_corpus(spark)
-    scored = {r["doc_id"]: r for r in doc_kn_nll(docs).collect()}
-    worst = max(scored.values(), key=lambda r: r["avg_nll_micro"])
-    assert worst["doc_id"] == 999
-    # strict separation, not a tie: backoff ppm for once-seen bigrams
-    # is orders of magnitude below the fluent bigrams' KN mass
-    fluent_max = max(
-        r["avg_nll_micro"] for r in scored.values() if r["doc_id"] != 999
-    )
-    assert worst["avg_nll_micro"] > 2 * fluent_max
-
-    bands = doc_kn_perplexity(docs).collect()
-    top_band = max(r["band"] for r in bands)
-    top = next(r for r in bands if r["band"] == top_band)
-    assert top["hi_avg_nll_micro"] == worst["avg_nll_micro"]
-
-
-def test_kn_band_assignment_is_exact_ntile(spark):
-    """23 docs in one source with 10 bands: NTILE gives the first
-    n%k = 3 bands 3 docs and the rest 2 — the arithmetic band formula
-    must reproduce that population exactly (the oracle uses plain
-    ntile())."""
-    from iceberg_diag_spark.operators.textops import doc_kn_perplexity
-
-    docs = _kn_corpus(spark, n_fluent=22)  # 23 docs total
-    bands = sorted(
-        (r["band"], r["n_docs"])
-        for r in doc_kn_perplexity(docs).collect()
-    )
-    assert bands == [(b, 3 if b <= 3 else 2) for b in range(1, 11)]
-
-
-def test_bpe_train_merges_hand_computed(spark):
-    """Sennrich toy corpus, merges hand-verified: word counts are
-    low:4 lower:2 lowest:1 newer:3 newest:1 new:1 wider:1 wide:2, so
-    the merge order is (l,o):7, (lo,w):7, (e,r):6, (e,w):5 — the
-    (e,w) count only exists BECAUSE (e,r) merged first (newer =
-    n·e·w·er), i.e. the test fails if iterations don't feed forward.
-    corpus_symbols must drop by exactly merge_count each step."""
-    from iceberg_diag_spark.operators.textops import bpe_train_merges
-
-    docs = spark.createDataFrame(
-        [
-            (1, "low lower lowest low low newer newest new", "w"),
-            (2, "low lower newer newer wider wide wide", "w"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    rows = {r["step"]: r for r in bpe_train_merges(docs, k=4).collect()}
-    merges = [
-        (rows[i]["left_sym"], rows[i]["right_sym"], rows[i]["merge_count"])
-        for i in range(1, 5)
-    ]
-    assert merges == [
-        ("l", "o", 7), ("lo", "w", 7), ("e", "r", 6), ("e", "w", 5),
-    ]
-    for i in range(1, 5):
-        assert (
-            rows[i]["corpus_symbols"]
-            == rows[i - 1]["corpus_symbols"] - rows[i]["merge_count"]
-        )
-    # fertility audit rides the same rows: baseline = chars per word
-    total_words = 15
-    assert rows[0]["fertility_ppm"] == (
-        1_000_000 * rows[0]["corpus_symbols"] // total_words
-    )
-    assert rows[4]["fertility_ppm"] < rows[0]["fertility_ppm"]
-
-
-def test_gopher_rules_planted_failures(spark):
-    """One doc per rule violation, one clean doc — each rule's pass
-    count must miss exactly its violator."""
-    from iceberg_diag_spark.operators.textops import gopher_rules_audit
-
-    # every doc violates EXACTLY one rule (all tokens distinct unless
-    # the repetition rule itself is the target)
-    clean = "the and " + " ".join(f"word{i:02d}" for i in range(58))
-    short = "the and of words here"  # 5 tokens < 50 -> word_count fails
-    longtok = "the and " + " ".join(
-        f"extraordinarilylongword{i:02d}" for i in range(58)
-    )  # mean word length (6 + 58*25)/60 ~ 24 > 10
-    numeric = "the and " + " ".join(
-        f"{i:02d}999" for i in range(58)
-    )  # 2/60 alphabetic tokens < 80%
-    nostop = " ".join(
-        f"wrd{i:02d}" for i in range(60)
-    )  # 60 tokens, mean len 5, zero panel hits
-    repeat = " ".join(
-        ["the cat and dog run"] * 12
-    )  # dup-trigram heavy; mean len exactly 3.0 still passes
-    docs = spark.createDataFrame(
-        [
-            (1, clean, "s"),
-            (2, short, "s"),
-            (3, longtok, "s"),
-            (4, numeric, "s"),
-            (5, nostop, "s"),
-            (6, repeat, "s"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    r = gopher_rules_audit(docs).collect()[0]
-    assert r["n_docs"] == 6
-    assert r["n_pass_word_count"] == 5       # doc 2 out
-    assert r["n_pass_mean_word_len"] == 5    # doc 3 out
-    assert r["n_pass_alpha_words"] == 5      # doc 4 out
-    assert r["n_pass_stop_panel"] == 5       # doc 5 out
-    assert r["n_pass_dup_trigrams"] == 5     # doc 6 out
-    assert r["n_pass_all"] == 1
-    assert r["pass_all_ppm"] == 1_000_000 // 6
-
-
-def test_zipf_fit_slope_near_minus_one_on_zipf_corpus(spark):
-    """A corpus built with freq(rank r) = 240 // r follows Zipf with
-    exponent 1, so the fitted slope must sit near -1e6 micro."""
-    from iceberg_diag_spark.operators.textops import zipf_fit_audit
-
-    toks = []
-    for r in range(1, 41):
-        toks += [f"t{r:03d}"] * (240 // r)
-    docs = spark.createDataFrame(
-        [(1, " ".join(toks), "s")], "doc_id long, text string, source string"
-    )
-    row = zipf_fit_audit(docs, k=40).collect()[0]
-    assert row["n_terms"] == 40
-    assert -1_100_000 < row["zipf_slope_micro"] < -900_000
-    # intercept ~ ln(240)*1e6 ~ 5.48e6
-    assert 5_000_000 < row["intercept_micro"] < 6_000_000
-
-
-def test_lang_confusion_unknown_label_maps_to_und_or_leaks(spark):
-    """A labeled language outside the detector inventory (zh) must
-    appear in the matrix — never silently vanish — and clean English
-    rows must land on the (en, en) diagonal with full label share."""
-    from iceberg_diag_spark.operators.textops import lang_id_confusion
-
-    en = "the cat and the dog have been to the house with many others"
-    zh_fake = "zh1 zh2 zh3 zh4 zh5 zh6 zh7 zh8"
-    docs = spark.createDataFrame(
-        [(1, en, "en"), (2, en, "en"), (3, zh_fake, "zh")],
-        "doc_id long, text string, lang string",
-    ).withColumn("source", F.lit("s"))
-    cells = {(r["lang"], r["pred_lang"]): r
-             for r in lang_id_confusion(docs).collect()}
-    assert cells[("en", "en")]["n_docs"] == 2
-    assert cells[("en", "en")]["label_share_ppm"] == 1_000_000
-    assert cells[("zh", "und")]["n_docs"] == 1
-
-
-def test_bpe_vocab_coverage_hand_computed(spark):
-    """Same Sennrich toy corpus as the trainer test; after the four
-    merges (l,o)(lo,w)(e,r)(e,w) the encoded corpus is hand-countable:
-    15 words, 65 chars, 40 subwords of which 18 are merged units."""
-    from iceberg_diag_spark.operators.textops import bpe_vocab_coverage
-
-    docs = spark.createDataFrame(
-        [
-            (1, "low lower lowest low low newer newest new", "w"),
-            (2, "low lower newer newer wider wide wide", "w"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    r = bpe_vocab_coverage(docs, k=4).collect()[0]
-    assert (r["words"], r["chars"], r["subwords"], r["merged_subwords"]) \
-        == (15, 65, 40, 18)
-    assert r["fertility_ppm"] == 1_000_000 * 40 // 15
-    assert r["baseline_fertility_ppm"] == 1_000_000 * 65 // 15
-    assert r["merged_share_ppm"] == 450_000
-
-
-def test_zipf_degenerate_single_token_is_null(spark):
-    """Regression (review finding): one distinct token gives zero
-    x-variance; the fit must return NULLs, not an ANSI
-    divide-by-zero."""
-    from iceberg_diag_spark.operators.textops import zipf_fit_audit
-
-    docs = spark.createDataFrame(
-        [(1, "same same same same", "s")],
-        "doc_id long, text string, source string",
-    )
-    r = zipf_fit_audit(docs).collect()[0]
-    assert r["n_terms"] == 1
-    assert r["zipf_slope_micro"] is None
-    assert r["intercept_micro"] is None
