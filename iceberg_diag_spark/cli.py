@@ -201,21 +201,14 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             ):
                 print(part)
         elif args.database and args.table_name:
+            # only Iceberg tables have the .files/.manifests metadata
+            # tables (reference manager.py:84-113 filters by table type)
             tables = [
                 r.table_name
-                for r in cat.list_tables(
+                for r in cat.iceberg_tables(
                     spark, args.database, args.table_name
                 ).collect()
             ]
-            if tables:
-                # only Iceberg tables have the .files/.manifests
-                # metadata tables (reference manager.py:84-113 filters
-                # by table type before the glob)
-                iceberg = {
-                    r.table_name
-                    for r in cat.iceberg_tables(spark, args.database).collect()
-                }
-                tables = [t for t in tables if t in iceberg]
             if not tables:
                 from iceberg_diag_spark.errors import NoMatchingTables
 

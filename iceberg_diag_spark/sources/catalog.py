@@ -10,8 +10,9 @@ Reference behavior mirrored:
   (manager.py:84-113) — Spark's SHOW TABLES handles pagination
   internally; the glob becomes an anchored regex filter evaluated in
   the engine, not the driver;
-- the reference's Iceberg-type filter is iceberg_tables; the CLI
-  diagnoses only the glob matches it keeps;
+- iceberg_tables(db, pattern) → the same listing plus the
+  reference's Iceberg-type filter, probing only the glob's matches;
+  the CLI diagnoses the tables it keeps;
 - a LIMIT 1 existence probe (manager.py:63-72).
 """
 
@@ -51,10 +52,23 @@ def list_tables(
     )
 
 
-def iceberg_tables(spark: SparkSession, database: str) -> DataFrame:
-    """S3: keep only Iceberg-provider tables. Uses the catalog's
-    table metadata; non-Iceberg session catalogs yield an empty
-    result rather than an error.
+def _provider(spark: SparkSession, qualified: str) -> str:
+    """The ``Provider`` that DESCRIBE TABLE EXTENDED reports for a
+    table ('' when it reports none)."""
+    detail = spark.sql(f"DESCRIBE TABLE EXTENDED {qualified}").collect()
+    return next(
+        (str(r["data_type"]) for r in detail if r["col_name"] == "Provider"),
+        "",
+    )
+
+
+def iceberg_tables(
+    spark: SparkSession, database: str, pattern: str = "*"
+) -> DataFrame:
+    """S3: the tables of ``list_tables(database, pattern)`` whose
+    provider is Iceberg, sorted. Only the glob's matches are probed;
+    non-Iceberg session catalogs yield an empty result rather than an
+    error.
 
     The per-table DESCRIBE probes fan out across a thread pool (the
     reference's own per-table fan-out idiom, X1/cli.py:148): catalog
@@ -65,28 +79,26 @@ def iceberg_tables(spark: SparkSession, database: str) -> DataFrame:
 
     from pyspark.errors import AnalysisException
 
+    from iceberg_diag_spark.errors import CatalogBindError
+
     def probe(name: str) -> str | None:
         try:
-            detail = spark.sql(
-                f"DESCRIBE TABLE EXTENDED {database}.{name}"
-            ).collect()
-            provider = {
-                r["col_name"]: r["data_type"]
-                for r in detail
-                if r["col_name"] in ("Provider", "Table Properties")
-            }
-            if "iceberg" in str(provider.get("Provider", "")).lower():
-                return name
+            provider = _provider(spark, f"{database}.{name}")
         except AnalysisException as ex:
             # a temp view (listed with the namespace's tables) or a
             # table dropped since the listing is not an Iceberg table;
             # any other failure, such as an unreachable catalog, must
             # not read as "no tables"
-            if ex.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
-                raise
-        return None
+            if ex.getCondition() == "TABLE_OR_VIEW_NOT_FOUND":
+                return None
+            raise CatalogBindError(
+                f"cannot read the provider of {database}.{name}: {ex}"
+            ) from ex
+        return name if "iceberg" in provider.lower() else None
 
-    names = [t.name for t in spark.catalog.listTables(database)]
+    names = [
+        r.table_name for r in list_tables(spark, database, pattern).collect()
+    ]
     rows: list[tuple[str]] = []
     if names:
         with ThreadPoolExecutor(max_workers=min(10, len(names))) as pool:

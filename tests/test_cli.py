@@ -183,3 +183,89 @@ def test_cli_skips_non_iceberg_tables(spark, capsys):
     finally:
         spark.sql("DROP TABLE IF EXISTS probe_db.plain_t")
         spark.sql("DROP DATABASE IF EXISTS probe_db")
+
+
+class _MetadataSession:
+    """A session whose ``table()`` answers the ``.files`` and
+    ``.manifests`` metadata tables of the tables in ``meta`` (the
+    local catalog has no Iceberg runtime) and records every name it
+    is asked for; everything else goes to the wrapped session."""
+
+    def __init__(self, spark, meta: dict):
+        self._spark = spark
+        self._meta = meta
+        self.read: list[str] = []
+
+    def table(self, name: str):
+        self.read.append(name)
+        return self._meta[name] if name in self._meta else self._spark.table(name)
+
+    def __getattr__(self, attr):
+        return getattr(self._spark, attr)
+
+
+def test_cli_diagnoses_only_matched_iceberg_tables(
+    spark, capsys, monkeypatch
+):
+    """The glob `ice_*` matches an Iceberg table and a plain one: the
+    Iceberg table is diagnosed, the plain one is skipped, and a table
+    the glob does not match is never probed."""
+    from iceberg_diag_spark.sources import catalog as cat
+
+    probed = []
+
+    def provider(spark_, qualified):
+        probed.append(qualified)
+        return "iceberg" if qualified == "probe_db.ice_t" else "parquet"
+
+    monkeypatch.setattr(cat, "_provider", provider)
+    spark.sql("CREATE DATABASE IF NOT EXISTS probe_db")
+    for t in ("ice_t", "ice_plain", "other_t"):
+        spark.range(3).write.mode("overwrite").saveAsTable(f"probe_db.{t}")
+    files = spark.createDataFrame(
+        [((1,), 1_000, 0), ((1,), 2_000, 0), ((2,), 64_000_000, 0)],
+        "partition struct<p:int>, file_size_in_bytes long, content int",
+    )
+    session = _MetadataSession(spark, {
+        "probe_db.ice_t.files": files,
+        "probe_db.ice_t.manifests": spark.range(2),
+    })
+    try:
+        assert main(
+            ["--database", "probe_db", "--table-name", "ice_*"],
+            spark=session,
+        ) == 0
+        out = capsys.readouterr().out
+        assert "probe_db.ice_t" in out and "ice_plain" not in out
+        assert sorted(probed) == ["probe_db.ice_plain", "probe_db.ice_t"]
+        assert sorted(session.read) == [
+            "probe_db.ice_t.files", "probe_db.ice_t.manifests"
+        ]
+    finally:
+        for t in ("ice_t", "ice_plain", "other_t"):
+            spark.sql(f"DROP TABLE IF EXISTS probe_db.{t}")
+        spark.sql("DROP DATABASE IF EXISTS probe_db")
+
+
+def test_cli_reports_unreadable_table_provider(spark, capsys, monkeypatch):
+    """A matched table whose provider cannot be read is a catalog
+    error the CLI reports, not an empty namespace and not a crash."""
+    from pyspark.errors import AnalysisException
+
+    from iceberg_diag_spark.sources import catalog as cat
+
+    def provider(spark_, qualified):
+        raise AnalysisException("catalog unreachable")
+
+    monkeypatch.setattr(cat, "_provider", provider)
+    spark.sql("CREATE DATABASE IF NOT EXISTS probe_db")
+    spark.range(3).write.mode("overwrite").saveAsTable("probe_db.plain_t")
+    try:
+        assert main(
+            ["--database", "probe_db", "--table-name", "*"], spark=spark
+        ) == 1
+        out = capsys.readouterr().out
+        assert "error:" in out and "probe_db.plain_t" in out
+    finally:
+        spark.sql("DROP TABLE IF EXISTS probe_db.plain_t")
+        spark.sql("DROP DATABASE IF EXISTS probe_db")
