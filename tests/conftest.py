@@ -1,12 +1,8 @@
 from __future__ import annotations
 
-import shutil
-
 import pytest
 
 from iceberg_diag_spark.session import get_spark
-
-from helpers import DOCS_SCHEMA, write_release
 
 
 @pytest.fixture(scope="session")
@@ -14,28 +10,3 @@ def spark():
     spark = get_spark(app_name="iceberg-diag-spark-tests", shuffle_partitions=8)
     yield spark
     spark.stop()
-
-
-@pytest.fixture(scope="session")
-def release_copy(spark, tmp_path_factory):
-    """``copy(incs_rows, dest)`` puts the release of ``incs_rows`` at
-    ``dest`` and returns its ``(batch_id, docs)`` sequence. A batch
-    directory depends only on its rows, so each distinct increment is
-    written once per session and copied to ``dest/batch=<id>``; a test
-    owns its copy and may rewrite it."""
-    built: dict[str, str] = {}
-
-    def copy(incs_rows, dest: str):
-        for b, rows in incs_rows:
-            key = repr(rows)
-            if key not in built:
-                root = str(tmp_path_factory.mktemp("increment"))
-                write_release(spark, root, [(0, rows)])
-                built[key] = f"{root}/batch=0"
-            shutil.copytree(built[key], f"{dest}/batch={b}")
-        return [
-            (b, spark.createDataFrame(rows, DOCS_SCHEMA))
-            for b, rows in incs_rows
-        ]
-
-    return copy

@@ -14,50 +14,17 @@ from pyspark.sql import functions as F
 
 from iceberg_diag_spark.operators import funnel
 from iceberg_diag_spark.operators.textops import classifier_apply_trained
-from iceberg_diag_spark.sources.sinks import write_assigned_shards
+
+from helpers import (
+    DOCS_SCHEMA,
+    SHARED_EXACT,
+    SHARED_LATE,
+    SHARED_NEAR,
+    _mk_clean,
+    write_release,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
-
-DOCS_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long"
-)
-
-_BASE = (
-    "the quick brown fox jumps over a lazy dog and it is widely "
-    "known that"
-)
-
-
-def _doc(i: int, tail: str):
-    t = f"{_BASE} document number {i} {tail}"
-    return (i, t, "en", "web", len(t))
-
-
-def _mk_clean(i0: int, n: int):
-    # distinct tails so per-increment exact dedup keeps them all
-    return [_doc(i, f"differs in this tail alone {i}") for i in range(i0, i0 + n)]
-
-
-# planted bodies share no vocabulary with the _mk_clean docs (beyond
-# isolated stopwords) so the per-increment funnel cannot collapse a
-# planted doc into a clean-doc near-dup component — only the
-# deliberate CROSS-increment twins collide
-SHARED_NEAR = (
-    "many colorful parrots happily narrate obscure maritime legends "
-    "while gentle winds carry distant church bells across the quiet "
-    "harbor village every autumn evening final token reads"
-)
-SHARED_EXACT = (
-    "byte identical twins routed into separate increments cannot be "
-    "seen by per increment exact dedup since each half observes only "
-    "its own arrivals during the incremental release"
-)
-SHARED_LATE = (
-    "an entirely different duplicated passage about telescopes "
-    "mirrors and the patient craft of grinding glass surfaces to "
-    "within a fraction of one wavelength of sodium light"
-)
-
 
 @pytest.fixture(scope="module")
 def reconciled(spark):
@@ -78,19 +45,11 @@ def reconciled(spark):
     ]
     release = tempfile.mkdtemp(prefix="reconcile_test_release_")
     sig = tempfile.mkdtemp(prefix="reconcile_test_sig_")
-    incs = []
     try:
-        for b, rows in enumerate((inc0, inc1, inc2)):
-            rows = [(i, t, lg, s, len(t)) for i, t, lg, s, _ in rows]
-            d = spark.createDataFrame(rows, DOCS_SCHEMA)
-            asg = funnel.release_assignments(d)
-            write_assigned_shards(
-                asg,
-                f"{release}/batch={b}",
-                funnel.RELEASE_N_SHARDS,
-                order_cols=("source", "seq_id", "doc_id"),
-            )
-            incs.append((b, d))
+        incs = write_release(spark, release, [
+            (b, [(i, t, lg, s, len(t)) for i, t, lg, s, _ in rows])
+            for b, rows in enumerate((inc0, inc1, inc2))
+        ])
         released = {
             (r.batch, r.doc_id)
             for r in spark.read.parquet(release)
@@ -146,18 +105,11 @@ def test_reconcile_rejects_unordered_increments(spark):
 
 
 def test_reconcile_single_increment_empty(spark, tmp_path):
-    d = spark.createDataFrame(_mk_clean(0, 8), DOCS_SCHEMA)
     release = str(tmp_path / "rel")
     sig = str(tmp_path / "sig")
     os.makedirs(sig)
-    asg = funnel.release_assignments(d)
-    write_assigned_shards(
-        asg,
-        f"{release}/batch=0",
-        funnel.RELEASE_N_SHARDS,
-        order_cols=("source", "seq_id", "doc_id"),
-    )
-    out = funnel.release_neardup_reconcile(spark, [(0, d)], release, sig)
+    incs = write_release(spark, release, [(0, _mk_clean(0, 8))])
+    out = funnel.release_neardup_reconcile(spark, incs, release, sig)
     assert out.count() == 0
     assert out.columns == [
         "batch_a", "doc_a", "batch_b", "doc_b", "n_shared_bands",
@@ -195,19 +147,20 @@ def test_apply_trained_count_invariants(applied):
 
 
 def test_apply_trained_beats_handset_on_gate(applied):
-    # the relation-level version of the r11 AUC pytest: the trained
-    # rule agrees with the curation gate more often than the hand-set
-    # rule does, corpus-wide
+    # the relation-level version of
+    # test_trained_weights_beat_handset_auc: the trained rule agrees
+    # with the curation gate more often than the hand-set rule does,
+    # corpus-wide
     agree_t = sum(r.n_agree_trained for r in applied)
     agree_h = sum(r.n_agree_handset for r in applied)
     assert agree_t > agree_h
 
 
 def test_train_lr_oracle_untouched_by_carry_refactor():
-    # the r12 carry/final refactor must leave classifier_train_lr's
-    # oracle byte-free of deployment columns (the _MODIFIED_R12
-    # value-invariance claim): carry-off SQL mentions neither the
-    # hand-set rule nor the source label
+    # the carry/final refactor must leave classifier_train_lr's
+    # oracle byte-free of deployment columns (the value-invariance
+    # claim): carry-off SQL mentions neither the hand-set rule nor the
+    # source label
     from iceberg_diag_spark.plans.oracles_dedup import _TRAIN_LR_SQL
 
     assert " kh" not in _TRAIN_LR_SQL
@@ -225,17 +178,9 @@ def test_reconcile_probe_plan_hint_free(spark, tmp_path):
     release = str(tmp_path / "rel")
     sig = str(tmp_path / "sig")
     os.makedirs(sig)
-    incs = []
-    for b, i0 in ((0, 0), (1, 1000)):
-        d = spark.createDataFrame(_mk_clean(i0, 8), DOCS_SCHEMA)
-        asg = funnel.release_assignments(d)
-        write_assigned_shards(
-            asg,
-            f"{release}/batch={b}",
-            funnel.RELEASE_N_SHARDS,
-            order_cols=("source", "seq_id", "doc_id"),
-        )
-        incs.append((b, d))
+    incs = write_release(
+        spark, release, [(0, _mk_clean(0, 8)), (1, _mk_clean(1000, 8))]
+    )
     out = funnel.release_neardup_reconcile(spark, incs, release, sig)
     assert "ResolvedHint" not in out._jdf.queryExecution().logical().toString()
     plan = out._jdf.queryExecution().explainString(
@@ -268,31 +213,17 @@ def test_reconcile_survives_all_dropped_increment(spark, tmp_path):
     release = str(tmp_path / "rel")
     sig = str(tmp_path / "sig")
     os.makedirs(sig)
-    good0 = spark.createDataFrame(
-        _mk_clean(0, 8) + [(200, f"{SHARED_EXACT}", "en", "web", 99)],
-        DOCS_SCHEMA,
-    )
+    good0 = _mk_clean(0, 8) + [(200, f"{SHARED_EXACT}", "en", "web", 99)]
     # increment 1: junk that fails the quality gate (no stopwords,
     # symbol soup) -> zero released docs -> fileless batch dir
-    junk = [
+    junk1 = [
         (1000 + i, "@@@ %% ## !! " * 10, "en", "web", 120)
         for i in range(5)
     ]
-    junk1 = spark.createDataFrame(junk, DOCS_SCHEMA)
-    good2 = spark.createDataFrame(
-        _mk_clean(2000, 8) + [(2200, f"{SHARED_EXACT}", "en", "web", 99)],
-        DOCS_SCHEMA,
-    )
-    incs = []
-    for b, d in ((0, good0), (1, junk1), (2, good2)):
-        asg = funnel.release_assignments(d)
-        write_assigned_shards(
-            asg,
-            f"{release}/batch={b}",
-            funnel.RELEASE_N_SHARDS,
-            order_cols=("source", "seq_id", "doc_id"),
-        )
-        incs.append((b, d))
+    good2 = _mk_clean(2000, 8) + [
+        (2200, f"{SHARED_EXACT}", "en", "web", 99)
+    ]
+    incs = write_release(spark, release, [(0, good0), (1, junk1), (2, good2)])
     assert (
         spark.read.schema("doc_id long")
         .parquet(f"{release}/batch=1")
@@ -324,20 +255,16 @@ def test_reconcile_accepts_int_doc_ids(spark, tmp_path):
         "doc_id int, text string, lang string, source string, "
         "n_chars long"
     )
-    incs = []
-    for b, i0 in ((0, 0), (1, 1000)):
-        rows = _mk_clean(i0, 8) + [
-            (i0 + 500, f"{SHARED_EXACT}", "en", "web", 99)
-        ]
-        d = spark.createDataFrame(rows, schema_int)
-        asg = funnel.release_assignments(d)
-        write_assigned_shards(
-            asg,
-            f"{release}/batch={b}",
-            funnel.RELEASE_N_SHARDS,
-            order_cols=("source", "seq_id", "doc_id"),
-        )
-        incs.append((b, d))
+    incs = write_release(
+        spark,
+        release,
+        [
+            (b, _mk_clean(i0, 8)
+             + [(i0 + 500, f"{SHARED_EXACT}", "en", "web", 99)])
+            for b, i0 in ((0, 0), (1, 1000))
+        ],
+        schema=schema_int,
+    )
     rows = funnel.release_neardup_reconcile(
         spark, incs, release, sig
     ).collect()

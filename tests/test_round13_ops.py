@@ -18,50 +18,15 @@ from pyspark.sql import functions as F
 from iceberg_diag_spark.operators import funnel
 from iceberg_diag_spark.sources.sinks import write_assigned_shards
 
-DOCS_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long"
+from helpers import (
+    DOCS_SCHEMA,
+    PAIRS_SCHEMA,
+    SHARED_EXACT,
+    SHARED_NEAR,
+    THREE_EXACT,
+    _mk_clean,
+    write_release,
 )
-
-_BASE = (
-    "the quick brown fox jumps over a lazy dog and it is widely "
-    "known that"
-)
-
-SHARED_EXACT = (
-    "byte identical twins routed into separate increments cannot be "
-    "seen by per increment exact dedup since each half observes only "
-    "its own arrivals during the incremental release"
-)
-SHARED_NEAR = (
-    "many colorful parrots happily narrate obscure maritime legends "
-    "while gentle winds carry distant church bells across the quiet "
-    "harbor village every autumn evening final token reads"
-)
-
-
-def _mk_clean(i0: int, n: int):
-    rows = []
-    for i in range(i0, i0 + n):
-        t = f"{_BASE} document number {i} differs in this tail alone {i}"
-        rows.append((i, t, "en", "web", len(t)))
-    return rows
-
-
-def _build_release(spark, path: str, incs_rows):
-    """Write each increment's release under batch=<id> and return the
-    (batch_id, docs) sequence."""
-    incs = []
-    for b, rows in incs_rows:
-        d = spark.createDataFrame(rows, DOCS_SCHEMA)
-        asg = funnel.release_assignments(d)
-        write_assigned_shards(
-            asg,
-            f"{path}/batch={b}",
-            funnel.RELEASE_N_SHARDS,
-            order_cols=("source", "seq_id", "doc_id"),
-        )
-        incs.append((b, d))
-    return incs
 
 
 def _shard_bytes(shard_dir: str) -> bytes:
@@ -85,7 +50,7 @@ def test_reconcile_incremental_equals_full(spark, tmp_path):
     inc0 = _mk_clean(0, 10) + [(100, SHARED_EXACT, "en", "web", 1)]
     inc1 = _mk_clean(1000, 10) + [(1100, SHARED_EXACT, "en", "web", 1)]
     release = str(tmp_path / "rel")
-    incs = _build_release(spark, release, [(0, inc0), (1, inc1)])
+    incs = write_release(spark, release, [(0, inc0), (1, inc1)])
 
     sig_full = str(tmp_path / "sig_full")
     full = sorted(
@@ -114,9 +79,8 @@ def test_reconcile_rejects_foreign_store_lineage(spark, tmp_path):
     """A sig_path holding a batch id that belongs to neither the
     written release nor the call is another lineage's store — its
     rows would surface as phantom pairs; the call must refuse."""
-    inc0 = _mk_clean(0, 8)
     release = str(tmp_path / "rel")
-    incs = _build_release(spark, release, [(0, inc0)])
+    incs = write_release(spark, release, [(0, _mk_clean(0, 8))])
     sig = str(tmp_path / "sig")
     funnel.release_neardup_reconcile(spark, incs, release, sig).collect()
     spark.createDataFrame(
@@ -130,11 +94,12 @@ def test_reconcile_rejects_foreign_store_lineage(spark, tmp_path):
 
 
 def test_reconcile_oracle_sql_untouched_by_chain_parameterization():
-    """The r13 _batch_survivor_chain(pdata=..., final=...)
+    """The _batch_survivor_chain(pdata=..., final=...)
     parameterization must be default-preserving: the reconcile
-    entry's rendered oracle is byte-identical to its r12 (driver
-    hash-green) form — that is what lets release_neardup_reconcile
-    keep its green row without a re-score slot."""
+    entry's rendered oracle is byte-identical to its form before the
+    parameters existed (the hash-green one) — that is what lets
+    release_neardup_reconcile keep its green row without a re-score
+    slot."""
     from iceberg_diag_spark.plans.oracles_corpus import _RECONCILE_SQL
 
     assert (
@@ -163,7 +128,7 @@ def retracted(spark):
     release = tempfile.mkdtemp(prefix="retraction_test_rel_")
     sig = tempfile.mkdtemp(prefix="retraction_test_sig_")
     try:
-        incs = _build_release(spark, release, [(0, inc0), (1, inc1)])
+        incs = write_release(spark, release, [(0, inc0), (1, inc1)])
         pairs = funnel.release_neardup_reconcile(
             spark, incs, release, sig
         ).localCheckpoint(eager=True)
@@ -288,8 +253,7 @@ def test_retraction_rewritten_shard_byte_equals_fresh_build(
     victim = asg.limit(1).collect()[0]
     pairs = spark.createDataFrame(
         [(0, -1, 0, victim["doc_id"], 4, True)],
-        "batch_a long, doc_a long, batch_b long, doc_b long, "
-        "n_shared_bands long, exact_dup boolean",
+        PAIRS_SCHEMA,
     )
     funnel.release_retraction_apply(spark, pairs, release, sig_path=None).collect()
     fresh = str(tmp_path / "fresh")
@@ -309,24 +273,18 @@ def test_retraction_drops_fully_emptied_shard_dir(spark, tmp_path):
     """Dynamic overwrite cannot replace a shard no surviving row
     lands in — the sink must drop that directory explicitly, and the
     ledger's after-counts must reflect the loss."""
-    rows = _mk_clean(0, 30)
-    d = spark.createDataFrame(rows, DOCS_SCHEMA)
-    asg = funnel.release_assignments(d).localCheckpoint(eager=True)
     release = str(tmp_path / "rel")
-    write_assigned_shards(
-        asg, f"{release}/batch=0", funnel.RELEASE_N_SHARDS,
-        order_cols=("source", "seq_id", "doc_id"),
-    )
+    write_release(spark, release, [(0, _mk_clean(0, 30))])
+    written = spark.read.parquet(f"{release}/batch=0")
     # retract EVERY doc of one shard
-    some_shard = int(asg.limit(1).collect()[0]["shard"])
+    some_shard = int(written.limit(1).collect()[0]["shard"])
     victims = [
         r["doc_id"]
-        for r in asg.filter(F.col("shard") == some_shard).collect()
+        for r in written.filter(F.col("shard") == some_shard).collect()
     ]
     pairs = spark.createDataFrame(
         [(0, -1 - i, 0, v, 4, True) for i, v in enumerate(victims)],
-        "batch_a long, doc_a long, batch_b long, doc_b long, "
-        "n_shared_bands long, exact_dup boolean",
+        PAIRS_SCHEMA,
     )
     led = funnel.release_retraction_apply(spark, pairs, release, sig_path=None).collect()
     assert not os.path.exists(f"{release}/batch=0/shard={some_shard}")
@@ -338,19 +296,16 @@ def test_retraction_drops_fully_emptied_shard_dir(spark, tmp_path):
 
 
 def test_retraction_min_shared_bands_filter(spark, tmp_path):
-    rows = _mk_clean(0, 12)
-    d = spark.createDataFrame(rows, DOCS_SCHEMA)
-    asg = funnel.release_assignments(d).localCheckpoint(eager=True)
     release = str(tmp_path / "rel")
-    write_assigned_shards(
-        asg, f"{release}/batch=0", funnel.RELEASE_N_SHARDS,
-        order_cols=("source", "seq_id", "doc_id"),
+    write_release(spark, release, [(0, _mk_clean(0, 12))])
+    victim = int(
+        spark.read.parquet(f"{release}/batch=0").limit(1).collect()[0][
+            "doc_id"
+        ]
     )
-    victim = int(asg.limit(1).collect()[0]["doc_id"])
     pairs = spark.createDataFrame(
         [(0, -1, 0, victim, 2, False)],
-        "batch_a long, doc_a long, batch_b long, doc_b long, "
-        "n_shared_bands long, exact_dup boolean",
+        PAIRS_SCHEMA,
     )
     led = funnel.release_retraction_apply(
         spark, pairs, release,
@@ -371,18 +326,9 @@ def test_retraction_ledger_plan_hint_free(spark, tmp_path):
     must carry no forced-broadcast hints (the pair relation is
     candidate-pair-scale — the 6e census class that must stay
     stats-driven) and no Python."""
-    rows = _mk_clean(0, 12)
-    d = spark.createDataFrame(rows, DOCS_SCHEMA)
-    asg = funnel.release_assignments(d).localCheckpoint(eager=True)
     release = str(tmp_path / "rel")
-    write_assigned_shards(
-        asg, f"{release}/batch=0", funnel.RELEASE_N_SHARDS,
-        order_cols=("source", "seq_id", "doc_id"),
-    )
-    pairs = spark.createDataFrame(
-        [], "batch_a long, doc_a long, batch_b long, doc_b long, "
-        "n_shared_bands long, exact_dup boolean",
-    )
+    write_release(spark, release, [(0, _mk_clean(0, 12))])
+    pairs = spark.createDataFrame([], PAIRS_SCHEMA)
     led = funnel.release_retraction_apply(spark, pairs, release, sig_path=None)
     logical = led._jdf.queryExecution().logical().toString()
     assert "ResolvedHint" not in logical
@@ -398,13 +344,8 @@ def test_reconcile_replay_prior_increment_with_later_store(
     exactly that increment's pairs against batches BEFORE it — the
     probe's batch < b filter ignores later store batches, and the
     idempotent overwrite leaves the store's other batches intact."""
-    inc0 = _mk_clean(0, 8) + [(100, SHARED_EXACT, "en", "web", 1)]
-    inc1 = _mk_clean(1000, 8) + [(1100, SHARED_EXACT, "en", "web", 1)]
-    inc2 = _mk_clean(2000, 8) + [(2100, SHARED_EXACT, "en", "web", 1)]
     release = str(tmp_path / "rel")
-    incs = _build_release(
-        spark, release, [(0, inc0), (1, inc1), (2, inc2)]
-    )
+    incs = write_release(spark, release, THREE_EXACT)
     sig = str(tmp_path / "sig")
     full = sorted(
         tuple(r)
@@ -438,14 +379,9 @@ def test_retraction_purges_signature_store(spark, tmp_path):
     docs' signature rows: a LATER increment's reconcile can no longer
     emit pairs whose doc_a is already gone (the chain that could
     otherwise delete the last remaining copy of a document)."""
-    inc0 = _mk_clean(0, 8) + [(100, SHARED_EXACT, "en", "web", 1)]
-    inc1 = _mk_clean(1000, 8) + [(1100, SHARED_EXACT, "en", "web", 1)]
-    inc2 = _mk_clean(2000, 8) + [(2100, SHARED_EXACT, "en", "web", 1)]
     release = str(tmp_path / "rel")
     sig = str(tmp_path / "sig")
-    incs = _build_release(
-        spark, release, [(0, inc0), (1, inc1), (2, inc2)]
-    )
+    incs = write_release(spark, release, THREE_EXACT)
     pairs01 = funnel.release_neardup_reconcile(
         spark, incs[:2], release, sig
     ).localCheckpoint(eager=True)
@@ -480,9 +416,7 @@ def test_retraction_emptied_batch_keeps_lineage_guard_happy(
     inc2 = _mk_clean(2000, 8)
     release = str(tmp_path / "rel")
     sig = str(tmp_path / "sig")
-    incs = _build_release(
-        spark, release, [(0, inc0), (1, inc1), (2, inc2)]
-    )
+    incs = write_release(spark, release, [(0, inc0), (1, inc1), (2, inc2)])
     funnel.release_neardup_reconcile(
         spark, incs[:2], release, sig
     ).collect()
@@ -494,8 +428,7 @@ def test_retraction_emptied_batch_keeps_lineage_guard_happy(
     ]
     pairs = spark.createDataFrame(
         [(0, -1 - i, 1, v, 4, True) for i, v in enumerate(released1)],
-        "batch_a long, doc_a long, batch_b long, doc_b long, "
-        "n_shared_bands long, exact_dup boolean",
+        PAIRS_SCHEMA,
     )
     led = {
         r["batch"]: r
@@ -528,9 +461,7 @@ def test_retraction_across_multiple_batches(spark, tmp_path):
     ]
     release = str(tmp_path / "rel")
     sig = str(tmp_path / "sig")
-    incs = _build_release(
-        spark, release, [(0, inc0), (1, inc1), (2, inc2)]
-    )
+    incs = write_release(spark, release, [(0, inc0), (1, inc1), (2, inc2)])
     pairs = funnel.release_neardup_reconcile(
         spark, incs, release, sig
     ).localCheckpoint(eager=True)
@@ -563,21 +494,17 @@ def test_retraction_is_keyed_per_batch(spark, tmp_path):
     """The retraction key is (batch, doc_id): a doc sharing its id
     with a retracted doc in ANOTHER batch must survive."""
     rows = _mk_clean(0, 10)
-    d = spark.createDataFrame(rows, DOCS_SCHEMA)
-    asg = funnel.release_assignments(d).localCheckpoint(eager=True)
     release = str(tmp_path / "rel")
-    # the SAME assignment relation written as two batches: every
-    # doc_id exists in both
-    for b in (0, 1):
-        write_assigned_shards(
-            asg, f"{release}/batch={b}", funnel.RELEASE_N_SHARDS,
-            order_cols=("source", "seq_id", "doc_id"),
-        )
-    victim = int(asg.limit(1).collect()[0]["doc_id"])
+    # the SAME docs written as two batches: every doc_id exists in both
+    write_release(spark, release, [(0, rows), (1, rows)])
+    victim = int(
+        spark.read.parquet(f"{release}/batch=1").limit(1).collect()[0][
+            "doc_id"
+        ]
+    )
     pairs = spark.createDataFrame(
         [(0, -1, 1, victim, 4, True)],
-        "batch_a long, doc_a long, batch_b long, doc_b long, "
-        "n_shared_bands long, exact_dup boolean",
+        PAIRS_SCHEMA,
     )
     led = {
         r["batch"]: r
@@ -616,8 +543,7 @@ def test_retraction_full_release_byte_equals_fresh_build(
     ]
     pairs = spark.createDataFrame(
         [(0, -1 - i, 0, v, 4, True) for i, v in enumerate(victims)],
-        "batch_a long, doc_a long, batch_b long, doc_b long, "
-        "n_shared_bands long, exact_dup boolean",
+        PAIRS_SCHEMA,
     )
     funnel.release_retraction_apply(spark, pairs, release, sig_path=None).collect()
     fresh = str(tmp_path / "fresh")
