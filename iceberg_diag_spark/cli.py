@@ -83,6 +83,30 @@ def _print_df(df, limit: int = 1000) -> None:
     print(_render_df(df, limit))
 
 
+# The data_files columns the panel reads.
+FILES_COLUMNS = ("partition_key", "file_size_in_bytes", "content")
+
+
+def _read_files(spark: SparkSession, path: str):
+    """The --files relation. A missing path or a missing panel column
+    is a DiagError; the column check reads the schema the parquet
+    reader already resolved, so it starts no Spark job."""
+    from pyspark.errors import AnalysisException
+
+    from iceberg_diag_spark.errors import FilesNotFound, FilesSchemaError
+
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException as ex:
+        if ex.getCondition() == "PATH_NOT_FOUND":
+            raise FilesNotFound(path) from ex
+        raise
+    missing = [c for c in FILES_COLUMNS if c not in df.columns]
+    if missing:
+        raise FilesSchemaError(path, missing)
+    return df
+
+
 def _render_panel(files_df, manifest_count: int, title: str) -> str:
     from iceberg_diag_spark.operators.diagnostics import table_metrics
     from iceberg_diag_spark.operators.display import format_metrics
@@ -194,7 +218,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
     try:
         if args.files:
             for part in _report(
-                spark.read.parquet(args.files),
+                _read_files(spark, args.files),
                 args.manifest_count,
                 args.files,
                 args.maintenance,

@@ -33,3 +33,22 @@ class NoMatchingTables(DiagError):
         self.database = database
         self.pattern = pattern
         super().__init__(f"no tables match {pattern!r} in {database}")
+
+
+class FilesNotFound(DiagError):
+    """The --files path does not exist."""
+
+    def __init__(self, path: str):
+        self.path = path
+        super().__init__(f"files relation not found: {path}")
+
+
+class FilesSchemaError(DiagError):
+    """The --files relation lacks a column the panel reads."""
+
+    def __init__(self, path: str, missing: list[str]):
+        self.path = path
+        self.missing = missing
+        super().__init__(
+            f"files relation {path} lacks column(s): {', '.join(missing)}"
+        )

@@ -44,6 +44,25 @@ def test_cli_diagnoses_files_parquet(spark, capsys, tmp_path_factory):
     assert "%" in out  # improvement column rendered
 
 
+def test_cli_files_missing_path_reports_error(spark, capsys, tmp_path):
+    missing = str(tmp_path / "no_such.parquet")
+    assert main(["--files", missing], spark=spark) == 1
+    out = capsys.readouterr().out
+    assert out.startswith("error:") and "no_such.parquet" in out
+
+
+def test_cli_files_without_panel_column_reports_error(
+    spark, capsys, tmp_path
+):
+    path = str(tmp_path / "sizes_only.parquet")
+    spark.createDataFrame(
+        [("p0", 0)], "partition_key string, content int"
+    ).write.parquet(path)
+    assert main(["--files", path], spark=spark) == 1
+    out = capsys.readouterr().out
+    assert out.startswith("error:") and "file_size_in_bytes" in out
+
+
 def test_cli_no_match_returns_error(spark, capsys):
     assert (
         main(["--database", "default", "--table-name", "zzz_*"], spark=spark)
