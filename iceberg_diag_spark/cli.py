@@ -192,6 +192,8 @@ def stream_panels(jobs: dict):
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> int:
     parser = _build_parser()
     args = parser.parse_args(argv)
+    if args.manifest_count < 0:
+        parser.error("--manifest-count must be >= 0")
     if args.table_name and not args.database:
         # accept a qualified "db.tbl" (reference Table.from_full_name,
         # metrics/table.py:7-13); otherwise the pattern is ambiguous

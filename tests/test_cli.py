@@ -88,6 +88,16 @@ def test_table_name_without_database_is_rejected(spark, capsys):
     assert "--table-name requires --database" in capsys.readouterr().err
 
 
+def test_negative_manifest_count_is_rejected(spark, capsys):
+    with pytest.raises(SystemExit) as ex:
+        main(
+            ["--files", "unused.parquet", "--manifest-count", "-50"],
+            spark=spark,
+        )
+    assert ex.value.code == 2
+    assert "--manifest-count must be >= 0" in capsys.readouterr().err
+
+
 def test_stream_panels_yields_in_completion_order():
     """X3: panels surface as their jobs complete, not in submission
     order — a slow first table must not block a fast second one."""
