@@ -64,8 +64,8 @@ def _build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _render_df(df, limit: int = 1000) -> str:
-    rows = df.limit(limit).collect()
+def _render_df(df) -> str:
+    rows = df.limit(1000).collect()
     cols = df.columns
     widths = [
         max(len(c), *(len(str(r[i])) for r in rows)) if rows else len(c)
@@ -79,8 +79,8 @@ def _render_df(df, limit: int = 1000) -> str:
     return "\n".join(out)
 
 
-def _print_df(df, limit: int = 1000) -> None:
-    print(_render_df(df, limit))
+def _print_df(df) -> None:
+    print(_render_df(df))
 
 
 # The data_files columns the panel reads.

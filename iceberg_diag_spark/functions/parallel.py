@@ -53,12 +53,12 @@ def _num_partitions(df: DataFrame) -> int:
     return df.rdd.getNumPartitions()
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition IF the plan currently has fewer
-    partitions than the session's default parallelism (or an explicit
-    floor). The shuffle this introduces moves the small pre-explosion
-    rows, not the exploded/decoded output."""
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    partitions than the session's default parallelism. The shuffle
+    this introduces moves the small pre-explosion rows, not the
+    exploded/decoded output."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     if _num_partitions(df) < target:
         return df.repartition(target)
     return df

@@ -9,8 +9,8 @@ No driver-side state anywhere.
 Operators:
 - exact_dedup_groups / exact_dedup: content-hash exact dedup (sha256
   of normalized text).
-- minhash_signatures / minhash_candidate_pairs: MinHash + LSH banding
-  near-dup. Hashes are md5-hex (computable identically in any SQL
+- minhash_signatures_wide / minhash_candidate_pairs: MinHash + LSH
+  banding near-dup. Hashes are md5-hex (computable identically in any SQL
   engine → DuckDB-oracle checkable, unlike engine-private hash fns).
 - simhash64: 64-bit SimHash over word unigrams via bit-vote
   aggregation, plus hamming-distance candidate pairing.
@@ -24,6 +24,15 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from iceberg_diag_spark.functions.parallel import ensure_parallelism, materialize
 
+# Columns and tuning constants of the operators below.
+DOC_ID = "doc_id"
+MAX_ITER = 25
+MIN_DOCS = 2
+NGRAM = 3
+RECALL_FLOOR_PPM = 950_000
+SOURCE = "source"
+TEXT = "text"
+
 # MinHash signature width (h0..h15): the one default every MinHash
 # operator and the one signature pass (_doc_signatures) share.
 MINHASH_NUM_HASHES = 16
@@ -35,9 +44,7 @@ def normalized_text(col: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
-def exact_dedup_groups(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Group identical (normalized) texts: one row per distinct
     content hash with the surviving (minimum) id and duplicate count.
 
@@ -45,28 +52,26 @@ def exact_dedup_groups(
     leaves the scan only as its hash (project-then-shuffle), so
     shuffle volume is ~32B/row regardless of document size.
     """
-    h = F.sha2(normalized_text(F.col(text_col)), 256)
+    h = F.sha2(normalized_text(F.col(TEXT)), 256)
     return (
         ensure_parallelism(docs)
-        .select(h.alias("content_hash"), F.col(id_col))
+        .select(h.alias("content_hash"), F.col(DOC_ID))
         .groupBy("content_hash")
         .agg(
             F.count("*").alias("dup_count"),
-            F.min(id_col).alias("keep_doc_id"),
+            F.min(DOC_ID).alias("keep_doc_id"),
         )
     )
 
 
-def exact_dedup(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Return the de-duplicated corpus (first id per content hash
     survives). Window-free formulation: aggregate keeps the shuffle
     at hash granularity; the join back is on the uniform id key."""
-    keep = exact_dedup_groups(docs, text_col, id_col).select(
-        F.col("keep_doc_id").alias(id_col)
+    keep = exact_dedup_groups(docs).select(
+        F.col("keep_doc_id").alias(DOC_ID)
     )
-    return docs.join(keep, id_col, "semi")
+    return docs.join(keep, DOC_ID, "semi")
 
 
 def content_rep_marks(
@@ -141,7 +146,6 @@ def minhash_signatures_wide(
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = MINHASH_NUM_HASHES,
-    ngram: int = 3,
 ) -> DataFrame:
     """Per-document MinHash signature, one column per seed, via the
     Carter-Wegman trick: ONE md5 per shingle split into two 32-bit
@@ -157,31 +161,10 @@ def minhash_signatures_wide(
     scheme is plain integer arithmetic on md5 hex — bit-identical in
     DuckDB ('0x'||substr)::BIGINT — so the oracle still hash-matches.
     """
-    exploded = word_ngram_rows(docs, text_col, id_col, ngram).select(
+    exploded = word_ngram_rows(docs, text_col, id_col).select(
         F.col(id_col), *_md5_halves_exprs("gram", "g1", "g2")
     )
     return exploded.groupBy(id_col).agg(*_minhash_agg_exprs(num_hashes))
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = MINHASH_NUM_HASHES,
-    ngram: int = 3,
-) -> DataFrame:
-    """Long-form signature view (doc_id, seed, minhash) — an unpivot
-    of the wide aggregation (kept for API parity / inspection)."""
-    wide = minhash_signatures_wide(docs, text_col, id_col, num_hashes, ngram)
-    pairs = F.array(
-        *[
-            F.struct(F.lit(s).alias("seed"), F.col(f"h{s}").alias("minhash"))
-            for s in range(num_hashes)
-        ]
-    )
-    return wide.select(F.col(id_col), F.explode(pairs).alias("p")).select(
-        id_col, "p.seed", "p.minhash"
-    )
 
 
 def _doc_signatures(
@@ -193,7 +176,6 @@ def _doc_signatures(
     minhash: bool = True,
     votes: bool = False,
     num_hashes: int = MINHASH_NUM_HASHES,
-    ngram: int = 3,
 ) -> DataFrame:
     """The one per-document signature pass: ONE text scan →
     (id_col, __ch, *keys, [h0..h{n-1}], [simhash]) — the normalized
@@ -208,14 +190,14 @@ def _doc_signatures(
     it through codegen subexpression elimination in the one
     projection), then ONE explode emits a row per token POSITION
     (0..size-1). The token at the position feeds the SimHash vote
-    sums; the `ngram`-gram starting there (NULL for the ragged tail)
+    sums; the NGRAM-gram starting there (NULL for the ragged tail)
     feeds the MinHash min-aggregates. Exploding per position for
     every mode, rather than per gram start when no votes are asked
     for, keeps one range and one guard: the ngram−1 extra rows per
     doc are map-side only, collapsed by the partial aggregate before
     the exchange, so shuffle rows and bytes do not change.
 
-    Gramless docs (fewer than `ngram` tokens) stay in the output —
+    Gramless docs (fewer than NGRAM tokens) stay in the output —
     the exact-hash tier and the funnel's stage counts need every doc:
     their all-NULL gram hashes leave h* NULL (filter h0 IS NOT NULL
     before banding, matching minhash_signatures_wide, which never
@@ -249,8 +231,8 @@ def _doc_signatures(
     shingles, hashes, aggs = [], [], []
     if minhash:
         shingles.append(F.expr(
-            f"CASE WHEN __i >= 0 AND __i <= size(__toks) - {ngram}"
-            f" THEN {_gram_sql('__i', ngram)} END"
+            f"CASE WHEN __i >= 0 AND __i <= size(__toks) - {NGRAM}"
+            f" THEN {_gram_sql('__i', NGRAM)} END"
         ).alias("gram"))
         hashes += _md5_halves_exprs("gram", "g1", "g2")
         aggs += _minhash_agg_exprs(num_hashes)
@@ -284,7 +266,6 @@ def _fused_wide_and_marks(
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = MINHASH_NUM_HASHES,
-    ngram: int = 3,
     votes: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(wide signature, exact-dup marks, signatures) carved off ONE
@@ -299,7 +280,7 @@ def _fused_wide_and_marks(
     returned for callers that also read its `simhash` (`votes`)."""
     sigs = materialize(_doc_signatures(
         docs, text_col, id_col,
-        votes=votes, num_hashes=num_hashes, ngram=ngram,
+        votes=votes, num_hashes=num_hashes,
     ))
     wide = sigs.filter(F.col("h0").isNotNull()).select(
         F.col(id_col), *[f"h{s}" for s in range(num_hashes)]
@@ -327,7 +308,6 @@ def minhash_band_keys(
     id_col: str = "doc_id",
     num_hashes: int = MINHASH_NUM_HASHES,
     bands: int = 4,
-    ngram: int = 3,
     wide: DataFrame | None = None,
 ) -> DataFrame:
     """LSH band keys per document: the wide signature split into
@@ -342,9 +322,7 @@ def minhash_band_keys(
     Output: (id_col, band, band_key) — `bands` rows per doc."""
     rows_per_band = num_hashes // bands
     if wide is None:
-        wide = minhash_signatures_wide(
-            docs, text_col, id_col, num_hashes, ngram
-        )
+        wide = minhash_signatures_wide(docs, text_col, id_col, num_hashes)
     band_structs = F.array(
         *[
             F.struct(
@@ -395,8 +373,6 @@ def minhash_candidate_pairs(
     id_col: str = "doc_id",
     num_hashes: int = MINHASH_NUM_HASHES,
     bands: int = 4,
-    ngram: int = 3,
-    collapse_exact: bool = True,
     wide: DataFrame | None = None,
     marked: DataFrame | None = None,
 ) -> DataFrame:
@@ -414,7 +390,7 @@ def minhash_candidate_pairs(
     contents are near-identical documents only, so the pair expansion
     is linear in true near-dups.
 
-    With collapse_exact (default), byte-identical documents are
+    Byte-identical documents are
     collapsed to their min-id representative BEFORE banding — the
     pathology where millions of exact copies share one bucket in
     every band can't occur; each exact-dup group surfaces as (rep,
@@ -430,53 +406,38 @@ def minhash_candidate_pairs(
     computed per input doc (linear map-side work on duplicate
     copies; duplicate signatures merge in the banding aggregate),
     which trades bounded extra CPU for never moving the corpus —
-    the right side of the trade once text is TB-scale. Set
-    collapse_exact=False only when the input is already
-    exact-deduped (corpus_curation does its own collapse upstream).
+    the right side of the trade once text is TB-scale.
     """
-    star = None
-    keep_ids = None
-    if collapse_exact:
-        # `marked` lets a caller that already materialized the
-        # (id, __keep) exact-dup mark relation (the funnel derives it
-        # from its enriched checkpoint's content hash) share it,
-        # skipping content_rep_marks' own corpus scan + window pass.
-        if marked is None and wide is None:
-            # self-derived: wide and marks from the one signature pass
-            wide, marked, _ = _fused_wide_and_marks(
-                docs, text_col, id_col, num_hashes, ngram
-            )
-        elif marked is None:
-            marked = content_rep_marks(docs, text_col, id_col)
-        star = marked.filter(F.col(id_col) != F.col("__keep")).select(
-            F.col("__keep").alias("doc_a"), F.col(id_col).alias("doc_b")
+    # `marked` lets a caller that already materialized the
+    # (id, __keep) exact-dup mark relation (the funnel derives it
+    # from its enriched checkpoint's content hash) share it,
+    # skipping content_rep_marks' own corpus scan + window pass.
+    if marked is None and wide is None:
+        # self-derived: wide and marks from the one signature pass
+        wide, marked, _ = _fused_wide_and_marks(
+            docs, text_col, id_col, num_hashes
         )
-        keep_ids = marked.filter(
-            F.col(id_col) == F.col("__keep")
-        ).select(id_col)
-    band_keys = minhash_band_keys(
-        docs, text_col, id_col, num_hashes, bands, ngram, wide=wide
+    elif marked is None:
+        marked = content_rep_marks(docs, text_col, id_col)
+    star = marked.filter(F.col(id_col) != F.col("__keep")).select(
+        F.col("__keep").alias("doc_a"), F.col(id_col).alias("doc_b")
     )
-    if keep_ids is not None:
-        band_keys = band_keys.join(keep_ids, id_col, "semi")
-    out = _bucket_pairs(band_keys, id_col)
-    if star is not None:
-        out = out.unionByName(
-            star.select(
-                "doc_a",
-                "doc_b",
-                F.lit(bands).cast("long").alias("n_shared_bands"),
-            )
+    keep_ids = marked.filter(
+        F.col(id_col) == F.col("__keep")
+    ).select(id_col)
+    band_keys = minhash_band_keys(
+        docs, text_col, id_col, num_hashes, bands, wide=wide
+    ).join(keep_ids, id_col, "semi")
+    return _bucket_pairs(band_keys, id_col).unionByName(
+        star.select(
+            "doc_a",
+            "doc_b",
+            F.lit(bands).cast("long").alias("n_shared_bands"),
         )
-    return out
+    )
 
 
-def incremental_dedup_status(
-    batch: DataFrame,
-    corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def incremental_dedup_status(batch: DataFrame, corpus: DataFrame) -> DataFrame:
     """Incremental-ingestion dedup: classify every document of an
     incoming `batch` against an existing `corpus` as 'exact' (its
     normalized content hash already exists in the corpus), 'near_dup'
@@ -495,28 +456,26 @@ def incremental_dedup_status(
     joins are bounded by construction. Exact takes precedence over
     near (an exact copy trivially shares all bands).
 
-    Output: (id_col, status) — one row per batch doc.
+    Output: (doc_id, status) — one row per batch doc.
     """
     # two consumers per side (hash probe / id spine, band keys)
-    bs = materialize(_doc_signatures(batch, text_col, id_col))
-    cs = materialize(_doc_signatures(corpus, text_col, id_col))
+    bs = materialize(_doc_signatures(batch))
+    cs = materialize(_doc_signatures(corpus))
     corpus_hashes = cs.select("__ch").distinct()
     exact_ids = (
-        bs.select(id_col, "__ch")
+        bs.select(DOC_ID, "__ch")
         .join(corpus_hashes, "__ch", "semi")
-        .select(id_col, F.lit(True).alias("is_exact"))
+        .select(DOC_ID, F.lit(True).alias("is_exact"))
     )
     # gramless docs (h* NULL) carry no band keys — same contract as
     # the plain signature pipeline, which never emits them.
-    bkeys = minhash_band_keys(
-        batch, text_col, id_col, wide=bs.filter(F.col("h0").isNotNull())
-    )
+    bkeys = minhash_band_keys(batch, wide=bs.filter(F.col("h0").isNotNull()))
     ckeys = minhash_band_keys(
-        corpus, text_col, id_col, wide=cs.filter(F.col("h0").isNotNull())
+        corpus, wide=cs.filter(F.col("h0").isNotNull())
     ).select("band", "band_key")
     near_ids = (
         bkeys.join(ckeys, ["band", "band_key"], "semi")
-        .select(id_col)
+        .select(DOC_ID)
         .distinct()
         .withColumn("is_near", F.lit(True))
     )
@@ -524,11 +483,11 @@ def incremental_dedup_status(
         # id spine from the checkpointed signature pass — reading
         # `batch` again here would re-scan the batch text for rows
         # the pass already carries (one per doc, gramless included).
-        bs.select(id_col)
-        .join(exact_ids, id_col, "left")
-        .join(near_ids, id_col, "left")
+        bs.select(DOC_ID)
+        .join(exact_ids, DOC_ID, "left")
+        .join(near_ids, DOC_ID, "left")
         .select(
-            F.col(id_col),
+            F.col(DOC_ID),
             F.when(F.col("is_exact"), F.lit("exact"))
             .when(F.col("is_near"), F.lit("near_dup"))
             .otherwise(F.lit("novel"))
@@ -537,16 +496,10 @@ def incremental_dedup_status(
     )
 
 
-def dup_ngram_span_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-    min_docs: int = 2,
-) -> DataFrame:
+def dup_ngram_span_stats(docs: DataFrame) -> DataFrame:
     """Per-document duplicated-substring signal: the fraction of a
-    doc's n-gram positions whose n-gram also appears in at least
-    `min_docs` distinct documents. The cross-document substring-
+    doc's 8-gram positions whose 8-gram also appears in at least
+    MIN_DOCS distinct documents. The cross-document substring-
     duplication measurement behind suffix-array training-data dedup
     (memorization risk scales with verbatim span repetition, so docs
     with a high duplicated-span share are dropped or trimmed before
@@ -559,31 +512,31 @@ def dup_ngram_span_stats(
     shuffles on that key (distinct-doc agg, then the flag join; both
     map-side combinable) plus the per-doc rollup. The duplicated-gram
     relation's size is data-dependent, so no broadcast hint — AQE
-    decides. Docs with fewer than n tokens have no n-gram positions
+    decides. Docs with fewer than 8 tokens have no 8-gram positions
     and do not appear (mirrored by the oracle).
 
     Output: (doc_id, n_grams, n_dup_grams, dup_ppm) — dup_ppm the
     floor parts-per-million of positions covered by cross-doc
     repeated grams (exact integer, cross-engine comparable).
     """
-    grams = word_ngram_rows(docs, text_col, id_col, n).select(
-        F.col(id_col), F.md5(F.col("gram")).alias("gh")
+    grams = word_ngram_rows(docs, TEXT, DOC_ID, 8).select(
+        F.col(DOC_ID), F.md5(F.col("gram")).alias("gh")
     )
     dup = (
         grams.groupBy("gh")
-        .agg(F.count_distinct(F.col(id_col)).alias("nd"))
-        .filter(F.col("nd") >= min_docs)
+        .agg(F.count_distinct(F.col(DOC_ID)).alias("nd"))
+        .filter(F.col("nd") >= MIN_DOCS)
         .select("gh", F.lit(True).alias("is_dup"))
     )
     return (
         grams.join(dup, "gh", "left")
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.count("is_dup").alias("n_dup_grams"),
         )
         .select(
-            F.col(id_col),
+            F.col(DOC_ID),
             "n_grams",
             "n_dup_grams",
             F.floor(
@@ -595,19 +548,13 @@ def dup_ngram_span_stats(
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    window: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (the MOSS scheme): hash every
-    word n-gram, slide a window of `window` consecutive gram hashes,
+    word 3-gram, slide a window of 4 consecutive gram hashes,
     and keep the minimum hash of each full window. Winnowing's
-    guarantee: any shared substring of at least n + window - 1 tokens
+    guarantee: any shared substring of at least 3 + 4 - 1 tokens
     between two documents yields at least one shared fingerprint,
-    while storing ~2/(window+1) of the gram hashes — the standard
+    while storing ~2/(4+1) of the gram hashes — the standard
     position-robust alternative to full n-gram inverted indexes for
     plagiarism/overlap detection.
 
@@ -621,25 +568,19 @@ def winnow_fingerprints(
     whole-stage codegen (one shuffle+sort per doc key); the window
     min is a bounded ROWS frame over that same sort (no second
     shuffle); distinct + rollup ride the doc key too. Docs with
-    fewer than n + window - 1 tokens have no full window and drop
+    fewer than 3 + 4 - 1 tokens have no full window and drop
     out (mirrored by the oracle).
 
     Output: (doc_id, n_fingerprints, fp_xor).
     """
-    selected = _winnow_selected(docs, text_col, id_col, n, window)
-    return selected.groupBy(id_col).agg(
+    selected = _winnow_selected(docs)
+    return selected.groupBy(DOC_ID).agg(
         F.count(F.lit(1)).alias("n_fingerprints"),
         F.bit_xor("fp").alias("fp_xor"),
     )
 
 
-def _winnow_selected(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    window: int = 4,
-) -> DataFrame:
+def _winnow_selected(docs: DataFrame) -> DataFrame:
     """The distinct (id, fp) winnowing-fingerprint relation shared by
     winnow_fingerprints (per-doc digest) and winnow_clone_pairs
     (cross-doc join).
@@ -648,66 +589,61 @@ def _winnow_selected(
     come from positional slices of the per-doc token array instead of
     a posexplode + window-lead reconstruction, so no token row ever
     crosses an exchange. The sliding window min is a second map-side
-    explode — each gram hash fans out to the ≤ `window` full windows
+    explode — each gram hash fans out to the ≤ 4 full windows
     it participates in (a window START index i picks up gram j iff
-    i ≤ j ≤ i + window − 1), and groupBy(id, window-start) takes the
-    min. Every window's w rows are produced consecutively inside one
+    i ≤ j ≤ i + 3), and groupBy(id, window-start) takes the
+    min. Every window's 4 rows are produced consecutively inside one
     task, so the partial aggregate collapses them before the exchange
     — the shuffle carries one 24-byte row per full window, versus the
     old plan's every-token-row shuffle + sort + two window passes.
-    Docs with fewer than window full grams emit nothing (the old
+    Docs with fewer than 4 full grams emit nothing (the old
     count-==-window filter, now enforced by the guarded index range).
     """
-    toks = F.split(normalized_text(F.col(text_col)), " ")
+    toks = F.split(normalized_text(F.col(TEXT)), " ")
     base = ensure_parallelism(docs).select(
-        F.col(id_col), toks.alias("__toks")
+        F.col(DOC_ID), toks.alias("__toks")
     )
-    # gram count G = size - n + 1; only docs with G >= window have a
+    # gram count G = size - 3 + 1; only docs with G >= 4 have a
     # full window (sequence() must be guarded: a descending range
     # would fabricate rows)
-    g_last = F.size("__toks") - n  # last gram start, G - 1
+    g_last = F.size("__toks") - 3  # last gram start, G - 1
     starts = F.when(
-        g_last - window + 1 >= 0, F.sequence(F.lit(0), g_last)
+        g_last - 4 + 1 >= 0, F.sequence(F.lit(0), g_last)
     ).otherwise(F.expr("array()"))
     gram_hash = F.conv(
-        F.substring(F.md5(F.expr(_gram_sql("__j", n))), 1, 15), 16, 10
+        F.substring(F.md5(F.expr(_gram_sql("__j", 3))), 1, 15), 16, 10
     ).cast("long")
     fanout = F.sequence(
-        F.greatest(F.col("__j") - window + 1, F.lit(0)),
+        F.greatest(F.col("__j") - 4 + 1, F.lit(0)),
         F.least(F.col("__j"), F.col("__lw")),
     )
     return (
         base.select(
-            F.col(id_col),
+            F.col(DOC_ID),
             "__toks",
-            (g_last - window + 1).alias("__lw"),  # last full-window start
+            (g_last - 4 + 1).alias("__lw"),  # last full-window start
             F.explode(starts).alias("__j"),
         )
         .select(
-            F.col(id_col),
+            F.col(DOC_ID),
             gram_hash.alias("__gh"),
             F.explode(fanout).alias("__i"),
         )
-        .groupBy(id_col, "__i")
+        .groupBy(DOC_ID, "__i")
         .agg(F.min("__gh").alias("fp"))
-        .select(id_col, "fp")
+        .select(DOC_ID, "fp")
         .distinct()
     )
 
 
 def winnow_clone_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    window: int = 4,
-    min_shared: int = 2,
     max_docs_per_fp: int = 64,
 ) -> DataFrame:
     """MOSS-style clone-pair detection: document pairs sharing at
-    least `min_shared` winnowing fingerprints — position-robust
+    least 2 winnowing fingerprints — position-robust
     evidence of verbatim shared spans (each shared fingerprint
-    witnesses a shared substring of ≥ n + window − 1 tokens), the
+    witnesses a shared substring of ≥ 3 + 4 − 1 tokens), the
     pairwise complement of the per-doc winnow digest and an exact
     (non-probabilistic) sibling of minhash_pairs.
 
@@ -722,7 +658,7 @@ def winnow_clone_pairs(
     Output: (doc_a, doc_b, shared_fps), doc_a < doc_b.
     """
     # three consumers (the posting-list stop-list count, both join sides)
-    sel = _winnow_selected(docs, text_col, id_col, n, window)
+    sel = _winnow_selected(docs)
     sel = materialize(sel)
     rare = (
         sel.groupBy("fp")
@@ -733,14 +669,14 @@ def winnow_clone_pairs(
         .select("fp")
     )
     kept = sel.join(rare, "fp")
-    a = kept.select(F.col("fp"), F.col(id_col).alias("doc_a"))
-    b = kept.select(F.col("fp"), F.col(id_col).alias("doc_b"))
+    a = kept.select(F.col("fp"), F.col(DOC_ID).alias("doc_a"))
+    b = kept.select(F.col("fp"), F.col(DOC_ID).alias("doc_b"))
     return (
         a.join(b, "fp")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).cast("long").alias("shared_fps"))
-        .filter(F.col("shared_fps") >= min_shared)
+        .filter(F.col("shared_fps") >= 2)
     )
 
 
@@ -748,9 +684,6 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "doc_id",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph → cluster ids
     (cluster_id = the component's minimum doc id, so the output is
@@ -774,12 +707,12 @@ def connected_components(
     join+shuffle of the two label generations per round — half the
     per-round shuffle work, same labels.
 
-    Raises RuntimeError if max_iter rounds pass without convergence
+    Raises RuntimeError if MAX_ITER rounds pass without convergence
     (labels would silently be wrong for any component whose diameter
-    exceeds max_iter); near-dup graphs converge in a handful of
+    exceeds MAX_ITER); near-dup graphs converge in a handful of
     rounds, so hitting the cap signals a pathological input.
     """
-    both = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    both = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     both = materialize(both.unionByName(
         both.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ), eager=True)
@@ -787,7 +720,7 @@ def connected_components(
         F.col(id_col).alias("node"), F.col(id_col).alias("label")
     ), eager=True)
     converged = False
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         neigh = both.join(
             labels.withColumnRenamed("node", "dst"), "dst"
         ).select(
@@ -810,7 +743,7 @@ def connected_components(
             break
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
+            f"connected_components did not converge in {MAX_ITER} rounds; "
             "labels would be incomplete — raise max_iter for graphs with "
             "diameter beyond the near-dup regime"
         )
@@ -819,13 +752,7 @@ def connected_components(
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    candidates: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ngram: int = 3,
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, candidates: DataFrame) -> DataFrame:
     """Exact Jaccard similarity over word n-gram sets for candidate
     pairs (verification stage after LSH).
 
@@ -844,8 +771,8 @@ def ngram_jaccard_pairs(
     Candidates must be distinct (doc_a, doc_b) rows — every caller's
     pairs come pre-grouped out of the banding.
     """
-    shingled = word_ngram_rows(docs, text_col, id_col, ngram).select(
-        F.col(id_col).alias("__doc"), "gram"
+    shingled = word_ngram_rows(docs).select(
+        F.col(DOC_ID).alias("__doc"), "gram"
     )
     # two consumers (member explode, sentinel)
     candidates = materialize(candidates)
@@ -892,9 +819,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash64(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
     """64-bit SimHash over word unigrams: per token take a 64-bit
     hash, each bit votes +1/-1 (repeated tokens vote repeatedly —
     standard term-frequency weighting), sign of the vote sum forms
@@ -915,10 +840,10 @@ def simhash64(
     everything in whole-stage codegen, one shuffle total.
     """
     toks = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("tok"),
+        F.col(DOC_ID),
+        F.explode(F.split(normalized_text(F.col(TEXT)), " ")).alias("tok"),
     )
-    return _simhash_from_tokens(toks, id_col)
+    return _simhash_from_tokens(toks, DOC_ID)
 
 
 def _simhash_from_tokens(toks: DataFrame, key_col: str) -> DataFrame:
@@ -980,16 +905,12 @@ def _md5_halves_exprs(src: str, hi: str, lo: str) -> list[Column]:
     ]
 
 
-def _minhash_agg_exprs(
-    num_hashes: int, g1: str = "g1", g2: str = "g2"
-) -> list[Column]:
+def _minhash_agg_exprs(num_hashes: int) -> list[Column]:
     """The num_hashes Carter-Wegman min-aggregates
-    min((h1 + s·h2) mod 2^32) as h0..h{n-1}.
-
-    ``g1``/``g2`` are spliced into SQL text unquoted: pass only
-    trusted internal column identifiers, never user input."""
+    min((g1 + s·g2) mod 2^32) as h0..h{n-1} over the md5 halves
+    g1/g2."""
     return [
-        F.expr(f"min(({g1} + {s} * {g2}) % {_MOD32})").alias(f"h{s}")
+        F.expr(f"min((g1 + {s} * g2) % {_MOD32})").alias(f"h{s}")
         for s in range(num_hashes)
     ]
 
@@ -1071,9 +992,6 @@ def _probe_masks(width: int, d: int) -> list[int]:
 def simhash_near_dup(
     docs: DataFrame,
     max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    collapse_exact: bool = True,
     marked: DataFrame | None = None,
     fingerprints: DataFrame | None = None,
 ) -> DataFrame:
@@ -1088,7 +1006,7 @@ def simhash_near_dup(
     bit_count(XOR) — exact, no false negatives.
     Output: (doc_a, doc_b, hamming).
 
-    With collapse_exact (default), exact duplicates are collapsed to
+    Exact duplicates are collapsed to
     their min-id representative before banding — identical docs have
     identical fingerprints, so an exact-dup-heavy corpus would
     otherwise pile every copy onto the same band key in every band
@@ -1105,7 +1023,6 @@ def simhash_near_dup(
     (content_rep_marks, ~48 B/doc) via a semi join on the uniform id
     key. Full doc rows (text) never shuffle; no doc semi-join
     exists at all."""
-    star = None
     n_bands, d = _band_plan(max_hamming)
     width = 64 // n_bands
 
@@ -1118,37 +1035,34 @@ def simhash_near_dup(
     # at 100M docs) and truncates the lineage so each side reads the
     # materialized partitions.
     sh = fingerprints
-    if collapse_exact and marked is None and sh is None:
+    if marked is None and sh is None:
         # fingerprints and marks from the one signature pass
-        sigs = materialize(_doc_signatures(
-            docs, text_col, id_col, minhash=False, votes=True
-        ))
-        marked = _marks_from_ch(sigs, id_col)
+        sigs = materialize(_doc_signatures(docs, minhash=False, votes=True))
+        marked = _marks_from_ch(sigs, DOC_ID)
         # NULL simhash = the NULL-text sentinel docs simhash64 never
         # emits (they still reach the marks window above)
         sh = sigs.filter(F.col("simhash").isNotNull()).select(
-            F.col(id_col), "simhash"
+            F.col(DOC_ID), "simhash"
         )
     if sh is None:
-        sh = simhash64(docs, text_col, id_col)
-    if collapse_exact:
-        # `marked` lets a caller that already materialized the
-        # (id, __keep) mark relation (dedup_method_agreement shares
-        # one across both pair families) skip content_rep_marks'
-        # extra corpus scan + window pass — the
-        # minhash_candidate_pairs idiom; `fingerprints` likewise lets
-        # it hand over the (id, simhash) relation its signature pass
-        # already computed, so the SimHash tier shares the
-        # normalize+tokenize scan.
-        if marked is None:
-            marked = content_rep_marks(docs, text_col, id_col)
-        star = marked.filter(F.col(id_col) != F.col("__keep")).select(
-            F.col("__keep").alias("doc_a"), F.col(id_col).alias("doc_b")
-        )
-        keep_ids = marked.filter(
-            F.col(id_col) == F.col("__keep")
-        ).select(id_col)
-        sh = sh.join(keep_ids, id_col, "semi")
+        sh = simhash64(docs)
+    # `marked` lets a caller that already materialized the
+    # (id, __keep) mark relation (dedup_method_agreement shares
+    # one across both pair families) skip content_rep_marks'
+    # extra corpus scan + window pass — the
+    # minhash_candidate_pairs idiom; `fingerprints` likewise lets
+    # it hand over the (id, simhash) relation its signature pass
+    # already computed, so the SimHash tier shares the
+    # normalize+tokenize scan.
+    if marked is None:
+        marked = content_rep_marks(docs)
+    star = marked.filter(F.col(DOC_ID) != F.col("__keep")).select(
+        F.col("__keep").alias("doc_a"), F.col(DOC_ID).alias("doc_b")
+    )
+    keep_ids = marked.filter(
+        F.col(DOC_ID) == F.col("__keep")
+    ).select(DOC_ID)
+    sh = sh.join(keep_ids, DOC_ID, "semi")
     sh = materialize(sh, eager=True)
 
     # Banding expressions are emitted as parsed SQL strings (ONE
@@ -1178,8 +1092,8 @@ def simhash_near_dup(
         )
     )
     banded = sh.select(
-        F.col(id_col), F.col("simhash"), F.explode(band_structs).alias("b")
-    ).select(id_col, "simhash", "b.band", "b.band_key")
+        F.col(DOC_ID), F.col("simhash"), F.explode(band_structs).alias("b")
+    ).select(DOC_ID, "simhash", "b.band", "b.band_key")
 
     # The tail band absorbs 64 % n_bands remainder bits, so it gets
     # its own (wider) mask set — probing only the low `width` bits
@@ -1208,7 +1122,7 @@ def simhash_near_dup(
             "band",
             F.explode(_per_band_masks(max_flips)).alias(m_alias),
             F.col("band_key"),
-            F.col(id_col).alias(id_alias),
+            F.col(DOC_ID).alias(id_alias),
             F.col("simhash").alias(sh_alias),
         ).select(
             "band",
@@ -1221,11 +1135,11 @@ def simhash_near_dup(
     if d == 0:
         build = banded.select(
             "band", "band_key",
-            F.col(id_col).alias("doc_b"), F.col("simhash").alias("sh_b"),
+            F.col(DOC_ID).alias("doc_b"), F.col("simhash").alias("sh_b"),
         )
         probe = banded.select(
             "band", "band_key",
-            F.col(id_col).alias("doc_a"), F.col("simhash").alias("sh_a"),
+            F.col(DOC_ID).alias("doc_a"), F.col("simhash").alias("sh_a"),
         )
     elif d == 2:
         # Symmetric ball split: cover ≤2 in-band errors with a
@@ -1244,7 +1158,7 @@ def simhash_near_dup(
         # ≤d-bit-flip variants.
         build = banded.select(
             "band", "band_key",
-            F.col(id_col).alias("doc_b"), F.col("simhash").alias("sh_b"),
+            F.col(DOC_ID).alias("doc_b"), F.col("simhash").alias("sh_b"),
         )
         probe = _exploded_side(d, "doc_a", "sh_a", "__mp").drop("__mp")
     xor_sql = "(sh_a ^ sh_b)"
@@ -1303,31 +1217,21 @@ def simhash_near_dup(
                 f" AND (__mb = ({x_sql} ^ {exp_p_sql}))"
             )
         )
-    out = out.select("doc_a", "doc_b", hamming.alias("hamming"))
-    if star is not None:
-        out = out.unionByName(
-            star.select(
-                "doc_a", "doc_b", F.lit(0).cast("integer").alias("hamming")
-            )
+    return out.select("doc_a", "doc_b", hamming.alias("hamming")).unionByName(
+        star.select(
+            "doc_a", "doc_b", F.lit(0).cast("integer").alias("hamming")
         )
-    return out
+    )
 
 
-def source_overlap(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    key: str = "fingerprint",
-    window: int = 8,
-) -> DataFrame:
+def source_overlap(docs: DataFrame) -> DataFrame:
     """Cross-source duplication matrix: for every source pair, how
     many distinct contents appear in both — the mirror-site /
     re-crawl detector that decides which domains to drop wholesale
-    before pairwise dedup even runs. `key` picks the content notion:
-    "exact" = sha256 of normalized text, "fingerprint" = winnowing
-    min-hash over word `window`-grams (robust to small edits, the
-    same fingerprint family as textops.rolling_fingerprint).
+    before pairwise dedup even runs. The content notion is a
+    winnowing fingerprint: the min-hash over word 8-grams (robust to
+    small edits, the same fingerprint family as
+    textops.rolling_fingerprint).
 
     Shape: text leaves the scan as a fixed-width key (≤32 B/row
     shuffle); per content key the distinct source set is collected
@@ -1336,23 +1240,13 @@ def source_overlap(
     self-join of the corpus. Output: (src_a, src_b,
     shared_contents), src_a < src_b.
     """
-    if key == "exact":
-        keyed = ensure_parallelism(docs).select(
-            F.sha2(normalized_text(F.col(text_col)), 256).alias(
-                "content_hash"
-            ),
-            F.col(source_col).alias("src"),
-        )
-    elif key == "fingerprint":
-        grams = word_ngram_rows(docs, text_col, id_col, window)
-        fp = grams.groupBy(id_col).agg(
-            F.min(F.substring(F.md5("gram"), 1, 16)).alias("content_hash")
-        )
-        keyed = docs.select(F.col(id_col), F.col(source_col).alias("src")).join(
-            fp, id_col
-        ).select("content_hash", "src")
-    else:
-        raise ValueError(f"unknown key kind: {key!r}")
+    grams = word_ngram_rows(docs, TEXT, DOC_ID, 8)
+    fp = grams.groupBy(DOC_ID).agg(
+        F.min(F.substring(F.md5("gram"), 1, 16)).alias("content_hash")
+    )
+    keyed = docs.select(F.col(DOC_ID), F.col(SOURCE).alias("src")).join(
+        fp, DOC_ID
+    ).select("content_hash", "src")
     srcs = (
         keyed.groupBy("content_hash")
         .agg(F.array_sort(F.collect_set("src")).alias("srcs"))
@@ -1381,9 +1275,6 @@ def source_overlap(
 def ngram_containment_pairs(
     docs: DataFrame,
     candidates: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ngram: int = 3,
 ) -> DataFrame:
     """Asymmetric n-gram containment for candidate pairs:
     |grams(A) ∩ grams(B)| / |grams(A)| (and the B-direction) — the
@@ -1399,8 +1290,8 @@ def ngram_containment_pairs(
     (doc_a, doc_b, inter_size, n_grams_a, n_grams_b, cont_a_ppm,
     cont_b_ppm); gramless sides report 0 ppm.
     """
-    shingled = word_ngram_rows(docs, text_col, id_col, ngram).select(
-        F.col(id_col).alias("__doc"), "gram"
+    shingled = word_ngram_rows(docs).select(
+        F.col(DOC_ID).alias("__doc"), "gram"
     )
     # two consumers (member explode, NULL-gram sentinel)
     candidates = materialize(candidates)
@@ -1488,13 +1379,7 @@ def ngram_containment_pairs(
     )
 
 
-def snapshot_diff(
-    old_docs: DataFrame,
-    new_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-) -> DataFrame:
+def snapshot_diff(old_docs: DataFrame, new_docs: DataFrame) -> DataFrame:
     """Corpus snapshot diff by exact content hash: which content was
     added / removed / retained between two dataset versions, per
     source — the release-to-release audit a training-data pipeline
@@ -1510,8 +1395,8 @@ def snapshot_diff(
     def _collapse(side: DataFrame, tag: str) -> DataFrame:
         return (
             side.select(
-                F.sha2(normalized_text(F.col(text_col)), 256).alias("h"),
-                F.col(source_col).alias("src"),
+                F.sha2(normalized_text(F.col(TEXT)), 256).alias("h"),
+                F.col(SOURCE).alias("src"),
             )
             .groupBy("h")
             .agg(
@@ -1544,13 +1429,7 @@ def snapshot_diff(
     )
 
 
-def dedup_survivorship(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    size_col: str = "n_chars",
-) -> DataFrame:
+def dedup_survivorship(docs: DataFrame) -> DataFrame:
     """Per-source exact-dedup survivorship audit — the "what does
     dedup buy us" report a curation run publishes: for each source,
     how many documents survive global exact dedup (min-id keeper per
@@ -1567,15 +1446,15 @@ def dedup_survivorship(
     from pyspark.sql import Window
 
     hashed = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.col(source_col).alias("source"),
-        F.col(size_col).cast("long").alias("sz"),
-        F.sha2(normalized_text(F.col(text_col)), 256).alias("__ch"),
+        F.col(DOC_ID),
+        F.col(SOURCE).alias("source"),
+        F.col("n_chars").cast("long").alias("sz"),
+        F.sha2(normalized_text(F.col(TEXT)), 256).alias("__ch"),
     )
     marked = hashed.withColumn(
-        "__keep", F.min(id_col).over(Window.partitionBy("__ch"))
+        "__keep", F.min(DOC_ID).over(Window.partitionBy("__ch"))
     )
-    kept = F.when(F.col(id_col) == F.col("__keep"), 1).otherwise(0)
+    kept = F.when(F.col(DOC_ID) == F.col("__keep"), 1).otherwise(0)
     return (
         marked.groupBy("source")
         .agg(
@@ -1597,8 +1476,6 @@ def dedup_survivorship(
 
 def jaccard_threshold_histogram(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     wide: DataFrame | None = None,
     marked: DataFrame | None = None,
 ) -> DataFrame:
@@ -1615,12 +1492,8 @@ def jaccard_threshold_histogram(
     Output: (bucket_ppm, n_pairs) where bucket_ppm is the decile
     floor (0, 100000, ..., 1000000 for exact-dup star edges).
     """
-    cands = minhash_candidate_pairs(
-        docs, text_col=text_col, id_col=id_col, wide=wide, marked=marked
-    )
-    pairs = ngram_jaccard_pairs(
-        docs, cands.select("doc_a", "doc_b"), text_col, id_col
-    )
+    cands = minhash_candidate_pairs(docs, wide=wide, marked=marked)
+    pairs = ngram_jaccard_pairs(docs, cands.select("doc_a", "doc_b"))
     # round to 6 places FIRST (the cross-engine-proven contract of the
     # ngram_jaccard entry), then to integer micro — the +0.5 absorbs
     # the representation error of the rounded double.
@@ -1637,12 +1510,7 @@ def jaccard_threshold_histogram(
     )
 
 
-def ngram_dup_curve(
-    docs: DataFrame,
-    max_n: int = 6,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def ngram_dup_curve(docs: DataFrame, max_n: int = 6) -> DataFrame:
     """Duplication-rate curve across n-gram granularities n = 1..max_n
     — the table that picks a dedup policy's shingle size: unigram
     duplication is near-total in any natural corpus, document-level
@@ -1664,7 +1532,7 @@ def ngram_dup_curve(
 
     Output: (n, total_grams, distinct_grams, dup_ppm).
     """
-    toks_arr = F.split(normalized_text(F.col(text_col)), " ")
+    toks_arr = F.split(normalized_text(F.col(TEXT)), " ")
     base = ensure_parallelism(docs).select(toks_arr.alias("__toks"))
     starts = F.when(
         F.size("__toks") >= 1,
@@ -1715,10 +1583,7 @@ def ngram_dup_curve(
 def clone_pairs_verified(
     docs: DataFrame,
     max_distance_ppm: int = 200_000,
-    min_shared_fps: int = 2,
     max_pairs_per_doc: int | None = 1_000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Exact edit-distance verification of the winnowing clone
     candidates — the two-tier near-dup shape (cheap recall stage →
@@ -1751,8 +1616,8 @@ def clone_pairs_verified(
     id-pair relation. Pass None to force verification regardless.
     """
     cand = winnow_clone_pairs(
-        docs, text_col=text_col, id_col=id_col,
-    ).filter(F.col("shared_fps") >= min_shared_fps)
+        docs,
+    ).filter(F.col("shared_fps") >= 2)
     cand = materialize(cand)
     if max_pairs_per_doc is not None:
         hot = (
@@ -1773,19 +1638,19 @@ def clone_pairs_verified(
                 "min_shared_fps, or pass max_pairs_per_doc=None to force"
             )
     pair_ids = (
-        cand.select(F.col("doc_a").alias(id_col))
-        .unionAll(cand.select(F.col("doc_b").alias(id_col)))
+        cand.select(F.col("doc_a").alias(DOC_ID))
+        .unionAll(cand.select(F.col("doc_b").alias(DOC_ID)))
         .distinct()
     )
     # two consumers (ta, tb); pair-bounded, not corpus-bounded
-    norm = materialize(docs.join(F.broadcast(pair_ids), id_col, "semi").select(
-        F.col(id_col), normalized_text(F.col(text_col)).alias("__nt")
+    norm = materialize(docs.join(F.broadcast(pair_ids), DOC_ID, "semi").select(
+        F.col(DOC_ID), normalized_text(F.col(TEXT)).alias("__nt")
     ))
     ta = norm.select(
-        F.col(id_col).alias("doc_a"), F.col("__nt").alias("__ta")
+        F.col(DOC_ID).alias("doc_a"), F.col("__nt").alias("__ta")
     )
     tb = norm.select(
-        F.col(id_col).alias("doc_b"), F.col("__nt").alias("__tb")
+        F.col(DOC_ID).alias("doc_b"), F.col("__nt").alias("__tb")
     )
     d = F.levenshtein(F.col("__ta"), F.col("__tb"))
     mx = F.greatest(
@@ -1807,12 +1672,7 @@ def clone_pairs_verified(
     )
 
 
-def dedup_method_agreement(
-    docs: DataFrame,
-    simhash_max_hamming: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dedup_method_agreement(docs: DataFrame) -> DataFrame:
     """Cross-validation of the two fuzzy dedup families: the Venn
     counts of MinHash-LSH candidate pairs vs SimHash Hamming pairs
     over the same corpus. Before trusting EITHER at 100 TB you want
@@ -1831,17 +1691,12 @@ def dedup_method_agreement(
     n_union, overlap_ppm (Jaccard of the pair sets).
     """
     # marks, signatures and fingerprints from the one signature pass
-    wide, marked, sigs = _fused_wide_and_marks(
-        docs, text_col, id_col, votes=True
-    )
-    mh = minhash_candidate_pairs(
-        docs, text_col=text_col, id_col=id_col, marked=marked, wide=wide
-    )
+    wide, marked, sigs = _fused_wide_and_marks(docs, votes=True)
+    mh = minhash_candidate_pairs(docs, marked=marked, wide=wide)
     sh = simhash_near_dup(
-        docs, max_hamming=simhash_max_hamming,
-        text_col=text_col, id_col=id_col, marked=marked,
+        docs, max_hamming=10, marked=marked,
         fingerprints=sigs.filter(F.col("simhash").isNotNull()).select(
-            F.col(id_col), "simhash"
+            F.col(DOC_ID), "simhash"
         ),
     )
     return _pair_agreement(mh, sh, "minhash", "simhash")
@@ -1878,17 +1733,11 @@ def _pair_agreement(
     )
 
 
-def substring_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    span: int = 50,
-    min_docs: int = 2,
-) -> DataFrame:
+def substring_dedup(docs: DataFrame, span: int = 50) -> DataFrame:
     """Exact-substring dedup (Lee et al., "Deduplicating Training
     Data Makes Language Models Better"): every token whose position
     is covered by a `span`-token substring that appears verbatim in
-    at least `min_docs` distinct documents is REMOVED, and each doc
+    at least MIN_DOCS distinct documents is REMOVED, and each doc
     is rebuilt from its surviving tokens in original order. The
     remove-the-span production half of `dup_ngram_span_stats` (which
     only measures coverage); the paper's default span is 50 tokens.
@@ -1900,7 +1749,7 @@ def substring_dedup(
       1. positioned tokens (posexplode, one shuffle+sort per doc key);
       2. length-`span` gram hash at every start via lead() over that
          same sort (whole-stage codegen, no second shuffle);
-      3. duplicated-gram set = gram hashes in >= min_docs distinct
+      3. duplicated-gram set = gram hashes in >= MIN_DOCS distinct
          docs (one hash-shuffle of the gram relation, partial
          count_distinct map-side);
       4. join the flag back on the gram hash (AQE sizes it — the dup
@@ -1928,17 +1777,17 @@ def substring_dedup(
     from pyspark.sql import Window
 
     toks = ensure_parallelism(docs).select(
-        F.col(id_col),
+        F.col(DOC_ID),
         F.posexplode(
-            F.split(normalized_text(F.col(text_col)), " ")
+            F.split(normalized_text(F.col(TEXT)), " ")
         ).alias("pos", "tok"),
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy(DOC_ID).orderBy("pos")
     parts = [F.col("tok")] + [
         F.lead("tok", i).over(w) for i in range(1, span)
     ]
     base = toks.select(
-        F.col(id_col),
+        F.col(DOC_ID),
         "pos",
         "tok",
         F.when(
@@ -1949,15 +1798,15 @@ def substring_dedup(
     dup = (
         base.filter(F.col("gh").isNotNull())
         .groupBy("gh")
-        .agg(F.count_distinct(F.col(id_col)).alias("nd"))
-        .filter(F.col("nd") >= min_docs)
+        .agg(F.count_distinct(F.col(DOC_ID)).alias("nd"))
+        .filter(F.col("nd") >= MIN_DOCS)
         .select("gh", F.lit(1).alias("ds"))
     )
     cov_w = (
-        Window.partitionBy(id_col).orderBy("pos").rowsBetween(-(span - 1), 0)
+        Window.partitionBy(DOC_ID).orderBy("pos").rowsBetween(-(span - 1), 0)
     )
     covered = base.join(dup, "gh", "left").select(
-        F.col(id_col),
+        F.col(DOC_ID),
         "pos",
         "tok",
         F.max("ds").over(cov_w).alias("cov"),
@@ -1965,7 +1814,7 @@ def substring_dedup(
     kept_struct = F.when(
         F.col("cov").isNull(), F.struct(F.col("pos"), F.col("tok"))
     )
-    return covered.groupBy(id_col).agg(
+    return covered.groupBy(DOC_ID).agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.count("cov").alias("n_removed"),
         F.md5(
@@ -1985,14 +1834,7 @@ LSH_PARAM_CONFIGS: tuple[tuple[int, int], ...] = (
 )
 
 
-def lsh_near_dup_tuned(
-    docs: DataFrame,
-    recall_floor_ppm: int = 950_000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = MINHASH_NUM_HASHES,
-    ngram: int = 3,
-) -> DataFrame:
+def lsh_near_dup_tuned(docs: DataFrame) -> DataFrame:
     """Advisor-EXECUTING banding — closes the lsh_param_advisor loop
     the way sorted_rewrite closes the maintenance advisors': the
     S-curve recommendation is computed, picked, and run inside one
@@ -2001,7 +1843,7 @@ def lsh_near_dup_tuned(
 
     Decision rule (deterministic, 5-row relation): among the b·r = 16
     splits, take the CHEAPEST config whose analytic catch probability
-    at s = 0.7 meets `recall_floor_ppm` — minimal
+    at s = 0.7 meets RECALL_FLOOR_PPM — minimal
     expected_caught_pairs ≈ minimal candidate-verification volume —
     falling back to the max-recall config if none qualifies; ties
     break on bands ascending. The pick stays a broadcast 1-row
@@ -2031,18 +1873,14 @@ def lsh_near_dup_tuned(
     """
     # signature and marks from the one signature pass, shared by the
     # advisor's candidate chain and the tuned key construction below
-    shared_wide, marked, _ = _fused_wide_and_marks(
-        docs, text_col, id_col, num_hashes, ngram
-    )
-    adv = lsh_param_advisor(
-        docs, text_col, id_col, wide=shared_wide, marked=marked
-    )
+    shared_wide, marked, _ = _fused_wide_and_marks(docs)
+    adv = lsh_param_advisor(docs, wide=shared_wide, marked=marked)
     # three consumers of the 1-row pick
     pick = materialize(
         adv.orderBy(
-            F.expr(f"catch_at_70_ppm >= {recall_floor_ppm}").desc(),
+            F.expr(f"catch_at_70_ppm >= {RECALL_FLOOR_PPM}").desc(),
             F.expr(
-                f"CASE WHEN catch_at_70_ppm >= {recall_floor_ppm}"
+                f"CASE WHEN catch_at_70_ppm >= {RECALL_FLOOR_PPM}"
                 " THEN expected_caught_pairs ELSE -catch_at_70_ppm END"
             ).asc(),
             F.col("bands").asc(),
@@ -2052,11 +1890,11 @@ def lsh_near_dup_tuned(
     )
 
     # the shared mark relation, consumed by star AND keep filter
-    star = marked.filter(F.col(id_col) != F.col("__keep")).select(
-        F.col("__keep").alias("doc_a"), F.col(id_col).alias("doc_b")
+    star = marked.filter(F.col(DOC_ID) != F.col("__keep")).select(
+        F.col("__keep").alias("doc_a"), F.col(DOC_ID).alias("doc_b")
     )
-    keep_ids = marked.filter(F.col(id_col) == F.col("__keep")).select(id_col)
-    wide = shared_wide.join(keep_ids, id_col, "semi")
+    keep_ids = marked.filter(F.col(DOC_ID) == F.col("__keep")).select(DOC_ID)
+    wide = shared_wide.join(keep_ids, DOC_ID, "semi")
     # ONE parsed array-of-named_struct expression (the 31-struct
     # column-builder form cost ~2s of py4j round trips per build)
     key_structs = F.expr(
@@ -2077,11 +1915,11 @@ def lsh_near_dup_tuned(
         )
     )
     keys = (
-        wide.select(F.col(id_col), F.explode(key_structs).alias("k"))
-        .select(id_col, "k.bands", "k.rows_per_band", "k.band", "k.band_key")
+        wide.select(F.col(DOC_ID), F.explode(key_structs).alias("k"))
+        .select(DOC_ID, "k.bands", "k.rows_per_band", "k.band", "k.band_key")
         .join(F.broadcast(pick), ["bands", "rows_per_band"])
     )
-    pairs = _bucket_pairs(keys, id_col)
+    pairs = _bucket_pairs(keys, DOC_ID)
     star_pairs = star.crossJoin(F.broadcast(pick)).select(
         "doc_a",
         "doc_b",
@@ -2093,8 +1931,6 @@ def lsh_near_dup_tuned(
 
 def lsh_param_advisor(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     wide: DataFrame | None = None,
     marked: DataFrame | None = None,
 ) -> DataFrame:
@@ -2121,9 +1957,7 @@ def lsh_param_advisor(
     expected_caught_pairs, catch_at_50_ppm, catch_at_70_ppm,
     catch_at_90_ppm).
     """
-    hist = jaccard_threshold_histogram(
-        docs, text_col, id_col, wide=wide, marked=marked
-    )
+    hist = jaccard_threshold_histogram(docs, wide=wide, marked=marked)
     cfg = F.expr(
         "explode(array({}))".format(
             ", ".join(
@@ -2179,13 +2013,7 @@ def lsh_param_advisor(
     return analytic
 
 
-def minhash_estimator_audit(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = MINHASH_NUM_HASHES,
-    ngram: int = 3,
-) -> DataFrame:
+def minhash_estimator_audit(docs: DataFrame) -> DataFrame:
     """Estimator-calibration audit for the MinHash pipeline: for every
     candidate pair the production banding surfaces, the SKETCHED
     Jaccard (matching signature coordinates ÷ num_hashes — the
@@ -2216,24 +2044,22 @@ def minhash_estimator_audit(
     # estimate side needs the signature relation anyway, so the
     # candidate generator must not pay the shingle+hash+min-agg pass
     # a second time. Signature and marks: the one signature pass.
-    wide, marked, _ = _fused_wide_and_marks(
-        docs, text_col, id_col, num_hashes, ngram
-    )
+    wide, marked, _ = _fused_wide_and_marks(docs)
     pairs = materialize(minhash_candidate_pairs(
-        docs, text_col, id_col, num_hashes, bands=4, ngram=ngram,
+        docs, bands=4,
         wide=wide, marked=marked,
     ))
     wa = wide.select(
-        F.col(id_col).alias("doc_a"),
-        *[F.col(f"h{s}").alias(f"a{s}") for s in range(num_hashes)],
+        F.col(DOC_ID).alias("doc_a"),
+        *[F.col(f"h{s}").alias(f"a{s}") for s in range(MINHASH_NUM_HASHES)],
     )
     wb = wide.select(
-        F.col(id_col).alias("doc_b"),
-        *[F.col(f"h{s}").alias(f"b{s}") for s in range(num_hashes)],
+        F.col(DOC_ID).alias("doc_b"),
+        *[F.col(f"h{s}").alias(f"b{s}") for s in range(MINHASH_NUM_HASHES)],
     )
     matches_sql = " + ".join(
         f"(CASE WHEN a{s} = b{s} THEN 1 ELSE 0 END)"
-        for s in range(num_hashes)
+        for s in range(MINHASH_NUM_HASHES)
     )
     # LEFT joins: a star pair of byte-identical sub-shingle-length
     # docs has no signature rows at all — by definition its sketch
@@ -2250,21 +2076,21 @@ def minhash_estimator_audit(
             F.expr(
                 f"CASE WHEN a0 IS NULL OR b0 IS NULL"
                 f" THEN CAST(1000000 AS BIGINT)"
-                f" ELSE 1000000 * ({matches_sql}) DIV {num_hashes} END"
+                f" ELSE 1000000 * ({matches_sql}) DIV {MINHASH_NUM_HASHES} END"
             )
             .cast("long")
             .alias("est_jaccard_ppm"),
         )
     )
     grams = materialize(
-        word_ngram_rows(docs, text_col, id_col, ngram)
+        word_ngram_rows(docs)
         .distinct()
     )
-    sizes = grams.groupBy(id_col).agg(
+    sizes = grams.groupBy(DOC_ID).agg(
         F.count(F.lit(1)).cast("long").alias("n_grams")
     )
-    ga = grams.select(F.col(id_col).alias("doc_a"), "gram")
-    gb = grams.select(F.col(id_col).alias("doc_b"), "gram")
+    ga = grams.select(F.col(DOC_ID).alias("doc_a"), "gram")
+    gb = grams.select(F.col(DOC_ID).alias("doc_b"), "gram")
     # Tagged-union fold (the quality_psi_drift / ngram_jaccard_pairs
     # idiom): every per-pair contribution — the estimate row, each
     # side's shingle-set size, each matched shingle — lands as a
@@ -2293,7 +2119,7 @@ def minhash_estimator_audit(
         .unionByName(tag(
             spine.join(
                 sizes.select(
-                    F.col(id_col).alias("doc_a"),
+                    F.col(DOC_ID).alias("doc_a"),
                     F.col("n_grams").alias("size_a"),
                 ),
                 "doc_a",
@@ -2303,7 +2129,7 @@ def minhash_estimator_audit(
         .unionByName(tag(
             spine.join(
                 sizes.select(
-                    F.col(id_col).alias("doc_b"),
+                    F.col(DOC_ID).alias("doc_b"),
                     F.col("n_grams").alias("size_b"),
                 ),
                 "doc_b",

@@ -42,6 +42,9 @@ from iceberg_diag_spark.functions.cost import (
     SCAN_OVERHEAD_SQL,
 )
 
+# The column the operators below read.
+TABLE_NAME = "table_name"
+
 # Display order + reference display names (table_metric.py:9-18).
 METRICS = [
     ("FULL_SCAN_OVERHEAD", "Full Scan Overhead"),
@@ -102,27 +105,19 @@ def _before_exprs(size_col: str, content_col: str, *extra: str) -> list:
     ]
 
 
-def partition_stats(
-    files: DataFrame,
-    partition_col: str = "partition_key",
-    size_col: str = "file_size_in_bytes",
-    content_col: str = "content",
-) -> DataFrame:
+def partition_stats(files: DataFrame) -> DataFrame:
     """Per-partition BEFORE aggregates — one shuffle, map-side combine.
 
     Columns out: partition_key, file_count, total_size, scan_overhead,
     data_file_count, data_size (``_BEFORE_SQL``).
     """
-    return files.groupBy(F.col(partition_col).alias("partition_key")).agg(
-        *_before_exprs(size_col, content_col)
+    return files.groupBy("partition_key").agg(
+        *_before_exprs("file_size_in_bytes", "content")
     )
 
 
 def partition_stats_with_after(
     files: DataFrame,
-    partition_col: str = "partition_key",
-    size_col: str = "file_size_in_bytes",
-    content_col: str = "content",
     table_col: str | None = None,
 ) -> DataFrame:
     """BEFORE stats fused with simulated-compaction AFTER stats.
@@ -154,12 +149,11 @@ def partition_stats_with_after(
     here every table's metadata is one unioned relation and Spark
     schedules all tables' partitions as one job).
     """
-    group_cols = ([table_col] if table_col else []) + [partition_col]
-    out_keys = group_cols[:-1] + ["partition_key"]
+    group_cols = ([table_col] if table_col else []) + ["partition_key"]
     return files.groupBy(*group_cols).agg(
-        *_before_exprs(size_col, content_col, *_PACK_SQL)
+        *_before_exprs("file_size_in_bytes", "content", *_PACK_SQL)
     ).selectExpr(
-        *(f"CAST(`{c}` AS STRING) AS `{o}`" for c, o in zip(group_cols, out_keys)),
+        *(f"CAST(`{c}` AS STRING) AS `{c}`" for c in group_cols),
         *_BEFORE_COLS,
         *_AFTER_SQL,
     )
@@ -287,7 +281,6 @@ def table_metrics(files: DataFrame, manifest_files_count: int = 0) -> DataFrame:
 def multi_table_metrics(
     files: DataFrame,
     manifest_counts: DataFrame,
-    table_col: str = "table_name",
 ) -> DataFrame:
     """ALL tables' diagnostics in ONE Spark job (SURVEY §2 X1 as a
     unioned job instead of the reference's 10-thread pool): `files`
@@ -301,14 +294,14 @@ def multi_table_metrics(
     tables schedule as ordinary partitions of one job, not 1000
     sequential jobs.
     """
-    per_part = partition_stats_with_after(files, table_col=table_col)
+    per_part = partition_stats_with_after(files, table_col=TABLE_NAME)
     g = (
-        _aggregate_per_part(per_part, [table_col])
-        .join(F.broadcast(manifest_counts), table_col, "left")
+        _aggregate_per_part(per_part, [TABLE_NAME])
+        .join(F.broadcast(manifest_counts), TABLE_NAME, "left")
         .selectExpr(
             "*",
             "scan_overhead_sum + coalesce(manifest_count, 0)"
             f" * {MILLISECONDS_PER_SCAN} AS full_scan_overhead",
         )
     )
-    return _nine_metric_rows(g, [table_col])
+    return _nine_metric_rows(g, [TABLE_NAME])

@@ -14,6 +14,11 @@ from pyspark.sql.window import Window, WindowSpec
 
 from iceberg_diag_spark.functions.parallel import ensure_parallelism, materialize
 
+# Columns and tuning constants of the operators below.
+EVENT_ID = "event_id"
+KEY_COLS = ("user_id", "event_type")
+LAG_MONTHS = 12
+
 SESSION_GAP_MINUTES = 30
 
 
@@ -45,17 +50,18 @@ def _session_start(gap_minutes: int) -> tuple[Column, WindowSpec]:
     return F.when(gap.isNull() | (gap > gap_us), 1).otherwise(0), w
 
 
-def sessionize(events: DataFrame, gap_minutes: int = SESSION_GAP_MINUTES) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessionization (batch): a new session starts when
     the gap to the previous event of the same user exceeds
-    `gap_minutes`. Output: one row per session with bounds and count.
+    SESSION_GAP_MINUTES. Output: one row per session with bounds and
+    count.
 
     Two stacked windows over the SAME partitioning (user_id, ordered
     by ts) — Spark plans them as one shuffle + one sort, then the
     session rollup reuses the user_id shuffle. Skew: a pathological
     single user's events still fit one task at metadata-ish rates;
     for adversarial skew pre-split by (user_id, day)."""
-    is_start, w = _session_start(gap_minutes)
+    is_start, w = _session_start(SESSION_GAP_MINUTES)
     flagged = events.select(
         "user_id", "event_id", F.col("ts"), is_start.alias("is_session_start")
     )
@@ -148,8 +154,8 @@ def retention_cohorts(events: DataFrame) -> DataFrame:
     )
 
 
-def user_event_paths(events: DataFrame, prefix_len: int = 5) -> DataFrame:
-    """Behavioral path mining: each user's first `prefix_len` event
+def user_event_paths(events: DataFrame) -> DataFrame:
+    """Behavioral path mining: each user's first 5 event
     types in time order, rolled up to (path, n_users, min_user_id) —
     the funnel-discovery table (which entry sequences actually occur,
     and how common each is).
@@ -165,7 +171,7 @@ def user_event_paths(events: DataFrame, prefix_len: int = 5) -> DataFrame:
         events.select(
             "user_id", "event_type", F.row_number().over(w).alias("rk")
         )
-        .filter(F.col("rk") <= prefix_len)
+        .filter(F.col("rk") <= 5)
     )
     paths = prefix.groupBy("user_id").agg(
         F.array_join(
@@ -184,12 +190,7 @@ def user_event_paths(events: DataFrame, prefix_len: int = 5) -> DataFrame:
     )
 
 
-def cdc_latest_rows(
-    events: DataFrame,
-    key_cols: tuple[str, str] = ("user_id", "event_type"),
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def cdc_latest_rows(events: DataFrame) -> DataFrame:
     """CDC latest-row-wins compaction: for every key, keep the newest
     version (by timestamp, id as the deterministic tie-break) and
     report how many superseded versions it shadows — the
@@ -198,21 +199,22 @@ def cdc_latest_rows(
     rn = 1 filter into a map-side WindowGroupLimit; the version count
     rides the same window, so one shuffle total).
 
-    Output: (*key_cols, last_event_id, last_value_cents, n_versions).
+    Output: (user_id, event_type, last_event_id, last_value_cents,
+    n_versions).
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.desc(ts_col), F.desc(id_col)
+    w = Window.partitionBy(*KEY_COLS).orderBy(
+        F.desc("ts"), F.desc(EVENT_ID)
     )
-    wcnt = Window.partitionBy(*key_cols)
+    wcnt = Window.partitionBy(*KEY_COLS)
     return (
         events.withColumn("__rn", F.row_number().over(w))
         .withColumn("__n", F.count(F.lit(1)).over(wcnt))
         .filter(F.col("__rn") == 1)
         .select(
-            *key_cols,
-            F.col(id_col).cast("long").alias("last_event_id"),
+            *KEY_COLS,
+            F.col(EVENT_ID).cast("long").alias("last_event_id"),
             F.floor(F.col("value") * 100).cast("long").alias("last_value_cents"),
             F.col("__n").cast("long").alias("n_versions"),
         )
@@ -362,11 +364,7 @@ def _lateness(events: DataFrame, n_shards: int = 32) -> DataFrame:
 WATERMARK_CANDIDATES_US = (1_000_000, 10_000_000, 60_000_000, 600_000_000)
 
 
-def watermark_advisor(
-    events: DataFrame,
-    candidates_us: tuple[int, ...] = WATERMARK_CANDIDATES_US,
-    n_shards: int = 32,
-) -> DataFrame:
+def watermark_advisor(events: DataFrame) -> DataFrame:
     """Watermark POLICY table — the decision disorder_audit's raw
     stats feed: for each (event_type, candidate watermark delay),
     exactly how many events `withWatermark(delay)` would drop
@@ -385,21 +383,21 @@ def watermark_advisor(
     Output: (event_type, watermark_us, n_events, n_dropped,
     drop_ppm).
     """
-    late = _lateness(events, n_shards)
+    late = _lateness(events)
     aggs = [F.count(F.lit(1)).cast("long").alias("n_events")]
-    for c in candidates_us:
+    for c in WATERMARK_CANDIDATES_US:
         aggs.append(
             F.sum(F.when(F.col("lateness_us") > c, 1).otherwise(0))
             .cast("long")
             .alias(f"d{c}")
         )
     g = late.groupBy("event_type").agg(*aggs)
-    stack_args = ", ".join(f"{c}L, d{c}" for c in candidates_us)
+    stack_args = ", ".join(f"{c}L, d{c}" for c in WATERMARK_CANDIDATES_US)
     return g.select(
         "event_type",
         "n_events",
         F.expr(
-            f"stack({len(candidates_us)}, {stack_args})"
+            f"stack({len(WATERMARK_CANDIDATES_US)}, {stack_args})"
             " AS (watermark_us, n_dropped)"
         ),
     ).select(
@@ -417,9 +415,7 @@ def watermark_advisor(
 
 def watermark_recommendation(
     events: DataFrame,
-    candidates_us: tuple[int, ...] = WATERMARK_CANDIDATES_US,
     target_ppm: int = 1_000,
-    n_shards: int = 32,
 ) -> DataFrame:
     """The advisor's DECISION: per event type, the smallest candidate
     watermark delay whose drop rate meets the target (drop_ppm <=
@@ -439,7 +435,7 @@ def watermark_recommendation(
     Output: (event_type, n_events, recommended_watermark_us,
     n_dropped, drop_ppm, meets_target).
     """
-    adv = watermark_advisor(events, candidates_us, n_shards)
+    adv = watermark_advisor(events)
     picked = F.struct("watermark_us", "n_dropped", "drop_ppm")
     g = adv.groupBy("event_type", "n_events").agg(
         F.min(
@@ -847,12 +843,7 @@ def user_activity_gini(events: DataFrame) -> DataFrame:
     )
 
 
-def seasonal_naive_eval(
-    orders: DataFrame,
-    lag_months: int = 12,
-    date_col: str = "o_orderdate",
-    price_col: str = "o_totalprice",
-) -> DataFrame:
+def seasonal_naive_eval(orders: DataFrame) -> DataFrame:
     """Forecast-baseline backtest: score the seasonal-naive
     predictor (this month's revenue = the same month last year) over
     the whole order history. Every forecasting effort starts here —
@@ -864,7 +855,7 @@ def seasonal_naive_eval(
     months-since-epoch (one hash aggregate on a ~tens-of-values key
     — AQE coalesces), predictions by a lag window over the BOUNDED
     month relation (|months| rows — metadata scale, the only window;
-    never over orders). Months without a lag-`lag_months`
+    never over orders). Months without a lag-LAG_MONTHS
     predecessor are excluded (no forecast exists). ape_ppm uses the
     actual as denominator, guarded for zero-revenue months. Output:
     (month_idx, year, month, rev_cents, pred_cents, abs_err_cents,
@@ -876,11 +867,11 @@ def seasonal_naive_eval(
         ensure_parallelism(orders)
         .select(
             (
-                (F.year(F.col(date_col)) - 1970) * 12
-                + F.month(F.col(date_col))
+                (F.year(F.col("o_orderdate")) - 1970) * 12
+                + F.month(F.col("o_orderdate"))
                 - 1
             ).cast("long").alias("month_idx"),
-            F.floor(F.col(price_col) * 100).cast("long").alias("__cents"),
+            F.floor(F.col("o_totalprice") * 100).cast("long").alias("__cents"),
         )
         .groupBy("month_idx")
         .agg(F.sum("__cents").cast("long").alias("rev_cents"))
@@ -888,18 +879,18 @@ def seasonal_naive_eval(
     w = Window.orderBy("month_idx")
     return (
         monthly.withColumn(
-            "pred_cents", F.lag("rev_cents", lag_months).over(w)
+            "pred_cents", F.lag("rev_cents", LAG_MONTHS).over(w)
         )
         .withColumn(
             "__gap",
             F.col("month_idx")
-            - F.lag("month_idx", lag_months).over(w),
+            - F.lag("month_idx", LAG_MONTHS).over(w),
         )
-        # the lag row must be EXACTLY lag_months back on the calendar
+        # the lag row must be EXACTLY LAG_MONTHS back on the calendar
         # (a sparse history would silently misalign the season)
         .filter(
             F.col("pred_cents").isNotNull()
-            & (F.col("__gap") == lag_months)
+            & (F.col("__gap") == LAG_MONTHS)
         )
         .select(
             "month_idx",
@@ -925,8 +916,6 @@ def gdpr_delete_simulation(
     events: DataFrame,
     forget_mod: int = 101,
     rows_per_file: int = 256,
-    id_col: str = "event_id",
-    user_col: str = "user_id",
 ) -> DataFrame:
     """Right-to-be-forgotten cost simulator: given a forget-set of
     users, what does a copy-on-write delete actually cost on the
@@ -949,8 +938,8 @@ def gdpr_delete_simulation(
     per_file = (
         ensure_parallelism(events)
         .select(
-            F.floor(F.col(id_col) / rows_per_file).alias("__file"),
-            (F.col(user_col) % forget_mod == 0)
+            F.floor(F.col(EVENT_ID) / rows_per_file).alias("__file"),
+            (F.col("user_id") % forget_mod == 0)
             .cast("long")
             .alias("__del"),
         )
@@ -1050,16 +1039,11 @@ def cdc_merge_apply(events: DataFrame) -> DataFrame:
     )
 
 
-def ewma_anomalies(
-    events: DataFrame,
-    shift_bits: int = 10,
-    spike_factor: int = 2,
-    min_count: int = 5,
-) -> DataFrame:
+def ewma_anomalies(events: DataFrame) -> DataFrame:
     """Sequential EWMA spike detector over the hourly event-rate
     series, per event type: an hour is anomalous when its count more
-    than `spike_factor`-times the exponentially-weighted baseline of
-    the PRECEDING hours (alpha=1/4), with a `min_count` floor so a
+    than 2 times the exponentially-weighted baseline of
+    the PRECEDING hours (alpha=1/4), with a floor of 5 events so a
     2-vs-1 blip never fires. The adaptive-baseline complement of
     events_hourly_anomalies (whose static p90 threshold cannot track
     load growth) and events_changepoint (which finds ONE level
@@ -1082,7 +1066,7 @@ def ewma_anomalies(
     Output per anomalous hour: (event_type, window_start,
     event_count, ewma_prev_scaled, spike_ppm).
     """
-    scale = 1 << shift_bits
+    scale = 1 << 10
     hourly = events.groupBy(
         F.col("event_type"),
         F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:00:00")
@@ -1105,8 +1089,8 @@ def ewma_anomalies(
         's', CASE WHEN acc.s < 0 THEN {scale} * x.c
                   ELSE (3 * acc.s + {scale} * x.c) DIV 4 END,
         'out', CASE
-          WHEN acc.s >= 0 AND {scale} * x.c > {spike_factor} * acc.s
-               AND x.c >= {min_count}
+          WHEN acc.s >= 0 AND {scale} * x.c > 2 * acc.s
+               AND x.c >= 5
           THEN array_append(acc.out, named_struct(
                  'ws', x.ws, 'c', cast(x.c as bigint),
                  'sp', acc.s,
@@ -1202,10 +1186,9 @@ def expectations_audit(events: DataFrame) -> DataFrame:
 def shuffle_skew_advisor(
     events: DataFrame,
     n_partitions: int = 32,
-    key: str = "user_id",
 ) -> DataFrame:
     """Pre-flight shuffle-skew diagnosis for a planned groupBy/join
-    on `key`: simulate hash partitioning into `n_partitions` reduce
+    on user_id: simulate hash partitioning into `n_partitions` reduce
     tasks with a portable hash (md5 of the key's decimal string —
     identical in any engine, unlike Murmur3 seeds) and report, per
     simulated partition, the row/key load and the salt factor that
@@ -1222,7 +1205,7 @@ def shuffle_skew_advisor(
     Output: (partition_id, n_rows, n_keys, max_key_rows,
     skew_ppm, recommended_salt), one row per non-empty partition.
     """
-    per_key = events.groupBy(F.col(key).alias("k")).agg(
+    per_key = events.groupBy(F.col("user_id").alias("k")).agg(
         F.count(F.lit(1)).alias("c")
     )
     part = F.expr(
@@ -1418,10 +1401,7 @@ def markov_attribution(events: DataFrame) -> DataFrame:
 SESSION_FUNNEL_STEPS: tuple[str, ...] = ("view", "click", "purchase")
 
 
-def session_funnel(
-    events: DataFrame,
-    gap_minutes: int = SESSION_GAP_MINUTES,
-) -> DataFrame:
+def session_funnel(events: DataFrame) -> DataFrame:
     """Ordered conversion funnel WITHIN sessions — the per-visit
     variant of events_funnel (which scopes steps to the whole user
     history, so a view on Monday "converts" a purchase on Friday):
@@ -1440,7 +1420,7 @@ def session_funnel(
     conversion_ppm) — conversion_ppm relative to ALL sessions.
     """
     s1, s2, s3 = SESSION_FUNNEL_STEPS
-    is_start, _ = _session_start(gap_minutes)
+    is_start, _ = _session_start(SESSION_GAP_MINUTES)
     flagged = events.select(
         "user_id",
         "event_id",
@@ -1514,16 +1494,16 @@ def session_funnel(
     )
 
 
-def dau_mau(events: DataFrame, window_days: int = 30) -> DataFrame:
+def dau_mau(events: DataFrame) -> DataFrame:
     """DAU/MAU engagement table with EXACT rolling distinct users —
     the product-analytics stickiness metric, which resists plain
     window functions because COUNT(DISTINCT) over a sliding range is
     not decomposable. The exact distributed shape: dedup to the
     (user, active-day) relation, then each active day COVERS the
-    next `window_days` days (explode of a bounded date sequence) and
+    next 30 days (explode of a bounded date sequence) and
     the rolling MAU is a plain distinct count per covered day —
     turning a sliding-distinct into two hash aggregates. Shuffle
-    volume is |user-days| · window_days of 12-byte rows, linear and
+    volume is |user-days| · 30 of 12-byte rows, linear and
     uniform; no user's history concentrates anywhere (compare the
     sketch alternative events_user_sketch_rollup, which trades
     exactness for one pass).
@@ -1542,7 +1522,7 @@ def dau_mau(events: DataFrame, window_days: int = 30) -> DataFrame:
         "user_id",
         F.explode(
             F.expr(
-                f"sequence(day, date_add(day, {window_days - 1}),"
+                "sequence(day, date_add(day, 29),"
                 " interval 1 day)"
             )
         ).alias("day"),

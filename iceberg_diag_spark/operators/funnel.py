@@ -216,19 +216,8 @@ def stage_flags(
 def corpus_build_funnel(
     docs: DataFrame,
     holdout_ppm: int = 100_000,
-    capacity_tokens: int = 256,
-    n_shards: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    stratum_col: str = "source",
 ) -> DataFrame:
-    staged4 = stage_flags(
-        docs,
-        holdout_ppm=holdout_ppm,
-        text_col=text_col,
-        id_col=id_col,
-        stratum_col=stratum_col,
-    )
+    staged4 = stage_flags(docs, holdout_ppm=holdout_ppm)
 
     # stages 0-4 in ONE aggregate over the per-doc flag relation,
     # unpivoted to funnel rows via stack (no per-stage re-aggregation)
@@ -269,12 +258,12 @@ def corpus_build_funnel(
     # pack stage rides the checkpointed counts — never re-tokenizes
     train_counts = staged4.filter(F.col("s4")).select(
         F.col("stratum").alias("source"),
-        F.pmod(F.col(id_col), F.lit(n_shards)).cast("long").alias("shard"),
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.pmod(F.col("doc_id"), F.lit(4)).cast("long").alias("shard"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         "n_tokens",
     )
     packed = (
-        packing.pack_sequences_from_counts(train_counts, capacity_tokens)
+        packing.pack_sequences_from_counts(train_counts)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.coalesce(F.sum("seq_tokens"), F.lit(0))
@@ -342,12 +331,7 @@ def release_assignments(
     return packing.pack_assign_from_counts(train, capacity_tokens)
 
 
-def corpus_release_manifest(
-    docs: DataFrame,
-    n_shards: int = RELEASE_N_SHARDS,
-    capacity_tokens: int = RELEASE_CAPACITY_TOKENS,
-    **kwargs,
-) -> DataFrame:
+def corpus_release_manifest(docs: DataFrame, **kwargs) -> DataFrame:
     """Per-shard release manifest — the dataset card's file-level
     half: for every shard of the executed release, how many docs and
     packed sequences it holds, its token mass, and an exact
@@ -364,9 +348,7 @@ def corpus_release_manifest(
     Output per shard: (shard, n_docs, n_seqs, n_tokens, members_xor,
     members_xor2).
     """
-    asg = release_assignments(
-        docs, n_shards=n_shards, capacity_tokens=capacity_tokens, **kwargs
-    )
+    asg = release_assignments(docs, **kwargs)
     return _manifest_agg(asg)
 
 
@@ -402,13 +384,7 @@ def _manifest_agg(
     )
 
 
-def corpus_release(
-    docs: DataFrame,
-    path: str,
-    n_shards: int = RELEASE_N_SHARDS,
-    capacity_tokens: int = RELEASE_CAPACITY_TOKENS,
-    **kwargs,
-) -> DataFrame:
+def corpus_release(docs: DataFrame, path: str, **kwargs) -> DataFrame:
     """Execute the release end-to-end: materialize the stage-5
     assignment relation as prunable shard=K parquet directories (the
     export_training_shards layout via sinks.write_assigned_shards)
@@ -416,7 +392,7 @@ def corpus_release(
     — so the returned manifest vouches for what actually landed on
     disk, not for the plan that was supposed to land there.
     """
-    _write_release(docs, path, n_shards, capacity_tokens, **kwargs)
+    _write_release(docs, path, **kwargs)
     return _manifest_agg(docs.sparkSession.read.parquet(path))
 
 
@@ -509,11 +485,6 @@ def release_neardup_reconcile(
     increments,
     release_path: str,
     sig_path: str,
-    num_hashes: int = dedup.MINHASH_NUM_HASHES,
-    bands: int = 4,
-    ngram: int = 3,
-    sig_buckets: int = RECONCILE_SIG_BUCKETS,
-    text_col: str = "text",
 ) -> DataFrame:
     """Cross-increment near-dup reconciliation for the INCREMENTAL
     release (closes the scoping contract corpus_release_stream
@@ -652,23 +623,14 @@ def release_neardup_reconcile(
         )
         surv = materialize(
             docs_b.join(released, "doc_id", "semi")
-            .select("doc_id", text_col)
+            .select("doc_id", "text")
         )
-        wide = dedup.minhash_signatures_wide(
-            surv, text_col=text_col, num_hashes=num_hashes, ngram=ngram
-        )
-        keys = dedup.minhash_band_keys(
-            surv,
-            text_col=text_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            ngram=ngram,
-            wide=wide,
-        ).join(
+        wide = dedup.minhash_signatures_wide(surv)
+        keys = dedup.minhash_band_keys(surv, wide=wide).join(
             surv.select(
                 "doc_id",
                 F.sha2(
-                    dedup.normalized_text(F.col(text_col)), 256
+                    dedup.normalized_text(F.col("text")), 256
                 ).alias("ch"),
             ),
             "doc_id",
@@ -681,10 +643,12 @@ def release_neardup_reconcile(
                 "band",
                 "band_key",
                 "ch",
-                hash_bucket(F.col("band_key"), sig_buckets).alias("sb"),
+                hash_bucket(
+                    F.col("band_key"), RECONCILE_SIG_BUCKETS
+                ).alias("sb"),
             ),
             f"{sig_path}/batch={b}",
-            sig_buckets,
+            RECONCILE_SIG_BUCKETS,
             shard_col="sb",
             order_cols=_SIG_ORDER,
         )
@@ -757,10 +721,8 @@ def release_retraction_apply(
     spark,
     pairs: DataFrame,
     release_path: str,
-    n_shards: int = RELEASE_N_SHARDS,
     min_shared_bands: int = 1,
     sig_path=_SIG_PATH_UNSET,
-    sig_buckets: int = RECONCILE_SIG_BUCKETS,
 ) -> DataFrame:
     """Advisor-EXECUTING pattern #9 — apply the retraction
     release_neardup_reconcile names: every cross-batch candidate pair
@@ -818,7 +780,7 @@ def release_retraction_apply(
     metadata-light pass over the release (the presence join + the
     per-(batch, shard) aggregate — counts, token sums, per-shard
     sequence counts and membership digests — collected at partition
-    granularity, bounded by #batches x n_shards, not by rows), then
+    granularity, bounded by #batches x RELEASE_N_SHARDS, not by rows), then
     one read + anti-join + write per AFFECTED shard only, then one
     re-aggregation pass over ONLY the rewritten shard directories
     (partition-pruned OR-predicate on the two partition columns).
@@ -883,7 +845,7 @@ def release_retraction_apply(
         eager=True,
     )
     # Partition-granularity decision rows: bounded by
-    # #batches x n_shards regardless of corpus size.
+    # #batches x RELEASE_N_SHARDS regardless of corpus size.
     affected = grp.filter(F.col("n_retracted") > 0).collect()
     by_batch: dict[int, list] = {}
     for r in affected:
@@ -896,7 +858,7 @@ def release_retraction_apply(
             "shard",
             retract.filter(F.col("batch") == b).select("doc_id"),
             [(r["shard"], r["n_docs"], r["n_retracted"]) for r in by_batch[b]],
-            n_shards,
+            RELEASE_N_SHARDS,
             _RELEASE_ORDER,
         )
     if sig_path is not None:
@@ -908,7 +870,7 @@ def release_retraction_apply(
             for r in retract.select("batch").distinct().collect()
         )
         _purge_signature_store(
-            spark, retract, sig_path, sig_batches, sig_buckets
+            spark, retract, sig_path, sig_batches, RECONCILE_SIG_BUCKETS
         )
     before = grp.groupBy("batch").agg(
         F.sum("n_docs").cast("long").alias("n_docs_before"),

@@ -19,15 +19,17 @@ from pyspark.sql import DataFrame, functions as F
 
 from iceberg_diag_spark.functions.parallel import materialize
 
+# Columns and tuning constants of the operators below.
+DAMPING = 0.85
+DOC_A = "doc_a"
+DOC_B = "doc_b"
+DOC_ID = "doc_id"
+
 
 def pagerank(
     nodes: DataFrame,
     edges: DataFrame,
-    id_col: str = "doc_id",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
     iterations: int = 10,
-    damping: float = 0.85,
 ) -> DataFrame:
     """Simplified PageRank on the undirected pair graph (each pair
     contributes both directions). Per round:
@@ -37,16 +39,16 @@ def pagerank(
     Dangling mass is NOT redistributed (isolated nodes settle at
     (1-d)/N) — the textbook simplification, chosen so the semantics
     are exactly mirrorable in the unrolled-SQL oracle. Output:
-    (id_col, pagerank) with rank rounded to 9 decimals.
+    (doc_id, pagerank) with rank rounded to 9 decimals.
     """
-    both = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    both = edges.select(F.col(DOC_A).alias("src"), F.col(DOC_B).alias("dst"))
     both = materialize(both.unionByName(
         both.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ), eager=True)
     deg = materialize(both.groupBy("src").agg(F.count("*").alias("deg")), eager=True)
-    node_ids = materialize(nodes.select(F.col(id_col).alias("node")), eager=True)
+    node_ids = materialize(nodes.select(F.col(DOC_ID).alias("node")), eager=True)
     n = node_ids.count()
-    base = (1.0 - damping) / n
+    base = (1.0 - DAMPING) / n
     ranks = node_ids.select("node", F.lit(1.0 / n).alias("rank"))
     for _ in range(iterations):
         contribs = (
@@ -64,19 +66,17 @@ def pagerank(
                 "node",
                 (
                     F.lit(base)
-                    + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+                    + F.lit(DAMPING) * F.coalesce(F.col("s"), F.lit(0.0))
                 ).alias("rank"),
             ),
             eager=True,
         )
     return ranks.select(
-        F.col("node").alias(id_col), F.round("rank", 9).alias("pagerank")
+        F.col("node").alias(DOC_ID), F.round("rank", 9).alias("pagerank")
     )
 
 
-def triangle_count(
-    edges: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b"
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle count over an oriented edge list (a < b on
     every edge — the near-dup pair convention). Orientation makes
     each triangle {a<b<c} countable exactly once as the join
@@ -85,10 +85,10 @@ def triangle_count(
     product. Duplicate-cluster density shows up as a triangle-to-edge
     ratio near its clique maximum. Output: one row
     (edge_count, triangle_count)."""
-    e = materialize(edges.select(a_col, b_col).distinct(), eager=True)
-    e1 = e.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    e2 = e.select(F.col(a_col).alias("b"), F.col(b_col).alias("c"))
-    e3 = e.select(F.col(a_col).alias("a"), F.col(b_col).alias("c"))
+    e = materialize(edges.select(DOC_A, DOC_B).distinct(), eager=True)
+    e1 = e.select(F.col(DOC_A).alias("a"), F.col(DOC_B).alias("b"))
+    e2 = e.select(F.col(DOC_A).alias("b"), F.col(DOC_B).alias("c"))
+    e3 = e.select(F.col(DOC_A).alias("a"), F.col(DOC_B).alias("c"))
     wedges = e1.join(e2, "b")
     triangles = wedges.join(e3, ["a", "c"])
     return e.agg(F.count(F.lit(1)).alias("edge_count")).crossJoin(
@@ -101,9 +101,6 @@ def kcore(
     edges: DataFrame,
     k: int = 2,
     rounds: int = 8,
-    id_col: str = "doc_id",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
 ) -> DataFrame:
     """k-core decomposition membership: the maximal subgraph where
     every node keeps ≥ k neighbors — the cluster-DENSITY signal the
@@ -121,10 +118,10 @@ def kcore(
     the peel has not stabilized after `rounds` (the last two rounds
     still differed) — near-dup graphs peel in a handful of rounds.
 
-    Output: (id_col, core_degree) for k-core members, core_degree =
+    Output: (doc_id, core_degree) for k-core members, core_degree =
     the node's degree within the final core.
     """
-    both = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    both = edges.select(F.col(DOC_A).alias("src"), F.col(DOC_B).alias("dst"))
     both = materialize(
         both.unionByName(
             both.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -132,7 +129,7 @@ def kcore(
         .distinct(),
         eager=True,
     )
-    surv = materialize(nodes.select(F.col(id_col).alias("node")), eager=True)
+    surv = materialize(nodes.select(F.col(DOC_ID).alias("node")), eager=True)
     # The peel is monotone (survivor sets only shrink), so an
     # unchanged count IS the fixpoint — running the remaining rounds
     # would be identity. Early exit keeps the result bit-identical
@@ -168,15 +165,10 @@ def kcore(
             f"k-core peel did not stabilize in {rounds} rounds — raise "
             "`rounds` for graphs beyond the near-dup regime"
         )
-    return final.select(F.col("src").alias(id_col), "core_degree")
+    return final.select(F.col("src").alias(DOC_ID), "core_degree")
 
 
-def source_modularity(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-) -> DataFrame:
+def source_modularity(docs: DataFrame) -> DataFrame:
     """Newman modularity of the SOURCE partition over the near-dup
     candidate graph — the one-number answer to "is duplication
     source-assortative?": intra-site boilerplate drives Q toward the
@@ -204,20 +196,18 @@ def source_modularity(
     """
     from iceberg_diag_spark.operators.dedup import minhash_candidate_pairs
 
-    pairs = materialize(minhash_candidate_pairs(
-        docs, text_col=text_col, id_col=id_col
-    ))
-    lab = docs.select(F.col(id_col), F.col(source_col).alias("src"))
+    pairs = materialize(minhash_candidate_pairs(docs))
+    lab = docs.select(F.col(DOC_ID), F.col("source").alias("src"))
     e = materialize(
         pairs.select("doc_a", "doc_b")
         .join(
-            lab.withColumnRenamed(id_col, "doc_a").withColumnRenamed(
+            lab.withColumnRenamed(DOC_ID, "doc_a").withColumnRenamed(
                 "src", "src_a"
             ),
             "doc_a",
         )
         .join(
-            lab.withColumnRenamed(id_col, "doc_b").withColumnRenamed(
+            lab.withColumnRenamed(DOC_ID, "doc_b").withColumnRenamed(
                 "src", "src_b"
             ),
             "doc_b",

@@ -25,40 +25,37 @@ Range join (time-bucketed):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     right_cols: tuple[str, ...] = (),
-    suffix: str = "_right",
     how: str = "inner",
 ) -> DataFrame:
     """For each left row, attach the latest right row of the same
-    `on` key with right_ts <= left_ts. Ties on equal ts attach the
+    `on` key whose ts is <= the left ts. Ties on equal ts attach the
     right row (right sorts before left at the same instant).
 
-    Returns all left columns plus `<right_ts><suffix>` and each of
-    `right_cols` suffixed. ``how='left'`` keeps unmatched left rows
+    Returns all left columns plus `ts_right` and each of
+    `right_cols` suffixed `_right`. ``how='left'`` keeps unmatched left rows
     with nulls; ``'inner'`` drops them (DuckDB ASOF JOIN parity).
     """
     payload = F.struct(
-        F.col(right_ts).alias("__ts"), *[F.col(c) for c in right_cols]
+        F.col("ts").alias("__ts"), *[F.col(c) for c in right_cols]
     )
     r = right.select(
         F.col(on).alias("__key"),
-        F.col(right_ts).alias("__ord"),
+        F.col("ts").alias("__ord"),
         F.lit(0).alias("__side"),
         payload.alias("__payload"),
     )
     left_cols = left.columns
     l = left.select(  # noqa: E741
         F.col(on).alias("__key"),
-        F.col(left_ts).alias("__ord"),
+        F.col("ts").alias("__ord"),
         F.lit(1).alias("__side"),
         F.lit(None).cast(r.schema["__payload"].dataType).alias("__payload"),
         *[F.col(c) for c in left_cols],
@@ -75,11 +72,11 @@ def asof_join(
     )
     out = matched.select(
         *left_cols,
-        F.col(f"__match.__ts").alias(f"{right_ts}{suffix}"),
-        *[F.col(f"__match.{c}").alias(f"{c}{suffix}") for c in right_cols],
+        F.col("__match.__ts").alias("ts_right"),
+        *[F.col(f"__match.{c}").alias(f"{c}_right") for c in right_cols],
     )
     if how == "inner":
-        out = out.filter(F.col(f"{right_ts}{suffix}").isNotNull())
+        out = out.filter(F.col("ts_right").isNotNull())
     elif how != "left":
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
     return out
@@ -90,13 +87,11 @@ def range_join_before(
     right: DataFrame,
     on: str,
     before_seconds: int,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     left_cols: tuple[str, ...] = (),
     right_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """All (left, right) pairs of the same key with
-    left_ts - before <= right_ts <= left_ts, via time bucketing.
+    left.ts - before <= right.ts <= left.ts, via time bucketing.
 
     Bucket width == the range span, so every qualifying right row is
     in the left row's bucket or the one before: the left side is
@@ -104,24 +99,23 @@ def range_join_before(
     (key, bucket) — no inequality join, no per-key cross product.
     """
     span_us = before_seconds * 1_000_000
-    l_us = F.unix_micros(F.col(left_ts))
-    r_us = F.unix_micros(F.col(right_ts))
+    ts_us = F.unix_micros(F.col("ts"))
 
     l = left.select(  # noqa: E741
         F.col(on).alias("__key"),
-        l_us.alias("__l_us"),
+        ts_us.alias("__l_us"),
         F.explode(
             F.array(
-                F.floor(l_us / span_us).cast("long"),
-                (F.floor(l_us / span_us) - 1).cast("long"),
+                F.floor(ts_us / span_us).cast("long"),
+                (F.floor(ts_us / span_us) - 1).cast("long"),
             )
         ).alias("__bucket"),
         *[F.col(c).alias(f"l_{c}") for c in left_cols],
     )
     r = right.select(
         F.col(on).alias("__key"),
-        r_us.alias("__r_us"),
-        F.floor(r_us / span_us).cast("long").alias("__bucket"),
+        ts_us.alias("__r_us"),
+        F.floor(ts_us / span_us).cast("long").alias("__bucket"),
         *[F.col(c).alias(f"r_{c}") for c in right_cols],
     )
     pairs = l.join(r, ["__key", "__bucket"]).filter(

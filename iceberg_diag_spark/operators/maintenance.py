@@ -157,14 +157,14 @@ def snapshot_retention(
 ZORDER_BITS = 8
 
 
-def morton_z(x: Column, y: Column, bits: int = ZORDER_BITS) -> Column:
-    """Morton (z-order) interleave of two ``bits``-bit non-negative
+def morton_z(x: Column, y: Column) -> Column:
+    """Morton (z-order) interleave of two ZORDER_BITS-bit non-negative
     ints: bit i of x lands at position 2i, bit i of y at 2i+1. Pure
     shift/mask arithmetic — folds into whole-stage codegen, and the
     identical expression runs in any SQL engine with shift operators
     (see ``morton_sql``)."""
     terms = []
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         terms.append(F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i))
         terms.append(
             F.shiftleft(F.shiftright(y, i).bitwiseAND(F.lit(1)), 2 * i + 1)
@@ -173,22 +173,17 @@ def morton_z(x: Column, y: Column, bits: int = ZORDER_BITS) -> Column:
     return reduce(lambda a, b: a + b, terms)
 
 
-def morton_sql(x: str, y: str, bits: int = ZORDER_BITS) -> str:
+def morton_sql(x: str, y: str) -> str:
     """The same Morton interleave as ``morton_z`` rendered as ANSI SQL
     (DuckDB oracle side)."""
     terms = []
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)
 
 
-def zorder_layout(
-    files: DataFrame,
-    x_col: str = "x",
-    y_col: str = "y",
-    bucket_shift: int = 10,
-) -> DataFrame:
+def zorder_layout(files: DataFrame) -> DataFrame:
     """Z-order clustering layout plan (the "rewrite with sort order"
     remediation): assign each file a Morton code over two clustering
     dimensions, bucket by the code's high bits, and report per-bucket
@@ -198,19 +193,19 @@ def zorder_layout(
     locality (range queries on either dimension touch few buckets).
     Zero-shuffle projection + one hash-aggregate on the bucket key.
     """
-    z = morton_z(F.col(x_col).cast("int"), F.col(y_col).cast("int"))
+    z = morton_z(F.col("x").cast("int"), F.col("y").cast("int"))
     return (
         files.withColumn("z", z.cast("long"))
-        .groupBy((F.col("z") / F.lit(2**bucket_shift)).cast("long").alias("zbucket"))
+        .groupBy((F.col("z") / F.lit(2**10)).cast("long").alias("zbucket"))
         .agg(
             F.count("*").cast("long").alias("file_count"),
             F.sum("file_size_in_bytes").cast("long").alias("total_bytes"),
             F.min("z").cast("long").alias("min_z"),
             F.max("z").cast("long").alias("max_z"),
-            F.min(x_col).cast("long").alias("min_x"),
-            F.max(x_col).cast("long").alias("max_x"),
-            F.min(y_col).cast("long").alias("min_y"),
-            F.max(y_col).cast("long").alias("max_y"),
+            F.min("x").cast("long").alias("min_x"),
+            F.max("x").cast("long").alias("max_x"),
+            F.min("y").cast("long").alias("min_y"),
+            F.max("y").cast("long").alias("max_y"),
         )
     )
 
@@ -218,15 +213,13 @@ def zorder_layout(
 MANIFEST_SMALL_BYTES = 200_000
 
 
-def manifest_stats(
-    manifests: DataFrame, small_bytes: int = MANIFEST_SMALL_BYTES
-) -> DataFrame:
+def manifest_stats(manifests: DataFrame) -> DataFrame:
     """Manifest-layer diagnostics (the ``rewrite_manifests``
     remediation signal): per (partition_spec_id, content) — data vs
     delete manifests — the manifest count, total metadata bytes,
     total tracked entries (added + existing), entries-per-manifest
     density, and how many manifests are "small" (below
-    ``small_bytes``). Many small, sparse manifests mean every query
+    MANIFEST_SMALL_BYTES). Many small, sparse manifests mean every query
     plan pays a long metadata scan: the fix is one manifest rewrite,
     and this table says where.
 
@@ -244,7 +237,7 @@ def manifest_stats(
         F.sum("length").cast("long").alias("total_manifest_bytes"),
         F.sum(entries).cast("long").alias("total_entries"),
         F.sum("deleted_data_files_count").cast("long").alias("deleted_entries"),
-        F.sum(F.when(F.col("length") < small_bytes, 1).otherwise(0))
+        F.sum(F.when(F.col("length") < MANIFEST_SMALL_BYTES, 1).otherwise(0))
         .cast("long")
         .alias("small_manifests"),
     )
@@ -485,18 +478,14 @@ def sorted_after_stats(pre: DataFrame, rows_per_file: int) -> DataFrame:
     )
 
 
-def partition_advisor(
-    column_values: DataFrame,
-    buckets: int = 16,
-    truncate_width: int = 1024,
-) -> DataFrame:
+def partition_advisor(column_values: DataFrame) -> DataFrame:
     """Partition-spec advisor — the partition-evolution companion of
     clustering_advisor (which ranks SORT columns; this ranks
     PARTITION transforms): for each candidate column simulate the
-    two standard Iceberg partition transforms — bucket(N) (proxied
+    two standard Iceberg partition transforms — bucket(16) (proxied
     with a positive mod; real Iceberg buckets by murmur3, which only
     permutes bucket assignment, not the size distribution of a mod
-    over well-spread keys) and truncate(W) — and report the
+    over well-spread keys) and truncate(1024) — and report the
     partition-count / row-balance each would produce. A transform
     whose skew_ppm is high concentrates writes and scans in few
     partitions; one whose n_parts explodes shreds the table into
@@ -515,11 +504,11 @@ def partition_advisor(
     assigned = column_values.select(
         "col_name",
         F.expr(
-            f"stack(2, "
-            f"'bucket{buckets}', pmod(v, {buckets}), "
-            f"'truncate{truncate_width}', "
-            f"CAST(floor(v / {truncate_width}.0) AS LONG)"
-            f") AS (transform, pk)"
+            "stack(2, "
+            "'bucket16', pmod(v, 16), "
+            "'truncate1024', "
+            "CAST(floor(v / 1024.0) AS LONG)"
+            ") AS (transform, pk)"
         ),
     )
     per_part = assigned.groupBy("col_name", "transform", "pk").agg(
@@ -598,12 +587,7 @@ def file_skew_audit(files: DataFrame) -> DataFrame:
     )
 
 
-def bloom_advisor(
-    column_values: DataFrame,
-    probe_mod: int = 97,
-    file_col: str = "file_id",
-    value_col: str = "v",
-) -> DataFrame:
+def bloom_advisor(column_values: DataFrame) -> DataFrame:
     """Bloom-filter benefit simulator for point lookups — the
     companion to clustering_advisor's range-skipping story. Min/max
     bounds prune a file only when the probed value falls OUTSIDE
@@ -615,7 +599,7 @@ def bloom_advisor(
     pruning admits vs how many genuinely contain the key — the
     difference is the I/O a bloom filter would save, per probe.
 
-    Probes are the deterministic 1/probe_mod key sample (v % mod =
+    Probes are the deterministic 1/97 key sample (v % 97 =
     0) — bounded, broadcast. The min/max admission test is a
     broadcast non-equi join of the PROBE PANEL against the per-file
     bounds relation (metadata scale × bounded panel — the documented
@@ -630,14 +614,14 @@ def bloom_advisor(
     # column-pruned scan + cast only, which parallel stages recompute
     # for free locally while a barrier read +8-25% here (two A/B pairs)
     vals = column_values.select(
-        F.col(file_col).alias("file_id"),
-        F.col(value_col).cast("long").alias("v"),
+        "file_id",
+        F.col("v").cast("long").alias("v"),
     )
     fstats = vals.groupBy("file_id").agg(
         F.min("v").alias("lo"), F.max("v").alias("hi")
     )
     probes = (
-        vals.filter(F.col("v") % probe_mod == 0)
+        vals.filter(F.col("v") % 97 == 0)
         .select(F.col("v").alias("probe_key"))
         .distinct()
     )

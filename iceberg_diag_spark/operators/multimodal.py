@@ -24,34 +24,38 @@ from pyspark.sql import DataFrame, functions as F
 
 from iceberg_diag_spark.functions.parallel import ensure_parallelism, materialize
 
+# Columns and tuning constants of the operators below.
+BUCKET_WIDTH = 32
+DOC_ID = "doc_id"
+
 FRAME_BYTES = 64          # video "frame" granularity in the fake codec
 FEATURE_DIM = 16          # decoded feature-vector width
 MEDIA_TYPES = ("image", "audio", "video")
 
 
-def with_media(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def with_media(docs: DataFrame) -> DataFrame:
     """Attach the multimodal column pair: `payload` (opaque binary)
     and `meta` (typed metadata struct), plus a `media_type` tag.
     Everything is a JVM-side expression — no Python in this path, so
     at 100 TB the scan→project stays in whole-stage codegen."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     byte_len = F.length(payload).cast("long")
     media_type = F.element_at(
         F.array(*[F.lit(t) for t in MEDIA_TYPES]),
-        (F.pmod(F.col(id_col), F.lit(3)) + 1).cast("int"),
+        (F.pmod(F.col(DOC_ID), F.lit(3)) + 1).cast("int"),
     )
     meta = F.struct(
         byte_len.alias("byte_len"),
-        (32 + F.pmod(F.col(id_col) * 7, F.lit(480))).cast("int").alias("width"),
-        (32 + F.pmod(F.col(id_col) * 13, F.lit(360))).cast("int").alias("height"),
+        (32 + F.pmod(F.col(DOC_ID) * 7, F.lit(480))).cast("int").alias("width"),
+        (32 + F.pmod(F.col(DOC_ID) * 13, F.lit(360))).cast("int").alias("height"),
         F.element_at(
             F.array(F.lit(8000), F.lit(16000), F.lit(44100)),
-            (F.pmod(F.col(id_col), F.lit(3)) + 1).cast("int"),
+            (F.pmod(F.col(DOC_ID), F.lit(3)) + 1).cast("int"),
         ).alias("sample_rate"),
         F.ceil(byte_len / FRAME_BYTES).cast("int").alias("n_frames"),
     )
     return docs.select(
-        F.col(id_col),
+        F.col(DOC_ID),
         media_type.alias("media_type"),
         payload.alias("payload"),
         meta.alias("meta"),
@@ -132,7 +136,7 @@ def frame_sample(media: DataFrame, every_k: int = 4) -> DataFrame:
     )
 
 
-def byte_histogram(media: DataFrame, bucket_width: int = 32) -> DataFrame:
+def byte_histogram(media: DataFrame) -> DataFrame:
     """Byte-value histogram per item via mapInPandas (vectorized
     numpy inside the worker): emits (doc_id, bucket, byte_count) rows.
     The exploded-rows layout keeps the result joinable/aggregable and
@@ -140,14 +144,14 @@ def byte_histogram(media: DataFrame, bucket_width: int = 32) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    n_buckets = 256 // bucket_width
+    n_buckets = 256 // BUCKET_WIDTH
 
     def hist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, buckets, counts = [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                c = np.bincount(arr // bucket_width, minlength=n_buckets)
+                c = np.bincount(arr // BUCKET_WIDTH, minlength=n_buckets)
                 nz = np.nonzero(c)[0]
                 ids.extend([doc_id] * len(nz))
                 buckets.extend(nz.tolist())
@@ -316,7 +320,7 @@ def shard_plan(
     )
 
 
-def frame_dedup(media: DataFrame, every_k: int = 1) -> DataFrame:
+def frame_dedup(media: DataFrame) -> DataFrame:
     """Cross-item frame-level dedup: frames whose content hash
     repeats across DIFFERENT items — the shared-intro/outro/slate
     detector for video corpora (and watermark/test-card detector for
@@ -335,7 +339,7 @@ def frame_dedup(media: DataFrame, every_k: int = 1) -> DataFrame:
     example_doc_id, wasted_bytes) for hashes seen in ≥ 2 distinct
     items, wasted_bytes = bytes beyond the first occurrence.
     """
-    frames = frame_sample(media, every_k=every_k)
+    frames = frame_sample(media, every_k=1)
     return (
         frames.groupBy("frame_md5")
         .agg(
@@ -360,9 +364,7 @@ MEDIA_MAGIC: dict[str, str] = {
 }
 
 
-def media_integrity_audit(
-    media: DataFrame, magic: dict[str, str] = MEDIA_MAGIC
-) -> DataFrame:
+def media_integrity_audit(media: DataFrame) -> DataFrame:
     """Magic-byte integrity audit: does each payload's leading
     4 bytes match the signature its declared `media_type` promises?
     Mislabeled or truncated media is the classic silent failure of a
@@ -379,12 +381,12 @@ def media_integrity_audit(
     """
     header = F.substring(F.hex(F.col("payload")), 1, 8)
     expected = None
-    for t, h in magic.items():
+    for t, h in MEDIA_MAGIC.items():
         cond = F.when(F.col("media_type") == t, F.lit(h))
         expected = cond if expected is None else expected.when(
             F.col("media_type") == t, F.lit(h)
         )
-    # coalesce: a media_type absent from `magic` makes `expected`
+    # coalesce: a media_type absent from MEDIA_MAGIC makes `expected`
     # NULL ⇒ header == expected is NULL, which would count the row in
     # n_corrupt (otherwise-branch) yet exclude it from the
     # example_corrupt_id conditional min. Unknown types are uniformly
@@ -419,12 +421,7 @@ def media_integrity_audit(
     )
 
 
-def media_phash_near_dup(
-    media: DataFrame,
-    max_hamming: int = 1,
-    min_bytes: int = 16,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def media_phash_near_dup(media: DataFrame) -> DataFrame:
     """Perceptual-hash near-duplicate candidates over opaque media
     payloads — the dHash pipeline (difference hash: downsample,
     compare adjacent samples, band the bits, pair within bands) that
@@ -447,7 +444,7 @@ def media_phash_near_dup(
     bucket — 4 bands × 16 values; the self-join ships (id, fp) pairs
     only (16 bytes), never payloads; unordered pairs dedup once and
     Hamming-verify via xor+bit_count, all JVM. Payloads below
-    min_bytes are skipped (a 17-point sample of a shorter payload is
+    16 bytes are skipped (a 17-point sample of a shorter payload is
     noise). Output: (doc_a, doc_b, hamming), ordered.
     """
     fp_expr = (
@@ -461,15 +458,15 @@ def media_phash_near_dup(
     fps = materialize(
         ensure_parallelism(media)
         .select(
-            F.col(id_col),
+            F.col(DOC_ID),
             F.hex(F.col("payload")).alias("__hx"),
             F.length(F.col("payload")).cast("long").alias("__len"),
         )
-        .filter(F.col("__len") >= min_bytes)
-        .select(F.col(id_col), F.expr(fp_expr).alias("fp"))
+        .filter(F.col("__len") >= 16)
+        .select(F.col(DOC_ID), F.expr(fp_expr).alias("fp"))
     )
     bands = fps.select(
-        id_col,
+        DOC_ID,
         "fp",
         F.explode(
             F.expr(
@@ -478,12 +475,12 @@ def media_phash_near_dup(
                 "'b', cast(shiftright(fp, cast(4*t as int)) & 15 as int)))"
             )
         ).alias("tb"),
-    ).select(id_col, "fp", F.col("tb.t").alias("t"), F.col("tb.b").alias("b"))
+    ).select(DOC_ID, "fp", F.col("tb.t").alias("t"), F.col("tb.b").alias("b"))
     a = bands.select(
-        "t", "b", F.col(id_col).alias("doc_a"), F.col("fp").alias("fa")
+        "t", "b", F.col(DOC_ID).alias("doc_a"), F.col("fp").alias("fa")
     )
     b = bands.select(
-        "t", "b", F.col(id_col).alias("doc_b"), F.col("fp").alias("fb")
+        "t", "b", F.col(DOC_ID).alias("doc_b"), F.col("fp").alias("fb")
     )
     return (
         a.join(b, ["t", "b"])
@@ -497,17 +494,12 @@ def media_phash_near_dup(
             .cast("long")
             .alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 1)
         .orderBy("doc_a", "doc_b")
     )
 
 
-def crossmodal_dedup_agreement(
-    docs: DataFrame,
-    max_hamming: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def crossmodal_dedup_agreement(docs: DataFrame) -> DataFrame:
     """Cross-MODAL joint-dedup audit for multimodal records (doc +
     attached media payload): the Venn of TEXT near-dup candidate
     pairs (production MinHash-LSH banding) vs MEDIA near-dup
@@ -527,12 +519,6 @@ def crossmodal_dedup_agreement(
     """
     from iceberg_diag_spark.operators import dedup
 
-    tx = dedup.minhash_candidate_pairs(
-        docs, text_col=text_col, id_col=id_col
-    )
-    md = media_phash_near_dup(
-        with_media(docs, text_col=text_col, id_col=id_col),
-        max_hamming=max_hamming,
-        id_col=id_col,
-    )
+    tx = dedup.minhash_candidate_pairs(docs)
+    md = media_phash_near_dup(with_media(docs))
     return dedup._pair_agreement(tx, md, "text", "media")

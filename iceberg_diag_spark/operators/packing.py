@@ -66,7 +66,6 @@ def pack_sequences(
     docs: DataFrame,
     capacity_tokens: int = 256,
     n_shards: int = 4,
-    text_col: str = "text",
 ) -> DataFrame:
     """Pack documents into training sequences of <= capacity_tokens
     whitespace tokens (per (source, shard); shard = doc_id % n_shards).
@@ -79,7 +78,7 @@ def pack_sequences(
         "source",
         F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("long").alias("shard"),
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens"),
+        F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"),
     )
     return pack_sequences_from_counts(base, capacity_tokens)
 
@@ -180,12 +179,7 @@ def _pow2_bucket(n):
     return expr
 
 
-def padding_waste_audit(
-    docs: DataFrame,
-    batch_size: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def padding_waste_audit(docs: DataFrame, batch_size: int = 32) -> DataFrame:
     """Training-batch padding-waste audit: how many pad tokens does
     each batching policy burn? The efficiency counterpart of
     pack_sequences (which ELIMINATES padding by concatenation; many
@@ -210,7 +204,7 @@ def padding_waste_audit(
 
     # four consumers (the three policies, the global max)
     base = materialize(docs.select(
-        F.col(id_col), F.size(tokens(F.col(text_col))).cast("long").alias("n")
+        F.col("doc_id"), F.size(tokens(F.col("text"))).cast("long").alias("n")
     ))
 
     def _summary(strategy, padded_col_df):
@@ -239,7 +233,7 @@ def padding_waste_audit(
         "pow2_bucket", base.withColumn("padded", _pow2_bucket(F.col("n")))
     )
     batch_max = (
-        grouped_prefix_sum(base, [], ["n", id_col])
+        grouped_prefix_sum(base, [], ["n", "doc_id"])
         .withColumn("batch", F.floor(F.col("prefix") / batch_size).cast("long"))
         .groupBy("batch")
         .agg(

@@ -84,7 +84,7 @@ def profile(df: DataFrame, kinds: dict[str, str]) -> DataFrame:
     )
 
 
-def rfm_segments(orders: DataFrame, n_bins: int = 5) -> DataFrame:
+def rfm_segments(orders: DataFrame) -> DataFrame:
     """Customer RFM (recency / frequency / monetary) segmentation —
     the standard customer-value grid, computed with EXACT equal-count
     bins at any scale. Each customer is ranked on each dimension by
@@ -94,8 +94,8 @@ def rfm_segments(orders: DataFrame, n_bins: int = 5) -> DataFrame:
     Ties break on custkey, so the grid is bit-deterministic.
 
     Segment semantics: r_seg 1 = most recent purchasers (ascending
-    recency_days), f_seg/m_seg `n_bins` = most frequent / highest
-    spend. Output is the ≤ bins³ grid: (r_seg, f_seg, m_seg,
+    recency_days), f_seg/m_seg 5 = most frequent / highest
+    spend. Output is the ≤ 5³ grid: (r_seg, f_seg, m_seg,
     n_customers, monetary_cents_total).
 
     Money is floor-cents per order line before summing (the repo-wide
@@ -134,7 +134,7 @@ def rfm_segments(orders: DataFrame, n_bins: int = 5) -> DataFrame:
         (
             F.lit(1)
             + F.floor(
-                F.lit(float(n_bins)) * F.col(f"__{d}") / F.col(f"__{d}_total")
+                F.lit(5.0) * F.col(f"__{d}") / F.col(f"__{d}_total")
             )
         )
         .cast("long")
@@ -226,16 +226,14 @@ def part_affinity(
     )
 
 
-def benford_audit(
-    df: DataFrame, value_col: str, scale: int = 100
-) -> DataFrame:
+def benford_audit(df: DataFrame, value_col: str) -> DataFrame:
     """Benford first-digit audit over a positive numeric column — the
     classic fabricated/synthetic-data detector for financial and
     measurement fields: naturally occurring multiplicative amounts
     put digit d first with probability log10(1 + 1/d); uniform or
     hand-entered data does not.
 
-    Exactness: amounts quantize to integer units (floor ·scale) and
+    Exactness: amounts quantize to integer units (floor ·100) and
     the leading digit comes from the DECIMAL STRING of that integer
     (substring of a bigint cast — bit-identical on any engine; a
     float log10-of-value digit extraction would wobble at exact
@@ -248,7 +246,7 @@ def benford_audit(
     Output per leading digit 1–9: (digit, n_rows, observed_ppm,
     expected_ppm, delta_ppm).
     """
-    units = F.floor(F.col(value_col) * F.lit(scale)).cast("long")
+    units = F.floor(F.col(value_col) * F.lit(100)).cast("long")
     d = (
         ensure_parallelism(df)
         .filter(F.col(value_col) > 0)

@@ -22,6 +22,11 @@ from iceberg_diag_spark.functions.parallel import (
     materialize,
 )
 
+# Columns and tuning constants of the operators below.
+BUCKETS = 100
+DOC_ID = "doc_id"
+SOURCE = "source"
+
 
 def hash_bucket(key: Column, buckets: int = 100) -> Column:
     """Stable bucket in [0, buckets) from the md5 of the key's string
@@ -86,18 +91,13 @@ def membership_manifest(
     )
 
 
-def hash_sample(
-    df: DataFrame,
-    key_col: str,
-    pct: int,
-    buckets: int = 100,
-) -> DataFrame:
+def hash_sample(df: DataFrame, key_col: str, pct: int) -> DataFrame:
     """Keep rows whose hash bucket < pct — a deterministic ~pct%
     sample. Pure filter: pushes past everything Catalyst can push
     through, shuffles nothing."""
-    if not 0 <= pct <= buckets:
-        raise ValueError(f"pct must be in [0, {buckets}], got {pct}")
-    return df.filter(hash_bucket(F.col(key_col), buckets) < pct)
+    if not 0 <= pct <= BUCKETS:
+        raise ValueError(f"pct must be in [0, {BUCKETS}], got {pct}")
+    return df.filter(hash_bucket(F.col(key_col)) < pct)
 
 
 def split_assign(
@@ -105,16 +105,15 @@ def split_assign(
     key_col: str,
     val_pct: int = 5,
     test_pct: int = 5,
-    buckets: int = 100,
 ) -> DataFrame:
     """Deterministic train/val/test assignment from the key's hash
     bucket: [0, test) → test, [test, test+val) → val, rest → train.
     Same stability contract as hash_sample — a document's split never
     changes as the corpus grows, so eval sets stay frozen across
     snapshots. Pure projection: no shuffle, prunes/pushes freely."""
-    if val_pct + test_pct >= buckets:
+    if val_pct + test_pct >= BUCKETS:
         raise ValueError("val_pct + test_pct must leave room for train")
-    b = hash_bucket(F.col(key_col), buckets)
+    b = hash_bucket(F.col(key_col))
     return df.withColumn(
         "split",
         F.when(b < test_pct, F.lit("test"))
@@ -194,7 +193,6 @@ def stratified_hash_sample(
     rates: dict[str, int],
     strata_col: str,
     default_pct: int = 0,
-    buckets: int = 100,
 ) -> DataFrame:
     """Per-stratum sampling rates (e.g. rebalance languages: keep 10%
     of English, 100% of low-resource langs). `rates` maps stratum
@@ -202,10 +200,10 @@ def stratified_hash_sample(
     single deterministic filter — no shuffle, no per-stratum passes."""
     pct_col: Column = F.lit(default_pct)
     for value, pct in sorted(rates.items()):
-        if not 0 <= pct <= buckets:
-            raise ValueError(f"rate for {value!r} must be in [0, {buckets}]")
+        if not 0 <= pct <= BUCKETS:
+            raise ValueError(f"rate for {value!r} must be in [0, {BUCKETS}]")
         pct_col = F.when(F.col(strata_col) == value, pct).otherwise(pct_col)
-    return df.filter(hash_bucket(F.col(key_col), buckets) < pct_col)
+    return df.filter(hash_bucket(F.col(key_col)) < pct_col)
 
 
 def token_budget_waterfill(
@@ -279,14 +277,12 @@ def weighted_hash_sample(
     df: DataFrame,
     key_col: str,
     weight_col: str,
-    target_rate_ppm: int = 200_000,
-    buckets: int = 1_000_000,
 ) -> DataFrame:
     """Deterministic WEIGHTED Bernoulli sample: row i is kept iff
-    hash_bucket(key, 1e6) < min(1e6, floor(target_rate_ppm · w_i /
+    hash_bucket(key, 1e6) < min(1e6, floor(200000 · w_i /
     mean_w)) — inclusion probability proportional to weight (longer /
     higher-quality docs proportionally likelier), expected kept mass
-    ≈ target_rate_ppm of rows, and membership still a pure function
+    ≈ 20% of rows, and membership still a pure function
     of the key (reproducible on any engine, stable under partitioning,
     same row set every run — rand()-weighted sampling is none of
     those).
@@ -299,14 +295,14 @@ def weighted_hash_sample(
         F.avg(F.col(weight_col).cast("double")).alias("__mw")
     )
     thresh = F.least(
-        F.lit(float(buckets)),
+        F.lit(1_000_000.0),
         F.floor(
-            F.lit(float(target_rate_ppm)) * F.col(weight_col) / F.col("__mw")
+            F.lit(200_000.0) * F.col(weight_col) / F.col("__mw")
         ),
     )
     return (
         df.crossJoin(F.broadcast(mean_w))
-        .filter(hash_bucket(F.col(key_col), buckets) < thresh)
+        .filter(hash_bucket(F.col(key_col), 1_000_000) < thresh)
         .drop("__mw")
     )
 
@@ -317,12 +313,7 @@ CURRICULUM_BANDS = (
 )
 
 
-def curriculum_shards(
-    docs: DataFrame,
-    n_shards: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def curriculum_shards(docs: DataFrame, n_shards: int = 8) -> DataFrame:
     """Curriculum training-shard manifest: band every document by its
     quality-classifier score (high / mid / low — train easy-and-clean
     first, noisy last, the standard data-curriculum recipe), assign
@@ -344,11 +335,11 @@ def curriculum_shards(
     )
     from pyspark.sql.window import Window
 
-    scored = quality_classifier_score(docs, text_col, id_col).select(
-        id_col, "z_micro"
+    scored = quality_classifier_score(docs).select(
+        DOC_ID, "z_micro"
     )
     toks = docs.select(
-        F.col(id_col), F.size(tokens(F.col(text_col))).alias("n_tokens")
+        F.col(DOC_ID), F.size(tokens(F.col("text"))).alias("n_tokens")
     )
     band = F.when(
         F.col("z_micro") >= CURRICULUM_BANDS[0][1],
@@ -361,10 +352,10 @@ def curriculum_shards(
         F.col("band") == "mid", 1
     ).otherwise(2)
     assigned = (
-        scored.join(toks, id_col)
+        scored.join(toks, DOC_ID)
         .withColumn("band", band)
         .withColumn("band_rank", band_rank.cast("int"))
-        .withColumn("shard", hash_bucket(F.col(id_col), n_shards))
+        .withColumn("shard", hash_bucket(F.col(DOC_ID), n_shards))
     )
     g = assigned.groupBy("band", "band_rank", "shard").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -476,19 +467,11 @@ def exact_quota_holdout(
     )
 
 
-def data_mixing_plan(
-    df: DataFrame,
-    budget_num: int = 1,
-    budget_den: int = 2,
-    alpha: float = 0.5,
-    max_epochs_ppm: int = 4_000_000,
-    strata_col: str = "source",
-    weight_col: str = "n_chars",
-) -> DataFrame:
+def data_mixing_plan(df: DataFrame) -> DataFrame:
     """The release artifact a training run actually consumes: turn
     the temperature-weighted mixture (source_mixture_weights) into a
     concrete PER-SOURCE TOKEN PLAN for a fixed budget — here
-    budget = total_mass · budget_num/budget_den — and audit each
+    budget = total_mass · 1/2 — and audit each
     source's implied epoch count against the repeating-data rule
     (up-sampling a small domain past ~4 epochs stops helping and
     starts memorizing, hence the over_repeat flag; the planner's
@@ -507,17 +490,14 @@ def data_mixing_plan(
     """
     from pyspark.sql import Window
 
-    counts = df.groupBy(strata_col).agg(
-        F.sum(F.col(weight_col)).cast("long").alias("mass")
+    counts = df.groupBy(SOURCE).agg(
+        F.sum(F.col("n_chars")).cast("long").alias("mass")
     )
     everything = Window.partitionBy()
-    w_raw = F.pow(F.col("mass").cast("double"), F.lit(alpha))
-    budget = F.expr(
-        f"CAST(sum(mass) OVER () * {budget_num} DIV {budget_den}"
-        " AS BIGINT)"
-    )
+    w_raw = F.pow(F.col("mass").cast("double"), F.lit(0.5))
+    budget = F.expr("CAST(sum(mass) OVER () * 1 DIV 2 AS BIGINT)")
     planned = counts.select(
-        F.col(strata_col),
+        F.col(SOURCE),
         "mass",
         budget.alias("budget"),
         F.floor(
@@ -530,7 +510,7 @@ def data_mixing_plan(
         ).cast("long").alias("sample_share_ppm"),
     )
     return planned.select(
-        strata_col,
+        SOURCE,
         "mass",
         "tokens_alloc",
         "sample_share_ppm",
@@ -539,21 +519,13 @@ def data_mixing_plan(
             " AS BIGINT)"
         ).alias("epochs_ppm"),
         F.expr(
-            f"CAST(1000000 * tokens_alloc DIV greatest(mass, 1)"
-            f" AS BIGINT) > {max_epochs_ppm}"
+            "CAST(1000000 * tokens_alloc DIV greatest(mass, 1)"
+            " AS BIGINT) > 4000000"
         ).alias("over_repeat"),
     )
 
 
-def data_mixing_sample(
-    df: DataFrame,
-    budget_num: int = 1,
-    budget_den: int = 2,
-    alpha: float = 0.5,
-    strata_col: str = "source",
-    weight_col: str = "n_chars",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def data_mixing_sample(df: DataFrame) -> DataFrame:
     """EXECUTE the data_mixing_plan — advisor-executing pattern #4
     (after sorted_rewrite, the tuned LSH banding, and the watermark
     recommendation): turn each source's token allocation into a
@@ -578,25 +550,22 @@ def data_mixing_sample(
     """
     from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
 
-    plan = data_mixing_plan(
-        df, budget_num, budget_den, alpha,
-        strata_col=strata_col, weight_col=weight_col,
-    ).select(strata_col, "tokens_alloc")
+    plan = data_mixing_plan(df).select(SOURCE, "tokens_alloc")
     keyed = ensure_parallelism(df).select(
-        F.col(strata_col),
-        F.col(id_col),
-        F.col(weight_col).cast("long").alias("w"),
-        F.md5(F.col(id_col).cast("string")).alias("__k"),
+        F.col(SOURCE),
+        F.col(DOC_ID),
+        F.col("n_chars").cast("long").alias("w"),
+        F.md5(F.col(DOC_ID).cast("string")).alias("__k"),
     )
     pre = grouped_prefix_sum(
-        keyed, [strata_col], ["__k", id_col], ["w"], ["__prefix"]
+        keyed, [SOURCE], ["__k", DOC_ID], ["w"], ["__prefix"]
     )
     # null-safe: data_mixing_plan allocates to the NULL source too
-    chosen = join_null_safe(pre, F.broadcast(plan), [strata_col]).filter(
+    chosen = join_null_safe(pre, F.broadcast(plan), [SOURCE]).filter(
         F.col("__prefix") < F.col("tokens_alloc")
     )
     return (
-        chosen.groupBy(strata_col)
+        chosen.groupBy(SOURCE)
         .agg(
             F.max("tokens_alloc").cast("long").alias("tokens_alloc"),
             F.count(F.lit(1)).cast("long").alias("n_docs_selected"),

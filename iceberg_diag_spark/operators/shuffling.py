@@ -21,21 +21,22 @@ from pyspark.sql.window import Window
 
 from iceberg_diag_spark.functions.parallel import join_null_safe, materialize
 
+# The column the operators below read.
+DOC_ID = "doc_id"
 
-def epoch_shuffle(
-    docs: DataFrame, seed: str = "epoch-0", id_col: str = "doc_id"
-) -> DataFrame:
+
+def epoch_shuffle(docs: DataFrame, seed: str = "epoch-0") -> DataFrame:
     """Assign each row a deterministic global shuffle position for
     the given seed: a true permutation, reproducible from the seed,
     never funneled through one node. The total order is
     (shuffle_key, id): md5 keys are effectively unique, the id breaks
     theoretical collisions; the position is that order's
     grouped_prefix_sum rank. Output: (id, shuffle_key, shuffle_pos)."""
-    key = F.md5(F.concat(F.lit(seed + ":"), F.col(id_col).cast("string")))
+    key = F.md5(F.concat(F.lit(seed + ":"), F.col(DOC_ID).cast("string")))
     # two consumers (shard totals, ranked output)
-    base = materialize(docs.select(F.col(id_col), key.alias("shuffle_key")))
-    return grouped_prefix_sum(base, [], ["shuffle_key", id_col]).select(
-        F.col(id_col),
+    base = materialize(docs.select(F.col(DOC_ID), key.alias("shuffle_key")))
+    return grouped_prefix_sum(base, [], ["shuffle_key", DOC_ID]).select(
+        F.col(DOC_ID),
         "shuffle_key",
         (F.col("prefix") + 1).cast("long").alias("shuffle_pos"),
     )

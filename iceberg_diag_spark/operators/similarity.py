@@ -44,6 +44,24 @@ from iceberg_diag_spark.sources.sinks import (
     write_assigned_shards,
 )
 
+# Columns and tuning constants of the operators below.
+DIM = 64
+DOC_ID = "doc_id"
+EMBEDDING = "embedding"
+HALF_RANGE = 256
+LABEL = "label"
+N_LISTS = 16
+N_PLANES = 8
+N_SUB = 8
+N_TABLES = 8
+PREFIX_DIMS = (8, 16, 32, 48, 64)
+QUERY_MOD = 100
+SCALE_BITS = 8
+SIGMAS = 3
+THRESHOLD_DEN = 20
+THRESHOLD_NUM = 9
+VEC_ID = "vec_id"
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ a[i]*b[i] as double — left-to-right fold, deterministic."""
@@ -277,8 +295,6 @@ def cosine_topk(
 def embedding_near_dup(
     embeddings: DataFrame,
     threshold: float = 0.45,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_corpus_rows: int | None = QUADRATIC_GUARD_ROWS,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: all (a, b) with a < b
@@ -294,8 +310,8 @@ def embedding_near_dup(
     _guard_quadratic(
         embeddings, "embedding_near_dup", "lsh_near_dup_pairs", max_corpus_rows
     )
-    a = embeddings.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("va"))
-    b = embeddings.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vb"))
+    a = embeddings.select(F.col(VEC_ID).alias("vec_a"), F.col(EMBEDDING).alias("va"))
+    b = embeddings.select(F.col(VEC_ID).alias("vec_b"), F.col(EMBEDDING).alias("vb"))
     pairs = a.crossJoin(F.broadcast(b)).filter(F.col("vec_a") < F.col("vec_b"))
     return (
         pairs.select(
@@ -336,9 +352,6 @@ def ivf_topk(
     k: int = 5,
     n_lists: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate kNN — the classic coarse-quantizer scale path:
 
@@ -358,14 +371,14 @@ def ivf_topk(
     from pyspark.ml.functions import array_to_vector
 
     ds = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
+        F.col(VEC_ID),
+        F.col(EMBEDDING),
+        array_to_vector(F.col(EMBEDDING).cast("array<double>")).alias("features"),
     )
-    model = KMeans(k=n_lists, seed=seed, featuresCol="features").fit(ds)
+    model = KMeans(k=n_lists, seed=42, featuresCol="features").fit(ds)
     assigned = model.transform(ds).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("n_vec"),
+        F.col(VEC_ID).alias("neighbor_id"),
+        F.col(EMBEDDING).alias("n_vec"),
         F.col("prediction").alias("list_id"),
     )
 
@@ -379,7 +392,7 @@ def ivf_topk(
         ]
     )
     qs = (queries if queries is not None else embeddings).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col(VEC_ID).alias("query_id"), F.col(EMBEDDING).alias("q_vec")
     )
     # squared euclidean to each centroid (same metric KMeans assigns
     # by), keep the n_probe nearest lists per query
@@ -412,23 +425,15 @@ def ivf_topk(
     )
 
 
-def lsh_candidates(
-    embeddings: DataFrame,
-    n_planes: int = 4,
-    n_tables: int = 16,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def lsh_candidates(embeddings: DataFrame) -> DataFrame:
     """Multi-table sign-LSH candidate pairs (query_id < neighbor_id
     ordering NOT applied — both directions emitted for top-k use;
     `.distinct()`-ed so each direction appears once).
 
-    Collision prob for angle θ: 1-(1-(1-θ/π)^n_planes)^n_tables —
-    n_planes controls bucket selectivity (cost), n_tables buys recall
-    back. Sign-LSH is a NEAR-DUP instrument: at cos ≥ 0.45 the
-    defaults give >95% recall; weakly-similar neighbors (cos ≈ 0.3)
+    Collision prob for angle θ: 1-(1-(1-θ/π)^4)^16 — the 4 planes
+    set bucket selectivity (cost), the 16 tables buy recall back.
+    Sign-LSH is a NEAR-DUP instrument: at cos ≥ 0.45 these
+    settings give >95% recall; weakly-similar neighbors (cos ≈ 0.3)
     are fundamentally below its resolution — use ivf_topk for
     generic kNN."""
     bucket_structs = F.array(
@@ -436,17 +441,17 @@ def lsh_candidates(
             F.struct(
                 F.lit(t).alias("table_id"),
                 lsh_bucket(
-                    F.col(vec_col), random_hyperplanes(dim, n_planes, seed + t)
+                    F.col(EMBEDDING), random_hyperplanes(DIM, 4, 42 + t)
                 ).alias("bucket"),
             )
-            for t in range(n_tables)
+            for t in range(16)
         ]
     )
     bucketed = embeddings.select(
-        F.col(id_col), F.explode(bucket_structs).alias("b")
-    ).select(id_col, "b.table_id", "b.bucket")
-    a = bucketed.select("table_id", "bucket", F.col(id_col).alias("query_id"))
-    b = bucketed.select("table_id", "bucket", F.col(id_col).alias("neighbor_id"))
+        F.col(VEC_ID), F.explode(bucket_structs).alias("b")
+    ).select(VEC_ID, "b.table_id", "b.bucket")
+    a = bucketed.select("table_id", "bucket", F.col(VEC_ID).alias("query_id"))
+    b = bucketed.select("table_id", "bucket", F.col(VEC_ID).alias("neighbor_id"))
     return (
         a.join(b, ["table_id", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -481,12 +486,6 @@ def _rejoin_cosine(
 def lsh_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.45,
-    n_planes: int = 4,
-    n_tables: int = 16,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The 100 TB path for embedding_near_dup: cosine-threshold pairs
     restricted to LSH candidates, so the pair count is per-bucket-
@@ -494,10 +493,10 @@ def lsh_near_dup_pairs(
     embedding_near_dup (vec_a < vec_b, cos_sim ≥ threshold) minus the
     LSH-missed tail (recall pinned in tests/test_similarity.py)."""
     cand = lsh_candidates(
-        embeddings, n_planes, n_tables, dim, seed, id_col, vec_col
+        embeddings
     ).filter(F.col("query_id") < F.col("neighbor_id"))
     return (
-        _rejoin_cosine(cand, embeddings, id_col, vec_col)
+        _rejoin_cosine(cand, embeddings, VEC_ID, EMBEDDING)
         .filter(F.col("cos_sim") >= threshold)
         .select(
             F.col("query_id").alias("vec_a"),
@@ -507,39 +506,24 @@ def lsh_near_dup_pairs(
     )
 
 
-def lsh_topk(
-    embeddings: DataFrame,
-    k: int = 5,
-    n_planes: int = 4,
-    n_tables: int = 16,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate all-pairs kNN via multi-table sign-LSH: n_tables
-    independent hash tables of n_planes sign bits each; vectors
+def lsh_topk(embeddings: DataFrame, k: int = 5) -> DataFrame:
+    """Approximate all-pairs kNN via multi-table sign-LSH: 16
+    independent hash tables of 4 sign bits each; vectors
     colliding in ANY table become candidates (distinct-ed before
     scoring so each pair is scored once).
 
     A neighbor at angle θ collides in one table with prob
-    (1-θ/π)^n_planes, across tables 1-(1-p)^n_tables — see
+    (1-θ/π)^4, across tables 1-(1-p)^16 — see
     lsh_candidates for the cost/recall model and its near-dup-grade
     resolution caveat (generic weak-neighbor kNN wants ivf_topk)."""
-    cand = lsh_candidates(
-        embeddings, n_planes, n_tables, dim, seed, id_col, vec_col
-    )
-    scored = _rejoin_cosine(cand, embeddings, id_col, vec_col)
+    cand = lsh_candidates(embeddings)
+    scored = _rejoin_cosine(cand, embeddings, VEC_ID, EMBEDDING)
     return _topk(scored, k, "cos_sim").select(
         "query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim")
     )
 
 
-def label_centroid_stats(
-    embeddings: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def label_centroid_stats(embeddings: DataFrame) -> DataFrame:
     """Per-label embedding geometry: vector count, mean L2 norm, and
     the norm of the label centroid — the collapse/drift audit run on
     embedding drops (a centroid norm near the mean norm signals a
@@ -552,9 +536,9 @@ def label_centroid_stats(
     vectors ever collect to the driver. Output:
     (label, n_vecs, avg_norm, centroid_norm)."""
     exploded = embeddings.select(
-        F.col(label_col).alias("label"),
+        F.col(LABEL).alias("label"),
         F.col("vec_id"),
-        F.posexplode(F.col(vec_col)).alias("pos", "val"),
+        F.posexplode(F.col(EMBEDDING)).alias("pos", "val"),
     ).withColumn("val", F.col("val").cast("double"))
     per_vec = exploded.groupBy("label", "vec_id").agg(
         F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("norm")
@@ -576,11 +560,7 @@ def label_centroid_stats(
     return norms.join(centroid, "label")
 
 
-def nearest_centroid_confusion(
-    embeddings: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def nearest_centroid_confusion(embeddings: DataFrame) -> DataFrame:
     """Nearest-centroid classification audit: compute each label's
     centroid, assign every vector to its nearest centroid (squared
     euclidean; ties broken by smaller predicted label), and emit the
@@ -600,8 +580,8 @@ def nearest_centroid_confusion(
     confusion rows leaves the executors."""
     ex = embeddings.select(
         F.col("vec_id"),
-        F.col(label_col).alias("label"),
-        F.posexplode(F.col(vec_col)).alias("pos", "val"),
+        F.col(LABEL).alias("label"),
+        F.posexplode(F.col(EMBEDDING)).alias("pos", "val"),
     ).withColumn("val", F.col("val").cast("double"))
     centroids = ex.groupBy(
         F.col("label").alias("cand"), F.col("pos")
@@ -627,11 +607,7 @@ def nearest_centroid_confusion(
     )
 
 
-def label_silhouette(
-    embeddings: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def label_silhouette(embeddings: DataFrame) -> DataFrame:
     """Centroid-silhouette separability audit: per label, the mean
     squared distance of its vectors to their OWN centroid vs to the
     NEAREST OTHER centroid, and the ratio — the one-table answer to
@@ -649,8 +625,8 @@ def label_silhouette(
     """
     ex = embeddings.select(
         F.col("vec_id"),
-        F.col(label_col).alias("label"),
-        F.posexplode(F.col(vec_col)).alias("pos", "val"),
+        F.col(LABEL).alias("label"),
+        F.posexplode(F.col(EMBEDDING)).alias("pos", "val"),
     ).withColumn("val", F.col("val").cast("double"))
     centroids = ex.groupBy(
         F.col("label").alias("cand"), F.col("pos")
@@ -691,10 +667,7 @@ def label_silhouette(
     )
 
 
-def quantize_embeddings_int8(
-    embeddings: DataFrame,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_embeddings_int8(embeddings: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization — the memory-bandwidth
     lever for serving ANN over billions of vectors (4× smaller than
     float32, SIMD-friendly dot products). q_i = floor(v_i · 127 /
@@ -706,7 +679,7 @@ def quantize_embeddings_int8(
     checksummed (md5 of the comma-joined ints) so an oracle can
     verify exact cell-level equality without hauling arrays around.
     Output: (vec_id, dim, scale_ppm, q_checksum)."""
-    v = F.col(vec_col)
+    v = F.col(EMBEDDING)
     max_abs = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
     # all-zero vectors quantize to zeros (the x/0 branch would be
     # engine-divergent: NULL here, inf in DuckDB)
@@ -729,8 +702,6 @@ def quantize_embeddings_int8(
 def semantic_dedup(
     embeddings: DataFrame,
     threshold_micro: int = 400_000,
-    label_col: str = "label",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication summary: assign every
     vector to its nearest centroid cluster, then within each cluster
@@ -751,8 +722,8 @@ def semantic_dedup(
     """
     ex = embeddings.select(
         F.col("vec_id"),
-        F.col(label_col).alias("label"),
-        F.posexplode(F.col(vec_col)).alias("pos", "val"),
+        F.col(LABEL).alias("label"),
+        F.posexplode(F.col(EMBEDDING)).alias("pos", "val"),
     ).withColumn("val", F.col("val").cast("double"))
     centroids = ex.groupBy(
         F.col("label").alias("cand"), F.col("pos")
@@ -785,7 +756,7 @@ def semantic_dedup(
     # genuine big-big SMJ, materializing this relation (the standard
     # SemDeDup intermediate) is the lever to flip first.
     vecs = (
-        embeddings.select("vec_id", F.col(vec_col).alias("v"))
+        embeddings.select("vec_id", F.col(EMBEDDING).alias("v"))
         .join(assigned, "vec_id")
         .select(
             "vec_id",
@@ -837,15 +808,10 @@ def semantic_dedup(
     )
 
 
-def norm_outliers(
-    embeddings: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    sigmas: int = 3,
-) -> DataFrame:
+def norm_outliers(embeddings: DataFrame) -> DataFrame:
     """Per-label vector-norm outlier audit — the cheap data-poisoning
     / corrupt-encoder check: a vector whose L2 norm sits more than
-    ``sigmas`` standard deviations from its label's mean norm is
+    `SIGMAS` standard deviations from its label's mean norm is
     flagged. Poisoned or truncated embedding batches show up here
     before any clustering does.
 
@@ -861,9 +827,9 @@ def norm_outliers(
     # (n·x)², S², n·S2 — inside int64 up to ~10^5 vectors per label;
     # beyond that re-scale (the audit's resolution, 0.001 of a norm
     # unit, is far finer than any real outlier threshold anyway)
-    nm = F.floor(l2_norm(F.col(vec_col)) * F.lit(1_000.0)).cast("long")
+    nm = F.floor(l2_norm(F.col(EMBEDDING)) * F.lit(1_000.0)).cast("long")
     normed = embeddings.select(
-        F.col(label_col).alias("label"), nm.alias("x")
+        F.col(LABEL).alias("label"), nm.alias("x")
     )
     stats = normed.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"),
@@ -874,7 +840,7 @@ def norm_outliers(
     )
     j = normed.join(stats, "label")
     dev = F.col("n") * F.col("x") - F.col("s")
-    bound = F.lit(sigmas * sigmas) * (
+    bound = F.lit(SIGMAS * SIGMAS) * (
         F.col("n") * F.col("s2") - F.col("s") * F.col("s")
     )
     return j.groupBy("label").agg(
@@ -887,7 +853,7 @@ def norm_outliers(
     )
 
 
-def dim_variance_audit(emb: DataFrame, scale_bits: int = 10) -> DataFrame:
+def dim_variance_audit(emb: DataFrame) -> DataFrame:
     """Per-dimension embedding statistics — the anisotropy / dead-
     dimension audit. A trained embedding whose variance concentrates
     in a few coordinates (or whose tail coordinates are constant) is
@@ -896,11 +862,11 @@ def dim_variance_audit(emb: DataFrame, scale_bits: int = 10) -> DataFrame:
     go/no-go check before either.
 
     Integer-exact across engines: each value is first floored to a
-    fixed grid q = floor(val · 2^scale_bits) (float→double widening
+    fixed grid q = floor(val · 2^10) (float→double widening
     is exact, floor is deterministic), then only integer sums leave
     the per-dimension aggregate: n, Σq, Σq² — accumulated as
     DECIMAL(38,0), because n·Σq² reaches int64 around n ≈ 3M with
-    scale_bits=10 and would wrap silently under non-ANSI Spark
+    10 scale bits and would wrap silently under non-ANSI Spark
     (DuckDB sums into HUGEINT; decimal keeps both engines on 128-bit
     integers, exact to n ≈ 10¹³). The published columns come back
     down via integer division: the variance numerator n·Σq² − (Σq)²
@@ -913,12 +879,12 @@ def dim_variance_audit(emb: DataFrame, scale_bits: int = 10) -> DataFrame:
     D output rows, embarrassingly parallel, no window, no Python.
 
     Output: (pos, n_vecs, mean_q_ppm, var_q) where q-units are
-    1/2^scale_bits of the raw value; mean_q_ppm = floor(1e6·Σq/n),
+    1/2^10 of the raw value; mean_q_ppm = floor(1e6·Σq/n),
     var_q = floor((n·Σq² − (Σq)²)/n²) — 0 ⇒ dead dimension.
     """
     ex = emb.select(
         F.posexplode("embedding").alias("pos", "val")
-    ).select("pos", _quantize_value(F.col("val"), scale_bits).alias("q"))
+    ).select("pos", _quantize_value(F.col("val"), 10).alias("q"))
     g = ex.groupBy("pos").agg(
         F.count(F.lit(1)).cast("long").alias("n_vecs"),
         F.sum(F.col("q").cast("decimal(38,0)")).alias("s"),
@@ -1041,37 +1007,27 @@ def _bucket_pairs(tabled: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def lsh_near_dup_exact(
-    embeddings: DataFrame,
-    threshold_num: int = 9,
-    threshold_den: int = 20,
-    n_planes: int = 8,
-    n_tables: int = 8,
-    dim: int = 64,
-    scale_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def lsh_near_dup_exact(embeddings: DataFrame) -> DataFrame:
     """Sign-LSH near-dup with EXACT cross-engine semantics — the
     hash-oracle-able sibling of lsh_near_dup_pairs (whose seeded
     float hyperplanes and float dot products are engine-private):
 
     - hyperplanes are md5-derived integer constants (md5_hyperplanes);
-    - vectors quantize once to q = floor(v·2^scale_bits) — every
+    - vectors quantize once to q = floor(v·2^SCALE_BITS) — every
       bucket bit is the sign of an exact integer dot product
       (bit = dot > 0: no float, no ulp, no tie ambiguity);
-    - candidates collide in ≥ 1 of the n_tables bucket tables
+    - candidates collide in ≥ 1 of the N_TABLES bucket tables
       (same-bucket equi-join, per-bucket-quadratic — the scale path;
-      n_planes=8 ⇒ 256 buckets/table, so a uniform corpus pays
+      N_PLANES=8 ⇒ 256 buckets/table, so a uniform corpus pays
       ~n²/256 candidates per table, not the n²/16 the old 4-bit
       keys allowed). The pair-dedup exchange carries ONLY the two
       ids — quantized vectors are joined back afterwards, exactly
       like lsh_near_dup_pairs, so candidate dedup shuffles 16 B/pair
       instead of ~1 KB/pair of long arrays;
-    - verification keeps pairs with cos ≥ threshold_num/threshold_den
+    - verification keeps pairs with cos ≥ THRESHOLD_NUM/THRESHOLD_DEN
       via the cross-multiplied integer comparison
       den²·dot² ≥ num²·|a|²·|b|² (with dot > 0) — exact rational
-      arithmetic; with scale_bits=8, dim=64 and |v| ≤ 4 every product
+      arithmetic; with SCALE_BITS=8, DIM=64 and |v| ≤ 4 every product
       stays far inside int64.
 
     Output: (vec_a, vec_b, cos_mppm) where cos_mppm =
@@ -1079,15 +1035,15 @@ def lsh_near_dup_exact(
     rounded single operations, bit-identical across engines.
     """
     base, tabled = _exact_bucketed(
-        embeddings, n_planes, n_tables, dim, scale_bits, id_col, vec_col
+        embeddings, N_PLANES, N_TABLES, DIM, SCALE_BITS, VEC_ID, EMBEDDING
     )
     # d > 0 also rules out zero norms
     keep = (F.col("d") > 0) & (
-        F.lit(threshold_den * threshold_den) * F.col("d") * F.col("d")
-        >= F.lit(threshold_num * threshold_num) * F.col("na2") * F.col("nb2")
+        F.lit(THRESHOLD_DEN * THRESHOLD_DEN) * F.col("d") * F.col("d")
+        >= F.lit(THRESHOLD_NUM * THRESHOLD_NUM) * F.col("na2") * F.col("nb2")
     )
     return _rejoin_score(
-        _bucket_pairs(tabled, id_col), base, "vec_a", "vec_b", id_col, keep
+        _bucket_pairs(tabled, VEC_ID), base, "vec_a", "vec_b", VEC_ID, keep
     )
 
 
@@ -1097,9 +1053,6 @@ def lsh_topk_exact(
     n_planes: int = 8,
     n_tables: int = 8,
     dim: int = 64,
-    scale_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bucketed: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Approximate kNN with EXACT cross-engine semantics — the
@@ -1126,7 +1079,7 @@ def lsh_topk_exact(
     # side) share it instead of paying the stage twice.
     if bucketed is None:
         bucketed = _exact_bucketed(
-            embeddings, n_planes, n_tables, dim, scale_bits, id_col, vec_col
+            embeddings, n_planes, n_tables, dim, SCALE_BITS, VEC_ID, EMBEDDING
         )
     base, tabled = bucketed
     # kNN candidates are symmetric (same buckets both ways), so dedup
@@ -1134,7 +1087,7 @@ def lsh_topk_exact(
     # and half the dot products — then emit both orientations into
     # the per-query ranking.
     pair_scored = _rejoin_score(
-        _bucket_pairs(tabled, id_col), base, "vec_a", "vec_b", id_col
+        _bucket_pairs(tabled, VEC_ID), base, "vec_a", "vec_b", VEC_ID
     )
     # two consumers (both union branches)
     pair_scored = materialize(pair_scored)
@@ -1146,12 +1099,6 @@ def lsh_topk_exact(
 def embedding_consistency_audit(
     docs: DataFrame,
     embeddings: DataFrame,
-    threshold_mppm: int = 950_000,
-    scale_bits: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Cross-modal consistency audit: documents whose TEXT is
     byte-identical (same normalized sha256) must carry near-identical
@@ -1170,41 +1117,34 @@ def embedding_consistency_audit(
     quantized vectors join by id afterwards, so text and vectors
     never ride the same shuffle. Cosine is the exact integer
     lsh_topk_exact arithmetic. Output: inconsistent pairs only —
-    (rep_id, doc_id, cos_mppm) with cos_mppm < threshold_mppm.
+    (rep_id, doc_id, cos_mppm) with cos_mppm < 950000.
     """
     from pyspark.sql.window import Window
 
     from iceberg_diag_spark.operators.dedup import normalized_text
 
     hashed = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.sha2(normalized_text(F.col(text_col)), 256).alias("__h"),
+        F.col(DOC_ID),
+        F.sha2(normalized_text(F.col("text")), 256).alias("__h"),
     )
     wg = Window.partitionBy("__h")
     members = (
         hashed.select(
-            id_col,
-            F.min(id_col).over(wg).alias("rep_id"),
+            DOC_ID,
+            F.min(DOC_ID).over(wg).alias("rep_id"),
             F.count(F.lit(1)).over(wg).alias("__n"),
         )
-        .filter((F.col("__n") > 1) & (F.col(id_col) != F.col("rep_id")))
-        .select("rep_id", id_col)
+        .filter((F.col("__n") > 1) & (F.col(DOC_ID) != F.col("rep_id")))
+        .select("rep_id", DOC_ID)
     )
     # two consumers (both join sides)
-    base = materialize(_quantized(embeddings, scale_bits, vec_id_col, vec_col))
-    return _rejoin_score(members, base, "rep_id", id_col, vec_id_col).filter(
-        F.col("cos_mppm") < threshold_mppm
+    base = materialize(_quantized(embeddings, SCALE_BITS, VEC_ID, EMBEDDING))
+    return _rejoin_score(members, base, "rep_id", DOC_ID, VEC_ID).filter(
+        F.col("cos_mppm") < 950_000
     )
 
 
-def ivf_balance_audit(
-    embeddings: DataFrame,
-    n_lists: int = 16,
-    dim: int = 64,
-    scale_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_balance_audit(embeddings: DataFrame) -> DataFrame:
     """ANN index health check: the cell-occupancy profile of the IVF
     coarse quantizer ivf_topk_exact probes. A skewed inverted file is
     the silent ANN performance killer — a cell holding 40% of the
@@ -1215,16 +1155,16 @@ def ivf_balance_audit(
     id), so this audit describes exactly the index that query path
     uses.
 
-    One scan: assignment is a row-local array_sort over n_lists
-    (dist², cell) structs, then ONE hash aggregate on the ≤ n_lists
-    key. share_ppm and the deviation from the uniform 1/n_lists
+    One scan: assignment is a row-local array_sort over N_LISTS
+    (dist², cell) structs, then ONE hash aggregate on the ≤ N_LISTS
+    key. share_ppm and the deviation from the uniform 1/N_LISTS
     ideal are exact integer arithmetic on the counts. Output per
     occupied cell: (list_id, n_vecs, share_ppm, dev_ppm) where
-    dev_ppm = share_ppm − floor(1e6/n_lists).
+    dev_ppm = share_ppm − floor(1e6/N_LISTS).
     """
-    cents = md5_centroids(dim, n_lists, 1 << scale_bits)
+    cents = md5_centroids(DIM, N_LISTS, 1 << SCALE_BITS)
     base = ensure_parallelism(embeddings).select(
-        F.col(id_col), _quantize(F.col(vec_col), scale_bits).alias("q")
+        F.col(VEC_ID), _quantize(F.col(EMBEDDING), SCALE_BITS).alias("q")
     )
     assigned = base.select(
         F.expr(_cells_sorted_expr(cents) + "[0].c").cast("long").alias("list_id")
@@ -1233,7 +1173,7 @@ def ivf_balance_audit(
         F.count(F.lit(1)).cast("long").alias("n_vecs")
     )
     total = counts.agg(F.sum("n_vecs").cast("long").alias("n_total"))
-    ideal = 1_000_000 // n_lists
+    ideal = 1_000_000 // N_LISTS
     return (
         counts.crossJoin(F.broadcast(total))
         .select(
@@ -1247,13 +1187,7 @@ def ivf_balance_audit(
     )
 
 
-def embedding_drift_audit(
-    embeddings: DataFrame,
-    scale_bits: int = 8,
-    label_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_drift_audit(embeddings: DataFrame) -> DataFrame:
     """Distribution-drift audit between two deterministic halves of
     the corpus (vec_id parity — the train/validation-split shape):
     per label, the squared distance between the two halves' centroids
@@ -1263,11 +1197,11 @@ def embedding_drift_audit(
     trained on one half won't serve the other.
 
     Integer-exact across engines: values quantize once to
-    q = floor(v·2^scale_bits); each half's per-dimension sums are
+    q = floor(v·2^SCALE_BITS); each half's per-dimension sums are
     exact integers, and the squared centroid gap per dimension is the
     exact rational (sa·nb − sb·na)²/(na·nb)² — numerator and the
     dimension-sum accumulate as DECIMAL(38,0) (exact to ~2×10⁸ rows
-    per label-half at scale_bits=8; raise and re-scale past that),
+    per label-half at SCALE_BITS=8; raise and re-scale past that),
     published via one truncating DIV (numerator ≥ 0 ⇒ floor). No
     float ever materializes.
 
@@ -1276,11 +1210,11 @@ def embedding_drift_audit(
     Output: (label, n_a, n_b, drift_sq_q) in q² units.
     """
     ex = embeddings.select(
-        F.col(label_col).alias("label"),
-        (F.pmod(F.col(id_col), F.lit(2)) == 0).alias("__a"),
-        F.posexplode(F.col(vec_col)).alias("pos", "val"),
+        F.col(LABEL).alias("label"),
+        (F.pmod(F.col(VEC_ID), F.lit(2)) == 0).alias("__a"),
+        F.posexplode(F.col(EMBEDDING)).alias("pos", "val"),
     ).select(
-        "label", "__a", "pos", _quantize_value(F.col("val"), scale_bits).alias("q")
+        "label", "__a", "pos", _quantize_value(F.col("val"), SCALE_BITS).alias("q")
     )
     per_dim = ex.groupBy("label", "pos").agg(
         # cast INSIDE the sum so accumulation itself is 128-bit —
@@ -1323,9 +1257,6 @@ def embedding_drift_audit(
 def embedding_dim_covariance(
     embeddings: DataFrame,
     top_dims: int = 8,
-    scale_bits: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Pairwise covariance over the TOP-VARIANCE embedding dimensions
     — the anisotropy-direction companion of dim_variance_audit:
@@ -1348,10 +1279,10 @@ def embedding_dim_covariance(
     = (n·Σq_a·q_b − Σq_a·Σq_b) DIV n² in q² units.
     """
     ex = embeddings.select(
-        F.col(id_col).alias("__rid"),
-        F.posexplode(F.col(vec_col)).alias("pos", "val"),
+        F.col(VEC_ID).alias("__rid"),
+        F.posexplode(F.col(EMBEDDING)).alias("pos", "val"),
     ).select(
-        "__rid", "pos", _quantize_value(F.col("val"), scale_bits).alias("q")
+        "__rid", "pos", _quantize_value(F.col("val"), 10).alias("q")
     )
     ex = materialize(ex)
     # phase 1: exact variance numerator per dimension → top set
@@ -1445,53 +1376,44 @@ def _cells_sorted_expr(cents: list[list[int]], vec: str = "q") -> str:
     return f"array_sort(array({cell_structs}))"
 
 
-def ivf_topk_exact(
-    embeddings: DataFrame,
-    k: int = 5,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    dim: int = 64,
-    scale_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_topk_exact(embeddings: DataFrame, k: int = 5) -> DataFrame:
     """IVF approximate kNN with EXACT cross-engine semantics — the
     hash-oracle-able sibling of ivf_topk (whose KMeans centroids are
     engine-private): the coarse quantizer is the fixed md5-derived
     integer centroid set, assignment is argmin of EXACT integer
     squared distance (ties → lowest cell id), each query probes its
-    n_probe nearest cells, and candidates score by exact integer
+    4 nearest cells, and candidates score by exact integer
     cosine with the total (cos_mppm desc, neighbor asc) order.
     Approximation lives ONLY in which cells are probed — every
     surviving row hash-matches the DuckDB oracle.
 
-    The per-vector cell ranking is ONE array_sort over n_lists
-    (dist², cell) structs — no window over corpus×n_lists rows:
+    The per-vector cell ranking is ONE array_sort over N_LISTS
+    (dist², cell) structs — no window over corpus×N_LISTS rows:
     assignment = element 1, probe set = slice(1..n_probe). Centroid
     literals render as one SQL string per cell (the _exact_bucketed
     lesson). INDEX shape matches a real deployment: `assigned` is
     the list_id-partitioned table a production pipeline would
     materialize. Output: (query_id, neighbor_id, rank, cos_mppm).
     """
-    cents = md5_centroids(dim, n_lists, 1 << scale_bits)
+    cents = md5_centroids(DIM, N_LISTS, 1 << SCALE_BITS)
     # `base` has three consumers (cells, both scoring sides), `cells`
     # two (assignment, probes)
     base = materialize(_quantized(
-        ensure_parallelism(embeddings), scale_bits, id_col, vec_col
+        ensure_parallelism(embeddings), SCALE_BITS, VEC_ID, EMBEDDING
     ))
 
     cells = materialize(base.select(
-        id_col,
+        VEC_ID,
         F.expr(_cells_sorted_expr(cents)).alias("cells"),
     ))
     assigned = cells.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col(VEC_ID).alias("neighbor_id"),
         F.expr("cells[0].c").alias("list_id"),
     )
     probes = cells.select(
-        F.col(id_col).alias("query_id"),
+        F.col(VEC_ID).alias("query_id"),
         F.explode(
-            F.expr(f"transform(slice(cells, 1, {int(n_probe)}), s -> s.c)")
+            F.expr("transform(slice(cells, 1, 4), s -> s.c)")
         ).alias("list_id"),
     )
     cand = (
@@ -1499,7 +1421,7 @@ def ivf_topk_exact(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
     )
-    scored = _rejoin_score(cand, base, "query_id", "neighbor_id", id_col)
+    scored = _rejoin_score(cand, base, "query_id", "neighbor_id", VEC_ID)
     return _topk(scored, k).select(
         "query_id", "neighbor_id", "rank", "cos_mppm"
     )
@@ -1507,14 +1429,7 @@ def ivf_topk_exact(
 
 def ivf_nprobe_sweep(
     embeddings: DataFrame,
-    k: int = 5,
-    n_lists: int = 16,
     probes: tuple[int, ...] = (1, 2, 4, 8),
-    query_mod: int = 100,
-    dim: int = 64,
-    scale_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF operating-point sweep — the table a deployment reads to
     PICK n_probe: for each candidate probe count, exact recall@k
@@ -1527,9 +1442,9 @@ def ivf_nprobe_sweep(
     reached at probe rank r is reachable for every n_probe ≥ r, so
     recall needs only the PROBE RANK of each exact-top-k neighbor's
     assigned cell (a left join of ground truth onto the rank
-    relation), and scan cost needs only the broadcast n_lists-row
+    relation), and scan cost needs only the broadcast N_LISTS-row
     cell-size table — no per-probe re-query, no per-probe shuffle.
-    Ground truth is the ann_recall_eval shape: broadcast 1/query_mod
+    Ground truth is the ann_recall_eval shape: broadcast 1/QUERY_MOD
     panel vs the corpus, WindowGroupLimit top-k, exact integer
     cosine with (cos desc, id asc) ties.
 
@@ -1540,33 +1455,33 @@ def ivf_nprobe_sweep(
     brute-force query would score.
     """
     max_p = max(probes)
-    if max_p > n_lists:
+    if max_p > N_LISTS:
         raise ValueError("max probe count cannot exceed n_lists")
-    cents = md5_centroids(dim, n_lists, 1 << scale_bits)
+    cents = md5_centroids(DIM, N_LISTS, 1 << SCALE_BITS)
     base = materialize(
-        _quantized(ensure_parallelism(embeddings), scale_bits, id_col, vec_col)
+        _quantized(ensure_parallelism(embeddings), SCALE_BITS, VEC_ID, EMBEDDING)
         .filter(F.col("n2") > 0)  # corpus side + panel + cells
     )
     cells = materialize(base.select(
-        id_col, F.expr(_cells_sorted_expr(cents)).alias("cells")
+        VEC_ID, F.expr(_cells_sorted_expr(cents)).alias("cells")
     ))  # assigned + panel-probe consumers
     assigned = cells.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col(VEC_ID).alias("neighbor_id"),
         F.expr("cells[0].c").alias("list_id"),
     )
     cell_sizes = assigned.groupBy("list_id").agg(
         F.count(F.lit(1)).cast("long").alias("csize")
     )
     # exact brute-force top-k over the broadcast panel
-    exact = _panel_topk(base, id_col, query_mod, k).select(
+    exact = _panel_topk(base, VEC_ID, QUERY_MOD, 5).select(
         "query_id", "neighbor_id"
     )
     # probe rank of every cell each panel query would visit
     ppr = cells.join(
-        base.filter(F.col(id_col) % query_mod == 0).select(
-            F.col(id_col).alias("query_id")
+        base.filter(F.col(VEC_ID) % QUERY_MOD == 0).select(
+            F.col(VEC_ID).alias("query_id")
         ),
-        cells[id_col] == F.col("query_id"),
+        cells[VEC_ID] == F.col("query_id"),
         "inner",
     ).select(
         "query_id",
@@ -1659,10 +1574,6 @@ def ivf_nprobe_sweep(
 def ivf_index_assignments(
     embeddings: DataFrame,
     n_lists: int = 16,
-    dim: int = 64,
-    scale_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The IVF index RELATION a production deployment materializes:
     one row per vector carrying everything a probe needs — its
@@ -1676,12 +1587,12 @@ def ivf_index_assignments(
     shuffle — assignment is a row-local array_sort over n_lists
     (dist², cell) structs.
     """
-    cents = md5_centroids(dim, n_lists, 1 << scale_bits)
+    cents = md5_centroids(DIM, n_lists, 1 << SCALE_BITS)
     return (
         ensure_parallelism(embeddings)
         .select(
-            F.col(id_col).alias("vec_id"),
-            _quantize(F.col(vec_col), scale_bits).alias("q"),
+            F.col(VEC_ID).alias("vec_id"),
+            _quantize(F.col(EMBEDDING), SCALE_BITS).alias("q"),
         )
         .select(
             F.expr(_cells_sorted_expr(cents) + "[0].c")
@@ -1712,10 +1623,6 @@ def ivf_build_index(
     embeddings: DataFrame,
     path: str | None = None,
     n_lists: int = 16,
-    dim: int = 64,
-    scale_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Advisor-EXECUTING pattern #6: ivf_nprobe_sweep picks the IVF
     operating point; this BUILDS the index it assumed — writes the
@@ -1745,9 +1652,7 @@ def ivf_build_index(
     cleanup = path is None
     if path is None:
         path = tempfile.mkdtemp(prefix="ivf_index_")
-    asg = ivf_index_assignments(
-        embeddings, n_lists, dim, scale_bits, id_col, vec_col
-    )
+    asg = ivf_index_assignments(embeddings, n_lists)
     write_assigned_shards(
         asg, path, n_lists, shard_col="list_id", order_cols=("vec_id",)
     )
@@ -1765,10 +1670,6 @@ def ivf_probe_index(
     k: int = 5,
     n_probe: int = 4,
     n_lists: int = 16,
-    dim: int = 64,
-    scale_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Consumer side of ivf_build_index: answer kNN queries FROM the
     written index files — quantize each query, rank its n_probe
@@ -1782,7 +1683,7 @@ def ivf_probe_index(
 
     Output: (query_id, neighbor_id, rank, cos_mppm).
     """
-    cents = md5_centroids(dim, n_lists, 1 << scale_bits)
+    cents = md5_centroids(DIM, n_lists, 1 << SCALE_BITS)
     index = spark.read.parquet(path).select(
         F.col("list_id").cast("long").alias("list_id"),
         F.col("vec_id").alias("neighbor_id"),
@@ -1792,8 +1693,8 @@ def ivf_probe_index(
     qside = (
         ensure_parallelism(queries)
         .select(
-            F.col(id_col).alias("query_id"),
-            _quantize(F.col(vec_col), scale_bits).alias("q"),
+            F.col(VEC_ID).alias("query_id"),
+            _quantize(F.col(EMBEDDING), SCALE_BITS).alias("q"),
         )
         .select(
             "query_id",
@@ -1853,12 +1754,7 @@ def ann_recall_eval(
     embeddings: DataFrame,
     k: int = 5,
     query_mod: int = 100,
-    n_planes: int = 8,
-    n_tables: int = 8,
     dim: int = 64,
-    scale_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN index quality audit: per-query recall@k of the sign-LSH
     approximate kNN (lsh_topk_exact) against the EXACT brute-force
@@ -1882,14 +1778,14 @@ def ann_recall_eval(
     recall_ppm, first_miss_rank — 0 when nothing was missed).
     """
     bucketed = _exact_bucketed(
-        embeddings, n_planes, n_tables, dim, scale_bits, id_col, vec_col
+        embeddings, N_PLANES, N_TABLES, dim, SCALE_BITS, VEC_ID, EMBEDDING
     )
     base = bucketed[0]  # checkpointed inside _exact_bucketed
     exact_topk = _panel_topk(
-        base.filter(F.col("n2") > 0), id_col, query_mod, k
+        base.filter(F.col("n2") > 0), VEC_ID, query_mod, k
     )
     approx = lsh_topk_exact(
-        embeddings, k, n_planes, n_tables, dim, scale_bits, id_col, vec_col,
+        embeddings, k, N_PLANES, N_TABLES, dim,
         bucketed=bucketed,
     ).filter(F.col("query_id") % query_mod == 0)
     hit = approx.select(
@@ -1923,19 +1819,9 @@ def ann_recall_eval(
     )
 
 
-def hard_negative_mining(
-    embeddings: DataFrame,
-    m: int = 3,
-    lo_mppm: int = 300_000,
-    hi_mppm: int = 850_000,
-    n_lists: int = 16,
-    dim: int = 64,
-    scale_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def hard_negative_mining(embeddings: DataFrame, dim: int = 64) -> DataFrame:
     """Hard-negative mining for contrastive / embedding training:
-    per anchor, the m CLOSEST vectors that are still clearly not
+    per anchor, the 3 CLOSEST vectors that are still clearly not
     positives — cosine inside [lo, hi) mppm. Random negatives are
     too easy (the model separates them immediately); near-duplicates
     (≥ hi) are presumed positives and poison the loss; the band in
@@ -1945,33 +1831,33 @@ def hard_negative_mining(
 
     Distributed shape mirrors ivf_topk_exact: vectors assign to
     their nearest md5-centroid cell (argmin of exact integer d² via
-    one array_sort over n_lists structs — row-local), candidate
+    one array_sort over N_LISTS structs — row-local), candidate
     pairs form ONLY within a cell (cell-bounded quadratic, never
     all-pairs; cells are the same coarse quantizer the ANN index
     already maintains, so mining rides the existing partitioning),
     unordered pairs score ONCE by exact integer cosine, then both
-    orientations enter a per-anchor WindowGroupLimit top-m. Output:
+    orientations enter a per-anchor WindowGroupLimit top-3. Output:
     (anchor_id, negative_id, rank, cos_mppm) — rank 1 = hardest.
     """
-    cents = md5_centroids(dim, n_lists, 1 << scale_bits)
+    cents = md5_centroids(dim, N_LISTS, 1 << SCALE_BITS)
     base = _quantized(
-        ensure_parallelism(embeddings), scale_bits, id_col, vec_col
+        ensure_parallelism(embeddings), SCALE_BITS, VEC_ID, EMBEDDING
     )
     assigned = base.filter(F.col("n2") > 0).select(
-        id_col,
+        VEC_ID,
         "q",
         "n2",
         F.expr(_cells_sorted_expr(cents) + "[0].c").alias("list_id"),
     )
     a = assigned.select(
         "list_id",
-        F.col(id_col).alias("vec_a"),
+        F.col(VEC_ID).alias("vec_a"),
         F.col("q").alias("qa"),
         F.col("n2").alias("na2"),
     )
     b = assigned.select(
         "list_id",
-        F.col(id_col).alias("vec_b"),
+        F.col(VEC_ID).alias("vec_b"),
         F.col("q").alias("qb"),
         F.col("n2").alias("nb2"),
     )
@@ -1986,24 +1872,18 @@ def hard_negative_mining(
             ),
         )
         .filter(
-            (F.col("cos_mppm") >= lo_mppm) & (F.col("cos_mppm") < hi_mppm)
+            (F.col("cos_mppm") >= 300_000) & (F.col("cos_mppm") < 850_000)
         )
     )
     both = _both_ways(pair_scored, "anchor_id", "negative_id")
     return (
-        _topk(both, m, query="anchor_id", neighbor="negative_id")
+        _topk(both, 3, query="anchor_id", neighbor="negative_id")
         .select("anchor_id", "negative_id", "rank", "cos_mppm")
         .orderBy("anchor_id", "rank")
     )
 
 
-def embedding_energy_curve(
-    embeddings: DataFrame,
-    prefix_dims: tuple[int, ...] = (8, 16, 32, 48, 64),
-    scale_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_energy_curve(embeddings: DataFrame) -> DataFrame:
     """Matryoshka truncation audit: how much of the corpus's
     embedding energy (squared L2 mass) survives truncating every
     vector to its first d dimensions? The go/no-go check before
@@ -2021,9 +1901,9 @@ def embedding_energy_curve(
     truncated query could hit.
     """
     base = _quantized(
-        ensure_parallelism(embeddings), scale_bits, id_col, vec_col
+        ensure_parallelism(embeddings), SCALE_BITS, VEC_ID, EMBEDDING
     ).filter(F.col("n2") > 0)
-    for d in prefix_dims:
+    for d in PREFIX_DIMS:
         base = base.withColumn(
             f"__e{d}",
             F.expr(
@@ -2035,7 +1915,7 @@ def embedding_energy_curve(
     # would rescan the corpus once per prefix — no cross-branch
     # exchange reuse), then the 1-row result unpivots to 5 rows.
     aggs = [F.count(F.lit(1)).cast("long").alias("n_vecs")]
-    for d in prefix_dims:
+    for d in PREFIX_DIMS:
         aggs.append(
             F.expr(
                 f"cast((sum(cast(__e{d} as decimal(38,0))) * 1000000)"
@@ -2051,7 +1931,7 @@ def embedding_energy_curve(
     structs = ", ".join(
         f"named_struct('prefix_dim', cast({int(d)} as long),"
         f" 'total_captured_ppm', tot{d}, 'min_vec_ppm', min{d})"
-        for d in prefix_dims
+        for d in PREFIX_DIMS
     )
     return (
         one.select(
@@ -2067,15 +1947,7 @@ def embedding_energy_curve(
     )
 
 
-def kmeans_lloyd(
-    embeddings: DataFrame,
-    n_clusters: int = 16,
-    dim: int = 64,
-    scale_bits: int = 8,
-    shift_bits: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_lloyd(embeddings: DataFrame) -> DataFrame:
     """One EXACT Lloyd (k-means) refinement iteration, expressed
     relationally — the iterative-ML-on-a-DataFrame pattern: seed
     centroids are the fixed md5-derived integer constants (the
@@ -2100,9 +1972,9 @@ def kmeans_lloyd(
 
     Scale shape: assignment passes are zero-shuffle row-local array
     folds (seed literals inline; refined centroids collapse to ONE
-    k-row broadcast row — collect_list bounded by n_clusters, and the
-    per-cluster coordinate array by the fixed dim). The only
-    shuffles are the k·dim-row centroid update and the final k-row
+    k-row broadcast row — collect_list bounded by 16, and the
+    per-cluster coordinate array by the fixed DIM). The only
+    shuffles are the k·DIM-row centroid update and the final k-row
     audit aggregate; the corpus is scanned twice (assign, re-assign)
     and never joined to itself. Empty seed cells drop out of the
     refinement (standard Lloyd degeneracy), so absent cluster_ids in
@@ -2111,11 +1983,11 @@ def kmeans_lloyd(
     Output: (cluster_id, n_members, n_reassigned, mean_d2) where
     mean_d2 is in (2^(8+10))²-scaled squared units.
     """
-    cents = md5_centroids(dim, n_clusters, 1 << scale_bits)
-    scale = 1 << shift_bits
+    cents = md5_centroids(DIM, 16, 1 << SCALE_BITS)
+    scale = 1 << 10
     base = ensure_parallelism(embeddings).select(
-        F.col(id_col).alias("vec_id"),
-        _quantize(F.col(vec_col), scale_bits).alias("q"),
+        F.col(VEC_ID).alias("vec_id"),
+        _quantize(F.col(EMBEDDING), SCALE_BITS).alias("q"),
     )
     assigned0 = base.select(
         "vec_id", "q", F.expr(_cells_sorted_expr(cents) + "[0].c").alias("c0")
@@ -2183,12 +2055,7 @@ def kmeans_lloyd(
     )
 
 
-def pca_power(
-    emb: DataFrame,
-    dim: int = 64,
-    scale_bits: int = 12,
-    iters: int = 8,
-) -> DataFrame:
+def pca_power(emb: DataFrame) -> DataFrame:
     """Top principal component of the embedding cloud by integer-
     exact power iteration — the anisotropy audit behind "is this
     embedding space collapsing onto one direction?" (a dominant
@@ -2213,24 +2080,23 @@ def pca_power(
     DECIMAL(38,0) integer, so Spark and the DuckDB oracle agree
     bit-for-bit; the all-ones seed makes the eigenvector sign
     deterministic. Overflow headroom: M'·2^20 must fit
-    DECIMAL(38,0) ⇒ exact to n ≈ 4·10⁹ vectors at scale_bits=12
-    (drop scale_bits beyond that).
+    DECIMAL(38,0) ⇒ exact to n ≈ 4·10⁹ vectors at 12 scale bits.
 
     Scale shape: the corpus pass is the explode + map-side-combined
-    hash aggregate into (dim+1)² groups — the same one-pass Gramian
+    hash aggregate into (DIM+1)² groups — the same one-pass Gramian
     any distributed PCA computes; everything after operates on the
     dim²-row matrix relation (metadata scale), materialized
-    once because all `iters` multiplies branch from it.
+    once because all 8 multiplies branch from it.
 
     Output per dimension: (pos, v_q, eig_share_ppm) — v_q the final
     eigenvector component at 2^12 scale, eig_share_ppm =
     floor(1e6 · rayleigh(v) / trace(M)): the top component's share
-    of total variance (1e6/dim ⇒ isotropic; → 1e6 ⇒ collapsed).
+    of total variance (1e6/DIM ⇒ isotropic; → 1e6 ⇒ collapsed).
     """
-    S = 1 << scale_bits
+    S = 1 << 12
     qa = emb.select(
         F.array_append(
-            _quantize(F.col("embedding"), scale_bits), F.lit(S).cast("long")
+            _quantize(F.col("embedding"), 12), F.lit(S).cast("long")
         ).alias("qa")
     )
     # Upper triangle only: the second explode slices the array tail,
@@ -2262,13 +2128,13 @@ def pca_power(
         )
     )
     gdd = gram.filter(
-        (F.col("i") == dim) & (F.col("j") == dim)
+        (F.col("i") == DIM) & (F.col("j") == DIM)
     ).select(F.col("g").alias("gdd"))
     gid = gram.filter(
-        (F.col("j") == dim) & (F.col("i") < dim)
+        (F.col("j") == DIM) & (F.col("i") < DIM)
     ).select(F.col("i").alias("gi"), F.col("g").alias("gd"))
     m = (
-        gram.filter((F.col("i") < dim) & (F.col("j") < dim))
+        gram.filter((F.col("i") < DIM) & (F.col("j") < DIM))
         .join(F.broadcast(gdd))
         .join(F.broadcast(gid).withColumnRenamed("gi", "i_"), F.col("i") == F.col("i_"))
         .join(
@@ -2321,7 +2187,7 @@ def pca_power(
     # every multiply joins the ≤dim-row iterate v onto the dim²-row
     # matrix relation — broadcast the iterate (metadata scale; an SMJ
     # would sort both bounded relations every iteration)
-    for _ in range(iters):
+    for _ in range(8):
         w = (
             m.join(F.broadcast(v), "j")
             .groupBy("i")
@@ -2377,14 +2243,7 @@ def pca_power(
 
 def retrieval_rank_eval(
     embeddings: DataFrame,
-    k: int = 5,
     query_mod: int = 50,
-    n_planes: int = 8,
-    n_tables: int = 8,
-    dim: int = 64,
-    scale_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Ranking-quality metrics of the sign-LSH index, the companion
     to ann_recall_eval: recall asks "did the true neighbors make the
@@ -2409,14 +2268,14 @@ def retrieval_rank_eval(
     precision_ppm, hit_at_1).
     """
     bucketed = _exact_bucketed(
-        embeddings, n_planes, n_tables, dim, scale_bits, id_col, vec_col
+        embeddings, N_PLANES, N_TABLES, DIM, SCALE_BITS, VEC_ID, EMBEDDING
     )
     base = bucketed[0]  # checkpointed inside _exact_bucketed
     relevant = _panel_topk(
-        base.filter(F.col("n2") > 0), id_col, query_mod, k
+        base.filter(F.col("n2") > 0), VEC_ID, query_mod, 5
     ).select("query_id", "neighbor_id", F.lit(1).alias("__rel"))
     approx = lsh_topk_exact(
-        embeddings, k, n_planes, n_tables, dim, scale_bits, id_col, vec_col,
+        embeddings,
         bucketed=bucketed,
     ).filter(F.col("query_id") % query_mod == 0)
     # relevant/scored are panel-scale (n_queries × k, the broadcast
@@ -2432,7 +2291,7 @@ def retrieval_rank_eval(
                 " THEN rank END), 0)"
             ).cast("long").alias("rr_ppm"),
             F.expr(
-                f"CAST((1000000 * sum(coalesce(__rel, 0))) DIV {k}"
+                "CAST((1000000 * sum(coalesce(__rel, 0))) DIV 5"
                 " AS BIGINT)"
             ).alias("precision_ppm"),
             F.expr(
@@ -2455,16 +2314,15 @@ def md5_pq_codebook(
     n_sub: int = 8,
     n_codes: int = 16,
     sub_dim: int = 8,
-    half_range: int = 256,
 ) -> list[list[list[int]]]:
     """Integer PQ codewords derived from md5 — engine-independent
     CONSTANTS (component = md5("pq_{m}_{c}_{d}") first 16 bits mod
-    (2·half_range+1), shifted to [−half_range, half_range], the same
+    (2·HALF_RANGE+1), shifted to [−HALF_RANGE, HALF_RANGE], the same
     grid as q = floor(v·256)), reproducible anywhere, literals
     included in the DuckDB oracle. Returns codebook[m][c][d]."""
     import hashlib
 
-    mod = 2 * half_range + 1
+    mod = 2 * HALF_RANGE + 1
     return [
         [
             [
@@ -2473,7 +2331,7 @@ def md5_pq_codebook(
                     16,
                 )
                 % mod
-                - half_range
+                - HALF_RANGE
                 for d in range(sub_dim)
             ]
             for c in range(n_codes)
@@ -2482,19 +2340,11 @@ def md5_pq_codebook(
     ]
 
 
-def pq_codebook_audit(
-    embeddings: DataFrame,
-    n_sub: int = 8,
-    n_codes: int = 16,
-    dim: int = 64,
-    scale_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_codebook_audit(embeddings: DataFrame) -> DataFrame:
     """Product-quantization codebook audit — the pre-flight check
     before committing a corpus to PQ-compressed vector search (the
     memory-bound scale path: a 64-dim float vector collapses to
-    n_sub code bytes). Vectors split into n_sub subspaces; each
+    N_SUB code bytes). Vectors split into N_SUB subspaces; each
     subvector assigns to its nearest md5-seeded codeword (exact
     integer squared L2, ties to the lowest code). Per (subspace,
     code) cell the audit reports occupancy (a skewed cell means the
@@ -2507,12 +2357,12 @@ def pq_codebook_audit(
 
     One corpus scan total: assignment is a row-local fold over
     literal codewords (zero shuffle), then ONE hash aggregate into
-    the n_sub·n_codes·sub_dim coordinate grid; everything after is
+    the N_SUB·16·sub_dim coordinate grid; everything after is
     metadata scale (the per-subspace totals come from a window over
-    the n_codes-row bounded relation, SCALING.md §5).
+    the 16-row bounded relation, SCALING.md §5).
 
     Output per cell: (subspace, code, n_assigned, occupancy_ppm,
-    mean_seed_d2, mean_refined_d2) — d2 in 2^(2·scale_bits)-scaled
+    mean_seed_d2, mean_refined_d2) — d2 in 2^(2·SCALE_BITS)-scaled
     squared units; refined ≤ seed always (Lloyd monotonicity), and
     the gap is the payoff of training the codebook on this corpus.
     Codes no subvector chose are absent (dead codewords — the same
@@ -2521,17 +2371,17 @@ def pq_codebook_audit(
     """
     from pyspark.sql.window import Window
 
-    sub_dim = dim // n_sub
-    book = md5_pq_codebook(n_sub, n_codes, sub_dim)
+    sub_dim = DIM // N_SUB
+    book = md5_pq_codebook(N_SUB, 16, sub_dim)
     base = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        _quantize(F.col(vec_col), scale_bits).alias("q"),
+        F.col(VEC_ID).alias("vec_id"),
+        _quantize(F.col(EMBEDDING), SCALE_BITS).alias("q"),
     )
     sub_structs = ", ".join(
         f"named_struct('m', {m}, 'a', "
         + _cells_sorted_expr(book[m], f"slice(q, {m * sub_dim + 1}, {sub_dim})")
         + "[0])"
-        for m in range(n_sub)
+        for m in range(N_SUB)
     )
     assigned = base.select(
         "q",
@@ -2591,13 +2441,8 @@ def pq_codebook_audit(
 
 def matryoshka_audit(
     embeddings: DataFrame,
-    k: int = 5,
-    query_mod: int = 100,
     prefix_dims: tuple[int, ...] = (16, 32),
     dim: int = 64,
-    scale_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Matryoshka-truncation audit (Kusupati et al. 2022): recall@k of
     PREFIX-dimension cosine retrieval against full-dimension retrieval
@@ -2606,9 +2451,9 @@ def matryoshka_audit(
     trade of MRL-style deployments before anyone re-indexes.
 
     Shape (the ann_recall_eval contract): vectors quantize once to
-    integers (floor(x·2^scale_bits) — the shared exact tier), per-row
+    integers (floor(x·2^SCALE_BITS) — the shared exact tier), per-row
     prefix norms come from row-local folds, the query panel is a
-    deterministic 1/query_mod id-sample BROADCAST against the corpus
+    deterministic 1/QUERY_MOD id-sample BROADCAST against the corpus
     (bounded spot-check, never all-pairs), and every per-query top-k
     compiles to WindowGroupLimit (per-task partial top-k before the
     exchange). One pair relation carries the cosine at every prefix,
@@ -2626,10 +2471,10 @@ def matryoshka_audit(
     # with an opaque AnalysisException.
     dims = tuple(sorted(set(prefix_dims) - {dim})) + (dim,)
     base = ensure_parallelism(embeddings).select(
-        F.col(id_col), _quantize(F.col(vec_col), scale_bits).alias("q")
+        F.col(VEC_ID), _quantize(F.col(EMBEDDING), SCALE_BITS).alias("q")
     )
     base = materialize(base.select(
-        id_col,
+        VEC_ID,
         "q",
         *[
             int_dot(F.slice("q", 1, d), F.slice("q", 1, d)).alias(f"n2_{d}")
@@ -2637,19 +2482,19 @@ def matryoshka_audit(
         ],
     ))
     panel = base.filter(
-        (F.col(id_col) % query_mod == 0) & (F.col(f"n2_{dim}") > 0)
+        (F.col(VEC_ID) % QUERY_MOD == 0) & (F.col(f"n2_{dim}") > 0)
     ).select(
-        F.col(id_col).alias("query_id"),
+        F.col(VEC_ID).alias("query_id"),
         F.col("q").alias("qq"),
         *[F.col(f"n2_{d}").alias(f"qn2_{d}") for d in dims],
     )
     pairs = materialize(
         base.filter(F.col(f"n2_{dim}") > 0)
         .crossJoin(F.broadcast(panel))
-        .filter(F.col(id_col) != F.col("query_id"))
+        .filter(F.col(VEC_ID) != F.col("query_id"))
         .select(
             "query_id",
-            F.col(id_col).alias("neighbor_id"),
+            F.col(VEC_ID).alias("neighbor_id"),
             *[
                 # Zero-prefix guard: a vector whose first d quantized
                 # dims are all zero has n2_d = 0; the bare division
@@ -2674,7 +2519,7 @@ def matryoshka_audit(
     )
 
     def topk(d: int) -> DataFrame:
-        return _topk(pairs, k, f"cos_{d}", rank="__r").select(
+        return _topk(pairs, 5, f"cos_{d}", rank="__r").select(
             "query_id", "neighbor_id"
         )
 

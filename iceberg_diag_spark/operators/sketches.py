@@ -17,6 +17,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# Tuning constants of the operators below.
+RSD = 0.05
+
 
 def value_quantiles(events: DataFrame) -> DataFrame:
     """Exact p50/p90/p99 of value per event type (linear
@@ -30,12 +33,12 @@ def value_quantiles(events: DataFrame) -> DataFrame:
     )
 
 
-def approx_user_stats(events: DataFrame, rsd: float = 0.05) -> DataFrame:
+def approx_user_stats(events: DataFrame) -> DataFrame:
     """Fixed-memory approximations per event type: HLL distinct users
-    (relative std dev `rsd`) and quantile-sketch percentiles. The
+    (relative std dev RSD) and quantile-sketch percentiles. The
     shuffle carries one sketch per (type, task), never raw values."""
     return events.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd).alias("approx_users"),
+        F.approx_count_distinct("user_id", RSD).alias("approx_users"),
         F.percentile_approx("value", F.array(F.lit(0.5), F.lit(0.9)), 10000).alias(
             "value_p50_p90"
         ),
@@ -47,11 +50,11 @@ def approx_user_stats(events: DataFrame, rsd: float = 0.05) -> DataFrame:
     )
 
 
-def approx_stats_checked(events: DataFrame, rsd: float = 0.05) -> DataFrame:
+def approx_stats_checked(events: DataFrame) -> DataFrame:
     """Hash-checkable projection of the approx-sketch stats: the HLL
     estimate itself is engine-private (its exact value cannot match
     an oracle), but its ERROR CONTRACT can — emit whether the
-    estimate lands within 3·rsd of the exact distinct count, computed
+    estimate lands within 3·RSD of the exact distinct count, computed
     in the same aggregation. The quantile-sketch percentiles pick
     actual data values (discrete quantiles) and are deterministic at
     full sketch accuracy, so those columns hash directly. This is the
@@ -59,7 +62,7 @@ def approx_stats_checked(events: DataFrame, rsd: float = 0.05) -> DataFrame:
     countDistinct to certify the sketch, so run it on samples/test
     scale, not the full corpus."""
     return events.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd).alias("approx_users"),
+        F.approx_count_distinct("user_id", RSD).alias("approx_users"),
         F.countDistinct("user_id").alias("exact_users"),
         F.percentile_approx(
             "value", F.array(F.lit(0.5), F.lit(0.9)), 10000
@@ -70,7 +73,7 @@ def approx_stats_checked(events: DataFrame, rsd: float = 0.05) -> DataFrame:
         F.round(F.element_at("qs", 2), 6).alias("p90_approx"),
         (
             F.abs(F.col("approx_users") - F.col("exact_users"))
-            <= F.lit(3 * rsd) * F.col("exact_users")
+            <= F.lit(3 * RSD) * F.col("exact_users")
         ).alias("hll_within_bound"),
     )
 

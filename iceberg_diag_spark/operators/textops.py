@@ -17,6 +17,16 @@ from iceberg_diag_spark.functions.parallel import (
 )
 from iceberg_diag_spark.operators.dedup import normalized_text, word_ngram_rows
 
+# Columns and tuning constants of the operators below.
+DOC_ID = "doc_id"
+LR_PPM = 2_000_000
+MAX_WORD_LEN = 24
+N_BINS = 10
+N_CHARS = "n_chars"
+N_SHARDS = 16
+SOURCE = "source"
+TEXT = "text"
+
 # Tiny per-language stopword lists for the n-gram/stopword language
 # heuristic. Deliberately minimal — language ID here is a scoring
 # shape (count hits per language, argmax), not a model.
@@ -74,18 +84,16 @@ def bpe_ish_tokens(col: Column) -> Column:
     return pieces
 
 
-def text_stats(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def text_stats(docs: DataFrame) -> DataFrame:
     """Per-document counting stats: characters, whitespace tokens,
     distinct tokens, BPE-ish subword count."""
-    t = tokens(F.col(text_col))
+    t = tokens(F.col(TEXT))
     return ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.length(F.col(text_col)).cast("long").alias("char_len"),
+        F.col(DOC_ID),
+        F.length(F.col(TEXT)).cast("long").alias("char_len"),
         F.size(t).cast("long").alias("token_count"),
         F.size(F.array_distinct(t)).cast("long").alias("uniq_token_count"),
-        F.size(bpe_ish_tokens(F.col(text_col))).cast("long").alias("subword_count"),
+        F.size(bpe_ish_tokens(F.col(TEXT))).cast("long").alias("subword_count"),
     )
 
 
@@ -109,19 +117,17 @@ def quality_exprs(text_col: str = "text") -> dict[str, Column]:
     }
 
 
-def quality_scores(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """Heuristic quality signals as one projection over one scan —
     composable filters for corpus curation. Includes the repetition
     signal (duplicate-trigram count, the Gopher-style repetition
     filter) as exact integers: trigrams are built row-local with a
     transform over the token array, so the whole operator stays a
     zero-shuffle projection."""
-    exprs = quality_exprs(text_col)
-    tri = _trigrams(tokens(F.col(text_col)))
+    exprs = quality_exprs()
+    tri = _trigrams(tokens(F.col(TEXT)))
     return ensure_parallelism(docs).select(
-        F.col(id_col),
+        F.col(DOC_ID),
         *[c.alias(name) for name, c in exprs.items()],
         F.size(tri).cast("long").alias("trigram_count"),
         (F.size(tri) - F.size(F.array_distinct(tri)))
@@ -147,14 +153,12 @@ def language_best(text_col: str = "text") -> Column:
     return F.greatest(*lang_scores)
 
 
-def language_id(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Stopword-voting language ID: count token hits against each
     language's stopword list, argmax via greatest-of-structs."""
-    best = language_best(text_col)
+    best = language_best()
     return ensure_parallelism(docs).select(
-        F.col(id_col),
+        F.col(DOC_ID),
         F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und")).alias(
             "pred_lang"
         ),
@@ -162,12 +166,7 @@ def language_id(
     )
 
 
-def rolling_fingerprint(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 8,
-) -> DataFrame:
+def rolling_fingerprint(docs: DataFrame) -> DataFrame:
     """Document fingerprint: winnowing-style — take word 8-gram
     shingles, hash each (md5 → first 16 hex chars as the rolling
     hash), keep the minimum as the document fingerprint. Robust to
@@ -176,34 +175,29 @@ def rolling_fingerprint(
     Hot-path shape: exploded codegen shingles + min-aggregate (one
     shuffle, map-side combine), not interpreted array transforms;
     a left join reattaches docs too short to shingle ('')."""
-    grams = word_ngram_rows(docs, text_col, id_col, window)
-    fp = grams.groupBy(id_col).agg(
+    grams = word_ngram_rows(docs, TEXT, DOC_ID, 8)
+    fp = grams.groupBy(DOC_ID).agg(
         F.min(F.substring(F.md5("gram"), 1, 16)).alias("__fp")
     )
     return (
-        docs.select(F.col(id_col))
-        .join(fp, id_col, "left")
+        docs.select(F.col(DOC_ID))
+        .join(fp, DOC_ID, "left")
         .select(
-            F.col(id_col), F.coalesce(F.col("__fp"), F.lit("")).alias("fingerprint")
+            F.col(DOC_ID), F.coalesce(F.col("__fp"), F.lit("")).alias("fingerprint")
         )
     )
 
 
-def lang_stats(docs: DataFrame, lang_col: str = "lang") -> DataFrame:
+def lang_stats(docs: DataFrame) -> DataFrame:
     """Corpus rollup by language label."""
-    return docs.groupBy(lang_col).agg(
+    return docs.groupBy("lang").agg(
         F.count("*").alias("doc_count"),
         F.sum("n_chars").alias("total_chars"),
         F.round(F.avg("n_chars"), 4).alias("avg_chars"),
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    k: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     """Top-k TF-IDF terms per document (keyword extraction):
     tf = term count in the doc, idf = ln(N / df), score = tf * idf.
 
@@ -225,11 +219,11 @@ def tfidf_top_terms(
     from pyspark.sql.window import Window
 
     toks = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("term"),
+        F.col(DOC_ID),
+        F.explode(F.split(normalized_text(F.col(TEXT)), " ")).alias("term"),
     )
     # two consumers (df aggregate, scored join)
-    tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    tf = toks.groupBy(DOC_ID, "term").agg(F.count("*").alias("tf"))
     tf = materialize(tf)
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
     n = docs.agg(F.count("*").cast("double").alias("n_docs"))
@@ -237,7 +231,7 @@ def tfidf_top_terms(
         tf.join(df_, "term")
         .crossJoin(F.broadcast(n))
         .select(
-            F.col(id_col),
+            F.col(DOC_ID),
             "term",
             "tf",
             F.round(
@@ -245,11 +239,11 @@ def tfidf_top_terms(
             ).alias("score"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("term"))
+    w = Window.partitionBy(DOC_ID).orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        .select(id_col, "term", "tf", "score", "rank")
+        .select(DOC_ID, "term", "tf", "score", "rank")
     )
 
 
@@ -277,12 +271,7 @@ def token_histogram(docs: DataFrame) -> DataFrame:
     )
 
 
-def doc_chunks(
-    docs: DataFrame,
-    chunk_tokens: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def doc_chunks(docs: DataFrame, chunk_tokens: int = 64) -> DataFrame:
     """Fixed-size token chunking — the sequence-preprocessing step
     that splits documents into training-window pieces. One projection
     chain: tokenize → sequence(0, n_chunks-1) explode → slice; no
@@ -290,17 +279,17 @@ def doc_chunks(
     pipelines inside the scan. Chunk text is emitted as an md5 so the
     output stays narrow. Output: (doc_id, chunk_id, n_chunk_tokens,
     chunk_hash)."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col(TEXT))
     n = F.size(toks)
     n_chunks = F.ceil(n / F.lit(float(chunk_tokens))).cast("int")
     chunked = docs.select(
-        F.col(id_col),
+        F.col(DOC_ID),
         toks.alias("__toks"),
         F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_id"),
     )
     piece = F.slice(F.col("__toks"), F.col("chunk_id") * chunk_tokens + 1, chunk_tokens)
     return chunked.select(
-        F.col(id_col),
+        F.col(DOC_ID),
         F.col("chunk_id").cast("long").alias("chunk_id"),
         F.size(piece).cast("long").alias("n_chunk_tokens"),
         F.md5(F.array_join(piece, " ")).alias("chunk_hash"),
@@ -324,8 +313,6 @@ def ngram_decontaminate(
     train: DataFrame,
     eval_docs: DataFrame,
     n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Benchmark decontamination: training documents that share any
     word n-gram with the eval/benchmark set, with the count of
@@ -336,16 +323,16 @@ def ngram_decontaminate(
     so it broadcasts and the corpus streams through map-side, never
     shuffling the training grams. Output: (doc_id, shared_ngrams),
     contaminated docs only."""
-    grams = ngram_hashes(tokens(F.col(text_col)), n)
+    grams = ngram_hashes(tokens(F.col(TEXT)), n)
     # gram construction (tokenize + n md5s per position) is the heavy
     # map work — spread the pre-explosion rows if the scan can't split
     train_g = ensure_parallelism(train).select(
-        F.col(id_col), F.explode(grams).alias("g")
+        F.col(DOC_ID), F.explode(grams).alias("g")
     )
     eval_g = eval_docs.select(F.explode(grams).alias("g")).distinct()
     return (
         train_g.join(F.broadcast(eval_g), "g")
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(F.count(F.lit(1)).alias("shared_ngrams"))
     )
 
@@ -383,7 +370,7 @@ def fuzzy_name_pairs(
     )
 
 
-def length_deciles(docs: DataFrame, len_col: str = "n_chars") -> DataFrame:
+def length_deciles(docs: DataFrame) -> DataFrame:
     """Decile assignment by document length via broadcast percentile
     thresholds — the scale-friendly alternative to a global-sort
     ntile: one exact-percentile aggregate (9 doubles) broadcast back,
@@ -392,15 +379,15 @@ def length_deciles(docs: DataFrame, len_col: str = "n_chars") -> DataFrame:
     (doc_id, n_chars, decile)."""
     qs = docs.agg(
         F.expr(
-            f"percentile({len_col}, array({', '.join(str(i / 10) for i in range(1, 10))}))"
+            f"percentile({N_CHARS}, array({', '.join(str(i / 10) for i in range(1, 10))}))"
         ).alias("qs")
     )
     decile = F.lit(1)
     for i in range(9):
-        decile = decile + (F.col(len_col) > F.element_at(F.col("qs"), i + 1)).cast("int")
+        decile = decile + (F.col(N_CHARS) > F.element_at(F.col("qs"), i + 1)).cast("int")
     return docs.crossJoin(F.broadcast(qs)).select(
         "doc_id",
-        F.col(len_col).cast("long").alias("n_chars"),
+        F.col(N_CHARS).cast("long").alias("n_chars"),
         decile.cast("long").alias("decile"),
     )
 
@@ -417,9 +404,7 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def pii_redaction(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def pii_redaction(docs: DataFrame) -> DataFrame:
     """PII scrubbing — detect and mask emails / SSNs / phone numbers,
     the standard pre-training privacy pass.
 
@@ -433,7 +418,7 @@ def pii_redaction(
     Output: (doc_id, n_emails, n_ssns, n_phones, pii_total,
     redacted_md5, redacted_len).
     """
-    text = F.col(text_col)
+    text = F.col(TEXT)
     counts = {
         f"n_{name}s": F.size(
             F.regexp_extract_all(text, F.lit(pat), F.lit(0))
@@ -447,7 +432,7 @@ def pii_redaction(
     for c in counts.values():
         total = c if total is None else total + c
     return docs.select(
-        F.col(id_col),
+        F.col(DOC_ID),
         *[c.alias(n) for n, c in counts.items()],
         total.alias("pii_total"),
         F.md5(red).alias("redacted_md5"),
@@ -455,12 +440,7 @@ def pii_redaction(
     )
 
 
-def boilerplate_removal(
-    docs: DataFrame,
-    min_docs: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def boilerplate_removal(docs: DataFrame, min_docs: int = 5) -> DataFrame:
     """C4-style corpus-wide boilerplate removal: a sentence (split on
     '. ') whose normalized form appears in >= min_docs distinct
     documents is boilerplate; every doc is rebuilt from its kept
@@ -476,12 +456,12 @@ def boilerplate_removal(
     cleaned_md5).
     """
     sents = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), r"\. ")).alias("pos", "sent"),
+        F.col(DOC_ID),
+        F.posexplode(F.split(F.col(TEXT), r"\. ")).alias("pos", "sent"),
     ).withColumn("h", F.md5(F.lower(F.trim(F.col("sent")))))
     boiler = (
         sents.groupBy("h")
-        .agg(F.countDistinct(id_col).alias("n_docs"))
+        .agg(F.countDistinct(DOC_ID).alias("n_docs"))
         .filter(F.col("n_docs") >= min_docs)
         .select("h", F.lit(True).alias("is_b"))
     )
@@ -494,7 +474,7 @@ def boilerplate_removal(
     kept_struct = F.when(
         F.col("is_b").isNull(), F.struct(F.col("pos"), F.col("sent"))
     )
-    return marked.groupBy(id_col).agg(
+    return marked.groupBy(DOC_ID).agg(
         F.count(F.lit(1)).alias("n_sentences"),
         (F.count(F.lit(1)) - F.count("is_b")).alias("n_kept"),
         F.count("is_b").alias("n_dropped"),
@@ -510,11 +490,7 @@ def boilerplate_removal(
     )
 
 
-def token_entropy(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def token_entropy(docs: DataFrame) -> DataFrame:
     """Per-document token-distribution entropy in bits — the cheap
     perplexity proxy used as a quality/repetition signal (low entropy
     = repetitive or templated text). H = -Σ (c/n)·log2(c/n) over the
@@ -527,11 +503,11 @@ def token_entropy(
     exact doubles would hash-mismatch at the ulp; integers survive.
     Output: (doc_id, n_tokens, entropy_millibits)."""
     toks = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.explode(tokens(F.col(text_col))).alias("tok"),
+        F.col(DOC_ID),
+        F.explode(tokens(F.col(TEXT))).alias("tok"),
     )
-    tf = toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("c"))
-    return tf.groupBy(id_col).agg(
+    tf = toks.groupBy(DOC_ID, "tok").agg(F.count(F.lit(1)).alias("c"))
+    return tf.groupBy(DOC_ID).agg(
         F.sum("c").cast("long").alias("n_tokens"),
         F.floor(
             F.lit(1000.0)
@@ -543,9 +519,7 @@ def token_entropy(
     )
 
 
-def line_dedup(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def line_dedup(docs: DataFrame) -> DataFrame:
     """Within-document repeated-sentence removal: keep the FIRST
     occurrence of each distinct sentence in a document, drop the
     repeats, and emit the rebuilt text as an md5 pin. The per-document
@@ -560,14 +534,14 @@ def line_dedup(
     cleaned_md5).
     """
     sents = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.size(F.split(F.col(text_col), r"\. ")).alias("n_total"),
-        F.posexplode(F.split(F.col(text_col), r"\. ")).alias("pos", "sent"),
+        F.col(DOC_ID),
+        F.size(F.split(F.col(TEXT), r"\. ")).alias("n_total"),
+        F.posexplode(F.split(F.col(TEXT), r"\. ")).alias("pos", "sent"),
     )
-    first = sents.groupBy(id_col, "sent").agg(
+    first = sents.groupBy(DOC_ID, "sent").agg(
         F.min("pos").alias("pos"), F.max("n_total").alias("n_total")
     )
-    return first.groupBy(id_col).agg(
+    return first.groupBy(DOC_ID).agg(
         F.count(F.lit(1)).cast("long").alias("kept_sentences"),
         (F.max("n_total") - F.count(F.lit(1)))
         .cast("long")
@@ -697,9 +671,7 @@ def _zipf_head(counts: DataFrame, k: int) -> DataFrame:
     )
 
 
-def unigram_logprob(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """Unigram language-model negative log-likelihood per document —
     the classic cheap perplexity proxy for quality filtering: docs
     whose tokens are globally rare (high avg NLL) are gibberish/noise
@@ -715,7 +687,7 @@ def unigram_logprob(
     Output: (doc_id, n_tokens, sum_nll_micro, avg_nll_micro).
     """
     toks = ensure_parallelism(docs).select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term")
+        F.col(DOC_ID), F.explode(tokens(F.col(TEXT))).alias("term")
     )
     # deliberately NOT checkpointed: the scalar-total branch replays
     # one tokenize+count pass, which parallel stages recompute for
@@ -731,16 +703,14 @@ def unigram_logprob(
         .alias("nll_micro"),
     )
     return _doc_sum(
-        toks, scored, "term", id_col, "nll_micro", "n_tokens", "sum_nll_micro"
+        toks, scored, "term", DOC_ID, "nll_micro", "n_tokens", "sum_nll_micro"
     ).withColumn(
         "avg_nll_micro",
         (F.col("sum_nll_micro") / F.col("n_tokens")).cast("long"),
     )
 
 
-def bigram_logprob(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def bigram_logprob(docs: DataFrame) -> DataFrame:
     """Bigram-LM negative log-likelihood per document — the
     conditional upgrade of unigram_logprob: per adjacent token pair,
     -ln p(w2 | w1) with p MLE-estimated from the corpus itself
@@ -755,7 +725,7 @@ def bigram_logprob(
     shingle source). Output: (doc_id, n_bigrams, sum_nll_micro,
     avg_nll_micro).
     """
-    bg, table, left, _, _ = _bigram_table(docs, text_col, id_col)
+    bg, table, left, _, _ = _bigram_table(docs, TEXT, DOC_ID)
     scored = table.join(left, "w1").select(
         "gram",
         F.floor(
@@ -766,20 +736,14 @@ def bigram_logprob(
         .alias("nll_micro"),
     )
     return _doc_sum(
-        bg, scored, "gram", id_col, "nll_micro", "n_bigrams", "sum_nll_micro"
+        bg, scored, "gram", DOC_ID, "nll_micro", "n_bigrams", "sum_nll_micro"
     ).withColumn(
         "avg_nll_micro",
         (F.col("sum_nll_micro") / F.col("n_bigrams")).cast("long"),
     )
 
 
-def dsir_logratio(
-    docs: DataFrame,
-    target_source: str = "src0",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-) -> DataFrame:
+def dsir_logratio(docs: DataFrame, target_source: str = "src0") -> DataFrame:
     """DSIR-style importance log-ratio per document (Xie et al.,
     Data Selection for LMs via Importance Resampling): score each doc
     by Σ_tok [ln p_target(tok) − ln p_rest(tok)] under Laplace-
@@ -801,9 +765,9 @@ def dsir_logratio(
     avg_lr_micro).
     """
     toks = ensure_parallelism(docs).select(
-        F.col(id_col),
-        (F.col(source_col) == target_source).alias("__is_t"),
-        F.explode(tokens(F.col(text_col))).alias("term"),
+        F.col(DOC_ID),
+        (F.col(SOURCE) == target_source).alias("__is_t"),
+        F.explode(tokens(F.col(TEXT))).alias("term"),
     )
     # deliberately NOT checkpointed (as in unigram_logprob: over two
     # A/B pairs a barrier here read +10-21% while the replayed
@@ -830,7 +794,7 @@ def dsir_logratio(
         .alias("lr_micro"),
     )
     return _doc_sum(
-        toks, scored, "term", id_col, "lr_micro", "n_tokens", "sum_lr_micro"
+        toks, scored, "term", DOC_ID, "lr_micro", "n_tokens", "sum_lr_micro"
     ).withColumn(
         "avg_lr_micro",
         F.floor(
@@ -839,12 +803,7 @@ def dsir_logratio(
     )
 
 
-def vocab_growth_curve(
-    docs: DataFrame,
-    n_shards: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def vocab_growth_curve(docs: DataFrame, n_shards: int = 16) -> DataFrame:
     """Heaps-law vocabulary-growth audit across curriculum shards:
     walk the corpus in id order, cut it into n_shards equal-width id
     ranges (the sequential-ingestion curriculum shape), and report,
@@ -863,15 +822,15 @@ def vocab_growth_curve(
     """
     from pyspark.sql import Window
 
-    mx = docs.agg(F.max(F.col(id_col)).alias("__mx"))
+    mx = docs.agg(F.max(F.col(DOC_ID)).alias("__mx"))
     toks = (
         ensure_parallelism(docs)
         .crossJoin(F.broadcast(mx))
         .select(
-            F.expr(f"{id_col} * {int(n_shards)} DIV (__mx + 1)").alias(
+            F.expr(f"{DOC_ID} * {int(n_shards)} DIV (__mx + 1)").alias(
                 "shard_id"
             ),
-            F.explode(tokens(F.col(text_col))).alias("term"),
+            F.explode(tokens(F.col(TEXT))).alias("term"),
         )
     )
     # ONE pass over the token explode into a (term, shard) count; two
@@ -924,18 +883,16 @@ CLASSIFIER_WEIGHTS = {
 }
 
 
-def quality_classifier_score(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def quality_classifier_score(docs: DataFrame) -> DataFrame:
     """Linear quality-classifier scoring over the heuristic feature
     vector: z = w·x + b, keep = (z >= 0). One zero-shuffle projection
     per doc; z is emitted floor-quantized to micro-units (pure
     fixed-order double arithmetic over exact ratio features — no ln/
     exp on either the score or the decision, so the output is exact
     on any IEEE engine). Output: (doc_id, z_micro, keep)."""
-    z = _classifier_z(text_col)
+    z = _classifier_z(TEXT)
     return ensure_parallelism(docs).select(
-        F.col(id_col),
+        F.col(DOC_ID),
         F.floor(z * F.lit(1_000_000.0)).cast("long").alias("z_micro"),
         (z >= 0).alias("keep"),
     )
@@ -958,12 +915,7 @@ def _classifier_z(text_col: str) -> Column:
     )
 
 
-def classifier_auc_calibration(
-    docs: DataFrame,
-    n_bins: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def classifier_auc_calibration(docs: DataFrame) -> DataFrame:
     """Exact evaluation of the linear quality classifier against the
     production curation gate (the corpus_curation / funnel stage-1
     reference label): ROC-AUC via the tie-corrected Mann-Whitney
@@ -988,7 +940,7 @@ def classifier_auc_calibration(
     ONCE per doc (p_micro = ⌊10⁶/(1+e^(−z_micro/10⁶))⌋ — a
     fixed-shape double expression over the already-quantized integer
     score, the doc_kn_nll cross-engine idiom), then binned on the
-    fixed p-grid (bin = min(n_bins−1, p_micro·n_bins DIV 10⁶), the
+    fixed p-grid (bin = min(N_BINS−1, p_micro·N_BINS DIV 10⁶), the
     PSI grid shape); per bin the mean prediction and the empirical
     gate rate are exact integer DIVs.
 
@@ -1001,7 +953,7 @@ def classifier_auc_calibration(
     is absent (AUC undefined).
     """
     per_doc = materialize(
-        _scored_vs_gate(docs, text_col)
+        _scored_vs_gate(docs, TEXT)
         .select(
             "z_micro",
             "y",
@@ -1020,8 +972,8 @@ def classifier_auc_calibration(
     bins = (
         per_doc.groupBy(
             F.least(
-                F.lit(n_bins - 1),
-                F.expr(f"p_micro * {n_bins} DIV 1000000"),
+                F.lit(N_BINS - 1),
+                F.expr(f"p_micro * {N_BINS} DIV 1000000"),
             )
             .cast("long")
             .alias("bin_id")
@@ -1073,10 +1025,7 @@ def _scored_vs_gate(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def classifier_pr_curve(
-    docs: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
+def classifier_pr_curve(docs: DataFrame) -> DataFrame:
     """Exact precision-recall summary of the linear quality
     classifier against the curation gate — the decision-threshold
     companion of classifier_auc_calibration (AUC says the score
@@ -1101,7 +1050,7 @@ def classifier_pr_curve(
     from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
 
     hist = materialize(
-        _scored_vs_gate(docs, text_col)
+        _scored_vs_gate(docs, TEXT)
         .groupBy("z_micro")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
@@ -1337,12 +1286,7 @@ def _lr_standardized(
     )
 
 
-def classifier_train_lr(
-    docs: DataFrame,
-    k_steps: int = 12,
-    lr_ppm: int = 2_000_000,
-    text_col: str = "text",
-) -> DataFrame:
+def classifier_train_lr(docs: DataFrame, k_steps: int = 12) -> DataFrame:
     """Logistic-regression TRAINING of the quality keep/drop
     classifier against the production curation gate — closes the
     classifier loop: the engine scores (quality_classifier_score),
@@ -1364,7 +1308,7 @@ def classifier_train_lr(
       p_micro = ⌊10⁶·σ(z_micro/10⁶)⌋ (the classifier_auc_calibration
       cross-engine sigmoid), residual r = p − 10⁶·y, and the gradient
       sums g_j = Σ r·x_j in DECIMAL(38,0);
-    - update w_j ← w_j − (lr_ppm·g_j) DIV (n·10¹²) — all weights stay
+    - update w_j ← w_j − (LR_PPM·g_j) DIV (n·10¹²) — all weights stay
       integer micro, so the trajectory hashes identically in DuckDB.
 
     Scale shape: ONE corpus scan into a 6-column integer projection,
@@ -1383,8 +1327,8 @@ def classifier_train_lr(
     STANDARDIZED features (_lr_standardized re-derives the feature
     relation to score with them).
     """
-    feat = _lr_standardized(docs, text_col)
-    trajectory = _lr_gd_trajectory(feat, k_steps, lr_ppm)
+    feat = _lr_standardized(docs, TEXT)
+    trajectory = _lr_gd_trajectory(feat, k_steps, LR_PPM)
     spark = docs.sparkSession
     # literal weight table via inline() — stays JVM-side (a
     # createDataFrame of Python rows would ship through a pickled
@@ -1472,12 +1416,7 @@ def _lr_gd_trajectory(
     return trajectory
 
 
-def classifier_apply_trained(
-    docs: DataFrame,
-    k_steps: int = 12,
-    lr_ppm: int = 2_000_000,
-    text_col: str = "text",
-) -> DataFrame:
+def classifier_apply_trained(docs: DataFrame) -> DataFrame:
     """Advisor-EXECUTING pattern #8 — DEPLOY the trained classifier:
     classifier_train_lr learns the keep/drop weights; this scores
     every document with the step-k trained weights and reports, per
@@ -1505,15 +1444,15 @@ def classifier_apply_trained(
     """
     feat = _lr_standardized(
         docs,
-        text_col,
+        TEXT,
         carry=(
             ("source", F.col("source")),
-            ("kh", _classifier_z(text_col) >= 0),
+            ("kh", _classifier_z(TEXT) >= 0),
         ),
     )
     fcols = ["x0"] + [f"sx{j}" for j in range(1, 6)]
     trajectory = _lr_gd_trajectory(
-        feat.select(*fcols, "y"), k_steps, lr_ppm
+        feat.select(*fcols, "y"), 12, LR_PPM
     )
     # final weights inlined as decimal literals (the trajectory's own
     # idiom) — the scoring pass needs no broadcast join at all
@@ -1547,9 +1486,7 @@ def classifier_apply_trained(
     )
 
 
-def tokenizer_fertility(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def tokenizer_fertility(docs: DataFrame) -> DataFrame:
     """Tokenizer-fertility audit per source: subwords per whitespace
     word (fertility — the standard tokenizer-fit metric; high
     fertility on a domain means the vocabulary splits its words into
@@ -1557,12 +1494,12 @@ def tokenizer_fertility(
     floor-ppm ratios — single scan, one #sources-bounded aggregate.
     Output: (source, n_docs, words, subwords, fertility_ppm,
     chars_per_subword_ppm)."""
-    t = tokens(F.col(text_col))
+    t = tokens(F.col(TEXT))
     per_doc = ensure_parallelism(docs).select(
         F.col("source"),
         F.size(t).alias("words"),
-        F.size(bpe_ish_tokens(F.col(text_col))).alias("subwords"),
-        F.length(F.col(text_col)).alias("chars"),
+        F.size(bpe_ish_tokens(F.col(TEXT))).alias("subwords"),
+        F.length(F.col(TEXT)).alias("chars"),
     )
     g = per_doc.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -1588,9 +1525,7 @@ def tokenizer_fertility(
     )
 
 
-def langid_margin(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def langid_margin(docs: DataFrame) -> DataFrame:
     """Language-ID confidence audit: per doc, the winning language,
     its stopword-hit count, and the margin over the runner-up — the
     0-margin slice is exactly the undecidable set a pipeline routes
@@ -1598,7 +1533,7 @@ def langid_margin(
     struct array built row-local (4 langs — constant width), so the
     whole operator is a zero-shuffle projection.
     Output: (doc_id, lang, hits, margin)."""
-    t = tokens(F.col(text_col))
+    t = tokens(F.col(TEXT))
     scores = F.array(
         *[
             F.struct(
@@ -1613,7 +1548,7 @@ def langid_margin(
     # descending by (hits, lang): array_sort is ascending -> reverse
     ordered = F.reverse(F.array_sort(scores))
     return ensure_parallelism(docs).select(
-        F.col(id_col),
+        F.col(DOC_ID),
         ordered[0]["lang"].alias("lang"),
         ordered[0]["hits"].cast("long").alias("hits"),
         (ordered[0]["hits"] - ordered[1]["hits"]).cast("long").alias("margin"),
@@ -1624,9 +1559,6 @@ def contamination_report(
     train: DataFrame,
     eval_sets: dict[str, DataFrame],
     n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
 ) -> DataFrame:
     """Benchmark-contamination matrix: for every (eval_set, training
     source), how many training docs share an n-gram with that
@@ -1639,7 +1571,7 @@ def contamination_report(
     map-side join regardless of how many benchmarks are checked.
     Output: (eval_set, source, contaminated_docs, total_docs,
     contaminated_ppm)."""
-    grams = ngram_hashes(tokens(F.col(text_col)), n)
+    grams = ngram_hashes(tokens(F.col(TEXT)), n)
     ev_all = None
     for name, ev in sorted(eval_sets.items()):
         g = ev.select(F.explode(grams).alias("g")).distinct().select(
@@ -1647,17 +1579,17 @@ def contamination_report(
         )
         ev_all = g if ev_all is None else ev_all.unionByName(g)
     train_g = ensure_parallelism(train).select(
-        F.col(id_col), F.col(source_col).alias("source"),
+        F.col(DOC_ID), F.col(SOURCE).alias("source"),
         F.explode(grams).alias("g"),
     )
     hits = (
         train_g.join(F.broadcast(ev_all), "g")
-        .select("eval_set", "source", id_col)
+        .select("eval_set", "source", DOC_ID)
         .distinct()
         .groupBy("eval_set", "source")
         .agg(F.count(F.lit(1)).cast("long").alias("contaminated_docs"))
     )
-    totals = train.groupBy(F.col(source_col).alias("source")).agg(
+    totals = train.groupBy(F.col(SOURCE).alias("source")).agg(
         F.count(F.lit(1)).cast("long").alias("total_docs")
     )
     return (
@@ -1677,14 +1609,8 @@ def contamination_report(
     )
 
 
-def vocab_oov_rate(
-    docs: DataFrame,
-    vocab_size: int = 1024,
-    text_col: str = "text",
-    source_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Vocabulary coverage audit: build the corpus top-`vocab_size`
+def vocab_oov_rate(docs: DataFrame) -> DataFrame:
+    """Vocabulary coverage audit: build the corpus top-1024
     token vocabulary (by total frequency, ties broken
     lexicographically — fully deterministic), then measure each
     source's out-of-vocabulary token rate. The signal a tokenizer /
@@ -1695,20 +1621,20 @@ def vocab_oov_rate(
     the token key), the vocab is a distributed top-k
     (TakeOrderedAndProject — never a global sort of the token
     relation), and the per-source pass streams through ONE broadcast
-    join against the ≤vocab_size-row vocab. Two token-keyed shuffles
+    join against the ≤1024-row vocab. Two token-keyed shuffles
     total; text never shuffles.
 
     Output: (source, n_tokens, oov_tokens, oov_ppm).
     """
     toks = ensure_parallelism(docs).select(
-        F.col(source_col).alias("source"),
-        F.explode(tokens(F.col(text_col))).alias("tok"),
+        F.col(SOURCE).alias("source"),
+        F.explode(tokens(F.col(TEXT))).alias("tok"),
     )
     vocab = (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.desc("c"), F.asc("tok"))
-        .limit(vocab_size)
+        .limit(1024)
         .select("tok", F.lit(True).alias("in_vocab"))
     )
     marked = toks.join(F.broadcast(vocab), "tok", "left")
@@ -1729,9 +1655,7 @@ def vocab_oov_rate(
     )
 
 
-def readability_stats(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def readability_stats(docs: DataFrame) -> DataFrame:
     """Per-document readability counting stats with a Flesch-style
     score. Sentences = non-empty '[.!?]+' segments (minimum 1 so
     punctuation-free text is one sentence); syllables = vowel-group
@@ -1746,7 +1670,7 @@ def readability_stats(
     whole-stage codegen, linear in the scan.
     Output: (doc_id, n_sents, n_words, n_syllables, flesch_milli).
     """
-    text = F.lower(F.col(text_col))
+    text = F.lower(F.col(TEXT))
     sents = F.size(
         F.filter(
             F.split(text, r"[.!?]+"),
@@ -1754,7 +1678,7 @@ def readability_stats(
         )
     )
     n_sents = F.greatest(sents, F.lit(1))
-    words = F.size(tokens(F.col(text_col)))
+    words = F.size(tokens(F.col(TEXT)))
     n_words = F.greatest(words, F.lit(1))
     syll = F.size(F.regexp_extract_all(text, F.lit("[aeiou]+"), 0))
     score = (
@@ -1763,7 +1687,7 @@ def readability_stats(
         - F.lit(84.6) * (syll.cast("double") / n_words.cast("double"))
     )
     return ensure_parallelism(docs).select(
-        F.col(id_col),
+        F.col(DOC_ID),
         n_sents.cast("long").alias("n_sents"),
         n_words.cast("long").alias("n_words"),
         syll.cast("long").alias("n_syllables"),
@@ -1771,34 +1695,29 @@ def readability_stats(
     )
 
 
-def char_ngram_novelty(
-    docs: DataFrame,
-    n: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document character-n-gram novelty ratio — the cheap
+def char_ngram_novelty(docs: DataFrame) -> DataFrame:
+    """Per-document character-4-gram novelty ratio — the cheap
     compressibility proxy (a gzip-able, templated, or repetitive doc
-    has few distinct char n-grams relative to its length; natural
+    has few distinct char 4-grams relative to its length; natural
     prose is near 1.0). Used as a quality filter alongside the
     token-level repetition signals.
 
-    Row-local: the n-gram array is built with a codegen transform
+    Row-local: the 4-gram array is built with a codegen transform
     over a sequence — no explode, no shuffle; output is 4 narrow
     columns per doc.
     Output: (doc_id, n_grams, distinct_grams, novelty_ppm).
     """
-    text = F.lower(F.col(text_col))
-    n_grams = F.greatest(F.length(text) - F.lit(n - 1), F.lit(0))
+    text = F.lower(F.col(TEXT))
+    n_grams = F.greatest(F.length(text) - F.lit(3), F.lit(0))
     grams = F.when(
         n_grams > 0,
         F.transform(
             F.sequence(F.lit(1), n_grams),
-            lambda i: F.substring(text, i, n),
+            lambda i: F.substring(text, i, 4),
         ),
     ).otherwise(F.array().cast("array<string>"))
     return ensure_parallelism(docs).select(
-        F.col(id_col),
+        F.col(DOC_ID),
         n_grams.cast("long").alias("n_grams"),
         F.size(F.array_distinct(grams)).cast("long").alias("distinct_grams"),
         F.when(n_grams > 0,
@@ -1816,12 +1735,7 @@ def char_ngram_novelty(
 TV_RESIDUAL_TOKEN = " __other__ "
 
 
-def source_tv_distance(
-    docs: DataFrame,
-    vocab_size: int = 1024,
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def source_tv_distance(docs: DataFrame, vocab_size: int = 1024) -> DataFrame:
     """Pairwise total-variation distance between per-source unigram
     distributions — the domain-shift audit behind mixture decisions:
     two sources at tv_ppm ≈ 0 are interchangeable for sampling
@@ -1857,8 +1771,8 @@ def source_tv_distance(
     source and sorts first).
     """
     toks = ensure_parallelism(docs).select(
-        F.col(source_col).alias("source"),
-        F.explode(tokens(F.col(text_col))).alias("tok"),
+        F.col(SOURCE).alias("source"),
+        F.explode(tokens(F.col(TEXT))).alias("tok"),
     )
     # three consumers (totals, top-K vocab, K-vocab restriction);
     # vocabulary-scale, never corpus-scale
@@ -1935,14 +1849,7 @@ def source_tv_distance(
     )
 
 
-def template_clusters(
-    docs: DataFrame,
-    prefix_tokens: int = 8,
-    min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-) -> DataFrame:
+def template_clusters(docs: DataFrame, prefix_tokens: int = 8) -> DataFrame:
     """Template-page detector: cluster documents by the hash of their
     first `prefix_tokens` normalized tokens. Machine-generated pages
     (error pages, listing templates, mirrored license headers) share
@@ -1953,20 +1860,20 @@ def template_clusters(
     prefix hash; no shingles, no pair expansion).
 
     Output: (template_md5, n_docs, n_sources, example_doc_id,
-    total_chars) for clusters of ≥ `min_docs` docs, where
+    total_chars) for clusters of ≥ 2 docs, where
     example_doc_id is the cluster's minimum id and total_chars the
     reclaimable char volume if the cluster collapsed to one doc.
     """
     prefix = F.concat_ws(
-        " ", F.slice(tokens(F.col(text_col)), 1, prefix_tokens)
+        " ", F.slice(tokens(F.col(TEXT)), 1, prefix_tokens)
     )
     return (
         ensure_parallelism(docs)
         .select(
             F.md5(prefix).alias("template_md5"),
-            F.col(id_col),
-            F.col(source_col).alias("source"),
-            F.length(F.col(text_col)).cast("long").alias("n_chars"),
+            F.col(DOC_ID),
+            F.col(SOURCE).alias("source"),
+            F.length(F.col(TEXT)).cast("long").alias("n_chars"),
         )
         .groupBy("template_md5")
         .agg(
@@ -1975,10 +1882,10 @@ def template_clusters(
             F.countDistinct(F.struct("source"))
             .cast("long")
             .alias("n_sources"),
-            F.min(id_col).cast("long").alias("example_doc_id"),
+            F.min(DOC_ID).cast("long").alias("example_doc_id"),
             F.sum("n_chars").cast("long").alias("total_chars"),
         )
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= 2)
     )
 
 
@@ -1986,8 +1893,6 @@ def bm25_topk(
     docs: DataFrame,
     query_terms: tuple[str, ...] = ("spark", "join", "window"),
     k: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """BM25 retrieval scoring (Robertson/Sparck Jones; the Lucene
     `ln(1 + (N - df + 0.5)/(df + 0.5))` non-negative idf variant,
@@ -2016,10 +1921,10 @@ def bm25_topk(
     """
     terms = [t.lower() for t in query_terms]
     base = ensure_parallelism(docs).select(
-        F.col(id_col), tokens(F.col(text_col)).alias("__toks")
+        F.col(DOC_ID), tokens(F.col(TEXT)).alias("__toks")
     )
     doclen = base.select(
-        F.col(id_col), F.size("__toks").cast("long").alias("dl")
+        F.col(DOC_ID), F.size("__toks").cast("long").alias("dl")
     )
     totals = doclen.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -2028,12 +1933,12 @@ def bm25_topk(
     # two consumers (df_t, scored)
     tf = materialize(
         base.select(
-            F.col(id_col),
+            F.col(DOC_ID),
             F.size("__toks").cast("long").alias("dl"),
             F.explode("__toks").alias("term"),
         )
         .filter(F.col("term").isin(terms))
-        .groupBy(id_col, "term")
+        .groupBy(DOC_ID, "term")
         .agg(
             F.count(F.lit(1)).cast("long").alias("tf"),
             F.max("dl").alias("dl"),
@@ -2046,7 +1951,7 @@ def bm25_topk(
         tf.join(F.broadcast(df_t), "term")
         .crossJoin(F.broadcast(totals))
         .select(
-            F.col(id_col),
+            F.col(DOC_ID),
             F.floor(
                 F.lit(1_000_000.0)
                 * F.log(
@@ -2074,12 +1979,12 @@ def bm25_topk(
         )
     )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy(DOC_ID)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_terms_hit"),
             F.sum("s_micro").cast("long").alias("bm25_micro"),
         )
-        .orderBy(F.desc("bm25_micro"), F.asc(id_col))
+        .orderBy(F.desc("bm25_micro"), F.asc(DOC_ID))
         .limit(k)
     )
 
@@ -2087,15 +1992,9 @@ def bm25_topk(
 def hybrid_retrieval_topk(
     docs: DataFrame,
     embeddings: DataFrame,
-    query_terms: tuple[str, ...] = ("spark", "join", "window"),
     n_candidates: int = 50,
     m_feedback: int = 10,
     k: int = 10,
-    scale_bits: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Retrieve-then-rerank — the two-stage shape of a production
     RAG / curation retriever: BM25 keyword retrieval proposes
@@ -2108,7 +2007,7 @@ def hybrid_retrieval_topk(
     unchanged.
 
     Exactness contract: embeddings quantize once to
-    q = floor(v·2^scale_bits) (the lsh_topk_exact idiom,
+    q = floor(v·2^8) (the lsh_topk_exact idiom,
     similarity.py); the feedback centroid, every dot product, and
     every squared norm are exact integer sums, and only the final
     cos_mppm = floor(1e6·d/(√nq2·√nd2)) touches doubles — one
@@ -2134,31 +2033,28 @@ def hybrid_retrieval_topk(
         int_dot,
     )
 
-    cand = bm25_topk(
-        docs, query_terms, k=n_candidates,
-        text_col=text_col, id_col=id_col,
-    )
+    cand = bm25_topk(docs, k=n_candidates)
     # three consumers (vector prune, feedback pick, final projection)
     cand = materialize(cand)
     cvec = (
         embeddings.select(
-            F.col(vec_id_col).alias(id_col),
-            _quantize(F.col(vec_col), scale_bits).alias("q"),
+            F.col("vec_id").alias(DOC_ID),
+            _quantize(F.col("embedding"), 8).alias("q"),
         )
-        .join(F.broadcast(cand.select(id_col)), id_col, "semi")
+        .join(F.broadcast(cand.select(DOC_ID)), DOC_ID, "semi")
         .select(
-            id_col, "q", int_dot(F.col("q"), F.col("q")).alias("nd2")
+            DOC_ID, "q", int_dot(F.col("q"), F.col("q")).alias("nd2")
         )
     )
     # two consumers (centroid, rerank)
     cvec = materialize(cvec)
     fb_ids = (
-        cand.orderBy(F.desc("bm25_micro"), F.asc(id_col))
+        cand.orderBy(F.desc("bm25_micro"), F.asc(DOC_ID))
         .limit(m_feedback)
-        .select(id_col)
+        .select(DOC_ID)
     )
     fb_dims = (
-        cvec.join(F.broadcast(fb_ids), id_col, "semi")
+        cvec.join(F.broadcast(fb_ids), DOC_ID, "semi")
         .select(F.posexplode("q").alias("pos", "qd"))
         .groupBy("pos")
         .agg(F.sum("qd").cast("long").alias("qs"))
@@ -2168,10 +2064,10 @@ def hybrid_retrieval_topk(
     )
     dots = (
         cvec.select(
-            id_col, "nd2", F.posexplode("q").alias("pos", "qd")
+            DOC_ID, "nd2", F.posexplode("q").alias("pos", "qd")
         )
         .join(F.broadcast(fb_dims), "pos")
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(
             F.max("nd2").alias("nd2"),
             F.sum(F.col("qd") * F.col("qs")).cast("long").alias("d"),
@@ -2181,22 +2077,18 @@ def hybrid_retrieval_topk(
         dots.crossJoin(F.broadcast(qnorm))
         # zero-norm vectors (all-zero quantization) have no direction
         .filter((F.col("nd2") > 0) & (F.col("nq2") > 0))
-        .select(id_col, _cos_mppm(F.col("d"), "nq2", "nd2").alias("cos_mppm"))
+        .select(DOC_ID, _cos_mppm(F.col("d"), "nq2", "nd2").alias("cos_mppm"))
     )
-    w = Window.orderBy(F.desc("cos_mppm"), F.asc(id_col))
+    w = Window.orderBy(F.desc("cos_mppm"), F.asc(DOC_ID))
     return (
-        scored.join(F.broadcast(cand), id_col)
+        scored.join(F.broadcast(cand), DOC_ID)
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        .select(id_col, "rank", "cos_mppm", "n_terms_hit", "bm25_micro")
+        .select(DOC_ID, "rank", "cos_mppm", "n_terms_hit", "bm25_micro")
     )
 
 
-def bpe_merge_candidates(
-    docs: DataFrame,
-    k: int = 20,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_merge_candidates(docs: DataFrame) -> DataFrame:
     """First-iteration BPE merge statistics — the tokenizer-training
     counterpart of tokenizer_fertility: for every adjacent character
     pair, the corpus-frequency-weighted occurrence count, i.e. the
@@ -2209,13 +2101,13 @@ def bpe_merge_candidates(
     count aggregate, and the pair explode touches each distinct form
     once. Overlapping occurrences count individually ("aaa" has two
     "aa" pairs), matching the standard counting stage. The final
-    top-k is (count desc, pair asc) + limit ⇒ TakeOrderedAndProject.
+    top-20 is (count desc, pair asc) + limit ⇒ TakeOrderedAndProject.
     All counts are exact integers. Output:
     (pair, n_word_forms, merge_count).
     """
     words = (
         ensure_parallelism(docs)
-        .select(F.explode(tokens(F.col(text_col))).alias("w"))
+        .select(F.explode(tokens(F.col(TEXT))).alias("w"))
         .filter(F.length("w") >= 2)
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("wc"))
@@ -2234,7 +2126,7 @@ def bpe_merge_candidates(
             F.sum("wc").cast("long").alias("merge_count"),
         )
         .orderBy(F.desc("merge_count"), F.asc("pair"))
-        .limit(k)
+        .limit(20)
     )
 
 
@@ -2284,11 +2176,7 @@ def _rule_battery(
 GOPHER_STOP_PANEL = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def gopher_rules_audit(
-    docs: DataFrame,
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def gopher_rules_audit(docs: DataFrame) -> DataFrame:
     """Gopher quality-rule battery (Rae et al. 2021, §A1.1) — the
     published heuristic filter stack MassiveText shipped, as a
     per-source pass-rate audit. The five rules this corpus exercises,
@@ -2311,7 +2199,7 @@ def gopher_rules_audit(
     n_pass_stop_panel, n_pass_dup_trigrams, n_pass_all,
     pass_all_ppm).
     """
-    t = tokens(F.col(text_col))
+    t = tokens(F.col(TEXT))
     n = F.size(t)
     # 64-bit seed: an IntegerType accumulator would wrap a pathological
     # >2^31-token-char document where the DuckDB oracle sums in BIGINT
@@ -2331,7 +2219,7 @@ def gopher_rules_audit(
         "stop_panel": panel_hits >= 2,
         "dup_trigrams": dup_tri * 10 <= F.size(tri) * 3,
     }
-    return _rule_battery(docs, rules, source_col)
+    return _rule_battery(docs, rules, SOURCE)
 
 
 # Stand-in for C4's bad-word list (the published pipeline uses the
@@ -2339,11 +2227,7 @@ def gopher_rules_audit(
 C4_BADWORD_PANEL = ("porn", "xxx", "viagra", "casino")
 
 
-def c4_rules_audit(
-    docs: DataFrame,
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def c4_rules_audit(docs: DataFrame) -> DataFrame:
     """C4 cleaning-rule battery (Raffel et al. 2020, §2.2) as a
     per-source audit — the published heuristics behind the C4 corpus,
     sibling of gopher_rules_audit. Document-level rules (all
@@ -2372,15 +2256,15 @@ def c4_rules_audit(
     n_pass_all, lines_total, lines_kept, pass_all_ppm,
     line_keep_ppm).
     """
-    t = tokens(F.col(text_col))
-    low = F.lower(F.col(text_col))
+    t = tokens(F.col(TEXT))
+    low = F.lower(F.col(TEXT))
     def _count_ch(ch: str):
-        return F.length(text_col) - F.length(
-            F.replace(F.col(text_col), F.lit(ch), F.lit(""))
+        return F.length(TEXT) - F.length(
+            F.replace(F.col(TEXT), F.lit(ch), F.lit(""))
         )
 
     n_term = _count_ch(".") + _count_ch("!") + _count_ch("?")
-    lines = F.split(F.col(text_col), "\n")
+    lines = F.split(F.col(TEXT), "\n")
     n_lines = F.size(lines)
 
     def _punct(x):
@@ -2398,22 +2282,18 @@ def c4_rules_audit(
         "line_punct": n_punct * 2 >= n_lines,
         "line_words": n_words5 == n_lines,
         "no_lorem": ~low.contains("lorem ipsum"),
-        "no_brace": ~F.col(text_col).contains("{"),
+        "no_brace": ~F.col(TEXT).contains("{"),
         "no_badwords": F.size(F.array_intersect(t, panel)) == 0,
     }
     return _rule_battery(
-        docs, rules, source_col, {"lines_total": n_lines, "lines_kept": n_kept}
+        docs, rules, SOURCE, {"lines_total": n_lines, "lines_kept": n_kept}
     ).withColumn(
         "line_keep_ppm",
         F.expr("1000000 * lines_kept DIV lines_total").cast("long"),
     )
 
 
-def lang_id_confusion(
-    docs: DataFrame,
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
+def lang_id_confusion(docs: DataFrame) -> DataFrame:
     """Confusion matrix of the stopword-voting language detector
     against the corpus's labeled `lang` column — the detector-quality
     audit run before trusting language gates in curation: which
@@ -2428,11 +2308,11 @@ def lang_id_confusion(
     """
     from pyspark.sql.window import Window
 
-    best = language_best(text_col)
+    best = language_best()
     cells = (
         ensure_parallelism(docs)
         .select(
-            F.col(lang_col).alias("lang"),
+            F.col("lang"),
             F.when(best["hits"] > 0, best["lang"])
             .otherwise(F.lit("und"))
             .alias("pred_lang"),
@@ -2461,11 +2341,7 @@ def lang_id_confusion(
 BPE_SEP = "\x1f"
 
 
-def bpe_train_merges(
-    docs: DataFrame,
-    k: int = 8,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_train_merges(docs: DataFrame, k: int = 8) -> DataFrame:
     """Iterated BPE training — the actual tokenizer-training inner
     loop, k merges deep (bpe_merge_candidates computes only the first
     iteration's statistics): repeatedly pick the corpus-frequency-max
@@ -2504,7 +2380,7 @@ def bpe_train_merges(
     """
     from functools import reduce
 
-    w_rels, merges, wtot = _bpe_train(docs, k, text_col)
+    w_rels, merges, wtot = _bpe_train(docs, k, TEXT)
     sym_count = F.expr(
         "(length(s) - length(replace(s, chr(31), ''))) DIV 2"
     )
@@ -2598,12 +2474,7 @@ def _bpe_train(docs, k, text_col):
     return w_rels, merges, wtot
 
 
-def bpe_vocab_coverage(
-    docs: DataFrame,
-    k: int = 8,
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def bpe_vocab_coverage(docs: DataFrame, k: int = 8) -> DataFrame:
     """Apply the trained BPE merge table to the corpus and audit the
     resulting tokenizer PER SOURCE — the deployment half of
     bpe_train_merges (train on the pooled corpus, then ask which
@@ -2625,13 +2496,13 @@ def bpe_vocab_coverage(
     merged_share_ppm).
     """
     sep = BPE_SEP
-    w_rels, _merges, _wtot = _bpe_train(docs, k, text_col)
+    w_rels, _merges, _wtot = _bpe_train(docs, k, TEXT)
     encoded = w_rels[-1]
     per_source = (
         ensure_parallelism(docs)
         .select(
-            F.col(source_col).alias("source"),
-            F.explode(tokens(F.col(text_col))).alias("w"),
+            F.col(SOURCE).alias("source"),
+            F.explode(tokens(F.col(TEXT))).alias("w"),
         )
         .filter((F.col("w") != "") & (~F.col("w").contains(sep)))
         .groupBy("source", "w")
@@ -2688,10 +2559,7 @@ def bpe_vocab_coverage(
 def unigram_lm_train(
     docs: DataFrame,
     k_em: int = 2,
-    max_piece_len: int = 4,
     n_multi: int = 48,
-    max_word_len: int = 24,
-    text_col: str = "text",
 ) -> DataFrame:
     """Unigram-LM tokenizer training (the SentencePiece/Kudo 2018
     counterpart of bpe_train_merges) — hard-EM over a substring
@@ -2708,9 +2576,9 @@ def unigram_lm_train(
     touched exactly once — the distinct word-form aggregate — and all
     k_em iterations run on vocabulary-scale relations
     (Heaps-sublinear in corpus size). The span relation (every
-    (end, len≤max_piece_len) substring of every word form, built once
+    (end, len≤4) substring of every word form, built once
     and checkpointed) is the only super-word-scale intermediate at
-    ~max_word_len·max_piece_len rows per word form. Per iteration:
+    ~MAX_WORD_LEN·4 rows per word form. Per iteration:
     one BROADCAST join of spans to the ≤(chars+n_multi)-row score
     table, one collect_list bounded by the span fan-out, a row-local
     array-fold Viterbi DP (forward bests + backtrack, O(|w|·L) per
@@ -2731,9 +2599,7 @@ def unigram_lm_train(
     coverage), nll_micro the smoothed score the next segmentation
     would use.
     """
-    _, _, score = _unigram_lm_core(
-        docs, k_em, max_piece_len, n_multi, max_word_len, text_col
-    )
+    _, _, score = _unigram_lm_core(docs, k_em, 4, n_multi)
     return score.select(
         "piece",
         F.col("l").cast("long").alias("piece_len"),
@@ -2747,8 +2613,6 @@ def _unigram_lm_core(
     k_em: int = 2,
     max_piece_len: int = 4,
     n_multi: int = 48,
-    max_word_len: int = 24,
-    text_col: str = "text",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The trainer's relational core, shared with unigram_lm_encode:
     returns (words, spans, score) — the checkpointed distinct
@@ -2757,8 +2621,8 @@ def _unigram_lm_core(
     (plans identical); see that docstring for semantics and scale."""
     words = materialize(
         ensure_parallelism(docs)
-        .select(F.explode(tokens(F.col(text_col))).alias("w"))
-        .filter((F.col("w") != "") & (F.length("w") <= max_word_len))
+        .select(F.explode(tokens(F.col(TEXT))).alias("w"))
+        .filter((F.col("w") != "") & (F.length("w") <= MAX_WORD_LEN))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("wc")),
         eager=True,
@@ -2907,14 +2771,7 @@ def _viterbi_segmented(
     return picked.select("w", "wc", "pieces")
 
 
-def unigram_lm_encode(
-    docs: DataFrame,
-    k_em: int = 2,
-    max_piece_len: int = 4,
-    n_multi: int = 48,
-    max_word_len: int = 24,
-    text_col: str = "text",
-) -> DataFrame:
+def unigram_lm_encode(docs: DataFrame, k_em: int = 2) -> DataFrame:
     """Trainer-EXECUTING pattern #7 — closes the tokenizer loop:
     unigram_lm_train learns the piece vocabulary; this ENCODES the
     corpus with it and reports what a dataloader would actually see —
@@ -2931,25 +2788,23 @@ def unigram_lm_encode(
     gives each word form its piece count, and one (source, word)
     occurrence aggregate joins it — a vocabulary-scale hash join on
     the uniform word key, never a per-token join (occurrences carry
-    only counts). Words longer than max_word_len or empty are outside
+    only counts). Words longer than MAX_WORD_LEN or empty are outside
     the trained model's domain and excluded from BOTH sides by the
     same filter as training (stated contract, not silence).
 
     Output per source: (source, n_words, n_pieces, n_chars,
     fertility_ppm, chars_per_piece_ppm).
     """
-    words, spans, score = _unigram_lm_core(
-        docs, k_em, max_piece_len, n_multi, max_word_len, text_col
-    )
+    words, spans, score = _unigram_lm_core(docs, k_em)
     seg = _viterbi_segmented(spans, words, score).select(
         "w", F.size("pieces").cast("long").alias("np")
     )
     src_w = (
         ensure_parallelism(docs)
         .select(
-            "source", F.explode(tokens(F.col(text_col))).alias("w")
+            "source", F.explode(tokens(F.col(TEXT))).alias("w")
         )
-        .filter((F.col("w") != "") & (F.length("w") <= max_word_len))
+        .filter((F.col("w") != "") & (F.length("w") <= MAX_WORD_LEN))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
@@ -2976,11 +2831,7 @@ def unigram_lm_encode(
     )
 
 
-def zipf_fit_audit(
-    docs: DataFrame,
-    k: int = 1000,
-    text_col: str = "text",
-) -> DataFrame:
+def zipf_fit_audit(docs: DataFrame, k: int = 1000) -> DataFrame:
     """Zipf's-law goodness-of-fit: the OLS slope of ln(frequency) on
     ln(rank) over the top-k vocabulary — the one-number "is this
     corpus natural language or template spam" audit (natural text
@@ -3006,7 +2857,7 @@ def zipf_fit_audit(
     intercept_micro).
     """
     c_flip = 64_000_000  # > ln(2^63)·1e6 — any int64 count flips positive
-    xy = _zipf_head(_token_counts(docs, text_col), k).select(
+    xy = _zipf_head(_token_counts(docs, TEXT), k).select(
         F.floor(F.log(F.col("rank").cast("double")) * 1e6)
         .cast("decimal(38,0)")
         .alias("x"),
@@ -3040,13 +2891,7 @@ def zipf_fit_audit(
     )
 
 
-def source_quality_calibration(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    n_shards: int = 16,
-) -> DataFrame:
+def source_quality_calibration(docs: DataFrame) -> DataFrame:
     """Per-source percentile calibration of a quality score — the
     normalization step before corpus-wide quality thresholding: raw
     quality distributions differ by domain (a 60th-percentile web
@@ -3068,10 +2913,10 @@ def source_quality_calibration(
     """
     from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
 
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col(TEXT))
     scored = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.col(source_col).alias("source"),
+        F.col(DOC_ID),
+        F.col(SOURCE).alias("source"),
         F.floor(
             F.lit(1_000_000)
             * F.size(F.array_distinct(toks)).cast("long")
@@ -3083,9 +2928,9 @@ def source_quality_calibration(
     # three consumers (percentile edges, shard totals, the ranked base)
     scored = materialize(scored)
     return grouped_prefix_sum(
-        scored, ["source"], ["ttr_ppm", id_col], n_shards=n_shards
+        scored, ["source"], ["ttr_ppm", DOC_ID], n_shards=N_SHARDS
     ).select(
-        id_col,
+        DOC_ID,
         "source",
         "ttr_ppm",
         (F.col("prefix") + 1).cast("long").alias("src_rank"),
@@ -3099,11 +2944,7 @@ def source_quality_calibration(
     )
 
 
-def quality_length_skyline(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def quality_length_skyline(docs: DataFrame) -> DataFrame:
     """Pareto frontier (skyline) of the quality-length tradeoff: the
     documents not dominated by any other document on
     (ttr quality ↑, character length ↑) — the shortlist a curator
@@ -3124,9 +2965,9 @@ def quality_length_skyline(
     """
     from pyspark.sql.window import Window
 
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col(TEXT))
     scored = ensure_parallelism(docs).select(
-        F.col(id_col),
+        F.col(DOC_ID),
         F.floor(
             F.lit(1_000_000)
             * F.size(F.array_distinct(toks)).cast("long")
@@ -3134,7 +2975,7 @@ def quality_length_skyline(
         )
         .cast("long")
         .alias("ttr_ppm"),
-        F.length(F.col(text_col)).cast("long").alias("chars"),
+        F.length(F.col(TEXT)).cast("long").alias("chars"),
     )
     g = scored.groupBy("ttr_ppm").agg(F.max("chars").alias("mx"))
     w_above = (
@@ -3152,7 +2993,7 @@ def quality_length_skyline(
             (F.col("chars") > F.col("hi_mx"))
             & (F.col("chars") == F.col("mx"))
         )
-        .select(id_col, "ttr_ppm", "chars")
+        .select(DOC_ID, "ttr_ppm", "chars")
     )
 
 
@@ -3160,8 +3001,6 @@ def pmi_collocations(
     docs: DataFrame,
     min_count: int = 5,
     top_n: int = 100,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Top collocations by pointwise mutual information over the
     corpus bigram stream: PMI(a,b) = ln(c_ab·N / (c_a·c_b)) with all
@@ -3189,7 +3028,7 @@ def pmi_collocations(
     global sort.
     Output: (w1, w2, n_pair, pmi_micro).
     """
-    _, table, left, right, total = _bigram_table(docs, text_col, id_col)
+    _, table, left, right, total = _bigram_table(docs, TEXT, DOC_ID)
     return (
         table.filter(F.col("c2") >= min_count)
         .join(left, "w1")
@@ -3218,12 +3057,7 @@ def pmi_collocations(
     )
 
 
-def pii_density_by_source(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-) -> DataFrame:
+def pii_density_by_source(docs: DataFrame) -> DataFrame:
     """Per-source PII exposure rollup — the release-gate companion of
     pii_redaction (which scrubs per document): for each ingestion
     source, how many documents carry PII at all, the per-pattern hit
@@ -3239,7 +3073,7 @@ def pii_density_by_source(
     Output: (source, n_docs, docs_with_pii, n_emails, n_ssns,
     n_phones, total_chars, pii_per_mchar).
     """
-    text = F.col(text_col)
+    text = F.col(TEXT)
     counts = {
         f"n_{name}s": F.size(
             F.regexp_extract_all(text, F.lit(pat), F.lit(0))
@@ -3250,7 +3084,7 @@ def pii_density_by_source(
     for c in counts.values():
         total = c if total is None else total + c
     per_doc = ensure_parallelism(docs).select(
-        F.col(source_col).alias("source"),
+        F.col(SOURCE).alias("source"),
         F.length(text).cast("long").alias("__chars"),
         *[c.alias(n) for n, c in counts.items()],
         total.alias("__pii"),
@@ -3282,11 +3116,7 @@ def pii_density_by_source(
     )
 
 
-def quality_dup_matrix(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def quality_dup_matrix(docs: DataFrame) -> DataFrame:
     """Quality × duplication joint profile: exact-duplicate rate per
     type-token-ratio decile — the cross-family audit that answers
     "is the low-quality tail also the duplicated tail?" (usually
@@ -3310,9 +3140,9 @@ def quality_dup_matrix(
     from pyspark.sql import Window
     from iceberg_diag_spark.operators.dedup import normalized_text
 
-    t = tokens(F.col(text_col))
+    t = tokens(F.col(TEXT))
     base = ensure_parallelism(docs).select(
-        F.col(id_col),
+        F.col(DOC_ID),
         # distinct count casts to long BEFORE the 1e6 multiply —
         # the int32 product wraps (ANSI: throws) past 2147 distinct
         # tokens per doc
@@ -3323,7 +3153,7 @@ def quality_dup_matrix(
         )
         .cast("long")
         .alias("ttr_ppm"),
-        F.sha2(normalized_text(F.col(text_col)), 256).alias("__h"),
+        F.sha2(normalized_text(F.col(TEXT)), 256).alias("__h"),
     )
     wh = Window.partitionBy("__h")
     marked = base.select(
@@ -3393,11 +3223,7 @@ def _gram_run_stats_expr(grams_col: str) -> str:
     )"""
 
 
-def doc_repetition_profile(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def doc_repetition_profile(docs: DataFrame) -> DataFrame:
     """Gopher-style within-document repetition profile (Rae et al.
     2021 §A1.1): the standard "is this page machine-generated /
     boilerplate?" curation signals — the character fraction of the
@@ -3426,9 +3252,9 @@ def doc_repetition_profile(
     from iceberg_diag_spark.operators.dedup import normalized_text
 
     base = ensure_parallelism(docs).select(
-        F.col(id_col),
-        tokens(F.col(text_col)).alias("__t"),
-        F.length(normalized_text(F.col(text_col))).cast("long").alias("__tc"),
+        F.col(DOC_ID),
+        tokens(F.col(TEXT)).alias("__t"),
+        F.length(normalized_text(F.col(TEXT))).cast("long").alias("__tc"),
     )
     for n in (2, 3, 5):
         base = base.withColumn(
@@ -3441,7 +3267,7 @@ def doc_repetition_profile(
             ),
         )
     stats = base.select(
-        id_col,
+        DOC_ID,
         F.size("__t").cast("long").alias("n_words"),
         F.col("__tc").alias("n_chars"),
         F.expr(_gram_run_stats_expr("__g2")).alias("__s2"),
@@ -3459,7 +3285,7 @@ def doc_repetition_profile(
     dup5_ppm = F.expr("(1000000 * __s5.dc) DIV greatest(n_chars, 1)")
     return (
         stats.select(
-            id_col,
+            DOC_ID,
             "n_words",
             "n_chars",
             F.coalesce(F.col("__s2.bg"), F.lit("")).alias("top_bigram"),
@@ -3472,13 +3298,11 @@ def doc_repetition_profile(
                 | (dup5_ppm > 150_000)
             ).alias("repetitive"),
         )
-        .orderBy(id_col)
+        .orderBy(DOC_ID)
     )
 
 
-def with_repetitive_flag(
-    df: DataFrame, text_col: str = "text", flag_col: str = "__repetitive"
-) -> DataFrame:
+def with_repetitive_flag(df: DataFrame) -> DataFrame:
     """Append the doc_repetition_profile `repetitive` flag as a
     column without the profile's full output contract — the shared
     gate both the batch profile consumers and the STREAMING
@@ -3491,8 +3315,8 @@ def with_repetitive_flag(
 
     staged = df.withColumns(
         {
-            "__rt": tokens(F.col(text_col)),
-            "__rtc": F.length(normalized_text(F.col(text_col))).cast(
+            "__rt": tokens(F.col(TEXT)),
+            "__rtc": F.length(normalized_text(F.col(TEXT))).cast(
                 "long"
             ),
         }
@@ -3529,16 +3353,12 @@ def with_repetitive_flag(
     ) | (
         F.expr("(1000000 * __rs5.dc) DIV greatest(__rtc, 1)") > 150_000
     )
-    return staged.withColumn(flag_col, flag).drop(
+    return staged.withColumn("__repetitive", flag).drop(
         "__rt", "__rtc", "__rg2", "__rg5", "__rs2", "__rs5"
     )
 
 
-def token_zipf_curve(
-    docs: DataFrame,
-    k: int = 50,
-    text_col: str = "text",
-) -> DataFrame:
+def token_zipf_curve(docs: DataFrame, k: int = 50) -> DataFrame:
     """Zipf rank-frequency curve head: the top-k corpus tokens with
     exact occurrence counts, per-million share, and CUMULATIVE share
     — the one-page vocabulary-concentration audit (how much of the
@@ -3558,7 +3378,7 @@ def token_zipf_curve(
     materializing shared subplans). The rank/cumsum window runs over
     the k survivors only.
     """
-    counts = materialize(_token_counts(docs, text_col))
+    counts = materialize(_token_counts(docs, TEXT))
     total = counts.agg(
         F.sum("cnt").cast("decimal(38,0)").alias("__total")
     )
@@ -3583,11 +3403,7 @@ def token_zipf_curve(
     )
 
 
-def text_artifact_audit(
-    docs: DataFrame,
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def text_artifact_audit(docs: DataFrame) -> DataFrame:
     """Extraction-artifact audit per source: counts of the junk a
     bad HTML→text extractor leaves behind — entity escapes (&amp;
     &lt; …), leftover tags (<div …), raw URLs, control characters,
@@ -3602,9 +3418,9 @@ def text_artifact_audit(
     total_chars, entity_hits, tag_hits, url_hits, ctrl_hits,
     digit_chars, artifact_ppm, digit_ppm).
     """
-    t = F.col(text_col)
+    t = F.col(TEXT)
     per_doc = ensure_parallelism(docs).select(
-        F.col(source_col).alias("source"),
+        F.col(SOURCE).alias("source"),
         F.length(t).cast("long").alias("__chars"),
         F.regexp_count(t, F.lit(r"&(amp|lt|gt|quot|nbsp|#\d+);"))
         .cast("long")
@@ -3652,11 +3468,7 @@ def text_artifact_audit(
     )
 
 
-def source_length_ks(
-    docs: DataFrame,
-    len_col: str = "n_chars",
-    source_col: str = "source",
-) -> DataFrame:
+def source_length_ks(docs: DataFrame) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov drift test, one test per source:
     is this source's document-length distribution different from the
     REST of the corpus? The standard pre-mix distribution check a
@@ -3693,7 +3505,7 @@ def source_length_ks(
     sv = (
         ensure_parallelism(docs)
         .groupBy(
-            F.col(source_col).alias("source"), F.col(len_col).alias("v")
+            F.col(SOURCE).alias("source"), F.col(N_CHARS).alias("v")
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -3752,12 +3564,7 @@ def source_length_ks(
     )
 
 
-def bigram_kneser_ney(
-    docs: DataFrame,
-    top_k: int = 100,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bigram_kneser_ney(docs: DataFrame) -> DataFrame:
     """Interpolated Kneser-Ney bigram probabilities — the smoothing
     every serious n-gram LM ships (and the quality bar for "is this
     corpus's bigram table usable as a cheap perplexity scorer"):
@@ -3779,13 +3586,13 @@ def bigram_kneser_ney(
     Scale: bigram, context and continuation counts are the shared
     _bigram_table (hash aggregates on uniform keys off the codegen
     shingle path); the distinct-bigram total is a broadcast 1-row
-    scalar; output is the top_k bigram rows by count
+    scalar; output is the 100 bigram rows by count
     (TakeOrderedAndProject — map-side partial top-k, count then gram
     as the deterministic tie-break).
 
     Output: (gram, n_pair, n_left_total, mle_ppm, kn_ppm).
     """
-    _, table, left, right, total = _bigram_table(docs, text_col, id_col)
+    _, table, left, right, total = _bigram_table(docs, TEXT, DOC_ID)
     return (
         table.join(left, "w1")
         .join(right, "w2")
@@ -3800,35 +3607,29 @@ def bigram_kneser_ney(
             F.expr(_KN_SEEN_PPM).alias("kn_ppm"),
         )
         .orderBy(F.desc("n_pair"), F.asc("gram"))
-        .limit(top_k)
+        .limit(100)
     )
 
 
-def doc_kn_nll(
-    docs: DataFrame,
-    min_pair: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-) -> DataFrame:
+def doc_kn_nll(docs: DataFrame) -> DataFrame:
     """Per-document negative log-likelihood against the corpus's own
     interpolated Kneser-Ney bigram table — the CCNet quality filter's
     scoring step (Wenzek et al.: rank documents by LM perplexity,
     keep/drop by per-source bands). The shipped LM table is PRUNED at
-    `min_pair` occurrences (real n-gram tables drop singletons), so a
+    2 occurrences (real n-gram tables drop singletons), so a
     document full of never-repeated bigrams pays the unseen-bigram
     backoff on every position and lands in the worst band — exactly
     the word-salad signal the filter exists for.
 
     Per-bigram probability, all in ppm:
-      seen  (corpus count ≥ min_pair): the bigram_kneser_ney P_KN
+      seen  (corpus count ≥ 2): the bigram_kneser_ney P_KN
              (_KN_SEEN_PPM: d = 3/4 discount + continuation
              interpolation);
       unseen (pruned): the discounted continuation-unigram backoff
              d·P_cont(w2) = (3·N1+(·w2)) / (4·N1+(··)),
     floored at 1 ppm so ln never sees zero. Because the table is
     trained on the scored corpus itself, "in the table" is exactly
-    "corpus count ≥ min_pair" — the CASE needs no membership join.
+    "corpus count ≥ 2" — the CASE needs no membership join.
 
     Scale: bigram and context counts are the shared _bigram_table
     (uniform keys, map-side combine); per-distinct-gram scores are
@@ -3841,7 +3642,7 @@ def doc_kn_nll(
 
     Output: (doc_id, source, n_bigrams, nll_micro, avg_nll_micro).
     """
-    bg, table, left, right, total = _bigram_table(docs, text_col, id_col)
+    bg, table, left, right, total = _bigram_table(docs, TEXT, DOC_ID)
     gram_scores = (
         table.join(left, "w1")
         .join(right, "w2")
@@ -3849,7 +3650,7 @@ def doc_kn_nll(
         .select(
             "gram",
             F.expr(
-                f"greatest(CAST(1 AS BIGINT), CASE WHEN c2 >= {min_pair}"
+                "greatest(CAST(1 AS BIGINT), CASE WHEN c2 >= 2"
                 f" THEN {_KN_SEEN_PPM}"
                 " ELSE CAST(3000000 * n1p_w2 DIV (4 * ntot) AS BIGINT)"
                 " END)"
@@ -3866,15 +3667,15 @@ def doc_kn_nll(
         )
     )
     per_doc = _doc_sum(
-        bg, gram_scores, "gram", id_col, "nll_micro", "n_bigrams", "nll_micro"
+        bg, gram_scores, "gram", DOC_ID, "nll_micro", "n_bigrams", "nll_micro"
     )
     return (
         per_doc.join(
-            docs.select(F.col(id_col), F.col(source_col).alias("source")),
-            id_col,
+            docs.select(F.col(DOC_ID), F.col(SOURCE).alias("source")),
+            DOC_ID,
         )
         .select(
-            id_col,
+            DOC_ID,
             "source",
             "n_bigrams",
             "nll_micro",
@@ -3885,18 +3686,10 @@ def doc_kn_nll(
     )
 
 
-def doc_kn_perplexity(
-    docs: DataFrame,
-    n_bands: int = 10,
-    min_pair: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    n_shards: int = 16,
-) -> DataFrame:
+def doc_kn_perplexity(docs: DataFrame) -> DataFrame:
     """Per-source perplexity bands over doc_kn_nll — the CCNet
     keep/drop decision table: documents ranked by average per-bigram
-    NLL within their source and cut into `n_bands` equal-population
+    NLL within their source and cut into 10 equal-population
     bands (band 1 = most fluent / head, band n = worst tail; CCNet
     keeps head+middle and drops the tail). Banding WITHIN source
     matters because NLL is not comparable across domains — the
@@ -3917,12 +3710,10 @@ def doc_kn_perplexity(
     from iceberg_diag_spark.operators.shuffling import grouped_prefix_sum
 
     # three consumers (percentile edges, shard totals, the ranked base)
-    scored = materialize(doc_kn_nll(
-        docs, min_pair, text_col, id_col, source_col
-    ))
-    k = n_bands
+    scored = materialize(doc_kn_nll(docs))
+    k = 10
     ranked = grouped_prefix_sum(
-        scored, ["source"], ["avg_nll_micro", id_col], n_shards=n_shards
+        scored, ["source"], ["avg_nll_micro", DOC_ID], n_shards=N_SHARDS
     ).select(
         "source",
         "avg_nll_micro",
@@ -3950,14 +3741,7 @@ def doc_kn_perplexity(
     )
 
 
-def quality_psi_drift(
-    docs_old: DataFrame,
-    docs_new: DataFrame,
-    bucket_micro: int = 500_000,
-    shift_micro: int = 20_000_000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def quality_psi_drift(docs_old: DataFrame, docs_new: DataFrame) -> DataFrame:
     """Population Stability Index of the quality-classifier score
     between two corpus releases — the standard "did the curation
     signal's distribution move?" gate (PSI < 0.1 stable, > 0.25 act)
@@ -3977,7 +3761,7 @@ def quality_psi_drift(
     (SCALING.md §5).
 
     Output per bucket: (bucket, n_old, n_new, psi_micro) — total PSI
-    is the column sum; bucket = (z_micro + shift) DIV bucket_micro.
+    is the column sum; bucket = (z_micro + 20000000) DIV 500000.
     """
     from pyspark.sql.window import Window
 
@@ -3987,9 +3771,9 @@ def quality_psi_drift(
     # relations (full-outer can't broadcast), and the outer-join
     # coalesce falls out for free.
     def bucket_rows(docs, side):
-        return quality_classifier_score(docs, text_col, id_col).select(
+        return quality_classifier_score(docs).select(
             F.expr(
-                f"CAST((z_micro + {shift_micro}) DIV {bucket_micro}"
+                "CAST((z_micro + 20000000) DIV 500000"
                 " AS BIGINT)"
             ).alias("bucket"),
             F.lit(side).alias("__side"),

@@ -1519,7 +1519,7 @@ ORDER BY doc_a, doc_b
 )
 
 
-def build_release_increments(docs, release: str, batches=(0, 1)):
+def build_release_increments(docs, release: str):
     """Build the md5-bucket increment releases CONCURRENTLY (one
     driver thread per batch — guide-§2.6 job overlap: each increment's
     funnel is a chain of short, eagerly-checkpointed stages that
@@ -1539,8 +1539,8 @@ def build_release_increments(docs, release: str, batches=(0, 1)):
         funnel._write_release(d, f"{release}/batch={b}")
         return (b, d)
 
-    with ThreadPoolExecutor(max_workers=len(batches)) as pool:
-        return list(pool.map(_build, batches))
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        return list(pool.map(_build, (0, 1)))
 
 
 def _release_neardup_reconcile(spark, sf_dir):

@@ -11,6 +11,11 @@ from pyspark.sql.window import Window
 from iceberg_diag_spark.operators import dedup, similarity, textops
 from iceberg_diag_spark.plans.common import REGISTRY, QuerySpec, _t
 
+# Operator tuning constants the oracle SQL below mirrors.
+K_EM = 2
+K_STEPS = 12
+MAX_WORD_LEN = 24
+
 
 # --------------------------------------------------------------------
 # Dedup / text analysis (documents)
@@ -2964,40 +2969,30 @@ bt{m}(w, pos, sp, bests, pieces) AS (
 )"""
 
 
-def _unigram_sql(
-    k_em: int = 2,
-    max_piece_len: int = 4,
-    n_multi: int = 48,
-    max_word_len: int = 24,
-) -> str:
+def _unigram_sql() -> str:
     """Unigram-LM hard-EM in DuckDB: the Viterbi forward DP and the
     backtrack are recursive CTEs per word form carrying the bests
     list (integer micro-nat costs, so the DP is exact arithmetic in
     both engines); EM iterations are unrolled as repeated CTE blocks
     (the matryoshka per-dim generation pattern)."""
     return (
-        _unigram_chain(k_em, max_piece_len, n_multi, max_word_len)
+        _unigram_chain()
         + f"""
 SELECT piece, CAST(l AS BIGINT) AS piece_len, cnt AS em_count,
        nll AS nll_micro
-FROM score{k_em}
+FROM score{K_EM}
 """
     )
 
 
-def _unigram_chain(
-    k_em: int = 2,
-    max_piece_len: int = 4,
-    n_multi: int = 48,
-    max_word_len: int = 24,
-) -> str:
+def _unigram_chain() -> str:
     """The full WITH chain through score{k_em} (no final SELECT) —
     shared by the trainer oracle and the encoder oracle."""
-    vals = ", ".join(f"({l})" for l in range(1, max_piece_len + 1))
+    vals = ", ".join(f"({l})" for l in range(1, 5))
 
     score_block = _uni_score_block
     em_blocks = []
-    for m in range(k_em):
+    for m in range(K_EM):
         em_blocks.append(_uni_seg_block(m) + f""",
 em{m} AS (
   SELECT piece, CAST(sum(wc) AS BIGINT) AS cnt
@@ -3024,7 +3019,7 @@ WITH RECURSIVE words AS (
                   ' ')) AS w
     FROM documents
   ) t(w)
-  WHERE w <> '' AND length(w) <= {max_word_len}
+  WHERE w <> '' AND length(w) <= {MAX_WORD_LEN}
   GROUP BY w
 ),
 pos AS (
@@ -3042,7 +3037,7 @@ seed AS (
 ),
 chars AS (SELECT piece, l, cnt FROM seed WHERE l = 1),
 multis AS (SELECT piece, l, cnt FROM seed WHERE l >= 2
-           ORDER BY cnt DESC, piece LIMIT {n_multi}),
+           ORDER BY cnt DESC, piece LIMIT 48),
 vocab0 AS (SELECT * FROM chars UNION ALL SELECT * FROM multis),
 {score_block("score0", "vocab0")},
 {em_sql}"""
@@ -3359,12 +3354,7 @@ def _sdiv(num: str, den: str) -> str:
     )
 
 
-def _train_lr_sql(
-    k_steps: int = 12,
-    lr_ppm: int = 2_000_000,
-    carry: bool = False,
-    final: str | None = None,
-) -> str:
+def _train_lr_sql(carry: bool = False, final: str | None = None) -> str:
     """Generate the k-step unrolled GD chain: feats → integer moments
     → standardized features → w0..wk CTEs (gradient aggregate + weight
     update per step) → trajectory union. Mirrors
@@ -3488,7 +3478,7 @@ w0 AS MATERIALIZED (
         f"{_sdiv(f'({zsum})', '1000000')}"
         f" AS DOUBLE) / 1000000.0)))) AS HUGEINT)"
     )
-    for t in range(1, k_steps + 1):
+    for t in range(1, K_STEPS + 1):
         gsums = ",\n         ".join(
             f"sum((p - 1000000 * y) * {x}) AS g{j}"
             for j, x in enumerate(fcols)
@@ -3496,7 +3486,7 @@ w0 AS MATERIALIZED (
         updates = ",\n         ".join(
             f"CAST(w{j} - "
             + _sdiv(
-                f"g{j} * {lr_ppm}", "CAST(n AS HUGEINT) * 1000000000000"
+                f"g{j} * 2000000", "CAST(n AS HUGEINT) * 1000000000000"
             )
             + f" AS HUGEINT) AS w{j}"
             for j in range(6)
@@ -3514,7 +3504,7 @@ w{t} AS MATERIALIZED (
 
     names = list(textops.LR_WEIGHT_COLS)
     selects = []
-    for t in range(k_steps + 1):
+    for t in range(K_STEPS + 1):
         cols = ", ".join(
             f"CAST(w{j} AS BIGINT) AS {name}"
             for j, name in enumerate(names)
@@ -3535,15 +3525,15 @@ def _unigram_lm_encode(spark, sf_dir):
     return textops.unigram_lm_encode(_t(spark, sf_dir, "documents"))
 
 
-def _unigram_encode_sql(k_em: int = 2, max_word_len: int = 24) -> str:
+def _unigram_encode_sql() -> str:
     """Trainer chain through score{k_em}, one more shared seg block
     (the encoder's segmentation under the FINAL scores), then the
     per-source occurrence join + fertility aggregate. Word filter
     identical to training on both sides (stated domain contract)."""
     return (
-        _unigram_chain(k_em=k_em, max_word_len=max_word_len)
+        _unigram_chain()
         + ",\n"
-        + _uni_seg_block(k_em)
+        + _uni_seg_block(K_EM)
         + rf""",
 src_w AS (
   SELECT source, w, CAST(count(*) AS BIGINT) AS c FROM (
@@ -3553,12 +3543,12 @@ src_w AS (
                   ' ')) AS w
     FROM documents
   ) t(source, w)
-  WHERE w <> '' AND length(w) <= {max_word_len}
+  WHERE w <> '' AND length(w) <= {MAX_WORD_LEN}
   GROUP BY source, w
 ),
 wp AS (
   SELECT w, CAST(len(pieces) AS BIGINT) AS np
-  FROM bt{k_em} WHERE pos = 0
+  FROM bt{K_EM} WHERE pos = 0
 )
 SELECT source,
        CAST(sum(c) AS BIGINT) AS n_words,
@@ -3590,7 +3580,7 @@ def _classifier_apply_trained(spark, sf_dir):
     return textops.classifier_apply_trained(_t(spark, sf_dir, "documents"))
 
 
-def _apply_trained_sql(k_steps: int = 12, lr_ppm: int = 2_000_000) -> str:
+def _apply_trained_sql() -> str:
     """Training trajectory chain (carry=True rides source + the
     hand-set keep) ended with the deployment aggregate: score every
     doc with the step-k weights (integer sign test, no sigmoid) and
@@ -3607,11 +3597,11 @@ def _apply_trained_sql(k_steps: int = 12, lr_ppm: int = 2_000_000) -> str:
        CAST(sum(CASE WHEN kt = (y = 1) THEN 1 ELSE 0 END) AS BIGINT) AS n_agree_trained,
        CAST(sum(CASE WHEN kh = (y = 1) THEN 1 ELSE 0 END) AS BIGINT) AS n_agree_handset
 FROM (
-  SELECT source, kh, y, ({zsum}) >= 0 AS kt FROM feat, w{k_steps}
+  SELECT source, kh, y, ({zsum}) >= 0 AS kt FROM feat, w{K_STEPS}
 )
 GROUP BY source
 ORDER BY source"""
-    return _train_lr_sql(k_steps, lr_ppm, carry=True, final=final)
+    return _train_lr_sql(carry=True, final=final)
 
 
 _APPLY_TRAINED_SQL = _apply_trained_sql()

@@ -1216,7 +1216,7 @@ def _markov_attribution(spark, sf_dir):
     return events.markov_attribution(_t(spark, sf_dir, "events"))
 
 
-def _markov_sql(iters: int = 24) -> str:
+def _markov_sql() -> str:
     """Replay events.markov_attribution: journey edges → 1-row count
     pivot → ppm transition matrix → `iters` chained-CTE Jacobi steps
     for the base chain and each removal chain, floor-identical to
@@ -1280,7 +1280,7 @@ def _markov_sql(iters: int = 24) -> str:
         for i in range(n_states)
     )
     ctes.append(f"x0 AS (SELECT {zeros}, {', '.join(pnames)} FROM p)")
-    for k in range(1, iters + 1):
+    for k in range(1, 25):
         cols = []
         for ch in range(len(chans) + 1):
             for i in range(n_states):
@@ -1299,7 +1299,7 @@ def _markov_sql(iters: int = 24) -> str:
     effs = " + ".join(
         f"greatest(c0_0 - c{ch}_0, 0)" for ch in range(1, len(chans) + 1)
     )
-    ctes.append(f"fin AS (SELECT *, {effs} AS tot FROM x{iters})")
+    ctes.append(f"fin AS (SELECT *, {effs} AS tot FROM x24)")
     selects = []
     for ch, name in enumerate(chans, start=1):
         selects.append(

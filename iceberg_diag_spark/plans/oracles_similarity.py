@@ -11,6 +11,11 @@ from iceberg_diag_spark.functions.parallel import materialize
 from iceberg_diag_spark.operators import similarity
 from iceberg_diag_spark.plans.common import REGISTRY, QuerySpec, _t
 
+# Operator tuning constants the oracle SQL below mirrors.
+DIM = 64
+QUERY_MOD = 100
+SUB_DIM = 8
+
 
 # --------------------------------------------------------------------
 # Similarity search (embeddings)
@@ -1003,10 +1008,8 @@ def _pq_codebook_audit(spark, sf_dir):
     return similarity.pq_codebook_audit(_t(spark, sf_dir, "embeddings"))
 
 
-def _pq_codebook_sql(
-    n_sub: int = 8, n_codes: int = 16, sub_dim: int = 8
-) -> str:
-    book = similarity.md5_pq_codebook(n_sub, n_codes, sub_dim)
+def _pq_codebook_sql() -> str:
+    book = similarity.md5_pq_codebook()
     values = ", ".join(
         f"({m},{c},{d},{h})"
         for m, mc in enumerate(book)
@@ -1023,8 +1026,8 @@ q AS MATERIALIZED (
 ),
 d2 AS MATERIALIZED (
   SELECT q.vec_id, b.m, b.c,
-         sum((q.q[b.m * {sub_dim} + b.d + 1] - b.h)
-             * (q.q[b.m * {sub_dim} + b.d + 1] - b.h)) AS d2
+         sum((q.q[b.m * {SUB_DIM} + b.d + 1] - b.h)
+             * (q.q[b.m * {SUB_DIM} + b.d + 1] - b.h)) AS d2
   FROM q, book b GROUP BY 1, 2, 3
 ),
 asg AS MATERIALIZED (
@@ -1036,8 +1039,8 @@ asg AS MATERIALIZED (
   ) WHERE rk = 1
 ),
 coords AS (
-  SELECT a.m, a.c, t.pos, q.q[a.m * {sub_dim} + t.pos + 1] AS qd, a.d2
-  FROM asg a JOIN q ON q.vec_id = a.vec_id, range(0, {sub_dim}) t(pos)
+  SELECT a.m, a.c, t.pos, q.q[a.m * {SUB_DIM} + t.pos + 1] AS qd, a.d2
+  FROM asg a JOIN q ON q.vec_id = a.vec_id, range(0, {SUB_DIM}) t(pos)
 ),
 pc AS (
   SELECT m, c, pos, CAST(count(*) AS BIGINT) AS n,
@@ -1048,7 +1051,7 @@ pc AS (
 ),
 cell AS (
   SELECT m, c, max(n) AS n_assigned,
-         (sum(sd2) // {sub_dim}) AS seed_d2_sum,
+         (sum(sd2) // {SUB_DIM}) AS seed_d2_sum,
          sum(n * ss - s * s) AS var_num
   FROM pc GROUP BY 1, 2
 ),
@@ -1079,12 +1082,12 @@ def _pca_power(spark, sf_dir):
     return similarity.pca_power(_t(spark, sf_dir, "embeddings"))
 
 
-def _pca_sql(dim: int = 64, scale_bits: int = 12, iters: int = 8) -> str:
+def _pca_sql() -> str:
     """Chained-CTE replay of similarity.pca_power: augmented Gram →
     rescaled scatter matrix → `iters` HUGEINT power iterations with
     the identical sign-aware floor normalization."""
-    s = 1 << scale_bits
-    d1 = dim + 1
+    s = 1 << 12
+    d1 = DIM + 1
     ctes = [
         f"""q  AS MATERIALIZED (
   SELECT list_append(list_transform(embedding,
@@ -1102,10 +1105,10 @@ def _pca_sql(dim: int = 64, scale_bits: int = 12, iters: int = 8) -> str:
         f"""mr  AS MATERIALIZED (
   SELECT a.i, a.j, d.g * a.g - ri.g * rj.g AS mr
   FROM gram a
-  JOIN gram d  ON d.i = {dim} AND d.j = {dim}
-  JOIN gram ri ON ri.i = a.i AND ri.j = {dim}
-  JOIN gram rj ON rj.i = a.j AND rj.j = {dim}
-  WHERE a.i < {dim} AND a.j < {dim}
+  JOIN gram d  ON d.i = {DIM} AND d.j = {DIM}
+  JOIN gram ri ON ri.i = a.i AND ri.j = {DIM}
+  JOIN gram rj ON rj.i = a.j AND rj.j = {DIM}
+  WHERE a.i < {DIM} AND a.j < {DIM}
 )""",
         """mm  AS MATERIALIZED (
   SELECT greatest(max(abs(mr)), CAST(1 AS HUGEINT)) AS mmax FROM mr
@@ -1117,10 +1120,10 @@ def _pca_sql(dim: int = 64, scale_bits: int = 12, iters: int = 8) -> str:
   FROM mr, mm
 )""",
         f"""v0  AS MATERIALIZED (
-  SELECT t.j AS j, CAST({s} AS HUGEINT) AS v FROM range(0, {dim}) t(j)
+  SELECT t.j AS j, CAST({s} AS HUGEINT) AS v FROM range(0, {DIM}) t(j)
 )""",
     ]
-    for k in range(1, iters + 1):
+    for k in range(1, 9):
         ctes.append(
             f"""w{k} AS MATERIALIZED (
   SELECT m.i, sum(m.m * v.v) AS w FROM m JOIN v{k-1} v ON v.j = m.j
@@ -1139,14 +1142,14 @@ def _pca_sql(dim: int = 64, scale_bits: int = 12, iters: int = 8) -> str:
         )
     ctes.append(
         f"""wf AS MATERIALIZED (
-  SELECT m.i, sum(m.m * v.v) AS w FROM m JOIN v{iters} v ON v.j = m.j
+  SELECT m.i, sum(m.m * v.v) AS w FROM m JOIN v8 v ON v.j = m.j
   GROUP BY m.i
 )"""
     )
     ctes.append(
         f"""st AS (
   SELECT sum(v.v * wf.w) AS num, sum(v.v * v.v) AS den
-  FROM wf JOIN v{iters} v ON v.j = wf.i
+  FROM wf JOIN v8 v ON v.j = wf.i
 )"""
     )
     ctes.append("t AS (SELECT sum(m) AS tr FROM m WHERE i = j)")
@@ -1157,7 +1160,7 @@ def _pca_sql(dim: int = 64, scale_bits: int = 12, iters: int = 8) -> str:
 SELECT CAST(v.j AS INTEGER) AS pos, CAST(v.v AS BIGINT) AS v_q,
        CAST((CAST(1000000 AS HUGEINT) * num) // (den * tr) AS BIGINT)
          AS eig_share_ppm
-FROM v{iters} v, st, t
+FROM v8 v, st, t
 """
     )
 
@@ -1173,8 +1176,8 @@ def _embedding_matryoshka_audit(spark, sf_dir):
     return similarity.matryoshka_audit(_t(spark, sf_dir, "embeddings"))
 
 
-def _matryoshka_sql(k=5, query_mod=100, dims=(16, 32, 64)) -> str:
-    full = dims[-1]
+def _matryoshka_sql() -> str:
+    full = (16, 32, 64)[-1]
 
     def dot(d):
         return (
@@ -1185,7 +1188,7 @@ def _matryoshka_sql(k=5, query_mod=100, dims=(16, 32, 64)) -> str:
     norm_cols = ",\n         ".join(
         f"list_sum(list_transform(generate_series(1, {d}),"
         f" i -> q[i] * q[i])) AS n2_{d}"
-        for d in dims
+        for d in (16, 32, 64)
     )
     # Zero-prefix guard mirrors the Spark side: a zero
     # prefix norm would make DuckDB divide to inf (floor(inf)::BIGINT
@@ -1195,18 +1198,18 @@ def _matryoshka_sql(k=5, query_mod=100, dims=(16, 32, 64)) -> str:
         f"CASE WHEN n.n2_{d} = 0 OR p.qn2_{d} = 0 THEN 0 ELSE "
         f"CAST(floor(1000000.0 * {dot(d)}"
         f" / (sqrt(n.n2_{d}) * sqrt(p.qn2_{d}))) AS BIGINT) END AS cos_{d}"
-        for d in dims
+        for d in (16, 32, 64)
     )
-    qn_cols = ", ".join(f"n2_{d} AS qn2_{d}" for d in dims)
+    qn_cols = ", ".join(f"n2_{d} AS qn2_{d}" for d in (16, 32, 64))
     tks = ",\n".join(
         f"""tk{d} AS (
   SELECT query_id, neighbor_id FROM (
     SELECT query_id, neighbor_id,
            row_number() OVER (PARTITION BY query_id
                               ORDER BY cos_{d} DESC, neighbor_id) AS r
-    FROM pairs) WHERE r <= {k}
+    FROM pairs) WHERE r <= 5
 )"""
-        for d in dims
+        for d in (16, 32, 64)
     )
     selects = "\nUNION ALL\n".join(
         f"""SELECT e.query_id, CAST({d} AS BIGINT) AS prefix_dim,
@@ -1220,7 +1223,7 @@ LEFT JOIN (SELECT f.query_id, CAST(count(*) AS BIGINT) AS n_hits
              ON t.query_id = f.query_id
             AND t.neighbor_id = f.neighbor_id
            GROUP BY f.query_id) h USING (query_id)"""
-        for d in dims[:-1]
+        for d in (16, 32, 64)[:-1]
     )
     return f"""
 WITH base AS (
@@ -1237,7 +1240,7 @@ norms AS (
 ),
 panel AS (
   SELECT vec_id AS query_id, q AS qq, {qn_cols}
-  FROM norms WHERE vec_id % {query_mod} = 0 AND n2_{full} > 0
+  FROM norms WHERE vec_id % {QUERY_MOD} = 0 AND n2_{full} > 0
 ),
 pairs AS (
   SELECT p.query_id, n.vec_id AS neighbor_id,
@@ -1262,17 +1265,14 @@ def _ivf_nprobe_sweep(spark, sf_dir):
     return similarity.ivf_nprobe_sweep(_t(spark, sf_dir, "embeddings"))
 
 
-def _ivf_nprobe_sweep_sql(
-    k: int = 5, query_mod: int = 100, max_p: int = 8,
-    probes=(1, 2, 4, 8),
-) -> str:
+def _ivf_nprobe_sweep_sql() -> str:
     cents = similarity.md5_centroids()
     values = ", ".join(
         f"({c},{d},{h})"
         for c, row in enumerate(cents)
         for d, h in enumerate(row)
     )
-    probe_values = ", ".join(f"({p})" for p in sorted(probes))
+    probe_values = ", ".join(f"({p})" for p in sorted((1, 2, 4, 8)))
     return f"""
 WITH cents(c, d, h) AS (VALUES {values}),
 ex AS MATERIALIZED (
@@ -1300,7 +1300,7 @@ assigned AS (SELECT vec_id AS neighbor_id, c AS list_id
 csizes AS (SELECT list_id, CAST(count(*) AS BIGINT) AS csize
            FROM assigned GROUP BY list_id),
 panel AS (SELECT vec_id AS query_id FROM valid
-          WHERE vec_id % {query_mod} = 0),
+          WHERE vec_id % {QUERY_MOD} = 0),
 pairdots AS (
   SELECT p.query_id, eb.vec_id AS neighbor_id,
          sum(ea.q * eb.q) AS dd,
@@ -1321,14 +1321,14 @@ exact AS (
                         / (sqrt(na2) * sqrt(nb2))) AS BIGINT) DESC,
                       neighbor_id ASC) AS rank
     FROM pairdots
-  ) WHERE rank <= {k}
+  ) WHERE rank <= 5
 ),
 ppr AS (
   SELECT r.vec_id AS query_id, r.c AS list_id,
          CAST(r.rn AS BIGINT) AS prank
   FROM ranked_cells r
   JOIN panel p ON p.query_id = r.vec_id
-  WHERE r.rn <= {max_p}
+  WHERE r.rn <= 8
 ),
 reach AS (
   SELECT e.query_id, e.neighbor_id, pr.prank

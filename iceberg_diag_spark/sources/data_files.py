@@ -89,9 +89,7 @@ def files_from_lineitem(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def file_column_stats_from_lineitem(
-    lineitem: DataFrame, rows_per_file: int = 32
-) -> DataFrame:
+def file_column_stats_from_lineitem(lineitem: DataFrame) -> DataFrame:
     """Deterministic lineitem → per-file column-bounds projection
     (oracle proxy for the Iceberg ``.files`` table's readable_metrics
     / lower_bounds / upper_bounds maps): rows are grouped into
@@ -109,7 +107,7 @@ def file_column_stats_from_lineitem(
     """
     li = ensure_parallelism(lineitem)
     per_file = li.select(
-        F.floor(F.col("l_orderkey") / F.lit(rows_per_file))
+        F.floor(F.col("l_orderkey") / F.lit(32))
         .cast("long")
         .alias("file_id"),
         F.col("l_partkey").cast("long").alias("pk"),

@@ -23,7 +23,7 @@ from __future__ import annotations
 import operator
 from functools import reduce
 
-from pyspark.sql import DataFrame, DataFrameReader, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from iceberg_diag_spark.functions.parallel import materialize
 
@@ -32,12 +32,11 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     partition_cols: tuple[str, ...],
-    mode: str = "overwrite",
 ) -> None:
     """Write df as Hive-partitioned parquet. Partition columns should
     be low-cardinality (directories per distinct value); readers get
     partition pruning on them for free."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
@@ -52,14 +51,13 @@ def write_bucketed(
     bucket_col: str,
     n_buckets: int = 8,
     sort_col: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist df as a bucketed (and optionally sorted) managed
     table. Two tables bucketed the same way on the join key join
     WITHOUT a shuffle — the pre-shuffle is paid once at write time,
     amortized across every subsequent join/agg on that key (the
     canonical strategy for repeatedly-joined 100 TB fact tables)."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
+    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
     if sort_col:
         writer = writer.sortBy(sort_col)
     writer.saveAsTable(table)
@@ -69,7 +67,6 @@ def compact_write(
     df: DataFrame,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    mode: str = "overwrite",
 ) -> int:
     """Small-file remediation: rewrite `df` as parquet in files near
     `target_file_bytes`. Executes the rewrite whose benefit
@@ -90,7 +87,7 @@ def compact_write(
         df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     )
     n_files = max(1, -(-est_bytes // target_file_bytes))
-    df.repartition(n_files).write.mode(mode).parquet(path)
+    df.repartition(n_files).write.mode("overwrite").parquet(path)
     return n_files
 
 
@@ -99,7 +96,6 @@ def compact_write_partitioned(
     path: str,
     partition_cols: tuple[str, ...],
     target_file_bytes: int = 128 * 1024 * 1024,
-    mode: str = "overwrite",
 ) -> None:
     """Partition-aware compaction: Hive-partitioned parquet whose
     files inside each partition directory are near
@@ -116,7 +112,7 @@ def compact_write_partitioned(
     try:
         (
             df.hint("rebalance", *partition_cols)
-            .write.mode(mode)
+            .write.mode("overwrite")
             .partitionBy(*partition_cols)
             .parquet(path)
         )
@@ -132,7 +128,6 @@ def sorted_rewrite(
     sort_cols: tuple[str, ...],
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    mode: str = "overwrite",
 ) -> int:
     """Sort-order rewrite — executes the remediation
     clustering_advisor recommends and diag_skip_simulation
@@ -162,7 +157,7 @@ def sorted_rewrite(
     (
         df.repartitionByRange(n_files, *sort_cols)
         .sortWithinPartitions(*sort_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
     return n_files
@@ -172,9 +167,6 @@ def export_training_shards(
     df: DataFrame,
     path: str,
     n_shards: int = 16,
-    seed: int = 42,
-    id_col: str = "doc_id",
-    mode: str = "overwrite",
 ) -> int:
     """Export a curated corpus as deterministic training shards — the
     dataloader-facing end of the pipeline (WebDataset/Mosaic-style:
@@ -182,7 +174,7 @@ def export_training_shards(
     of a training job can map shard → worker without coordination
     and a re-run of the export is byte-stable).
 
-    Shard membership is pmod(xxhash64(id, seed), n_shards) — the same
+    Shard membership is pmod(xxhash64(id, 42), n_shards) — the same
     salted-hash idiom as the stratified split, so membership is
     reproducible from the id alone (no global sort, no collect);
     intra-shard order is a second independent hash, giving each shard
@@ -195,15 +187,15 @@ def export_training_shards(
     """
     if n_shards <= 0:
         raise ValueError("n_shards must be positive")
-    shard = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(n_shards))
-    order = F.xxhash64(F.col(id_col), F.lit(seed + 1))
+    shard = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(42)), F.lit(n_shards))
+    order = F.xxhash64(F.col("doc_id"), F.lit(43))
     (
         df.withColumn("shard", shard)
         .withColumn("__ord", order)
         .repartition(n_shards, F.col("shard"))
         .sortWithinPartitions("shard", "__ord")
         .drop("__ord")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("shard")
         .parquet(path)
     )
@@ -216,7 +208,6 @@ def write_assigned_shards(
     n_shards: int,
     shard_col: str = "shard",
     order_cols: tuple[str, ...] = ("doc_id",),
-    mode: str = "overwrite",
 ) -> None:
     """Materialize a relation that already CARRIES its shard
     assignment (e.g. funnel.release_assignments, where membership is a
@@ -236,7 +227,7 @@ def write_assigned_shards(
     (
         df.repartition(n_shards, F.col(shard_col))
         .sortWithinPartitions(shard_col, *order_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy(shard_col)
         .parquet(path)
     )

@@ -51,7 +51,10 @@ from iceberg_diag_spark.functions.parallel import materialize
 from iceberg_diag_spark.operators.events import WATERMARK_CANDIDATES_US
 from iceberg_diag_spark.sources.tpch import normalize_event_ts
 
+# Dedup keys and event-time settings of the operators below.
+KEYS = ("user_id", "event_type")
 SESSION_GAP = "30 minutes"
+WATERMARK = "2 hours"
 _QUERY_SEQ = itertools.count()
 
 # Finite-drain guard: availableNow over the test parquet finishes in
@@ -244,18 +247,16 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    size: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding-window event counts: each event lands in size/slide
-    overlapping windows. State cost is (size/slide)× tumbling — the
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Sliding-window event counts: each event lands in two (1 hour /
+    30 minutes) overlapping windows. State cost is 2× tumbling — the
     standard trade for smoother trend curves."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", size, slide).alias("w"), F.col("event_type"))
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(
+            F.window("ts", "1 hour", "30 minutes").alias("w"),
+            F.col("event_type"),
+        )
         .agg(F.count("*").alias("event_count"))
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -266,18 +267,18 @@ def sliding_counts(
     )
 
 
-def session_windows(
-    events: DataFrame, gap: str = SESSION_GAP, watermark: str = "2 hours"
-) -> DataFrame:
-    """Native session windows per user: events closer than `gap` merge
-    into one session (Spark's session_window end = last event + gap,
-    so last_ts is recovered by subtracting the gap). Equivalent to the
+def session_windows(events: DataFrame) -> DataFrame:
+    """Native session windows per user: events closer than SESSION_GAP
+    merge into one session (Spark's session_window end = last event +
+    gap, so last_ts is recovered by subtracting the gap). Equivalent to the
     batch gap-sessionization in operators/events.py — the test suite
     and oracle pin that equivalence."""
-    gap_expr = F.expr(f"INTERVAL {gap}")
+    gap_expr = F.expr(f"INTERVAL {SESSION_GAP}")
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(
+            F.session_window("ts", SESSION_GAP).alias("w"), F.col("user_id")
+        )
         .agg(F.count("*").alias("event_count"))
         .select(
             "user_id",
@@ -301,8 +302,6 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incremental_exact_dedup_stream(
     batch_stream: DataFrame,
     corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Streaming ingestion exact-dedup gate: every arriving document
     is tagged 'exact' if its normalized content hash already exists
@@ -318,17 +317,17 @@ def incremental_exact_dedup_stream(
     when small, shuffled hash join when not)."""
     from iceberg_diag_spark.operators.dedup import normalized_text
 
-    ch = F.sha2(normalized_text(F.col(text_col)), 256)
+    ch = F.sha2(normalized_text(F.col("text")), 256)
     corpus_hashes = (
         corpus.select(ch.alias("__ch"))
         .distinct()
         .withColumn("__hit", F.lit(True))
     )
     return (
-        batch_stream.select(F.col(id_col), ch.alias("__ch"))
+        batch_stream.select(F.col("doc_id"), ch.alias("__ch"))
         .join(corpus_hashes, "__ch", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.when(F.col("__hit"), F.lit("exact"))
             .otherwise(F.lit("novel"))
             .alias("status"),
@@ -366,25 +365,21 @@ def quality_gate_stream(docs_stream: DataFrame) -> DataFrame:
     )
 
 
-def dedup_keys_stream(
-    events: DataFrame,
-    keys: tuple[str, ...] = ("user_id", "event_type"),
-    watermark: str = "2 hours",
-) -> DataFrame:
+def dedup_keys_stream(events: DataFrame) -> DataFrame:
     """Streaming exact dedup projected to the key columns: emit each
     distinct key combination once. Projecting BEFORE dedup makes the
     result order-independent (a set), so it is oracle-checkable;
     dropDuplicatesWithinWatermark bounds state by the watermark
     horizon instead of retaining every key forever."""
     return (
-        events.withWatermark("ts", watermark)
-        .select(*keys, "ts")
-        .dropDuplicatesWithinWatermark(list(keys))
-        .select(*keys)
+        events.withWatermark("ts", WATERMARK)
+        .select(*KEYS, "ts")
+        .dropDuplicatesWithinWatermark(list(KEYS))
+        .select(*KEYS)
     )
 
 
-def user_running_stats(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def user_running_stats(events: DataFrame) -> DataFrame:
     """Custom stateful operator (applyInPandasWithState): per-user
     running aggregate maintained across micro-batches — event count,
     value-cents sum, and max timestamp seen. Emits one updated row per
@@ -406,7 +401,7 @@ def user_running_stats(events: DataFrame, watermark: str = "2 hours") -> DataFra
         return (count, cents, max_ns), [(user_id, count, cents, last_ts)]
 
     return _keyed_state(
-        events.withWatermark("ts", watermark),
+        events.withWatermark("ts", WATERMARK),
         "user_id",
         fold,
         "user_id long, event_count long, value_cents long, last_ts string",
@@ -417,13 +412,9 @@ def user_running_stats(events: DataFrame, watermark: str = "2 hours") -> DataFra
     )
 
 
-def stream_click_purchase_join(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    watermark: str = "2 hours",
-) -> DataFrame:
+def stream_click_purchase_join(events: DataFrame) -> DataFrame:
     """Stream-stream interval join: each purchase joins the clicks of
-    the same user within the preceding `gap_minutes` — the streaming
+    the same user within the preceding 30 minutes — the streaming
     analog of operators/joins.range_join_before.
 
     Both sides carry watermarks and the join condition bounds event
@@ -439,7 +430,7 @@ def stream_click_purchase_join(
             F.col("event_id").alias("click_id"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", WATERMARK)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -448,14 +439,14 @@ def stream_click_purchase_join(
             F.col("event_id").alias("purchase_id"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", WATERMARK)
     )
     cond = (
         (purchases.user_id == clicks.c_user_id)
         & (clicks.click_ts <= purchases.purchase_ts)
         & (
             clicks.click_ts
-            >= purchases.purchase_ts - F.expr(f"INTERVAL {gap_minutes} MINUTES")
+            >= purchases.purchase_ts - F.expr("INTERVAL 30 MINUTES")
         )
     )
     return purchases.join(clicks, cond, "inner").select(
@@ -497,8 +488,6 @@ def distinct_users_per_window(
 def stream_static_enriched_counts(
     events: DataFrame,
     dim: DataFrame,
-    size: str = "1 hour",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Stream-static join + windowed rollup: each micro-batch joins
     the static dimension (broadcast — STATELESS, unlike stream-stream
@@ -508,12 +497,12 @@ def stream_static_enriched_counts(
 
     `dim` carries (c_custkey, c_nationkey); events join on user_id.
     """
-    enriched = events.withWatermark("ts", watermark).join(
+    enriched = events.withWatermark("ts", WATERMARK).join(
         F.broadcast(dim), F.col("user_id") == F.col("c_custkey")
     )
     return (
         enriched.groupBy(
-            F.window("ts", size).alias("w"),
+            F.window("ts", "1 hour").alias("w"),
             F.col("c_nationkey").cast("int").alias("nationkey"),
         )
         .agg(
@@ -580,8 +569,6 @@ def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def centroid_confusion_stream(
     emb_stream: DataFrame,
     static_emb: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Streaming nearest-centroid confusion monitor: every arriving
     vector is assigned to its nearest centroid (centroids from the
@@ -601,8 +588,8 @@ def centroid_confusion_stream(
     d2q convention) so the assignment is reproducible.
     """
     ex = static_emb.select(
-        F.col(label_col).alias("cand"),
-        F.posexplode(F.col(vec_col)).alias("pos", "val"),
+        F.col("label").alias("cand"),
+        F.posexplode(F.col("embedding")).alias("pos", "val"),
     ).withColumn("val", F.col("val").cast("double"))
     cent = ex.groupBy("cand", "pos").agg(F.avg("val").alias("c"))
     carr = cent.groupBy("cand").agg(
@@ -619,7 +606,7 @@ def centroid_confusion_stream(
         return F.floor(
             F.aggregate(
                 F.zip_with(
-                    F.col(vec_col),
+                    F.col("embedding"),
                     cvec,
                     lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
                 ),
@@ -647,16 +634,14 @@ def centroid_confusion_stream(
         ).otherwise(acc),
     )
     assigned = emb_stream.crossJoin(one).select(
-        F.col(label_col).alias("label"), best["cand"].alias("predicted")
+        F.col("label"), best["cand"].alias("predicted")
     )
     return assigned.groupBy("label", "predicted").agg(
         F.count(F.lit(1)).alias("n_vecs")
     )
 
 
-def disorder_monitor(
-    events: DataFrame, late_threshold_us: int = 60_000_000
-) -> DataFrame:
+def disorder_monitor(events: DataFrame) -> DataFrame:
     """Streaming watermark-calibration monitor — the live twin of the
     batch events.disorder_audit / watermark_advisor pair: per
     event TYPE, keyed state carries the running event-time frontier
@@ -681,7 +666,7 @@ def disorder_monitor(
         frontier, n, n_late, mx, tot = state
         late, frontier = _lateness_us(frontier, batch)
         n += len(late)
-        n_late += int((late > late_threshold_us).sum())
+        n_late += int((late > 60_000_000).sum())
         mx = max(mx, int(late.max()))
         tot += int(late.sum())
         return (frontier, n, n_late, mx, tot), [
@@ -701,9 +686,7 @@ def disorder_monitor(
     )
 
 
-def scd2_stream(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+def scd2_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of events.scd2_build: per-user keyed state
     carries the OPEN run (current state, its start, its version
     index); each micro-batch folds its rows in event-time order and
@@ -751,7 +734,7 @@ def scd2_stream(
         return (cur_state, cur_from, version, frontier, n_late), closed
 
     return _keyed_state(
-        events.withWatermark("ts", watermark),
+        events.withWatermark("ts", WATERMARK),
         "user_id",
         fold,
         "user_id long, state string, valid_from_us long,"
@@ -768,13 +751,11 @@ def stream_export_shards(
     docs_stream: DataFrame,
     path: str,
     n_shards: int = 8,
-    seed: int = 42,
-    id_col: str = "doc_id",
     checkpoint_dir: str | None = None,
 ):
     """Streaming ingest → training shards: route each micro-batch
     through the SAME deterministic shard assignment as the batch
-    export_training_shards sink (pmod(xxhash64(id, seed), n_shards)),
+    export_training_shards sink (pmod(xxhash64(id, 42), n_shards)),
     so shard membership is a pure function of the id no matter which
     micro-batch delivered the row — batch and streaming exports of
     one corpus land byte-compatible shard layouts.
@@ -796,9 +777,7 @@ def stream_export_shards(
     return _start_batch_dirs(
         docs_stream,
         path,
-        lambda batch_df, d: export_training_shards(
-            batch_df, d, n_shards, seed, id_col
-        ),
+        lambda batch_df, d: export_training_shards(batch_df, d, n_shards),
         checkpoint_dir,
         "ckpt_shard_export_",
     )
@@ -827,10 +806,6 @@ def repetition_gate_stream(docs_stream: DataFrame) -> DataFrame:
 
 def watermark_advisor_stream(
     events: DataFrame,
-    # Shared with the batch advisor (events.WATERMARK_CANDIDATES_US)
-    # so the "single drain equals batch pick" contract can't silently
-    # diverge if the candidate sweep changes.
-    candidates_us: tuple[int, ...] = WATERMARK_CANDIDATES_US,
     target_ppm: int = 1_000,
 ) -> DataFrame:
     """Streaming twin of events.watermark_recommendation — the
@@ -858,7 +833,9 @@ def watermark_advisor_stream(
     Output per type per batch: (event_type, n_events,
     recommended_watermark_us, n_dropped, drop_ppm, meets_target).
     """
-    cands = tuple(int(c) for c in candidates_us)
+    # the batch advisor's sweep, so a single drain picks what the batch
+    # watermark_recommendation picks
+    cands = tuple(int(c) for c in WATERMARK_CANDIDATES_US)
 
     def fold(event_type, state, batch):
         frontier, n, *drops = state
@@ -1161,8 +1138,6 @@ def run_seasonality_profile_stream(
 def corpus_release_stream(
     docs_stream: DataFrame,
     release_path: str,
-    n_shards: int | None = None,
-    capacity_tokens: int | None = None,
     checkpoint_dir: str | None = None,
 ):
     """Streaming twin #22: INCREMENTAL corpus release — production
@@ -1197,15 +1172,10 @@ def corpus_release_stream(
     """
     from iceberg_diag_spark.operators import funnel
 
-    shards = funnel.RELEASE_N_SHARDS if n_shards is None else n_shards
-    cap = (
-        funnel.RELEASE_CAPACITY_TOKENS if capacity_tokens is None
-        else capacity_tokens
-    )
     return _start_batch_dirs(
         docs_stream,
         release_path,
-        lambda batch_df, d: funnel._write_release(batch_df, d, shards, cap),
+        funnel._write_release,
         checkpoint_dir,
         "ckpt_corpus_release_",
     )
